@@ -11,6 +11,7 @@ works with the Spark UI disabled.  Spans stay in memory until the run ends.
 
 from __future__ import annotations
 
+import os
 import statistics
 import threading
 import time
@@ -211,6 +212,29 @@ class Harness:
     def span_records(self) -> list[dict]:
         return [{"name": s.name, "start": round(s.start, 6), "end": round(s.end, 6),
                  "parent": s.parent, "run_id": self.run_id, **s.attrs} for s in self.spans]
+
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def session_cpu_s() -> float:
+    """CPU seconds (user + system, reaped children included) used so far by
+    every process of this run's session: this driver, the JVM and the Python
+    workers.  Unlike wall time it does not grow while the host runs other
+    tenants' work, so it stays comparable on a shared machine."""
+    sid, total = os.getsid(0), 0
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        fields = stat[stat.rindex(")") + 2:].split()
+        if int(fields[3]) == sid:
+            total += sum(int(x) for x in fields[11:15])
+    return total / _TICK
 
 
 def median(xs: list[float]) -> float:

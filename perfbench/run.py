@@ -34,7 +34,7 @@ ROOT = HERE.parent
 WORKLOADS = ("feed_cycle", "query_catalog")
 RUN_LIMIT_S = 160.0  # with the 5 s grace and the kill wait, the run ends before 180 s
 DRIVER_MEM = "2g"
-UNITS = {"setup_s": "s", "peak_rss_mb": "MB", "iter_s.p50": "s", "op_s.p50": "s"}
+UNITS = {"setup_s": "s", "peak_rss_mb": "MB", "iter_cpu_s.p50": "s", "op_cpu_s.p50": "s"}
 
 
 def session_members(sid: int) -> dict[int, str]:

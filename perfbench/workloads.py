@@ -22,7 +22,15 @@ from datetime import datetime, timedelta
 import pyarrow.parquet as pq
 
 import datagen
-from harness import CALL_LIMIT_S, CheckFailed, CallTimeout, Harness, median, tail
+from harness import (
+    CALL_LIMIT_S,
+    CallTimeout,
+    CheckFailed,
+    Harness,
+    median,
+    session_cpu_s,
+    tail,
+)
 
 TAIL_PCT = 90
 
@@ -66,6 +74,8 @@ class FeedCycle:
         self.plant = ""
         self.cycles: list[float] = []
         self.ingest: list[float] = []
+        self.cycles_cpu: list[float] = []
+        self.ingest_cpu: list[float] = []
 
     def setup(self) -> None:
         pass
@@ -92,7 +102,7 @@ class FeedCycle:
         as_of = self.src.window_end(c).strftime("%Y-%m-%d %H:%M:%S")
         before = _dir_bytes(self.sink) | _dir_bytes(self.out) if h.trace else {}
         with h.op("cycle", f"cycle{c}"), h.span("feed.cycle", cycle=c):
-            t0 = time.perf_counter()
+            t0, c0 = time.perf_counter(), session_cpu_s()
             with h.span("feed.land"):
                 batch = self.src.next_batch()
                 landed = os.path.join(self.landing, f"batch-{c:05d}.parquet")
@@ -112,13 +122,13 @@ class FeedCycle:
                 if not q.awaitTermination(CALL_LIMIT_S):
                     raise CallTimeout(f"incremental_scd1 still running after {CALL_LIMIT_S:.0f} s")
 
-            t1 = time.perf_counter()
+            t1, c1 = time.perf_counter(), session_cpu_s()
             try:
                 _, _, tm_stream = h.call("streaming", start, await_query)
             finally:
                 if query is not None and query.isActive:
                     query.stop()
-            t2 = time.perf_counter()
+            t2, c2 = time.perf_counter(), session_cpu_s()
             _, _, tm_filter = h.call(
                 "filter_pipeline",
                 lambda: run_filter_pipeline(
@@ -128,10 +138,12 @@ class FeedCycle:
                 ),
                 lambda df: write_overwrite(df, self.out),
             )
-            t3 = time.perf_counter()
+            t3, c3 = time.perf_counter(), session_cpu_s()
             if timed:
                 self.cycles.append(t3 - t0)
                 self.ingest.append(t2 - t1)
+                self.cycles_cpu.append(c3 - c0)
+                self.ingest_cpu.append(c2 - c1)
             if h.trace:
                 self._trace_cycle(query, tm_stream, tm_filter, before, os.path.getsize(landed))
             if self.plant == "sink_duplicate":
@@ -225,15 +237,17 @@ class FeedCycle:
 
     def metrics(self) -> dict:
         return {
-            "iter_s.p50": median(self.cycles),
-            "op_s.p50": median(self.ingest),
+            "iter_cpu_s.p50": median(self.cycles_cpu),
+            "op_cpu_s.p50": median(self.ingest_cpu),
         }
 
     def report(self) -> dict:
         return {
             "feed.cycle_s.p50": (median(self.cycles), "s"),
+            "feed.cycle_cpu_s.p50": (median(self.cycles_cpu), "s"),
             f"feed.cycle_s.p{TAIL_PCT}": (tail(self.cycles, TAIL_PCT), "s"),
             "feed.ingest_s.p50": (median(self.ingest), "s"),
+            "feed.ingest_cpu_s.p50": (median(self.ingest_cpu), "s"),
             f"feed.ingest_s.p{TAIL_PCT}": (tail(self.ingest, TAIL_PCT), "s"),
             "feed.cycles": (len(self.cycles), "count"),
             "feed.links": (self.src.n_links(), "count"),
@@ -280,6 +294,8 @@ class QueryCatalog:
         self.queries: list[float] = []
         self.passes: list[float] = []
         self.curation: list[float] = []
+        self.queries_cpu: list[float] = []
+        self.passes_cpu: list[float] = []
         self.curation_rows: list[tuple] | None = None
 
     def setup(self) -> None:
@@ -349,11 +365,15 @@ class QueryCatalog:
         """One timed pass over the catalog, in a seeded order."""
         order = CATALOG + [CURATION]
         self.rng.shuffle(order)
-        total = 0.0
+        total = total_cpu = 0.0
         for module, name in order:
             with self.h.op("query", name):
+                c0 = session_cpu_s()
                 total += self._timed(module, name)
+                self.queries_cpu.append(session_cpu_s() - c0)
+                total_cpu += self.queries_cpu[-1]
         self.passes.append(total)
+        self.passes_cpu.append(total_cpu)
 
     def _timed(self, module: str, name: str) -> float:
         h, spark = self.h, self.spark
@@ -390,14 +410,16 @@ class QueryCatalog:
 
     def metrics(self) -> dict:
         return {
-            "iter_s.p50": median(self.passes),
-            "op_s.p50": median(self.queries),
+            "iter_cpu_s.p50": median(self.passes_cpu),
+            "op_cpu_s.p50": median(self.queries_cpu),
         }
 
     def report(self) -> dict:
         return {
             "catalog.pass_s.p50": (median(self.passes), "s"),
+            "catalog.pass_cpu_s.p50": (median(self.passes_cpu), "s"),
             "catalog.query_s.p50": (median(self.queries), "s"),
+            "catalog.query_cpu_s.p50": (median(self.queries_cpu), "s"),
             f"catalog.query_s.p{TAIL_PCT}": (tail(self.queries, TAIL_PCT), "s"),
             "curation.run_s.p50": (median(self.curation), "s"),
             "catalog.passes": (len(self.passes), "count"),
