@@ -9,8 +9,8 @@ embeddings.  The same seed always gives the same bytes.
 
 Feed batches for the ``feed_cycle`` workload come from :class:`FeedSource`:
 event rows mapped onto the stage schema exactly as
-``rss_feed_etl_spark.testdata.stage_rows`` maps them, mixed with re-delivered
-links whose fields changed.
+``rss_feed_etl_spark.testdata.stage_rows`` maps them, mixed with recent links
+re-delivered with changed fields and with repeats within the batch.
 """
 
 from __future__ import annotations
@@ -227,23 +227,36 @@ STAGE_SCHEMA = pa.schema([
     ("notes", pa.string()),
 ])
 FEED_T0 = datetime(2024, 1, 1)
-CYCLE_HOURS = 12  # the paper's pipeline runs twice a day
-REDELIVER_SHARE = 0.2  # of each batch after the first: earlier links, edited
+CYCLE_HOURS = 12  # two cron runs a day (BASELINE.md, pipeline schedule)
+FEEDS = 14  # BASELINE.md: 14 RSS feeds
+BACKFILL_DAYS = 10  # history landed before the first cycle; longer than the 7-day filter window
+# Traffic shape of one cycle's batch.  The reference publishes no traffic
+# figures, so these shares are unverified guesses with the shape its setup
+# implies: a feed reader refreshes every 15 minutes and each refresh serves
+# the feed's recent entries (BASELINE.md, ingest cadence), so a run sees
+# recent entries again, some of them edited, and one batch can hold the same
+# entry twice (FIXTURES.md section 1: duplicates within a batch, keep-last).
+RECENT_HOURS = 48  # an entry is still served this long after it was published
+REDELIVER_SHARE = 0.2  # recent earlier links served again with edited fields
+REPEAT_SHARE = 0.05  # exact repeats of rows already in the batch
 FEED_USERS = 1500
 
 
 class FeedSource:
-    """Seeded feed: batch ``c`` holds the entries published in cycle ``c``'s
-    12-hour window plus re-deliveries of earlier links with edited titles and
-    summaries (same ``published``, so they land in the partition of the
-    original).  Keeps every batch so the run can fold them all at the end."""
+    """Seeded feed.  :meth:`backfill` gives ``BACKFILL_DAYS`` of history
+    (one row per link); batch ``c`` then holds the entries published in
+    cycle ``c``'s 12-hour window, re-deliveries of links published in the
+    ``RECENT_HOURS`` before that window with edited titles and summaries
+    (same ``published``, so they land in the recent partitions of their
+    originals), and exact repeats of some of the batch's own rows."""
 
     def __init__(self, seed: int, batch_rows: int):
         self.rng = np.random.default_rng(np.random.SeedSequence([seed, 7]))
-        self.batch_rows = batch_rows
         self.n_redeliver = int(batch_rows * REDELIVER_SHARE)
-        self.batches: list[pa.Table] = []
-        self.originals: list[pa.Table] = []  # first deliveries: one row per link
+        self.n_repeat = int(batch_rows * REPEAT_SHARE)
+        self.n_new = batch_rows - self.n_redeliver - self.n_repeat
+        self.cycles = 0
+        self.recent: pa.Table | None = None  # first deliveries still served by their feed
         self.next_id = 0
 
     def window_end(self, cycle: int) -> datetime:
@@ -252,30 +265,46 @@ class FeedSource:
     def n_links(self) -> int:
         return self.next_id
 
+    def _new_links(self, n: int, start: datetime, hours: int) -> pa.Table:
+        ev = events_table(self.rng, n, FEED_USERS, id0=self.next_id,
+                          t0=np.datetime64(start, "us"), span_us=hours * 3600 * 10**6)
+        self.next_id += n
+        return stage_from_events(ev)
+
+    def _keep_recent(self, tables: list[pa.Table], until: datetime) -> None:
+        import pyarrow.compute as pc
+
+        recent = pa.concat_tables(tables)
+        cut = pa.scalar(until - timedelta(hours=RECENT_HOURS), type=pa.timestamp("us"))
+        self.recent = recent.filter(pc.greater_equal(recent["published"], cut))
+
+    def backfill(self) -> pa.Table:
+        """History before the first cycle, at the cycles' rate of new links."""
+        days = BACKFILL_DAYS
+        table = self._new_links(self.n_new * days * 24 // CYCLE_HOURS,
+                                FEED_T0 - timedelta(days=days), days * 24)
+        self._keep_recent([table], FEED_T0)
+        return table
+
     def next_batch(self) -> pa.Table:
-        cycle = len(self.batches)
-        n_new = self.batch_rows - (self.n_redeliver if cycle else 0)
-        t0 = np.datetime64(FEED_T0 + timedelta(hours=CYCLE_HOURS * cycle), "us")
-        ev = events_table(self.rng, n_new, FEED_USERS, id0=self.next_id,
-                          t0=t0, span_us=CYCLE_HOURS * 3600 * 10**6)
-        self.next_id += n_new
-        new = stage_from_events(ev)
-        parts = [new]
-        if cycle:
-            prev = pa.concat_tables(self.originals)
-            pick = self.rng.choice(prev.num_rows, size=self.n_redeliver, replace=False)
-            old = prev.take(pa.array(np.sort(pick)))
-            edit = self.rng.integers(0, 1000, old.num_rows)
-            parts.append(pa.table({
-                **{c: old[c] for c in STAGE_SCHEMA.names},
-                "entry_title": pa.array([
-                    f"{t} rev{e}" for t, e in zip(old["entry_title"].to_pylist(), edit)]),
-                "summary": pa.array([f'{{"k": {e}, "rev": {cycle}}}' for e in edit]),
-                "notes": pa.array([""] * old.num_rows),
-            }, schema=STAGE_SCHEMA))
-        batch = pa.concat_tables(parts)
-        self.originals.append(new)
-        self.batches.append(batch)
+        c = self.cycles
+        new = self._new_links(self.n_new, self.window_end(c - 1), CYCLE_HOURS)
+        pick = self.rng.choice(self.recent.num_rows, size=self.n_redeliver, replace=False)
+        old = self.recent.take(pa.array(np.sort(pick)))
+        edit = self.rng.integers(0, 1000, old.num_rows)
+        edited = pa.table({
+            **{col: old[col] for col in STAGE_SCHEMA.names},
+            "entry_title": pa.array([
+                f"{t} rev{e}" for t, e in zip(old["entry_title"].to_pylist(), edit)]),
+            "summary": pa.array([f'{{"k": {e}, "rev": {c}}}' for e in edit]),
+            "notes": pa.array([""] * old.num_rows),
+        }, schema=STAGE_SCHEMA)
+        served = pa.concat_tables([new, edited])
+        repeats = served.take(pa.array(self.rng.integers(0, served.num_rows, self.n_repeat)))
+        batch = pa.concat_tables([served, repeats])
+        batch = batch.take(pa.array(self.rng.permutation(batch.num_rows)))
+        self._keep_recent([self.recent, new], self.window_end(c))
+        self.cycles += 1
         return batch
 
 
@@ -293,7 +322,7 @@ def stage_from_events(ev: pa.Table) -> pa.Table:
         "link": pa.array(np.char.add("e", eid.astype(str))),
         "entry_title": pa.array(np.char.add(np.char.add(etype.astype(str), " "), uid.astype(str))),
         "published": ev["ts"],
-        "feed_title": pa.array(np.char.add("feed", (uid % 14).astype(str))),
+        "feed_title": pa.array(np.char.add("feed", (uid % FEEDS).astype(str))),
         "reader": pa.array(["rss.app"] * len(eid)),
         "time_window": pa.array(["15min"] * len(eid)),
         "summary": pa.array(summary.astype(str)),

@@ -56,6 +56,8 @@ class Harness:
         self.spans: list[Span] = []
         self.samples: dict[str, list[float]] = defaultdict(list)
         self.trace_self_s = 0.0
+        self.timed = False  # set while the timed iterations run
+        self.timed_groups: list[str] = []  # job groups of the calls they made
         self._stack: list[int] = []
         self._groups = 0
 
@@ -94,6 +96,8 @@ class Harness:
         """
         self._groups += 1
         group = f"pb-{self.run_id}-{self._groups}"
+        if self.timed:
+            self.timed_groups.append(group)
         self.sc.setJobGroup(group, layer, interruptOnCancel=True)
         fired = threading.Event()
 
@@ -181,6 +185,16 @@ class Harness:
             m["spill_mb"] += (st.memoryBytesSpilled() + st.diskBytesSpilled()) / MB
         return m
 
+    def busy_share(self, wall_s: float) -> float:
+        """Task run time of the timed calls' jobs ÷ (``wall_s`` × cores): the
+        share of the cores' time spent running tasks.  Waiting (a sleep, a
+        lock, a serial stage on an idle core) lowers it; host steal stretches
+        task time and wall time alike, so it moves it less than wall time."""
+        tracker = self.sc.statusTracker()
+        jobs = [j for g in self.timed_groups for j in tracker.getJobIdsForGroup(g)]
+        run_s = self.stage_metrics(jobs)["task_run_s"]
+        return run_s / (wall_s * self.sc.defaultParallelism) if wall_s else 0.0
+
     # --- reports -----------------------------------------------------------------
 
     def self_times(self) -> list[dict]:
@@ -239,6 +253,11 @@ def session_cpu_s() -> float:
 
 def median(xs: list[float]) -> float:
     return statistics.median(xs) if xs else 0.0
+
+
+def gmean(xs: list[float]) -> float:
+    """Geometric mean: every operation weighs the same, whatever its size."""
+    return statistics.geometric_mean(xs) if xs and min(xs) > 0 else 0.0
 
 
 def tail(xs: list[float], pct: int) -> float:

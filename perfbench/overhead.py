@@ -1,7 +1,7 @@
 """Tracing overhead: one untraced and one traced run of the same workload and
 seed, and the difference of every end-to-end metric between them.
 
-    python3 perfbench/overhead.py --workload feed_cycle --seed 1 --seconds 8
+    python3 perfbench/overhead.py --workload feed_cycle --seed 1 --seconds 12
 
 Both runs use the same inputs; their end-to-end metrics differ by the cost of
 tracing (setting job groups, reading the status store, walking the sink)
@@ -28,8 +28,7 @@ def main() -> int:
         result = run.run(a.workload, a.seed, a.seconds, trace)
         if result is None:
             return 1
-        e2e[trace] = {**result.get("metrics", {}), "setup_s": result.get("setup_s", 0.0),
-                      "peak_rss_mb": result["peak_rss_mb"]}
+        e2e[trace] = run.end_to_end(result)
     for name, unit in run.UNITS.items():
         off, on = e2e[0].get(name, 0.0), e2e[1].get(name, 0.0)
         share = (on - off) / off if off else 0.0

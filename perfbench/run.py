@@ -1,18 +1,19 @@
 """Benchmark entry point: one run of one workload.
 
-    python3 perfbench/run.py --workload feed_cycle --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload feed_cycle --seed 1 --seconds 12 --trace 0
 
 Run from the root of a checkout.  The run gets its own session (setsid) and its
 own directory (``.perfbench_runs/<workload>-<seed>-<pid>``) that holds the
 working directory, ``TMPDIR``, ``SPARK_LOCAL_DIRS``, the JVM's temp dir, the
 generated inputs, checkpoints and sinks.  ``worker.py`` does the Spark work in
 a child process; this process samples the resident memory of the child's
-whole process tree, enforces the time limit, kills and records anything left
+whole process tree during the timed phase, enforces the time limit, kills and records anything left
 in the session once the child exits, and removes the run directory.
 
 Prints a human-readable report, then, as the last line, one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}`` — the end-to-end metrics
-with ``--trace 0``, the per-layer metrics with ``--trace 1``.  Exits non-zero,
+with ``--trace 0``, the per-layer metrics with ``--trace 1``.  A traced run
+also prints every span it recorded, one ``span {...}`` JSON line each.  Exits non-zero,
 printing no result, when the engine is missing or the child wrote no result.
 """
 
@@ -34,7 +35,10 @@ ROOT = HERE.parent
 WORKLOADS = ("feed_cycle", "query_catalog")
 RUN_LIMIT_S = 160.0  # with the 5 s grace and the kill wait, the run ends before 180 s
 DRIVER_MEM = "2g"
-UNITS = {"setup_s": "s", "peak_rss_mb": "MB", "iter_cpu_s.p50": "s", "op_cpu_s.p50": "s"}
+HEAP_MB = 2048.0  # the JVM commits and pre-touches all of DRIVER_MEM at start (-Xms, AlwaysPreTouch)
+SAMPLE_S = 0.25
+UNITS = {"setup_s": "s", "peak_rss_over_heap_mb": "MB", "iter_cpu_s.gmean": "s",
+         "op_cpu_s.gmean": "s", "busy_share": "ratio"}
 
 
 def session_members(sid: int) -> dict[int, str]:
@@ -145,13 +149,16 @@ def run(workload: str, seed: int, seconds: float, trace: int, plant: str = "") -
                                      stderr=subprocess.STDOUT, start_new_session=True)
             deadline = time.monotonic() + RUN_LIMIT_S
             while child.poll() is None:
-                peak_mb = max(peak_mb, session_pss_mb(session_members(child.pid)))
+                # only the timed phase: set-up, warm-up and the output
+                # checks around it are not what the metric is about
+                if (run_dir / "timed").exists() and not (run_dir / "done").exists():
+                    peak_mb = max(peak_mb, session_pss_mb(session_members(child.pid)))
                 if time.monotonic() > deadline:
                     timed_out = True
                     kill_session(child.pid)
                     child.wait()
                     break
-                time.sleep(0.5)
+                time.sleep(SAMPLE_S)
         survivors = reap(child.pid, grace_s=5.0)
         result = json.loads(out_path.read_text()) if out_path.exists() else None
         if result is None:
@@ -182,18 +189,26 @@ def run(workload: str, seed: int, seconds: float, trace: int, plant: str = "") -
             pass
 
 
+def end_to_end(result: dict) -> dict:
+    """The end-to-end metrics of a run.  The memory metric leaves out the
+    pre-touched heap, a constant that would hide every change in the rest."""
+    return {**result.get("metrics", {}), "setup_s": result.get("setup_s", 0.0),
+            "peak_rss_over_heap_mb": max(0.0, result["peak_rss_mb"] - HEAP_MB)}
+
+
 def summarize(result: dict, trace: int) -> tuple[dict, list[str]]:
     ops = result["ops"]
     bad = [o for o in ops if o["status"] != "ok"]
-    e2e = dict(result.get("metrics", {}))
-    e2e["setup_s"] = result.get("setup_s", 0.0)
-    e2e["peak_rss_mb"] = result["peak_rss_mb"]
+    e2e = end_to_end(result)
     lines = [f"# perfbench {result['workload']} seed={result['seed']} trace={trace} "
              f"commit={git_commit()} source={source_digest()} env={json.dumps(result.get('env'))}"]
     for name in UNITS:
         lines.append(f"{name} = {e2e.get(name, 0.0):.6f} {UNITS[name]}")
     lines.append(f"failed_ratio = {len(bad) / max(1, len(ops)):.6f} ratio "
                  f"({len(bad)} of {len(ops)} operations)")
+    lines.append(f"peak_rss_mb = {result['peak_rss_mb']:.6f} MB (timed phase, heap included)")
+    lines.append(f"jvm_heap_mb = {HEAP_MB:.0f} MB (pre-touched)")
+    lines.append(f"host_steal_share = {result.get('steal_share', 0.0):.4f} ratio (timed phase)")
     for name, (value, unit) in result.get("report", {}).items():
         lines.append(f"{name} = {value:.6f} {unit}" if isinstance(value, float)
                      else f"{name} = {value} {unit}")
@@ -201,8 +216,9 @@ def summarize(result: dict, trace: int) -> tuple[dict, list[str]]:
         lines.append(f"! {o['kind']} {o['name']}: {o['status']} — {o['reason']}")
     if trace:
         for st in result.get("self_times", []):
-            lines.append(f"span {st['span']}: n={st['n']} total={st['total_s']:.3f} s "
+            lines.append(f"self {st['span']}: n={st['n']} total={st['total_s']:.3f} s "
                          f"self={st['self_s']:.3f} s")
+        lines.extend("span " + json.dumps(sp) for sp in result.get("spans", []))
     metrics = result.get("layers", {}) if trace else e2e
     units = {} if trace else UNITS
     final = {
@@ -229,7 +245,6 @@ def main() -> int:
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--spans", help="also write the traced run's spans to this JSON file")
     a = p.parse_args()
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))  # run the cleanup in finally
     if not (ROOT / "rss_feed_etl_spark" / "__init__.py").is_file():
@@ -239,8 +254,6 @@ def main() -> int:
     if result is None:
         return 1
     final, lines = summarize(result, a.trace)
-    if a.spans and a.trace:
-        Path(a.spans).write_text(json.dumps(result.get("spans", [])))
     print("\n".join(lines))
     print(json.dumps(final))
     return 0

@@ -61,6 +61,12 @@ def layer_metrics(h: Harness, session_s: float, warmup_s: float, cores: int) -> 
     return out
 
 
+def host_cpu() -> list[int]:
+    """The host's cumulative CPU times (``/proc/stat``, all CPUs)."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
+
+
 def stop_spark(spark) -> None:
     """Stop every streaming query, then the session, then the JVM, and wait
     for the JVM to exit, so nothing this process started outlives it."""
@@ -125,11 +131,20 @@ def main() -> int:
                     wl.warmup()
             warmup_s = time.perf_counter() - t_w
             result["setup_s"] = time.time() - t_spawn
+            open("timed", "w").close()  # run.py samples memory from here ...
+            cpu0 = host_cpu()
+            h.timed = True
             t_m = time.perf_counter()
             while ok and time.perf_counter() - t_m < a.seconds:
                 with h.span("iteration"):
                     wl.step()
             result["measured_s"] = time.perf_counter() - t_m
+            h.timed = False
+            open("done", "w").close()  # ... to here
+            d = [b - a for a, b in zip(cpu0, host_cpu())]
+            # time the host's hypervisor ran other guests on this machine's
+            # CPUs: wall times stretch with it, CPU seconds do not
+            result["steal_share"] = d[7] / max(1, sum(d))
             if ok:
                 with h.span("finish"):
                     wl.finish()

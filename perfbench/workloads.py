@@ -14,9 +14,11 @@ next operation starts only after the previous one finished.
 from __future__ import annotations
 
 import os
+import pickle
 import random
+import subprocess
+import sys
 import time
-from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta
 
 import pyarrow.parquet as pq
@@ -27,6 +29,7 @@ from harness import (
     CallTimeout,
     CheckFailed,
     Harness,
+    gmean,
     median,
     session_cpu_s,
     tail,
@@ -48,12 +51,14 @@ def _dir_bytes(path: str) -> dict[str, tuple[int, int]]:
 
 
 class FeedCycle:
-    """``feed_cycle``: the sink's history grows across the run, so later
+    """``feed_cycle``: set-up writes ten days of history, then each cycle
+    lands one batch.  The sink's history grows across the run, so later
     cycles re-merge more history (the whole history is re-read per
-    micro-batch) while rewriting only the partitions the batch touched."""
+    micro-batch) while rewriting only the date partitions the batch touched;
+    the filter's 7-day window drops the older part of the history."""
 
     name = "feed_cycle"
-    BATCH_ROWS = 2000  # 80% new links, 20% re-delivered links with edited fields
+    BATCH_ROWS = 2000  # 75% new links, 20% recent links re-delivered with edits, 5% repeats
     DAYS_BACK = 7
     WARMUP_CYCLES = 6
 
@@ -71,6 +76,7 @@ class FeedCycle:
             T.StructField(c, T.TimestampType() if c == "published" else T.StringType())
             for c in datagen.STAGE_SCHEMA.names
         ])
+        self.want: dict[str, dict] = {}  # host-side SCD1 fold of every landed batch
         self.plant = ""
         self.cycles: list[float] = []
         self.ingest: list[float] = []
@@ -78,7 +84,19 @@ class FeedCycle:
         self.ingest_cpu: list[float] = []
 
     def setup(self) -> None:
-        pass
+        """Write the backfill into the sink with the engine's partitioned
+        writer, as if earlier runs had merged it (one row per link, so the
+        merge would keep every row); the first cycle's stream reads it as
+        its history."""
+        from rss_feed_etl_spark.sources.parquet import write_partitioned
+
+        batch = self.src.backfill()
+        path = os.path.join(os.path.dirname(self.landing), "backfill.parquet")
+        pq.write_table(batch, path)
+        with self.h.span("feed.backfill"):
+            write_partitioned(self.spark.read.schema(self.schema).parquet(path), self.sink)
+        self._fold(batch)
+        self._check_sink()
 
     def warmup(self) -> None:
         # the JIT keeps speeding cycles up for a few cycles after codegen
@@ -88,53 +106,76 @@ class FeedCycle:
     def step(self) -> None:
         self.cycle(timed=True)
 
-    def cycle(self, timed: bool) -> None:
-        from rss_feed_etl_spark import testdata as td
-        from rss_feed_etl_spark.plans.filter_pipeline import run_filter_pipeline
-        from rss_feed_etl_spark.sources.parquet import read_table, write_overwrite
+    def _land(self, batch, name: str) -> int:
+        """Write ``batch`` to the landing directory; returns the file's size."""
+        landed = os.path.join(self.landing, f"batch-{name}.parquet")
+        pq.write_table(batch, landed)
+        return os.path.getsize(landed)
+
+    def _fold(self, batch) -> None:
+        """Fold ``batch`` into the expected sink: keep-last within the batch,
+        then new values win but blank new notes keep the old ones
+        (``merge_scd1``'s rules, FIXTURES.md section 6)."""
+        for link, row in {r["link"]: r for r in batch.to_pylist()}.items():
+            old = self.want.get(link)
+            if old is not None and (row["notes"] or "").strip() in ("", "nan"):
+                row["notes"] = old["notes"]
+            self.want[link] = row
+
+    def _ingest(self):
+        """One ``incremental_scd1`` restart until its query terminates;
+        returns the query and the call's timings."""
         from rss_feed_etl_spark.streaming.incremental import (
             incremental_scd1,
             read_stage_stream,
         )
 
+        query = None
+
+        def start():
+            nonlocal query
+            query = incremental_scd1(
+                read_stage_stream(self.spark, self.landing, self.schema),
+                self.sink, self.ckpt, partitioned=True, available_now=True,
+            )
+            return query
+
+        def await_query(q):
+            if not q.awaitTermination(CALL_LIMIT_S):
+                raise CallTimeout(f"incremental_scd1 still running after {CALL_LIMIT_S:.0f} s")
+
+        try:
+            _, _, timings = self.h.call("streaming", start, await_query)
+        finally:
+            if query is not None and query.isActive:
+                query.stop()
+        if self.h.timed:  # the micro-batches run under the query's own job group
+            self.h.timed_groups.append(str(query.runId))
+        return query, timings
+
+    def cycle(self, timed: bool) -> None:
+        from rss_feed_etl_spark import testdata as td
+        from rss_feed_etl_spark.plans.filter_pipeline import run_filter_pipeline
+        from rss_feed_etl_spark.sources.parquet import read_table, write_overwrite
+
         h, spark = self.h, self.spark
-        c = len(self.src.batches)
-        as_of = self.src.window_end(c).strftime("%Y-%m-%d %H:%M:%S")
+        c = self.src.cycles
+        as_of = self.src.window_end(c)
         before = _dir_bytes(self.sink) | _dir_bytes(self.out) if h.trace else {}
         with h.op("cycle", f"cycle{c}"), h.span("feed.cycle", cycle=c):
+            batch = self.src.next_batch()
             t0, c0 = time.perf_counter(), session_cpu_s()
             with h.span("feed.land"):
-                batch = self.src.next_batch()
-                landed = os.path.join(self.landing, f"batch-{c:05d}.parquet")
-                pq.write_table(batch, landed)
-
-            query = None
-
-            def start():
-                nonlocal query
-                query = incremental_scd1(
-                    read_stage_stream(spark, self.landing, self.schema),
-                    self.sink, self.ckpt, partitioned=True, available_now=True,
-                )
-                return query
-
-            def await_query(q):
-                if not q.awaitTermination(CALL_LIMIT_S):
-                    raise CallTimeout(f"incremental_scd1 still running after {CALL_LIMIT_S:.0f} s")
-
+                input_bytes = self._land(batch, f"{c:05d}")
             t1, c1 = time.perf_counter(), session_cpu_s()
-            try:
-                _, _, tm_stream = h.call("streaming", start, await_query)
-            finally:
-                if query is not None and query.isActive:
-                    query.stop()
+            query, tm_stream = self._ingest()
             t2, c2 = time.perf_counter(), session_cpu_s()
             _, _, tm_filter = h.call(
                 "filter_pipeline",
                 lambda: run_filter_pipeline(
                     read_table(spark, self.sink).drop("ingest_date"),
-                    as_of=as_of, days_back=self.DAYS_BACK, content_cols=["summary"],
-                    exclude_keywords=td.EXCLUDE_KEYWORDS,
+                    as_of=as_of.strftime("%Y-%m-%d %H:%M:%S"), days_back=self.DAYS_BACK,
+                    content_cols=["summary"], exclude_keywords=td.EXCLUDE_KEYWORDS,
                 ),
                 lambda df: write_overwrite(df, self.out),
             )
@@ -145,18 +186,20 @@ class FeedCycle:
                 self.cycles_cpu.append(c3 - c0)
                 self.ingest_cpu.append(c2 - c1)
             if h.trace:
-                self._trace_cycle(query, tm_stream, tm_filter, before, os.path.getsize(landed))
+                self._trace_cycle(query, tm_stream, tm_filter, before, input_bytes)
             if self.plant == "sink_duplicate":
                 self._plant_duplicate()
+            if self.plant == "stale_row":
+                self._plant_stale()
 
             # output checks (untimed), read on the host, not by the engine
-            self._check_cycle(as_of)
+            self._fold(batch)
+            self._check_sink()
+            self._check_filter(as_of)
 
-    def _check_cycle(self, as_of: str) -> None:
+    def _check_sink(self) -> None:
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
-
-        from rss_feed_etl_spark import testdata as td
 
         sink = ds.dataset(self.sink, format="parquet", partitioning="hive").to_table(
             columns=["link"])
@@ -164,16 +207,31 @@ class FeedCycle:
         if n != links or n != self.src.n_links():
             raise CheckFailed(f"sink has {n} rows / {links} links, "
                               f"expected {self.src.n_links()} links")
-        out = ds.dataset(self.out, format="parquet").to_table().to_pandas()
-        hi = datetime.strptime(as_of, "%Y-%m-%d %H:%M:%S")
-        bad = (out["published"] < hi - timedelta(days=self.DAYS_BACK)) | (out["published"] > hi)
-        for col, kws in td.EXCLUDE_KEYWORDS.items():
-            for kw in kws:
-                bad |= out[col].str.lower().str.contains(kw.lower(), regex=False)
-        bad |= out["summary"].isna() | out["summary"].str.strip().isin(["", "nan"])
-        if bad.any() or out.empty:
-            raise CheckFailed(f"{int(bad.sum())} of {len(out)} filter rows outside the "
-                              "date window, with an excluded keyword or no content")
+
+    def _check_filter(self, as_of: datetime) -> None:
+        """The regional output holds exactly the folded rows published in
+        the ``DAYS_BACK`` days before ``as_of`` (the filter has no upper
+        bound) with content in ``summary`` and no excluded keyword."""
+        import pyarrow.dataset as ds
+
+        from rss_feed_etl_spark import testdata as td
+
+        lo = as_of - timedelta(days=self.DAYS_BACK)
+        kws = {col: [k.lower() for k in ks] for col, ks in td.EXCLUDE_KEYWORDS.items()}
+        want = {
+            link for link, r in self.want.items()
+            if r["published"] >= lo
+            and (r["summary"] or "").strip() not in ("", "nan")
+            and not any(k in (r[col] or "").lower() for col, ks in kws.items() for k in ks)
+        }
+        got = ds.dataset(self.out, format="parquet").to_table(columns=["link"])["link"].to_pylist()
+        extra, missing = set(got) - want, want - set(got)
+        if extra or missing or len(got) != len(want):
+            stale = sum(self.want[k]["published"] < lo for k in extra if k in self.want)
+            raise CheckFailed(
+                f"filter output has {len(got)} rows, expected {len(want)}: {len(extra)} "
+                f"unexpected ({stale} outside the {self.DAYS_BACK}-day window), "
+                f"{len(missing)} missing")
 
     def _plant_duplicate(self) -> None:
         """Self-test only: copy one sink row into a second file, the wrong
@@ -181,6 +239,18 @@ class FeedCycle:
         part = next(f for f in _dir_bytes(self.sink) if f.endswith(".parquet"))
         pq.write_table(pq.read_table(part).slice(0, 1),
                        os.path.join(os.path.dirname(part), "planted.parquet"))
+
+    def _plant_stale(self) -> None:
+        """Self-test only: add the oldest link of the history to the regional
+        output, the wrong result a filter that ignores its window would give."""
+        import pyarrow as pa
+
+        part = next(f for f in _dir_bytes(self.out) if f.endswith(".parquet"))
+        table = pq.read_table(part)
+        row = table.slice(0, 1).to_pylist()[0]
+        row.update(min(self.want.values(), key=lambda r: r["published"]))
+        pq.write_table(pa.Table.from_pylist([row], schema=table.schema),
+                       os.path.join(self.out, "planted.parquet"))
 
     def _trace_cycle(self, query, tm_stream: dict, tm_filter: dict, before: dict,
                      input_bytes: int) -> None:
@@ -207,23 +277,13 @@ class FeedCycle:
                                         if f.startswith(self.sink)) / 2**20)
 
     def finish(self) -> None:
-        """The sink must equal an SCD1 fold of every batch, in landing order,
-        computed on the host: a re-delivered link takes the new values but
-        keeps its old notes when the new ones are blank (``merge_scd1``'s
-        rules, FIXTURES.md section 6)."""
+        """The sink must equal the host-side SCD1 fold of every batch."""
         import pandas as pd
         import pyarrow.dataset as ds
 
         with self.h.op("check", "sink_equals_fold"):
-            state: dict[str, dict] = {}
-            for batch in self.src.batches:
-                for row in batch.to_pylist():
-                    old = state.get(row["link"])
-                    if old is not None and (row["notes"] or "").strip() in ("", "nan"):
-                        row["notes"] = old["notes"]
-                    state[row["link"]] = row
             names = datagen.STAGE_SCHEMA.names
-            want = pd.DataFrame(list(state.values()), columns=names)
+            want = pd.DataFrame(list(self.want.values()), columns=names)
             got = ds.dataset(self.sink, format="parquet", partitioning="hive").to_table(
                 columns=names).to_pandas()
             frames = []
@@ -237,8 +297,9 @@ class FeedCycle:
 
     def metrics(self) -> dict:
         return {
-            "iter_cpu_s.p50": median(self.cycles_cpu),
-            "op_cpu_s.p50": median(self.ingest_cpu),
+            "iter_cpu_s.gmean": gmean(self.cycles_cpu),
+            "op_cpu_s.gmean": gmean(self.ingest_cpu),
+            "busy_share": self.h.busy_share(sum(self.cycles)),
         }
 
     def report(self) -> dict:
@@ -272,7 +333,7 @@ CATALOG = [
     ("merges", "merge_upsert"),
 ]
 CURATION = ("curation", "curation_pipeline")
-CATALOG_SF = 0.05
+CATALOG_SF = 0.02
 CURATION_BASE_DOCS, CURATION_COPIES = 500, 2
 FUNNEL = ["n_raw", "n_quality", "n_exact", "n_near", "n_train", "n_clean"]
 
@@ -308,7 +369,6 @@ class QueryCatalog:
         datagen.write_corpus(self.corpus, self.seed, CURATION_BASE_DOCS, CURATION_COPIES)
         tune_session(self.spark)
         qs = driver_queries.queries()
-        self.oracles = driver_queries.oracle_sql()
         self.fns = {name: qs[name] for _, name in CATALOG}
         docs = td.load_table(self.spark, self.corpus, "documents")
         emb = td.load_table(self.spark, self.corpus, "embeddings")
@@ -321,23 +381,31 @@ class QueryCatalog:
     def warmup(self) -> None:
         """First pass, untimed: pays codegen and checks every registered
         query against its DuckDB oracle (columns, rows, canonical values),
-        the oracles running on a second thread while Spark works."""
-        import duckdb
+        the oracles running in a process of their own while Spark works."""
         from check_parity import canon_frame
 
-        con = duckdb.connect(config={"threads": 2})
-        for t in os.listdir(self.data):
-            con.execute(f"CREATE VIEW {t[:-8]} AS SELECT * FROM '{self.data}/{t}'")
-        with ThreadPoolExecutor(1) as pool:
-            want = {name: pool.submit(lambda q: con.sql(q).fetchdf(), self.oracles[name])
-                    for _, name in CATALOG}
-            for _, name in CATALOG:
+        names = [name for _, name in CATALOG]
+        out = os.path.join(os.path.dirname(self.data), "oracle.pickle")
+        proc = subprocess.Popen([sys.executable, os.path.join(os.path.dirname(__file__),
+                                                              "oracle.py"), self.data, out, *names])
+        want: dict = {}
+
+        def oracle(name: str):
+            if not want:
+                if proc.wait(timeout=CALL_LIMIT_S) != 0:
+                    raise RuntimeError(f"oracle process exited with {proc.returncode}")
+                with open(out, "rb") as f:
+                    want.update(pickle.load(f))
+            return want[name]
+
+        try:
+            for name in names:
                 with self.h.op("check", name):
                     got = self.fns[name](self.spark, self.data).toPandas()
                     self.spark.catalog.clearCache()
                     if name == self.plant:
                         got.iloc[0, 0] = None  # self-test: a planted wrong value
-                    odf = want[name].result()
+                    odf = oracle(name)
                     if sorted(got.columns) != sorted(odf.columns):
                         raise CheckFailed(f"columns {sorted(got.columns)} "
                                           f"!= oracle {sorted(odf.columns)}")
@@ -345,7 +413,10 @@ class QueryCatalog:
                         raise CheckFailed(f"{len(got)} rows, oracle {len(odf)}")
                     if canon_frame(got) != canon_frame(odf):
                         raise CheckFailed("values differ from the DuckDB oracle")
-        con.close()
+        finally:
+            if proc.poll() is None:
+                proc.kill()
+            proc.wait()
         with self.h.op("check", CURATION[1]):
             rows = self.curate().collect()
             self.spark.catalog.clearCache()
@@ -410,8 +481,9 @@ class QueryCatalog:
 
     def metrics(self) -> dict:
         return {
-            "iter_cpu_s.p50": median(self.passes_cpu),
-            "op_cpu_s.p50": median(self.queries_cpu),
+            "iter_cpu_s.gmean": gmean(self.passes_cpu),
+            "op_cpu_s.gmean": gmean(self.queries_cpu),
+            "busy_share": self.h.busy_share(sum(self.passes)),
         }
 
     def report(self) -> dict:
