@@ -733,15 +733,16 @@ def bench_headline_isolated(
     """Re-measure every headline entry whose in-session time exceeds
     :data:`HEADLINE_ISOLATE_THRESHOLD_SEC` in a fresh-JVM child
     subprocess (grouped, see ``_entries_child``).  Returns a dict with
-    name → isolated seconds plus a ``skipped_budget`` list; failures are
-    skipped (the in-session number stays authoritative for the headline
-    total either way — the isolated block is the cross-round-comparable
-    record, not a replacement)."""
+    name → isolated seconds, a ``skipped_budget`` list, and a ``failed``
+    list naming every entry of a child group that failed or timed out, or
+    whose record the child did not return (the in-session number stays
+    authoritative for the headline total either way — the isolated block
+    is the cross-round-comparable record, not a replacement)."""
     heavy = sorted(
         (n for n, v in timings.items() if v and v > HEADLINE_ISOLATE_THRESHOLD_SEC),
         key=lambda n: -timings[n],
     )
-    out: dict = {"seconds": {}, "skipped_budget": []}
+    out: dict = {"seconds": {}, "skipped_budget": [], "failed": []}
     for i in range(0, len(heavy), CHILD_GROUP_SIZE):
         group = heavy[i : i + CHILD_GROUP_SIZE]
         est = 60 + 3 * sum(timings[n] for n in group)
@@ -757,6 +758,7 @@ def bench_headline_isolated(
         recs = _run_child_group("headline", group, sf_dir, None, min(rem - 10, est * 4))
         for rec in recs or []:
             out["seconds"][rec["name"]] = rec["base"]
+        out["failed"].extend(n for n in group if n not in out["seconds"])
     return out
 
 

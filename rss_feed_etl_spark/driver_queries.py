@@ -771,143 +771,53 @@ from . import driver_queries_wave150  # noqa: E402, F401  (registers wave-150 qu
 # never-sampled name automatically.
 #
 # ``_RECHECK`` is the one remaining manual knob: queries whose CODE
-# changed this round and therefore must re-verify even though they hold a
-# green row.  Round 10: the decontamination pair now joins on HASHED
-# shingles (60-bit md5 buckets, changed in lockstep on both engines),
-# and the two PQ servers moved their ADC scan into the Arrow
-# ``mapInPandas`` pass (bit-identical by construction, locally
-# hash-green at all three SFs; VERDICT r9 #4).  ``incremental_curation_
-# fold`` only gained tempdir cleanup (no plan or value change) and the
-# round-9 entries all landed green CORRECTNESS_r09 rows, so both stay
-# out.  ``ngram_jaccard_neardup`` re-verifies because its pair pipeline
-# gained a shared-bucket persist + explicit sizes broadcasts late in the
-# round (values identical — locally hash-green at all three SFs — but
-# the change landed after the committed parity record).  Keep this <= 5
-# (pinned): every slot delays a rotation name by a round.
+# changed and therefore must re-verify even though they hold a green row.
+# Every registered name holds a driver row, so the cap is 20 (pinned in
+# tests/test_driver_rotation.py).  Current entries: the queries whose
+# vector math moved from interpreted folds onto the ``vecmath`` kernels,
+# plus ``alignment_uniformity`` (exact integer ring bucket).  Four more
+# queries changed the same way and share an operator path with an entry
+# below: ``ann_recall_lsh`` (cosine_topk_lsh), ``clustering_kappa``
+# (nearest_centroid_confusion), ``retrieval_pr_curve`` (the wave-102
+# retrieval cosine) and ``bitext_mining_pairs_banded`` (the bitext
+# cosine).
 _RECHECK = [
-    # ADVICE r10 #1: ngram_containment_pairs shares the dedup.py pair
-    # pipeline that was rewritten late in round 10 (one-pass 2-struct
-    # explode replacing two full pipeline executions) but held only a
-    # round-5 green row, so the rotation would never re-verify it.  Its
-    # rewritten sibling ngram_jaccard_neardup re-greened in
-    # CORRECTNESS_r10.json; this slot gives the shared pipeline's other
-    # consumer the same fresh driver row.  The five round-10 entries all
-    # landed green r10 rows and rotate out.
-    #
-    # Round 11 (optimization round): every query whose CODE changed this
-    # round re-verifies.  As of round 10 ALL 389 names hold at least one
-    # driver row, so recheck slots no longer displace never-sampled
-    # names — the <=5 pin is lifted for this round.  All entries below
-    # are locally hash-green at sf0.001/sf0.01/sf0.1
-    # (PARITY_LOCAL_r11.json).
-    "ngram_containment_pairs",
-    # codegen vector kernels replacing interpreted folds (bit-identical
-    # left-assoc order, guarded fallback — similarity.py, linalg.py)
-    "label_knn_accuracy",
-    "knn_label_confusion",
-    "triplet_margin_stats",
-    "filtered_ann_recall",
-    "embedding_mmd_matrix",
-    # + two-stage distributed ring rank (single-partition window removed)
+    "ann_cosine_topk_lsh",
+    "label_centroid_confusion",
+    "hard_negatives",
+    "semantic_dedup_pairs",
+    "embedding_random_projection",
+    "int8_ann_topk",
+    "ann_rerank_exact",
+    "grid_density_clusters",
+    "matryoshka_truncation_eval",
+    "int8_quantization_error",
+    "bitext_mining_pairs",
+    "binary_sign_ann_topk",
+    "mmr_diversified_topk",
+    "kcenter_diversity_sample",
+    "embedding_retrieval_auc",
+    "semantic_split_contamination",
+    "pq_ann_topk",
+    "curation_pipeline",
+    "ivfpq_ann_topk",
     "alignment_uniformity",
-    # distinct-grain LM scoring (nll per n-gram computed once, attached
-    # with one join — textstats.py)
-    "interp_trigram_logppl",
-    "kneser_ney_bigram_ppl",
-    "bigram_logppl",
-    # 60-bit md5 trigram codes as count/join/window keys, lockstep in
-    # the oracle (the r10 decontaminate precedent)
-    "source_token_mutual_info",
-    "source_js_divergence_matrix",
-    # fused single-scan scorecard over the shared gate expressions
-    "source_scorecard",
 ]
 
-# Static fallback only for checkouts missing the CORRECTNESS artifacts
-# (e.g. a bare package install): the r01-r04 green union.  With the JSON
-# files present -- the normal case -- this set is ignored.
-_GREEN_FALLBACK = {
-    "ann_cosine_topk", "ann_cosine_topk_lsh",
-    "ann_recall_lsh", "ann_rerank_exact", "anti_join_removed",
-    "approx_distinct_rollup", "asof_latest_order", "audio_features",
-    "bigram_logppl", "bloom_prune_revenue", "bm25_search",
-    "boilerplate_removed", "bootstrap_mean_ci", "bow_fingerprint_dedup",
-    "bpe_merge_candidates", "brand_supplier_counts", "budget_allocation",
-    "canonical_per_component", "cdc_apply_ordered", "cdc_to_scd2",
-    "churned_users", "click_purchase_window", "clustering_kappa",
-    "compaction_plan", "conform_schema_repair", "corpus_quality_filter",
-    "corpus_top_terms", "countmin_estimates", "curriculum_shards",
-    "customer_order_distribution", "daily_count_anomalies",
-    "daily_event_windows", "daily_gapfill", "daily_revenue_wow",
-    "daily_stickiness", "daily_trend_slope", "date_window_filter",
-    "decayed_popularity", "decontaminate_broadcast_holdout",
-    "decontaminate_splits", "dedup_exact", "dedup_keep_last",
-    "dedup_pair_recall", "dedup_rate_by_source", "deterministic_shuffle",
-    "discount_opportunity", "disjunctive_brand_revenue",
-    "doc_fingerprint", "doc_keywords", "document_chunks",
-    "dominant_share_suppliers", "dow_anomaly_days", "dp_event_counts",
-    "dq_assertion_report", "ema_daily_revenue",
-    "embedding_cosine_neardup", "embedding_covariance",
-    "embedding_random_projection", "epoch_upsample", "event_type_lift",
-    "event_type_pivot", "events_distinct_daily", "events_grouping_sets",
-    "filter_pipeline", "fk_profile_lineitem_orders", "funnel_stages",
-    "fuzzy_name_pairs", "global_percent_rank", "gmean_value_udaf",
-    "golden_record", "hard_negatives", "hashed_quality_scores",
-    "hot_shingle_spans", "html_clean", "idle_rich_customers",
-    "image_decode_meta", "image_resize_meta", "importance_weights",
-    "important_part_values", "incremental_dedup_exact", "incremental_merge_fold",
-    "incremental_neardup", "int8_ann_topk", "inverted_index",
-    "item_pagerank", "join_cardinality_estimate", "json_props_summary",
-    "key_skew_report", "keyword_exclusion_filter", "km_survival",
-    "kmeans_clusters", "ks_value_drift", "label_centroid_confusion",
-    "lang_id", "lang_quota_sample", "large_order_customers",
-    "last_touch_attribution", "leakage_safe_split",
-    "length_bucket_batches", "lenient_timestamp_parse",
-    "llm_match_scores", "llm_response_repair", "lookup_join_notes",
-    "market_share", "merge_counts", "merge_upsert", "merged_corpus_stats",
-    "min_cost_supplier", "minhash_lsh_neardup", "nation_profit",
-    "neardup_components", "neardup_drop_list", "new_vs_returning",
-    "ngram_diversity", "ngram_jaccard_neardup", "nonempty_content_filter",
-    "numeric_extraction", "oov_rate_scores", "order_decile_rank",
-    "order_priority_late", "order_stats_cube", "paragraph_dedup",
-    "pca_projection", "pii_redact", "pmi_top_pairs", "prefix_clone_pairs",
-    "pricing_summary", "promo_revenue_ratio", "provenance_outer_join",
-    "regional_revenue", "repetition_ratio", "retention_cohorts",
-    "returned_revenue_topk", "revenue_rollup", "rrf_fusion",
-    "running_totals", "scd1_merge", "scd2_current_view", "scd2_merge",
-    "scd2_snapshot_asof", "search_rank_metrics", "semantic_dedup_pairs",
-    "semi_join_updated", "sequence_packing", "session_paths_top",
-    "sessionize", "shingle_novelty_scores", "ship_latency_priority",
-    "shipping_priority_top10", "simhash_fingerprint", "simhash_neardup",
-    "skills_match", "sliding_event_windows", "small_quantity_revenue",
-    "snapshot_diff", "sole_late_suppliers", "source_lang_chi2",
-    "source_mixture_sample", "source_zscore_keep", "stringify_sink",
-    "temperature_mixture_sample", "text_quality_stats",
-    "tfidf_cosine_pairs", "time_decay_attribution", "token_budget_select",
-    "token_counts", "token_entropy_scores", "top_bigrams",
-    "top_supplier_quarter", "topk_per_user", "train_val_test_split",
-    "trending_items", "tz_convert_format", "unicode_normalized",
-    "unigram_logppl", "union_dedup_keep_first", "url_canonical_dedup",
-    "users_click_and_purchase", "users_click_not_purchase",
-    "value_deciles", "value_histogram", "value_outliers",
-    "value_percentiles", "video_frames_meta", "volume_shipping",
-    "weighted_doc_sample", "winnow_fingerprints", "winsorized_means",
-    "woe_value_bins", "zipf_corpus_fit",
-}
+_REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
-def _driver_sampled() -> set[str]:
+def _driver_sampled(root: pathlib.Path = _REPO_ROOT) -> set[str]:
     """Union of names across every committed CORRECTNESS_r*.json.
 
     The artifacts sit at the repo root, one dict per round keyed by query
     name.  A name's presence (green or not) means the driver already
     recorded a row for it, so the window should spend its slots
-    elsewhere.  Unreadable or absent files degrade to the static
-    fallback so a bare package checkout still produces a sane order.
+    elsewhere.  Unreadable or absent files contribute nothing: a bare
+    package checkout treats every name as never sampled and keeps
+    registration order.
     """
-    root = pathlib.Path(__file__).resolve().parent.parent
     names: set[str] = set()
-    found = False
     for path in sorted(root.glob("CORRECTNESS_r*.json")):
         try:
             data = json.loads(path.read_text())
@@ -915,8 +825,7 @@ def _driver_sampled() -> set[str]:
             continue
         if isinstance(data, dict):
             names.update(data.keys())
-            found = True
-    return names if found else set(_GREEN_FALLBACK)
+    return names
 
 
 def _rotated(names: list[str]) -> list[str]:

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from . import testdata as td
 from .driver_queries import _register
 from .driver_queries_corpus import _cos_sql
-from .operators import profiling, similarity
+from .operators import profiling, vecmath
 
 _AUC_QID = 0
 
@@ -24,7 +24,7 @@ def _q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != _AUC_QID)
         .crossJoin(F.broadcast(q))
         .select(
-            similarity.cosine(F.col("embedding"), F.col("q")).alias("score"),
+            vecmath.cosine("embedding", "q").alias("score"),
             (F.col("label") == F.col("ql")).cast("int").alias("pos"),
         )
     )
@@ -72,7 +72,7 @@ def _q_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != _AUC_QID)
         .crossJoin(F.broadcast(q))
         .select(
-            similarity.cosine(F.col("embedding"), F.col("q")).alias("score"),
+            vecmath.cosine("embedding", "q").alias("score"),
             (F.col("label") == F.col("ql")).cast("int").alias("pos"),
         )
     )

@@ -28,51 +28,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _sqdist(vec: Column, lit_vec: list[float]) -> Column:
-    c = F.array(*[F.lit(float(v)) for v in lit_vec])
-    return _sqdist_cols(vec, c)
+from . import vecmath
 
 
-def _sqdist_cols(a: Column, b: Column) -> Column:
-    """Squared L2 between two array columns as the canonical sequential
-    fold (the fallback branch of ``similarity.sqdist_codegen``)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _assign(vec: Column, centroids: dict[int, list[float]]) -> Column:
-    """cluster id of the nearest centroid (squared L2, ties → smallest id)."""
-    best = F.array_min(
+def _assign(vec: str, centroids: dict[int, list[float]]) -> Column:
+    """(dist, cid) of the nearest centroid (squared L2, ties → smallest
+    id) as an expression — the reference the Arrow scans replay."""
+    return F.array_min(
         F.array(
             *[
                 F.struct(
-                    _sqdist(vec, cvec).alias("dist"), F.lit(cid).alias("cid")
+                    vecmath.sqdist(vec, cvec).alias("dist"), F.lit(cid).alias("cid")
                 )
                 for cid, cvec in sorted(centroids.items())
             ]
         )
     )
-    return best
-
-
-def _fold_dists_np(X, C):
-    """Squared L2 of every row of ``X`` (n×w) against every row of ``C``
-    (k×w) with the SAME IEEE-754 operation order as the :func:`_sqdist`
-    expression fold — sequential per-dimension accumulation
-    (``acc = acc + d*d`` for j = 0..w-1) — vectorized across the batch.
-    Shared by every Arrow assignment path so "numpy distance" always
-    means "the fold the oracle replays"."""
-    import numpy as np
-
-    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-    for j in range(C.shape[1]):
-        d = X[:, j, None] - C[None, :, j]
-        acc += d * d
-    return acc
 
 
 def _assign_scan_arrow(
@@ -83,9 +54,10 @@ def _assign_scan_arrow(
     :func:`_assign`'s expression tree over a corpus-scale frame (the
     same move VERDICT r9 #4 made for the PQ ADC scan): centroids are
     model-sized driver state riding the closure, the per-batch distance
-    matrix is ``_fold_dists_np`` (bit-identical to the ``_sqdist``
-    fold), and argmin is first-occurrence over centroids iterated in
-    sorted-cid order — exactly ``array_min`` over (dist, cid) structs.
+    matrix is ``vecmath.sqdist_np`` (bit-identical to the
+    ``vecmath.sqdist`` fold), and argmin is first-occurrence over
+    centroids iterated in sorted-cid order — exactly ``array_min`` over
+    (dist, cid) structs.
     The expression version spent its time in interpreted higher-order
     folds (k × dim lambda evaluations per row) plus the plan/codegen
     cost of k × dim literal nodes per query; this is a constant-size
@@ -115,7 +87,7 @@ def _assign_scan_arrow(
             if not len(pdf):
                 continue
             X = np.stack(pdf["vec"].to_numpy()).astype(np.float64, copy=False)
-            d = _fold_dists_np(X, cent_mat)
+            d = vecmath.sqdist_np(X, cent_mat)
             a0 = np.argmin(d, axis=1)
             cid = cent_ids[a0]
             if emit == "cid_vec":
@@ -308,15 +280,8 @@ def grid_density_clusters(
     scale = 2.0 ** 0.5
 
     def proj(j: int):
-        sj = F.array(*[F.lit(s) for s in signs[j]])
         return F.round(
-            F.aggregate(
-                F.zip_with(F.col(vec_col), sj, lambda x, s: x.cast("double") * s),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            / F.lit(scale),
-            decimals,
+            vecmath.dot(f"`{vec_col}`", signs[j]) / F.lit(scale), decimals
         )
 
     pts = emb.select(
@@ -413,7 +378,7 @@ def kcenter_diversity_sample(
     state = emb.filter(F.col("id") != seed["id"]).select(
         "id",
         "vec",
-        F.round(_sqdist(F.col("vec"), centers[0][1]), decimals).alias("md"),
+        F.round(vecmath.sqdist("vec", centers[0][1]), decimals).alias("md"),
     ).localCheckpoint(eager=True)
 
     for _ in range(1, k):
@@ -429,7 +394,7 @@ def kcenter_diversity_sample(
                 "vec",
                 F.least(
                     F.col("md"),
-                    F.round(_sqdist(F.col("vec"), list(row["vec"])), decimals),
+                    F.round(vecmath.sqdist("vec", list(row["vec"])), decimals),
                 ).alias("md"),
             )
             .localCheckpoint(eager=True)

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import vecmath
+
 _PARTIAL_SCHEMA = (
     "i int, j int, g double, si double, sj double, n bigint"
 )
@@ -198,28 +200,23 @@ def alignment_uniformity(
     SinglePartition`` put the whole corpus in one task (the one
     scale-killer shape this operator had; rank VALUES are a pure
     function of the total order, so the result is bit-identical).
-    Per-pair terms use the unrolled codegen kernels (bit-identical,
-    guarded; see ``similarity.sqdist_codegen``), round to 9 dp and sum
+    Per-pair terms use the :mod:`.vecmath` kernels (bit-identical,
+    width-guarded), round to 9 dp and sum
     as DECIMAL so cross-engine fold order cannot move either metric.
     """
     from pyspark.sql import Window
 
     from ..functions.hashing import md5_bucket
-    from .similarity import _UNROLL_DIM, _norm_codegen, sqdist_codegen
 
     emb = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(label_col).alias("lab"),
         F.transform(vec_col, lambda v: v.cast("double")).alias("raw"),
     )
-    emb = emb.withColumn("__n", _norm_codegen("raw"))
-    unit = F.when(
-        F.size("raw") == _UNROLL_DIM,
-        F.array(*[F.col("raw")[i] / F.col("__n") for i in range(_UNROLL_DIM)]),
-    ).otherwise(F.transform("raw", lambda v: v / F.col("__n")))
+    emb = emb.withColumn("__n", vecmath.norm("raw"))
     emb = emb.select(
         "id", "lab",
-        unit.alias("vec"),
+        vecmath.divide("raw", "__n").alias("vec"),
         md5_bucket(
             F.concat(F.lit(salt + ":"), F.col("id").cast("string"))
         ).alias("hk"),
@@ -237,7 +234,7 @@ def alignment_uniformity(
         lazy, and the rank values are exactly the global row_number."""
         n_b = 4 * int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         step = (1 << 60) // n_b + 1
-        b = df.withColumn("__b", (F.col("hk") / F.lit(step)).cast("long"))
+        b = df.withColumn("__b", F.expr(f"hk div {step}"))
         local_w = Window.partitionBy(*part_cols, "__b").orderBy("hk", "id")
         ranked = b.withColumn("__lrn", F.row_number().over(local_w))
         counts = b.groupBy(*part_cols, "__b").agg(F.count("*").alias("__c"))
@@ -271,7 +268,7 @@ def alignment_uniformity(
         on = [*part_cols, "p"]
         return left.join(right, on)
 
-    d2 = sqdist_codegen("va", "vb")
+    d2 = vecmath.sqdist("va", "vb")
     align = _pairs(emb, ["lab"]).select(
         F.round(d2, 9).alias("d2")
     ).agg(
@@ -355,13 +352,7 @@ def embedding_mmd_matrix(
     )
 
     def _k(a, b):
-        # unrolled codegen squared-L2 (round 11): bit-identical to the
-        # zip_with fold (same left-assoc order, guarded fallback), but
-        # whole-stage-codegen instead of one interpreter dispatch per
-        # element per sampled pair — see similarity.sqdist_codegen.
-        from .similarity import sqdist_codegen
-
-        d2 = F.round(sqdist_codegen(a, b), 9)
+        d2 = F.round(vecmath.sqdist(a, b), 9)
         return F.round(F.exp(-F.lit(float(gamma)) * d2), 9)
 
     l = samp.select(

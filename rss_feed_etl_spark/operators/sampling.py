@@ -915,7 +915,8 @@ def semantic_contamination(
     candidate grain for the exact cosine, and the per-eval best match is
     a window over candidate-grain rows.
     """
-    from .similarity import banded_signatures, cosine
+    from . import vecmath
+    from .similarity import banded_signatures
 
     e = eval_emb.select(F.col(id_col).alias("eval_id"), F.col(vec_col).alias("__ve"))
     t = train_emb.select(
@@ -936,7 +937,7 @@ def semantic_contamination(
         cand.join(e, "eval_id")
         .join(t, "train_id")
         .select(
-            "eval_id", "train_id", cosine(F.col("__ve"), F.col("__vt")).alias("cos")
+            "eval_id", "train_id", vecmath.cosine("__ve", "__vt").alias("cos")
         )
     )
     w = Window.partitionBy("eval_id").orderBy(F.desc("cos"), F.asc("train_id"))

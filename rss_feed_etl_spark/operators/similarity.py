@@ -1,8 +1,8 @@
 """Similarity operators: embedding ANN, near-dup by cosine, TF-IDF, and the
 reference's lexicon skills matching (A4/A5/X2/X5).
 
-Embedding math stays in Catalyst expressions (``zip_with`` + ``aggregate``
-folds — sequential, deterministic, double-precision) rather than a UDF; at
+Embedding math is built by :mod:`.vecmath` (width-guarded codegen kernels
+over sequential, deterministic, double-precision folds) rather than a UDF; at
 100 TB the brute-force variants are the correctness baseline and the
 bucketed variants (LSH hyperplane signs) are the scale path: candidates
 meet in hash buckets, so the join key is a small signature, never the
@@ -19,134 +19,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokens
+from . import vecmath
 
 # Hard ceiling for greedy driver-loop pickers (MMR here, k-center in
 # clustering.py): each pick costs one 1-row collect, so k bounds the
 # number of driver round-trips.  Model-sized by design (VERDICT r9 #7).
 MAX_GREEDY_K = 1000
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-
-
-def cosine(a: Column, b: Column, decimals: int = 4) -> Column:
-    """Cosine similarity of two float arrays, rounded for cross-engine
-    comparison (fold order and float widening differ between engines at the
-    last ulp; 4dp absorbs it)."""
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), decimals)
-
-
-# ---------------------------------------------------------------------------
-# Codegen vector kernels (round 10).  Spark's higher-order array functions
-# (zip_with / aggregate) are CodegenFallback — evaluated INTERPRETED, one
-# lambda call per element per row — which makes every per-PAIR fold in the
-# brute/banded similarity family pay ~dim interpreter dispatches per pair.
-# The kernels below unroll the same left-associated fold over the
-# package-standard embedding width so whole-stage codegen compiles it to
-# straight-line Java, GUARDED by a length check that falls back to the
-# generic fold for any other width.
-#
-# Bit-identical by construction:
-# - the unrolled sum is 0.0 + t0 + t1 + ... (left-assoc) — exactly the
-#   aggregate fold's accumulation order and doubles;
-# - when either input is not exactly _UNROLL_DIM long the guard routes to
-#   the original fold, so padding/null semantics are UNCHANGED (zip_with
-#   pads the shorter side with null => null result; the unrolled branch is
-#   never taken for unequal lengths);
-# - a null array makes the guard null => fallback => null, as before.
-#
-# Only pass CHEAP column references (attribute names or literal arrays):
-# the unrolled form references each input ~_UNROLL_DIM times, and an
-# expensive child expression would be re-evaluated per reference outside
-# codegen's subexpression elimination (the element_at/CollapseProject
-# trap).  Every call site below passes plain attribute names or
-# driver-side literal vectors.
-#
-# Construction cost (round 10, measured): building the unrolled tree
-# through py4j Column operators costs ~3 s of driver round trips PER
-# EXPRESSION (hundreds of Column calls), which dwarfed the runtime win on
-# bench-sized inputs.  The kernels therefore take SQL expression STRINGS
-# and parse the whole tree JVM-side in ONE ``F.expr`` call (~ms) — same
-# expression, same semantics, no py4j chatter (guide §7.3: plan-build is
-# single-threaded driver work).
-_UNROLL_DIM = 64
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of :func:`_dot` — the interpreted fold fallback."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> "
-        f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _norm_sql(a: str) -> str:
-    """SQL text of :func:`_norm` — the interpreted fold fallback."""
-    return (
-        f"sqrt(aggregate({a}, 0.0D, "
-        f"(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    )
-
-
-def _dot_codegen(a: str, b: str) -> Column:
-    terms = "".join(
-        f" + (CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))"
-        for i in range(_UNROLL_DIM)
-    )
-    return F.expr(
-        f"CASE WHEN size({a}) = {_UNROLL_DIM} AND size({b}) = {_UNROLL_DIM} "
-        f"THEN 0.0D{terms} ELSE {_dot_sql(a, b)} END"
-    )
-
-
-def _norm_codegen(a: str) -> Column:
-    terms = "".join(
-        f" + (CAST({a}[{i}] AS DOUBLE) * CAST({a}[{i}] AS DOUBLE))"
-        for i in range(_UNROLL_DIM)
-    )
-    return F.expr(
-        f"CASE WHEN size({a}) = {_UNROLL_DIM} THEN sqrt(0.0D{terms}) "
-        f"ELSE {_norm_sql(a)} END"
-    )
-
-
-def sqdist_codegen(a: str, b: str) -> Column:
-    """Unrolled squared-L2 (the clustering._sqdist fold) with the same
-    guard/fallback contract as :func:`_dot_codegen`.  No casts: mirrors
-    the zip_with fold's element arithmetic exactly (callers pass double
-    arrays; a float input would fold in float on both branches)."""
-    terms = "".join(
-        f" + (({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}]))"
-        for i in range(_UNROLL_DIM)
-    )
-    fallback = (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        f"0.0D, (acc, v) -> acc + v)"
-    )
-    return F.expr(
-        f"CASE WHEN size({a}) = {_UNROLL_DIM} AND size({b}) = {_UNROLL_DIM} "
-        f"THEN 0.0D{terms} ELSE {fallback} END"
-    )
-
-
-def cosine_codegen(a: str, b: str, decimals: int = 4) -> Column:
-    """:func:`cosine` on the codegen kernels — identical values, straight-
-    line Java instead of interpreted folds on the standard width.
-    ``a``/``b`` are SQL expression strings (attribute names)."""
-    return F.round(_dot_codegen(a, b) / (_norm_codegen(a) * _norm_codegen(b)), decimals)
 
 
 def _per_query_topk(
@@ -217,10 +95,8 @@ def cosine_topk(
     ``cosine_topk_lsh`` for the bucketed scale path.
 
     Both norms are hoisted BELOW the join (corpus norm computed once per
-    row, query norm once per query) so the per-pair work is ONE
-    interpreted fold (the dot product) plus a multiply-divide, not three
-    folds — Spark interprets higher-order array functions per element,
-    so each hoisted fold saves 64 lambda evaluations per pair.  Values
+    row, query norm once per query) so the per-pair work is ONE dot
+    product plus a multiply-divide, not three reductions.  Values
     are bit-identical (same fold, same doubles, same 4 dp round);
     measured 2.15x on the 10x corpus (32.5 -> 15.1 s, 100 queries x 6M
     vectors, outputs compared row-for-row).
@@ -229,19 +105,19 @@ def cosine_topk(
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
-            _norm_codegen(f"`{vec_col}`").alias("__qn"),
+            vecmath.norm(f"`{vec_col}`").alias("__qn"),
         )
     )
     pairs = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("ev"),
-        _norm_codegen(f"`{vec_col}`").alias("__en"),
+        vecmath.norm(f"`{vec_col}`").alias("__en"),
     ).join(q, F.col("neighbor_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
         F.round(
-            _dot_codegen("qv", "ev") / (F.col("__qn") * F.col("__en")),
+            vecmath.dot("qv", "ev") / (F.col("__qn") * F.col("__en")),
             4,
         ).alias("cosine_sim"),
     )
@@ -284,9 +160,8 @@ def banded_signatures(
     lifting run as ONE int64 GEMM per Arrow batch (vectorized pandas UDF)
     while the DuckDB oracle's sequential ``list_reduce`` provably lands on
     the identical bit.  The expression-tree alternative (48
-    ``aggregate``/``zip_with`` folds per row) is interpreted per element —
-    Spark does not codegen higher-order functions — and benches ~5× slower
-    at sf0.1.
+    higher-order folds per row) is interpreted per element — Spark does
+    not codegen higher-order functions — and benches ~5× slower at sf0.1.
     """
     import numpy as np
     import pandas as pd
@@ -371,7 +246,7 @@ def cosine_topk_lsh(
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = pairs.select(
-        "query_id", "neighbor_id", cosine(F.col("qv"), F.col("ev")).alias("cosine_sim")
+        "query_id", "neighbor_id", vecmath.cosine("qv", "ev").alias("cosine_sim")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -512,7 +387,7 @@ def cosine_topk_ivf(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        cosine_codegen("queryv", "neighborv").alias("cosine_sim"),
+        vecmath.cosine("queryv", "neighborv").alias("cosine_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -560,7 +435,7 @@ def nearest_centroid_confusion(
         F.col(id_col).alias("id"), F.col(label_col).alias("true_label"), F.col(vec_col).alias("vec")
     ).join(F.broadcast(centroids))
     w = Window.partitionBy("id").orderBy(
-        cosine(F.col("vec"), F.col("cvec")).desc(), F.col("c_label").asc()
+        vecmath.cosine("vec", "cvec").desc(), F.col("c_label").asc()
     )
     assigned = (
         scored.withColumn("__rn", F.row_number().over(w))
@@ -893,7 +768,7 @@ def hard_negative_mining(
         "query_id",
         "neighbor_id",
         F.col("nlabel").alias("neighbor_label"),
-        cosine(F.col("qv"), F.col("ev")).alias("cosine_sim"),
+        vecmath.cosine("qv", "ev").alias("cosine_sim"),
     )
     return _per_query_topk(
         scored, k, F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
@@ -946,13 +821,7 @@ def semantic_dedup_pairs(
     )
     # cell = first index of the max rounded cosine (array_position returns
     # the FIRST occurrence -> ties break to the smallest seed index)
-    cos_cols = [
-        cosine(
-            F.col("vec"),
-            F.array(*[F.lit(float(x)) for x in row["vec"]]),
-        )
-        for row in seeds
-    ]
+    cos_cols = [vecmath.cosine("vec", list(row["vec"])) for row in seeds]
     arr = F.array(*cos_cols)
     cells = base.select(
         "id",
@@ -1035,7 +904,7 @@ def random_projection(
 
     Map-only: the sign matrix is a compile-time literal (md5-derived, so
     the oracle replays it bit-for-bit), each output dim is one
-    ``zip_with`` + left-fold ``aggregate`` in DOUBLE, and the output
+    left-fold ``vecmath.dot`` against a literal sign row, and the output
     explodes to (id, dim, value) rows — hashable, and the downstream
     shape ANN/clustering expect.  No shuffle, no UDF; at 100 TB this is
     scan-rate bound.
@@ -1044,14 +913,7 @@ def random_projection(
     scale = float(out_dim) ** 0.5
     dims = []
     for j in range(out_dim):
-        sj = F.array(*[F.lit(s) for s in signs[j]])
-        y = F.aggregate(
-            F.zip_with(
-                F.col(vec_col), sj, lambda x, s: x.cast("double") * s
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        y = vecmath.dot(f"`{vec_col}`", signs[j])
         dims.append(
             F.struct(
                 F.lit(j).alias("dim"), F.round(y / scale, decimals).alias("value")
@@ -1116,12 +978,9 @@ def int8_dot_topk(
     pairs = qcorpus.select(
         F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("ev")
     ).join(F.broadcast(qq), F.col("neighbor_id") != F.col("query_id"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("ev"), lambda x, y: (x * y).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
+    scored = pairs.select(
+        "query_id", "neighbor_id", vecmath.int_dot("qv", "ev").alias("dot_q")
     )
-    scored = pairs.select("query_id", "neighbor_id", dot.alias("dot_q"))
     return (
         _per_query_topk(scored, k, F.col("dot_q").desc(), F.col("neighbor_id").asc())
         .withColumn("rank", F.col("rank").cast("int"))
@@ -1183,13 +1042,6 @@ def rerank_exact(
     """
     from pyspark.sql import Window
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     qvecs = embeddings.select(
         F.col(id_col).alias(query_col), F.col(vec_col).alias("__qv")
     ).join(F.broadcast(candidates.select(query_col).distinct()), query_col)
@@ -1201,16 +1053,12 @@ def rerank_exact(
         .join(nvecs, neighbor_col)
         .join(F.broadcast(qvecs), query_col)
     )
-    cos = _dot(F.col("__qv"), F.col("__nv")) / (
-        F.sqrt(_dot(F.col("__qv"), F.col("__qv")))
-        * F.sqrt(_dot(F.col("__nv"), F.col("__nv")))
-    )
     w = Window.partitionBy(query_col).orderBy(
         F.desc("cosine"), F.asc(neighbor_col)
     )
     return (
         joined.select(
-            query_col, neighbor_col, F.round(cos, decimals).alias("cosine")
+            query_col, neighbor_col, vecmath.cosine("__qv", "__nv", decimals).alias("cosine")
         )
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
@@ -1244,11 +1092,15 @@ def matryoshka_truncation_eval(
     )
     staged = pairs.select(
         F.explode(F.array(*[F.lit(d) for d in dims])).alias("d"), "__v1", "__v2"
+    ).select(
+        "d",
+        "__v1",
+        "__v2",
+        F.slice("__v1", F.lit(1), F.col("d")).alias("__t1"),
+        F.slice("__v2", F.lit(1), F.col("d")).alias("__t2"),
     )
-    full = cosine(F.col("__v1"), F.col("__v2"))
-    trunc = cosine(
-        F.slice("__v1", F.lit(1), F.col("d")), F.slice("__v2", F.lit(1), F.col("d"))
-    )
+    full = vecmath.cosine("__v1", "__v2")
+    trunc = vecmath.cosine("__t1", "__t2")
     dec = "decimal(20,10)"
     scored = staged.select(
         "d",
@@ -1303,10 +1155,11 @@ def int8_quantization_error(
     # square with e*e, never pow(e, 2): libm pow implementations differ in
     # the last ulp between engines, e*e is a single identical IEEE multiply
     errs = F.transform(F.col("__v"), lambda x: x.cast("double") - q(x) * F.col("__s"))
-    sq_err = F.aggregate(errs, F.lit(0.0), lambda acc, e: acc + e * e)
     per_vec = staged.select(
+        "label", errs.alias("__e"), F.size("__v").alias("__n"), "__s"
+    ).select(
         "label",
-        (sq_err / F.size("__v")).alias("mse"),
+        (vecmath.dot("__e", "__e") / F.col("__n")).alias("mse"),
         F.col("__s").alias("scale"),
     )
     dec = "decimal(25,10)"
@@ -1362,7 +1215,7 @@ def bitext_mining_pairs_brute(
         F.col(id_col).alias("b_id"), F.col(vec_col).alias("__vb")
     )
     scored = a.crossJoin(F.broadcast(b)).select(
-        "a_id", "b_id", cosine(F.col("__va"), F.col("__vb")).alias("cos")
+        "a_id", "b_id", vecmath.cosine("__va", "__vb").alias("cos")
     )
     return _bitext_margin_best(scored, k, margin_threshold)
 
@@ -1457,7 +1310,7 @@ def bitext_mining_pairs_banded(
         .dropDuplicates(["a_id", "b_id"])
     )
     scored = cand.select(
-        "a_id", "b_id", cosine(F.col("__va"), F.col("__vb")).alias("cos")
+        "a_id", "b_id", vecmath.cosine("__va", "__vb").alias("cos")
     )
     return _bitext_margin_best(scored, k, margin_threshold)
 
@@ -1580,7 +1433,7 @@ def binary_sign_ann_topk(
             "query_id",
             "neighbor_id",
             "hamming",
-            cosine(F.col("queryv"), F.col("neighborv")).alias("cosine_sim"),
+            vecmath.cosine("queryv", "neighborv").alias("cosine_sim"),
         )
     )
     wk = Window.partitionBy("query_id").orderBy(
@@ -1648,7 +1501,7 @@ def mmr_diversified_topk(
     pw = (
         cand.select(F.col("id").alias("ia"), F.col("vec").alias("va"))
         .join(F.broadcast(cand.select(F.col("id").alias("ib"), F.col("vec").alias("vb"))))
-        .select("ia", "ib", cosine(F.col("va"), F.col("vb")).alias("sim"))
+        .select("ia", "ib", vecmath.cosine("va", "vb").alias("sim"))
     )
 
     # Greedy selection runs DRIVER-SIDE over the collected candidate
@@ -1753,8 +1606,8 @@ def _pq_codebooks(
 
     Trajectory-identical to the in-engine batched loop by construction:
 
-    - assignment distances are ``_fold_dists_np`` (sequential
-      per-dimension accumulation == the ``_sqdist`` left fold) with
+    - assignment distances are ``vecmath.sqdist_np`` (sequential
+      per-dimension accumulation == the ``vecmath.sqdist`` left fold) with
       first-occurrence argmin over sorted-cid codewords == ``array_min``
       over (dist, cid) structs;
     - the update mean sums members' float64 components and divides by
@@ -1770,8 +1623,6 @@ def _pq_codebooks(
     oracle CTEs unchanged.
     """
     import numpy as np
-
-    from .clustering import _fold_dists_np
 
     seed_rows = (
         train.orderBy("id")
@@ -1796,7 +1647,7 @@ def _pq_codebooks(
             cids = [c for c, _ in items]
             C = np.asarray([cv for _, cv in items], dtype=np.float64)
             Xs = X[:, s * w : (s + 1) * w]
-            a = np.argmin(_fold_dists_np(Xs, C), axis=1)
+            a = np.argmin(vecmath.sqdist_np(Xs, C), axis=1)
             for gi in np.unique(a):
                 members = Xs[a == gi]
                 mean = members.sum(axis=0) / len(members)
@@ -1853,16 +1704,15 @@ def _adc_scan_arrow(
     probe set) travel in the closure as model-sized literals; per batch
     the code assignment and ADC lookup are vectorized numpy over the
     (batch × dim) float64 block.  The expression-tree version this
-    replaces spent its time in interpreted ``aggregate``/``zip_with``
-    folds per codeword per row — the same work here is m·w elementwise
+    replaces spent its time in interpreted higher-order folds per
+    codeword per row — the same work here is m·w elementwise
     passes over the whole batch.
 
     Bit-identical to the expression fold by construction:
 
-    - squared distances accumulate PER DIMENSION in sequence
-      (``acc = acc + d*d`` for j = 0..w-1), replaying ``F.aggregate``'s
-      left fold over ``zip_with`` exactly — same IEEE-754 double ops in
-      the same order;
+    - squared distances are ``vecmath.sqdist_np``, the replay of the
+      ``vecmath.sqdist`` left fold — same IEEE-754 double ops in the
+      same order;
     - code assignment is ``argmin`` over codewords iterated in sorted
       cid order with first-occurrence ties, replaying ``array_min`` over
       (dist, cid) structs;
@@ -1876,36 +1726,20 @@ def _adc_scan_arrow(
     """
     import numpy as np
 
-    def _fold_driver(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
+    from ..session import ensure_executors_can_import
 
+    ensure_executors_can_import(emb_pre.sparkSession)
     sub_mats: list = []
     adc_tables: list = []
     for s in range(m):
         items = sorted(books[s].items())
         sub_mats.append(np.asarray([cv for _, cv in items], dtype=np.float64))
-        adc_tables.append(
-            np.asarray(
-                [_fold_driver(qvec[s * w : (s + 1) * w], cv) for _, cv in items],
-                dtype=np.float64,
-            )
-        )
+        adc_tables.append(vecmath.sqdist_np([qvec[s * w : (s + 1) * w]], sub_mats[s])[0])
     if cents is not None:
         citems = sorted(cents.items())
         cent_ids = np.asarray([cid for cid, _ in citems], dtype=np.int64)
         cent_mat = np.asarray([cv for _, cv in citems], dtype=np.float64)
         probe_arr = np.asarray(sorted(int(p) for p in probes), dtype=np.int64)
-
-    def _fold_dists(X, C):
-        # sequential per-dimension accumulation == F.aggregate's left fold
-        acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-        for j in range(C.shape[1]):
-            d = X[:, j, None] - C[None, :, j]
-            acc += d * d
-        return acc
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1914,14 +1748,14 @@ def _adc_scan_arrow(
             X = np.stack(pdf["vec"].to_numpy()).astype(np.float64, copy=False)
             ids = pdf["id"].to_numpy()
             if cents is not None:
-                cell = cent_ids[np.argmin(_fold_dists(X, cent_mat), axis=1)]
+                cell = cent_ids[np.argmin(vecmath.sqdist_np(X, cent_mat), axis=1)]
                 keep = np.isin(cell, probe_arr)
                 X, ids = X[keep], ids[keep]
                 if not len(ids):
                     continue
             est = None
             for s in range(m):
-                dist = _fold_dists(X[:, s * w : (s + 1) * w], sub_mats[s])
+                dist = vecmath.sqdist_np(X[:, s * w : (s + 1) * w], sub_mats[s])
                 term = adc_tables[s][np.argmin(dist, axis=1)]
                 est = term.copy() if est is None else est + term
             yield pd.DataFrame({"id": ids, "est": est})
@@ -1989,7 +1823,6 @@ def pq_ann_topk(
     defaults here), with ADC scans reading only the code columns.
     """
     from .clustering import _prep
-    from .clustering import _sqdist as _sqdist_helper
 
     w = dim // m
     emb = _prep(embeddings, id_col, vec_col)
@@ -2047,7 +1880,7 @@ def pq_ann_topk(
         F.broadcast(shortlist.select(F.col(id_col).alias("id"))), "id"
     ).select(
         F.col("id").alias(id_col),
-        F.round(_sqdist_helper(F.col("vec"), qvec), decimals).alias("sqdist"),
+        F.round(vecmath.sqdist("vec", qvec), decimals).alias("sqdist"),
     )
     top = reranked.orderBy(F.asc("sqdist"), F.asc(id_col)).limit(k_top)
     rk = Window.orderBy(F.asc("sqdist"), F.asc(id_col))
@@ -2107,7 +1940,6 @@ def ivfpq_ann_topk(
     moves between stages is id-sized either way.
     """
     from .clustering import _prep
-    from .clustering import _sqdist as _sqdist_helper
 
     w = dim // m
     emb = _prep(embeddings, id_col, vec_col)
@@ -2126,18 +1958,9 @@ def ivfpq_ann_topk(
         )
     qvec = list(qrows[0]["vec"])
 
-    def fold_sqdist(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    probes = [
-        cid
-        for _, cid in sorted(
-            (fold_sqdist(qvec, cvec), cid) for cid, cvec in cents.items()
-        )[:nprobe]
-    ]
+    cids = list(cents)
+    dists = vecmath.sqdist_np([qvec], [cents[c] for c in cids])[0].tolist()
+    probes = [cid for _, cid in sorted(zip(dists, cids))[:nprobe]]
 
     scored = _adc_scan_arrow(
         emb.filter(F.col("id") != query_id).select("id", "vec"),
@@ -2155,7 +1978,7 @@ def ivfpq_ann_topk(
         F.broadcast(shortlist.select(F.col(id_col).alias("id"))), "id"
     ).select(
         F.col("id").alias(id_col),
-        F.round(_sqdist_helper(F.col("vec"), qvec), decimals).alias("sqdist"),
+        F.round(vecmath.sqdist("vec", qvec), decimals).alias("sqdist"),
     )
     top = reranked.orderBy(F.asc("sqdist"), F.asc(id_col)).limit(k_top)
     rk = Window.orderBy(F.asc("sqdist"), F.asc(id_col))
@@ -2221,7 +2044,7 @@ def ivf_nprobe_recall_curve(
         "query_id",
         "neighbor_id",
         "probe_rank",
-        cosine_codegen("queryv", "neighborv").alias("cosine_sim"),
+        vecmath.cosine("queryv", "neighborv").alias("cosine_sim"),
     )
     # fan each candidate out to every setting whose probe depth reaches it
     # (candidate-sized frame; the corpus is long gone by here)
@@ -2325,23 +2148,18 @@ def _knn_predictions(
     one-scan two-stage-top-k shape of ``label_knn_accuracy``, factored
     out so the accuracy and confusion views share one plan.  Majority
     vote over the k neighbors, ties -> smaller label."""
-    # codegen vector kernels (round 11): the scored pair stream is
-    # n_queries x corpus rows — the interpreted zip_with/aggregate fold
-    # paid ~dim interpreter dispatches per pair; the 64-wide unrolled
-    # kernel is bit-identical by construction (same left-assoc order,
-    # guarded fallback for any other width — see _dot_codegen).
     q = F.broadcast(
         embeddings.filter(F.col(id_col) < n_queries).select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
-            _norm_codegen(f"`{vec_col}`").alias("__qn"),
+            vecmath.norm(f"`{vec_col}`").alias("__qn"),
             F.col(label_col).alias("true_label"),
         )
     )
     pairs = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("ev"),
-        _norm_codegen(f"`{vec_col}`").alias("__en"),
+        vecmath.norm(f"`{vec_col}`").alias("__en"),
         F.col(label_col).alias("nlabel"),
     ).join(q, F.col("neighbor_id") != F.col("query_id"))
     # norms hoisted below the join (bit-identical; see cosine_topk)
@@ -2351,7 +2169,7 @@ def _knn_predictions(
         "neighbor_id",
         "nlabel",
         F.round(
-            _dot_codegen("qv", "ev") / (F.col("__qn") * F.col("__en")), 4
+            vecmath.dot("qv", "ev") / (F.col("__qn") * F.col("__en")), 4
         ).alias("cs"),
     )
     topk = _per_query_topk(
@@ -2488,12 +2306,11 @@ def triplet_margin_stats(
     so positives and negatives rank independently without a second
     scan; anchors broadcast.
     """
-    # codegen vector kernels (round 11, bit-identical; see _dot_codegen)
     q = F.broadcast(
         embeddings.filter(F.col(id_col) < n_anchors).select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
-            _norm_codegen(f"`{vec_col}`").alias("__qn"),
+            vecmath.norm(f"`{vec_col}`").alias("__qn"),
             F.col(label_col).alias("qlabel"),
         )
     )
@@ -2502,7 +2319,7 @@ def triplet_margin_stats(
         embeddings.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("ev"),
-            _norm_codegen(f"`{vec_col}`").alias("__en"),
+            vecmath.norm(f"`{vec_col}`").alias("__en"),
             F.col(label_col).alias("nlabel"),
         )
         .join(q, F.col("neighbor_id") != F.col("query_id"))
@@ -2511,7 +2328,7 @@ def triplet_margin_stats(
             "neighbor_id",
             (F.col("nlabel") == F.col("qlabel")).alias("same"),
             F.round(
-                _dot_codegen("qv", "ev") / (F.col("__qn") * F.col("__en")), 4
+                vecmath.dot("qv", "ev") / (F.col("__qn") * F.col("__en")), 4
             ).alias("cs"),
         )
     )
@@ -2575,12 +2392,11 @@ def filtered_ann_recall(
     what the post-filter path avoids), each ranked by the two-stage
     partial top-k; the comparison join runs at (query, k) grain.
     """
-    # codegen vector kernels (round 11, bit-identical; see _dot_codegen)
     q = F.broadcast(
         embeddings.filter(F.col(id_col) < n_queries).select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qv"),
-            _norm_codegen(f"`{vec_col}`").alias("__qn"),
+            vecmath.norm(f"`{vec_col}`").alias("__qn"),
             F.col(label_col).alias("qlabel"),
         )
     )
@@ -2591,7 +2407,7 @@ def filtered_ann_recall(
             embeddings.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("ev"),
-                _norm_codegen(f"`{vec_col}`").alias("__en"),
+                vecmath.norm(f"`{vec_col}`").alias("__en"),
                 F.col(label_col).alias("nlabel"),
             )
             .join(q, F.col("neighbor_id") != F.col("query_id"))
@@ -2600,7 +2416,7 @@ def filtered_ann_recall(
                 "neighbor_id",
                 (F.col("nlabel") == F.col("qlabel")).alias("same"),
                 F.round(
-                    _dot_codegen("qv", "ev")
+                    vecmath.dot("qv", "ev")
                     / (F.col("__qn") * F.col("__en")),
                     4,
                 ).alias("cs"),

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
-from rss_feed_etl_spark.operators import clustering, similarity
+from rss_feed_etl_spark.operators import clustering, similarity, vecmath
 from rss_feed_etl_spark.operators.clustering import (
     _assign,
     _assign_scan_arrow,
@@ -38,7 +38,7 @@ def test_arrow_assignment_matches_expression_assign(spark):
     cents = _kmeans_centroids_prepped(emb, 8, 1, 6)
     via_expr = {
         (r["id"]): (r["b"]["cid"], r["b"]["dist"])
-        for r in emb.select("id", _assign(F.col("vec"), cents).alias("b")).collect()
+        for r in emb.select("id", _assign("vec", cents).alias("b")).collect()
     }
     # Arrow scan drops id (it ships only vec); zip back via a parallel
     # id scan with the same partitioning for the comparison
@@ -57,14 +57,12 @@ def test_arrow_d0_d1_matches_array_sort(spark):
     """(d0, d1) from the silhouette scan == elements 0/1 of array_sort
     over (dist, cid) structs — nearest and second-nearest with cid
     tie-breaks."""
-    from rss_feed_etl_spark.operators.clustering import _sqdist
-
     emb = _emb(spark)
     cents = _kmeans_centroids_prepped(emb, 8, 1, 6)
     dists = F.array_sort(
         F.array(
             *[
-                F.struct(_sqdist(F.col("vec"), cv).alias("dist"), F.lit(c).alias("cid"))
+                F.struct(vecmath.sqdist("vec", cv).alias("dist"), F.lit(c).alias("cid"))
                 for c, cv in sorted(cents.items())
             ]
         )
@@ -116,7 +114,7 @@ def test_pq_codebooks_driver_side_matches_in_engine_loop(spark):
         for _ in range(iters):
             cid = None
             for s in range(m):
-                a = _assign(F.col("vec"), books[s])["cid"]
+                a = _assign("vec", books[s])["cid"]
                 cid = (
                     F.when(F.col("sub") == s, a)
                     if cid is None

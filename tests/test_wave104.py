@@ -7,8 +7,8 @@ import os
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
-from rss_feed_etl_spark.operators import similarity
-from rss_feed_etl_spark.operators.clustering import _prep, _sqdist
+from rss_feed_etl_spark.operators import similarity, vecmath
+from rss_feed_etl_spark.operators.clustering import _prep
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -19,7 +19,7 @@ def _exact_top10(spark, emb, qid=0):
     return {
         r["id"]
         for r in prepped.filter(F.col("id") != qid)
-        .select("id", _sqdist(F.col("vec"), list(q)).alias("d"))
+        .select("id", vecmath.sqdist("vec", list(q)).alias("d"))
         .orderBy(F.asc("d"), F.asc("id"))
         .limit(10)
         .collect()

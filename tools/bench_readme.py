@@ -44,8 +44,8 @@ def render(payload: dict) -> str:
     )
     iso = payload.get("headline_isolated")
     if iso:
-        # r11 shape: {"seconds": {...}, "skipped_budget": [...]}; earlier
-        # rounds stored the flat name → sec dict directly.
+        # current shape: {"seconds": {...}, "skipped_budget": [...],
+        # "failed": [...]}; earlier rounds stored the flat name → sec dict.
         secs = iso.get("seconds", iso) if isinstance(iso, dict) else {}
         secs = {k: v for k, v in secs.items() if isinstance(v, (int, float))}
         if secs:
@@ -56,12 +56,14 @@ def render(payload: dict) -> str:
                 + ", ".join(f"`{n}` {v:g} s" for n, v in pairs)
                 + "."
             )
-        if isinstance(iso, dict) and iso.get("skipped_budget"):
-            lines.append(
-                "- Isolated entries skipped by wall-clock budget: "
-                + ", ".join(f"`{n}`" for n in iso["skipped_budget"])
-                + "."
-            )
+        for key, why in (("skipped_budget", "skipped by wall-clock budget"),
+                         ("failed", "failed or timed out in their child")):
+            if isinstance(iso, dict) and iso.get(key):
+                lines.append(
+                    f"- Isolated entries {why}: "
+                    + ", ".join(f"`{n}`" for n in iso[key])
+                    + "."
+                )
     sc = payload.get("scale_10x", {})
     ratios = {k: v for k, v in (sc.get("ratio_vs_base") or {}).items() if v}
     if ratios:
