@@ -19,6 +19,7 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from .config import PipelineConfig, load_config
 from .plans.etl_pipeline import run_etl
@@ -37,9 +38,9 @@ def run_etl_from_config(
 ) -> dict:
     """feeds-config table → fetch/parse/clean → merge into the stage table.
 
-    The stage sink is ``write_partitioned_incremental``: only ingest-date
-    partitions touched by the batch are rewritten (storage.partition_stage
-    toggles back to full overwrite for tiny tables).
+    The stage sink is ``write_partitioned_incremental``: only the ingest
+    dates the batch touched are rewritten (on the first run, with no stage
+    table yet, that is every date).
     """
     stor = cfg.storage
     config_df = spark.read.schema(FEEDS_CONFIG_SCHEMA).parquet(
@@ -47,9 +48,7 @@ def run_etl_from_config(
     )
     stage_path = stor.table_path(cfg.etl.target_table)
     hist_schema = SCD2_SCHEMA if cfg.etl.loading_strategy == "scd2" else STAGE_SCHEMA
-    history = pq.read_or_empty(spark, stage_path, hist_schema)
-    if "ingest_date" in history.columns:
-        history = history.drop("ingest_date")
+    history = pq.read_table(spark, stage_path, hist_schema)
     merged = run_etl(
         spark,
         config_df,
@@ -63,28 +62,20 @@ def run_etl_from_config(
     # lineage reads stage_path (which the write overwrites) and calls the
     # feed fetcher (which may return different content per evaluation).
     merged = merged.localCheckpoint(eager=True)
-    n_history, n_merged = history.count(), merged.count()
     summary = {
         "step": "etl",
         "strategy": cfg.etl.loading_strategy,
-        "history_rows": n_history,
-        "merged_rows": n_merged,
+        "history_rows": history.count(),
+        "merged_rows": merged.count(),
         "dry_run": dry_run,
     }
     if dry_run:
         return summary
     # Re-deriving the batch for touched-date pruning would re-fetch feeds;
     # the merged-vs-history delta IS the batch's footprint, so diff keys.
-    if stor.partition_stage and n_history > 0:
-        changed = merged.exceptAll(history.select(*merged.columns))
-        dates = pq.write_partitioned_incremental(
-            merged, changed, history, stage_path, ts_col="published"
-        )
-        summary["touched_partitions"] = [str(d) for d in dates]
-    elif stor.partition_stage:
-        pq.write_partitioned(merged, stage_path, ts_col="published")
-    else:
-        pq.write_overwrite(merged, stage_path)
+    changed = merged.exceptAll(history.select(*merged.columns))
+    dates = pq.write_partitioned_incremental(merged, changed, history, stage_path)
+    summary["touched_partitions"] = [str(d) for d in dates]
     return summary
 
 
@@ -94,20 +85,23 @@ def run_filter_from_config(
     as_of: str | None = None,
     dry_run: bool = False,
 ) -> dict:
+    """stage table → date/content/keyword filter → output table.
+
+    Append mode unions the new rows with the stored output (new rows win per
+    link) and rewrites only the ingest dates that changed; overwrite mode
+    replaces the whole output table (reference S4).
+    """
     filt = cfg.job_filter
     stor = cfg.storage
-    stage = spark.read.parquet(stor.table_path(filt.source_table))
-    if "ingest_date" in stage.columns:
-        stage = stage.drop("ingest_date")
+    stage = pq.read_table(spark, stor.table_path(filt.source_table))
     out_path = stor.table_path(filt.output_table)
     existing = None
     if filt.loading_mode == "append":
-        try:
-            existing = spark.read.parquet(out_path)
-            if "ingest_date" in existing.columns:
-                existing = existing.drop("ingest_date")
-        except Exception:  # noqa: BLE001 — first run, no output table yet
-            existing = None
+        # the output holds the stage's columns plus the run stamp
+        out_schema = T.StructType(
+            [*stage.schema.fields, T.StructField("AS_OF_DT", T.TimestampType())]
+        )
+        existing = pq.read_table(spark, out_path, out_schema)
     result = run_filter_pipeline(
         stage,
         existing=existing,
@@ -132,20 +126,14 @@ def run_filter_from_config(
     # not cache: cached blocks are evictable and recompute would re-read
     # files the overwrite has already deleted.
     result = result.localCheckpoint(eager=True)
-    if stor.partition_output and existing is not None:
-        # append under append grows the output without bound — rewrite only
-        # the date partitions the new batch touched (M4 scale path), exactly
-        # as the ETL step does for the stage table above
-        changed = result.exceptAll(existing.select(*result.columns))
-        dates = pq.write_partitioned_incremental(
-            result, changed, existing, out_path, ts_col=filt.date_column
-        )
-        summary["touched_partitions"] = [str(d) for d in dates]
-    elif stor.partition_output:
-        pq.write_partitioned(result, out_path, ts_col=filt.date_column)
-    else:
-        # reference S4 semantics: clear-and-rewrite the small filtered view
+    if existing is None:
         pq.write_overwrite(result, out_path)
+        return summary
+    changed = result.exceptAll(existing.select(*result.columns))
+    dates = pq.write_partitioned_incremental(
+        result, changed, existing, out_path, ts_col=filt.date_column
+    )
+    summary["touched_partitions"] = [str(d) for d in dates]
     return summary
 
 

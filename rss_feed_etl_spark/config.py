@@ -2,12 +2,13 @@
 config/config.yaml) for the Spark engine.
 
 The reference drives both pipelines from one YAML document: an ``etl``
-section (loading strategy, timezone, config sheet, output columns) and a
-``job_filter`` section (date window, required-content columns, per-column
-keyword exclusions, append/overwrite loading mode).  This module maps that
-exact document shape onto typed configs for ``plans/etl_pipeline.run_etl``
-and ``plans/filter_pipeline.run_filter_pipeline``; Sheets worksheet names
-become Parquet table paths under ``storage.root``.
+section (loading strategy, timezone, config sheet; its output-column list
+is accepted and not read) and a ``job_filter`` section (date window,
+required-content columns, per-column keyword exclusions, append/overwrite
+loading mode).  This module maps that exact document shape onto typed
+configs for ``plans/etl_pipeline.run_etl`` and
+``plans/filter_pipeline.run_filter_pipeline``; Sheets worksheet names become
+Parquet table paths under ``storage.root``.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ class EtlConfig:
 
     loading_strategy: str = "scd1"  # scd1 | scd2 | merge_upsert
     timezone: str | None = None  # reference default US/Central; None = session tz
-    columns: list[str] = field(default_factory=list)
     config_table: str = "feeds_config"  # was: config_sheet worksheet
     target_table: str = "stage"  # was: target_worksheet "StageData"
 
@@ -41,7 +41,6 @@ class FilterConfig:
     date_column: str = "published"
     require_content: list[str] = field(default_factory=lambda: ["summary"])
     exclude_by_column: dict[str, list[str]] = field(default_factory=dict)
-    case_sensitive: bool = False
 
 
 @dataclass
@@ -49,12 +48,6 @@ class StorageConfig:
     """Engine-specific: where tables live (replaces the spreadsheet id)."""
 
     root: str = "."
-    partition_stage: bool = True  # write stage via dynamic partition overwrite
-    # write the filter output date-partitioned; append mode then rewrites
-    # only the partitions the new batch touched instead of the whole table
-    # (the table grows without bound under append — full rewrites are the
-    # reference's write-amplification bug, data_loader.py:427)
-    partition_output: bool = True
 
     def table_path(self, name: str) -> str:
         return f"{self.root.rstrip('/')}/{name}"
@@ -65,6 +58,16 @@ class PipelineConfig:
     etl: EtlConfig = field(default_factory=EtlConfig)
     job_filter: FilterConfig = field(default_factory=FilterConfig)
     storage: StorageConfig = field(default_factory=StorageConfig)
+
+
+# Keys this engine no longer reads, with the one value it always applied.
+# Any other value would silently change what a config means, so it is an
+# error rather than ignored.
+_REMOVED_KEYS = {
+    ("job_filter", "case_sensitive"): False,
+    ("storage", "partition_stage"): True,
+    ("storage", "partition_output"): True,
+}
 
 
 def _pick(d: dict[str, Any], *keys: str, default: Any = None) -> Any:
@@ -81,11 +84,16 @@ def parse_config(doc: dict[str, Any]) -> PipelineConfig:
     etl_d = doc.get("etl", {}) or {}
     filt_d = doc.get("job_filter", {}) or {}
     stor_d = doc.get("storage", {}) or {}
+    for (section, key), applied in _REMOVED_KEYS.items():
+        value = _pick(doc.get(section, {}) or {}, key, default=applied)
+        if bool(value) != applied:
+            raise ValueError(
+                f"{section}.{key}: {value!r} is not supported (always {applied})"
+            )
 
     etl = EtlConfig(
         loading_strategy=_pick(etl_d, "loading_strategy", default="scd1"),
         timezone=_pick(etl_d, "timezone"),
-        columns=list(_pick(etl_d, "columns", default=[]) or []),
         config_table=_pick(etl_d, "config_table", "config_sheet", default="feeds_config"),
         target_table=_pick(etl_d, "target_table", "target_worksheet", default="stage"),
     )
@@ -110,16 +118,11 @@ def parse_config(doc: dict[str, Any]) -> PipelineConfig:
             col: [str(k) for k in kws or []]
             for col, kws in (filt_d.get("exclude_by_column", {}) or {}).items()
         },
-        case_sensitive=bool(_pick(filt_d, "case_sensitive", default=False)),
     )
     if filt.loading_mode not in {"append", "overwrite"}:
         raise ValueError(f"unknown loading_mode: {filt.loading_mode}")
 
-    storage = StorageConfig(
-        root=_pick(stor_d, "root", default="."),
-        partition_stage=bool(_pick(stor_d, "partition_stage", default=True)),
-        partition_output=bool(_pick(stor_d, "partition_output", default=True)),
-    )
+    storage = StorageConfig(root=_pick(stor_d, "root", default="."))
     return PipelineConfig(etl=etl, job_filter=filt, storage=storage)
 
 

@@ -354,7 +354,6 @@ def incremental_minhash_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Near-dup pairs between an incoming BATCH and the existing CORPUS —
     the incremental form of ``minhash_lsh_pairs`` a streaming corpus needs:
@@ -374,10 +373,8 @@ def incremental_minhash_pairs(
     b = banded_minhash(batch, id_col, text_col, n).select(
         F.col("id").alias("batch_id"), F.col("sig").alias("sig_b"), "bucket"
     )
-    if broadcast_batch:
-        b = F.broadcast(b)
     return (
-        c.join(b, "bucket")
+        c.join(F.broadcast(b), "bucket")
         .select(
             "batch_id",
             "corpus_id",

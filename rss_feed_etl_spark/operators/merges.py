@@ -16,9 +16,8 @@ broadcast-able pieces instead:
     result      = merged_hist ∪ new_rows
 
 History is only SCANNED (twice — once full-width, once key-column-only via
-parquet column pruning), never exchanged.  With ``broadcast_batch=False``
-(a genuinely huge batch) the same decomposition degrades gracefully to
-shuffled joins chosen by AQE.
+parquet column pruning), never exchanged.  All four merges share that probe
+(``_probe``); the batch is always the broadcast side.
 
 Change detection compares *stringified* values with ''-for-NULL exactly
 like the reference (astype(str)+fillna('') — scd1_manager.py:45,53,
@@ -47,25 +46,29 @@ def _changed(new_prefix: str, old_prefix: str, compare_cols: list[str]) -> Colum
     return cond
 
 
-def _with_presence(df: DataFrame, flag: str) -> DataFrame:
-    """Explicit row-presence literal for outer joins: inferring presence
-    from "some column is non-null" is wrong (legitimately all-null value
-    rows exist), so the probe side carries a constant flag column."""
-    return df.withColumn(flag, F.lit(1))
+def _probe(
+    batch: DataFrame, history: DataFrame, key: str
+) -> tuple[DataFrame, Column, DataFrame]:
+    """The merge probe, without shuffling history.
 
+    Returns ``(joined, n_in, new_rows)``:
 
-def _maybe_broadcast(df: DataFrame, do_broadcast: bool) -> DataFrame:
-    return F.broadcast(df) if do_broadcast else df
-
-
-def _new_key_rows(batch: DataFrame, history: DataFrame, key: str, broadcast_batch: bool) -> DataFrame:
-    """batch rows whose key is absent from history, without shuffling
-    history: semi-probe history's key column against the broadcast batch
-    (small result), then anti-probe the batch against that."""
+    - ``joined`` = history ``h`` ⟕ broadcast(batch ``n``) on ``key``;
+    - ``n_in`` is true on joined rows whose key the batch has.  The batch
+      carries a constant presence flag for it: inferring presence from
+      "some column is non-null" is wrong (legitimately all-null value rows
+      exist);
+    - ``new_rows`` = batch rows whose key history lacks: semi-probe
+      history's key column against the broadcast batch (small result),
+      then anti-probe the batch against that.
+    """
+    flagged = F.broadcast(batch.withColumn("__present", F.lit(1)))
+    joined = history.alias("h").join(flagged.alias("n"), on=key, how="left")
     matched = history.select(key).join(
-        _maybe_broadcast(batch.select(key), broadcast_batch), on=key, how="left_semi"
+        F.broadcast(batch.select(key)), on=key, how="left_semi"
     )
-    return batch.join(_maybe_broadcast(matched, broadcast_batch), on=key, how="left_anti")
+    new_rows = batch.join(F.broadcast(matched), on=key, how="left_anti")
+    return joined, F.col("n.__present").isNotNull(), new_rows
 
 
 def merge_scd1(
@@ -73,7 +76,6 @@ def merge_scd1(
     history: DataFrame,
     key: str = "link",
     notes_col: str = "notes",
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """SCD1 upsert, no history kept (reference M1, scd1_manager.py:10-176).
 
@@ -87,9 +89,7 @@ def merge_scd1(
     reference does the same at ingest (scd1_manager.py:231).
     """
     value_cols = [c for c in batch.columns if c != key]
-    b = _maybe_broadcast(_with_presence(batch, "__present"), broadcast_batch)
-    j = history.alias("h").join(b.alias("n"), on=key, how="left")
-    n_in = F.col("n.__present").isNotNull()
+    j, n_in, new_rows = _probe(batch, history, key)
     out_cols = [F.col(key)]
     for c in value_cols:
         if c == notes_col:
@@ -100,8 +100,7 @@ def merge_scd1(
             expr = F.when(n_in, F.col(f"n.{c}")).otherwise(F.col(f"h.{c}"))
         out_cols.append(expr.alias(c))
     merged_hist = j.select(*out_cols)
-    new_rows = _new_key_rows(batch, history, key, broadcast_batch).select(key, *value_cols)
-    return merged_hist.unionByName(new_rows)
+    return merged_hist.unionByName(new_rows.select(key, *value_cols))
 
 
 def merge_upsert(
@@ -110,7 +109,6 @@ def merge_upsert(
     key: str = "link",
     notes_col: str = "notes",
     compare_cols: list[str] | None = None,
-    broadcast_batch: bool = True,
     with_flags: bool = False,
 ) -> DataFrame:
     """Legacy upsert with change detection (reference M2,
@@ -120,9 +118,7 @@ def merge_upsert(
     metrics)."""
     value_cols = [c for c in batch.columns if c != key]
     compare_cols = compare_cols or [c for c in value_cols if c != notes_col]
-    b = _maybe_broadcast(_with_presence(batch, "__present"), broadcast_batch)
-    j = history.alias("h").join(b.alias("n"), on=key, how="left")
-    n_in = F.col("n.__present").isNotNull()
+    j, n_in, new_rows = _probe(batch, history, key)
     changed = n_in & _changed("n", "h", compare_cols)
     out_cols = [F.col(key)]
     for c in value_cols:
@@ -137,7 +133,7 @@ def merge_upsert(
         out_cols.append(F.lit(0).alias("inserted"))
         out_cols.append(changed.cast("int").alias("updated"))
     merged_hist = j.select(*out_cols)
-    new_rows = _new_key_rows(batch, history, key, broadcast_batch).select(key, *value_cols)
+    new_rows = new_rows.select(key, *value_cols)
     if with_flags:
         new_rows = new_rows.withColumn("inserted", F.lit(1)).withColumn(
             "updated", F.lit(0)
@@ -152,7 +148,6 @@ def merge_scd2(
     as_of: str = "1970-01-01 00:00:00",
     notes_col: str = "notes",
     compare_cols: list[str] | None = None,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Type-2 merge (reference M3, data_loader.py:209-314).
 
@@ -180,9 +175,7 @@ def merge_scd2(
     current = history.filter(F.col("current_flag") == 1)
     closed = history.filter(F.col("current_flag") != 1)
 
-    b = _maybe_broadcast(_with_presence(batch, "__present"), broadcast_batch)
-    j = current.alias("h").join(b.alias("n"), on=key, how="left")
-    n_in = F.col("n.__present").isNotNull()
+    j, n_in, new_rows = _probe(batch, current, key)
     changed = n_in & _changed("n", "h", compare_cols)
     removed = ~n_in
 
@@ -221,8 +214,7 @@ def merge_scd2(
         key, *[F.col(f"__r.{c}").alias(c) for c in value_cols + scd_cols]
     )
     new_rows = (
-        _new_key_rows(batch, current, key, broadcast_batch)
-        .select(
+        new_rows.select(
             key,
             *[
                 blank_to_null(F.col(c)).cast("string").alias(c)
@@ -246,7 +238,6 @@ def merge_counts(
     notes_col: str = "notes",
     compare_cols: list[str] | None = None,
     current_only: bool = False,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Inserted / updated / removed metrics (reference A1:
     data_loader.py:203-207, 310-314; scd1_manager.py:132-142).
@@ -258,17 +249,13 @@ def merge_counts(
     value_cols = [c for c in batch.columns if c != key]
     compare_cols = compare_cols or [c for c in value_cols if c != notes_col]
     h0 = history.filter(F.col("current_flag") == 1) if current_only else history
-    b = _maybe_broadcast(_with_presence(batch, "__present"), broadcast_batch)
-    j = h0.alias("h").join(b.alias("n"), on=key, how="left")
-    n_in = F.col("n.__present").isNotNull()
+    j, n_in, new_rows = _probe(batch, h0, key)
     changed = n_in & _changed("n", "h", compare_cols)
     hist_side = j.agg(
         F.sum(changed.cast("bigint")).alias("updated"),
         F.sum((~n_in).cast("bigint")).alias("removed"),
     )
-    ins = _new_key_rows(batch, h0, key, broadcast_batch).agg(
-        F.count("*").alias("inserted")
-    )
+    ins = new_rows.agg(F.count("*").alias("inserted"))
     return ins.crossJoin(hist_side).select("inserted", "updated", "removed")
 
 

@@ -12,53 +12,37 @@ tables are Parquet directories:
   date-window queries prune structurally and incremental merges rewrite
   only the touched partitions (dynamic partition overwrite), never the
   whole history.
+
+This module is the only one that knows the stored-table layout:
+``read_table`` hides the ``ingest_date`` partition column from readers, and
+``write_partitioned_incremental`` is the rule that a new snapshot replaces
+only the dates its batch touched.
 """
 
 from __future__ import annotations
 
-import contextlib
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
-
-
-@contextlib.contextmanager
-def _dynamic_partition_overwrite(spark: SparkSession):
-    """Set partitionOverwriteMode=dynamic for one write, then restore the
-    previous value — the session is shared, and leaving dynamic mode on
-    silently changes the semantics of later partitioned overwrites that
-    expect static mode."""
-    try:
-        prev = spark.conf.get(_OVERWRITE_MODE_KEY)
-    except Exception:  # noqa: BLE001 — unset
-        prev = None
-    spark.conf.set(_OVERWRITE_MODE_KEY, "dynamic")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_OVERWRITE_MODE_KEY)
-        else:
-            spark.conf.set(_OVERWRITE_MODE_KEY, prev)
-
 
 def read_table(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
+    """A stored table without its ``ingest_date`` partition column.
+
+    With a ``schema``, a missing table reads as an empty one (the reference
+    creates the worksheet with a header row when absent,
+    data_loader.py:74-113); without one, a missing table is an error."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
-def read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Create-if-missing read (the reference creates the worksheet with a
-    header row when absent, data_loader.py:74-113)."""
     try:
-        return spark.read.schema(schema).parquet(path)
-    except Exception:  # noqa: BLE001 — missing path
+        df = reader.parquet(path)
+    except AnalysisException:
+        if schema is None:
+            raise
         return spark.createDataFrame([], schema)
+    return df.drop("ingest_date")
 
 
 def write_overwrite(df: DataFrame, path: str) -> None:
@@ -67,17 +51,17 @@ def write_overwrite(df: DataFrame, path: str) -> None:
 
 
 def write_partitioned(df: DataFrame, path: str, ts_col: str = "published") -> None:
-    """Scale sink: partition by ingest date, overwrite only touched
-    partitions.  Requires spark.sql.sources.partitionOverwriteMode=dynamic
-    (set here per-write)."""
-    spark = df.sparkSession
-    with _dynamic_partition_overwrite(spark):
-        (
-            df.withColumn("ingest_date", F.to_date(F.col(ts_col)))
-            .write.mode("overwrite")
-            .partitionBy("ingest_date")
-            .parquet(path)
-        )
+    """Scale sink: partition by ingest date and overwrite only the
+    partitions present in ``df`` (dynamic partition overwrite, a per-write
+    option that leaves the session's conf alone).  Rows with a null
+    ``ts_col`` land in the default partition."""
+    (
+        df.withColumn("ingest_date", F.to_date(F.col(ts_col)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_date")
+        .parquet(path)
+    )
 
 
 def write_partitioned_incremental(
@@ -88,19 +72,24 @@ def write_partitioned_incremental(
     key: str = "link",
     ts_col: str = "published",
 ) -> list:
-    """Incremental merge sink: dynamic-partition-overwrite ONLY the ingest
-    dates the batch touched, never the whole history (the fix for the
-    reference's clear-and-rewrite, data_loader.py:426-428).
+    """Incremental merge sink: rewrite ONLY the ingest dates the batch
+    touched, never the whole history (the fix for the reference's
+    clear-and-rewrite, data_loader.py:426-428).
 
     Touched dates = dates of the batch rows ∪ dates of the HISTORY versions
     of keys present in the batch — the second term matters because an
     update can move a row to a new date, and the stale version must vanish
-    from its old partition.  The date list is driver-sized (days, not
-    rows); the write scans `merged` once with a partition filter, and
-    untouched partition directories are not rewritten.  Returns the list of
-    touched dates (for observability/testing).
+    from its old partition.  Dynamic overwrite replaces only the dates
+    ``merged`` still has rows on, so a date whose last row moved away is
+    not rewritten and keeps the stale version.  With an empty history
+    every date of ``merged`` is touched, so the first write equals
+    ``write_partitioned(merged)``.  The date list is driver-sized (days,
+    not rows); ``merged`` filtered to those dates goes to
+    ``write_partitioned``, so untouched partition directories are not
+    rewritten.  A null date (a row with no ``ts_col``) is touched like any
+    other and keeps the default partition.  Returns the touched dates,
+    sorted, with ``None`` last when the null date is among them.
     """
-    spark = merged.sparkSession
     batch_keys = batch.select(key).distinct()
     touched = (
         batch.select(F.to_date(F.col(ts_col)).alias("d"))
@@ -111,17 +100,16 @@ def write_partitioned_incremental(
         )
         .distinct()
     )
-    dates = sorted(r["d"] for r in touched.collect() if r["d"] is not None)
-    if not dates:  # empty batch → nothing to rewrite
+    found = {r["d"] for r in touched.collect()}
+    dates = sorted(d for d in found if d is not None)
+    if not found:  # empty batch → nothing to rewrite
         return dates
-    with _dynamic_partition_overwrite(spark):
-        (
-            merged.withColumn("ingest_date", F.to_date(F.col(ts_col)))
-            .filter(F.col("ingest_date").isin(dates))
-            .write.mode("overwrite")
-            .partitionBy("ingest_date")
-            .parquet(path)
-        )
+    day = F.to_date(F.col(ts_col))
+    keep = day.isin(dates)
+    if None in found:
+        keep = keep | day.isNull()
+        dates.append(None)
+    write_partitioned(merged.filter(keep), path, ts_col=ts_col)
     return dates
 
 

@@ -5,18 +5,21 @@ whole pipeline with lookback windows, made idempotent by the SCD1 upsert
 (scd1_manager.py:18-21).  The idiomatic Spark translation:
 
 - micro-batch ingest: ``readStream`` over the landing directory (or any
-  streaming source), ``Trigger.AvailableNow`` for the cron-like catch-up
-  run, processing-time triggers for continuous mode;
+  streaming source) into a ``foreachBatch`` sink started by ``_start`` with
+  ``Trigger.AvailableNow`` — the cron-like catch-up run;
+  ``incremental_scd1`` alone also offers a processing-time trigger;
 - state lives in the SINK table, exactly like the reference's
   table-resident history: each micro-batch runs the same idempotent SCD1
-  merge via ``foreachBatch`` — no ``mapGroupsWithState``, because the merge
-  target IS the state (SURVEY §7.3);
+  merge — no ``mapGroupsWithState``, because the merge target IS the state
+  (SURVEY §7.3).  The partitioned SCD1 sink writes through
+  ``sources.parquet.write_partitioned_incremental``, so a micro-batch
+  rewrites only the ingest dates it touched;
+- epoch sinks (enrichment, curation): each micro-batch lands in its own
+  ``__epoch=N`` partition (``_write_epoch``), compaction folds old epochs
+  into the base partition ``__epoch=-1``, and readers see the live rows
+  (``_live_rows``);
 - event-time semantics: watermark + windowed aggregation for the
   lookback/late-data behavior.
-
-At scale the foreachBatch merge writes through ``write_partitioned``
-(dynamic partition overwrite), so a micro-batch touches only the ingest
-dates it contains.
 """
 
 from __future__ import annotations
@@ -28,10 +31,22 @@ from pyspark.sql import types as T
 from ..operators.dedup import dedup_by_key
 from ..operators.merges import merge_scd1
 from ..sources.parquet import (
-    read_or_empty,
+    read_table,
     write_overwrite,
     write_partitioned_incremental,
 )
+
+
+def _start(stream: DataFrame, batch_fn, checkpoint_dir: str, trigger: dict | None = None):
+    """Start ``batch_fn`` as the stream's ``foreachBatch`` sink; the
+    trigger defaults to ``availableNow`` (process what has landed, then
+    stop).  Returns the started StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
 
 
 def read_stage_stream(
@@ -55,10 +70,11 @@ def incremental_scd1(
     Each micro-batch is deduped keep-last (A2) then merged (M1) into the
     current target snapshot; re-delivered rows are idempotent by key.
     ``partitioned=True`` is the scale sink: the target is stored
-    partitioned by ingest date and each micro-batch dynamic-overwrites
-    ONLY the dates it touched (write_partitioned_incremental) — per-batch
-    write cost tracks the batch, not the history.  Returns the started
-    StreamingQuery.
+    partitioned by ingest date and each micro-batch rewrites ONLY the
+    dates it touched (write_partitioned_incremental) — per-batch write
+    cost tracks the batch, not the history.  ``available_now=False``
+    triggers every 15 seconds instead of stopping once caught up.
+    Returns the started StreamingQuery.
     """
     spark = stream.sparkSession
     schema = stream.schema
@@ -68,9 +84,7 @@ def incremental_scd1(
         if not batch_df.take(1):
             return
         deduped = dedup_by_key(batch_df, key, order_cols, keep="last")
-        history = read_or_empty(spark, target_path, schema)
-        if "ingest_date" in history.columns:
-            history = history.drop("ingest_date")
+        history = read_table(spark, target_path, schema)
         merged = merge_scd1(deduped, history, key=key)
         # materialize fully before the overwrite below (reading the target
         # while rewriting it would race); merge output is one snapshot
@@ -82,14 +96,8 @@ def incremental_scd1(
         else:
             write_overwrite(merged_cached, target_path)
 
-    writer = stream.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 seconds")
-    return writer.start()
+    trigger = None if available_now else {"processingTime": "15 seconds"}
+    return _start(stream, merge_batch, checkpoint_dir, trigger)
 
 
 def dedup_stream(
@@ -135,7 +143,6 @@ def incremental_dedup_ingest(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """foreachBatch deduped corpus ingest: each arriving micro-batch is
     exact-deduped against itself AND the already-landed corpus
@@ -158,7 +165,7 @@ def incremental_dedup_ingest(
     def ingest_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.take(1):
             return
-        corpus = read_or_empty(spark, corpus_path, schema)
+        corpus = read_table(spark, corpus_path, schema)
         survivors = incremental_dedup_exact(
             corpus, batch_df, text_col=text_col, id_col=id_col
         )
@@ -169,14 +176,7 @@ def incremental_dedup_ingest(
             corpus_path
         )
 
-    writer = stream.writeStream.foreachBatch(ingest_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 seconds")
-    return writer.start()
+    return _start(stream, ingest_batch, checkpoint_dir)
 
 
 def fold_stats_batch(
@@ -211,7 +211,7 @@ def fold_stats_batch(
     )
     if not batch_df.take(1):
         return False
-    snap = read_or_empty(spark, agg_path, agg_schema)
+    snap = read_table(spark, agg_path, agg_schema)
     last = snap.agg(F.max("__epoch")).first()[0]
     if last is not None and epoch_id <= last:
         return False
@@ -244,7 +244,6 @@ def incremental_stats_sink(
     checkpoint_dir: str,
     key_col: str = "event_type",
     value_col: str = "value",
-    available_now: bool = True,
 ):
     """foreachBatch aggregate-table maintenance: every micro-batch folds
     into a stored per-key (n, total, vmin, vmax, mean) table via
@@ -272,14 +271,7 @@ def incremental_stats_sink(
             spark, batch_df, epoch_id, agg_path, key_col=key_col, value_col=value_col
         )
 
-    writer = stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 seconds")
-    return writer.start()
+    return _start(stream, fold_batch, checkpoint_dir)
 
 
 def enrich_stream_to_parquet(
@@ -318,20 +310,22 @@ def enrich_stream_to_parquet(
     def _enrich(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         dim = spark.read.parquet(dim_path)
-        out = batch_df.join(F.broadcast(dim), on, "left")
-        (
-            out.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(target_path)
-        )
+        _write_epoch(batch_df.join(F.broadcast(dim), on, "left"), epoch_id, target_path)
 
-    return (
-        stream.writeStream.foreachBatch(_enrich)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start(stream, _enrich, checkpoint_path)
+
+
+def _write_epoch(df: DataFrame, epoch: int, target_path: str) -> None:
+    """Write ``df`` as the ``__epoch=<epoch>`` partition of an epoch sink,
+    replacing that partition and nothing else (dynamic partition
+    overwrite): a replayed micro-batch rewrites exactly its own
+    directory, and compaction rewrites only the base ``__epoch=-1``."""
+    (
+        df.withColumn("__epoch", F.lit(int(epoch)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__epoch")
+        .parquet(target_path)
     )
 
 
@@ -357,6 +351,17 @@ def _folded_upto(df: DataFrame) -> int:
     return int(row[0][0]) if row and row[0][0] is not None else -1
 
 
+def _live_rows(spark: SparkSession, target_path: str) -> DataFrame:
+    """The rows of an epoch sink a reader sees: the base partition plus the
+    epochs above its ``__folded_upto`` horizon (the crash discipline of
+    :func:`enriched_read_view`), without the bookkeeping columns."""
+    df = _read_epoch_sink(spark, target_path)
+    upto = _folded_upto(df)
+    if upto >= 0:
+        df = df.filter((F.col("__epoch") == -1) | (F.col("__epoch") > upto))
+    return df.drop("__epoch", "__folded_upto")
+
+
 def enriched_read_view(spark: SparkSession, target_path: str) -> DataFrame:
     """Reader view of the per-epoch enrichment sink: the ``__epoch``
     partition column is write-side bookkeeping (it exists so a replayed
@@ -371,11 +376,7 @@ def enriched_read_view(spark: SparkSession, target_path: str) -> DataFrame:
     already folded (the fold records it atomically in the same overwrite
     that folds the rows), so duplicates never surface, even mid-crash.
     """
-    df = _read_epoch_sink(spark, target_path)
-    upto = _folded_upto(df)
-    if upto >= 0:
-        df = df.filter((F.col("__epoch") == -1) | (F.col("__epoch") > upto))
-    return df.drop("__epoch", "__folded_upto")
+    return _live_rows(spark, target_path)
 
 
 def compact_enriched_epochs(
@@ -469,18 +470,11 @@ def compact_enriched_epochs(
         # under the same fold the read view applies, so compaction
         # changes bytes on disk, never reader-visible rows
         old = reduce_fn(old.drop("__epoch", "__folded_upto"))
-    folded = (
-        old.withColumn("__epoch", F.lit(-1).cast("int"))
-        .withColumn("__folded_upto", F.lit(new_upto).cast("int"))
-        .localCheckpoint(eager=True)
-    )
+    folded = old.withColumn(
+        "__folded_upto", F.lit(new_upto).cast("int")
+    ).localCheckpoint(eager=True)
     _step("staged")
-    (
-        folded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(target_path)
-    )
+    _write_epoch(folded, -1, target_path)
     _step("overwritten")
     _drop_epoch_dirs(upto_epoch, "drop")
     _step("done")
@@ -647,27 +641,10 @@ def curate_stream_to_parquet(
                     reduced, id_col, text_col, include_sig=False
                 ).select("bucket", F.col("id").alias("min_id"))
             )
-            (
-                champs.withColumn("__epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__epoch")
-                .parquet(neardup_bucket_path)
-            )
-        (
-            reduced.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(target_path)
-        )
+            _write_epoch(champs, epoch_id, neardup_bucket_path)
+        _write_epoch(reduced, epoch_id, target_path)
 
-    return (
-        stream.writeStream.foreachBatch(_curate)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, _curate, checkpoint_path)
 
 
 def curated_read_view(
@@ -699,19 +676,10 @@ def curated_read_view(
     """
     from ..operators.dedup import banded_minhash
 
-    df = _read_epoch_sink(spark, target_path)
-    upto = _folded_upto(df)
-    if upto >= 0:
-        df = df.filter((F.col("__epoch") == -1) | (F.col("__epoch") > upto))
-    df = df.drop("__epoch", "__folded_upto")
-    surv = _curated_min_id_fold(df, id_col=id_col).drop("__fp")
+    surv = _curated_min_id_fold(_live_rows(spark, target_path), id_col=id_col).drop("__fp")
     if neardup_bucket_path is None:
         return surv
-    ch = _read_epoch_sink(spark, neardup_bucket_path)
-    ch_upto = _folded_upto(ch)
-    if ch_upto >= 0:
-        ch = ch.filter((F.col("__epoch") == -1) | (F.col("__epoch") > ch_upto))
-    champs = _bucket_min_fold(ch.drop("__epoch", "__folded_upto")).withColumnRenamed(
+    champs = _bucket_min_fold(_live_rows(spark, neardup_bucket_path)).withColumnRenamed(
         "min_id", "__champ"
     )
     sb = banded_minhash(surv, id_col, text_col, include_sig=False).select(

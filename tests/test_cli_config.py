@@ -99,6 +99,22 @@ def test_parse_config_rejects_bad_strategy():
         parse_config({"etl": {"loading_strategy": "nope"}})
 
 
+@pytest.mark.parametrize(
+    "section,key,value",
+    [
+        ("job_filter", "case_sensitive", True),
+        ("storage", "partition_stage", False),
+        ("storage", "partition_output", False),
+    ],
+)
+def test_parse_config_rejects_removed_keys(section, key, value):
+    """Removed keys: the value the engine always applied still parses, any
+    other would silently change the config's meaning and is an error."""
+    with pytest.raises(ValueError, match=key):
+        parse_config({section: {key: value}})
+    parse_config({section: {key: not value}})
+
+
 def test_etl_then_filter_end_to_end(spark, pipeline):
     cfg_path, root, _ = pipeline
     cfg = load_config(str(cfg_path))
@@ -219,3 +235,38 @@ def test_cli_main_dry_run(spark, pipeline, capsys):
     steps = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert steps[0]["step"] == "etl" and steps[0]["merged_rows"] == 3
     assert not (root / "stage").exists()
+
+
+def test_filter_overwrite_mode_replaces_whole_output(spark, tmp_path):
+    """Overwrite mode replaces the whole output table (reference S4): a row
+    the second run no longer selects is gone, even though no row of the
+    second run shares its date."""
+    import datetime as dt
+
+    from rss_feed_etl_spark.schemas import STAGE_SCHEMA
+    from rss_feed_etl_spark.sources.parquet import write_partitioned
+
+    root = tmp_path / "tables"
+    rows = [
+        ("Eng", "http://x/10", "t10", dt.datetime(2024, 5, 10, 9), "f", "r", "w", "s", ""),
+        ("Eng", "http://x/20", "t20", dt.datetime(2024, 5, 20, 9), "f", "r", "w", "s", ""),
+    ]
+    write_partitioned(spark.createDataFrame(rows, STAGE_SCHEMA), str(root / "stage"))
+    cfg = parse_config(
+        {
+            "job_filter": {
+                "loading_mode": "overwrite",
+                "date_filter": {"days_back": 7},
+            },
+            "storage": {"root": str(root)},
+        }
+    )
+
+    run_filter_from_config(spark, cfg, as_of="2024-05-12 00:00:00")
+    first = spark.read.parquet(str(root / "filtered"))
+    assert {r.link for r in first.collect()} == {"http://x/10", "http://x/20"}
+
+    s = run_filter_from_config(spark, cfg, as_of="2024-05-22 00:00:00")
+    out = spark.read.parquet(str(root / "filtered"))
+    assert {r.link for r in out.collect()} == {"http://x/20"}
+    assert s["output_rows"] == 1

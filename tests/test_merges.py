@@ -170,45 +170,3 @@ class TestMergeScd2:
         out = merge_scd2(new_batch, hist, as_of=AS_OF)
         # 5 merged rows + 3 closed pass-through rows
         assert out.count() == 8
-
-
-def test_merges_identical_without_broadcast(spark):
-    """broadcast_batch=False (the huge-batch degradation path: AQE picks
-    shuffled joins) must produce byte-identical results to the broadcast
-    plan for every merge strategy."""
-    import datetime as dt
-
-    from rss_feed_etl_spark.operators.merges import (
-        merge_counts,
-        merge_scd1,
-        merge_scd2,
-        merge_upsert,
-    )
-
-    schema = "link string, entry_title string, published timestamp, notes string"
-    batch = spark.createDataFrame(
-        [("L1", "t1-new", dt.datetime(2024, 5, 2), ""),
-         ("L3", "t3", dt.datetime(2024, 5, 3), "n3")],
-        schema,
-    )
-    hist = spark.createDataFrame(
-        [("L1", "t1", dt.datetime(2024, 5, 1), "keep"),
-         ("L2", "t2", dt.datetime(2024, 5, 1), "")],
-        schema,
-    )
-    hist2 = (
-        hist.withColumn("effective_start", F.to_timestamp(F.lit("2024-05-01 00:00:00")))
-        .withColumn("effective_end", F.lit(None).cast("timestamp"))
-        .withColumn("current_flag", F.lit(1))
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    for fn, h in [(merge_scd1, hist), (merge_upsert, hist), (merge_counts, hist)]:
-        on = fn(batch, h, key="link", broadcast_batch=True)
-        off = fn(batch, h, key="link", broadcast_batch=False)
-        assert rows(on) == rows(off), fn.__name__
-    on = merge_scd2(batch, hist2, key="link", as_of="2024-05-09 00:00:00", broadcast_batch=True)
-    off = merge_scd2(batch, hist2, key="link", as_of="2024-05-09 00:00:00", broadcast_batch=False)
-    assert rows(on) == rows(off)

@@ -10,6 +10,8 @@ import os
 import re
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -46,8 +48,12 @@ def test_pricing_summary_partial_agg(spark):
     assert "CartesianProduct" not in s
 
 
-def test_scd1_merge_never_shuffle_joins_history(spark):
-    s = _plan(_queries()["scd1_merge"](spark, SF_DIR))
+@pytest.mark.parametrize(
+    "name", ["scd1_merge", "merge_upsert", "scd2_merge", "merge_counts"]
+)
+def test_scd1_merge_never_shuffle_joins_history(spark, name):
+    s = _plan(_queries()[name](spark, SF_DIR))
+    assert "BroadcastHashJoin" in s  # the batch is always the broadcast side
     assert "SortMergeJoin" not in s  # history side joins via broadcast only
     assert "CartesianProduct" not in s
 

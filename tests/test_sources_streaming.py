@@ -478,6 +478,34 @@ def test_streaming_partitioned_sink_touches_only_batch_dates(spark, tmp_path):
     assert after == before  # untouched partition not rewritten
 
 
+def test_streaming_partitioned_sink_keeps_null_published_rows(spark, tmp_path):
+    """A merged row with a null ``published`` belongs to the null ingest
+    date: the partitioned sink writes it there on the first batch and
+    rewrites it in place when a later batch updates its key."""
+    landing = str(tmp_path / "landing")
+    target = str(tmp_path / "target")
+    ckpt = str(tmp_path / "ckpt")
+    batches = [
+        [("Eng", "L1", "t1", dt.datetime(2024, 5, 1, 9), "f", "r", "w", "s1", ""),
+         ("Eng", "L2", "t2", None, "f", "r", "w", "s2", "")],
+        [("Eng", "L2", "t2-v2", None, "f", "r", "w", "s2b", ""),
+         ("Eng", "L3", "t3", dt.datetime(2024, 5, 3, 9), "f", "r", "w", "s3", "")],
+    ]
+    for rows in batches:
+        spark.createDataFrame(rows, STAGE_SCHEMA).write.mode("append").parquet(landing)
+        q = incremental_scd1(
+            read_stage_stream(spark, landing, STAGE_SCHEMA), target, ckpt,
+            partitioned=True,
+        )
+        q.awaitTermination(120)
+
+    out = [r.asDict() for r in spark.read.parquet(target).collect()]
+    assert sorted(r["link"] for r in out) == ["L1", "L2", "L3"]
+    l2 = next(r for r in out if r["link"] == "L2")
+    assert l2["entry_title"] == "t2-v2"
+    assert l2["published"] is None and l2["ingest_date"] is None
+
+
 def test_resize_images_stub(media_df):
     from rss_feed_etl_spark.operators.multimodal import decode_images, resize_images
 
