@@ -762,7 +762,7 @@ def bench_headline_isolated(
     return out
 
 
-def bench_scale_curve(spark, qs, sf_dir: str, base: dict[str, float]) -> dict:
+def bench_scale_curve(sf_dir: str, base: dict[str, float]) -> dict:
     """Run the dedup/ANN path on the factor× corpus and report times plus
     the ratio vs the base sf dir — ≲ factor means the plans scale
     at-worst linearly in data volume.
@@ -776,34 +776,17 @@ def bench_scale_curve(spark, qs, sf_dir: str, base: dict[str, float]) -> dict:
     gc in the child) so the curve fits the driver's wall-clock limit;
     entries the budget cannot cover are recorded under
     ``skipped_budget`` rather than silently dropped.
-    ``SPARK_GRAFT_SCALE_MODE=insession`` restores the old in-process
-    path (quick local iteration only; not for committed records).
     """
     dst = f"/tmp/sparkgraft_scaled_{Path(sf_dir.rstrip('/')).name}x{SCALE_FACTOR}"
     ensure_scaled_corpus(sf_dir, dst)
-    mode = os.environ.get("SPARK_GRAFT_SCALE_MODE", "subprocess")
     out: dict[str, dict] = {
         "factor": SCALE_FACTOR,
-        "isolation": (
-            "fresh-jvm-child per ~7-entry group, base+scaled min-of-2 in-child"
-            if mode == "subprocess"
-            else "in-session (NOT comparable to committed records)"
-        ),
+        "isolation": "fresh-jvm-child per ~7-entry group, base+scaled min-of-2 in-child",
         "queries": {},
         "base_isolated": {},
         "ratio_vs_base": {},
         "skipped_budget": [],
     }
-    if mode != "subprocess":
-        for name in SCALE_QUERIES:
-            best = min(
-                _timed_noop(spark, lambda: qs[name](spark, dst)) for _ in range(2)
-            )
-            out["queries"][name] = best
-            if base.get(name):
-                out["ratio_vs_base"][name] = round(best / base[name], 2)
-        out.pop("base_isolated")
-        return out
     names = list(SCALE_QUERIES)
     for i in range(0, len(names), CHILD_GROUP_SIZE):
         group = names[i : i + CHILD_GROUP_SIZE]
@@ -926,7 +909,7 @@ def main() -> None:
     scale = None
     if os.environ.get("SPARK_GRAFT_SCALE", "1") != "0" and sf == "0.1":
         try:
-            scale = bench_scale_curve(spark, qs, sf_dir, timings)
+            scale = bench_scale_curve(sf_dir, timings)
         except Exception as exc:  # noqa: BLE001 — never void the record
             scale = {"error": repr(exc)[:300]}
     # fresh-JVM re-measurement of the heaviest headline entries

@@ -24,6 +24,7 @@ from .driver_queries import _register
 from .functions.hashing import MOD
 from .operators import dedup, similarity, textstats
 from .operators.dedup import LSH_BANDS, N_MINHASH
+from .functions.text import tokens
 from .functions.timestamps import lenient_to_timestamp
 from .schemas import STAGE_SCHEMA, conform, stringify_for_sink
 
@@ -108,7 +109,7 @@ def _stage_waves(
 
 def _aug_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = td.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
     trunc = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat_ws(

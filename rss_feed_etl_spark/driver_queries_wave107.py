@@ -48,6 +48,7 @@ from .driver_queries_corpus import (
     _hexfold,
 )
 from .functions.hashing import md5_bucket
+from .functions.text import tokens
 from .operators.dedup import LSH_BANDS, N_MINHASH
 from .plans.curation_pipeline import curation_pipeline
 
@@ -71,7 +72,7 @@ def _aug_curation(
         "doc_id", "text", "source"
     )
     emb = td.load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    w = F.split(F.trim(F.col("text")), r"\s+")
+    w = tokens("text")
     is_eval = (
         md5_bucket(
             F.concat(F.lit(_CUR_SPLIT_SALT + ":"), F.col("doc_id").cast("string"))

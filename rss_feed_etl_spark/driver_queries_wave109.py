@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from . import testdata as td
 from .driver_queries import _register
+from .functions.text import tokens
 from .operators import dedup, textstats
 
 # --- vocabulary-size OOV curve -----------------------------------------------
@@ -66,7 +67,7 @@ def _q_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     second half), so A's tail gram equals B's head gram by construction
     and the stitcher must recover the (A, B) pairs."""
     docs = td.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    w = F.split(F.trim(F.col("text")), r"\s+")
+    w = tokens("text")
     t = F.floor(F.size(w) / 2).cast("int")
     eligible = docs.filter(F.size(w) >= 2 * _ST_K)
     a = eligible.select(

@@ -16,6 +16,7 @@ from . import testdata as td
 from .driver_queries import _register
 from .driver_queries_corpus import _AUG_SQL, _BAND_LIST, _MH_LIST, _SHINGLES, _W, _code
 from .driver_queries_corpus import _aug_docs
+from .functions.text import tokens
 from .operators import dedup
 from .operators.dedup import N_MINHASH
 
@@ -78,7 +79,7 @@ def _q_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = td.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
     mirror = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat_ws(

@@ -48,6 +48,7 @@ from .driver_queries_corpus import (
     _code,
     _stage_waves,
 )
+from .functions.text import tokens
 from .streaming import incremental
 
 _NE = 3  # micro-batches
@@ -69,7 +70,7 @@ def _aug_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = td.load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
     near = docs.select(
         (F.col("doc_id") + _NEAR_OFFSET).alias("doc_id"),
         F.concat_ws(

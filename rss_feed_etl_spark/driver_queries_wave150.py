@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from . import testdata as td
 from .driver_queries import _register
 from .driver_queries_corpus import _W, _hexfold
+from .functions.text import tokens
 from .operators import packing
 
 _SFT_BUDGET = 48
@@ -32,7 +33,7 @@ _SFT_SYSTEM = "You are a helpful assistant."
 
 def _q_sft_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = td.load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim("text"), r"\s+")
+    toks = tokens("text")
     n = F.size(toks)
     cut = F.ceil(n * 0.8).cast("int")
     pairs = docs.select(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from . import testdata as td
 from .driver_queries import _register
 from .driver_queries_corpus import _NTOK, _STOPLIST
+from .functions.text import tokens
 from .operators import sampling
 from .operators.textstats import STOPWORDS_EN
 
@@ -22,7 +23,7 @@ _BUDGET = 20_000  # selective at every sf (sf0.01's corpus is ~60k tokens)
 def _q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = td.load_table(spark, sf_dir, "documents")
     c = F.col("text")
-    toks = F.split(F.trim(c), r"\s+")
+    toks = tokens(c)
     n_tok = F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(toks))
     n_stop = F.size(F.filter(toks, lambda t: F.lower(t).isin(STOPWORDS_EN)))
     score = F.when(n_tok > 0, n_stop / n_tok.cast("double")).otherwise(F.lit(0.0))

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from . import testdata as td
 from .driver_queries import _register
 from .driver_queries_wave38 import _CDC_OP
+from .functions.arrays import ordered_pairs
 from .operators import graph, merges, timeseries as ts
 
 # --- CDC → SCD2 history -----------------------------------------------------
@@ -83,15 +84,9 @@ def _item_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ui.groupBy("user_id").agg(
         F.sort_array(F.collect_set("item")).alias("items")
     )
-    m = F.col("items")
-    pairs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
+    pairs = ordered_pairs(
+        F.col("items"),
+        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
     )
     return (
         per_user.select(F.explode(pairs).alias("p"))

@@ -58,8 +58,9 @@ def escape_regex(keyword: str) -> str:
     return _REGEX_META.sub(lambda m: "\\" + m.group(0), keyword)
 
 
-def keyword_exclusion_mask(col: Column | str, keywords: list[str], case_insensitive: bool = True) -> Column:
-    """True for rows that match NONE of the keywords (the keep-mask of P6).
+def keyword_exclusion_mask(col: Column | str, keywords: list[str]) -> Column:
+    """True for rows that match NONE of the keywords, case-insensitively
+    (the keep-mask of P6).
 
     ~50 keywords per column fold into ONE escaped-alternation ``rlike`` —
     compiled once by Catalyst (constant folding) instead of 50 chained
@@ -70,7 +71,7 @@ def keyword_exclusion_mask(col: Column | str, keywords: list[str], case_insensit
     if not keywords:
         return F.lit(True)
     alternation = "|".join(escape_regex(k) for k in keywords)
-    pattern = ("(?i)" if case_insensitive else "") + "(" + alternation + ")"
+    pattern = "(?i)(" + alternation + ")"
     return ~F.coalesce(c.rlike(pattern), F.lit(False))
 
 
@@ -80,25 +81,27 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column → array<string>.
+def shingles(toks: Column, n: int) -> Column:
+    """Padded word n-gram shingles of a token array → array<string>.
 
-    Built from ``sequence`` + ``transform`` + ``element_at`` — pure Catalyst
-    expressions, no UDF.  Documents shorter than ``n`` words yield their
-    whole (trimmed) text as the single shingle so they still participate in
-    similarity joins.
+    Position ``i`` joins ``toks[i .. i+n-1]`` with single spaces.  Arrays
+    shorter than ``n`` tokens yield their whole (joined) token list as the
+    single shingle so short documents still participate in similarity
+    joins; for exact n-grams with no padding see ``arrays.ngrams``.
     """
-    toks = tokens(col)
-    k = F.size(toks)
     # slice-based gram: references ``toks`` once per gram — element_at per
     # position re-evaluates the token split inside the interpreted lambda
     # (~5× slower measured); short docs (< n words) fall out the same way
     # because slice past the end truncates
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k - F.lit(n - 1), F.lit(1))),
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))),
         lambda i: F.array_join(F.slice(toks, i, n), " "),
     )
-    return F.array_distinct(grams)
+
+
+def word_shingles(col: Column | str, n: int = 3) -> Column:
+    """Distinct padded word n-gram shingles of a text column → array<string>."""
+    return F.array_distinct(shingles(tokens(col), n))
 
 
 # PII scrubbing — patterns restricted to syntax that Java regex (Spark) and

@@ -50,12 +50,3 @@ def utc_to_tz(col: Column | str, tz: str = "US/Central") -> Column:
     return F.from_utc_timestamp(c, tz)
 
 
-def format_ts(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
-    """Canonical string format at sink boundaries (F9)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, fmt)
-
-
-def default_to(col: Column, default: Column) -> Column:
-    """Missing published → fallback timestamp (core/etl.py:137-139)."""
-    return F.coalesce(col, default)

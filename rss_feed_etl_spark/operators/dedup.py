@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import MOD
-from ..functions.text import norm_text, tokens as _tokens
+from ..functions.arrays import ordered_pairs
+from ..functions.text import norm_text, tokens
 
 
 def dedup_by_key(
@@ -157,15 +158,9 @@ def ngram_jaccard_pairs(
         .groupBy("id")
         .agg(F.count("*").alias("n_sh"))
     )
-    m = F.col("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pair_structs = ordered_pairs(
+        F.col("ids"),
+        lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
     )
     # strict id_a < id_b: two distinct shingles of one doc colliding to the
     # same md5-mod code would put that id twice in the sorted bucket list,
@@ -424,19 +419,13 @@ def minhash_lsh_pairs(
         grouped = grouped.filter(F.size("members") <= max_bucket)
     # all i<j member pairs, est_jaccard computed in place (sort_array orders
     # by id, so pairs come out id_a < id_b)
-    m = F.col("members")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    _est_jaccard(x["sig"], y["sig"]).alias("est_jaccard"),
-                ),
-            ),
-        )
+    pair_structs = ordered_pairs(
+        F.col("members"),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            _est_jaccard(x["sig"], y["sig"]).alias("est_jaccard"),
+        ),
     )
     return (
         grouped.select(F.explode(pair_structs).alias("p"))
@@ -640,21 +629,15 @@ def simhash_neardup_pairs(
     )
     if max_bucket is not None:
         grouped = grouped.filter(F.size("members") <= max_bucket)
-    m = F.col("members")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.bit_count(x["simhash"].bitwiseXOR(y["simhash"]))
-                    .cast("bigint")
-                    .alias("hamming"),
-                ),
-            ),
-        )
+    pair_structs = ordered_pairs(
+        F.col("members"),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"]))
+            .cast("bigint")
+            .alias("hamming"),
+        ),
     )
     return (
         grouped.select(F.explode(pair_structs).alias("p"))
@@ -834,7 +817,7 @@ def paragraph_dedup(
     array expression.  Skew-safe: a boilerplate paragraph shared by
     millions of docs still aggregates to ONE winner row map-side.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     n_paras = F.ceil(F.size("__toks") / F.lit(width)).cast("int")
     paras = F.transform(
         F.sequence(F.lit(0), F.col("__n") - 1),
@@ -891,7 +874,7 @@ def prefix_clone_pairs(
     Docs with fewer than ``k`` tokens are excluded (their "prefix" is the
     whole doc — that's exact dedup's job, not this operator's).
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     code = F.conv(
         F.substring(F.md5(F.array_join(F.slice("__t", 1, k), " ")), 1, 15), 16, 10
     ).cast("bigint")
@@ -905,15 +888,9 @@ def prefix_clone_pairs(
     )
     if max_bucket is not None:
         buckets = buckets.filter(F.size("ids") <= max_bucket)
-    m = F.col("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pair_structs = ordered_pairs(
+        F.col("ids"),
+        lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
     )
     return (
         buckets.filter(F.size("ids") >= 2)
@@ -941,7 +918,7 @@ def bow_fingerprint_dedup(
     the single surviving text per digest per map partition.
     """
     fp = F.md5(
-        F.array_join(F.sort_array(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")), " ")
+        F.array_join(F.sort_array(tokens(F.lower(F.col(text_col)))), " ")
     )
     return (
         df.select(F.col(id_col), fp.alias("__fp"), F.col(text_col))
@@ -999,15 +976,9 @@ def ngram_containment_pairs(
         .groupBy("id")
         .agg(F.count("*").alias("n_sh"))
     )
-    m = F.col("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pair_structs = ordered_pairs(
+        F.col("ids"),
+        lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
     )
     pairs = (
         buckets.filter(F.size("ids") >= 2)
@@ -1128,7 +1099,7 @@ def source_jaccard_matrix(
         ((2 * i + 1) * 2654435761 % MOD, (i * i + i + 41) % MOD)
         for i in range(n_perms)
     ]
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     staged = df.select(F.col(source_col).alias("src"), toks.alias("__toks")).select(
         "src",
         F.transform("__toks", token_code).alias("__codes"),
@@ -1224,7 +1195,7 @@ def chunk_stitch_pairs(
     (boundary → ids) buckets first so the cap applies before any pair
     fans out.
     """
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col(text_col)))
     staged = df.select(
         F.col(id_col).alias("id"), toks.alias("__t")
     ).filter(F.size("__t") >= k)

@@ -125,9 +125,3 @@ def llm_match_scores(
     return df.mapInPandas(enrich, out_schema)
 
 
-def skills_to_json(df: DataFrame) -> DataFrame:
-    """Array skills → JSON strings at the sink boundary (reference F14,
-    run_ats_enrichment.py:905-906 stores json.dumps(list))."""
-    return df.withColumn("matched_skills", F.to_json("matched_skills")).withColumn(
-        "missing_skills", F.to_json("missing_skills")
-    )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import token_code
+from ..functions.text import tokens
 
 
 def target_encode_loo(
@@ -101,7 +102,7 @@ def feature_hash_encode(
     count.  Rows whose weight cancels to 0 (equal +1/−1 collisions) are
     kept — dropping them would make the sparse and dense views disagree.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     coded = (
         df.filter(F.trim(F.col(text_col)) != "")
         .select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))

@@ -13,7 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import keyword_exclusion_mask, non_blankish
-from ..functions.timestamps import lenient_to_timestamp
 
 
 def filter_by_date(
@@ -21,7 +20,6 @@ def filter_by_date(
     ts_col: str = "published",
     as_of: str | Column | None = None,
     days_back: int = 7,
-    parse: bool = False,
 ) -> DataFrame:
     """Keep rows with ``ts >= as_of - days_back`` (reference P4,
     run_job_filter.py:112-152).  Unparseable/absent timestamps drop (the
@@ -30,9 +28,7 @@ def filter_by_date(
     ``as_of=None`` uses ``current_timestamp()`` (production); verified
     queries pass a fixed literal so results are deterministic.
     """
-    ts: Column = F.col(ts_col)
-    if parse:
-        ts = lenient_to_timestamp(ts)
+    ts = F.col(ts_col)
     if as_of is None:
         now = F.current_timestamp()
     elif isinstance(as_of, str):
@@ -73,7 +69,6 @@ def filter_empty_content(df: DataFrame, cols: list[str]) -> DataFrame:
 def filter_keywords(
     df: DataFrame,
     rules: dict[str, list[str]],
-    case_insensitive: bool = True,
 ) -> DataFrame:
     """Keyword-exclusion filter (reference P6, run_job_filter.py:206-237):
     drop any row where column contains any configured keyword
@@ -84,7 +79,7 @@ def filter_keywords(
     """
     cond = F.lit(True)
     for col, keywords in rules.items():
-        cond = cond & keyword_exclusion_mask(col, keywords, case_insensitive)
+        cond = cond & keyword_exclusion_mask(col, keywords)
     return df.filter(cond)
 
 
@@ -99,14 +94,11 @@ def add_as_of(
     df: DataFrame,
     col: str = "AS_OF_DT",
     as_of: str | None = None,
-    as_string: bool = False,
 ) -> DataFrame:
     """Stamp the run timestamp (reference P8, run_job_filter.py:240-254).
 
     The reference stores it as a formatted string; the engine keeps a real
-    timestamp unless ``as_string`` is set for a string-typed sink.
+    timestamp.
     """
     ts = F.to_timestamp(F.lit(as_of)) if as_of is not None else F.current_timestamp()
-    if as_string:
-        return df.withColumn(col, F.date_format(ts, "yyyy-MM-dd HH:mm:ss"))
     return df.withColumn(col, ts)

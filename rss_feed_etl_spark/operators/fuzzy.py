@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.arrays import ordered_pairs
+
 
 def levenshtein_blocked_pairs(
     df: DataFrame,
@@ -47,20 +49,14 @@ def levenshtein_blocked_pairs(
     buckets = buckets.filter(F.size("members") >= 2)
     if max_block is not None:
         buckets = buckets.filter(F.size("members") <= max_block)
-    m = F.col("members")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["txt"].alias("ta"),
-                    y["txt"].alias("tb"),
-                ),
-            ),
-        )
+    pair_structs = ordered_pairs(
+        F.col("members"),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            x["txt"].alias("ta"),
+            y["txt"].alias("tb"),
+        ),
     )
     return (
         buckets.select("block", F.explode(pair_structs).alias("p"))

@@ -20,13 +20,12 @@ def provenance_outer_join(
     old: DataFrame,
     key: str = "link",
     suffix_old: str = "_old",
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Full-outer merge with provenance tags (reference J1,
     data_loader.py:147-159): pandas ``indicator=True`` becomes an explicit
     ``provenance`` column computed from per-side presence flags; old-side
     value columns get ``_old`` suffixes like pandas' ``suffixes``."""
-    n = (F.broadcast(new) if broadcast_new else new).withColumn("__pn", F.lit(1))
+    n = F.broadcast(new).withColumn("__pn", F.lit(1))
     o = old.withColumn("__po", F.lit(1))
     value_cols_new = [c for c in new.columns if c != key]
     value_cols_old = [c for c in old.columns if c != key]
@@ -44,22 +43,10 @@ def provenance_outer_join(
     )
 
 
-def probe_current(
-    new: DataFrame, history: DataFrame, key: str = "link", broadcast_new: bool = True
-) -> DataFrame:
-    """Left join of the batch against CURRENT history rows (reference J2,
-    SCD2 change probe, data_loader.py:246-256)."""
-    current = history.filter(F.col("current_flag") == 1)
-    n = F.broadcast(new) if broadcast_new else new
-    return n.join(current, on=key, how="left")
-
-
-def removed_keys(
-    new: DataFrame, history: DataFrame, key: str = "link", current_only: bool = True
-) -> DataFrame:
+def removed_keys(new: DataFrame, history: DataFrame, key: str = "link") -> DataFrame:
     """Keys current-in-history but absent from the batch (reference J3,
     ``set(current) - set(new)`` at data_loader.py:295) → left-anti join."""
-    h = history.filter(F.col("current_flag") == 1) if current_only else history
+    h = history.filter(F.col("current_flag") == 1)
     return h.join(F.broadcast(new.select(key)), on=key, how="left_anti")
 
 

@@ -237,7 +237,6 @@ def merge_counts(
     key: str = "link",
     notes_col: str = "notes",
     compare_cols: list[str] | None = None,
-    current_only: bool = False,
 ) -> DataFrame:
     """Inserted / updated / removed metrics (reference A1:
     data_loader.py:203-207, 310-314; scd1_manager.py:132-142).
@@ -248,8 +247,7 @@ def merge_counts(
     """
     value_cols = [c for c in batch.columns if c != key]
     compare_cols = compare_cols or [c for c in value_cols if c != notes_col]
-    h0 = history.filter(F.col("current_flag") == 1) if current_only else history
-    j, n_in, new_rows = _probe(batch, h0, key)
+    j, n_in, new_rows = _probe(batch, history, key)
     changed = n_in & _changed("n", "h", compare_cols)
     hist_side = j.agg(
         F.sum(changed.cast("bigint")).alias("updated"),

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.arrays import ordered_pairs
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), nullable=False),
@@ -501,21 +503,15 @@ def phash_hamming_neardup(
     )
     if max_bucket is not None:
         grouped = grouped.filter(F.size("members") <= max_bucket)
-    m = F.col("members")
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.bit_count(x["ph"].bitwiseXOR(y["ph"]))
-                    .cast("bigint")
-                    .alias("hamming"),
-                ),
-            ),
-        )
+    pair_structs = ordered_pairs(
+        F.col("members"),
+        lambda x, y: F.struct(
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            F.bit_count(x["ph"].bitwiseXOR(y["ph"]))
+            .cast("bigint")
+            .alias("hamming"),
+        ),
     )
     return (
         grouped.select(F.explode(pair_structs).alias("p"))

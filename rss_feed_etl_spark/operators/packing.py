@@ -268,7 +268,7 @@ def span_corruption(
     """
     from ..functions.hashing import md5_bucket
 
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     nb = F.ceil(F.size("__t") / F.lit(block)).cast("int")
     s1 = df.select(
         F.col(id_col).alias("id"), toks.alias("__t")

@@ -717,12 +717,12 @@ def query_clarity_score(
     corpus total is one scalar aggregate.  Per-term products round to
     9 dp and sum as DECIMAL.
     """
-    from .textstats import _trigram_triples
+    from .textstats import _ngram_rows
 
     fb = bm25_topk(
         df, query_terms, id_col=id_col, text_col=text_col, topk=fb_docs
     ).select("doc_id")
-    tris = _trigram_triples(df, id_col, text_col).select(
+    tris = _ngram_rows(df, id_col, text_col, 3).select(
         "id", F.concat_ws(" ", "a", "b", "c").alias("tok")
     )
     fb_cnt = (

@@ -15,7 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrays import ngrams
 from ..functions.hashing import md5_bucket
+from ..functions.text import tokens
 
 
 def split_bucket(key: Column | str, salt: str, n_buckets: int = 100) -> Column:
@@ -441,7 +443,7 @@ def importance_weights(
     toks = docs.select(
         F.col(id_col).alias("id"),
         target_pred.alias("is_tgt"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     ).withColumn("bucket", md5_bucket(F.col("tok")) % n_buckets)
     counts = toks.groupBy("bucket").agg(
         F.count("*").alias("n_raw"),
@@ -629,13 +631,8 @@ def dsir_importance_weights(
     with fewer than 2 words carry no bigram and are excluded.
     """
     from pyspark.storagelevel import StorageLevel
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    n2 = F.greatest(F.size(toks) - 1, F.lit(0))
-    grams = F.zip_with(
-        F.slice(toks, 1, n2),
-        F.slice(toks, 2, n2),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
+    toks = tokens(F.lower(F.col(text_col)))
+    grams = F.transform(ngrams(toks, 2), lambda s: F.concat_ws(" ", s["w0"], s["w1"]))
     from ..functions.hashing import md5_bucket
 
     ex = (
@@ -1061,11 +1058,9 @@ def doremi_mixture_step(
     an already-rounded argument.  No per-document state survives the
     first aggregate.
     """
-    from .textstats import _tokens
-
     toks = df.select(
         F.col(source_col).alias("source"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     ).filter(F.col("tok") != "")
     sc = toks.groupBy("source", "tok").agg(F.count("*").alias("n"))
     per_src = sc.groupBy("source").agg(

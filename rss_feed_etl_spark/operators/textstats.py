@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.hashing import rolling_hash
-from ..functions.text import norm_text
+from ..functions.arrays import ngrams
+from ..functions.text import norm_text, shingles, tokens
 
 
 #: Count tables persisted by operators in this module (MI / JSD /
@@ -52,10 +53,6 @@ def release_persisted() -> int:
     return n
 
 
-def _tokens(col: Column) -> Column:
-    return F.split(F.trim(col), r"\s+")
-
-
 def token_count(col: Column | str) -> Column:
     """Whitespace token count; empty/blank text counts 0.
 
@@ -64,7 +61,7 @@ def token_count(col: Column | str) -> Column:
     ``subword_estimate``.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(_tokens(c)))
+    return F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(tokens(c)))
 
 
 def subword_estimate(col: Column | str) -> Column:
@@ -128,7 +125,7 @@ def _text_stats_staged(text_col: str) -> list[Column]:
         n_chars_e.alias("__n_chars"),
         (n_chars_e - F.length(F.regexp_replace(c, _PUNCT_CLASS, ""))).alias("__n_punct"),
         F.size(
-            F.filter(_tokens(c), lambda t: F.lower(t).isin(STOPWORDS_EN))
+            F.filter(tokens(c), lambda t: F.lower(t).isin(STOPWORDS_EN))
         ).alias("__n_stop"),
     ]
 
@@ -202,7 +199,7 @@ def _lexicon_counts(text_col: str) -> Column:
     lex = F.create_map(*kv)
 
     bits = F.transform(
-        _tokens(F.col(text_col)), lambda t: F.coalesce(lex[F.lower(t)], F.lit(0))
+        tokens(F.col(text_col)), lambda t: F.coalesce(lex[F.lower(t)], F.lit(0))
     )
     fields = ["n_stop"] + [f"s_{lang}" for lang in langs]
     init = F.struct(*[F.lit(0).alias(f) for f in fields])
@@ -324,13 +321,7 @@ def repetition_ratio(
     construction is the same slice-based form as the dedup shingles so the
     oracle replays it verbatim.
     """
-    c = F.col(text_col)
-    toks = _tokens(c)
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k - F.lit(n - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
+    grams = shingles(tokens(F.col(text_col)), n)
     n_grams = F.size(grams)
     n_uniq = F.size(F.array_distinct(grams))
     return df.select(
@@ -363,7 +354,7 @@ def top_terms(
     (per-partition heaps, no single-partition sort).  Ties break on the
     term so the ranking is deterministic.
     """
-    toks = F.transform(_tokens(F.col(text_col)), F.lower)
+    toks = F.transform(tokens(F.col(text_col)), F.lower)
     terms = df.select(
         F.col(id_col), F.explode(toks).alias("term")
     ).filter(
@@ -389,7 +380,7 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     engines and row order, usable as a grouping key for exact dedup and as
     a cheap content-version stamp in SCD merges.
     """
-    toks = _tokens(norm_text(text_col))
+    toks = tokens(norm_text(text_col))
     return df.select(F.col(id_col), rolling_hash(toks).alias("fingerprint"))
 
 
@@ -414,7 +405,7 @@ def pmi_pairs(
     frequency side joins broadcast-side.  PMI is rounded before the top-k
     ordering (discrete, engine-stable ranking; ties break on the pair).
     """
-    ex = df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("term"))
+    ex = df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"))
     dfreq = ex.groupBy("term").agg(F.count("*").alias("dfreq")).filter(
         F.col("dfreq") >= min_df
     )
@@ -462,14 +453,10 @@ def top_bigrams(
     own tail — no self-join, no explode-then-rejoin; the only exchange is
     the (pair) count groupBy.  Ranking is (count desc, pair asc).
     """
-    toks = _tokens(F.col(text_col))
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))).alias("a"),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))).alias("b"),
-    )
+    pairs = ngrams(tokens(F.col(text_col)), 2)
     return (
         df.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("term_a"), F.col("p.b").alias("term_b"))
+        .groupBy(F.col("p.w0").alias("term_a"), F.col("p.w1").alias("term_b"))
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("term_a"), F.asc("term_b"))
         .limit(top)
@@ -499,7 +486,7 @@ def unigram_logppl(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     counts = toks.groupBy("tok").agg(F.count("*").alias("n"))
     totals = counts.agg(
@@ -521,15 +508,12 @@ def unigram_logppl(
     )
 
 
-def _bigram_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, a, b) adjacent lowercase-token bigrams, one row per position."""
-    toks = _tokens(F.lower(F.col(text_col)))
-    n1 = F.greatest(F.size(toks) - 1, F.lit(0))
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, n1).alias("a"), F.slice(toks, 2, n1).alias("b")
-    )
-    return df.select(F.col(id_col).alias("id"), F.explode(pairs).alias("p")).select(
-        "id", F.col("p.a").alias("a"), F.col("p.b").alias("b")
+def _ngram_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, a, b[, c]) adjacent lowercase-token n-grams (n = 2 or 3), one
+    row per position."""
+    grams = ngrams(tokens(F.lower(F.col(text_col))), n)
+    return df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g")).select(
+        "id", *[F.col(f"g.w{i}").alias("abc"[i]) for i in range(n)]
     )
 
 
@@ -563,12 +547,12 @@ def bigram_logppl(
     Docs with < 2 tokens emit no bigrams and are absent from the output.
     """
     model = df if model is None else model
-    big = _bigram_pairs(df, id_col, text_col)
-    c2 = _bigram_pairs(model, id_col, text_col).groupBy("a", "b").agg(
+    big = _ngram_rows(df, id_col, text_col, 2)
+    c2 = _ngram_rows(model, id_col, text_col, 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (
-        model.select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"))
+        model.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n1"))
     )
@@ -624,19 +608,15 @@ def bpe_merge_candidates(
     lexicographically so the output is deterministic.
     """
     words = (
-        df.select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("w"))
+        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
     )
-    chars = F.split(F.col("w"), "")
-    n1 = F.greatest(F.size(chars) - 1, F.lit(0))
-    pairs = F.arrays_zip(
-        F.slice(chars, 1, n1).alias("a"), F.slice(chars, 2, n1).alias("b")
-    )
+    pairs = ngrams(F.split(F.col("w"), ""), 2)
     return (
         words.select("cnt", F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("sym_a"), F.col("p.b").alias("sym_b"))
+        .groupBy(F.col("p.w0").alias("sym_a"), F.col("p.w1").alias("sym_b"))
         .agg(F.sum("cnt").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("sym_a"), F.asc("sym_b"))
         .limit(top)
@@ -671,7 +651,7 @@ def oov_rate(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     ).filter(F.col("tok") != "")
     vocab = (
         toks.groupBy("tok")
@@ -717,7 +697,7 @@ def token_entropy(
     term_counts = (
         df.select(
             F.col(id_col).alias("id"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"),
+            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .groupBy("id", "tok")
@@ -761,7 +741,7 @@ def zipf_fit(
     fold structure.
     """
     counts = (
-        df.select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"))
+        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
@@ -819,11 +799,8 @@ def hot_shingles(
     than groupBy + count_distinct, whose distinct expansion defeats
     partial aggregation.  Output is template-grain (tiny).
     """
-    toks = _tokens(F.lower(F.col(text_col)))
-    n = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-    parts = [F.slice(toks, i + 1, n).alias(f"w{i}") for i in range(k)]
     sh = F.transform(
-        F.arrays_zip(*parts),
+        ngrams(tokens(F.lower(F.col(text_col))), k),
         lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
     )
     return (
@@ -873,12 +850,8 @@ def remove_boilerplate(
     costs more than the cache saves) and a broadcast two-scan shape
     without the cache (2.2–3.4 s — shingling the corpus twice).
     """
-    toks_col = _tokens(F.lower(F.col(text_col)))
-
-    n = F.greatest(F.size(toks_col) - (k - 1), F.lit(0))
-    parts = [F.slice(toks_col, i + 1, n).alias(f"w{i}") for i in range(k)]
     sh = F.transform(
-        F.arrays_zip(*parts),
+        ngrams(tokens(F.lower(F.col(text_col))), k),
         lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
     )
     ex = df.select(
@@ -907,7 +880,7 @@ def _boiler_strip(
     """Strip stage shared by the boilerplate variants: join the per-doc
     hot-start sets back onto the corpus, merge starts into disjoint
     coverage intervals, and drop every covered token position."""
-    toks_col = _tokens(F.lower(F.col(text_col)))
+    toks_col = tokens(F.lower(F.col(text_col)))
     with_starts = df.select(
         F.col(id_col).alias("id"), toks_col.alias("toks")
     ).join(starts, "id", "left")
@@ -977,11 +950,8 @@ def shingle_novelty(
     counts, one join back on the shingle key, one per-doc aggregate —
     document bodies never enter a shuffle, only k-token shingle strings.
     """
-    toks = _tokens(F.lower(F.col(text_col)))
-    n = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-    parts = [F.slice(toks, i + 1, n).alias(f"w{i}") for i in range(k)]
     sh = F.transform(
-        F.arrays_zip(*parts),
+        ngrams(tokens(F.lower(F.col(text_col))), k),
         lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
     )
     occ = df.select(F.col(id_col).alias("id"), F.explode(sh).alias("shingle"))
@@ -1036,16 +1006,12 @@ def winnow_fingerprints(
     """
     from ..functions.hashing import token_code
 
-    toks = _tokens(F.col(text_col))
+    toks = tokens(F.col(text_col))
     staged = df.select(F.col(id_col).alias("id"), toks.alias("__toks"))
-    m = F.greatest(F.size(F.col("__toks")) - F.lit(k - 1), F.lit(1))
-    hashes = F.transform(
-        F.sequence(F.lit(1), m),
-        lambda i: token_code(F.array_join(F.slice(F.col("__toks"), i, k), " ")),
-    )
+    hashes = F.transform(shingles(F.col("__toks"), k), token_code)
     hashed = staged.select("id", hashes.alias("__hs"))
     # window minima: position i keeps min(h[i .. i+w-1]); slice truncates at
-    # the array end, so short documents (m <= w) collapse to one
+    # the array end, so short documents (at most w grams) collapse to one
     # whole-document fingerprint — same boundary semantics as the rowsBetween
     # window form this replaces
     n_pos = F.greatest(F.size(F.col("__hs")) - F.lit(w), F.lit(0)) + F.lit(1)
@@ -1079,7 +1045,7 @@ def doc_keywords(
     """
     ex = df.select(
         F.col(id_col).alias("id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
     )
     tf = ex.groupBy("id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("dfreq")).filter(
@@ -1121,13 +1087,9 @@ def ngram_diversity(
     aggregate — two partial-agg-friendly shuffles, never count_distinct's
     expansion — and document bodies stay out of every exchange.
     """
-    toks = _tokens(F.lower(F.col(text_col)))
-    n = F.greatest(F.size(toks) - 1, F.lit(0))
+    toks = tokens(F.lower(F.col(text_col)))
     big = F.transform(
-        F.arrays_zip(
-            F.slice(toks, 1, n).alias("w0"), F.slice(toks, 2, n).alias("w1")
-        ),
-        lambda s: F.concat_ws(" ", s["w0"], s["w1"]),
+        ngrams(toks, 2), lambda s: F.concat_ws(" ", s["w0"], s["w1"])
     )
     uni = df.select(F.col(group_col).alias("g"), F.explode(toks).alias("gram"))
     bi = df.select(F.col(group_col).alias("g"), F.explode(big).alias("gram"))
@@ -1180,7 +1142,7 @@ def hashed_quality_scores(
     """
     from ..functions.hashing import token_code
 
-    toks = _tokens(F.col(text_col))
+    toks = tokens(F.col(text_col))
     bucket_sum = F.aggregate(
         F.transform(toks, lambda t: token_code(t) % F.lit(n_buckets)),
         F.lit(0).cast("bigint"),
@@ -1270,7 +1232,7 @@ def vocab_drift_terms(
     a TakeOrdered top-k — document bodies never shuffle.
     """
     def dfreq(df: DataFrame, name: str) -> DataFrame:
-        toks = F.array_distinct(_tokens(F.lower(F.col(text_col))))
+        toks = F.array_distinct(tokens(F.lower(F.col(text_col))))
         return (
             df.select(F.explode(toks).alias("term"))
             .groupBy("term")
@@ -1330,7 +1292,7 @@ def source_kl_divergence(
     shuffled only at term grain.
     """
     toks = df.select(
-        F.col(group_col).alias("g"), F.explode(_tokens(F.lower(F.col(text_col)))).alias("term")
+        F.col(group_col).alias("g"), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
     )
     vocab = (
         toks.groupBy("term")
@@ -1435,7 +1397,7 @@ def _gopher_exprs(
     """The Gopher rule expressions of :func:`gopher_quality_flags` as a
     dict — shared (round 11) with fused single-scan consumers
     (``source_scorecard``) so the rule formulas exist exactly once."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     n = F.size(toks)
     sum_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t)),
@@ -1508,7 +1470,7 @@ def repeated_ngram_stats(
     # site (CollapseProject keeps multi-referenced non-cheap expressions,
     # but expressions nested inside one select have no such protection),
     # re-running one md5 per token per reference.
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     staged = (
         df.select(F.col(id_col), toks.alias("__toks"))
         .filter(F.size("__toks") >= n)
@@ -1764,7 +1726,7 @@ def heaps_law_curve(
             F.max(F.col(id_col)).cast("long").alias("i1"),
         )
     )
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     base = df.filter(F.trim(F.col(text_col)) != "").crossJoin(ids).select(
         F.expr(
             f"CAST((CAST({id_col} AS BIGINT) - i0) * {n_buckets} "
@@ -1898,7 +1860,7 @@ def distinctive_terms_log_odds(
 
     Output: ``(source, term, n_source, z_log_odds)``.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(F.col(text_col))
     occ = df.filter(F.trim(F.col(text_col)) != "").select(
         F.col(source_col).alias("src"), F.explode(toks).alias("term")
     )
@@ -1966,7 +1928,7 @@ def vocab_coverage_curve(
     """
     vmax = max(vs)
     toks = df.select(
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count("*").cast("bigint").alias("n"))
     total = counts.agg(F.sum("n").cast("double").alias("total"))
@@ -2184,7 +2146,7 @@ def token_gini_by_source(
     """
     toks = df.select(
         F.col(source_col).alias("source"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     counts = toks.groupBy("source", "tok").agg(F.count("*").alias("f"))
     ff = counts.groupBy("source", "f").agg(F.count("*").alias("m"))
@@ -2323,7 +2285,7 @@ def negative_sampling_table(
 
     Output: ``(rank, term, n, prob, cum_prob)``.
     """
-    toks = df.select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"))
+    toks = df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
     counts = (
         toks.filter(F.col("tok") != "")
         .groupBy("tok")
@@ -2423,7 +2385,7 @@ def split_oov_rate(
     never shuffle; only tokens do.
     """
     train_toks = train_df.select(
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
     ).filter(F.col("tok") != "")
     vocab = (
         train_toks.groupBy("tok")
@@ -2433,7 +2395,7 @@ def split_oov_rate(
     )
     eval_toks = eval_df.select(
         F.col(id_col).alias("id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     ).filter(F.col("tok") != "")
     return (
         eval_toks.join(vocab, "tok", "left")
@@ -2493,12 +2455,9 @@ def source_scorecard(
     contract; the oracle composes the operators' SQL verbatim and stays
     hash-green).
     """
-    from ..functions.text import norm_text
-
     staged = df.select(
         F.col(source_col).alias("source"),
         F.md5(norm_text(text_col)).alias("__fp"),
-        token_count(F.col(text_col)).cast("bigint").alias("__nt"),
         _gopher_exprs(text_col)["keep"].alias("keep"),
         *_text_stats_staged(text_col),
     )
@@ -2514,7 +2473,7 @@ def source_scorecard(
             / F.count("*"),
             decimals,
         ).alias("mean_quality"),
-        F.sum("__nt").cast("bigint").alias("n_tokens"),
+        F.sum("__n_tok").cast("bigint").alias("n_tokens"),
     )
     tot = per_source.agg(F.sum("n_tokens").cast("double").alias("__t"))
     return per_source.crossJoin(F.broadcast(tot)).select(
@@ -2554,7 +2513,7 @@ def vocab_oov_curve(
     curve point is an aggregate over that bounded frame plus the two
     corpus scalars.  The corpus is scanned once; no per-size rescan.
     """
-    toks = df.select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok")).filter(
+    toks = df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")).filter(
         F.col("tok") != ""
     )
     counts = toks.groupBy("tok").agg(F.count("*").alias("n"))
@@ -2642,24 +2601,6 @@ def pii_density(
     )
 
 
-def _trigram_triples(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, a, b, c) adjacent lowercase-token trigrams, one row per
-    position (the ``_bigram_pairs`` shape extended one order up)."""
-    toks = _tokens(F.lower(F.col(text_col)))
-    n2 = F.greatest(F.size(toks) - 2, F.lit(0))
-    trips = F.arrays_zip(
-        F.slice(toks, 1, n2).alias("a"),
-        F.slice(toks, 2, n2).alias("b"),
-        F.slice(toks, 3, n2).alias("c"),
-    )
-    return df.select(F.col(id_col).alias("id"), F.explode(trips).alias("t")).select(
-        "id",
-        F.col("t.a").alias("a"),
-        F.col("t.b").alias("b"),
-        F.col("t.c").alias("c"),
-    )
-
-
 def interp_trigram_logppl(
     df: DataFrame,
     model: DataFrame | None = None,
@@ -2702,15 +2643,15 @@ def interp_trigram_logppl(
     """
     model = df if model is None else model
     l3, l2, l1 = (float(x) for x in lambdas)
-    trig = _trigram_triples(df, id_col, text_col)
-    c3 = _trigram_triples(model, id_col, text_col).groupBy("a", "b", "c").agg(
+    trig = _ngram_rows(df, id_col, text_col, 3)
+    c3 = _ngram_rows(model, id_col, text_col, 3).groupBy("a", "b", "c").agg(
         F.count("*").alias("n3")
     )
-    c2 = _bigram_pairs(model, id_col, text_col).groupBy("a", "b").agg(
+    c2 = _ngram_rows(model, id_col, text_col, 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (
-        model.select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok"))
+        model.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n1"))
     )
@@ -2904,7 +2845,7 @@ def npmi_topic_coherence(
         df.select(
             F.col(source_col).alias("source"),
             F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(_tokens(F.lower(F.col(text_col)))))
+            F.explode(F.array_distinct(tokens(F.lower(F.col(text_col)))))
             .alias("tok"),
         )
         .filter(F.col("tok") != "")
@@ -3010,7 +2951,7 @@ def vocab_prune_impact(
     the corpus is scanned once for the whole table.
     """
     toks = df.select(
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
     ).filter(F.col("tok") != "")
     types = toks.groupBy("tok").agg(F.count("*").alias("n")).withColumn(
         "chars", F.col("n") * F.length(F.col("tok"))
@@ -3087,10 +3028,10 @@ def good_turing_mass(
     """
     if ngram == 1:
         toks = df.select(
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok")
+            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
         ).filter(F.col("tok") != "")
     elif ngram == 3:
-        toks = _trigram_triples(df, df.columns[0], text_col).select(
+        toks = _ngram_rows(df, df.columns[0], text_col, 3).select(
             F.concat_ws(" ", "a", "b", "c").alias("tok")
         )
     else:
@@ -3152,10 +3093,10 @@ def chao1_vocab_estimate(
     """
     if ngram == 1:
         toks = df.select(
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("tok")
+            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
         ).filter(F.col("tok") != "")
     elif ngram == 3:
-        toks = _trigram_triples(df, df.columns[0], text_col).select(
+        toks = _ngram_rows(df, df.columns[0], text_col, 3).select(
             F.concat_ws(" ", "a", "b", "c").alias("tok")
         )
     else:
@@ -3222,7 +3163,7 @@ def source_token_mutual_info(
     """
     from ..functions.hashing import md5_bucket
 
-    trips = _trigram_triples(df, group_col, text_col).select(
+    trips = _ngram_rows(df, group_col, text_col, 3).select(
         F.col("id").alias("g"),
         md5_bucket(F.concat_ws(" ", "a", "b", "c")).alias("tok"),
     )
@@ -3332,7 +3273,7 @@ def source_js_divergence_matrix(
     """
     from ..functions.hashing import md5_bucket
 
-    trips = _trigram_triples(df, group_col, text_col).select(
+    trips = _ngram_rows(df, group_col, text_col, 3).select(
         F.col("id").alias("g"),
         md5_bucket(F.concat_ws(" ", "a", "b", "c")).alias("tok"),
     )
@@ -3431,7 +3372,7 @@ def kneser_ney_bigram_ppl(
     guide §2.3).  Per-position NLLs round to 9 dp and DECIMAL-sum per
     doc.
     """
-    bp = _bigram_pairs(df, id_col, text_col)
+    bp = _ngram_rows(df, id_col, text_col, 2)
     c12 = _persist_spillable(
         bp.groupBy("a", "b").agg(F.count("*").cast("bigint").alias("n2"))
     )
@@ -3498,7 +3439,7 @@ def term_burstiness_profile(
     materialize: their moment contribution is algebraic.
     """
     tc = df.select(
-        F.col(id_col).alias("id"), F.explode(_tokens(F.lower(F.col(text_col)))).alias("term")
+        F.col(id_col).alias("id"), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
     ).filter(F.col("term") != "").groupBy("id", "term").agg(
         F.count("*").cast("bigint").alias("c")
     )
@@ -3556,7 +3497,7 @@ def hill_tail_index(
     arithmetic runs on that model-sized frame.  Per-type ln rounds to
     9 dp and sums as DECIMAL.
     """
-    trips = _trigram_triples(df, id_col, text_col).select(
+    trips = _ngram_rows(df, id_col, text_col, 3).select(
         F.concat_ws(" ", "a", "b", "c").alias("tok")
     )
     counts = trips.groupBy("tok").agg(F.count("*").cast("bigint").alias("f"))

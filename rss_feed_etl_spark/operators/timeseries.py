@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrays import ordered_pairs
+
 
 def gapfill_locf(
     daily: DataFrame,
@@ -381,16 +383,10 @@ def theil_sen_trend(
             F.collect_list(F.struct(F.col("day"), F.col("y")))
         ).alias("pts")
     )
-    m = F.col("pts")
-    slopes = F.flatten(
-        F.transform(
-            m,
-            lambda a, i: F.transform(
-                F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                lambda b: (b["y"] - a["y"])
-                / F.datediff(b["day"], a["day"]).cast("double"),
-            ),
-        )
+    slopes = ordered_pairs(
+        F.col("pts"),
+        lambda a, b: (b["y"] - a["y"])
+        / F.datediff(b["day"], a["day"]).cast("double"),
     )
     staged = per_key.select(
         key_col,

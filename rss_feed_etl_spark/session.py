@@ -22,17 +22,14 @@ def default_cpus() -> int:
         return 32
 
 
-def get_spark(
-    app_name: str = "rss-feed-etl-spark",
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "rss-feed-etl-spark", cpus: int | None = None) -> SparkSession:
+    """A ``local[cpus]`` session with the static confs set here and the
+    runtime SQL confs applied by :func:`tune_session`."""
     cpus = cpus or default_cpus()
     driver_mem = os.environ.get("SPARK_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
         # Shuffle partitions default to the session's parallelism (NOT
         # Spark's legacy 200, NOT a multiple of it).  An interrupted
         # round-10 session shipped 4×cpus + an 8 MB AQE advisory,
@@ -46,21 +43,7 @@ def get_spark(
         # aggregate the config was compensating for, so the config
         # reverted to the scale-neutral default (guide §2.2: fix the
         # plan, not the knob).
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing target: Spark's 64m default, env-tunable for
-        # cluster profiles with different per-task memory (guide §9).
-        # The round-10 A/B above also tested 8m globally: it cost
-        # 1.3–2× on a dozen mid-size aggregate queries at sf0.1 and
-        # bought nothing once the ngram operator fix landed (the Arrow
-        # scans it was meant to parallelize are map-only — parquet
-        # split sizing, not shuffle sizing, sets their task count).
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
-        )
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_mem)
         # Commit and pre-touch the heap up front: with the default tiny
@@ -79,10 +62,8 @@ def get_spark(
         # round-4 record by them) — keep driver stdout clean.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
-    return builder.getOrCreate()
+    return tune_session(builder.getOrCreate())
 
 
 _PYFILES_ADDED: set[int] = set()
@@ -135,11 +116,13 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    # see get_spark: AQE coalescing target, env-tunable for cluster profiles
-    spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
-    )
+    # AQE coalescing target: Spark's 64m default.  The round-10 A/B (see
+    # get_spark) also tested 8m globally: it cost 1.3–2× on a dozen
+    # mid-size aggregate queries at sf0.1 and bought nothing once the
+    # ngram operator fix landed (the Arrow scans it was meant to
+    # parallelize are map-only — parquet split sizing, not shuffle
+    # sizing, sets their task count).
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     # Timestamp read semantics for the driver's parquet (naive INT64 nanos):
     # read as plain UTC TIMESTAMP (not NTZ) and surface nanos as longs for the
     # explicit nanos→micros conversion in testdata.load_table.  Kept here so

@@ -80,37 +80,62 @@ def write_partitioned_incremental(
     of keys present in the batch — the second term matters because an
     update can move a row to a new date, and the stale version must vanish
     from its old partition.  Dynamic overwrite replaces only the dates
-    ``merged`` still has rows on, so a date whose last row moved away is
-    not rewritten and keeps the stale version.  With an empty history
-    every date of ``merged`` is touched, so the first write equals
-    ``write_partitioned(merged)``.  The date list is driver-sized (days,
-    not rows); ``merged`` filtered to those dates goes to
-    ``write_partitioned``, so untouched partition directories are not
-    rewritten.  A null date (a row with no ``ts_col``) is touched like any
-    other and keeps the default partition.  Returns the touched dates,
-    sorted, with ``None`` last when the null date is among them.
+    ``merged`` still has rows on, so a history date that ``merged`` no
+    longer has rows on (its last row moved away) is deleted after the
+    write succeeds: a crash in between leaves the previous snapshot plus
+    rewritten dates, never a lost live row.  Every batch row reaches
+    ``merged`` with its date (true of each merge and delta here), so only
+    dates that come from history alone can have emptied; checking them is
+    one date-grain job over ``merged``, run only when there are any (an
+    update that moves a row off a date no batch row is on).  With an
+    empty history every date of ``merged`` is touched, so the first write
+    equals ``write_partitioned(merged)``.
+    The date lists are driver-sized (days, not rows); ``merged`` filtered
+    to the touched dates goes to ``write_partitioned``, so untouched
+    partition directories are not rewritten.  A null date (a row with no
+    ``ts_col``) is touched like any other and keeps the default partition.
+    Returns the touched dates, sorted, with ``None`` last when the null
+    date is among them.
     """
+    day = F.to_date(F.col(ts_col))
     batch_keys = batch.select(key).distinct()
     touched = (
-        batch.select(F.to_date(F.col(ts_col)).alias("d"))
+        batch.select(day.alias("d"), F.lit(False).alias("old"))
         .unionByName(
             history.join(batch_keys, key, "left_semi").select(
-                F.to_date(F.col(ts_col)).alias("d")
+                day.alias("d"), F.lit(True).alias("old")
             )
         )
-        .distinct()
+        .groupBy("d")
+        .agg(F.min("old").alias("old"))
+        .collect()
     )
-    found = {r["d"] for r in touched.collect()}
+    found = {r["d"] for r in touched}
     dates = sorted(d for d in found if d is not None)
     if not found:  # empty batch → nothing to rewrite
         return dates
-    day = F.to_date(F.col(ts_col))
     keep = day.isin(dates)
     if None in found:
         keep = keep | day.isNull()
         dates.append(None)
+    old = {r["d"] for r in touched if r["old"]}
+    if old:  # computed before the write: ``merged`` may read ``path``
+        old -= {r["d"] for r in merged.filter(keep).select(day.alias("d")).distinct().collect()}
     write_partitioned(merged.filter(keep), path, ts_col=ts_col)
+    if old:
+        _delete_partitions(merged.sparkSession, path, old)
     return dates
+
+
+def _delete_partitions(spark: SparkSession, path: str, dates) -> None:
+    """Remove the ``ingest_date`` partition directories of ``dates`` (None =
+    the default partition) through the table's Hadoop filesystem."""
+    fs_path = spark._jvm.org.apache.hadoop.fs.Path
+    root = fs_path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    for d in dates:
+        name = "__HIVE_DEFAULT_PARTITION__" if d is None else d.isoformat()
+        fs.delete(fs_path(root, f"ingest_date={name}"), True)
 
 
 def compact_partitions(

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
+from rss_feed_etl_spark.functions.text import tokens
 from rss_feed_etl_spark.operators import linalg, similarity, textstats
 
 
@@ -151,13 +152,13 @@ def test_bigram_logppl_distinct_grain_matches_direct(spark):
         for r in textstats.bigram_logppl(docs).collect()
     }
     # direct per-occurrence reference (the pre-round-11 shape)
-    big = textstats._bigram_pairs(docs, "doc_id", "text")
-    c2 = textstats._bigram_pairs(docs, "doc_id", "text").groupBy("a", "b").agg(
+    big = textstats._ngram_rows(docs, "doc_id", "text", 2)
+    c2 = textstats._ngram_rows(docs, "doc_id", "text", 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (
         docs.select(
-            F.explode(textstats._tokens(F.lower(F.col("text")))).alias("tok")
+            F.explode(tokens(F.lower(F.col("text")))).alias("tok")
         )
         .groupBy("tok")
         .agg(F.count("*").alias("n1"))

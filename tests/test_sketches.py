@@ -74,10 +74,11 @@ def test_heavy_hitters_equal_exact_topk(spark):
 
     from rss_feed_etl_spark import testdata as td
     from rss_feed_etl_spark.operators.sketches import heavy_hitters_topk
-    from rss_feed_etl_spark.operators.textstats import STOPWORDS_EN, _tokens
+    from rss_feed_etl_spark.functions.text import tokens
+    from rss_feed_etl_spark.operators.textstats import STOPWORDS_EN
 
     docs = td.load_table(spark, SF_DIR, "documents")
-    toks = F.transform(_tokens(F.col("text")), F.lower)
+    toks = F.transform(tokens(F.col("text")), F.lower)
     terms = docs.select(F.explode(toks).alias("term")).filter(
         (F.length("term") >= 3)
         & F.col("term").rlike("^[a-z]+$")

@@ -506,6 +506,34 @@ def test_streaming_partitioned_sink_keeps_null_published_rows(spark, tmp_path):
     assert l2["published"] is None and l2["ingest_date"] is None
 
 
+def test_streaming_partitioned_sink_drops_date_a_row_moved_off(spark, tmp_path):
+    """An update that moves the only row of a date to another date leaves
+    that date empty: the partitioned sink deletes the old partition, so
+    the key is stored once, on its new date."""
+    landing = str(tmp_path / "landing")
+    target = str(tmp_path / "target")
+    ckpt = str(tmp_path / "ckpt")
+    batches = [
+        [("Eng", "L1", "t1", dt.datetime(2024, 5, 1, 9), "f", "r", "w", "s1", ""),
+         ("Eng", "L2", "t2", dt.datetime(2024, 5, 2, 9), "f", "r", "w", "s2", "")],
+        [("Eng", "L2", "t2-v2", dt.datetime(2024, 5, 3, 9), "f", "r", "w", "s2b", "")],
+    ]
+    for rows in batches:
+        spark.createDataFrame(rows, STAGE_SCHEMA).write.mode("append").parquet(landing)
+        q = incremental_scd1(
+            read_stage_stream(spark, landing, STAGE_SCHEMA), target, ckpt,
+            partitioned=True,
+        )
+        q.awaitTermination(120)
+
+    out = [r.asDict() for r in spark.read.parquet(target).collect()]
+    assert sorted(r["link"] for r in out) == ["L1", "L2"]
+    l2 = next(r for r in out if r["link"] == "L2")
+    assert l2["entry_title"] == "t2-v2"
+    assert l2["ingest_date"] == dt.date(2024, 5, 3)
+    assert not (tmp_path / "target" / "ingest_date=2024-05-02").exists()
+
+
 def test_resize_images_stub(media_df):
     from rss_feed_etl_spark.operators.multimodal import decode_images, resize_images
 
