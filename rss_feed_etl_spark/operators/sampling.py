@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.arrays import ngrams
 from ..functions.hashing import md5_bucket
 from ..functions.text import tokens
+from .textstats import _persist_spillable
 
 
 def split_bucket(key: Column | str, salt: str, n_buckets: int = 100) -> Column:
@@ -616,8 +617,9 @@ def dsir_importance_weights(
     (the model is O(buckets), broadcast back along with the 1-row totals);
     (2) the per-doc fold, a broadcast join + doc-grain sum.  Neither pass
     shuffles text.  The hashed stream ``(id, tgt, bucket)`` is PERSISTED
-    spillably so the tokenize + md5-per-bigram work runs once, not once
-    per pass — VERDICT r6 #4, warm same-process noop A/B on the 10x
+    spillably (registered: ``textstats.release_persisted`` frees it) so
+    the tokenize + md5-per-bigram work runs once, not once per pass —
+    VERDICT r6 #4, warm same-process noop A/B on the 10x
     corpus: 21.7–24.3 s → 10.3–14.9 s (~0.5x; the sf0.1 cost is
     cache-write-bound and moves 0.84 → 0.95 s, inside the drift band);
     the official round-7 bench 10x entry moved 22.7 s → 2.5 s (scale
@@ -630,16 +632,13 @@ def dsir_importance_weights(
     decimal, so the fold is order-independent across engines.  Documents
     with fewer than 2 words carry no bigram and are excluded.
     """
-    from pyspark.storagelevel import StorageLevel
     toks = tokens(F.lower(F.col(text_col)))
     grams = F.transform(ngrams(toks, 2), lambda s: F.concat_ws(" ", s["w0"], s["w1"]))
-    from ..functions.hashing import md5_bucket
-
-    ex = (
+    ex = _persist_spillable(
         df.filter(F.size(toks) >= 2)
         .select(F.col(id_col).alias("id"), target.alias("tgt"), F.explode(grams).alias("g"))
         .select("id", "tgt", (md5_bucket(F.col("g")) % n_buckets).alias("b"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     counts = ex.groupBy("b").agg(
         F.sum(F.when(F.col("tgt"), 1).otherwise(0)).alias("ct"),
         F.count("*").alias("cr"),

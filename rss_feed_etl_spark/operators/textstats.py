@@ -22,13 +22,15 @@ from ..functions.arrays import ngrams
 from ..functions.text import norm_text, shingles, tokens
 
 
-#: Count tables persisted by operators in this module (MI / JSD /
-#: Kneser-Ney / boilerplate).  They are vocabulary-scale, so a
-#: long-lived session composing several of these operators accumulates
-#: executor storage (ADVICE r8).  Callers running many jobs should call
-#: :func:`release_persisted` (or ``spark.catalog.clearCache()``) between
-#: jobs; the returned result frames stay valid — Spark simply recomputes
-#: the lineage if re-executed after release.
+#: Frames persisted by the operators: this module's count tables (MI /
+#: JSD / Kneser-Ney / boilerplate), dedup's shared buckets, the DSIR
+#: hashed stream and curation's corpus projection.  They are
+#: vocabulary- or corpus-scale, so a long-lived session composing
+#: several of these operators accumulates executor storage (ADVICE r8).
+#: Callers running many jobs should call :func:`release_persisted` (or
+#: ``spark.catalog.clearCache()``) between jobs; the returned result
+#: frames stay valid — Spark simply recomputes the lineage if
+#: re-executed after release.
 _PERSISTED: list[DataFrame] = []
 
 
@@ -40,8 +42,9 @@ def _persist_spillable(df: DataFrame) -> DataFrame:
 
 
 def release_persisted() -> int:
-    """Unpersist every count table this module has cached; returns how
-    many frames were released.  Safe to call at any job boundary."""
+    """Unpersist every frame registered by :func:`_persist_spillable`;
+    returns how many frames were released.  Safe to call at any job
+    boundary."""
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()

@@ -27,9 +27,10 @@ token volume of the clean corpus, its temperature-α=0.5 mixture weight,
 and how many packed training sequences the source's documents occupy.
 
 Plan / 100 TB: the corpus projection ``(id, text, source)`` is persisted
-spillably ONCE and every stage derives from it — six stages re-deriving
-from parquet would re-scan and re-decompress the corpus per stage (the
-plan-shape suite pins the single-scan property).  Stage decisions travel
+spillably ONCE (registered: ``textstats.release_persisted`` frees it) and
+every stage derives from it — six stages re-deriving from parquet would
+re-scan and re-decompress the corpus per stage (the plan-shape suite pins
+the single-scan property).  Stage decisions travel
 as ID FRAMES (semi/anti joins on the key — document text never shuffles
 between stages); the quality gate is map-only; both dedups and both
 decontaminations are the bucket/band-guarded operators with their caps
@@ -46,13 +47,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.hashing import md5_bucket
 from ..operators.dedup import dedup_exact, minhash_lsh_pairs, neardup_drop_list
 from ..operators.packing import pack_sequences
 from ..operators.sampling import cross_split_contamination, semantic_contamination
-from ..operators.textstats import gopher_quality_flags, token_count
+from ..operators.textstats import _persist_spillable, gopher_quality_flags, token_count
 
 
 def curation_pipeline(
@@ -102,11 +102,11 @@ def curation_pipeline(
     no checkpoint and materialize with the returned frame.
     """
     import time as _time
-    base = docs.select(
+    base = _persist_spillable(docs.select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("text"),
         F.col(source_col).alias("source"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
 
     # Stage survivor sets travel as CHECKPOINTED id frames (8-byte rows):
     # the scorecard consumes every stage's membership several times, and

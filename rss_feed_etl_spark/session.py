@@ -15,6 +15,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: ``spark.sql.codegen.cache.maxEntries``: how many Janino-compiled
+#: generated classes the JVM keeps.  There is one cache per JVM and the
+#: conf is static, so get_spark sets it when it builds the session;
+#: Spark's default is 100.  Sized from class counts (the
+#: ``CodegenMetrics`` compile counter; 4 cores, pyspark 4.1.2):
+#: - one perfbench ``query_catalog`` pass (12 queries and
+#:   curation_pipeline, sf0.02) compiles about 450 classes cold.  At the
+#:   default size every warm pass recompiled 421-464 of them
+#:   (curation_pipeline alone 160-169); at 2000, 0-2.
+#: - the largest bench.py child (its 7 heaviest headline entries,
+#:   sf0.1, each run twice) compiled 912 classes at the default and 509
+#:   at 2000: curation_pipeline's second run recompiled 211 of its 214.
+#: - the Tier-1 session (886 tests) compiled 12,376 classes at the
+#:   default and 6,849 at 2000.  Most compile once, so no size holds
+#:   them all; Metaspace ended at 211 MB and 229 MB.
+#: 2000 holds four of the largest working set that comes round again
+#: (~500 classes).  Metaspace at the end of a query_catalog run read
+#: 174 MB at 2000 and 184 MB at the default.
+CODEGEN_CACHE_ENTRIES = 2000
+
+
 def default_cpus() -> int:
     try:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -62,6 +83,7 @@ def get_spark(app_name: str = "rss-feed-etl-spark", cpus: int | None = None) -> 
         # round-4 record by them) — keep driver stdout clean.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return tune_session(builder.getOrCreate())
 
@@ -110,7 +132,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver harness hands us an already-built SparkSession; static configs
     (master, memory) are fixed, but these runtime SQL configs are what our
     operator semantics depend on (UTC timestamps for oracle parity, AQE for
-    skew/coalesce at scale).
+    skew/coalesce at scale).  The codegen class cache size
+    (:data:`CODEGEN_CACHE_ENTRIES`) is a static conf too: a session built
+    elsewhere keeps its own size, Spark's default of 100 unless that
+    session's own configuration set one.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -130,4 +155,15 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # applies the same semantics to the same files, so oracle parity holds.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # A generated class is cached by its source text, and by default that
+    # text names the class after its whole-stage codegen id.  The ids AQE
+    # hands out depend on the order in which its query stages finish, so
+    # the same pipeline came back under another id and compiled again:
+    # with the cache sized, warm curation_pipeline runs still compiled
+    # 20, 26, 0, 2 and 0 classes, most differing from a cold run's class
+    # only in that id.  With the id left out of the name: 2, 2, 0, 0, 0
+    # (AQE picking another join shape), and a cold run compiles 151
+    # classes instead of 167, as identical stages share one class.  The
+    # id stays in the generated source as a comment.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     return spark

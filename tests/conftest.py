@@ -22,6 +22,8 @@ if HAVE_PROTOBUF:
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from rss_feed_etl_spark.session import CODEGEN_CACHE_ENTRIES  # noqa: E402
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -41,6 +43,8 @@ def spark():
         # that debt (test_wave85.py: 27 s alone vs 152 s at position
         # ~700).  A 2-min periodic GC drains the queue continuously.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # the engine's codegen class cache size (static: set at build)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     yield s

@@ -1,7 +1,7 @@
 """Round-9 ADVICE regression tests: filtered_ann_recall's achievable-set
-denominator, the textstats persisted-count-table release pool, the
-query_clarity_score degenerate-corpus shape (one row, both engines), and
-the KMV kth-hash == 0 guard.
+denominator, the textstats persisted-frame release pool (MI count table,
+DSIR stream, curation corpus), the query_clarity_score degenerate-corpus
+shape (one row, both engines), and the KMV kth-hash == 0 guard.
 """
 
 import duckdb
@@ -12,8 +12,10 @@ from pyspark.sql import functions as F
 import rss_feed_etl_spark.functions.hashing as hashing
 from rss_feed_etl_spark.operators import textstats
 from rss_feed_etl_spark.operators.retrieval import query_clarity_score
+from rss_feed_etl_spark.operators.sampling import dsir_importance_weights
 from rss_feed_etl_spark.operators.similarity import filtered_ann_recall
 from rss_feed_etl_spark.operators.sketches import kmv_distinct_estimate
+from rss_feed_etl_spark.plans.curation_pipeline import curation_pipeline
 
 
 def _emb(label, *vals):
@@ -59,6 +61,52 @@ def test_textstats_release_persisted_pool(spark):
     assert textstats.release_persisted() == 0
     # the returned frame stays valid after release (lineage recompute)
     assert res.collect() == first
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_dsir_stream_joins_release_pool(spark):
+    textstats.release_persisted()
+    start = _persistent_rdd_ids(spark)
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=i, lang="en" if i % 2 else "xx", text=f"alpha beta gamma w{i % 5} delta")
+            for i in range(20)
+        ]
+    )
+    res = dsir_importance_weights(docs, target=F.col("lang") == "en")
+    first = sorted(res.collect())
+    # the hashed (id, tgt, b) stream is cached while the result is built ...
+    assert _persistent_rdd_ids(spark) - start
+    # ... and registered, so a release frees it
+    assert textstats.release_persisted() == 1
+    assert not _persistent_rdd_ids(spark) - start
+    assert sorted(res.collect()) == first
+
+
+def test_curation_corpus_joins_release_pool(spark):
+    textstats.release_persisted()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    words = ["river", "stone", "market", "garden", "window", "silver", "harbor", "letter"]
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=i, source=f"s{i % 2}",
+                text=" ".join(words[(i + j) % 8] + str(j % (3 + i)) for j in range(60)))
+            for i in range(12)
+        ]
+    )
+    emb = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[float((i * 7 + j) % 5) for j in range(64)]) for i in range(12)]
+    )
+    card = curation_pipeline(docs, emb, min_stopwords=0)
+    first = sorted(card.collect())
+    assert not cache.isEmpty()  # the (id, text, source) projection
+    assert textstats.release_persisted() >= 1
+    assert cache.isEmpty()
+    assert sorted(card.collect()) == first
 
 
 def test_query_clarity_degenerate_corpus_one_row_both_engines(spark):
