@@ -78,6 +78,10 @@ def _assign_scan_arrow(
 
     import pandas as pd
 
+    from ..session import ensure_executors_can_import
+
+    # ``scan`` reaches ``vecmath``: executors must import this package
+    ensure_executors_can_import(emb.sparkSession)
     items = sorted(centroids.items())
     cent_ids = np.asarray([c for c, _ in items], dtype=np.int64)
     cent_mat = np.asarray([v for _, v in items], dtype=np.float64)

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import ensure_executors_can_import
 from . import vecmath
 
 _PARTIAL_SCHEMA = (
@@ -71,6 +72,7 @@ def embedding_covariance(
     vector.  cov = E[xy] − E[x]E[y] is computed from the merged
     statistics, exactly associative across any partitioning.
     """
+    ensure_executors_can_import(emb.sparkSession)
     parts = emb.select(vec_col).mapInPandas(
         _gram_partials(vec_col, dim), _PARTIAL_SCHEMA
     )
@@ -92,6 +94,7 @@ def embedding_covariance(
 
 
 def _covariance_matrix(emb: DataFrame, vec_col: str, dim: int) -> np.ndarray:
+    ensure_executors_can_import(emb.sparkSession)
     rows = (
         emb.select(vec_col)
         .mapInPandas(_gram_partials(vec_col, dim), _PARTIAL_SCHEMA)
@@ -157,6 +160,7 @@ def pca_project(
                 }
             )
 
+    ensure_executors_can_import(emb.sparkSession)
     out = emb.select(id_col, vec_col).mapInPandas(
         project, f"id bigint, pc int, coord double"
     )

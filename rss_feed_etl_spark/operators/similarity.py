@@ -300,6 +300,9 @@ def _ivf_assign(
     the probe position (0-based rank of the cell in the row's probe
     order) via ``posexplode`` — the nprobe sweep keys on it.
     """
+    from ..session import ensure_executors_can_import
+
+    ensure_executors_can_import(df.sparkSession)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def cells(vecs: pd.Series) -> pd.Series:

@@ -128,6 +128,9 @@ def heavy_hitters_topk(
 
     import pandas as pd
 
+    from ..session import ensure_executors_can_import
+
+    ensure_executors_can_import(terms.sparkSession)
     col = term_col
 
     def local_heavy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1580,6 +1580,9 @@ def compression_ratio(
     """
     import pandas as pd  # noqa: F401  (worker-side import)
 
+    from ..session import ensure_executors_can_import
+
+    ensure_executors_can_import(df.sparkSession)
     out_schema = (
         f"{id_col} long, n_bytes long, z_bytes long, ratio double, "
         "flag_repetitive int, flag_incompressible int"

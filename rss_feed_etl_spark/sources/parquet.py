@@ -15,8 +15,14 @@ tables are Parquet directories:
 
 This module is the only one that knows the stored-table layout:
 ``read_table`` hides the ``ingest_date`` partition column from readers, and
-``write_partitioned_incremental`` is the rule that a new snapshot replaces
-only the dates its batch touched.
+a new snapshot replaces only the dates its batch touched.  Two sinks apply
+that rule and share its two halves (``_touched_dates``, then
+``_write_dates``: write, then delete the dates the merge emptied):
+
+- ``upsert_partitioned`` (the streaming SCD1 sink) reads and merges only
+  the touched partitions, so a micro-batch costs what it touches;
+- ``write_partitioned_incremental`` (the CLI) takes a merge its caller ran
+  over the whole history and writes only the touched dates of it.
 """
 
 from __future__ import annotations
@@ -72,70 +78,165 @@ def write_partitioned_incremental(
     key: str = "link",
     ts_col: str = "published",
 ) -> list:
-    """Incremental merge sink: rewrite ONLY the ingest dates the batch
-    touched, never the whole history (the fix for the reference's
-    clear-and-rewrite, data_loader.py:426-428).
+    """Incremental merge sink for a full merge: rewrite ONLY the ingest
+    dates the batch touched, never the whole history (the fix for the
+    reference's clear-and-rewrite, data_loader.py:426-428).
 
-    Touched dates = dates of the batch rows ∪ dates of the HISTORY versions
-    of keys present in the batch — the second term matters because an
-    update can move a row to a new date, and the stale version must vanish
-    from its old partition.  Dynamic overwrite replaces only the dates
-    ``merged`` still has rows on, so a history date that ``merged`` no
-    longer has rows on (its last row moved away) is deleted after the
-    write succeeds: a crash in between leaves the previous snapshot plus
-    rewritten dates, never a lost live row.  Every batch row reaches
-    ``merged`` with its date (true of each merge and delta here), so only
-    dates that come from history alone can have emptied; checking them is
-    one date-grain job over ``merged``, run only when there are any (an
-    update that moves a row off a date no batch row is on).  With an
-    empty history every date of ``merged`` is touched, so the first write
-    equals ``write_partitioned(merged)``.
-    The date lists are driver-sized (days, not rows); ``merged`` filtered
-    to the touched dates goes to ``write_partitioned``, so untouched
-    partition directories are not rewritten.  A null date (a row with no
-    ``ts_col``) is touched like any other and keeps the default partition.
+    ``merged`` is the merge of ``batch`` into the whole ``history``;
+    filtered to the touched dates (``_touched_dates``) it goes to
+    ``_write_dates``.  With an empty history every date of ``merged`` is
+    touched, so the first write equals ``write_partitioned(merged)``.
     Returns the touched dates, sorted, with ``None`` last when the null
     date is among them.
     """
-    day = F.to_date(F.col(ts_col))
-    batch_keys = batch.select(key).distinct()
-    touched = (
-        batch.select(day.alias("d"), F.lit(False).alias("old"))
-        .unionByName(
-            history.join(batch_keys, key, "left_semi").select(
-                day.alias("d"), F.lit(True).alias("old")
-            )
-        )
-        .groupBy("d")
-        .agg(F.min("old").alias("old"))
-        .collect()
-    )
-    found = {r["d"] for r in touched}
-    dates = sorted(d for d in found if d is not None)
-    if not found:  # empty batch → nothing to rewrite
+    dates, emptiable = _touched_dates(batch, history, key=key, ts_col=ts_col)
+    if not dates:  # empty batch → nothing to rewrite
         return dates
-    keep = day.isin(dates)
-    if None in found:
+    day = F.to_date(F.col(ts_col))
+    keep = day.isin([d for d in dates if d is not None])
+    if dates[-1] is None:
         keep = keep | day.isNull()
-        dates.append(None)
-    old = {r["d"] for r in touched if r["old"]}
-    if old:  # computed before the write: ``merged`` may read ``path``
-        old -= {r["d"] for r in merged.filter(keep).select(day.alias("d")).distinct().collect()}
-    write_partitioned(merged.filter(keep), path, ts_col=ts_col)
-    if old:
-        _delete_partitions(merged.sparkSession, path, old)
+    _write_dates(merged.filter(keep), path, emptiable, ts_col)
     return dates
 
 
+def upsert_partitioned(
+    batch: DataFrame,
+    path: str,
+    schema: T.StructType,
+    merge,
+    key: str = "link",
+    ts_col: str = "published",
+) -> list:
+    """Merge ``batch`` into the stored table at ``path`` reading and
+    rewriting ONLY the ingest dates the batch touches: the per-batch cost
+    tracks the batch, not the history.
+
+    ``merge(batch, history)`` is an upsert on ``key`` (``merge_scd1``):
+    history rows whose key the batch lacks pass through unchanged, a
+    matched key takes the batch row's ``ts_col``, and a batch key that
+    history lacks is appended.  ``batch`` holds each key once and is
+    evaluated several times, so pass it materialized (checkpointed).
+
+    1. ``_touched_dates``: the batch's own dates plus the dates of every
+       history row whose key is in the batch (a column-pruned ``(key,
+       ts_col)`` scan semi-joined to the broadcast batch keys) — one
+       collect, no shuffle.  An empty batch touches nothing: return.
+    2. Read only those ``ingest_date`` partition directories.
+    3. ``merge`` the batch into that slice and hand it to ``_write_dates``
+       unmaterialized: the write job reads the slice while it writes, which
+       is safe because dynamic partition overwrite stages its files and
+       replaces a date's directory only when the job commits, after every
+       task has read its input (a checkpoint of the merge would cost one
+       more job and a copy of the slice).
+
+    Why merge(slice) equals the full merge restricted to the touched
+    dates: every history row of a batch key lies on a touched date (that
+    is how the dates were found), so the slice holds every history version
+    a batch row can match, and a batch key missing from the slice is
+    missing from the whole history — the same rows are updated and the
+    same rows appended.  Rows of other keys pass through, so on a touched
+    date the slice contributes exactly what history has there.  Every
+    merged row of a batch key carries the batch row's date, which is
+    touched; on untouched dates the full merge is history unchanged.
+    Writing merge(slice) over the touched dates and deleting those it
+    left empty therefore leaves the table equal to the full merge.
+    Returns the touched dates as ``write_partitioned_incremental`` does.
+    """
+    spark = batch.sparkSession
+    dates, emptiable = _touched_dates(
+        batch, read_table(spark, path, schema), key=key, ts_col=ts_col
+    )
+    if not dates:
+        return dates
+    merged = merge(batch, _read_dates(spark, path, schema, dates))
+    _write_dates(merged, path, emptiable, ts_col)
+    return dates
+
+
+def _touched_dates(
+    batch: DataFrame, history: DataFrame, key: str = "link", ts_col: str = "published"
+) -> tuple[list, set]:
+    """The ingest dates a merge of ``batch`` into ``history`` can change.
+
+    Touched dates = dates of the batch rows ∪ dates of the HISTORY rows of
+    keys present in the batch — the second term matters because an
+    update can move a row to a new date, and the stale version must vanish
+    from its old partition.  One collect of a (date, from-history) row per
+    batch row and per matched history row: the history side is a
+    column-pruned ``(key, ts_col)`` scan semi-joined to the broadcast batch
+    keys, so nothing shuffles (the rows are batch-sized).  A null date (a
+    row with no ``ts_col``) is touched like any other and maps to the
+    default partition.
+
+    Returns ``(dates, emptiable)``: the touched dates sorted with ``None``
+    last, and the dates found only in history — the only ones a merge can
+    leave empty, because every batch row reaches the merge with its date.
+    """
+    day = F.to_date(F.col(ts_col))
+    rows = (
+        batch.select(day.alias("d"), F.lit(False).alias("old"))
+        .unionByName(
+            history.select(key, ts_col)
+            .join(F.broadcast(batch.select(key)), key, "left_semi")
+            .select(day.alias("d"), F.lit(True).alias("old"))
+        )
+        .collect()
+    )
+    found = {r["d"] for r in rows}
+    dates = sorted(d for d in found if d is not None)
+    if None in found:
+        dates.append(None)
+    return dates, found - {r["d"] for r in rows if not r["old"]}
+
+
+def _read_dates(spark: SparkSession, path: str, schema: T.StructType, dates: list) -> DataFrame:
+    """The stored rows on ``dates`` (None = the default partition) without
+    the partition column.  Only those partition directories are listed and
+    scanned — no other date is opened, and no filter (nor its date
+    literals) enters the plan; a touched date the table does not have yet
+    (a batch's new date) has no directory and reads as nothing."""
+    fs, dirs = _partition_dirs(spark, path, dates)
+    found = [str(d) for d in dirs if fs.exists(d)]
+    if not found:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(schema).option("basePath", path).parquet(*found).drop("ingest_date")
+    )
+
+
+def _write_dates(merged: DataFrame, path: str, emptiable: set, ts_col: str) -> None:
+    """Write ``merged`` — the complete new contents of the touched dates —
+    over its dates (dynamic partition overwrite leaves every other date's
+    directory alone), then delete each ``emptiable`` date it has no rows
+    on (its last row moved to another date).  The deletes run after the
+    write succeeds: a crash in between leaves the previous snapshot plus
+    rewritten dates, never a lost live row.  Checking the emptiable dates
+    is one date-grain job over ``merged``, run only when there are any,
+    and before the write, because ``merged`` may read ``path``."""
+    if emptiable:
+        day = F.to_date(F.col(ts_col)).alias("d")
+        emptiable = emptiable - {r["d"] for r in merged.select(day).distinct().collect()}
+    write_partitioned(merged, path, ts_col=ts_col)
+    if emptiable:
+        _delete_partitions(merged.sparkSession, path, emptiable)
+
+
 def _delete_partitions(spark: SparkSession, path: str, dates) -> None:
-    """Remove the ``ingest_date`` partition directories of ``dates`` (None =
-    the default partition) through the table's Hadoop filesystem."""
+    """Remove the ``ingest_date`` partition directories of ``dates``."""
+    fs, dirs = _partition_dirs(spark, path, dates)
+    for d in dirs:
+        fs.delete(d, True)
+
+
+def _partition_dirs(spark: SparkSession, path: str, dates) -> tuple:
+    """The table's Hadoop filesystem and the ``ingest_date`` directory
+    path of each of ``dates`` (None = the default partition)."""
     fs_path = spark._jvm.org.apache.hadoop.fs.Path
     root = fs_path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    for d in dates:
-        name = "__HIVE_DEFAULT_PARTITION__" if d is None else d.isoformat()
-        fs.delete(fs_path(root, f"ingest_date={name}"), True)
+    names = ("__HIVE_DEFAULT_PARTITION__" if d is None else d.isoformat() for d in dates)
+    return fs, [fs_path(root, f"ingest_date={n}") for n in names]
 
 
 def compact_partitions(

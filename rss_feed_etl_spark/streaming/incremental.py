@@ -11,9 +11,9 @@ whole pipeline with lookback windows, made idempotent by the SCD1 upsert
 - state lives in the SINK table, exactly like the reference's
   table-resident history: each micro-batch runs the same idempotent SCD1
   merge — no ``mapGroupsWithState``, because the merge target IS the state
-  (SURVEY §7.3).  The partitioned SCD1 sink writes through
-  ``sources.parquet.write_partitioned_incremental``, so a micro-batch
-  rewrites only the ingest dates it touched;
+  (SURVEY §7.3).  The partitioned SCD1 sink merges through
+  ``sources.parquet.upsert_partitioned``, so a micro-batch reads, merges
+  and rewrites only the ingest dates it touches, never the whole history;
 - epoch sinks (enrichment, curation): each micro-batch lands in its own
   ``__epoch=N`` partition (``_write_epoch``), compaction folds old epochs
   into the base partition ``__epoch=-1``, and readers see the live rows
@@ -24,17 +24,15 @@ whole pipeline with lookback windows, made idempotent by the SCD1 upsert
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import dedup_by_key
 from ..operators.merges import merge_scd1
-from ..sources.parquet import (
-    read_table,
-    write_overwrite,
-    write_partitioned_incremental,
-)
+from ..sources.parquet import read_table, upsert_partitioned, write_overwrite
 
 
 def _start(stream: DataFrame, batch_fn, checkpoint_dir: str, trigger: dict | None = None):
@@ -67,34 +65,38 @@ def incremental_scd1(
 ):
     """foreachBatch SCD1 merge: state = the target table.
 
-    Each micro-batch is deduped keep-last (A2) then merged (M1) into the
-    current target snapshot; re-delivered rows are idempotent by key.
+    Each micro-batch is deduped keep-last (A2) and checkpointed once — the
+    stream's files are read and shuffled once, not by every action — then
+    merged (M1) into the target; re-delivered rows are idempotent by key.
     ``partitioned=True`` is the scale sink: the target is stored
-    partitioned by ingest date and each micro-batch rewrites ONLY the
-    dates it touched (write_partitioned_incremental) — per-batch write
-    cost tracks the batch, not the history.  ``available_now=False``
-    triggers every 15 seconds instead of stopping once caught up.
-    Returns the started StreamingQuery.
+    partitioned by ingest date, and ``upsert_partitioned`` finds the dates
+    the batch touches, reads only those partitions, merges the batch into
+    that slice and rewrites only those dates — per-batch cost tracks the
+    batch, not the history, with the same result as merging into the
+    whole table.  An empty micro-batch touches no date and writes nothing.
+    The unpartitioned sink merges into and rewrites the whole table.
+    ``available_now=False`` triggers every 15 seconds instead of stopping
+    once caught up.  Returns the started StreamingQuery.
     """
     spark = stream.sparkSession
     schema = stream.schema
     order_cols = order_cols or ["published"]
 
+    merge = functools.partial(merge_scd1, key=key)
+
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
+        deduped = dedup_by_key(batch_df, key, order_cols, keep="last").localCheckpoint(
+            eager=True
+        )
+        if partitioned:
+            upsert_partitioned(deduped, target_path, schema, merge, key=key, ts_col=ts_col)
             return
-        deduped = dedup_by_key(batch_df, key, order_cols, keep="last")
-        history = read_table(spark, target_path, schema)
-        merged = merge_scd1(deduped, history, key=key)
+        if deduped.isEmpty():
+            return
         # materialize fully before the overwrite below (reading the target
         # while rewriting it would race); merge output is one snapshot
-        merged_cached = merged.localCheckpoint(eager=True)
-        if partitioned:
-            write_partitioned_incremental(
-                merged_cached, deduped, history, target_path, key=key, ts_col=ts_col
-            )
-        else:
-            write_overwrite(merged_cached, target_path)
+        merged = merge(deduped, read_table(spark, target_path, schema))
+        write_overwrite(merged.localCheckpoint(eager=True), target_path)
 
     trigger = None if available_now else {"processingTime": "15 seconds"}
     return _start(stream, merge_batch, checkpoint_dir, trigger)
