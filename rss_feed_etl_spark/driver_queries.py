@@ -67,13 +67,13 @@ def _kw_keep_sql() -> str:
     return " AND ".join(parts)
 
 
-def _filtered_sql(as_of: str, days_back: int = td.DAYS_BACK) -> str:
+def _filtered_sql(as_of: str) -> str:
     """The §3.2 filter stages (P4+P5+P6+P8) over the stage CTE."""
     return f"""
     SELECT {", ".join(STAGE_COLS)}, event_id,
            TIMESTAMP '{as_of}' AS "AS_OF_DT"
     FROM stage
-    WHERE published >= TIMESTAMP '{as_of}' - INTERVAL {days_back} DAY
+    WHERE published >= TIMESTAMP '{as_of}' - INTERVAL {td.DAYS_BACK} DAY
       AND {_nb("summary")}
       AND {_kw_keep_sql()}
     """

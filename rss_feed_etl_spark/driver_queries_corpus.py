@@ -66,7 +66,6 @@ def _stage_waves(
     docs: DataFrame,
     work: str,
     n_waves: int,
-    id_col: str = "doc_id",
 ) -> tuple[str, DataFrame]:
     """Stage a corpus into one landing file per arrival wave
     (wave ``k`` = ``id % n_waves``) for the incremental-fold queries, in a
@@ -90,7 +89,7 @@ def _stage_waves(
     staged = os.path.join(work, "staged")
     os.makedirs(landing, exist_ok=True)
     (
-        docs.withColumn("__wave", (F.col(id_col) % n_waves).cast("int"))
+        docs.withColumn("__wave", (F.col("doc_id") % n_waves).cast("int"))
         .repartition(n_waves * 8, "__wave")
         .write.mode("overwrite")
         .partitionBy("__wave")

@@ -47,23 +47,23 @@ def _dist(e: str, c: str, w: int) -> str:
     )
 
 
-def _pq_sub(s: int, corpus: str = "emb", samp: str = "samp", seeds: str = "seeds") -> str:
+def _pq_sub(s: int, corpus: str = "emb") -> str:
     """CTEs for one subspace: slice, seed, one Lloyd step, encode, ADC.
 
     Training CTEs (``tsub/c0/s1/a1/u1/c1``) read the bounded md5-rank
     sample ``samp`` — VERDICT r6 #1: the engine trains codebooks on at
     most ``n_train`` vectors, seeded by the ``k_codes`` smallest ids IN
     the sample.  Encoding (``enc``) and the ADC query slice still read
-    the scoring corpus, exactly like the engine's scoring scan.  The CTE
-    names are parameterized so wave 108's IVF-PQ oracle reuses this
+    the scoring corpus, exactly like the engine's scoring scan.  The corpus
+    CTE name is a parameter so wave 108's IVF-PQ oracle reuses this
     builder verbatim with the probed-cell corpus."""
     lo, hi, w = s * _PQ_W + 1, (s + 1) * _PQ_W, _PQ_W
     assert _PQ_ITERS == 1, "oracle CTEs are unrolled for iters = 1"
     return f"""
 sub{s} AS (SELECT vec_id, vec[{lo}:{hi}] AS sv FROM {corpus}),
-tsub{s} AS (SELECT vec_id, vec[{lo}:{hi}] AS sv FROM {samp}),
+tsub{s} AS (SELECT vec_id, vec[{lo}:{hi}] AS sv FROM samp),
 c0_{s} AS (SELECT vec_id AS cid, list_transform(sv, x -> round(x, 6)) AS cvec
-           FROM tsub{s} WHERE vec_id IN (SELECT vec_id FROM {seeds})),
+           FROM tsub{s} WHERE vec_id IN (SELECT vec_id FROM seeds)),
 s1_{s} AS (SELECT e.vec_id, e.sv, c.cid, {_dist("e.sv", "c.cvec", w)} AS dist
            FROM tsub{s} e CROSS JOIN c0_{s} c),
 a1_{s} AS (SELECT vec_id, sv, cid FROM (

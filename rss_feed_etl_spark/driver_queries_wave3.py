@@ -416,12 +416,12 @@ def _proj_sql(h: int) -> str:
     )
 
 
-def _ann_band_sig_sql(b: int, rows: int = 8) -> str:
-    # per-band signature: bit r ← hyperplane h = b*rows + r (mirrors
-    # similarity.banded_signatures band b of `rows` bits)
+def _ann_band_sig_sql(b: int) -> str:
+    # per-band signature: bit r ← hyperplane h = b*8 + r (mirrors
+    # similarity.banded_signatures band b of 8 bits)
     return " + ".join(
-        f"(CASE WHEN {_proj_sql(b * rows + r)} > 0 THEN CAST({2**r} AS BIGINT) ELSE 0 END)"
-        for r in range(rows)
+        f"(CASE WHEN {_proj_sql(b * 8 + r)} > 0 THEN CAST({2**r} AS BIGINT) ELSE 0 END)"
+        for r in range(8)
     )
 
 

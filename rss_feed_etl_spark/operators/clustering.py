@@ -125,9 +125,6 @@ def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> dict[int, list[float]]:
     """Train ``iters`` Lloyd iterations from a deterministic seed (the ``k``
     smallest-id vectors) and return the final centroids keyed by seed id —
@@ -137,7 +134,7 @@ def kmeans_centroids(
     Empty clusters drop out of the update (standard Lloyd).
     """
     return _kmeans_centroids_prepped(
-        _prep(embeddings, id_col, vec_col), k, iters, decimals
+        _prep(embeddings, "vec_id", "embedding"), k, iters, 6
     )
 
 
@@ -189,9 +186,6 @@ def kmeans_lloyd(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> DataFrame:
     """Run ``iters`` Lloyd iterations from a deterministic seed (the ``k``
     smallest-id vectors) and return per-cluster stats of the final
@@ -200,24 +194,21 @@ def kmeans_lloyd(
     Rounding the mean distance keeps the output hash-stable across
     summation orders.
     """
-    emb = _prep(embeddings, id_col, vec_col)
-    centroids = _kmeans_centroids_prepped(emb, k, iters, decimals)
+    emb = _prep(embeddings, "vec_id", "embedding")
+    centroids = _kmeans_centroids_prepped(emb, k, iters, 6)
     final = _assign_scan_arrow(emb, centroids, "cid_dist")
     return (
         final.select(F.col("cid").cast("int").alias("cluster_id"), F.col("dist"))
         .groupBy("cluster_id")
         .agg(
             F.count("*").alias("n_members"),
-            F.round(F.avg("dist"), decimals).alias("mean_sqdist"),
+            F.round(F.avg("dist"), 6).alias("mean_sqdist"),
         )
     )
 
 
 def cohens_kappa(
     confusion: DataFrame,
-    true_col: str = "true_label",
-    pred_col: str = "predicted_label",
-    n_col: str = "n",
 ) -> DataFrame:
     """Cohen's kappa from a confusion-count table: chance-corrected
     agreement κ = (p_o − p_e)/(1 − p_e), with p_o the observed agreement
@@ -229,15 +220,15 @@ def cohens_kappa(
     label²-sized: totals and the marginal product are broadcast 1-row
     frames, never a data-scale shuffle.
     """
-    n = F.col(n_col)
+    n = F.col("n")
     tot = confusion.agg(
         F.sum(n).alias("N"),
-        F.sum(F.when(F.col(true_col) == F.col(pred_col), n).otherwise(0)).alias(
+        F.sum(F.when(F.col("true_label") == F.col("predicted_label"), n).otherwise(0)).alias(
             "agree"
         ),
     )
-    rows = confusion.groupBy(F.col(true_col).alias("lbl")).agg(F.sum(n).alias("rn"))
-    cols = confusion.groupBy(F.col(pred_col).alias("lbl")).agg(F.sum(n).alias("cn"))
+    rows = confusion.groupBy(F.col("true_label").alias("lbl")).agg(F.sum(n).alias("rn"))
+    cols = confusion.groupBy(F.col("predicted_label").alias("lbl")).agg(F.sum(n).alias("cn"))
     marg = rows.join(cols, "lbl").agg(F.sum(F.col("rn") * F.col("cn")).alias("s"))
     po = F.col("agree") / F.col("N")
     pe = F.col("s") / (F.col("N") * F.col("N"))
@@ -254,13 +245,9 @@ def cohens_kappa(
 
 def grid_density_clusters(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     in_dim: int = 64,
     cell_width: float = 0.5,
     min_pts: int = 5,
-    max_iters: int = 30,
-    decimals: int = 6,
 ) -> DataFrame:
     """Grid-based density clustering (the scalable DBSCAN shape): project
     embeddings to 2D with the deterministic JL ±1 matrix, bucket into
@@ -285,11 +272,11 @@ def grid_density_clusters(
 
     def proj(j: int):
         return F.round(
-            vecmath.dot(f"`{vec_col}`", signs[j]) / F.lit(scale), decimals
+            vecmath.dot("`embedding`", signs[j]) / F.lit(scale), 6
         )
 
     pts = emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.floor(proj(0) / F.lit(cell_width)).cast("bigint").alias("cx"),
         F.floor(proj(1) / F.lit(cell_width)).cast("bigint").alias("cy"),
     )
@@ -320,7 +307,7 @@ def grid_density_clusters(
         F.least("cell", "ncell").alias("id_a"),
         F.greatest("cell", "ncell").alias("id_b"),
     )
-    comp = neardup_components(pairs, max_iters=max_iters)
+    comp = neardup_components(pairs, max_iters=30)
     cell_cluster = (
         dense.join(
             comp.withColumnRenamed("id", "cell"), "cell", "left"
@@ -332,16 +319,13 @@ def grid_density_clusters(
     )
     return (
         pts.join(F.broadcast(cell_cluster), "cell")
-        .select(id_col, "cx", "cy", "cluster_id")
+        .select("vec_id", "cx", "cy", "cluster_id")
     )
 
 
 def kcenter_diversity_sample(
     embeddings: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> DataFrame:
     """Greedy k-center (farthest-point) selection: start from the
     smallest-id vector, then repeatedly pick the point FARTHEST from the
@@ -358,7 +342,7 @@ def kcenter_diversity_sample(
     expression (centers are model-sized driver state, exactly like the
     k-means assignment), and the per-step argmax is a distributed
     TakeOrdered(1).  State localCheckpoints each step so lineage stays
-    linear in ``k`` (the Pregel guard).  Distances round to ``decimals``
+    linear in ``k`` (the Pregel guard).  Distances round to 6 decimals
     before every compare, so the greedy trajectory replays exactly in the
     oracle; ties break to the smallest id.
     """
@@ -371,8 +355,8 @@ def kcenter_diversity_sample(
             "center; use k-means / recursive partitioning for larger k)"
         )
     spark = embeddings.sparkSession
-    out_schema = f"rank int, {id_col} long, min_dist double"
-    emb = _prep(embeddings, id_col, vec_col)
+    out_schema = "rank int, vec_id long, min_dist double"
+    emb = _prep(embeddings, "vec_id", "embedding")
     seeds = emb.orderBy("id").limit(1).collect()
     if not seeds:  # empty input → empty sample, not an opaque IndexError
         return spark.createDataFrame([], out_schema)
@@ -382,7 +366,7 @@ def kcenter_diversity_sample(
     state = emb.filter(F.col("id") != seed["id"]).select(
         "id",
         "vec",
-        F.round(vecmath.sqdist("vec", centers[0][1]), decimals).alias("md"),
+        F.round(vecmath.sqdist("vec", centers[0][1]), 6).alias("md"),
     ).localCheckpoint(eager=True)
 
     for _ in range(1, k):
@@ -398,7 +382,7 @@ def kcenter_diversity_sample(
                 "vec",
                 F.least(
                     F.col("md"),
-                    F.round(vecmath.sqdist("vec", list(row["vec"])), decimals),
+                    F.round(vecmath.sqdist("vec", list(row["vec"])), 6),
                 ).alias("md"),
             )
             .localCheckpoint(eager=True)
@@ -414,9 +398,6 @@ def silhouette_by_cluster(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-cluster SIMPLIFIED silhouette (Hruschka et al.) for a Lloyd
     clustering: for every point, a = distance to its own centroid, b =
@@ -438,8 +419,8 @@ def silhouette_by_cluster(
     Per-point scores round to 9 dp and sum as DECIMAL so cross-engine
     fold order cannot move the means.
     """
-    emb = _prep(embeddings, id_col, vec_col)
-    centroids = _kmeans_centroids_prepped(emb, k, iters, decimals)
+    emb = _prep(embeddings, "vec_id", "embedding")
+    centroids = _kmeans_centroids_prepped(emb, k, iters, 6)
     # Arrow scan for (nearest, second-nearest) squared distances — the
     # vectorized form of array_sort over k (dist, cid) structs; sqrt and
     # every rounding stay in the engine exactly as before.
@@ -463,11 +444,11 @@ def silhouette_by_cluster(
         F.round(
             F.sum(F.col("a").cast("decimal(30,10)")).cast("double")
             / F.count("*"),
-            decimals,
+            6,
         ).alias("mean_a"),
         F.round(
             F.sum(F.col("s").cast("decimal(30,10)")).cast("double")
             / F.count("*"),
-            decimals,
+            6,
         ).alias("mean_silhouette"),
     )

@@ -719,7 +719,6 @@ def discount_opportunity(
 
 def discount_elasticity(
     lineitem: DataFrame,
-    decimals: int = 6,
 ) -> DataFrame:
     """Cross-sectional OLS of order quantity on discount level — "does a
     deeper discount move more units?" — with slope, intercept, and R²
@@ -761,16 +760,15 @@ def discount_elasticity(
     r2 = (num / denx) * (num / deny)
     return agg.select(
         F.col("n").cast("bigint").alias("n"),
-        F.round(slope, decimals).alias("slope_per_pct"),
-        F.round(intercept, decimals).alias("intercept"),
-        F.round(r2, decimals).alias("r2"),
+        F.round(slope, 6).alias("slope_per_pct"),
+        F.round(intercept, 6).alias("intercept"),
+        F.round(r2, 6).alias("r2"),
     )
 
 
 def revenue_bridge(
     lineitem: DataFrame,
     part: DataFrame,
-    decimals: int = 2,
 ) -> DataFrame:
     """Price-volume revenue bridge per brand between the corpus's two
     ship-date halves: ΔRevenue decomposes exactly into
@@ -833,20 +831,20 @@ def revenue_bridge(
     p2 = F.col("r2").cast("double") / F.col("q2").cast("double")
     return piv.filter((F.col("q1") > 0) & (F.col("q2") > 0)).select(
         "brand",
-        F.round(F.col("r1").cast("double") / F.lit(100.0), decimals).alias(
+        F.round(F.col("r1").cast("double") / F.lit(100.0), 2).alias(
             "rev_old"
         ),
-        F.round(F.col("r2").cast("double") / F.lit(100.0), decimals).alias(
+        F.round(F.col("r2").cast("double") / F.lit(100.0), 2).alias(
             "rev_new"
         ),
         F.round(
             (F.col("q2") - F.col("q1")).cast("double") * p1 / F.lit(100.0),
-            decimals,
+            2,
         ).alias("volume_effect"),
         F.round(
-            F.col("q2").cast("double") * (p2 - p1) / F.lit(100.0), decimals
+            F.col("q2").cast("double") * (p2 - p1) / F.lit(100.0), 2
         ).alias("price_effect"),
         F.round(
-            (F.col("r2") - F.col("r1")).cast("double") / F.lit(100.0), decimals
+            (F.col("r2") - F.col("r1")).cast("double") / F.lit(100.0), 2
         ).alias("delta"),
     )

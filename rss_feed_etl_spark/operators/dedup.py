@@ -347,7 +347,6 @@ def incremental_minhash_pairs(
     batch: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Near-dup pairs between an incoming BATCH and the existing CORPUS —
@@ -362,10 +361,10 @@ def incremental_minhash_pairs(
     history cost is O(corpus) scan, not O(corpus²) pairing.  Returns
     (batch_id, corpus_id, est_jaccard).
     """
-    c = banded_minhash(corpus, id_col, text_col, n).select(
+    c = banded_minhash(corpus, id_col, text_col).select(
         F.col("id").alias("corpus_id"), F.col("sig").alias("sig_c"), "bucket"
     )
-    b = banded_minhash(batch, id_col, text_col, n).select(
+    b = banded_minhash(batch, id_col, text_col).select(
         F.col("id").alias("batch_id"), F.col("sig").alias("sig_b"), "bucket"
     )
     return (
@@ -435,9 +434,7 @@ def minhash_lsh_pairs(
     )
 
 
-def neardup_drop_list(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
+def neardup_drop_list(pairs: DataFrame) -> DataFrame:
     """Turn near-dup pairs (``id_a < id_b``) into the pipeline's decision:
     which documents to DROP, and which survivor each one maps to.
 
@@ -449,8 +446,8 @@ def neardup_drop_list(
     ints per pair, nothing document-sized.
     """
     return (
-        pairs.groupBy(F.col(id_b).alias("id"))
-        .agg(F.min(id_a).alias("canonical_id"))
+        pairs.groupBy(F.col("id_b").alias("id"))
+        .agg(F.min("id_a").alias("canonical_id"))
     )
 
 
@@ -584,13 +581,12 @@ def simhash_neardup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 32,
     max_hamming: int = 3,
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
-    The classic Manku/Jain/Das Sarma trick: split the ``bits``-bit
+    The classic Manku/Jain/Das Sarma trick: split the 32-bit
     fingerprint into ``max_hamming + 1`` bands — two fingerprints within
     Hamming distance k MUST agree exactly on at least one band (pigeonhole),
     so candidates meet in (band, band_value) buckets and the only exchange
@@ -602,9 +598,9 @@ def simhash_neardup_pairs(
     (id_a, id_b, hamming).
     """
     n_bands = max_hamming + 1
-    band_bits = bits // n_bands
+    band_bits = 32 // n_bands
     mask = (1 << band_bits) - 1
-    fps = simhash(df, id_col, text_col, bits)
+    fps = simhash(df, id_col, text_col)
     bands = fps.select(
         F.col(id_col).alias("id"),
         F.col("simhash"),
@@ -650,8 +646,6 @@ def simhash_neardup_pairs(
 def incremental_dedup_exact(
     corpus: DataFrame,
     batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact dedup of an arriving BATCH against the existing CORPUS —
     the streaming-ingest complement of ``dedup_exact`` (as
@@ -664,17 +658,17 @@ def incremental_dedup_exact(
     aggregate over history and an anti-join whose key is the digest —
     history text never moves, and re-delivered batches are idempotent.
     """
-    fp = F.md5(norm_text(text_col)).alias("__fp")
+    fp = F.md5(norm_text("text")).alias("__fp")
     batch_best = (
-        batch.select(F.col(id_col), fp, F.col(text_col))
+        batch.select(F.col("doc_id"), fp, F.col("text"))
         .groupBy("__fp")
         .agg(
-            F.min(id_col).alias(id_col),
-            F.min_by(text_col, id_col).alias(text_col),
+            F.min("doc_id").alias("doc_id"),
+            F.min_by("text", "doc_id").alias("text"),
         )
     )
     corpus_fps = corpus.select(fp).distinct()
-    return batch_best.join(corpus_fps, "__fp", "left_anti").select(id_col, text_col)
+    return batch_best.join(corpus_fps, "__fp", "left_anti").select("doc_id", "text")
 
 
 def canonical_per_component(
@@ -712,7 +706,6 @@ def drop_rate_by_key(
     docs: DataFrame,
     drops: DataFrame,
     key_col: str,
-    id_col: str = "id",
 ) -> DataFrame:
     """Dedup observability: per ``key_col`` (source, language, shard…),
     how many documents the near-dup drop list removes and the drop rate —
@@ -723,8 +716,8 @@ def drop_rate_by_key(
     broadcast left join; one group aggregate follows.
     """
     flagged = docs.join(
-        F.broadcast(drops.select(F.col(id_col), F.lit(1).alias("dropped"))),
-        id_col,
+        F.broadcast(drops.select(F.col("id"), F.lit(1).alias("dropped"))),
+        "id",
         "left",
     )
     return flagged.groupBy(key_col).agg(
@@ -741,8 +734,6 @@ def blocking_quality(
     truth: DataFrame,
     n_records: int | None = None,
     records: DataFrame | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Record-linkage blocking evaluation (Christen, "Data Matching"):
     given the candidate pairs a blocking scheme (LSH bands, sorted
@@ -760,9 +751,9 @@ def blocking_quality(
     constant, or a ``records`` frame — counted INSIDE the plan as a
     broadcast 1-row aggregate, never an eager driver count.
     """
-    cand = candidates.select(id_a, id_b)
-    tr = truth.select(id_a, id_b)
-    found = tr.join(cand, [id_a, id_b], "left_semi")
+    cand = candidates.select("id_a", "id_b")
+    tr = truth.select("id_a", "id_b")
+    found = tr.join(cand, ["id_a", "id_b"], "left_semi")
     stats = (
         tr.agg(F.count("*").alias("n_truth"))
         .crossJoin(F.broadcast(found.agg(F.count("*").alias("n_found"))))
@@ -902,8 +893,6 @@ def prefix_clone_pairs(
 
 def bow_fingerprint_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Order-insensitive exact dedup: fingerprint = md5 of the SORTED
     lowercase token multiset, keep the smallest id per fingerprint.
@@ -918,17 +907,17 @@ def bow_fingerprint_dedup(
     the single surviving text per digest per map partition.
     """
     fp = F.md5(
-        F.array_join(F.sort_array(tokens(F.lower(F.col(text_col)))), " ")
+        F.array_join(F.sort_array(tokens(F.lower(F.col("text")))), " ")
     )
     return (
-        df.select(F.col(id_col), fp.alias("__fp"), F.col(text_col))
+        df.select(F.col("doc_id"), fp.alias("__fp"), F.col("text"))
         .groupBy("__fp")
         .agg(
-            F.min(id_col).alias(id_col),
-            F.min_by(text_col, id_col).alias(text_col),
+            F.min("doc_id").alias("doc_id"),
+            F.min_by("text", "doc_id").alias("text"),
             F.count("*").cast("bigint").alias("n_dups"),
         )
-        .select(id_col, text_col, "n_dups")
+        .select("doc_id", "text", "n_dups")
     )
 
 
@@ -1026,14 +1015,10 @@ def ngram_containment_pairs(
 
 def lsh_sensitivity_curve(
     spark,
-    n_minhash: int = N_MINHASH,
-    n_bands: int = LSH_BANDS,
-    step: float = 0.05,
-    decimals: int = 6,
 ):
     """The analytic S-curve of the configured MinHash-LSH scheme:
-    P(candidate | jaccard = s) = 1 − (1 − s^r)^b with r = n_minhash /
-    n_bands rows per band — the operating-point table that says, for the
+    P(candidate | jaccard = s) = 1 − (1 − s^r)^b with r = N_MINHASH /
+    LSH_BANDS rows per band — the operating-point table that says, for the
     banding this engine actually runs (32 hashes, 8×4 default), which
     similarity levels are reliably caught and which slip through.  The
     companion MEASURED number is ``dedup_pair_recall``; this is the
@@ -1045,30 +1030,26 @@ def lsh_sensitivity_curve(
 
     Output: ``(s, p_band, p_detect)`` per similarity grid point.
     """
-    r = n_minhash // n_bands
-    s = F.round(F.col("id").cast("double") * F.lit(step), 2)
-    grid = spark.range(1, int(round(1.0 / step))).select(s.alias("s"))
+    r = N_MINHASH // LSH_BANDS
+    s = F.round(F.col("id").cast("double") * F.lit(0.05), 2)
+    grid = spark.range(1, 20).select(s.alias("s"))
     p_band = F.col("s")
     for _ in range(r - 1):
         p_band = p_band * F.col("s")
     miss = F.lit(1.0) - p_band
     p_miss_all = miss
-    for _ in range(n_bands - 1):
+    for _ in range(LSH_BANDS - 1):
         p_miss_all = p_miss_all * miss
     return grid.select(
         "s",
-        F.round(p_band, decimals).alias("p_band"),
-        F.round(F.lit(1.0) - p_miss_all, decimals).alias("p_detect"),
+        F.round(p_band, 6).alias("p_band"),
+        F.round(F.lit(1.0) - p_miss_all, 6).alias("p_detect"),
     )
 
 
 def source_jaccard_matrix(
     df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
     n: int = 3,
-    n_perms: int = N_MINHASH,
-    decimals: int = 6,
 ) -> DataFrame:
     """Source-level content similarity via MERGEABLE MinHash: a source's
     signature component i is min over ALL its docs' shingle codes of
@@ -1090,17 +1071,17 @@ def source_jaccard_matrix(
     Output: ``(source_a, source_b, n_perms, est_jaccard)`` for a < b.
 
     Plan / 100 TB: one explode to (source, shingle-code) grain whose
-    groupBy computes all ``n_perms`` mins with map-side partials; the
+    groupBy computes all ``N_MINHASH`` mins with map-side partials; the
     signature self-join runs at source×perm grain (dimension-sized).
     """
     from ..functions.hashing import BASE, token_code
 
     coeffs = [
         ((2 * i + 1) * 2654435761 % MOD, (i * i + i + 41) % MOD)
-        for i in range(n_perms)
+        for i in range(N_MINHASH)
     ]
-    toks = tokens(F.col(text_col))
-    staged = df.select(F.col(source_col).alias("src"), toks.alias("__toks")).select(
+    toks = tokens(F.col("text"))
+    staged = df.select(F.col("source").alias("src"), toks.alias("__toks")).select(
         "src",
         F.transform("__toks", token_code).alias("__codes"),
         F.size("__toks").alias("__nt"),
@@ -1127,7 +1108,7 @@ def source_jaccard_matrix(
         )
     )
     codes = staged.select("src", F.explode(grams).alias("c"))
-    # The n_perms aggregate/struct expressions are built as SQL strings:
+    # The N_MINHASH aggregate/struct expressions are built as SQL strings:
     # one py4j round-trip each instead of ~6 Column-API calls — with 128
     # perms the Column-API loop cost ~0.9 s of driver-side build time per
     # invocation vs ~0.3 s for the string form (measured sf0.1, identical
@@ -1140,7 +1121,7 @@ def source_jaccard_matrix(
     )
     perm_arr = (
         "array("
-        + ",".join(f"struct({i} as perm, m{i} as mh)" for i in range(n_perms))
+        + ",".join(f"struct({i} as perm, m{i} as mh)" for i in range(N_MINHASH))
         + ")"
     )
     long = sig.select(
@@ -1160,7 +1141,7 @@ def source_jaccard_matrix(
         F.round(
             F.sum((F.col("ma") == F.col("mb")).cast("long")).cast("double")
             / F.count("*").cast("double"),
-            decimals,
+            6,
         ).alias("est_jaccard"),
     )
 
@@ -1226,9 +1207,7 @@ def minhash_threshold_sweep(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     thresholds: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9),
-    max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Threshold sensitivity for MinHash near-dedup: how many candidate
     pairs survive at each estimated-Jaccard cutoff — the curve read
@@ -1244,8 +1223,7 @@ def minhash_threshold_sweep(
     """
     lo = min(thresholds)
     pairs = minhash_lsh_pairs(
-        df, id_col=id_col, text_col=text_col, n=n, threshold=lo,
-        max_bucket=max_bucket,
+        df, id_col=id_col, text_col=text_col, threshold=lo,
     )
     ts = F.array(*[F.lit(round(float(t), 6)) for t in sorted(thresholds)])
     return (
@@ -1264,9 +1242,7 @@ def cross_source_dup_matrix(
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
-    n: int = 3,
     threshold: float = 0.5,
-    max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Near-duplicate FLOW between sources: for every near-dup pair, the
     (source, source) cell it falls in — the provenance matrix that shows
@@ -1281,8 +1257,7 @@ def cross_source_dup_matrix(
     joins anything; source-grain aggregate with map-side partials.
     """
     pairs = minhash_lsh_pairs(
-        df, id_col=id_col, text_col=text_col, n=n, threshold=threshold,
-        max_bucket=max_bucket,
+        df, id_col=id_col, text_col=text_col, threshold=threshold,
     )
     src_a = df.select(F.col(id_col).alias("id_a"), F.col(source_col).alias("__sa"))
     src_b = df.select(F.col(id_col).alias("id_b"), F.col(source_col).alias("__sb"))
@@ -1305,7 +1280,6 @@ def lsh_param_plan(
         (4, 4), (8, 4), (16, 2), (8, 8), (32, 2), (16, 4), (4, 8), (2, 16),
     ),
     grid_step: float = 0.05,
-    decimals: int = 6,
 ) -> DataFrame:
     """ANALYTIC (bands, rows) planner for MinHash LSH — the design-time
     complement of the MEASURED ``lsh_sensitivity_curve``: for each
@@ -1350,19 +1324,19 @@ def lsh_param_plan(
         F.round(
             F.sum(F.col("fp_t").cast("decimal(30,10)")).cast("double")
             * F.lit(float(grid_step)),
-            decimals,
+            6,
         ).alias("fp_area"),
         F.round(
             F.sum(F.col("fn_t").cast("decimal(30,10)")).cast("double")
             * F.lit(float(grid_step)),
-            decimals,
+            6,
         ).alias("fn_area"),
     )
     agg = agg.select(
         "bands", "rows",
         (F.col("bands") * F.col("rows")).cast("bigint").alias("n_hashes"),
         "fp_area", "fn_area",
-        F.round(F.col("fp_area") + F.col("fn_area"), decimals).alias("cost"),
+        F.round(F.col("fp_area") + F.col("fn_area"), 6).alias("cost"),
     )
     wbest = W.orderBy(
         F.col("cost").asc(), F.col("n_hashes").asc(), F.col("bands").desc()

@@ -16,10 +16,6 @@ from pyspark.sql import functions as F
 def funnel_stages(
     events: DataFrame,
     stages: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Ordered funnel: how many users completed stage k only counting
     events that occur AFTER their previous-stage completion (strict event
@@ -31,22 +27,22 @@ def funnel_stages(
     Output: (stage_idx, stage, n_users), n_users non-increasing.
     """
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     df = events
     prev_flag = None
     flags = []
     for i, stage in enumerate(stages):
-        hit = F.col(type_col) == stage
+        hit = F.col("event_type") == stage
         if prev_flag is not None:
             hit = hit & (F.col(prev_flag) == 1)
         flag = f"__s{i}"
         df = df.withColumn(flag, F.max(F.when(hit, 1).otherwise(0)).over(w))
         prev_flag = flag
         flags.append(flag)
-    per_user = df.groupBy(user_col).agg(
+    per_user = df.groupBy("user_id").agg(
         *[F.max(f).alias(f) for f in flags]
     )
     counts = per_user.agg(
@@ -69,8 +65,6 @@ def funnel_stages(
 
 def retention_cohorts(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Cohort retention: users grouped by first-activity day; for each
     (cohort day, day offset), how many of that cohort were active.
@@ -80,7 +74,7 @@ def retention_cohorts(
     dimension is bounded by the calendar, never by users.
     """
     days = events.select(
-        F.col(user_col).alias("u"), F.to_date(ts_col).alias("day")
+        F.col("user_id").alias("u"), F.to_date("ts").alias("day")
     ).distinct()
     firsts = days.groupBy("u").agg(F.min("day").alias("cohort_day"))
     return (
@@ -95,7 +89,6 @@ def retention_cohorts(
 
 def value_histogram(
     events: DataFrame,
-    value_col: str = "value",
     lo: float = 0.0,
     hi: float = 500.0,
     n_bins: int = 20,
@@ -104,35 +97,32 @@ def value_histogram(
     pass; bucket 0 / n_bins+1 catch underflow/overflow."""
     return (
         events.groupBy(
-            F.width_bucket(value_col, F.lit(lo), F.lit(hi), F.lit(n_bins)).alias("bucket")
+            F.width_bucket("value", F.lit(lo), F.lit(hi), F.lit(n_bins)).alias("bucket")
         )
         .agg(
             F.count("*").alias("n"),
-            F.round(F.sum(value_col), 2).alias("total"),
+            F.round(F.sum("value"), 2).alias("total"),
         )
     )
 
 
 def group_deciles(
     events: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    id_col: str = "event_id",
     n: int = 10,
 ) -> DataFrame:
     """Per-group quantile binning (``ntile``) with (value, id) ordering so
     ties split deterministically; emits per-bin count and value range —
     the feature-bucketization primitive."""
-    w = Window.partitionBy(group_col).orderBy(
-        F.col(value_col).asc(), F.col(id_col).asc()
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("value").asc(), F.col("event_id").asc()
     )
     return (
         events.withColumn("decile", F.ntile(n).over(w))
-        .groupBy(group_col, "decile")
+        .groupBy("event_type", "decile")
         .agg(
             F.count("*").alias("n"),
-            F.round(F.min(value_col), 2).alias("lo"),
-            F.round(F.max(value_col), 2).alias("hi"),
+            F.round(F.min("value"), 2).alias("lo"),
+            F.round(F.max("value"), 2).alias("hi"),
         )
     )
 
@@ -140,13 +130,7 @@ def group_deciles(
 def last_touch_attribution(
     events: DataFrame,
     source_types: list[str],
-    conversion_type: str = "purchase",
     max_age_days: int = 7,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Attribute each conversion to the user's most recent prior source
     event (last-touch) within ``max_age_days``; conversions with no
@@ -158,44 +142,39 @@ def last_touch_attribution(
     no per-conversion probe, no time-bucket explosion.  Output:
     (source, n_conversions, total_value).
     """
-    src = F.when(F.col(type_col).isin(source_types), F.col(type_col))
+    src = F.when(F.col("event_type").isin(source_types), F.col("event_type"))
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     flagged = events.withColumn(
         "__src", F.last(src, ignorenulls=True).over(w)
     ).withColumn(
         "__src_ts",
-        F.last(F.when(src.isNotNull(), F.col(ts_col)), ignorenulls=True).over(w),
+        F.last(F.when(src.isNotNull(), F.col("ts")), ignorenulls=True).over(w),
     )
-    fresh = F.col("__src_ts") >= F.col(ts_col) - F.expr(
+    fresh = F.col("__src_ts") >= F.col("ts") - F.expr(
         f"INTERVAL {max_age_days} DAYS"
     )
     return (
-        flagged.filter(F.col(type_col) == conversion_type)
+        flagged.filter(F.col("event_type") == "purchase")
         .select(
             F.when(F.col("__src").isNotNull() & fresh, F.col("__src"))
             .otherwise(F.lit("direct"))
             .alias("source"),
-            F.col(value_col),
+            F.col("value"),
         )
         .groupBy("source")
         .agg(
             F.count("*").alias("n_conversions"),
-            F.round(F.sum(value_col), 2).alias("total_value"),
+            F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
 
 
 def session_paths(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    type_col: str = "event_type",
-    gap_minutes: int = 30,
     top: int = 20,
 ) -> DataFrame:
     """Top-N session paths: sessionize (gap rule), concatenate each
@@ -212,15 +191,15 @@ def session_paths(
     small regardless of corpus size.
     """
     base = events.select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col).alias("t"),
-        F.col(tiebreak_col).alias("tb"),
-        F.col(type_col).alias("et"),
+        F.col("user_id").alias("u"),
+        F.col("ts").alias("t"),
+        F.col("event_id").alias("tb"),
+        F.col("event_type").alias("et"),
     )
     w = Window.partitionBy("u").orderBy("t", "tb")
     gap_us = F.unix_micros(F.col("t")) - F.unix_micros(F.lag("t").over(w))
     new_sess = F.when(
-        gap_us.isNull() | (gap_us > gap_minutes * 60_000_000), 1
+        gap_us.isNull() | (gap_us > 30 * 60_000_000), 1
     ).otherwise(0)
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     sessed = base.withColumn("sess", F.sum(new_sess).over(run))
@@ -246,10 +225,7 @@ def session_paths(
 
 def daily_stickiness(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     window_days: int = 7,
-    decimals: int = 6,
 ) -> DataFrame:
     """DAU / rolling-WAU stickiness per day — the engagement-density
     metric (DAU/WAU, DAU/MAU) every growth dashboard carries.
@@ -263,9 +239,9 @@ def daily_stickiness(
     Three shuffles total (day-user dedup, windowed distinct, daily
     distinct), all over day-user-grain rows.
     """
-    day = F.date_trunc("day", F.col(ts_col))
+    day = F.date_trunc("day", F.col("ts"))
     day_users = events.select(
-        day.alias("day"), F.col(user_col).alias("u")
+        day.alias("day"), F.col("user_id").alias("u")
     ).distinct()
     contrib = day_users.select(
         F.explode(
@@ -287,7 +263,7 @@ def daily_stickiness(
             F.date_format("day", "yyyy-MM-dd").alias("day"),
             F.col("dau").cast("bigint").alias("dau"),
             F.col("window_active").cast("bigint").alias("window_active"),
-            F.round(F.col("dau") / F.col("window_active"), decimals).alias(
+            F.round(F.col("dau") / F.col("window_active"), 6).alias(
                 "stickiness"
             ),
         )
@@ -296,8 +272,6 @@ def daily_stickiness(
 
 def churned_users(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     inactive_days: int = 7,
 ) -> DataFrame:
     """Users whose LAST activity is >= ``inactive_days`` before the
@@ -305,8 +279,8 @@ def churned_users(
     broadcast 1-row max; the fact stream is aggregated once and never
     joined against itself.
     """
-    day = F.date_trunc("day", F.col(ts_col))
-    last = events.groupBy(F.col(user_col).alias("user_id")).agg(
+    day = F.date_trunc("day", F.col("ts"))
+    last = events.groupBy(F.col("user_id")).agg(
         F.max(day).alias("last_day")
     )
     mx = events.agg(F.max(day).alias("max_day"))
@@ -325,16 +299,14 @@ def churned_users(
 
 def new_vs_returning(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Daily growth accounting: how many of each day's active users are
     NEW (first-ever day) vs RETURNING.  Day-user dedup, per-user min-day
     aggregate, then a user-key join and a daily rollup — all shuffles
     carry day-user-grain rows.
     """
-    day = F.date_trunc("day", F.col(ts_col))
-    du = events.select(day.alias("day"), F.col(user_col).alias("u")).distinct()
+    day = F.date_trunc("day", F.col("ts"))
+    du = events.select(day.alias("day"), F.col("user_id").alias("u")).distinct()
     firsts = du.groupBy("u").agg(F.min("day").alias("first_day"))
     return (
         du.join(firsts, "u")
@@ -357,10 +329,6 @@ def new_vs_returning(
 
 def event_type_lift(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    decimals: int = 6,
 ) -> DataFrame:
     """Market-basket lift between event types co-occurring in the same
     user-day basket: lift(a,b) = P(a,b) · N / (P(a)·P(b)) over baskets —
@@ -373,10 +341,10 @@ def event_type_lift(
     """
     bid = F.concat_ws(
         "#",
-        F.col(user_col),
-        F.date_format(F.date_trunc("day", F.col(ts_col)), "yyyy-MM-dd"),
+        F.col("user_id"),
+        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd"),
     )
-    b = events.select(bid.alias("bid"), F.col(type_col).alias("t")).distinct()
+    b = events.select(bid.alias("bid"), F.col("event_type").alias("t")).distinct()
     nb = b.agg(F.count_distinct("bid").alias("n_baskets"))
     per_type = b.groupBy("t").agg(F.count("*").alias("nt"))
 
@@ -411,7 +379,7 @@ def event_type_lift(
             F.col("n_ab").cast("bigint").alias("n_ab"),
             F.round(
                 F.col("n_ab") * F.col("n_baskets") / (F.col("na") * F.col("nb_")),
-                decimals,
+                6,
             ).alias("lift"),
         )
     )
@@ -419,10 +387,7 @@ def event_type_lift(
 
 def decayed_popularity(
     events: DataFrame,
-    item_expr: str = "CAST(get_json_object(props, '$.k') AS INT)",
-    ts_col: str = "ts",
     half_life_days: float = 7.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Exponentially time-decayed popularity per item — the freshness-
     weighted ranking signal (an event ``half_life_days`` ago counts half
@@ -435,31 +400,28 @@ def decayed_popularity(
     import math
 
     lam = math.log(2.0) / half_life_days
-    mx = events.agg(F.max(ts_col).alias("mx"))
+    mx = events.agg(F.max("ts").alias("mx"))
     age_days = (
-        F.unix_micros(F.col("mx")) - F.unix_micros(F.col(ts_col))
+        F.unix_micros(F.col("mx")) - F.unix_micros(F.col("ts"))
     ) / F.lit(86_400_000_000.0)
     return (
         events.crossJoin(F.broadcast(mx))
         .select(
-            F.expr(item_expr).alias("item"),
+            F.expr("CAST(get_json_object(props, '$.k') AS INT)").alias("item"),
             F.round(F.exp(-F.lit(lam) * age_days), 9).alias("w"),
         )
         .groupBy("item")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            F.round(F.sum("w"), decimals).alias("score"),
+            F.round(F.sum("w"), 6).alias("score"),
         )
     )
 
 
 def trending_items(
     events: DataFrame,
-    item_expr: str = "CAST(get_json_object(props, '$.k') AS INT)",
-    ts_col: str = "ts",
     window_days: int = 7,
     top: int = 20,
-    decimals: int = 6,
 ) -> DataFrame:
     """Trending score per (item, day): today's event count against the
     item's trailing ``window_days``-day DAILY AVERAGE (missing days count
@@ -474,7 +436,8 @@ def trending_items(
     """
     daily = (
         events.select(
-            F.expr(item_expr).alias("item"), F.to_date(ts_col).alias("day")
+            F.expr("CAST(get_json_object(props, '$.k') AS INT)").alias("item"),
+            F.to_date("ts").alias("day"),
         )
         .groupBy("item", "day")
         .agg(F.count("*").alias("n"))
@@ -490,7 +453,7 @@ def trending_items(
         .filter(F.col("trail_sum") > 0)
         .withColumn(
             "ratio",
-            F.round(F.col("n") * F.lit(float(window_days)) / F.col("trail_sum"), decimals),
+            F.round(F.col("n") * F.lit(float(window_days)) / F.col("trail_sum"), 6),
         )
     )
     return (
@@ -542,8 +505,6 @@ def _survival_risk_table(
 def kaplan_meier(
     events: DataFrame,
     censor_days: int = 3,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Kaplan-Meier survival curve over user lifetimes: a user's duration
     is last_seen − first_seen in days; users still active near the end of
@@ -560,7 +521,7 @@ def kaplan_meier(
     horizon rides in as a broadcast 1-row aggregate, never a second scan
     of the facts.
     """
-    at_risk = _survival_risk_table(events, censor_days, user_col, ts_col)
+    at_risk = _survival_risk_table(events, censor_days, "user_id", "ts")
     w_asc = (
         Window.orderBy(F.col("duration_days").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -580,13 +541,7 @@ def kaplan_meier(
 def time_decay_attribution(
     events: DataFrame,
     source_types: list[str],
-    conversion_type: str = "purchase",
     half_life_days: float = 7.0,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Multi-touch attribution with exponential time decay: every source
     touch before a conversion earns credit 0.5^(Δt/half_life), normalized
@@ -613,10 +568,10 @@ def time_decay_attribution(
     # fractional-epoch cast, not unix_timestamp: the latter truncates
     # sub-second precision, and micros/1e6 is the same IEEE division the
     # oracle's epoch() performs — bit-identical inputs to the decay pow
-    sec = F.col(ts_col).cast("double")
+    sec = F.col("ts").cast("double")
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # the per-user rebase min uses the SAME window spec as the running
@@ -630,14 +585,14 @@ def time_decay_attribution(
     ev = ev.select(
         "*",
         *[
-            F.sum(F.when(F.col(type_col) == s, grow).otherwise(F.lit(0.0)))
+            F.sum(F.when(F.col("event_type") == s, grow).otherwise(F.lit(0.0)))
             .over(w)
             .alias(f"__rs{i}")
             for i, s in enumerate(source_types)
         ],
     )
     shrink = F.pow(F.lit(2.0), -F.col("__d") / F.lit(half_life_days))
-    conv = ev.filter(F.col(type_col) == conversion_type)
+    conv = ev.filter(F.col("event_type") == "purchase")
     ws = [(F.col(f"__rs{i}") * shrink) for i in range(len(source_types))]
     total = sum(ws[1:], ws[0])
     arms = [
@@ -653,7 +608,7 @@ def time_decay_attribution(
         )
     ]
     per_conv = conv.select(
-        F.col(value_col), F.explode(F.array(*arms)).alias("a")
+        F.col("value"), F.explode(F.array(*arms)).alias("a")
     ).select("value", F.col("a.source").alias("source"), F.col("a.share").alias("share"))
     return per_conv.groupBy("source").agg(
         F.round(F.sum("share"), 3).alias("credited_conversions"),
@@ -663,13 +618,9 @@ def time_decay_attribution(
 
 def woe_binning(
     events: DataFrame,
-    conversion_type: str = "purchase",
-    value_col: str = "value",
-    type_col: str = "event_type",
     lo: float = 0.0,
     hi: float = 500.0,
     n_bins: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Weight-of-evidence binning of a numeric feature against a binary
     outcome — the classic scorecard/feature-prep transform: per value bin,
@@ -685,13 +636,13 @@ def woe_binning(
     """
     width = (hi - lo) / n_bins
     bucket = (
-        F.when(F.col(value_col) < lo, F.lit(0))
-        .when(F.col(value_col) >= hi, F.lit(n_bins + 1))
+        F.when(F.col("value") < lo, F.lit(0))
+        .when(F.col("value") >= hi, F.lit(n_bins + 1))
         .otherwise(
-            F.floor((F.col(value_col) - lo) / width).cast("int") + 1
+            F.floor((F.col("value") - lo) / width).cast("int") + 1
         )
     )
-    is_pos = (F.col(type_col) == conversion_type).cast("int")
+    is_pos = (F.col("event_type") == "purchase").cast("int")
     grain = (
         events.select(bucket.alias("bucket"), is_pos.alias("__p"))
         .groupBy("bucket")
@@ -711,18 +662,14 @@ def woe_binning(
         "bucket",
         "n_pos",
         "n_neg",
-        F.round(woe, decimals).alias("woe"),
-        F.round((p_pos - p_neg) * woe, decimals).alias("iv_contrib"),
+        F.round(woe, 6).alias("woe"),
+        F.round((p_pos - p_neg) * woe, 6).alias("iv_contrib"),
     )
 
 
 def wilson_rate_intervals(
     events: DataFrame,
-    conversion_type: str = "purchase",
-    group_expr: str = "CAST(get_json_object(props, '$.k') AS INT) % 10",
-    type_col: str = "event_type",
     z: float = 1.96,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-group conversion rate with a Wilson score interval — the
     A/B-readout aggregate: unlike the normal approximation, Wilson stays
@@ -736,8 +683,8 @@ def wilson_rate_intervals(
     at segment grain; the interval is closed-form expression work on the
     aggregate row.
     """
-    grp = F.expr(group_expr)
-    is_conv = (F.col(type_col) == conversion_type).cast("int")
+    grp = F.expr("CAST(get_json_object(props, '$.k') AS INT) % 10")
+    is_conv = (F.col("event_type") == "purchase").cast("int")
     g = events.select(grp.alias("segment"), is_conv.alias("c")).groupBy(
         "segment"
     ).agg(
@@ -756,24 +703,17 @@ def wilson_rate_intervals(
     )
     return g.select(
         "segment", "n", "n_conv",
-        F.round(p, decimals).alias("rate"),
-        F.round(center - half, decimals).alias("ci_lo"),
-        F.round(center + half, decimals).alias("ci_hi"),
+        F.round(p, 6).alias("rate"),
+        F.round(center - half, 6).alias("ci_lo"),
+        F.round(center + half, 6).alias("ci_hi"),
     )
 
 
 def funnel_latency(
     events: DataFrame,
-    start_type: str = "view",
-    end_type: str = "purchase",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    decimals: int = 2,
 ) -> DataFrame:
     """Time-to-convert distribution: per user, the delay from the FIRST
-    ``start_type`` event to the first ``end_type`` event after it; output
+    ``view`` event to the first ``purchase`` event after it; output
     is one row of funnel timing stats (converting users, conversion rate
     among exposed users, p50/p90 latency in seconds).
 
@@ -785,20 +725,20 @@ def funnel_latency(
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     start_ts = F.min(
-        F.when(F.col(type_col) == start_type, F.col(ts_col))
+        F.when(F.col("event_type") == "view", F.col("ts"))
     ).over(w)
     staged = events.withColumn("__start", start_ts)
-    per_user = staged.groupBy(user_col).agg(
-        F.min(F.when(F.col(type_col) == start_type, F.col(ts_col))).alias("s"),
+    per_user = staged.groupBy("user_id").agg(
+        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("s"),
         F.min(
             F.when(
-                (F.col(type_col) == end_type) & F.col("__start").isNotNull(),
-                F.col(ts_col),
+                (F.col("event_type") == "purchase") & F.col("__start").isNotNull(),
+                F.col("ts"),
             )
         ).alias("e"),
     )
@@ -809,19 +749,15 @@ def funnel_latency(
     return lat.agg(
         F.count("*").cast("bigint").alias("n_exposed"),
         F.count("latency").cast("bigint").alias("n_converted"),
-        F.round(F.count("latency") / F.count("*"), decimals + 4).alias("conversion_rate"),
-        F.round(p[0], decimals).alias("latency_p50_s"),
-        F.round(p[1], decimals).alias("latency_p90_s"),
+        F.round(F.count("latency") / F.count("*"), 6).alias("conversion_rate"),
+        F.round(p[0], 2).alias("latency_p50_s"),
+        F.round(p[1], 2).alias("latency_p90_s"),
     )
 
 
 def diff_in_diff(
     events: DataFrame,
     split_date: str,
-    treat_expr: str = "user_id % 2 = 1",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    decimals: int = 6,
 ) -> DataFrame:
     """Difference-in-differences estimate over the 2×2 (treated, post)
     design: DiD = (ȳ_treat,post − ȳ_treat,pre) − (ȳ_ctrl,post − ȳ_ctrl,pre)
@@ -835,18 +771,18 @@ def diff_in_diff(
     """
     cell = F.concat_ws(
         "_",
-        F.when(F.expr(treat_expr), F.lit("treat")).otherwise(F.lit("ctrl")),
+        F.when(F.expr("user_id % 2 = 1"), F.lit("treat")).otherwise(F.lit("ctrl")),
         F.when(
-            F.to_date(ts_col) >= F.lit(split_date), F.lit("post")
+            F.to_date("ts") >= F.lit(split_date), F.lit("post")
         ).otherwise(F.lit("pre")),
     )
     # decimal-exact sums: double accumulation order differs between map
     # partitions (and engines), and the 6dp rounding downstream would sit
     # inside that noise; exact sums make the means a pure function of the
     # multiset
-    s1 = F.sum(F.col(value_col).cast("decimal(30,10)")).cast("double")
+    s1 = F.sum(F.col("value").cast("decimal(30,10)")).cast("double")
     s2 = F.sum(
-        (F.col(value_col) * F.col(value_col)).cast("decimal(30,10)")
+        (F.col("value") * F.col("value")).cast("decimal(30,10)")
     ).cast("double")
     g = events.groupBy(cell.alias("cell")).agg(
         F.count("*").cast("bigint").alias("n"),
@@ -870,26 +806,20 @@ def diff_in_diff(
         + F.col("ctrl_pre_v") / F.col("ctrl_pre_n")
     )
     return p.select(
-        F.round("treat_pre_m", decimals).alias("treat_pre"),
-        F.round("treat_post_m", decimals).alias("treat_post"),
-        F.round("ctrl_pre_m", decimals).alias("ctrl_pre"),
-        F.round("ctrl_post_m", decimals).alias("ctrl_post"),
-        F.round(did, decimals).alias("did_estimate"),
-        F.round(se, decimals).alias("std_err"),
-        F.round(did - 1.96 * se, decimals).alias("ci_lo"),
-        F.round(did + 1.96 * se, decimals).alias("ci_hi"),
+        F.round("treat_pre_m", 6).alias("treat_pre"),
+        F.round("treat_post_m", 6).alias("treat_post"),
+        F.round("ctrl_pre_m", 6).alias("ctrl_pre"),
+        F.round("ctrl_post_m", 6).alias("ctrl_post"),
+        F.round(did, 6).alias("did_estimate"),
+        F.round(se, 6).alias("std_err"),
+        F.round(did - 1.96 * se, 6).alias("ci_lo"),
+        F.round(did + 1.96 * se, 6).alias("ci_hi"),
     )
 
 
 def ordered_pair_episodes(
     events: DataFrame,
-    first_type: str = "view",
-    then_type: str = "purchase",
     within_hours: int = 24,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Sequential-episode support: how many users exhibit "A then B
     within T" (the sequence-mining building block funnels simplify away:
@@ -903,25 +833,25 @@ def ordered_pair_episodes(
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     last_a = F.max(
-        F.when(F.col(type_col) == first_type, F.col(ts_col))
+        F.when(F.col("event_type") == "view", F.col("ts"))
     ).over(w)
     hit = (
-        (F.col(type_col) == then_type)
+        (F.col("event_type") == "purchase")
         & last_a.isNotNull()
         & (
-            F.col(ts_col).cast("double") - last_a.cast("double")
+            F.col("ts").cast("double") - last_a.cast("double")
             <= within_hours * 3600.0
         )
     )
     per_user = events.select(
-        F.col(user_col).alias("u"),
+        F.col("user_id").alias("u"),
         hit.cast("int").alias("h"),
-        (F.col(type_col) == first_type).cast("int").alias("a"),
+        (F.col("event_type") == "view").cast("int").alias("a"),
     ).groupBy("u").agg(
         F.max("h").alias("converted"), F.max("a").alias("exposed"),
         F.sum("h").cast("bigint").alias("n_episodes"),
@@ -938,12 +868,6 @@ def ordered_pair_episodes(
 
 def cohort_ltv(
     events: DataFrame,
-    conversion_type: str = "purchase",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    decimals: int = 4,
 ) -> DataFrame:
     """Cohort lifetime-value curves: users grouped by first-activity day;
     for each (cohort, day offset), the CUMULATIVE conversion revenue per
@@ -957,19 +881,19 @@ def cohort_ltv(
     """
     from pyspark.sql import Window
 
-    day = F.to_date(ts_col)
-    firsts = events.groupBy(F.col(user_col).alias("u")).agg(
+    day = F.to_date("ts")
+    firsts = events.groupBy(F.col("user_id").alias("u")).agg(
         F.min(day).alias("cohort_day")
     )
     sizes = firsts.groupBy("cohort_day").agg(
         F.count("*").cast("bigint").alias("cohort_size")
     )
     rev = (
-        events.filter(F.col(type_col) == conversion_type)
-        .select(F.col(user_col).alias("u"), day.alias("d"), F.col(value_col))
+        events.filter(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("u"), day.alias("d"), F.col("value"))
         .join(firsts, "u")
         .groupBy("cohort_day", F.datediff("d", "cohort_day").alias("offset_days"))
-        .agg(F.sum(value_col).alias("__rev"))
+        .agg(F.sum("value").alias("__rev"))
     )
     w = (
         Window.partitionBy("cohort_day")
@@ -982,7 +906,7 @@ def cohort_ltv(
             F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort_day"),
             "offset_days",
             "cohort_size",
-            F.round(F.sum("__rev").over(w) / F.col("cohort_size"), decimals)
+            F.round(F.sum("__rev").over(w) / F.col("cohort_size"), 4)
             .alias("cum_revenue_per_user"),
         )
     )
@@ -990,10 +914,6 @@ def cohort_ltv(
 
 def cuped_adjustment(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    decimals: int = 6,
 ) -> DataFrame:
     """CUPED variance reduction for a hash-split A/B readout: per user,
     split the window at the corpus midpoint into pre/post value sums,
@@ -1021,7 +941,7 @@ def cuped_adjustment(
     from ..functions.hashing import token_code
 
     dec = "decimal(30,10)"
-    e = F.col(ts_col).cast("double")
+    e = F.col("ts").cast("double")
     bounds = F.broadcast(
         events.agg(
             F.min(e).alias("e0"), F.max(e).alias("e1")
@@ -1029,8 +949,8 @@ def cuped_adjustment(
     )
     ev = events.crossJoin(bounds)
     mid = (F.col("e0") + F.col("e1")) / F.lit(2.0)
-    v = F.col(value_col).cast(dec)
-    per_user = ev.groupBy(F.col(user_col).alias("u")).agg(
+    v = F.col("value").cast(dec)
+    per_user = ev.groupBy(F.col("user_id").alias("u")).agg(
         F.sum(F.when(e < mid, v).otherwise(F.lit(0).cast(dec))).alias("pre"),
         F.sum(F.when(e >= mid, v).otherwise(F.lit(0).cast(dec))).alias("post"),
     )
@@ -1075,22 +995,18 @@ def cuped_adjustment(
     return g.select(
         F.col("arm"),
         F.col("n").cast("bigint").alias("n_users"),
-        F.round(my / F.lit(100.0), decimals).alias("mean_post"),
-        F.round((my - theta * (mx - gmx)) / F.lit(100.0), decimals).alias(
+        F.round(my / F.lit(100.0), 6).alias("mean_post"),
+        F.round((my - theta * (mx - gmx)) / F.lit(100.0), 6).alias(
             "mean_adj"
         ),
         F.round(
-            F.lit(100.0) * (F.lit(1.0) - var_adj / var_post), decimals
+            F.lit(100.0) * (F.lit(1.0) - var_adj / var_post), 6
         ).alias("var_reduction_pct"),
     )
 
 
 def interevent_burstiness(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    decimals: int = 6,
 ) -> DataFrame:
     """Burstiness index B = (σ−μ)/(σ+μ) of per-user inter-event gaps,
     pooled per event type (Goh & Barabási, 2008): B ≈ −1 for metronomic
@@ -1110,19 +1026,19 @@ def interevent_burstiness(
     with map-side partials.  Gap² sums bound gaps ≲ 3·10⁶ s at bigint
     safety for 10⁶-row partitions; at larger horizons bucket gaps first.
     """
-    us = F.unix_micros(F.col(ts_col))
-    w = Window.partitionBy(user_col, type_col).orderBy(
-        F.col(ts_col).asc(), F.col("event_id").asc()
+    us = F.unix_micros(F.col("ts"))
+    w = Window.partitionBy("user_id", "event_type").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
     gaps = (
         events.select(
-            F.col(type_col).alias("t"),
+            F.col("event_type").alias("t"),
             (us - F.lag(us).over(w)).alias("gap_us"),
         )
         .filter(F.col("gap_us").isNotNull())
         .select("t", F.expr("CAST(gap_us DIV 1000000 AS BIGINT)").alias("g"))
     )
-    agg = gaps.groupBy(F.col("t").alias(type_col)).agg(
+    agg = gaps.groupBy(F.col("t").alias("event_type")).agg(
         F.count("*").cast("long").alias("n"),
         F.sum("g").cast("long").alias("s"),
         F.sum(F.col("g") * F.col("g")).cast("long").alias("sq"),
@@ -1133,23 +1049,21 @@ def interevent_burstiness(
         F.greatest(F.col("sq").cast("double") / nd - mu * mu, F.lit(0.0))
     )
     return agg.filter(F.col("n") >= 2).select(
-        type_col,
+        "event_type",
         F.col("n").cast("bigint").alias("n_gaps"),
-        F.round(mu, decimals).alias("mean_gap_s"),
+        F.round(mu, 6).alias("mean_gap_s"),
         F.round(
             F.when((sig + mu) > 0, (sig - mu) / (sig + mu)).otherwise(
                 F.lit(0.0)
             ),
-            decimals,
+            6,
         ).alias("burstiness"),
     )
 
 
 def peak_concurrency(
     events: DataFrame,
-    ts_col: str = "ts",
     session_seconds: int = 1800,
-    decimals: int = 6,
 ) -> DataFrame:
     """Peak simultaneous sessions per day via the classic sweep-line:
     every event opens a session ``[ts, ts + W)``, each session emits a +1
@@ -1172,7 +1086,7 @@ def peak_concurrency(
     A hot day is a skew unit; AQE splits it, or pre-aggregate equal
     timestamps first.
     """
-    s = F.col(ts_col)
+    s = F.col("ts")
     e = s + F.expr(f"INTERVAL {int(session_seconds)} SECONDS")
     days = F.sequence(
         F.date_trunc("day", s),
@@ -1220,13 +1134,7 @@ def peak_concurrency(
 def positional_attribution(
     events: DataFrame,
     source_types: list[str],
-    conversion_type: str = "purchase",
     max_age_days: int = 7,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """U-shaped (position-based) attribution, completing the family with
     ``last_touch_attribution`` and ``time_decay_attribution``: within each
@@ -1250,19 +1158,19 @@ def positional_attribution(
     (user, conversion) path — then one aggregate to source grain.
     """
     fwd = (
-        Window.partitionBy(user_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    conv_id = F.when(F.col(type_col) == conversion_type, F.col(id_col))
-    conv_ts = F.when(F.col(type_col) == conversion_type, F.col(ts_col))
-    conv_val = F.when(F.col(type_col) == conversion_type, F.col(value_col))
+    conv_id = F.when(F.col("event_type") == "purchase", F.col("event_id"))
+    conv_ts = F.when(F.col("event_type") == "purchase", F.col("ts"))
+    conv_val = F.when(F.col("event_type") == "purchase", F.col("value"))
     tagged = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("typ"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("id"),
-        F.col(value_col).alias("val"),
+        F.col("user_id").alias("u"),
+        F.col("event_type").alias("typ"),
+        F.col("ts").alias("ts"),
+        F.col("event_id").alias("id"),
+        F.col("value").alias("val"),
         F.first(conv_id, ignorenulls=True).over(fwd).alias("cid"),
         F.first(conv_ts, ignorenulls=True).over(fwd).alias("cts"),
         F.first(conv_val, ignorenulls=True).over(fwd).alias("cval"),
@@ -1305,12 +1213,12 @@ def positional_attribution(
     )
     matched = ranked.select("cid").distinct()
     direct = (
-        events.filter(F.col(type_col) == conversion_type)
-        .join(matched, F.col(id_col) == matched["cid"], "left_anti")
+        events.filter(F.col("event_type") == "purchase")
+        .join(matched, F.col("event_id") == matched["cid"], "left_anti")
         .agg(
             F.count("*").cast("bigint").alias("n_touches"),
             F.round(
-                F.sum(F.round(F.col(value_col) * F.lit(100.0), 0).cast("long"))
+                F.sum(F.round(F.col("value") * F.lit(100.0), 0).cast("long"))
                 .cast("double")
                 / F.lit(100.0),
                 2,
@@ -1324,9 +1232,6 @@ def positional_attribution(
 def nelson_aalen(
     events: DataFrame,
     censor_days: int = 3,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    decimals: int = 6,
 ) -> DataFrame:
     """Nelson–Aalen cumulative hazard over the same censored user
     lifetimes as ``kaplan_meier``: H(t) = Σ_{t'≤t} d/n with standard
@@ -1340,7 +1245,7 @@ def nelson_aalen(
     duration grain.  The cumulative float sums run in a fixed window
     order, so they're deterministic (same contract as KM's Π(1−d/n)).
     """
-    at_risk = _survival_risk_table(events, censor_days, user_col, ts_col)
+    at_risk = _survival_risk_table(events, censor_days, "user_id", "ts")
     w_asc = (
         Window.orderBy(F.col("duration_days").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1349,19 +1254,15 @@ def nelson_aalen(
     n = F.col("n_risk").cast("double")
     return at_risk.select(
         "duration_days", "n_risk", "n_events", "n_censored",
-        F.round(F.sum(d / n).over(w_asc), decimals).alias("cum_hazard"),
+        F.round(F.sum(d / n).over(w_asc), 6).alias("cum_hazard"),
         F.round(
-            F.sqrt(F.sum(d / (n * n)).over(w_asc)), decimals
+            F.sqrt(F.sum(d / (n * n)).over(w_asc)), 6
         ).alias("hazard_se"),
     )
 
 
 def rfm_segments(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    decimals: int = 2,
 ) -> DataFrame:
     """RFM segmentation: per user, Recency (days since last activity),
     Frequency (event count), Monetary (value sum), each scored 1–5 by
@@ -1386,11 +1287,11 @@ def rfm_segments(
     segment-grain rollup (≤125 rows).
     """
     dec = "decimal(30,10)"
-    day = F.to_date(ts_col)
-    per_user = events.groupBy(F.col(user_col).alias("u")).agg(
+    day = F.to_date("ts")
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
         F.max(day).alias("last_day"),
         F.count("*").cast("long").alias("freq"),
-        F.round(F.sum(F.col(value_col).cast(dec)) * 100, 0)
+        F.round(F.sum(F.col("value").cast(dec)) * 100, 0)
         .cast("long")
         .alias("mon_c"),
     )
@@ -1429,17 +1330,13 @@ def rfm_segments(
         F.count("*").cast("bigint").alias("n_users"),
         F.round(
             F.sum("mon_c").cast("double") / F.count("*").cast("double") / F.lit(100.0),
-            decimals,
+            2,
         ).alias("avg_monetary"),
     )
 
 
 def simpsons_paradox_check(
     events: DataFrame,
-    segment_col: str = "event_type",
-    unit_col: str = "user_id",
-    value_col: str = "value",
-    decimals: int = 6,
 ) -> DataFrame:
     """Simpson's-paradox audit for the hash-split experiment: compare the
     arm-1 − arm-0 mean-value difference OVERALL against the same
@@ -1459,13 +1356,13 @@ def simpsons_paradox_check(
     """
     from ..functions.hashing import token_code
 
-    arm = (token_code(F.col(unit_col).cast("string")) % 2).cast("int")
+    arm = (token_code(F.col("user_id").cast("string")) % 2).cast("int")
     dec = "decimal(30,10)"
     cells = events.groupBy(
-        F.col(segment_col).alias("seg"), arm.alias("arm")
+        F.col("event_type").alias("seg"), arm.alias("arm")
     ).agg(
         F.count("*").cast("long").alias("n"),
-        F.round(F.sum(F.col(value_col).cast(dec)) * 100, 0)
+        F.round(F.sum(F.col("value").cast(dec)) * 100, 0)
         .cast("long")
         .alias("sc"),
     )
@@ -1501,9 +1398,9 @@ def simpsons_paradox_check(
         F.col("seg").alias("segment"),
         F.col("n0").cast("bigint").alias("n_arm0"),
         F.col("n1").cast("bigint").alias("n_arm1"),
-        F.round(mean("s0", "n0"), decimals).alias("mean_arm0"),
-        F.round(mean("s1", "n1"), decimals).alias("mean_arm1"),
-        F.round(d_seg, decimals).alias("diff"),
+        F.round(mean("s0", "n0"), 6).alias("mean_arm0"),
+        F.round(mean("s1", "n1"), 6).alias("mean_arm1"),
+        F.round(d_seg, 6).alias("diff"),
         (F.signum(d_seg) == F.signum(d_all)).cast("int").alias(
             "agrees_with_overall"
         ),
@@ -1514,9 +1411,9 @@ def simpsons_paradox_check(
             F.lit("OVERALL").alias("segment"),
             F.col("tn0").cast("bigint").alias("n_arm0"),
             F.col("tn1").cast("bigint").alias("n_arm1"),
-            F.round(mean("ts0", "tn0"), decimals).alias("mean_arm0"),
-            F.round(mean("ts1", "tn1"), decimals).alias("mean_arm1"),
-            F.round(d_all, decimals).alias("diff"),
+            F.round(mean("ts0", "tn0"), 6).alias("mean_arm0"),
+            F.round(mean("ts1", "tn1"), 6).alias("mean_arm1"),
+            F.round(d_all, 6).alias("diff"),
             F.lit(1).cast("int").alias("agrees_with_overall"),
         )
     )
@@ -1525,11 +1422,8 @@ def simpsons_paradox_check(
 
 def user_hour_divergence(
     events: DataFrame,
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
     top_k: int = 20,
     min_events: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Bot / automation screen: the ``top_k`` users whose hour-of-day
     activity histogram most diverges (KL) from the corpus's global
@@ -1546,13 +1440,13 @@ def user_hour_divergence(
     Output: ``(user_id, n_events, kl)`` — top_k by (kl desc, user asc).
     """
     hrs = list(range(24))
-    h = F.hour(F.col(ts_col))
+    h = F.hour(F.col("ts"))
     # lazy checkpoint: the global profile is an aggregate OF the user
     # table; without it the crossJoin's second branch would rescan the
     # facts.  A whole-table window here would SinglePartition the USER
     # grain — fine at 10⁴ users, wrong at 10⁹ — the 1-row aggregate
     # keeps partial aggregation distributed.
-    per = events.groupBy(F.col(unit_col).alias("u")).agg(
+    per = events.groupBy(F.col("user_id").alias("u")).agg(
         F.count("*").cast("long").alias("n"),
         *[
             F.sum((h == i).cast("int")).cast("long").alias(f"h{i}")
@@ -1571,21 +1465,18 @@ def user_hour_divergence(
         term = F.when(F.col(f"h{i}") > 0, p * F.log(p / q)).otherwise(F.lit(0.0))
         kl = term if kl is None else kl + term
     scored = g.filter(F.col("n") >= min_events).select(
-        F.col("u").alias(unit_col),
+        F.col("u").alias("user_id"),
         F.col("n").cast("bigint").alias("n_events"),
-        F.round(kl, decimals).alias("kl"),
+        F.round(kl, 6).alias("kl"),
     )
-    return scored.orderBy(F.col("kl").desc(), F.col(unit_col).asc()).limit(top_k)
+    return scored.orderBy(F.col("kl").desc(), F.col("user_id").asc()).limit(top_k)
 
 
 def association_rules(
     events: DataFrame,
-    unit_cols: tuple = ("user_id",),
-    ts_col: str = "ts",
     min_support: float = 0.01,
     min_confidence: float = 0.2,
     max_items_per_basket: int = 50,
-    decimals: int = 6,
 ) -> DataFrame:
     """Directional association rules a→b over (user, day) baskets of
     items (``props.k``): support, confidence, and lift — the classic
@@ -1601,8 +1492,8 @@ def association_rules(
     Output: rules passing both thresholds —
     ``(antecedent, consequent, n_both, support, confidence, lift)``.
     """
-    day = F.date_trunc("day", F.col(ts_col))
-    basket_cols = [F.col(c) for c in unit_cols] + [day.alias("dy")]
+    day = F.date_trunc("day", F.col("ts"))
+    basket_cols = [F.col(c) for c in ("user_id",)] + [day.alias("dy")]
     items = (
         events.select(
             *basket_cols, F.get_json_object("props", "$.k").alias("item")
@@ -1610,7 +1501,7 @@ def association_rules(
         .filter(F.col("item").isNotNull())
         .distinct()
     )
-    bkey = [*(str(c) for c in unit_cols), "dy"]
+    bkey = [*(str(c) for c in ("user_id",)), "dy"]
     sizes = items.groupBy(*bkey).agg(F.count("*").alias("c"))
     ok = sizes.filter(F.col("c") <= max_items_per_basket).select(*bkey)
     items = items.join(F.broadcast(ok), bkey).localCheckpoint(eager=False)
@@ -1648,19 +1539,15 @@ def association_rules(
         (support >= min_support) & (conf >= min_confidence)
     ).select(
         "antecedent", "consequent", "n_both",
-        F.round(support, decimals).alias("support"),
-        F.round(conf, decimals).alias("confidence"),
-        F.round(lift, decimals).alias("lift"),
+        F.round(support, 6).alias("support"),
+        F.round(conf, 6).alias("confidence"),
+        F.round(lift, 6).alias("lift"),
     )
 
 
 def panel_user_slopes(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
     min_days: int = 3,
-    decimals: int = 6,
 ) -> DataFrame:
     """Panel trend: each user's OLS slope of daily value over their own
     day index, summarized by the slope distribution's quartiles — the
@@ -1677,11 +1564,11 @@ def panel_user_slopes(
     frac_positive)`` — slope in value units per day.
     """
     dec = "decimal(30,10)"
-    day = F.to_date(ts_col)
+    day = F.to_date("ts")
     daily = events.groupBy(
-        F.col(user_col).alias("u"), day.alias("d")
+        F.col("user_id").alias("u"), day.alias("d")
     ).agg(
-        F.round(F.sum(F.col(value_col).cast(dec)) * 100, 0)
+        F.round(F.sum(F.col("value").cast(dec)) * 100, 0)
         .cast("long")
         .alias("yc")
     )
@@ -1711,24 +1598,19 @@ def panel_user_slopes(
     )
     return slopes.agg(
         F.count("*").cast("bigint").alias("n_users"),
-        F.round(F.percentile("s", F.lit(0.5)), decimals).alias("median_slope"),
-        F.round(F.percentile("s", F.lit(0.25)), decimals).alias("p25_slope"),
-        F.round(F.percentile("s", F.lit(0.75)), decimals).alias("p75_slope"),
+        F.round(F.percentile("s", F.lit(0.5)), 6).alias("median_slope"),
+        F.round(F.percentile("s", F.lit(0.25)), 6).alias("p25_slope"),
+        F.round(F.percentile("s", F.lit(0.75)), 6).alias("p75_slope"),
         F.round(
             F.sum((F.col("s") > 0).cast("long")).cast("double")
             / F.count("*").cast("double"),
-            decimals,
+            6,
         ).alias("frac_positive"),
     )
 
 
 def kitagawa_rate_decomposition(
     events: DataFrame,
-    segment_col: str = "event_type",
-    unit_col: str = "user_id",
-    conversion_type: str = "purchase",
-    ts_col: str = "ts",
-    decimals: int = 6,
 ) -> DataFrame:
     """Kitagawa/Oaxaca decomposition of a conversion-rate change between
     the corpus's two halves: ΔRate splits exactly into a RATE effect
@@ -1741,20 +1623,19 @@ def kitagawa_rate_decomposition(
     Here the unit is an EVENT and a segment's rate is the fraction of
     its events that are conversions; segments are event sources... wait —
     conversions ARE a type, so segments come from ``user_id`` parity
-    cohorts (hash buckets) to keep the demo self-contained; pass your
-    own ``segment_col`` in production.
+    cohorts (hash buckets) to keep the demo self-contained.
 
     Output: per-segment contributions + an ``OVERALL`` row whose two
     effects sum to the observed Δ.  All counts exact integers.
     """
     from ..functions.hashing import token_code
 
-    e = F.col(ts_col).cast("double")
+    e = F.col("ts").cast("double")
     b = F.broadcast(events.agg(F.min(e).alias("e0"), F.max(e).alias("e1")))
     ev = events.crossJoin(b)
     era = (e >= (F.col("e0") + F.col("e1")) / F.lit(2.0)).cast("int")
-    seg = (token_code(F.col(unit_col).cast("string")) % 4).cast("int")
-    conv = (F.col(segment_col) == conversion_type).cast("int")
+    seg = (token_code(F.col("user_id").cast("string")) % 4).cast("int")
+    conv = (F.col("event_type") == "purchase").cast("int")
     cells = ev.groupBy(seg.alias("seg"), era.alias("era")).agg(
         F.count("*").cast("long").alias("n"),
         F.sum(conv).cast("long").alias("c"),
@@ -1782,10 +1663,10 @@ def kitagawa_rate_decomposition(
     w2 = F.col("n2").cast("double") / F.col("tn2").cast("double")
     seg_rows = g.filter((F.col("n1") > 0) & (F.col("n2") > 0)).select(
         F.col("seg").cast("string").alias("segment"),
-        F.round(r1, decimals).alias("rate_old"),
-        F.round(r2, decimals).alias("rate_new"),
-        F.round(w2 * (r2 - r1), decimals).alias("rate_effect"),
-        F.round((w2 - w1) * r1, decimals).alias("mix_effect"),
+        F.round(r1, 6).alias("rate_old"),
+        F.round(r2, 6).alias("rate_new"),
+        F.round(w2 * (r2 - r1), 6).alias("rate_effect"),
+        F.round((w2 - w1) * r1, 6).alias("mix_effect"),
     )
     tr1 = F.col("tc1").cast("double") / F.col("tn1").cast("double")
     tr2 = F.col("tc2").cast("double") / F.col("tn2").cast("double")
@@ -1810,22 +1691,17 @@ def kitagawa_rate_decomposition(
     sme = sum((F.col(f"me{k}") for k in range(1, 4)), F.col("me0"))
     overall = agg1.select(
         F.lit("OVERALL").alias("segment"),
-        F.round(F.col("tr1"), decimals).alias("rate_old"),
-        F.round(F.col("tr2"), decimals).alias("rate_new"),
-        F.round(sre, decimals).alias("rate_effect"),
-        F.round(sme, decimals).alias("mix_effect"),
+        F.round(F.col("tr1"), 6).alias("rate_old"),
+        F.round(F.col("tr2"), 6).alias("rate_new"),
+        F.round(sre, 6).alias("rate_effect"),
+        F.round(sme, 6).alias("mix_effect"),
     )
     return seg_rows.unionByName(overall)
 
 
 def qini_curve(
     events: DataFrame,
-    unit_col: str = "user_id",
-    value_col: str = "value",
-    conversion_type: str = "purchase",
-    type_col: str = "event_type",
     n_buckets: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Qini (uplift gain) curve over score deciles for the hash-split
     experiment: rank users by a targeting score (here their value total
@@ -1846,11 +1722,11 @@ def qini_curve(
     from ..functions.hashing import token_code
 
     dec = "decimal(30,10)"
-    per = events.groupBy(F.col(unit_col).alias("u")).agg(
-        F.round(F.sum(F.col(value_col).cast(dec)) * 100, 0)
+    per = events.groupBy(F.col("user_id").alias("u")).agg(
+        F.round(F.sum(F.col("value").cast(dec)) * 100, 0)
         .cast("long")
         .alias("score"),
-        F.max((F.col(type_col) == conversion_type).cast("int")).alias("conv"),
+        F.max((F.col("event_type") == "purchase").cast("int")).alias("conv"),
     )
     arm = (token_code(F.col("u").cast("string")) % 2).cast("int")
     qs = [i / n_buckets for i in range(1, n_buckets)]
@@ -1901,18 +1777,13 @@ def qini_curve(
         F.col("cnc").cast("bigint").alias("n_ctrl"),
         F.col("cct").cast("bigint").alias("conv_treat"),
         F.col("ccc").cast("bigint").alias("conv_ctrl"),
-        (F.round(qini, decimals) + F.lit(0.0)).alias("qini"),
+        (F.round(qini, 6) + F.lit(0.0)).alias("qini"),
     )
 
 
 def funnel_ab_compare(
     events: DataFrame,
     stages: list[str],
-    unit_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    decimals: int = 6,
 ) -> DataFrame:
     """Ordered-funnel completion per experiment arm with a two-proportion
     z-test per stage — the "WHERE in the funnel did the treatment act?"
@@ -1930,25 +1801,25 @@ def funnel_ab_compare(
     from ..functions.hashing import token_code
 
     w = (
-        Window.partitionBy(unit_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     df = events
     flags = []
     prev = None
     for i, stage in enumerate(stages):
-        hit = F.col(type_col) == stage
+        hit = F.col("event_type") == stage
         if prev is not None:
             hit = hit & (F.col(prev) == 1)
         flag = f"__s{i}"
         df = df.withColumn(flag, F.max(F.when(hit, 1).otherwise(0)).over(w))
         prev = flag
         flags.append(flag)
-    per_user = df.groupBy(unit_col).agg(
+    per_user = df.groupBy("user_id").agg(
         *[F.max(f).alias(f) for f in flags]
     )
-    arm = (token_code(F.col(unit_col).cast("string")) % 2).cast("int")
+    arm = (token_code(F.col("user_id").cast("string")) % 2).cast("int")
     agg = per_user.select(arm.alias("arm"), *flags).agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
         .cast("long").alias("u0"),
@@ -1979,9 +1850,9 @@ def funnel_ab_compare(
                 F.lit(stage).alias("stage"),
                 F.col(f"s{i}a0").cast("bigint").alias("n_arm0"),
                 F.col(f"s{i}a1").cast("bigint").alias("n_arm1"),
-                F.round(p0, decimals).alias("rate_arm0"),
-                F.round(p1, decimals).alias("rate_arm1"),
-                F.round(z, decimals).alias("z_score"),
+                F.round(p0, 6).alias("rate_arm0"),
+                F.round(p1, 6).alias("rate_arm1"),
+                F.round(z, 6).alias("z_score"),
             )
         )
     return agg.select(F.explode(F.array(*rows)).alias("r")).select(
@@ -1992,9 +1863,7 @@ def funnel_ab_compare(
 
 def topk_persistence(
     events: DataFrame,
-    ts_col: str = "ts",
     k: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Persistence of daily top-k items: for each item (``props.k``),
     how many days it ranked in the day's top-k by event count, and its
@@ -2013,7 +1882,7 @@ def topk_persistence(
     run per day over item-grain rows; island detection per item over its
     qualifying days (≤ calendar length).
     """
-    day = F.date_trunc("day", F.col(ts_col))
+    day = F.date_trunc("day", F.col("ts"))
     daily = events.select(
         day.alias("day"), F.get_json_object("props", "$.k").alias("item")
     ).filter(F.col("item").isNotNull()).groupBy("day", "item").agg(
@@ -2045,10 +1914,6 @@ def topk_persistence(
 
 def next_item_training_pairs(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    item_expr: str = "CAST(get_json_object(props, '$.k') AS INT)",
-    event_type: str = "view",
     n_neg_buckets: int = 1024,
     salt: str = "nitp-v1",
 ) -> DataFrame:
@@ -2067,11 +1932,11 @@ def next_item_training_pairs(
     from ..functions.hashing import md5_bucket
 
     base = (
-        events.filter(F.col("event_type") == event_type)
+        events.filter(F.col("event_type") == "view")
         .select(
-            F.col(user_col).alias("user_id"),
-            F.expr(item_expr).alias("context_item"),
-            F.col(ts_col).alias("__ts"),
+            F.col("user_id"),
+            F.expr("CAST(get_json_object(props, '$.k') AS INT)").alias("context_item"),
+            F.col("ts").alias("__ts"),
             F.col("event_id"),
         )
         .filter(F.col("context_item").isNotNull())
@@ -2100,11 +1965,6 @@ def next_item_training_pairs(
 def shapley_attribution(
     events: DataFrame,
     channels: tuple[str, ...] = ("click", "error", "signup", "view"),
-    convert_type: str = "purchase",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    decimals: int = 6,
 ) -> DataFrame:
     """EXACT Shapley-value attribution (the game-theoretic gold standard
     the heuristics in this module — last-touch, time-decay, positional —
@@ -2137,17 +1997,17 @@ def shapley_attribution(
         raise ValueError(f"channel alphabet too large for the exact lattice: {n}")
     spark = events.sparkSession
     first_conv = (
-        events.filter(F.col(type_col) == convert_type)
-        .groupBy(F.col(user_col).alias("u"))
-        .agg(F.min(ts_col).alias("conv_ts"))
+        events.filter(F.col("event_type") == "purchase")
+        .groupBy(F.col("user_id").alias("u"))
+        .agg(F.min("ts").alias("conv_ts"))
     )
     pre = (
-        events.join(first_conv, events[user_col] == F.col("u"))
+        events.join(first_conv, events["user_id"] == F.col("u"))
         .filter(
-            (F.col(ts_col) < F.col("conv_ts"))
-            & (F.col(type_col) != convert_type)
+            (F.col("ts") < F.col("conv_ts"))
+            & (F.col("event_type") != "purchase")
         )
-        .select("u", F.col(type_col).alias("t"))
+        .select("u", F.col("event_type").alias("t"))
         .distinct()
     )
     masks = (
@@ -2210,7 +2070,7 @@ def shapley_attribution(
         .crossJoin(totals)
         .select(
             "channel",
-            F.round(F.col("num").cast("double") / F.lit(float(denom)), decimals)
+            F.round(F.col("num").cast("double") / F.lit(float(denom)), 6)
             .alias("shapley_credit"),
             "n_conversions",
         )
@@ -2219,11 +2079,6 @@ def shapley_attribution(
 
 def click_position_bias(
     events: DataFrame,
-    position_col: str = "position",
-    type_col: str = "event_type",
-    impression_type: str = "view",
-    click_type: str = "click",
-    decimals: int = 6,
 ) -> DataFrame:
     """Rank-CTR position-bias curve (the COEC denominator every
     counterfactual learning-to-rank pipeline needs): per display
@@ -2241,9 +2096,9 @@ def click_position_bias(
     the two final ratios.
     """
     rows = events.select(
-        F.col(position_col).alias("position"),
-        (F.col(type_col) == impression_type).cast("long").alias("imp"),
-        (F.col(type_col) == click_type).cast("long").alias("clk"),
+        F.col("position"),
+        (F.col("event_type") == "view").cast("long").alias("imp"),
+        (F.col("event_type") == "click").cast("long").alias("clk"),
     )
     g = rows.groupBy("position").agg(
         F.sum("imp").cast("bigint").alias("impressions"),
@@ -2256,7 +2111,7 @@ def click_position_bias(
             F.round(
                 F.col("clicks").cast("double")
                 / F.col("impressions").cast("double"),
-                decimals,
+                6,
             ),
         ),
     )
@@ -2275,17 +2130,13 @@ def click_position_bias(
         "position", "impressions", "clicks", "ctr",
         F.when(
             F.col("top_ctr") > 0,
-            F.round(F.col("ctr") / F.col("top_ctr"), decimals),
+            F.round(F.col("ctr") / F.col("top_ctr"), 6),
         ).alias("bias_vs_top"),
     )
 
 
 def ipw_treatment_effect(
     df: DataFrame,
-    stratum_col: str = "stratum",
-    treated_col: str = "treated",
-    outcome_col: str = "outcome",
-    decimals: int = 6,
 ) -> DataFrame:
     """Inverse-propensity-weighted treatment effect with stratum-
     estimated propensities and Hájek (self-normalized) weighting — the
@@ -2309,9 +2160,9 @@ def ipw_treatment_effect(
     weight.  Weighted sums round to 4 dp and accumulate as DECIMAL.
     """
     rows = df.select(
-        F.col(stratum_col).alias("s"),
-        F.col(treated_col).cast("int").alias("t"),
-        F.col(outcome_col).cast("double").alias("y"),
+        F.col("stratum").alias("s"),
+        F.col("treated").cast("int").alias("t"),
+        F.col("outcome").cast("double").alias("y"),
     )
     prop = rows.groupBy("s").agg(
         F.count("*").cast("long").alias("nb"),
@@ -2345,21 +2196,18 @@ def ipw_treatment_effect(
         "n_excluded_strata",
         F.round(
             F.col("ty") / F.col("n_treated") - F.col("cy") / F.col("nc"),
-            decimals,
+            6,
         ).alias("naive_diff"),
         F.round(
-            F.col("twy") / F.col("tw") - F.col("cwy") / F.col("cw"), decimals
+            F.col("twy") / F.col("tw") - F.col("cwy") / F.col("cw"), 6
         ).alias("ipw_ate"),
     )
 
 
 def regression_discontinuity(
     df: DataFrame,
-    running_col: str = "running",
-    outcome_col: str = "outcome",
     cutoff: float = 0.0,
     bandwidth: float = 1.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Sharp regression-discontinuity estimate by LOCAL LINEAR fits: a
     closed-form OLS line on each side of the cutoff within ±bandwidth,
@@ -2377,8 +2225,8 @@ def regression_discontinuity(
     on the 2-row frame.
     """
     rows = df.select(
-        (F.col(running_col).cast("double") - F.lit(float(cutoff))).alias("x"),
-        F.col(outcome_col).cast("double").alias("y"),
+        (F.col("running").cast("double") - F.lit(float(cutoff))).alias("x"),
+        F.col("outcome").cast("double").alias("y"),
     ).filter(
         (F.col("x") >= -F.lit(float(bandwidth)))
         & (F.col("x") < F.lit(float(bandwidth)))
@@ -2400,7 +2248,7 @@ def regression_discontinuity(
     pred = side.select(
         "right",
         F.col("n"),
-        F.round((F.col("sy") - slope * F.col("sx")) / F.col("n"), decimals)
+        F.round((F.col("sy") - slope * F.col("sx")) / F.col("n"), 6)
         .alias("pred_at_cutoff"),
     )
     left = pred.filter(~F.col("right")).select(
@@ -2415,17 +2263,14 @@ def regression_discontinuity(
         F.col("n_right").cast("bigint").alias("n_right"),
         "left_pred",
         "right_pred",
-        F.round(F.col("right_pred") - F.col("left_pred"), decimals)
+        F.round(F.col("right_pred") - F.col("left_pred"), 6)
         .alias("rd_estimate"),
     )
 
 
 def ucb1_ranking(
     events: DataFrame,
-    item_col: str = "item",
-    reward_col: str = "reward",
     top: int = 20,
-    decimals: int = 6,
 ) -> DataFrame:
     """UCB1 bandit scores (Auer et al. 2002) over logged interactions:
     per item, mean reward plus the exploration bonus √(2·ln N / n) —
@@ -2443,20 +2288,20 @@ def ucb1_ranking(
     partials) + a broadcast 1-row total; the TakeOrdered top-k never
     sorts the full arm table.
     """
-    arms = events.groupBy(F.col(item_col).alias("item")).agg(
+    arms = events.groupBy(F.col("item")).agg(
         F.count("*").cast("long").alias("n_pulls"),
-        F.sum(F.col(reward_col).cast("double")).alias("rsum"),
+        F.sum(F.col("reward").cast("double")).alias("rsum"),
     )
     tot = F.broadcast(arms.agg(F.sum("n_pulls").cast("double").alias("N")))
     scored = arms.crossJoin(tot).select(
         "item",
         F.col("n_pulls").cast("bigint").alias("n_pulls"),
-        F.round(F.col("rsum") / F.col("n_pulls"), decimals)
+        F.round(F.col("rsum") / F.col("n_pulls"), 6)
         .alias("mean_reward"),
         F.round(
             F.col("rsum") / F.col("n_pulls")
             + F.sqrt(2.0 * F.log(F.col("N")) / F.col("n_pulls")),
-            decimals,
+            6,
         ).alias("ucb"),
     )
     return scored.orderBy(F.col("ucb").desc(), F.col("item").asc()).limit(
@@ -2466,11 +2311,8 @@ def ucb1_ranking(
 
 def bradley_terry_ranks(
     comparisons: DataFrame,
-    winner_col: str = "winner",
-    loser_col: str = "loser",
     iters: int = 2,
     top: int = 20,
-    decimals: int = 6,
 ) -> DataFrame:
     """Bradley-Terry strength estimation from pairwise outcomes by
     ``iters`` UNROLLED minorization-maximization steps (Hunter 2004) —
@@ -2496,7 +2338,7 @@ def bradley_terry_ranks(
     iteration lineage never re-runs.
     """
     raw = comparisons.select(
-        F.col(winner_col).alias("w"), F.col(loser_col).alias("l")
+        F.col("winner").alias("w"), F.col("loser").alias("l")
     ).filter(F.col("w") != F.col("l"))
     pairs = (
         raw.select(
@@ -2592,7 +2434,7 @@ def bradley_terry_ranks(
             "item",
             "n_wins",
             F.col("n_matches").cast("bigint").alias("n_matches"),
-            F.round(F.col("wt"), decimals).alias("strength"),
+            F.round(F.col("wt"), 6).alias("strength"),
         )
         .orderBy(F.col("strength").desc(), F.col("item").asc())
         .limit(int(top))

@@ -31,7 +31,6 @@ def target_encode_loo(
     cat_col: str,
     target_col: str,
     prior_weight: float = 10.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Leave-one-out target encoding with m-estimate smoothing:
 
@@ -72,7 +71,7 @@ def target_encode_loo(
             F.round(
                 ((F.col("s") - F.col("y")).cast("double") + m * F.col("gmean"))
                 / (F.col("n") - 1 + m).cast("double"),
-                decimals,
+                6,
             ).alias("enc"),
         )
     )

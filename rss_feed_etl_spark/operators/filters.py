@@ -83,10 +83,10 @@ def filter_keywords(
     return df.filter(cond)
 
 
-def validate_keys(df: DataFrame, key: str = "link") -> DataFrame:
+def validate_keys(df: DataFrame) -> DataFrame:
     """Reject null/blank primary keys (reference P7,
     scd1_manager.py:179-215 drops and warns; we filter lazily)."""
-    k = F.col(key)
+    k = F.col("link")
     return df.filter(k.isNotNull() & (F.trim(k.cast("string")) != ""))
 
 

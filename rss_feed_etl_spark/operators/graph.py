@@ -25,10 +25,6 @@ from pyspark.sql import functions as F
 
 def transition_edges(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    node_expr: str = "event_type",
 ) -> DataFrame:
     """(src, dst, weight) edges from consecutive events of the same user —
     the classic clickstream transition graph.
@@ -36,8 +32,8 @@ def transition_edges(
     One per-user window (single shuffle on the user key) produces the lag
     pairs; the edge-weight aggregate is a second shuffle on (src, dst).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
-    node = F.expr(node_expr)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    node = F.expr("event_type")
     return (
         events.select(
             F.lag(node).over(w).alias("src"), node.alias("dst")
@@ -52,7 +48,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    decimals: int = 6,
 ) -> DataFrame:
     """Weighted PageRank with a FIXED number of power iterations.
 
@@ -122,10 +117,10 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-    return ranks.select("node", F.round("rank", decimals).alias("rank"))
+    return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count over an undirected edge list (a < b, distinct)
     — the clustering-coefficient / community-density primitive.
 
@@ -137,7 +132,7 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
     makes quadratic).  One join builds wedges, one semi-join closes them
     against the oriented edge set; per-vertex degrees ride in broadcast.
     """
-    e = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).distinct()
+    e = edges.select(F.col("a"), F.col("b")).distinct()
     deg = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
@@ -183,11 +178,6 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
 def transition_probabilities(
     events: DataFrame,
     alpha: float = 1.0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    node_expr: str = "event_type",
-    decimals: int = 6,
 ) -> DataFrame:
     """Laplace-smoothed Markov transition matrix over the clickstream:
     P(dst | src) = (count(src→dst) + α) / (count(src→*) + α·|states|) —
@@ -198,8 +188,8 @@ def transition_probabilities(
     aggregate, a state-grain dimension cross join to densify the matrix
     (|states|² rows — tiny), and per-src totals broadcast back.
     """
-    edges = transition_edges(events, user_col, ts_col, tiebreak_col, node_expr)
-    states = events.select(F.expr(node_expr).alias("s")).distinct()
+    edges = transition_edges(events)
+    states = events.select(F.expr("event_type").alias("s")).distinct()
     k = states.agg(F.count("*").cast("int").alias("k"))
     dense = (
         states.select(F.col("s").alias("src"))
@@ -218,7 +208,7 @@ def transition_probabilities(
             F.round(
                 (F.col("weight") + F.lit(alpha))
                 / (F.col("__tot") + F.lit(alpha) * F.col("k")),
-                decimals,
+                6,
             ).alias("p"),
         )
     )
@@ -228,8 +218,6 @@ def kcore_membership(
     edges: DataFrame,
     k: int = 3,
     max_iter: int = 20,
-    a_col: str = "a",
-    b_col: str = "b",
 ) -> DataFrame:
     """Nodes of the k-core: the maximal subgraph where every node keeps
     degree ≥ k — the standard "dense kernel" extractor that separates a
@@ -262,7 +250,7 @@ def kcore_membership(
     already-materialized data, not a driver data transfer.
     """
     e = (
-        edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+        edges.select(F.col("a"), F.col("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=False)
@@ -311,10 +299,7 @@ def kcore_membership(
 
 def hits_bipartite(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     iters: int = 2,
-    decimals: int = 6,
 ) -> DataFrame:
     """HITS (Kleinberg) over a bipartite src→dst graph: dst AUTHORITY =
     how much hub mass points at it, src HUB = how much authority it
@@ -339,7 +324,7 @@ def hits_bipartite(
         # final select would crash on None, so fail loudly at entry
         raise ValueError(f"hits_bipartite requires iters >= 1, got {iters!r}")
     e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        F.col("src"), F.col("dst")
     ).distinct().localCheckpoint(eager=True)  # every half-step joins the
     # edge list; without the checkpoint each join re-runs the upstream
     # distinct (the neardup_components discipline)
@@ -386,15 +371,12 @@ def hits_bipartite(
         )
     return auth.select(
         F.col("dst").alias("node"),
-        F.round(F.col("a"), decimals).alias("authority"),
+        F.round(F.col("a"), 6).alias("authority"),
     )
 
 
 def degree_assortativity(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    decimals: int = 6,
 ) -> DataFrame:
     """Degree assortativity of a (bipartite or directed) edge list: the
     Pearson correlation between the source's out-degree and the
@@ -411,7 +393,7 @@ def degree_assortativity(
     adjacency; the Pearson runs on DECIMAL-summed edge-grain moments.
     """
     e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        F.col("src"), F.col("dst")
     ).distinct()
     dout = e.groupBy("src").agg(F.count("*").cast("long").alias("dx"))
     din = e.groupBy("dst").agg(F.count("*").cast("long").alias("dy"))
@@ -432,5 +414,5 @@ def degree_assortativity(
     )
     return agg.select(
         F.col("n").cast("bigint").alias("n_edges"),
-        F.when(den > 0, F.round(num / den, decimals)).alias("assortativity"),
+        F.when(den > 0, F.round(num / den, 6)).alias("assortativity"),
     )

@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 def provenance_outer_join(
     new: DataFrame,
     old: DataFrame,
-    key: str = "link",
-    suffix_old: str = "_old",
 ) -> DataFrame:
     """Full-outer merge with provenance tags (reference J1,
     data_loader.py:147-159): pandas ``indicator=True`` becomes an explicit
@@ -27,40 +25,38 @@ def provenance_outer_join(
     value columns get ``_old`` suffixes like pandas' ``suffixes``."""
     n = F.broadcast(new).withColumn("__pn", F.lit(1))
     o = old.withColumn("__po", F.lit(1))
-    value_cols_new = [c for c in new.columns if c != key]
-    value_cols_old = [c for c in old.columns if c != key]
-    j = n.alias("n").join(o.alias("o"), on=key, how="full_outer")
+    value_cols_new = [c for c in new.columns if c != "link"]
+    value_cols_old = [c for c in old.columns if c != "link"]
+    j = n.alias("n").join(o.alias("o"), on="link", how="full_outer")
     prov = (
         F.when(F.col("n.__pn").isNotNull() & F.col("o.__po").isNotNull(), F.lit("both"))
         .when(F.col("n.__pn").isNotNull(), F.lit("left_only"))
         .otherwise(F.lit("right_only"))
     )
     return j.select(
-        F.col(key),
+        F.col("link"),
         *[F.col(f"n.{c}").alias(c) for c in value_cols_new],
-        *[F.col(f"o.{c}").alias(f"{c}{suffix_old}") for c in value_cols_old],
+        *[F.col(f"o.{c}").alias(f"{c}_old") for c in value_cols_old],
         prov.alias("provenance"),
     )
 
 
-def removed_keys(new: DataFrame, history: DataFrame, key: str = "link") -> DataFrame:
+def removed_keys(new: DataFrame, history: DataFrame) -> DataFrame:
     """Keys current-in-history but absent from the batch (reference J3,
     ``set(current) - set(new)`` at data_loader.py:295) → left-anti join."""
     h = history.filter(F.col("current_flag") == 1)
-    return h.join(F.broadcast(new.select(key)), on=key, how="left_anti")
+    return h.join(F.broadcast(new.select("link")), on="link", how="left_anti")
 
 
-def updated_keys(new: DataFrame, history: DataFrame, key: str = "link") -> DataFrame:
+def updated_keys(new: DataFrame, history: DataFrame) -> DataFrame:
     """Keys present in both batch and history (reference J4,
     ``new_links & hist_links`` at scd1_manager.py:94-98) → left-semi join."""
-    return new.join(history.select(key), on=key, how="left_semi")
+    return new.join(history.select("link"), on="link", how="left_semi")
 
 
 def lookup_notes(
     df: DataFrame,
     history: DataFrame,
-    key: str = "link",
-    notes_col: str = "notes",
 ) -> DataFrame:
     """Notes lookup-map probe (reference J5, scd1_manager.py:115-129): the
     dict ``link -> notes`` becomes a broadcast hash join + coalesce —
@@ -68,13 +64,16 @@ def lookup_notes(
     from ..functions.text import blank_to_null
 
     lut = F.broadcast(
-        history.filter(F.trim(F.col(notes_col)) != "")
-        .select(key, F.col(notes_col).alias("__hist_notes"))
-        .dropDuplicates([key])
+        history.filter(F.trim(F.col("notes")) != "")
+        .select("link", F.col("notes").alias("__hist_notes"))
+        .dropDuplicates(["link"])
     )
     return (
-        df.join(lut, on=key, how="left")
-        .withColumn(notes_col, F.coalesce(blank_to_null(F.col(notes_col)), F.col("__hist_notes"), F.lit("")))
+        df.join(lut, on="link", how="left")
+        .withColumn(
+            "notes",
+            F.coalesce(blank_to_null(F.col("notes")), F.col("__hist_notes"), F.lit("")),
+        )
         .drop("__hist_notes")
     )
 
@@ -149,7 +148,6 @@ def salted_join(
     right: DataFrame,
     on: str,
     salt: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join with key salting for heavy-hitter skew.
 
@@ -171,7 +169,7 @@ def salted_join(
             right.sparkSession.range(salt).select(F.col("id").cast("int").alias("__salt"))
         )
     )
-    out = l.join(r, on=[on, "__salt"], how=how)
+    out = l.join(r, on=[on, "__salt"], how="inner")
     return out.drop("__salt")
 
 
@@ -242,8 +240,6 @@ def interval_join(
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
-    key: str = "link",
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """(status, n) summary of two table snapshots: added / removed /
     changed / unchanged keys — the read-only diagnostic form of the merge
@@ -258,14 +254,14 @@ def snapshot_diff(
     """
     from .merges import _changed
 
-    compare_cols = compare_cols or [
-        c for c in new.columns if c != key and c in old.columns
+    compare_cols = [
+        c for c in new.columns if c != "link" and c in old.columns
     ]
     j = new.alias("n").join(
-        old.alias("o"), F.col(f"n.{key}") == F.col(f"o.{key}"), "full_outer"
+        old.alias("o"), F.col("n.link") == F.col("o.link"), "full_outer"
     )
-    n_in = F.col(f"n.{key}").isNotNull()
-    o_in = F.col(f"o.{key}").isNotNull()
+    n_in = F.col("n.link").isNotNull()
+    o_in = F.col("o.link").isNotNull()
     status = (
         F.when(n_in & ~o_in, F.lit("added"))
         .when(~n_in & o_in, F.lit("removed"))
@@ -367,15 +363,13 @@ def bloom_build(
     )
 
 
-def bloom_might_contain(
-    key_col: str, bloom_col: str = "__bloom", m: int = 1 << 20, k: int = 3
-):
+def bloom_might_contain(key_col: str, bloom_col: str = "__bloom", m: int = 1 << 20):
     """Membership predicate against a ``bloom_build`` bitmap column.
 
     Built as one SQL expression (pyspark's shiftrightunsigned only
     accepts a literal shift, the SQL form takes a column)."""
     conds = []
-    for i in range(k):
+    for i in range(3):
         p = f"pmod(xxhash64({i}, {key_col}), {m})"
         w = f"element_at({bloom_col}, CAST({p} / 64 AS INT) + 1)"
         # & 1, not % 2: a zero shift leaves a negative word intact, and
@@ -391,9 +385,6 @@ def bloom_prune_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    num_bits: int = 1 << 20,
-    num_hashes: int = 3,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join with a Bloom-filter pre-prune of the fact side: build a
     bloom over the dim keys (one tiny bit_or aggregate), broadcast the
@@ -408,29 +399,26 @@ def bloom_prune_join(
     earlier pipeline stage, a bitmap reused across several fact scans, or
     a dim arriving from a different source.  At 100 TB the win is the
     point: a 1%-selective dim means ~99% of the fact never enters the
-    shuffle, for the cost of one broadcast bitmap (num_bits/8 bytes;
+    shuffle, for the cost of one broadcast bitmap (2^20/8 bytes;
     false-positive rate ≈ (1 − e^(−k·n/m))^k).
     """
     bf = bloom_build(
-        dim.select(dim_key), dim_key, num_bits=num_bits, num_hashes=num_hashes
+        dim.select(dim_key), dim_key
     )
     pruned = (
         fact.join(F.broadcast(bf))
         .filter(
-            bloom_might_contain(fact_key, "__bloom", m=num_bits, k=num_hashes)
+            bloom_might_contain(fact_key, "__bloom")
         )
         .drop("__bloom", "__m", "__k")
     )
-    return pruned.join(dim, pruned[fact_key] == dim[dim_key], how)
+    return pruned.join(dim, pruned[fact_key] == dim[dim_key], "inner")
 
 
 def scd2_interval_enrich(
     facts: DataFrame,
     versions: DataFrame,
     key: str,
-    ts_col: str = "ts",
-    start_col: str = "effective_start",
-    end_col: str = "effective_end",
     value_cols: list[str] | None = None,
 ) -> DataFrame:
     """Temporal enrichment: attach to every fact row the dimension
@@ -448,18 +436,18 @@ def scd2_interval_enrich(
     """
     value_cols = value_cols or [
         c for c in versions.columns
-        if c not in (key, start_col, end_col, "current_flag")
+        if c not in (key, "effective_start", "effective_end", "current_flag")
     ]
     v = versions.select(
         F.col(key).alias("__k"),
-        F.col(start_col).alias("__s"),
-        F.col(end_col).alias("__e"),
+        F.col("effective_start").alias("__s"),
+        F.col("effective_end").alias("__e"),
         *[F.col(c).alias(f"__v_{c}") for c in value_cols],
     )
     cond = (
         (facts[key] == v["__k"])
-        & (facts[ts_col] >= v["__s"])
-        & (v["__e"].isNull() | (facts[ts_col] < v["__e"]))
+        & (facts["ts"] >= v["__s"])
+        & (v["__e"].isNull() | (facts["ts"] < v["__e"]))
     )
     out = facts.join(v, cond, "left")
     return out.select(

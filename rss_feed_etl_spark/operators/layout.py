@@ -50,7 +50,6 @@ def zorder_scan_advisor(
     natural_col: str,
     n_files: int = 64,
     grid_bits: int = 8,
-    decimals: int = 6,
 ) -> DataFrame:
     """Compare the file-skipping power of the table's NATURAL order (rows
     laid out by ``natural_col``, the ingest-order proxy) against a
@@ -148,12 +147,12 @@ def zorder_scan_advisor(
         F.round(
             F.sum(F.col("fmxx") - F.col("fmnx") + 1).cast("double")
             / (F.count("*") * (F.first("mxx") - F.first("mnx") + 1)).cast("double"),
-            decimals,
+            6,
         ).alias("scan_frac_x"),
         F.round(
             F.sum(F.col("fmxy") - F.col("fmny") + 1).cast("double")
             / (F.count("*") * (F.first("mxy") - F.first("mny") + 1)).cast("double"),
-            decimals,
+            6,
         ).alias("scan_frac_y"),
     )
 
@@ -228,11 +227,7 @@ def shard_assignments(
 
 def shard_source_entropy(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
     n_shards: int = 8,
-    decimals: int = 6,
 ) -> DataFrame:
     """Source-mix quality of the LPT shard layout: per shard, the Shannon
     entropy of its source distribution — the data-loader locality check
@@ -250,8 +245,8 @@ def shard_source_entropy(
     """
     from .textstats import token_count
 
-    a = shard_assignments(df, id_col, token_count(F.col(text_col)), n_shards)
-    j = a.join(df.select(F.col(id_col), F.col(source_col).alias("source")), id_col)
+    a = shard_assignments(df, "doc_id", token_count(F.col("text")), n_shards)
+    j = a.join(df.select(F.col("doc_id"), F.col("source")), "doc_id")
     cells = j.groupBy("shard", "source").agg(F.count("*").alias("c"))
     tot = cells.groupBy("shard").agg(F.sum("c").alias("n"))
     p = F.col("c") / F.col("n").cast("double")
@@ -262,7 +257,7 @@ def shard_source_entropy(
         .agg(
             F.max("n").cast("bigint").alias("n_docs"),
             F.count("*").cast("bigint").alias("n_sources"),
-            F.round(F.sum(term).cast("double"), decimals).alias("entropy"),
+            F.round(F.sum(term).cast("double"), 6).alias("entropy"),
         )
     )
 
@@ -274,7 +269,6 @@ def zorder_clustering_depth(
     natural_col: str,
     n_files: int = 64,
     grid_bits: int = 8,
-    decimals: int = 6,
 ) -> DataFrame:
     """Clustering-depth metric for a layout (Delta OPTIMIZE's health
     number): for each file, how many files' Z-KEY ranges overlap it
@@ -363,7 +357,7 @@ def zorder_clustering_depth(
     return depth.groupBy("layout").agg(
         F.count("*").cast("bigint").alias("n_files"),
         F.round(
-            F.sum("d").cast("double") / F.count("*").cast("double"), decimals
+            F.sum("d").cast("double") / F.count("*").cast("double"), 6
         ).alias("avg_depth"),
         F.max("d").cast("bigint").alias("max_depth"),
     )
@@ -371,9 +365,7 @@ def zorder_clustering_depth(
 
 def partition_granularity_advisor(
     df: DataFrame,
-    ts_col: str = "ts",
     window_days: int = 7,
-    decimals: int = 6,
 ) -> DataFrame:
     """Price time-partition granularity (day / week / month) against a
     typical range query: for the LAST ``window_days`` of the corpus,
@@ -392,29 +384,29 @@ def partition_granularity_advisor(
     at partition-count cardinality.  The query window rides in as a
     broadcast 1-row max aggregate.
     """
-    hi = F.broadcast(df.agg(F.max(F.col(ts_col)).alias("tmax")))
+    hi = F.broadcast(df.agg(F.max(F.col("ts")).alias("tmax")))
     lo = F.col("tmax") - F.expr(f"INTERVAL {int(window_days)} DAYS")
     tagged = (
-        df.select(ts_col)
+        df.select("ts")
         .crossJoin(hi)
         .select(
             F.explode(
                 F.array(
                     F.struct(
                         F.lit("day").alias("g"),
-                        F.date_trunc("day", F.col(ts_col)).alias("p"),
+                        F.date_trunc("day", F.col("ts")).alias("p"),
                     ),
                     F.struct(
                         F.lit("week").alias("g"),
-                        F.date_trunc("week", F.col(ts_col)).alias("p"),
+                        F.date_trunc("week", F.col("ts")).alias("p"),
                     ),
                     F.struct(
                         F.lit("month").alias("g"),
-                        F.date_trunc("month", F.col(ts_col)).alias("p"),
+                        F.date_trunc("month", F.col("ts")).alias("p"),
                     ),
                 )
             ).alias("gp"),
-            (F.col(ts_col) >= lo).cast("long").alias("in_win"),
+            (F.col("ts") >= lo).cast("long").alias("in_win"),
         )
         .select(F.col("gp.g").alias("g"), F.col("gp.p").alias("p"), "in_win")
     )
@@ -438,7 +430,7 @@ def partition_granularity_advisor(
         F.round(
             F.col("rows_read").cast("double")
             / F.col("rows_matching").cast("double"),
-            decimals,
+            6,
         ).alias("read_amplification"),
     )
 
@@ -449,7 +441,6 @@ def zonemap_skip_stats(
     ts_col: str = "l_shipdate",
     file_span: int = 1024,
     window_days: tuple[int, ...] = (7, 30, 90),
-    decimals: int = 6,
 ) -> DataFrame:
     """Measure parquet/Delta zone-map (per-file min-max) skipping for a
     family of trailing date-range predicates on a SIMULATED file layout:
@@ -528,14 +519,14 @@ def zonemap_skip_stats(
         F.round(
             (F.col("n_files") - F.col("files_read")).cast("double")
             / F.col("n_files").cast("double"),
-            decimals,
+            6,
         ).alias("file_skip_ratio"),
         F.when(
             F.col("rows_matching") > 0,
             F.round(
                 F.col("rows_read").cast("double")
                 / F.col("rows_matching").cast("double"),
-                decimals,
+                6,
             ),
         ).alias("read_amplification"),
     )
@@ -546,7 +537,6 @@ def skew_salting_plan(
     key_col: str,
     target_rows_per_task: int = 1000,
     top_n: int = 20,
-    decimals: int = 6,
 ) -> DataFrame:
     """Actionable skew mitigation: for every join/shuffle key whose row
     count exceeds ``target_rows_per_task``, compute the salt factor
@@ -576,7 +566,7 @@ def skew_salting_plan(
     planned = per_key.select(
         "key",
         F.col("rows").cast("bigint").alias("rows"),
-        F.round(F.col("rows") / F.col("n_total"), decimals).alias("share"),
+        F.round(F.col("rows") / F.col("n_total"), 6).alias("share"),
         F.ceil(F.col("rows") / F.lit(int(target_rows_per_task)))
         .cast("bigint")
         .alias("salt_factor"),
@@ -594,7 +584,6 @@ def skew_salting_plan(
 def shuffle_partition_advisor(
     tables: dict[str, "DataFrame"],
     target_partition_mb: float = 128.0,
-    decimals: int = 4,
 ) -> DataFrame:
     """Size ``spark.sql.shuffle.partitions`` from the data instead of the
     200-partition default: for each table (projected to the columns the
@@ -633,7 +622,7 @@ def shuffle_partition_advisor(
             "est_row_bytes",
             F.round(
                 F.col("n_rows") * F.col("est_row_bytes") / F.lit(1048576.0),
-                decimals,
+                4,
             ).alias("est_total_mb"),
             F.lit(float(target_partition_mb)).alias("target_partition_mb"),
             F.greatest(

@@ -58,9 +58,7 @@ def _gram_partials(vec_col: str, dim: int):
 
 def embedding_covariance(
     emb: DataFrame,
-    vec_col: str = "embedding",
     dim: int = 64,
-    decimals: int = 6,
 ) -> DataFrame:
     """Population covariance matrix of an embedding column, as upper-
     triangle entries (i, j, cov) with i ≤ j.
@@ -73,8 +71,8 @@ def embedding_covariance(
     statistics, exactly associative across any partitioning.
     """
     ensure_executors_can_import(emb.sparkSession)
-    parts = emb.select(vec_col).mapInPandas(
-        _gram_partials(vec_col, dim), _PARTIAL_SCHEMA
+    parts = emb.select("embedding").mapInPandas(
+        _gram_partials("embedding", dim), _PARTIAL_SCHEMA
     )
     merged = parts.groupBy("i", "j").agg(
         F.sum("g").alias("g"),
@@ -89,7 +87,7 @@ def embedding_covariance(
     # + 0.0 folds IEEE -0.0 to +0.0: a tiny negative covariance rounds to
     # -0.0, which string-canonicalizers ('-0.0' vs '0.0') treat as a diff
     return merged.select(
-        "i", "j", (F.round(cov, decimals) + F.lit(0.0)).alias("cov")
+        "i", "j", (F.round(cov, 6) + F.lit(0.0)).alias("cov")
     )
 
 
@@ -118,10 +116,7 @@ def _covariance_matrix(emb: DataFrame, vec_col: str, dim: int) -> np.ndarray:
 def pca_project(
     emb: DataFrame,
     k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
-    decimals: int = 6,
 ) -> DataFrame:
     """Project embeddings onto their top-``k`` principal components.
     Output is long-form (id, pc, coord) — hashable, no array column.
@@ -137,7 +132,7 @@ def pca_project(
     distributed PCA; an iterative/sketched variant is only needed once d
     itself is large, not at embedding widths.
     """
-    C = _covariance_matrix(emb, vec_col, dim)
+    C = _covariance_matrix(emb, "embedding", dim)
     vals, vecs = np.linalg.eigh(C)
     order = np.argsort(vals)[::-1][:k]
     V = vecs[:, order]
@@ -149,32 +144,28 @@ def pca_project(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            P = np.round(M @ V, decimals)
+            M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            P = np.round(M @ V, 6)
             n, kk = P.shape
             yield pd.DataFrame(
                 {
-                    "id": np.repeat(pdf[id_col].to_numpy(), kk),
+                    "id": np.repeat(pdf["vec_id"].to_numpy(), kk),
                     "pc": np.tile(np.arange(kk, dtype=np.int32), n),
                     "coord": P.ravel(),
                 }
             )
 
     ensure_executors_can_import(emb.sparkSession)
-    out = emb.select(id_col, vec_col).mapInPandas(
+    out = emb.select("vec_id", "embedding").mapInPandas(
         project, f"id bigint, pc int, coord double"
     )
-    return out.withColumnRenamed("id", id_col)
+    return out.withColumnRenamed("id", "vec_id")
 
 
 def alignment_uniformity(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     t: float = 2.0,
     salt: str = "au-v1",
-    decimals: int = 6,
 ) -> DataFrame:
     """Alignment & uniformity (Wang & Isola 2020) — the two-number
     health check of a contrastive embedding space: *alignment* = mean
@@ -213,9 +204,9 @@ def alignment_uniformity(
     from ..functions.hashing import md5_bucket
 
     emb = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("lab"),
-        F.transform(vec_col, lambda v: v.cast("double")).alias("raw"),
+        F.col("vec_id").alias("id"),
+        F.col("label").alias("lab"),
+        F.transform("embedding", lambda v: v.cast("double")).alias("raw"),
     )
     emb = emb.withColumn("__n", vecmath.norm("raw"))
     emb = emb.select(
@@ -280,7 +271,7 @@ def alignment_uniformity(
         F.round(
             F.sum(F.col("d2").cast("decimal(30,10)")).cast("double")
             / F.count("*"),
-            decimals,
+            6,
         ).alias("alignment"),
     )
     unif = _pairs(emb, []).select(
@@ -292,7 +283,7 @@ def alignment_uniformity(
                 F.sum(F.col("e").cast("decimal(30,10)")).cast("double")
                 / F.count("*")
             ),
-            decimals,
+            6,
         ).alias("uniformity"),
     )
     return align.crossJoin(unif)
@@ -302,11 +293,7 @@ def embedding_mmd_matrix(
     embeddings: DataFrame,
     m: int = 64,
     gamma: float = 1.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     salt: str = "mmd-v1",
-    decimals: int = 6,
 ) -> DataFrame:
     """Pairwise maximum mean discrepancy (Gretton et al. 2012, the
     unbiased MMD²_u estimator) between every two labels' embedding
@@ -340,11 +327,11 @@ def embedding_mmd_matrix(
     from .similarity import _per_query_topk
 
     emb = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("lab"),
-        F.transform(vec_col, lambda v: v.cast("double")).alias("vec"),
+        F.col("vec_id").alias("id"),
+        F.col("label").alias("lab"),
+        F.transform("embedding", lambda v: v.cast("double")).alias("vec"),
         md5_bucket(
-            F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
+            F.concat(F.lit(salt + ":"), F.col("vec_id").cast("string"))
         ).alias("hk"),
     )
     samp = (
@@ -403,7 +390,7 @@ def embedding_mmd_matrix(
             "n_a",
             "n_b",
             F.round(
-                F.col("wa") + F.col("wb") - F.lit(2.0) * F.col("x"), decimals
+                F.col("wa") + F.col("wb") - F.lit(2.0) * F.col("x"), 6
             ).alias("mmd2"),
         )
     )

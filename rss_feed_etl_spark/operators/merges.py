@@ -75,7 +75,6 @@ def merge_scd1(
     batch: DataFrame,
     history: DataFrame,
     key: str = "link",
-    notes_col: str = "notes",
 ) -> DataFrame:
     """SCD1 upsert, no history kept (reference M1, scd1_manager.py:10-176).
 
@@ -92,7 +91,7 @@ def merge_scd1(
     j, n_in, new_rows = _probe(batch, history, key)
     out_cols = [F.col(key)]
     for c in value_cols:
-        if c == notes_col:
+        if c == "notes":
             expr = F.when(
                 n_in, F.coalesce(blank_to_null(F.col(f"n.{c}")), F.col(f"h.{c}"))
             ).otherwise(F.col(f"h.{c}"))
@@ -106,9 +105,6 @@ def merge_scd1(
 def merge_upsert(
     batch: DataFrame,
     history: DataFrame,
-    key: str = "link",
-    notes_col: str = "notes",
-    compare_cols: list[str] | None = None,
     with_flags: bool = False,
 ) -> DataFrame:
     """Legacy upsert with change detection (reference M2,
@@ -116,13 +112,13 @@ def merge_upsert(
     keep the OLD notes when history has any; history-only rows survive
     unchanged; ``with_flags`` adds inserted/updated flags (drives the A1
     metrics)."""
-    value_cols = [c for c in batch.columns if c != key]
-    compare_cols = compare_cols or [c for c in value_cols if c != notes_col]
-    j, n_in, new_rows = _probe(batch, history, key)
+    value_cols = [c for c in batch.columns if c != "link"]
+    compare_cols = [c for c in value_cols if c != "notes"]
+    j, n_in, new_rows = _probe(batch, history, "link")
     changed = n_in & _changed("n", "h", compare_cols)
-    out_cols = [F.col(key)]
+    out_cols = [F.col("link")]
     for c in value_cols:
-        if c == notes_col:
+        if c == "notes":
             expr = F.when(
                 n_in, F.coalesce(blank_to_null(F.col(f"h.{c}")), F.col(f"n.{c}"))
             ).otherwise(F.col(f"h.{c}"))
@@ -133,7 +129,7 @@ def merge_upsert(
         out_cols.append(F.lit(0).alias("inserted"))
         out_cols.append(changed.cast("int").alias("updated"))
     merged_hist = j.select(*out_cols)
-    new_rows = new_rows.select(key, *value_cols)
+    new_rows = new_rows.select("link", *value_cols)
     if with_flags:
         new_rows = new_rows.withColumn("inserted", F.lit(1)).withColumn(
             "updated", F.lit(0)
@@ -144,10 +140,7 @@ def merge_upsert(
 def merge_scd2(
     batch: DataFrame,
     history: DataFrame,
-    key: str = "link",
     as_of: str = "1970-01-01 00:00:00",
-    notes_col: str = "notes",
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Type-2 merge (reference M3, data_loader.py:209-314).
 
@@ -168,14 +161,14 @@ def merge_scd2(
     straight through (scan-only — the 100 TB closed tail never joins).
     """
     scd_cols = ["effective_start", "effective_end", "current_flag"]
-    value_cols = [c for c in batch.columns if c != key]
-    compare_cols = compare_cols or [c for c in value_cols if c != notes_col]
+    value_cols = [c for c in batch.columns if c != "link"]
+    compare_cols = [c for c in value_cols if c != "notes"]
     as_of_ts = F.to_timestamp(F.lit(as_of))
 
     current = history.filter(F.col("current_flag") == 1)
     closed = history.filter(F.col("current_flag") != 1)
 
-    j, n_in, new_rows = _probe(batch, current, key)
+    j, n_in, new_rows = _probe(batch, current, "link")
     changed = n_in & _changed("n", "h", compare_cols)
     removed = ~n_in
 
@@ -193,7 +186,7 @@ def merge_scd2(
     )
     changed_version_vals = []
     for c in value_cols:
-        if c == notes_col:
+        if c == "notes":
             changed_version_vals.append(
                 F.coalesce(blank_to_null(F.col(f"n.{c}")), F.col(f"h.{c}")).cast("string")
             )
@@ -210,15 +203,15 @@ def merge_scd2(
             F.when(changed, changed_version),
         )
     )
-    merged = j.select(F.col(key), F.explode(rows).alias("__r")).select(
-        key, *[F.col(f"__r.{c}").alias(c) for c in value_cols + scd_cols]
+    merged = j.select(F.col("link"), F.explode(rows).alias("__r")).select(
+        "link", *[F.col(f"__r.{c}").alias(c) for c in value_cols + scd_cols]
     )
     new_rows = (
         new_rows.select(
-            key,
+            "link",
             *[
                 blank_to_null(F.col(c)).cast("string").alias(c)
-                if c == notes_col
+                if c == "notes"
                 else F.col(c)
                 for c in value_cols
             ],
@@ -227,16 +220,13 @@ def merge_scd2(
         .withColumn("effective_end", F.lit(None).cast("timestamp"))
         .withColumn("current_flag", F.lit(1))
     )
-    closed_proj = closed.select(key, *value_cols, *scd_cols)
+    closed_proj = closed.select("link", *value_cols, *scd_cols)
     return merged.unionByName(new_rows).unionByName(closed_proj)
 
 
 def merge_counts(
     batch: DataFrame,
     history: DataFrame,
-    key: str = "link",
-    notes_col: str = "notes",
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Inserted / updated / removed metrics (reference A1:
     data_loader.py:203-207, 310-314; scd1_manager.py:132-142).
@@ -245,9 +235,9 @@ def merge_counts(
     probe, partial-agg to a single row); inserted counts the anti-join of
     the batch.  No history shuffle anywhere.
     """
-    value_cols = [c for c in batch.columns if c != key]
-    compare_cols = compare_cols or [c for c in value_cols if c != notes_col]
-    j, n_in, new_rows = _probe(batch, history, key)
+    value_cols = [c for c in batch.columns if c != "link"]
+    compare_cols = [c for c in value_cols if c != "notes"]
+    j, n_in, new_rows = _probe(batch, history, "link")
     changed = n_in & _changed("n", "h", compare_cols)
     hist_side = j.agg(
         F.sum(changed.cast("bigint")).alias("updated"),
@@ -257,12 +247,10 @@ def merge_counts(
     return ins.crossJoin(hist_side).select("inserted", "updated", "removed")
 
 
-def sort_output(
-    df: DataFrame, ts_col: str = "published", key: str = "link"
-) -> DataFrame:
+def sort_output(df: DataFrame) -> DataFrame:
     """Stable output ordering: published desc (nulls last), key asc
     (reference O1, scd1_manager.py:158-166)."""
-    return df.orderBy(F.col(ts_col).desc_nulls_last(), F.col(key).asc())
+    return df.orderBy(F.col("published").desc_nulls_last(), F.col("link").asc())
 
 
 def scd2_snapshot_at(history: DataFrame, at: str) -> DataFrame:
@@ -287,10 +275,6 @@ def scd2_snapshot_at(history: DataFrame, at: str) -> DataFrame:
 def cdc_apply_ordered(
     log: DataFrame,
     key: str,
-    op_col: str = "op",
-    seq_cols: tuple[str, str] = ("ts", "event_id"),
-    value_col: str = "value",
-    decimals: int = 6,
 ) -> DataFrame:
     """Apply an ordered change-data-capture log (I/U/D ops) to produce the
     final table state: the LAST op per key wins, and a trailing delete
@@ -310,18 +294,18 @@ def cdc_apply_ordered(
     """
     from pyspark.sql import Window
 
-    s1, s2 = seq_cols
+    s1, s2 = ("ts", "event_id")
     w = Window.partitionBy(key).orderBy(F.desc(s1), F.desc(s2))
     wp = Window.partitionBy(key)
     ranked = log.withColumn("__rn", F.row_number().over(w)).withColumn(
         "n_ops", F.count("*").over(wp).cast("bigint")
     )
     return (
-        ranked.filter((F.col("__rn") == 1) & (F.col(op_col) != F.lit("D")))
+        ranked.filter((F.col("__rn") == 1) & (F.col("op") != F.lit("D")))
         .select(
             F.col(key),
-            F.col(op_col).alias("last_op"),
-            F.round(F.col(value_col), decimals).alias("last_value"),
+            F.col("op").alias("last_op"),
+            F.round(F.col("value"), 6).alias("last_value"),
             F.col(s1).alias("last_ts"),
             F.col("n_ops"),
         )
@@ -330,10 +314,6 @@ def cdc_apply_ordered(
 
 def golden_record(
     members: DataFrame,
-    component_col: str = "component_id",
-    id_col: str = "id",
-    priority_col: str = "priority",
-    field_cols: list[str] | None = None,
 ) -> DataFrame:
     """Survivorship merge ("golden record"): per duplicate cluster, build
     ONE output row whose every field takes the value from the best
@@ -348,9 +328,9 @@ def golden_record(
     fields last — no window, no per-field self-join, map-side combine
     collapses clusters before the exchange.
     """
-    field_cols = field_cols or [
+    field_cols = [
         c for c in members.columns
-        if c not in (component_col, id_col, priority_col)
+        if c not in ("component_id", "id", "priority")
     ]
     # the ordering is encoded as ONE bigint (null-flag ≫ priority ≫ id)
     # instead of a struct: scalar keys have min_by/arg_min equivalents in
@@ -359,11 +339,11 @@ def golden_record(
     for f in field_cols:
         ordk = (
             F.col(f).isNull().cast("bigint") * F.lit(1_000_000_000_000_000)
-            + F.col(priority_col).cast("bigint") * F.lit(10_000_000_000_000)
-            + F.col(id_col).cast("bigint")
+            + F.col("priority").cast("bigint") * F.lit(10_000_000_000_000)
+            + F.col("id").cast("bigint")
         )
         aggs.append(F.min_by(F.col(f), ordk).alias(f))
-    return members.groupBy(F.col(component_col)).agg(
+    return members.groupBy(F.col("component_id")).agg(
         *aggs,
         F.count("*").cast("bigint").alias("n_members"),
     )
@@ -372,10 +352,6 @@ def golden_record(
 def cdc_to_scd2(
     log: DataFrame,
     key: str = "user_id",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-    op_col: str = "op",
-    value_cols: list[str] | None = None,
 ) -> DataFrame:
     """Reconstruct an SCD2 version history from an ordered I/U/D change
     log: every insert/update opens a version effective from its change
@@ -392,14 +368,14 @@ def cdc_to_scd2(
     """
     from pyspark.sql import Window
 
-    value_cols = value_cols or ["value"]
-    w = Window.partitionBy(key).orderBy(F.col(ts_col).asc(), F.col(seq_col).asc())
-    nxt = F.lead(ts_col).over(w)
+    value_cols = ["value"]
+    w = Window.partitionBy(key).orderBy(F.col("ts").asc(), F.col("event_id").asc())
+    nxt = F.lead("ts").over(w)
     staged = log.withColumn("__end", nxt)
-    return staged.filter(F.col(op_col).isin("I", "U")).select(
+    return staged.filter(F.col("op").isin("I", "U")).select(
         key,
         *value_cols,
-        F.col(ts_col).alias("effective_start"),
+        F.col("ts").alias("effective_start"),
         F.col("__end").alias("effective_end"),
         F.col("__end").isNull().cast("int").alias("current_flag"),
     )

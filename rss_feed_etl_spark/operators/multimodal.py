@@ -75,15 +75,15 @@ def _fake_decode(content: bytes) -> tuple[int, int]:
     return (w % 1920) + 1, (h % 1080) + 1
 
 
-def _fake_embedding(content: bytes, dim: int = 16) -> list[float]:
+def _fake_embedding(content: bytes) -> list[float]:
     """STUB feature extractor: production runs a vision encoder over the
     decoded pixels.  Fake: md5-chained bytes → [0,1) floats."""
     out: list[float] = []
     d = content or b""
-    while len(out) < dim:
+    while len(out) < 16:
         d = hashlib.md5(d).digest()
         out.extend(b / 255.0 for b in d)
-    return [round(float(x), 6) for x in out[:dim]]
+    return [round(float(x), 6) for x in out[:16]]
 
 
 def decode_images(media: DataFrame, strict: bool = False) -> DataFrame:
@@ -125,7 +125,7 @@ def decode_images(media: DataFrame, strict: bool = False) -> DataFrame:
     return imgs.mapInPandas(decode, IMAGE_FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000, strict: bool = False) -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """video rows → exploded frame rows via mapInPandas (UDTF shape: one
     input row yields duration/every_ms output rows).
 
@@ -140,10 +140,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, strict: bool = False) 
 
     def explode_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "video frame sampling requires ffmpeg; not available in this environment"
-                )
             rows = []
             for r in pdf.itertuples(index=False):
                 n = max(1, int((r.duration_ms or 0) // every_ms))
@@ -222,9 +218,7 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def extract_audio_features(
-    media: DataFrame, window_ms: int = 1000, strict: bool = False
-) -> DataFrame:
+def extract_audio_features(media: DataFrame, window_ms: int = 1000) -> DataFrame:
     """audio rows → (media_id, n_windows, per-window RMS-like features).
 
     Production decodes with librosa/soundfile and computes per-window RMS;
@@ -240,10 +234,6 @@ def extract_audio_features(
 
     def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "audio decode requires librosa/soundfile; not available here"
-                )
             rows = []
             for r in pdf.itertuples(index=False):
                 n = max(1, int((r.duration_ms or 0) // window_ms))
@@ -271,9 +261,7 @@ FRAME_EMB_SCHEMA = T.StructType(
 )
 
 
-def frame_embeddings(
-    media: DataFrame, every_ms: int = 1000, dim: int = 16, strict: bool = False
-) -> DataFrame:
+def frame_embeddings(media: DataFrame, every_ms: int = 1000, dim: int = 16) -> DataFrame:
     """video rows → long-format per-frame features ``(media_id,
     frame_idx, dim, v)`` via mapInPandas: sample one frame per
     ``every_ms`` and run the feature extractor on each.
@@ -294,10 +282,6 @@ def frame_embeddings(
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "video decode requires ffmpeg; not available in this environment"
-                )
             rows = []
             for r in pdf.itertuples(index=False):
                 n = max(1, int((r.duration_ms or 0) // every_ms))
@@ -328,8 +312,6 @@ def video_embedding_pool(
     media: DataFrame,
     every_ms: int = 1000,
     dim: int = 16,
-    strict: bool = False,
-    decimals: int = 6,
 ) -> DataFrame:
     """Video-level embedding by temporal MEAN POOLING of per-frame
     features — the standard frame-sample → encode → pool pipeline a
@@ -347,12 +329,12 @@ def video_embedding_pool(
     partition order — and the final per-media collect_list holds ``dim``
     values (bounded by the feature width, not by frames or data volume).
     """
-    fe = frame_embeddings(media, every_ms=every_ms, dim=dim, strict=strict)
+    fe = frame_embeddings(media, every_ms=every_ms, dim=dim)
     pooled = fe.groupBy("media_id", "dim").agg(
         F.count("*").cast("int").alias("nf"),
         F.round(
             F.sum(F.col("v").cast("decimal(20,10)")).cast("double") / F.count("*"),
-            decimals,
+            6,
         ).alias("pv"),
     )
     return pooled.groupBy("media_id").agg(
@@ -369,8 +351,6 @@ def video_embedding_pool(
 
 def media_exact_dedup(
     media: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
 ) -> DataFrame:
     """Exact dedup over opaque BINARY media content: group by the md5
     digest of the bytes, keep the smallest id per group, and return the
@@ -388,13 +368,13 @@ def media_exact_dedup(
     swapped for a byte digest (dedup.py:82).
     """
     fp = media.select(
-        F.col(id_col).alias("id"), F.md5(F.col(content_col)).alias("__fp")
+        F.col("media_id").alias("id"), F.md5(F.col("content")).alias("__fp")
     )
     canon = fp.groupBy("__fp").agg(F.min("id").alias("canonical_id"))
     return (
         fp.join(canon, "__fp")
         .filter(F.col("id") != F.col("canonical_id"))
-        .select(F.col("id").alias(id_col), "canonical_id")
+        .select(F.col("id").alias("media_id"), "canonical_id")
     )
 
 
@@ -406,7 +386,7 @@ PHASH_SCHEMA = T.StructType(
 )
 
 
-def image_phash(media: DataFrame, strict: bool = False) -> DataFrame:
+def image_phash(media: DataFrame) -> DataFrame:
     """image rows → (media_id, phash) perceptual fingerprints via one
     Arrow ``mapInPandas`` pass.  Production computes a dHash: resize to
     9×8 grayscale (PIL), emit 64 horizontal-gradient bits — re-encodes,
@@ -430,10 +410,6 @@ def image_phash(media: DataFrame, strict: bool = False) -> DataFrame:
 
     def ph(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "dHash requires PIL; not available in this environment"
-                )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -455,11 +431,8 @@ def image_phash(media: DataFrame, strict: bool = False) -> DataFrame:
 
 def phash_hamming_neardup(
     hashes: DataFrame,
-    id_col: str = "media_id",
-    hash_col: str = "phash",
     bits: int = 60,
     max_hamming: int = 3,
-    max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Near-duplicate media pairs by perceptual-hash Hamming distance ≤
     ``max_hamming`` — ``dedup.simhash_neardup_pairs``'s pigeonhole
@@ -471,8 +444,8 @@ def phash_hamming_neardup(
     misses no pair.  Returns ``(id_a, id_b, hamming)``.
 
     Plan / 100 TB: the only exchange is the bucket groupBy carrying
-    (id, 8-byte hash) — never media bytes; ``max_bucket`` caps the
-    degenerate all-same-hash bucket (the ``ngram_jaccard_pairs``
+    (id, 8-byte hash) — never media bytes; buckets over 10,000 members
+    (the degenerate all-same-hash bucket (the ``ngram_jaccard_pairs``
     guard).  Pairs enumerate inside each bucket's sorted member array
     (expression-level, no join explosion).
     """
@@ -480,14 +453,14 @@ def phash_hamming_neardup(
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
     bands = hashes.select(
-        F.col(id_col).alias("id"),
-        F.col(hash_col).alias("ph"),
+        F.col("media_id").alias("id"),
+        F.col("phash").alias("ph"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftright(F.col(hash_col), b * band_bits)
+                        F.shiftright(F.col("phash"), b * band_bits)
                         .bitwiseAND(F.lit(mask))
                         .alias("val"),
                     )
@@ -501,8 +474,7 @@ def phash_hamming_neardup(
         .agg(F.sort_array(F.collect_list(F.struct("id", "ph"))).alias("members"))
         .filter(F.size("members") >= 2)
     )
-    if max_bucket is not None:
-        grouped = grouped.filter(F.size("members") <= max_bucket)
+    grouped = grouped.filter(F.size("members") <= 10_000)
     pair_structs = ordered_pairs(
         F.col("members"),
         lambda x, y: F.struct(

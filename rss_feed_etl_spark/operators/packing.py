@@ -92,7 +92,6 @@ def packing_fragmentation(
     seq_len: int = 2048,
     salt: str = "pack-v1",
     n_buckets: int = 1024,
-    decimals: int = 6,
 ) -> DataFrame:
     """Fragmentation diagnostics for a :func:`pack_sequences` layout — the
     numbers a pretraining run checks before committing to a sequence
@@ -139,20 +138,18 @@ def packing_fragmentation(
         F.round(
             F.sum("straddled").cast("double")
             / F.sum((F.col("n_tokens") > 0).cast("int")).cast("double"),
-            decimals,
+            6,
         ).alias("straddle_rate"),
         F.round(
             F.sum("spans").cast("double")
             / F.sum((F.col("n_tokens") > 0).cast("int")).cast("double"),
-            decimals,
+            6,
         ).alias("mean_spans"),
     )
 
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 16,
     stride: int = 12,
 ) -> DataFrame:
@@ -170,7 +167,7 @@ def chunk_documents(
     neutral content stamp; join back to the corpus for the text itself.
     """
     w, s = chunk_tokens, stride
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     n_extra = F.ceil(F.greatest(n - w, F.lit(0)) / s).cast("int")
     starts = F.array_distinct(
@@ -180,11 +177,11 @@ def chunk_documents(
         )
     )
     chunked = df.select(
-        F.col(id_col), toks.alias("__toks"), F.posexplode(starts).alias("chunk_idx", "start")
+        F.col("doc_id"), toks.alias("__toks"), F.posexplode(starts).alias("chunk_idx", "start")
     )
     chunk = F.slice("__toks", F.col("start"), w)
     return chunked.select(
-        id_col,
+        "doc_id",
         "chunk_idx",
         "start",
         F.size(chunk).alias("n_tokens"),
@@ -195,7 +192,6 @@ def chunk_documents(
 def length_bucket_batches(
     df: DataFrame,
     token_col: str,
-    key_col: str = "doc_id",
     batch_size: int = 32,
     salt: str = "lenbatch-v1",
 ) -> DataFrame:
@@ -217,9 +213,9 @@ def length_bucket_batches(
     """
     n = F.col(token_col).cast("bigint")
     bucket = F.ceil(F.log2(F.greatest(n, F.lit(1)))).cast("int")
-    pri = F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")))
+    pri = F.md5(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
     staged = df.select(
-        F.col(key_col).alias("key"),
+        F.col("doc_id").alias("key"),
         n.alias("n_tokens"),
         bucket.alias("bucket"),
         pri.alias("pri"),
@@ -245,8 +241,6 @@ def length_bucket_batches(
 
 def span_corruption(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     block: int = 3,
     mask_pct: int = 15,
     salt: str = "t5-v1",
@@ -268,10 +262,10 @@ def span_corruption(
     """
     from ..functions.hashing import md5_bucket
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     nb = F.ceil(F.size("__t") / F.lit(block)).cast("int")
     s1 = df.select(
-        F.col(id_col).alias("id"), toks.alias("__t")
+        F.col("doc_id").alias("id"), toks.alias("__t")
     ).withColumn("__nb", nb)
     masked = F.transform(
         F.sequence(F.lit(0), F.col("__nb") - 1),
@@ -326,7 +320,7 @@ def span_corruption(
         .otherwise(F.lit("")),
     )
     return s3.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.aggregate(F.col("__rs"), F.lit(0), lambda a, x: a + x)
         .cast("bigint")
         .alias("n_spans"),
@@ -342,10 +336,6 @@ def span_corruption(
 def context_overflow_stats(
     docs: DataFrame,
     seq_len: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-source context-window accounting for a fixed ``seq_len``: how
     many training sequences each source's documents need when long docs
@@ -363,9 +353,9 @@ def context_overflow_stats(
     """
     from .textstats import token_count
 
-    n = token_count(F.col(text_col))
+    n = token_count(F.col("text"))
     staged = docs.select(
-        F.col(source_col).alias("source"),
+        F.col("source"),
         n.alias("__n"),
         F.ceil(n / F.lit(float(seq_len))).cast("bigint").alias("__chunks"),
     )
@@ -379,7 +369,7 @@ def context_overflow_stats(
             F.round(
                 (F.sum("__chunks") * seq_len - F.sum("__n"))
                 / (F.sum("__chunks") * F.lit(float(seq_len))),
-                decimals,
+                6,
             ),
         ).otherwise(F.lit(0.0)).alias("pad_ratio"),
     )
@@ -388,9 +378,6 @@ def context_overflow_stats(
 def truncation_loss_curve(
     df: DataFrame,
     cutoffs: tuple[int, ...] = (64, 128, 256, 512),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Token loss under hard truncation at each candidate sequence
     length — the pre-training decision ``pack_sequences`` depends on:
@@ -411,7 +398,7 @@ def truncation_loss_curve(
     from .textstats import token_count
 
     lens = (
-        df.select(token_count(F.col(text_col)).cast("bigint").alias("len"))
+        df.select(token_count(F.col("text")).cast("bigint").alias("len"))
         .groupBy("len")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
@@ -436,14 +423,14 @@ def truncation_loss_curve(
         "n_truncated",
         F.round(
             F.col("n_truncated").cast("double") / F.col("n_docs").cast("double"),
-            decimals,
+            6,
         ).alias("frac_docs_truncated"),
         "tokens_total",
         "tokens_lost",
         F.round(
             F.col("tokens_lost").cast("double")
             / F.col("tokens_total").cast("double"),
-            decimals,
+            6,
         ).alias("frac_tokens_lost"),
     )
 
@@ -451,8 +438,6 @@ def truncation_loss_curve(
 def sft_chat_export(
     df: DataFrame,
     id_col: str = "doc_id",
-    prompt_col: str = "prompt",
-    completion_col: str = "completion",
     system: str = "You are a helpful assistant.",
     budget_tokens: int = 64,
     n_shards: int = 8,
@@ -484,8 +469,8 @@ def sft_chat_export(
     Plan / 100 TB: pure map-only Catalyst expressions — tokenize, slice,
     concat, md5 — no shuffle at all; writers partition by ``shard``.
     """
-    p_toks = tokens(prompt_col)
-    c_toks = tokens(completion_col)
+    p_toks = tokens("prompt")
+    c_toks = tokens("completion")
     n_p = F.size(p_toks)
     n_c = F.size(c_toks)
     keep = F.greatest(F.least(F.lit(budget_tokens) - n_c, n_p), F.lit(0))

@@ -26,11 +26,9 @@ TOP_K = 10
 def key_skew_report(
     df: DataFrame,
     key_col: str,
-    top_k: int = TOP_K,
-    decimals: int = 6,
 ) -> DataFrame:
     """One-row skew profile of ``key_col``: row/key cardinalities, fan-out
-    percentiles, and the share of rows held by the ``top_k`` hottest keys.
+    percentiles, and the share of rows held by the ``TOP_K`` hottest keys.
 
     The per-key count table is the only fact-sized work; everything
     downstream aggregates that (much smaller) table.  ``top{k}_share`` is
@@ -52,13 +50,13 @@ def key_skew_report(
         F.sum("c").cast("bigint").alias("n_rows"),
         F.count("*").cast("bigint").alias("n_keys"),
         F.max("c").cast("bigint").alias("max_per_key"),
-        F.round(F.avg("c"), decimals).alias("avg_per_key"),
+        F.round(F.avg("c"), 6).alias("avg_per_key"),
         F.round(F.percentile("c", F.lit(0.5)), 9).alias("p50_per_key"),
         F.round(F.percentile("c", F.lit(0.99)), 9).alias("p99_per_key"),
     )
     top = (
         counts.orderBy(F.desc("c"), F.asc("k"))
-        .limit(top_k)
+        .limit(TOP_K)
         .agg(F.sum("c").cast("bigint").alias("top_rows"))
     )
     return stats.crossJoin(F.broadcast(top)).select(
@@ -68,8 +66,8 @@ def key_skew_report(
         "avg_per_key",
         "p50_per_key",
         "p99_per_key",
-        F.round(F.col("top_rows") / F.col("n_rows"), decimals).alias(
-            f"top{top_k}_share"
+        F.round(F.col("top_rows") / F.col("n_rows"), 6).alias(
+            f"top{TOP_K}_share"
         ),
     )
 
@@ -90,8 +88,6 @@ LINEITEM_ASSERTIONS: list[tuple[str, str]] = [
 
 def dq_assertion_report(
     df: DataFrame,
-    assertions: list[tuple[str, str]] | None = None,
-    decimals: int = 6,
 ) -> DataFrame:
     """Long-format data-quality report: one row per assertion with checked /
     violation counts and the violation rate.
@@ -100,7 +96,7 @@ def dq_assertion_report(
     is scanned exactly once regardless of how many assertions are checked;
     the unpivot to long format is a map-only explode of the 1-row result.
     """
-    checks = assertions if assertions is not None else LINEITEM_ASSERTIONS
+    checks = LINEITEM_ASSERTIONS
     aggs = [F.count("*").cast("bigint").alias("n_checked")] + [
         F.sum(F.expr(pred).cast("bigint")).cast("bigint").alias(f"v{i}")
         for i, (_, pred) in enumerate(checks)
@@ -121,7 +117,7 @@ def dq_assertion_report(
             F.col("r.assertion").alias("assertion"),
             F.col("n_checked"),
             F.col("r.n_violations").alias("n_violations"),
-            F.round(F.col("r.n_violations") / F.col("n_checked"), decimals).alias(
+            F.round(F.col("r.n_violations") / F.col("n_checked"), 6).alias(
                 "violation_rate"
             ),
         )
@@ -172,14 +168,9 @@ def join_cardinality_estimate(
 
 def score_calibration(
     scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
-    lo: float = -0.5,
-    hi: float = 0.5,
     n_bins: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
-    """Reliability diagram for a [lo, hi) score against a binary label:
+    """Reliability diagram for a [-0.5, 0.5) score against a binary label:
     per fixed-width score bin, the mean predicted score vs the observed
     positive rate, plus each bin's weighted |gap| (the summands of
     expected calibration error).  The check every learned quality filter
@@ -189,17 +180,17 @@ def score_calibration(
     aggregated groupBy at bin grain; the corpus total rides back as a
     broadcast 1-row aggregate for the ECE weights.
     """
-    width = (hi - lo) / n_bins
+    width = 1.0 / n_bins
     bucket = (
-        F.when(F.col(score_col) < lo, F.lit(0))
-        .when(F.col(score_col) >= hi, F.lit(n_bins + 1))
-        .otherwise(F.floor((F.col(score_col) - lo) / width).cast("int") + 1)
+        F.when(F.col("score") < -0.5, F.lit(0))
+        .when(F.col("score") >= 0.5, F.lit(n_bins + 1))
+        .otherwise(F.floor((F.col("score") - (-0.5)) / width).cast("int") + 1)
     )
     g = (
         scored.select(
             bucket.alias("bucket"),
-            F.col(score_col).alias("s"),
-            F.col(label_col).cast("int").alias("y"),
+            F.col("score").alias("s"),
+            F.col("label").cast("int").alias("y"),
         )
         .groupBy("bucket")
         .agg(
@@ -212,11 +203,11 @@ def score_calibration(
     return g.crossJoin(F.broadcast(total)).select(
         "bucket",
         "n",
-        F.round("__ms", decimals).alias("mean_score"),
-        F.round("__rate", decimals).alias("positive_rate"),
+        F.round("__ms", 6).alias("mean_score"),
+        F.round("__rate", 6).alias("positive_rate"),
         F.round(
             (F.col("n") / F.col("__total_n")) * F.abs(F.col("__ms") - F.col("__rate")),
-            decimals,
+            6,
         ).alias("ece_contrib"),
     )
 
@@ -224,7 +215,6 @@ def score_calibration(
 def benford_digit_test(
     df: DataFrame,
     value_col: str = "o_totalprice",
-    decimals: int = 6,
 ) -> DataFrame:
     """First-significant-digit distribution vs Benford's law with a chi²
     statistic — the classic anomaly screen for organically-generated
@@ -264,9 +254,9 @@ def benford_digit_test(
     return g.crossJoin(F.broadcast(total)).select(
         "digit",
         "n",
-        F.round(obs_p, decimals).alias("p_observed"),
-        F.round(exp_p, decimals).alias("p_benford"),
-        F.round(chi2, decimals).alias("chi2_contrib"),
+        F.round(obs_p, 6).alias("p_observed"),
+        F.round(exp_p, 6).alias("p_benford"),
+        F.round(chi2, 6).alias("chi2_contrib"),
     )
 
 
@@ -280,7 +270,6 @@ def star_join_advisor(
     fact: DataFrame,
     dims: dict[str, tuple[DataFrame, str, str]],
     broadcast_threshold_mb: float = 10.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Pre-flight advisor for a star join: for every dimension, its row
     count, estimated in-memory size (fixed widths + measured string
@@ -335,7 +324,7 @@ def star_join_advisor(
                 ).cast("int").alias("broadcastable"),
                 F.round(
                     F.coalesce(F.col("n_matched"), F.lit(0.0)) / F.col("n_fact"),
-                    decimals,
+                    6,
                 ).alias("fk_match_rate"),
             )
         )
@@ -370,8 +359,6 @@ def k_anonymity_violations(
 def loso_source_influence(
     docs: DataFrame,
     weight: Column,
-    source_col: str = "source",
-    decimals: int = 6,
 ) -> DataFrame:
     """Leave-one-source-out data valuation: how much does dropping each
     source move a corpus-level metric (here the mean of ``weight``, e.g.
@@ -388,7 +375,7 @@ def loso_source_influence(
     the plan test pins against).  All sums are exact bigint; the only
     float ops are two final divisions, mirrored verbatim in the oracle.
     """
-    per = docs.groupBy(F.col(source_col).alias("source")).agg(
+    per = docs.groupBy(F.col("source")).agg(
         F.sum(weight).cast("long").alias("s"),
         F.count("*").cast("long").alias("n"),
     )
@@ -406,9 +393,9 @@ def loso_source_influence(
     return tot.select(
         "source",
         F.col("n").alias("n_docs"),
-        F.round(mean_all, decimals).alias("mean_overall"),
-        F.round(mean_wo, decimals).alias("mean_without"),
-        F.round(mean_wo - mean_all, decimals).alias("influence"),
+        F.round(mean_all, 6).alias("mean_overall"),
+        F.round(mean_wo, 6).alias("mean_without"),
+        F.round(mean_wo - mean_all, 6).alias("influence"),
     )
 
 
@@ -447,11 +434,7 @@ def l_diversity_violations(
 
 def mad_outliers(
     df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    id_col: str = "event_id",
     cutoff: float = 3.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Robust per-group outliers via the median-absolute-deviation rule:
     |x − median| / (1.4826·MAD) > cutoff.  Unlike the mean/std z-score
@@ -470,33 +453,30 @@ def mad_outliers(
     Groups with MAD = 0 (over half the values identical) are excluded
     rather than dividing by zero.
     """
-    med = df.groupBy(F.col(group_col).alias("g")).agg(
-        F.percentile(value_col, F.lit(0.5)).alias("med")
+    med = df.groupBy(F.col("event_type").alias("g")).agg(
+        F.percentile("value", F.lit(0.5)).alias("med")
     )
-    d = df.join(F.broadcast(med), df[group_col] == med["g"]).select(
-        F.col(id_col), F.col(group_col), F.col(value_col),
-        F.abs(F.col(value_col) - F.col("med")).alias("dev"),
+    d = df.join(F.broadcast(med), df["event_type"] == med["g"]).select(
+        F.col("event_id"), F.col("event_type"), F.col("value"),
+        F.abs(F.col("value") - F.col("med")).alias("dev"),
     )
-    mad = d.groupBy(F.col(group_col).alias("g2")).agg(
+    mad = d.groupBy(F.col("event_type").alias("g2")).agg(
         F.percentile("dev", F.lit(0.5)).alias("mad")
     )
     z = F.col("dev") / (F.lit(1.4826) * F.col("mad"))
     return (
-        d.join(F.broadcast(mad), d[group_col] == mad["g2"])
+        d.join(F.broadcast(mad), d["event_type"] == mad["g2"])
         .filter((F.col("mad") > 0) & (z > cutoff))
         .select(
-            id_col, group_col, value_col,
-            F.round(z, decimals).alias("robust_z"),
+            "event_id", "event_type", "value",
+            F.round(z, 6).alias("robust_z"),
         )
     )
 
 
 def srm_check(
     df: DataFrame,
-    unit_col: str = "user_id",
-    n_arms: int = 2,
     critical: float = 3.841,
-    decimals: int = 6,
 ) -> DataFrame:
     """Sample-ratio-mismatch check for a hash-split experiment: assign
     each unit to an arm by the engine's PORTABLE hash (md5-prefix fold,
@@ -514,37 +494,34 @@ def srm_check(
     """
     from ..functions.hashing import token_code
 
-    units = df.select(F.col(unit_col).alias("u")).distinct()
-    arm = (token_code(F.col("u").cast("string")) % n_arms).cast("int")
+    units = df.select(F.col("user_id").alias("u")).distinct()
+    arm = (token_code(F.col("u").cast("string")) % 2).cast("int")
     counts = units.select(arm.alias("arm")).agg(
         F.count("*").cast("long").alias("n"),
         *[
             F.sum(F.when(F.col("arm") == i, 1).otherwise(0))
             .cast("long")
             .alias(f"arm{i}")
-            for i in range(n_arms)
+            for i in range(2)
         ],
     )
-    e = F.col("n").cast("double") / F.lit(float(n_arms))
+    e = F.col("n").cast("double") / F.lit(2.0)
     chi2 = None
-    for i in range(n_arms):
+    for i in range(2):
         d = F.col(f"arm{i}").cast("double") - e
         term = d * d / e
         chi2 = term if chi2 is None else chi2 + term
     return counts.select(
         F.col("n").cast("bigint").alias("n_units"),
-        *[F.col(f"arm{i}").cast("bigint").alias(f"arm{i}") for i in range(n_arms)],
-        F.round(chi2, decimals).alias("chi2"),
+        *[F.col(f"arm{i}").cast("bigint").alias(f"arm{i}") for i in range(2)],
+        F.round(chi2, 6).alias("chi2"),
         F.when(chi2 > critical, 1).otherwise(0).cast("int").alias("srm_flag"),
     )
 
 
 def tukey_fences(
     df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
     k: float = 1.5,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-group boxplot profile: quartiles, IQR, the Tukey fences
     q1 − k·IQR / q3 + k·IQR, and how much of the group lies beyond them —
@@ -562,9 +539,9 @@ def tukey_fences(
     Exact ``percentile`` buffers per group (same scale caveat as
     ``mad_outliers``).
     """
-    q = df.groupBy(F.col(group_col).alias("g")).agg(
-        F.percentile(value_col, F.lit(0.25)).alias("q1"),
-        F.percentile(value_col, F.lit(0.75)).alias("q3"),
+    q = df.groupBy(F.col("event_type").alias("g")).agg(
+        F.percentile("value", F.lit(0.25)).alias("q1"),
+        F.percentile("value", F.lit(0.75)).alias("q3"),
     )
     iqr = F.col("q3") - F.col("q1")
     fenced = q.select(
@@ -572,17 +549,17 @@ def tukey_fences(
         (F.col("q1") - F.lit(float(k)) * iqr).alias("lo"),
         (F.col("q3") + F.lit(float(k)) * iqr).alias("hi"),
     )
-    j = df.join(F.broadcast(fenced), df[group_col] == fenced["g"])
-    v = F.col(value_col)
+    j = df.join(F.broadcast(fenced), df["event_type"] == fenced["g"])
+    v = F.col("value")
     return (
-        j.groupBy(group_col)
+        j.groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n"),
-            F.round(F.first("q1"), decimals).alias("q1"),
-            F.round(F.first("q3"), decimals).alias("q3"),
-            F.round(F.first("q3") - F.first("q1"), decimals).alias("iqr"),
-            F.round(F.first("lo"), decimals).alias("lo_fence"),
-            F.round(F.first("hi"), decimals).alias("hi_fence"),
+            F.round(F.first("q1"), 6).alias("q1"),
+            F.round(F.first("q3"), 6).alias("q3"),
+            F.round(F.first("q3") - F.first("q1"), 6).alias("iqr"),
+            F.round(F.first("lo"), 6).alias("lo_fence"),
+            F.round(F.first("hi"), 6).alias("hi_fence"),
             F.sum(F.when(v < F.col("lo"), 1).otherwise(0))
             .cast("bigint")
             .alias("n_low"),
@@ -594,7 +571,7 @@ def tukey_fences(
             "outlier_rate",
             F.round(
                 (F.col("n_low") + F.col("n_high")).cast("double") / F.col("n"),
-                decimals,
+                6,
             ),
         )
     )
@@ -602,9 +579,6 @@ def tukey_fences(
 
 def quantile_treatment_effect(
     events: DataFrame,
-    unit_col: str = "user_id",
-    value_col: str = "value",
-    decimals: int = 6,
 ) -> DataFrame:
     """Quantile treatment effects for the hash-split experiment: the
     per-arm q25/q50/q75 of the outcome and their arm-1 − arm-0 deltas —
@@ -621,19 +595,19 @@ def quantile_treatment_effect(
     """
     from ..functions.hashing import token_code
 
-    arm = (token_code(F.col(unit_col).cast("string")) % 2).cast("int")
-    v0 = F.when(arm == 0, F.col(value_col))
-    v1 = F.when(arm == 1, F.col(value_col))
+    arm = (token_code(F.col("user_id").cast("string")) % 2).cast("int")
+    v0 = F.when(arm == 0, F.col("value"))
+    v1 = F.when(arm == 1, F.col("value"))
     qs = [0.25, 0.5, 0.75]
     aggs = []
     for q in qs:
         tag = str(int(q * 100))
         aggs += [
-            F.round(F.percentile(v0, F.lit(q)), decimals).alias(f"q{tag}_arm0"),
-            F.round(F.percentile(v1, F.lit(q)), decimals).alias(f"q{tag}_arm1"),
+            F.round(F.percentile(v0, F.lit(q)), 6).alias(f"q{tag}_arm0"),
+            F.round(F.percentile(v1, F.lit(q)), 6).alias(f"q{tag}_arm1"),
             F.round(
                 F.percentile(v1, F.lit(q)) - F.percentile(v0, F.lit(q)),
-                decimals,
+                6,
             ).alias(f"qte_{tag}"),
         ]
     return events.agg(*aggs)
@@ -702,9 +676,6 @@ def join_order_advisor(
 
 def exposure_gini(
     events: DataFrame,
-    item_expr: Column | None = None,
-    type_col: str = "event_type",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-event-type Gini concentration of item exposure — 0 when every
     item gets equal traffic, → 1 when a few items absorb it all.  The
@@ -723,15 +694,15 @@ def exposure_gini(
     window runs per type over ITEM-grain rows (catalog-bounded).  Ties
     rank deterministically by (count, item).
     """
-    item = item_expr if item_expr is not None else F.get_json_object("props", "$.k")
+    item = F.get_json_object("props", "$.k")
     counts = events.groupBy(
-        F.col(type_col).alias("t"), item.alias("item")
+        F.col("event_type").alias("t"), item.alias("item")
     ).agg(F.count("*").cast("long").alias("c"))
     w = Window.partitionBy("t").orderBy(F.col("c").asc(), F.col("item").asc())
     ranked = counts.select(
         "t", "c", F.row_number().over(w).cast("long").alias("i")
     )
-    agg = ranked.groupBy(F.col("t").alias(type_col)).agg(
+    agg = ranked.groupBy(F.col("t").alias("event_type")).agg(
         F.count("*").cast("long").alias("n"),
         F.sum("c").cast("long").alias("s"),
         F.sum(F.col("i") * F.col("c")).cast("long").alias("ic"),
@@ -743,20 +714,16 @@ def exposure_gini(
         - (nd + F.lit(1.0)) / nd
     )
     return agg.select(
-        type_col,
+        "event_type",
         F.col("n").cast("bigint").alias("n_items"),
         F.col("s").cast("bigint").alias("n_events"),
-        F.round(gini, decimals).alias("gini"),
+        F.round(gini, 6).alias("gini"),
     )
 
 
 def ab_sample_size_table(
     events: DataFrame,
-    unit_col: str = "user_id",
-    conversion_type: str = "purchase",
-    type_col: str = "event_type",
     mdes: tuple = (0.01, 0.02, 0.05, 0.10),
-    decimals: int = 6,
 ) -> DataFrame:
     """Experiment sample-size planner: measure the corpus's own baseline
     per-user conversion rate, then for each minimum detectable effect
@@ -772,8 +739,8 @@ def ab_sample_size_table(
     Plan / 100 TB: one aggregate to user grain (converted-or-not), one
     1-row rollup; the table is generated from that single row.
     """
-    per_user = events.groupBy(F.col(unit_col).alias("u")).agg(
-        F.max((F.col(type_col) == conversion_type).cast("int")).alias("conv")
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
+        F.max((F.col("event_type") == "purchase").cast("int")).alias("conv")
     )
     tot = per_user.agg(
         F.count("*").cast("long").alias("n_users"),
@@ -790,7 +757,7 @@ def ab_sample_size_table(
         rows.append(
             F.struct(
                 F.lit(float(mde)).alias("mde"),
-                F.round(p, decimals).alias("baseline_rate"),
+                F.round(p, 6).alias("baseline_rate"),
                 n_arm.cast("bigint").alias("n_per_arm"),
                 (F.lit(2) * n_arm <= F.col("n_users"))
                 .cast("int")
@@ -804,9 +771,6 @@ def ab_sample_size_table(
 
 def overdispersion_check(
     events: DataFrame,
-    type_col: str = "event_type",
-    unit_col: str = "user_id",
-    decimals: int = 6,
 ) -> DataFrame:
     """Overdispersion audit of per-user event counts, per type: the
     variance-to-mean (dispersion) index D = var/mean is 1 for Poisson
@@ -823,9 +787,9 @@ def overdispersion_check(
     nb_r_hat)``.
     """
     per = events.groupBy(
-        F.col(type_col).alias("t"), F.col(unit_col).alias("u")
+        F.col("event_type").alias("t"), F.col("user_id").alias("u")
     ).agg(F.count("*").cast("long").alias("c"))
-    agg = per.groupBy(F.col("t").alias(type_col)).agg(
+    agg = per.groupBy(F.col("t").alias("event_type")).agg(
         F.count("*").cast("long").alias("n"),
         F.sum("c").cast("long").alias("s"),
         F.sum(F.col("c") * F.col("c")).cast("long").alias("sq"),
@@ -835,21 +799,18 @@ def overdispersion_check(
     var = F.col("sq").cast("double") / nd - mean * mean
     disp = var / mean
     return agg.filter(F.col("s") > 0).select(
-        type_col,
+        "event_type",
         F.col("n").cast("bigint").alias("n_users"),
-        F.round(mean, decimals).alias("mean_per_user"),
-        F.round(disp, decimals).alias("dispersion"),
+        F.round(mean, 6).alias("mean_per_user"),
+        F.round(disp, 6).alias("dispersion"),
         F.round(
-            F.when(var > mean, mean * mean / (var - mean)), decimals
+            F.when(var > mean, mean * mean / (var - mean)), 6
         ).alias("nb_r_hat"),
     )
 
 
 def spearman_rank_corr(
     events: DataFrame,
-    unit_col: str = "user_id",
-    value_col: str = "value",
-    decimals: int = 6,
 ) -> DataFrame:
     """Spearman rank correlation between per-user ENGAGEMENT (event
     count) and SPEND (value total, quantized to whole units) — the
@@ -868,9 +829,9 @@ def spearman_rank_corr(
     Output (one row): ``(n_units, rho)``.
     """
     dec = "decimal(30,10)"
-    per = events.groupBy(F.col(unit_col).alias("u")).agg(
+    per = events.groupBy(F.col("user_id").alias("u")).agg(
         F.count("*").cast("long").alias("c"),
-        F.round(F.sum(F.col(value_col).cast(dec)), 0).cast("long").alias("d"),
+        F.round(F.sum(F.col("value").cast(dec)), 0).cast("long").alias("d"),
     )
 
     def dranks(df: DataFrame, col: str, out: str) -> DataFrame:
@@ -913,15 +874,12 @@ def spearman_rank_corr(
     ).cast("double")
     return agg.select(
         F.col("n").cast("bigint").alias("n_units"),
-        F.round(num / F.sqrt(dx * dy), decimals).alias("rho"),
+        F.round(num / F.sqrt(dx * dy), 6).alias("rho"),
     )
 
 
 def digit_forensics(
     events: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    decimals: int = 6,
 ) -> DataFrame:
     """Digit-level fraud screens per group over the value's CENT digits:
     chi-square of the LAST digit against uniform (humans fabricating
@@ -937,9 +895,9 @@ def digit_forensics(
     frac_9_ending)`` — uniform_ok = chi2 below the 16.919 critical value
     (9 df, α=0.05).
     """
-    cents = F.round(F.col(value_col) * 100, 0).cast("long")
+    cents = F.round(F.col("value") * 100, 0).cast("long")
     last = F.pmod(cents, F.lit(10))
-    agg = events.groupBy(F.col(group_col).alias("g")).agg(
+    agg = events.groupBy(F.col("event_type").alias("g")).agg(
         F.count("*").cast("long").alias("n"),
         *[
             F.sum((last == d).cast("int")).cast("long").alias(f"d{d}")
@@ -953,12 +911,12 @@ def digit_forensics(
         t = diff * diff / e
         chi2 = t if chi2 is None else chi2 + t
     return agg.select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("event_type"),
         F.col("n").cast("bigint").alias("n"),
-        F.round(chi2, decimals).alias("chi2_last_digit"),
+        F.round(chi2, 6).alias("chi2_last_digit"),
         F.when(chi2 <= 16.919, 1).otherwise(0).cast("int").alias("uniform_ok"),
         F.round(
-            F.col("d9").cast("double") / F.col("n").cast("double"), decimals
+            F.col("d9").cast("double") / F.col("n").cast("double"), 6
         ).alias("frac_9_ending"),
     )
 
@@ -967,7 +925,6 @@ def table_checksums(
     events: DataFrame,
     documents: DataFrame,
     lineitem: DataFrame,
-    decimals: int = 0,
 ) -> DataFrame:
     """Order-insensitive content checksums for cross-environment table
     comparison: each row canonicalizes to a string (integers verbatim,
@@ -1030,9 +987,7 @@ def table_checksums(
 
 def hill_tail_exponent(
     events: DataFrame,
-    unit_col: str = "user_id",
     tail_q: float = 0.9,
-    decimals: int = 6,
 ) -> DataFrame:
     """Hill estimator of the power-law tail index of per-user activity:
     α̂ = N_tail / Σ ln(cᵢ/x_min) over users whose event count reaches the
@@ -1048,7 +1003,7 @@ def hill_tail_exponent(
 
     Output (one row): ``(n_tail, x_min, alpha_hat)``.
     """
-    per = events.groupBy(F.col(unit_col).alias("u")).agg(
+    per = events.groupBy(F.col("user_id").alias("u")).agg(
         F.count("*").cast("long").alias("c")
     )
     xmin = per.agg(
@@ -1074,20 +1029,17 @@ def hill_tail_exponent(
     ).filter(F.col("rn") == 1)
     return cum.select(
         F.col("ntail").cast("bigint").alias("n_tail"),
-        F.round(F.col("xm"), decimals).alias("x_min"),
+        F.round(F.col("xm"), 6).alias("x_min"),
         F.round(
             F.when(F.col("slog") > 0,
                    F.col("ntail").cast("double") / F.col("slog")),
-            decimals,
+            6,
         ).alias("alpha_hat"),
     )
 
 
 def embedding_dim_stats(
     embeddings: DataFrame,
-    vec_col: str = "embedding",
-    grid_decimals: int = 4,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-DIMENSION normalization model for an embedding column: mean,
     std, and grid-exact quartiles of every component — the robust-scaling
@@ -1095,7 +1047,7 @@ def embedding_dim_stats(
     (median/IQR scaling shrugs off the outliers that wreck min-max).
 
     Exact at scale without a per-dimension sort: components quantize to a
-    ``grid_decimals`` integer grid (``round(v·10^g)``), counts aggregate
+    4-decimal integer grid (``round(v·10^4)``), counts aggregate
     at (dim, grid-code) grain — MERGEABLE partials, so 100 TB reduces
     map-side — and quartiles are type-1 (smallest grid value whose
     cumulative count reaches ⌈p·n⌉) read off a cumulative window over the
@@ -1105,9 +1057,9 @@ def embedding_dim_stats(
 
     Output: ``(pos, n, mean, std, p25, p50, p75)``, pos 0-based.
     """
-    scale = 10 ** grid_decimals
+    scale = 10 ** 4
     comp = embeddings.select(
-        F.posexplode(F.transform(vec_col, lambda v: v.cast("double"))).alias(
+        F.posexplode(F.transform("embedding", lambda v: v.cast("double"))).alias(
             "pos", "v"
         )
     ).select(
@@ -1146,9 +1098,9 @@ def embedding_dim_stats(
         .select(
             F.col("pos").cast("int").alias("pos"),
             "n",
-            F.round(mean_code / scale, decimals).alias("mean"),
+            F.round(mean_code / scale, 6).alias("mean"),
             F.when(
-                var_code > 0, F.round(F.sqrt(var_code) / scale, decimals)
+                var_code > 0, F.round(F.sqrt(var_code) / scale, 6)
             )
             .otherwise(F.lit(0.0))
             .alias("std"),
@@ -1161,9 +1113,6 @@ def embedding_dim_stats(
 
 def score_label_auc(
     df: DataFrame,
-    score_col: str = "score",
-    label_col: str = "pos",
-    decimals: int = 6,
 ) -> DataFrame:
     """Exact ROC AUC of a score against a binary label via the Mann-
     Whitney rank statistic with midrank tie handling — THE threshold-free
@@ -1180,9 +1129,9 @@ def score_label_auc(
     Output (one row): ``(n_pos, n_neg, auc)``; AUC is NULL when either
     class is empty (undefined, not 0.5 — don't fabricate a coin flip).
     """
-    g = df.groupBy(F.col(score_col).alias("s")).agg(
+    g = df.groupBy(F.col("score").alias("s")).agg(
         F.count("*").alias("n"),
-        F.sum(F.col(label_col).cast("bigint")).alias("p"),
+        F.sum(F.col("pos").cast("bigint")).alias("p"),
     )
     w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     c = g.withColumn("cb", F.sum("n").over(w) - F.col("n"))
@@ -1199,7 +1148,7 @@ def score_label_auc(
         F.round(
             (F.col("S2").cast("double") - F.col("P").cast("double") * (F.col("P") + 1))
             / (2.0 * F.col("P") * F.col("N")),
-            decimals,
+            6,
         ),
     )
     return t.select(
@@ -1209,9 +1158,6 @@ def score_label_auc(
 
 def pr_curve(
     df: DataFrame,
-    score_col: str = "score",
-    label_col: str = "pos",
-    decimals: int = 6,
 ) -> DataFrame:
     """Precision/recall/F1 at every distinct score threshold (predict
     positive when score ≥ threshold) — the operating-point table a
@@ -1224,9 +1170,9 @@ def pr_curve(
     Output: one row per distinct score —
     ``(threshold, tp, fp, fn, precision, recall, f1)``.
     """
-    g = df.groupBy(F.col(score_col).alias("threshold")).agg(
+    g = df.groupBy(F.col("score").alias("threshold")).agg(
         F.count("*").alias("n"),
-        F.sum(F.col(label_col).cast("bigint")).alias("p"),
+        F.sum(F.col("pos").cast("bigint")).alias("p"),
     )
     w = Window.orderBy(F.col("threshold").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1253,9 +1199,9 @@ def pr_curve(
         "tp",
         "fp",
         fn.cast("bigint").alias("fn"),
-        F.round(precision, decimals).alias("precision"),
-        F.round(recall, decimals).alias("recall"),
-        F.round(f1, decimals).alias("f1"),
+        F.round(precision, 6).alias("precision"),
+        F.round(recall, 6).alias("recall"),
+        F.round(f1, 6).alias("f1"),
     )
 
 
@@ -1266,7 +1212,6 @@ def erasure_impact_audit(
     nation: DataFrame,
     erase_keys: DataFrame | None = None,
     key_mod: int = 97,
-    decimals: int = 2,
 ) -> DataFrame:
     """Right-to-erasure (GDPR art. 17) impact audit: before executing a
     deletion batch, price its blast radius — per nation, how many
@@ -1333,7 +1278,7 @@ def erasure_impact_audit(
                         F.col("l_extendedprice") * (1 - F.col("l_discount")), 4
                     ).cast("decimal(30,10)")
                 ).cast("double"),
-                decimals,
+                2,
             ).alias("revenue_removed"),
         )
     )
@@ -1355,14 +1300,10 @@ def erasure_impact_audit(
 
 def brier_decomposition(
     scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
-    n_bins: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Murphy (1973) decomposition of the Brier score for a [0,1]
     probability forecast: BRIER = RELIABILITY − RESOLUTION +
-    UNCERTAINTY, computed over ``n_bins`` fixed-width forecast bins.
+    UNCERTAINTY, computed over 10 fixed-width forecast bins.
     ``score_calibration`` draws the reliability diagram; this collapses
     it to the three scalars a model comparison actually ranks on —
     REL (how wrong the probabilities are, lower better), RES (how much
@@ -1375,18 +1316,18 @@ def brier_decomposition(
     estimator).
 
     Plan / 100 TB: one map-only bin assignment into a bin-grain
-    aggregate, then arithmetic over ≤n_bins+1 rows with the global base
+    aggregate, then arithmetic over ≤11 rows with the global base
     rate broadcast; the per-row Brier sums as rounded DECIMAL terms so
     cross-engine fold order cannot move it.
     """
     b = (
-        F.when(F.col(score_col) >= 1.0, F.lit(int(n_bins) - 1))
-        .otherwise(F.floor(F.col(score_col) * int(n_bins)).cast("int"))
+        F.when(F.col("score") >= 1.0, F.lit(9))
+        .otherwise(F.floor(F.col("score") * 10).cast("int"))
     )
     rows = scored.select(
         b.alias("bin"),
-        F.col(score_col).cast("double").alias("s"),
-        F.col(label_col).cast("double").alias("y"),
+        F.col("score").cast("double").alias("s"),
+        F.col("label").cast("double").alias("y"),
     )
     bins = rows.groupBy("bin").agg(
         F.count("*").cast("long").alias("nk"),
@@ -1403,7 +1344,7 @@ def brier_decomposition(
                     .cast("decimal(30,10)")
                 ).cast("double")
                 / F.count("*"),
-                decimals,
+                6,
             ).alias("brier"),
         )
     )
@@ -1423,26 +1364,23 @@ def brier_decomposition(
         ).cast("decimal(30,10)").alias("res_t"),
     )
     return parts.groupBy("n", "ybar", "brier").agg(
-        F.round(F.sum("rel_t").cast("double"), decimals).alias("reliability"),
-        F.round(F.sum("res_t").cast("double"), decimals).alias("resolution"),
+        F.round(F.sum("rel_t").cast("double"), 6).alias("reliability"),
+        F.round(F.sum("res_t").cast("double"), 6).alias("resolution"),
     ).select(
         F.col("n").cast("bigint").alias("n"),
         "brier",
         "reliability",
         "resolution",
-        F.round(F.col("ybar") * (1.0 - F.col("ybar")), decimals)
+        F.round(F.col("ybar") * (1.0 - F.col("ybar")), 6)
         .alias("uncertainty"),
     )
 
 
 def temperature_scaling_fit(
     scored: DataFrame,
-    logit_col: str = "logit",
-    label_col: str = "label",
     temperatures: tuple[float, ...] = (
         0.25, 0.35, 0.5, 0.7, 1.0, 1.4, 2.0, 2.8, 4.0,
     ),
-    decimals: int = 6,
 ) -> DataFrame:
     """Post-hoc temperature scaling (Guo et al. 2017) fitted by
     deterministic grid search: for each candidate T, the mean negative
@@ -1462,8 +1400,8 @@ def temperature_scaling_fit(
     """
     grid = F.array(*[F.lit(float(t)) for t in temperatures])
     rows = scored.select(
-        F.col(logit_col).cast("double").alias("z"),
-        F.col(label_col).cast("double").alias("y"),
+        F.col("logit").cast("double").alias("z"),
+        F.col("label").cast("double").alias("y"),
         F.explode(grid).alias("t"),
     )
     # clamp: an extreme logit at a small T saturates the sigmoid to an
@@ -1478,7 +1416,7 @@ def temperature_scaling_fit(
         F.round(
             F.sum(F.col("nll_t").cast("decimal(30,10)")).cast("double")
             / F.count("*"),
-            decimals,
+            6,
         ).alias("nll")
     )
     w = Window.orderBy(F.col("nll").asc(), F.col("t").asc())
@@ -1494,11 +1432,8 @@ def temperature_scaling_fit(
 
 def mann_whitney_u(
     df: DataFrame,
-    group_col: str = "grp",
-    value_col: str = "v",
     group_a: str = "a",
     group_b: str = "b",
-    decimals: int = 6,
 ) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) with midranks and the tie-
     corrected normal approximation — the nonparametric two-sample test
@@ -1519,7 +1454,7 @@ def mann_whitney_u(
     (midranks are halves) accumulated as DECIMAL.
     """
     rows = df.select(
-        F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v")
+        F.col("grp").alias("g"), F.col("v").cast("double").alias("v")
     ).filter(F.col("g").isin([group_a, group_b]))
     vals = rows.groupBy("v").agg(
         F.count("*").cast("long").alias("t"),
@@ -1559,21 +1494,18 @@ def mann_whitney_u(
     return agg.select(
         F.col("n_a").cast("bigint").alias("n_a"),
         F.col("n_b").cast("bigint").alias("n_b"),
-        F.round(ua, decimals).alias("u_a"),
+        F.round(ua, 6).alias("u_a"),
         F.round(
             (ua - F.col("n_a").cast("double") * F.col("n_b") / 2.0)
             / F.sqrt(var),
-            decimals,
+            6,
         ).alias("z"),
     )
 
 
 def bh_fdr_select(
     tests: DataFrame,
-    id_col: str = "test_id",
-    p_col: str = "p",
     alpha: float = 0.1,
-    decimals: int = 6,
 ) -> DataFrame:
     """Benjamini-Hochberg FDR selection over a battery of hypothesis
     tests: rank the p-values, find the largest k with
@@ -1592,9 +1524,9 @@ def bh_fdr_select(
     aggregate.
     """
     m = F.broadcast(tests.agg(F.count("*").cast("long").alias("m")))
-    w = Window.orderBy(F.col(p_col).asc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("p").asc(), F.col("test_id").asc())
     ranked = (
-        tests.select(F.col(id_col).alias("test_id"), F.col(p_col).alias("p"))
+        tests.select(F.col("test_id"), F.col("p"))
         .withColumn("rank", F.row_number().over(w))
         .crossJoin(m)
     )
@@ -1608,7 +1540,7 @@ def bh_fdr_select(
         .filter(F.col("rank") <= F.col("k"))
         .select(
             "test_id",
-            F.round("p", decimals).alias("p"),
+            F.round("p", 6).alias("p"),
             F.col("rank").cast("bigint").alias("rank"),
             F.col("m").cast("bigint").alias("n_tests"),
             F.col("k").cast("bigint").alias("k_selected"),
@@ -1618,10 +1550,7 @@ def bh_fdr_select(
 
 def logistic_1d_fit(
     df: DataFrame,
-    x_col: str = "x",
-    y_col: str = "y",
     iters: int = 2,
-    decimals: int = 6,
 ) -> DataFrame:
     """One-feature logistic regression P(y|x) = σ(a + b·x), fitted by
     ``iters`` UNROLLED Newton-Raphson (IRLS) steps from (0, 0) — the
@@ -1642,8 +1571,8 @@ def logistic_1d_fit(
     discipline).
     """
     rows = df.select(
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
     )
     state = rows.sparkSession.range(1).select(
         F.lit(0.0).alias("a"), F.lit(0.0).alias("b")
@@ -1689,12 +1618,12 @@ def logistic_1d_fit(
             F.count("*").cast("bigint").alias("n"),
             F.max("a").alias("fa"),
             F.max("b").alias("fb"),
-            F.round(dec(nll) / F.count("*"), decimals).alias("mean_nll"),
+            F.round(dec(nll) / F.count("*"), 6).alias("mean_nll"),
         )
         .select(
             "n",
-            F.round("fa", decimals).alias("a"),
-            F.round("fb", decimals).alias("b"),
+            F.round("fa", 6).alias("a"),
+            F.round("fb", 6).alias("b"),
             "mean_nll",
         )
     )
@@ -1702,10 +1631,7 @@ def logistic_1d_fit(
 
 def risk_coverage_curve(
     scored: DataFrame,
-    conf_col: str = "confidence",
-    correct_col: str = "correct",
     n_buckets: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Risk-coverage curve for selective prediction (Geifman & El-Yaniv):
     sort by confidence, and for each coverage decile report the
@@ -1741,8 +1667,8 @@ def risk_coverage_curve(
 
     grain = (
         scored.select(
-            F.col(conf_col).alias("conf"),
-            F.col(correct_col).cast("boolean").alias("ok"),
+            F.col("confidence").alias("conf"),
+            F.col("correct").cast("boolean").alias("ok"),
         )
         .groupBy("conf", "ok")
         .agg(F.count("*").cast("bigint").alias("c"))
@@ -1802,23 +1728,20 @@ def risk_coverage_curve(
         Window.unboundedPreceding, Window.currentRow
     )
     return b.select(
-        F.round(F.col("bucket") / F.lit(float(n_buckets)), decimals)
+        F.round(F.col("bucket") / F.lit(float(n_buckets)), 6)
         .alias("coverage"),
         F.sum("m").over(wc).cast("bigint").alias("n_served"),
         F.sum("e").over(wc).cast("bigint").alias("n_errors"),
         F.round(
             F.sum("e").over(wc).cast("double")
             / F.sum("m").over(wc).cast("double"),
-            decimals,
+            6,
         ).alias("selective_risk"),
     )
 
 
 def gini_mean_difference(
     df: DataFrame,
-    group_col: str = "grp",
-    value_col: str = "v",
-    decimals: int = 6,
 ) -> DataFrame:
     """Gini mean difference per group — the mean |xᵢ − xⱼ| over all
     pairs, the robust dispersion the variance overstates on heavy
@@ -1837,7 +1760,7 @@ def gini_mean_difference(
     ``mann_whitney_u`` discipline); value sums are DECIMAL.
     """
     rows = df.select(
-        F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("v")
+        F.col("grp").alias("g"), F.col("v").cast("double").alias("v")
     )
     vals = rows.groupBy("g", "v").agg(F.count("*").cast("long").alias("c"))
     w = Window.partitionBy("g").orderBy("v").rowsBetween(
@@ -1868,19 +1791,17 @@ def gini_mean_difference(
     mean = F.col("vs") / F.col("n")
     gmd = 2.0 * F.col("pairsum") / (F.col("n") * (F.col("n") - 1)).cast("double")
     return agg.filter(F.col("n") > 1).select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("grp"),
         F.col("n").cast("bigint").alias("n"),
-        F.round(mean, decimals).alias("mean"),
-        F.round(gmd, decimals).alias("gmd"),
-        F.when(mean > 0, F.round(gmd / mean, decimals)).alias("relative_gmd"),
+        F.round(mean, 6).alias("mean"),
+        F.round(gmd, 6).alias("gmd"),
+        F.when(mean > 0, F.round(gmd / mean, 6)).alias("relative_gmd"),
     )
 
 
 def wasserstein_length_shift(
     df: DataFrame,
     group_col: str = "source",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-group 1-D Wasserstein-1 (earth-mover) distance between the
     group's document-length distribution and the POOLED corpus length
@@ -1913,7 +1834,7 @@ def wasserstein_length_shift(
 
     counts = (
         df.select(
-            F.col(group_col).alias("g"), token_count(F.col(text_col)).alias("v")
+            F.col(group_col).alias("g"), token_count(F.col("text")).alias("v")
         )
         .groupBy("g", "v")
         .agg(F.count("*").cast("bigint").alias("c"))
@@ -1959,7 +1880,7 @@ def wasserstein_length_shift(
         .agg(
             F.max("n_g").cast("bigint").alias("n_docs"),
             F.round(
-                F.sum(term.cast("decimal(30,10)")).cast("double"), decimals
+                F.sum(term.cast("decimal(30,10)")).cast("double"), 6
             ).alias("w1_tokens"),
         )
     )
@@ -1967,9 +1888,6 @@ def wasserstein_length_shift(
 
 def mcnemar_test(
     df: DataFrame,
-    a_col: str = "a_correct",
-    b_col: str = "b_correct",
-    decimals: int = 6,
 ) -> DataFrame:
     """McNemar's paired test for two classifiers evaluated on the SAME
     examples — the statistically correct way to ask "is ranker B
@@ -1992,8 +1910,8 @@ def mcnemar_test(
     (map-side partials); every count is an exact integer and the only
     float is the final division.
     """
-    a = F.col(a_col).cast("boolean")
-    b = F.col(b_col).cast("boolean")
+    a = F.col("a_correct").cast("boolean")
+    b = F.col("b_correct").cast("boolean")
     agg = df.agg(
         F.sum((a & b).cast("long")).cast("bigint").alias("n_both_right"),
         F.sum((a & ~b).cast("long")).cast("bigint").alias("n_only_a"),
@@ -2003,7 +1921,7 @@ def mcnemar_test(
     d = F.col("n_only_a") + F.col("n_only_b")
     diff = F.abs(F.col("n_only_a") - F.col("n_only_b")) - F.lit(1)
     chi2 = F.round(
-        (diff * diff).cast("double") / d.cast("double"), decimals
+        (diff * diff).cast("double") / d.cast("double"), 6
     )
     return agg.select(
         "n_both_right",
@@ -2016,10 +1934,6 @@ def mcnemar_test(
 
 def filter_disparate_impact(
     df: DataFrame,
-    group_col: str = "source",
-    pred_col: str = "kept",
-    label_col: str = "good",
-    decimals: int = 6,
 ) -> DataFrame:
     """Disparate-impact audit of a selection filter across groups — the
     four-fifths rule applied to data curation: if a quality gate keeps
@@ -2040,9 +1954,9 @@ def filter_disparate_impact(
     broadcast 1-row frame.  Exact integer counts; floats only in the
     final ratios.
     """
-    p = F.col(pred_col).cast("boolean")
-    y = F.col(label_col).cast("boolean")
-    g = df.groupBy(F.col(group_col).alias("g")).agg(
+    p = F.col("kept").cast("boolean")
+    y = F.col("good").cast("boolean")
+    g = df.groupBy(F.col("source").alias("g")).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(p.cast("long")).cast("bigint").alias("npos"),
         F.sum((p & y).cast("long")).cast("bigint").alias("tp"),
@@ -2055,11 +1969,11 @@ def filter_disparate_impact(
     # the output projection) — checkpoint so the corpus scan runs once
     staged = g.withColumn("rate", rate).localCheckpoint(eager=True)
     rmax = F.broadcast(staged.agg(F.max("rate").alias("rmax")))
-    ratio = F.round(F.col("rate") / F.col("rmax"), decimals)
+    ratio = F.round(F.col("rate") / F.col("rmax"), 6)
     return staged.crossJoin(rmax).select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("source"),
         "n",
-        F.round("rate", decimals).alias("sel_rate"),
+        F.round("rate", 6).alias("sel_rate"),
         ratio.alias("impact_ratio"),
         (ratio < F.lit(0.8)).alias("four_fifths_flag"),
         F.when(
@@ -2067,7 +1981,7 @@ def filter_disparate_impact(
             F.round(
                 F.col("tp").cast("double")
                 / (F.col("tp") + F.col("fn")).cast("double"),
-                decimals,
+                6,
             ),
         ).alias("tpr"),
         F.when(
@@ -2075,7 +1989,7 @@ def filter_disparate_impact(
             F.round(
                 F.col("fp").cast("double")
                 / (F.col("fp") + F.col("tn")).cast("double"),
-                decimals,
+                6,
             ),
         ).alias("fpr"),
     )
@@ -2086,7 +2000,6 @@ def t_closeness_report(
     quasi_cols: list[str],
     sensitive_col: str,
     t: float = 0.04,
-    decimals: int = 6,
 ) -> DataFrame:
     """t-closeness audit (Li, Li & Venkatasubramanian 2007) — the third
     rung of the release-privacy ladder after ``k_anonymity_violations``
@@ -2156,7 +2069,7 @@ def t_closeness_report(
     emd = F.round(
         F.sum(term.cast("decimal(30,10)")).cast("double")
         / (F.max("__m") - F.lit(1)).cast("double"),
-        decimals,
+        6,
     )
     return (
         staged.groupBy(*quasi_cols, "__nc")

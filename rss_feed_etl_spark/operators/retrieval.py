@@ -31,8 +31,6 @@ BM25_B = 0.75
 
 def inverted_index(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_df: int = 2,
     max_postings: int = 10,
 ) -> DataFrame:
@@ -47,8 +45,8 @@ def inverted_index(
     neutral sink encoding (ArrayType stays internal).
     """
     ex = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(text_col))).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.array_distinct(tokens("text"))).alias("term"),
     )
     return (
         ex.groupBy("term")
@@ -65,10 +63,6 @@ def inverted_index(
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     topk: int = 20,
 ) -> DataFrame:
     """Rank documents against a bag of query terms with BM25
@@ -82,7 +76,7 @@ def bm25_topk(
     top-k ordering so the ranking is discrete and reproducible across
     engines/summation orders; ties break by doc id.
     """
-    toks = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
+    toks = df.select(F.col("doc_id"), tokens("text").alias("toks"))
     stats = toks.agg(
         F.count("*").alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
     )
@@ -110,8 +104,12 @@ def bm25_topk(
     )
     contrib = idf * (
         F.col("tf")
-        * (F.lit(k1) + 1.0)
-        / (F.col("tf") + F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl")))
+        * (F.lit(BM25_K1) + 1.0)
+        / (
+            F.col("tf")
+            + F.lit(BM25_K1)
+            * (F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
+        )
     )
     return (
         tf.join(F.broadcast(dfreq), "term")
@@ -125,8 +123,6 @@ def bm25_topk(
 
 def rrf_fusion(
     rankings: list[DataFrame],
-    id_col: str = "doc_id",
-    score_col: str = "score",
     k: int = 60,
     top: int = 20,
 ) -> DataFrame:
@@ -147,20 +143,20 @@ def rrf_fusion(
     tagged = None
     for i, r in enumerate(rankings):
         t = r.select(
-            F.col(id_col).alias("id"),
-            F.col(score_col).alias("s"),
+            F.col("doc_id").alias("id"),
+            F.col("score").alias("s"),
             F.lit(i).alias("list_id"),
         )
         tagged = t if tagged is None else tagged.unionByName(t)
     rank_w = Window.partitionBy("list_id").orderBy(F.col("s").desc(), F.col("id").asc())
     ranked = tagged.withColumn("rank", F.row_number().over(rank_w))
     return (
-        ranked.groupBy(F.col("id").alias(id_col))
+        ranked.groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.round(F.sum(1.0 / (F.lit(k) + F.col("rank"))), 9).alias("rrf_score"),
             F.count("*").cast("bigint").alias("n_lists"),
         )
-        .orderBy(F.col("rrf_score").desc(), F.col(id_col).asc())
+        .orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
         .limit(top)
     )
 
@@ -168,10 +164,6 @@ def rrf_fusion(
 def bm25_multi_topk(
     df: DataFrame,
     queries: dict[str, list[str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     topk: int = 20,
 ) -> DataFrame:
     """BM25 top-k for MANY queries in ONE corpus pass — the batch-eval
@@ -188,7 +180,7 @@ def bm25_multi_topk(
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    toks = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
+    toks = df.select(F.col("doc_id"), tokens("text").alias("toks"))
     stats = toks.agg(
         F.count("*").alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
     )
@@ -215,9 +207,9 @@ def bm25_multi_topk(
         + (F.col("n_docs") - F.col("dfreq") + F.lit(0.5)) / (F.col("dfreq") + F.lit(0.5))
     )
     contrib = idf * (
-        F.col("tf") * (F.lit(k1) + 1.0)
-        / (F.col("tf") + F.lit(k1)
-           * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl")))
+        F.col("tf") * (F.lit(BM25_K1) + 1.0)
+        / (F.col("tf") + F.lit(BM25_K1)
+           * (F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")))
     )
     scored = (
         tf.join(F.broadcast(dfreq), "term")
@@ -236,17 +228,11 @@ def bm25_multi_topk(
 
 def rank_metrics(
     ranked: DataFrame,
-    rel_col: str = "rel",
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rnk",
-    relevant_at: int = 2,
-    decimals: int = 6,
 ) -> DataFrame:
     """Retrieval-quality metrics per query over a ranked list with graded
     relevance: nDCG (gain (2^rel − 1)/log2(pos+1), ideal ranking = rel
     desc over the retrieved set) and MRR (reciprocal rank of the first
-    result with rel ≥ ``relevant_at``).
+    result with rel ≥ 2).
 
     Input is a top-k list per query, so every window and aggregate here
     runs on k-sized groups — the metrics layer adds no corpus-scale work
@@ -254,22 +240,22 @@ def rank_metrics(
     """
     from pyspark.sql import Window
 
-    gain = F.pow(F.lit(2.0), F.col(rel_col)) - F.lit(1.0)
-    iw = Window.partitionBy(query_col).orderBy(
-        F.col(rel_col).desc(), F.col(id_col).asc()
+    gain = F.pow(F.lit(2.0), F.col("rel")) - F.lit(1.0)
+    iw = Window.partitionBy("query_id").orderBy(
+        F.col("rel").desc(), F.col("doc_id").asc()
     )
     staged = ranked.withColumn("__ipos", F.row_number().over(iw))
-    dcg = F.sum(gain / F.log2(F.col(rank_col) + 1.0))
+    dcg = F.sum(gain / F.log2(F.col("rnk") + 1.0))
     idcg = F.sum(gain / F.log2(F.col("__ipos") + 1.0))
     first_rel = F.min(
-        F.when(F.col(rel_col) >= relevant_at, F.col(rank_col))
+        F.when(F.col("rel") >= 2, F.col("rnk"))
     )
-    return staged.groupBy(query_col).agg(
+    return staged.groupBy("query_id").agg(
         F.round(
-            F.when(idcg > 0, dcg / idcg).otherwise(F.lit(0.0)), decimals
+            F.when(idcg > 0, dcg / idcg).otherwise(F.lit(0.0)), 6
         ).alias("ndcg"),
         F.round(
-            F.coalesce(1.0 / first_rel, F.lit(0.0)), decimals
+            F.coalesce(1.0 / first_rel, F.lit(0.0)), 6
         ).alias("mrr"),
         F.count("*").cast("bigint").alias("n_ranked"),
     )
@@ -280,11 +266,6 @@ def prf_query_expansion(
     query_terms: list[str],
     fb_docs: int = 10,
     fb_terms: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    decimals: int = 6,
 ) -> DataFrame:
     """Pseudo-relevance-feedback query expansion (Rocchio/RM1-lite): run
     BM25, take the top ``fb_docs`` documents as assumed-relevant feedback,
@@ -311,13 +292,12 @@ def prf_query_expansion(
 
     fb = (
         bm25_topk(
-            df, query_terms, id_col=id_col, text_col=text_col, k1=k1, b=b,
-            topk=fb_docs,
+            df, query_terms, topk=fb_docs,
         )
         .select("doc_id")
     )
     toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("term")
+        F.col("doc_id"), F.explode(tokens("text")).alias("term")
     )
     fb_tf = (
         toks.join(F.broadcast(fb), "doc_id")
@@ -345,7 +325,7 @@ def prf_query_expansion(
             F.round(
                 F.col("fb_tf")
                 * F.log(F.col("n_docs") / F.col("dfreq").cast("double")),
-                decimals,
+                6,
             ).alias("score"),
         )
     )
@@ -360,8 +340,6 @@ def prf_query_expansion(
 def query_likelihood_topk(
     df: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     mu: float = 300.0,
     topk: int = 20,
 ) -> DataFrame:
@@ -384,7 +362,7 @@ def query_likelihood_topk(
     """
     from ..functions.text import tokens
 
-    toks = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
+    toks = df.select(F.col("doc_id"), tokens("text").alias("toks"))
     q = F.array(*[F.lit(t) for t in query_terms])
     ctot = toks.agg(F.sum(F.size("toks")).cast("double").alias("c_total"))
     ex = toks.select("doc_id", F.explode("toks").alias("term"))
@@ -436,10 +414,7 @@ def query_likelihood_topk(
 
 def postinglist_compression_plan(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Index-engineering advisor: for the inverted index this corpus
     would build, estimate bits-per-posting under the three standard
@@ -465,13 +440,13 @@ def postinglist_compression_plan(
 
     pres = (
         df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(F.array_distinct(tokens(text_col))).alias("term"),
+            F.col("doc_id").alias("doc"),
+            F.explode(F.array_distinct(tokens("text"))).alias("term"),
         )
         .filter(F.col("term") != "")
     )
     u = F.broadcast(
-        df.agg((F.max(F.col(id_col)) + 1).cast("long").alias("U"))
+        df.agg((F.max(F.col("doc_id")) + 1).cast("long").alias("U"))
     )
     w = Window.partitionBy("term").orderBy("doc")
     gaps = pres.withColumn(
@@ -507,13 +482,13 @@ def postinglist_compression_plan(
         F.count("*").cast("bigint").alias("n_terms"),
         F.sum("n").cast("bigint").alias("n_postings"),
         F.round(
-            F.sum("varint_total").cast("double") / F.sum("n"), decimals
+            F.sum("varint_total").cast("double") / F.sum("n"), 6
         ).alias("varint_bits"),
         F.round(
-            F.sum("ef_bits_term").cast("double") / F.sum("n"), decimals
+            F.sum("ef_bits_term").cast("double") / F.sum("n"), 6
         ).alias("ef_bits"),
         F.round(
-            F.sum("bitmap_bits_term").cast("double") / F.sum("n"), decimals
+            F.sum("bitmap_bits_term").cast("double") / F.sum("n"), 6
         ).alias("bitmap_bits"),
     )
     best = (
@@ -535,10 +510,7 @@ def postinglist_compression_plan(
 def rank_biased_overlap(
     a: DataFrame,
     b: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
     depth: int = 20,
-    decimals: int = 6,
 ) -> DataFrame:
     """Rank-biased overlap (Webber, Moffat & Zobel 2010) between two
     rankings of the same query, truncated at ``depth`` — the standard
@@ -569,12 +541,12 @@ def rank_biased_overlap(
         raise ValueError(f"depth must be <= 62 for exact 2^-d weights, got {depth}")
 
     def ranked(df: DataFrame, side: str) -> DataFrame:
-        w = Window.orderBy(F.col(score_col).desc(), F.col(id_col).asc())
+        w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         return (
-            df.select(id_col, score_col)
+            df.select("doc_id", "score")
             .withColumn(side, F.row_number().over(w))
             .filter(F.col(side) <= depth)
-            .select(F.col(id_col).alias("id"), side)
+            .select(F.col("doc_id").alias("id"), side)
         )
 
     pairs = ranked(a, "ra").join(ranked(b, "rb"), "id", "full_outer")
@@ -603,10 +575,10 @@ def rank_biased_overlap(
         F.round(
             F.max(F.when(F.col("d") == depth, F.col("inter"))).cast("double")
             / F.lit(float(depth)),
-            decimals,
+            6,
         ).alias("agreement_at_k"),
         F.round(
-            F.sum(term.cast("decimal(30,10)")).cast("double"), decimals
+            F.sum(term.cast("decimal(30,10)")).cast("double"), 6
         ).alias("rbo"),
     )
 
@@ -614,10 +586,7 @@ def rank_biased_overlap(
 def kendall_tau_rankings(
     a: DataFrame,
     b: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "score",
     depth: int = 20,
-    decimals: int = 6,
 ) -> DataFrame:
     """Kendall's τ between two rankings of the same query, truncated at
     ``depth`` — the PAIRWISE companion of :func:`rank_biased_overlap`
@@ -644,12 +613,12 @@ def kendall_tau_rankings(
     """
 
     def ranked(df: DataFrame, side: str) -> DataFrame:
-        w = Window.orderBy(F.col(score_col).desc(), F.col(id_col).asc())
+        w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         return (
-            df.select(id_col, score_col)
+            df.select("doc_id", "score")
             .withColumn(side, F.row_number().over(w))
             .filter(F.col(side) <= depth)
-            .select(F.col(id_col).alias("id"), side)
+            .select(F.col("doc_id").alias("id"), side)
         )
 
     joint = ranked(a, "ra").join(ranked(b, "rb"), "id")
@@ -679,7 +648,7 @@ def kendall_tau_rankings(
             F.round(
                 (F.col("concordant") - F.col("discordant")).cast("double")
                 / F.col("n_pairs").cast("double"),
-                decimals,
+                6,
             ),
         ).alias("kendall_tau"),
     )
@@ -689,9 +658,6 @@ def query_clarity_score(
     df: DataFrame,
     query_terms: list[str],
     fb_docs: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Query clarity (Cronen-Townsend, Zhou & Croft 2002) — the classic
     pre-retrieval-quality predictor: KL divergence between the language
@@ -720,9 +686,9 @@ def query_clarity_score(
     from .textstats import _ngram_rows
 
     fb = bm25_topk(
-        df, query_terms, id_col=id_col, text_col=text_col, topk=fb_docs
+        df, query_terms, topk=fb_docs
     ).select("doc_id")
-    tris = _ngram_rows(df, id_col, text_col, 3).select(
+    tris = _ngram_rows(df, "doc_id", "text", 3).select(
         "id", F.concat_ws(" ", "a", "b", "c").alias("tok")
     )
     fb_cnt = (
@@ -763,7 +729,7 @@ def query_clarity_score(
         F.max("fb_types").cast("bigint").alias("fb_types"),
         F.max("fb_tokens").cast("bigint").alias("fb_tokens"),
         F.round(
-            F.sum(term.cast("decimal(30,10)")).cast("double"), decimals
+            F.sum(term.cast("decimal(30,10)")).cast("double"), 6
         ).alias("clarity_nats"),
     )
 
@@ -772,10 +738,6 @@ def retrieval_source_entropy(
     df: DataFrame,
     query_terms: list[str],
     topk: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    decimals: int = 6,
 ) -> DataFrame:
     """Source concentration of a query's top-k results: the Shannon
     entropy (nats) of the source distribution among the retrieved
@@ -791,10 +753,10 @@ def retrieval_source_entropy(
     table for its source labels; everything after is source-grain.
     """
     hits = bm25_topk(
-        df, query_terms, id_col=id_col, text_col=text_col, topk=topk
+        df, query_terms, topk=topk
     ).select("doc_id")
     labeled = df.select(
-        F.col(id_col).alias("doc_id"), F.col(source_col).alias("src")
+        F.col("doc_id"), F.col("source").alias("src")
     ).join(F.broadcast(hits), "doc_id")
     per_src = labeled.groupBy("src").agg(
         F.count("*").cast("bigint").alias("c")
@@ -809,10 +771,10 @@ def retrieval_source_entropy(
         F.max("n").cast("bigint").alias("n_results"),
         F.count("*").cast("bigint").alias("n_sources"),
         F.round(
-            F.max("c").cast("double") / F.max("n").cast("double"), decimals
+            F.max("c").cast("double") / F.max("n").cast("double"), 6
         ).alias("majority_share"),
         F.round(
-            F.sum(hterm.cast("decimal(30,10)")).cast("double"), decimals
+            F.sum(hterm.cast("decimal(30,10)")).cast("double"), 6
         ).alias("source_entropy_nats"),
     )
 
@@ -859,10 +821,7 @@ def cross_encoder_rerank(
     queries: dict[str, list[str]],
     k_first: int = 20,
     k_final: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     scorer=None,
-    decimals: int = 6,
 ) -> DataFrame:
     """Two-stage retrieve-then-rerank — the production search/RAG serving
     shape: a cheap corpus-scale FIRST stage (BM25 here) nominates
@@ -897,14 +856,14 @@ def cross_encoder_rerank(
     score_fn = scorer if scorer is not None else _stub_cross_encoder
     spark = df.sparkSession
     cand = bm25_multi_topk(
-        df, queries, id_col=id_col, text_col=text_col, topk=k_first
+        df, queries, topk=k_first
     ).select("query_id", "doc_id", F.col("rnk").alias("bm25_rank"))
     qdf = spark.createDataFrame(
         [(q, list(ts)) for q, ts in queries.items()],
         "query_id string, qterms array<string>",
     )
     pairs = (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("dtext"))
+        df.select(F.col("doc_id"), F.col("text").alias("dtext"))
         .join(F.broadcast(cand), "doc_id")
         .join(F.broadcast(qdf), "query_id")
     )
@@ -928,7 +887,7 @@ def cross_encoder_rerank(
         "query_id",
         "doc_id",
         "bm25_rank",
-        F.round(F.col("ce_raw"), decimals).alias("ce_score"),
+        F.round(F.col("ce_raw"), 6).alias("ce_score"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("ce_score"), F.asc("bm25_rank"), F.asc("doc_id")

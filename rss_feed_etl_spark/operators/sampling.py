@@ -121,7 +121,6 @@ def weighted_priority_sample(
     df: DataFrame,
     k: int,
     weight_col: str,
-    key_col: str = "doc_id",
     salt: str = "wsample-v1",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement (sequential
@@ -137,12 +136,12 @@ def weighted_priority_sample(
     single-partition window.
     """
     u = md5_bucket(
-        F.concat(F.lit(salt), F.lit(":"), F.col(key_col).cast("string"))
+        F.concat(F.lit(salt), F.lit(":"), F.col("doc_id").cast("string"))
     )
     pri = u / F.col(weight_col)
     return (
         df.withColumn("__pri", pri)
-        .orderBy(F.col("__pri").asc(), F.col(key_col).asc())
+        .orderBy(F.col("__pri").asc(), F.col("doc_id").asc())
         .limit(k)
         .drop("__pri")
     )
@@ -221,10 +220,6 @@ def leakage_safe_split(
 def select_by_token_budget(
     df: DataFrame,
     budget: int,
-    score_col: str = "score",
-    token_col: str = "n_tokens",
-    key_col: str = "doc_id",
-    grid: int = 1024,
 ) -> DataFrame:
     """Keep the best-scoring documents whose cumulative token count fits a
     budget — "fill 500B tokens with the highest-quality documents", the
@@ -235,17 +230,17 @@ def select_by_token_budget(
     that order would single-partition the corpus, so this uses the same
     two-level prefix sum as ``packing.pack_sequences``, with score-range
     cells instead of hash buckets: scores (in [0, 1]) map to a fixed
-    ``grid`` of cells, in-cell windows run per cell (each partition holds
-    its slice), the per-cell totals (``grid`` rows) get cumulative offsets
+    grid of 1024 cells, in-cell windows run per cell (each partition holds
+    its slice), the per-cell totals (1024 rows) get cumulative offsets
     over that tiny frame, and offsets broadcast back.  Cell membership is
     monotone in score, so cell-desc + in-cell (score DESC, key ASC) IS the
     global order and the result is bit-identical to the one-window form
     the oracle runs.  Token counts are integers, so the running sums are
     exact on every engine.
     """
-    cell = F.least(F.lit(grid - 1), F.floor(F.col(score_col) * grid)).cast("int")
+    cell = F.least(F.lit(1023), F.floor(F.col("score") * 1024)).cast("int")
     staged = df.withColumn("__c", cell)
-    totals = staged.groupBy("__c").agg(F.sum(token_col).alias("__t"))
+    totals = staged.groupBy("__c").agg(F.sum("n_tokens").alias("__t"))
     w_off = Window.orderBy(F.col("__c").desc()).rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -255,10 +250,10 @@ def select_by_token_budget(
     )
     w_in = (
         Window.partitionBy("__c")
-        .orderBy(F.col(score_col).desc(), F.col(key_col).asc())
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    staged = staged.withColumn("__cum", F.sum(token_col).over(w_in))
+    staged = staged.withColumn("__cum", F.sum("n_tokens").over(w_in))
     return (
         staged.join(F.broadcast(offsets), "__c")
         .filter((F.col("__off") + F.col("__cum")) <= budget)
@@ -381,7 +376,6 @@ def deterministic_shuffle(
 def curriculum_shards(
     scores: DataFrame,
     score_col: str,
-    id_col: str = "doc_id",
     salt: str = "epoch0",
     n_shards: int = 8,
 ) -> DataFrame:
@@ -398,25 +392,23 @@ def curriculum_shards(
     """
     from ..functions.hashing import md5_bucket
 
-    pri = F.md5(F.concat(F.lit(f"{salt}:ord:"), F.col(id_col).cast("string")))
+    pri = F.md5(F.concat(F.lit(f"{salt}:ord:"), F.col("doc_id").cast("string")))
     shard = md5_bucket(
-        F.concat(F.lit(f"{salt}:shard:"), F.col(id_col).cast("string"))
+        F.concat(F.lit(f"{salt}:shard:"), F.col("doc_id").cast("string"))
     ) % F.lit(n_shards)
-    w = Window.partitionBy("shard").orderBy(score_col, "pri", id_col)
+    w = Window.partitionBy("shard").orderBy(score_col, "pri", "doc_id")
     return (
         scores.select(
-            F.col(id_col), F.col(score_col), shard.alias("shard"), pri.alias("pri")
+            F.col("doc_id"), F.col(score_col), shard.alias("shard"), pri.alias("pri")
         )
         .withColumn("pos", F.row_number().over(w).cast("bigint"))
-        .select(id_col, score_col, "shard", "pos")
+        .select("doc_id", score_col, "shard", "pos")
     )
 
 
 def importance_weights(
     docs: DataFrame,
     target_pred: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 4096,
 ) -> DataFrame:
     """DSIR-style importance weights for domain-targeted data selection
@@ -442,9 +434,9 @@ def importance_weights(
     the 6dp output.
     """
     toks = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         target_pred.alias("is_tgt"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
     ).withColumn("bucket", md5_bucket(F.col("tok")) % n_buckets)
     counts = toks.groupBy("bucket").agg(
         F.count("*").alias("n_raw"),
@@ -462,7 +454,7 @@ def importance_weights(
     )
     return (
         toks.join(F.broadcast(ratio), "bucket")
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.round(F.avg("lr"), 6).alias("weight"),
             F.count("*").cast("bigint").alias("n_tokens"),
@@ -516,10 +508,7 @@ def epoch_upsample(
     df: DataFrame,
     group_col: str,
     weights: dict[str, float],
-    key_col: str = "doc_id",
     salt: str = "epoch-v1",
-    default_weight: float = 1.0,
-    precision: int = 1_000_000,
 ) -> DataFrame:
     """Fractional-epoch UPsampling — the other half of data mixing
     (``mixture_sample`` only goes down).  A group with weight 2.3 emits
@@ -538,14 +527,14 @@ def epoch_upsample(
     expansion factor per group is bounded by ceil(w).  Stable under
     repartitioning and corpus growth (per-doc decision, not rank-based).
     """
-    bucket = split_bucket(key_col, salt, precision)
-    wexpr: Column = F.lit(float(default_weight))
+    bucket = split_bucket("doc_id", salt, 1_000_000)
+    wexpr: Column = F.lit(1.0)
     for group, w in weights.items():
         if w < 0:
             raise ValueError(f"weight for {group!r} must be >= 0, got {w}")
         wexpr = F.when(F.col(group_col) == group, F.lit(float(w))).otherwise(wexpr)
     whole = F.floor(wexpr).cast("int")
-    frac_thresh = F.round((wexpr - F.floor(wexpr)) * precision).cast("bigint")
+    frac_thresh = F.round((wexpr - F.floor(wexpr)) * 1_000_000).cast("bigint")
     n = whole + (bucket < frac_thresh).cast("int")
     return (
         df.withColumn("__n", n)
@@ -557,10 +546,6 @@ def epoch_upsample(
 
 def exact_substring_contamination(
     split_docs: DataFrame,
-    holdout_label: str = "test",
-    train_label: str = "train",
-    id_col: str = "id",
-    text_col: str = "text",
     needle_len: int = 64,
 ) -> DataFrame:
     """Exact-match benchmark contamination: training documents that contain
@@ -580,15 +565,15 @@ def exact_substring_contamination(
     over-match).
     """
     needles = (
-        split_docs.filter(F.col("split") == holdout_label)
+        split_docs.filter(F.col("split") == "test")
         .select(
-            F.col(id_col).alias("holdout_id"),
-            F.substring(F.col(text_col), 1, needle_len).alias("__needle"),
+            F.col("id").alias("holdout_id"),
+            F.substring(F.col("text"), 1, needle_len).alias("__needle"),
         )
         .filter(F.length("__needle") >= needle_len)
     )
-    train = split_docs.filter(F.col("split") == train_label).select(
-        F.col(id_col).alias("train_id"), F.col(text_col).alias("__t")
+    train = split_docs.filter(F.col("split") == "train").select(
+        F.col("id").alias("train_id"), F.col("text").alias("__t")
     )
     return (
         train.crossJoin(F.broadcast(needles))
@@ -600,10 +585,7 @@ def exact_substring_contamination(
 def dsir_importance_weights(
     df: DataFrame,
     target: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 1024,
-    decimals: int = 4,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection via
     Importance Resampling"): score every document by how target-like its
@@ -632,11 +614,11 @@ def dsir_importance_weights(
     decimal, so the fold is order-independent across engines.  Documents
     with fewer than 2 words carry no bigram and are excluded.
     """
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     grams = F.transform(ngrams(toks, 2), lambda s: F.concat_ws(" ", s["w0"], s["w1"]))
     ex = _persist_spillable(
         df.filter(F.size(toks) >= 2)
-        .select(F.col(id_col).alias("id"), target.alias("tgt"), F.explode(grams).alias("g"))
+        .select(F.col("doc_id").alias("id"), target.alias("tgt"), F.explode(grams).alias("g"))
         .select("id", "tgt", (md5_bucket(F.col("g")) % n_buckets).alias("b"))
     )
     counts = ex.groupBy("b").agg(
@@ -660,10 +642,10 @@ def dsir_importance_weights(
         .agg(
             F.count("*").cast("bigint").alias("n_features"),
             F.round(
-                F.sum(F.col("lr").cast("decimal(20,10)")).cast("double"), decimals
+                F.sum(F.col("lr").cast("decimal(20,10)")).cast("double"), 4
             ).alias("log_weight"),
         )
-        .select(F.col("id").alias(id_col), "n_features", "log_weight")
+        .select(F.col("id").alias("doc_id"), "n_features", "log_weight")
     )
 
 
@@ -672,7 +654,6 @@ def neyman_allocation(
     stratum_col: str,
     weight: Column,
     budget: int = 1000,
-    decimals: int = 6,
 ) -> DataFrame:
     """Optimal (Neyman) sample-size allocation across strata: n_h ∝
     N_h·σ_h — strata that are bigger OR more variable get more of the
@@ -717,7 +698,7 @@ def neyman_allocation(
     return tot.select(
         "stratum",
         F.col("n").cast("bigint").alias("n_docs"),
-        F.round(F.col("sd"), decimals).alias("sd"),
+        F.round(F.col("sd"), 6).alias("sd"),
         F.floor(
             (F.lit(budget) * F.col("wh")).cast("double") / F.col("tw").cast("double")
             + F.lit(0.5)
@@ -735,10 +716,7 @@ def neyman_allocation(
 
 def ipf_source_lang_weights(
     df: DataFrame,
-    source_col: str = "source",
-    lang_col: str = "lang",
     iters: int = 3,
-    decimals: int = 6,
 ) -> DataFrame:
     """Iterative proportional fitting (raking) of the (source, lang) cell
     counts toward UNIFORM source and language marginals — the classic
@@ -758,7 +736,7 @@ def ipf_source_lang_weights(
     guard as kmeans_lloyd).
     """
     grid = df.groupBy(
-        F.col(source_col).alias("source"), F.col(lang_col).alias("lang")
+        F.col("source"), F.col("lang")
     ).agg(F.count("*").cast("bigint").alias("n_docs"))
     tot = grid.agg(
         F.sum("n_docs").cast("double").alias("total"),
@@ -787,7 +765,7 @@ def ipf_source_lang_weights(
             w.join(F.broadcast(rs), w["source"] == rs["s2"])
             .drop("s2")
             .withColumn(
-                "w", F.round(F.col("w") * (F.col("total") / F.col("ns")) / F.col("sw"), decimals)
+                "w", F.round(F.col("w") * (F.col("total") / F.col("ns")) / F.col("sw"), 6)
             )
             .drop("sw")
             .localCheckpoint(eager=True)
@@ -799,7 +777,7 @@ def ipf_source_lang_weights(
             w.join(F.broadcast(cl), w["lang"] == cl["l2"])
             .drop("l2")
             .withColumn(
-                "w", F.round(F.col("w") * (F.col("total") / F.col("nl")) / F.col("lw"), decimals)
+                "w", F.round(F.col("w") * (F.col("total") / F.col("nl")) / F.col("lw"), 6)
             )
             .drop("lw")
             .localCheckpoint(eager=True)
@@ -809,18 +787,13 @@ def ipf_source_lang_weights(
         "lang",
         "n_docs",
         F.col("w").alias("cell_weight"),
-        F.round(F.col("w") / F.col("n_docs").cast("double"), decimals).alias("doc_weight"),
+        F.round(F.col("w") / F.col("n_docs").cast("double"), 6).alias("doc_weight"),
     )
 
 
 def mixture_repeat_factors(
     df: DataFrame,
     budget_tokens: int,
-    source_col: str = "source",
-    lang_col: str = "lang",
-    text_col: str = "text",
-    iters: int = 3,
-    decimals: int = 4,
 ) -> DataFrame:
     """Epoch/repetition planning for an IPF-balanced mixture: given a
     training token ``budget``, how many tokens each (source, lang) cell is
@@ -840,11 +813,11 @@ def mixture_repeat_factors(
     from .textstats import token_count
 
     w = ipf_source_lang_weights(
-        df, source_col=source_col, lang_col=lang_col, iters=iters
+        df
     ).select("source", "lang", "n_docs", "cell_weight")
     toks = df.groupBy(
-        F.col(source_col).alias("source"), F.col(lang_col).alias("lang")
-    ).agg(F.sum(token_count(F.col(text_col))).cast("bigint").alias("actual_tokens"))
+        F.col("source"), F.col("lang")
+    ).agg(F.sum(token_count(F.col("text"))).cast("bigint").alias("actual_tokens"))
     tot = w.agg(
         F.sum(F.col("cell_weight").cast("decimal(30,10)"))
         .cast("double")
@@ -867,7 +840,7 @@ def mixture_repeat_factors(
                 * F.col("cell_weight")
                 / F.col("wtot")
                 / F.col("actual_tokens"),
-                decimals,
+                4,
             ),
         )
         .otherwise(F.lit(0.0))
@@ -879,9 +852,6 @@ def semantic_contamination(
     eval_emb: DataFrame,
     train_emb: DataFrame,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     bands: int = 6,
     rows_per_band: int = 16,
 ) -> DataFrame:
@@ -914,14 +884,14 @@ def semantic_contamination(
     from . import vecmath
     from .similarity import banded_signatures
 
-    e = eval_emb.select(F.col(id_col).alias("eval_id"), F.col(vec_col).alias("__ve"))
+    e = eval_emb.select(F.col("vec_id").alias("eval_id"), F.col("embedding").alias("__ve"))
     t = train_emb.select(
-        F.col(id_col).alias("train_id"), F.col(vec_col).alias("__vt")
+        F.col("vec_id").alias("train_id"), F.col("embedding").alias("__vt")
     )
-    se = banded_signatures(e, "eval_id", "__ve", dim, bands, rows_per_band).select(
+    se = banded_signatures(e, "eval_id", "__ve", 64, bands, rows_per_band).select(
         "eval_id", "band", "sig"
     )
-    st = banded_signatures(t, "train_id", "__vt", dim, bands, rows_per_band).select(
+    st = banded_signatures(t, "train_id", "__vt", 64, bands, rows_per_band).select(
         "train_id", "band", "sig"
     )
     cand = (
@@ -950,11 +920,7 @@ def semantic_contamination(
 
 def quality_select_cutoffs(
     scores: DataFrame,
-    source_col: str = "source",
-    score_col: str = "quality",
-    id_col: str = "doc_id",
     keep_permille: tuple[int, ...] = (500, 700, 900),
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-source score thresholds for top-fraction selection: for each
     requested keep fraction (in PER-MILLE so the rank arithmetic is
@@ -976,9 +942,9 @@ def quality_select_cutoffs(
     ranked rows — document text never enters.
     """
     ranked = scores.select(
-        F.col(source_col).alias("source"),
-        F.col(score_col).alias("__score"),
-        F.col(id_col).alias("__id"),
+        F.col("source"),
+        F.col("quality").alias("__score"),
+        F.col("doc_id").alias("__id"),
     ).withColumn(
         "__rn",
         F.row_number().over(
@@ -1015,18 +981,15 @@ def quality_select_cutoffs(
             "source",
             "keep_permille",
             "n_docs",
-            F.round(F.col("__score"), decimals).alias("cutoff"),
+            F.round(F.col("__score"), 6).alias("cutoff"),
         )
     )
 
 
 def doremi_mixture_step(
     df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
     eta: float = 1.0,
     smoothing: float = 0.1,
-    decimals: int = 6,
 ) -> DataFrame:
     """One DoReMi-style exponentiated-gradient update of domain mixture
     weights (Xie et al. 2023): domains whose text is HARDER than the
@@ -1058,8 +1021,8 @@ def doremi_mixture_step(
     first aggregate.
     """
     toks = df.select(
-        F.col(source_col).alias("source"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.col("source"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
     ).filter(F.col("tok") != "")
     sc = toks.groupBy("source", "tok").agg(F.count("*").alias("n"))
     per_src = sc.groupBy("source").agg(
@@ -1072,7 +1035,7 @@ def doremi_mixture_step(
         F.round(
             F.log("n_tokens")
             - F.col("nlogn").cast("double") / F.col("n_tokens"),
-            decimals,
+            6,
         ).alias("entropy"),
     ).localCheckpoint(eager=True)  # domain-grain (tens of rows): the ref
     # aggregate and the scored projection both read it — without the
@@ -1087,7 +1050,7 @@ def doremi_mixture_step(
         ).select(
             "gt",
             F.round(
-                F.col("hw").cast("double") / F.col("gt"), decimals
+                F.col("hw").cast("double") / F.col("gt"), 6
             ).alias("h_ref"),
         )
     )
@@ -1102,7 +1065,7 @@ def doremi_mixture_step(
         "source", "n_tokens", "token_share", "entropy",
         F.round(
             F.greatest(F.lit(0.0), F.col("entropy") - F.col("h_ref")),
-            decimals,
+            6,
         ).alias("excess"),
     )
     scored = scored.withColumn(
@@ -1123,7 +1086,7 @@ def doremi_mixture_step(
         "source", "n_tokens", "token_share", "entropy", "excess",
         F.round(
             F.lit(1.0 - s) * F.col("u") / F.col("usum") + F.lit(s) / F.col("k"),
-            decimals,
+            6,
         ).alias("weight"),
     )
 
@@ -1132,9 +1095,7 @@ def epoch_budget_plan(
     df: DataFrame,
     budget_multiplier: float,
     source_col: str = "source",
-    text_col: str = "text",
     max_epochs: float = 4.0,
-    decimals: int = 4,
 ) -> DataFrame:
     """Data-constrained epoch planner (Muennighoff et al. 2023): split a
     training token budget of ``budget_multiplier × total unique tokens``
@@ -1163,7 +1124,7 @@ def epoch_budget_plan(
     m = float(budget_multiplier)
     r = float(max_epochs)
     per_src = df.groupBy(F.col(source_col).alias("source")).agg(
-        F.sum(token_count(F.col(text_col))).cast("bigint").alias("unique_tokens")
+        F.sum(token_count(F.col("text"))).cast("bigint").alias("unique_tokens")
     )
     per_src = per_src.withColumn(
         "sw", F.round(F.sqrt(F.col("unique_tokens").cast("double")), 9)
@@ -1179,11 +1140,11 @@ def epoch_budget_plan(
     base = per_src.crossJoin(tot).select(
         "source", "unique_tokens", "sw", "b",
         F.round(F.col("sw") / F.col("swtot"), 9).alias("weight"),
-        F.round(F.col("b") * F.col("sw") / F.col("swtot"), decimals)
+        F.round(F.col("b") * F.col("sw") / F.col("swtot"), 4)
         .alias("desired_tokens"),
     )
     base = base.withColumn(
-        "cap_tokens", F.round(F.lit(r) * F.col("unique_tokens"), decimals)
+        "cap_tokens", F.round(F.lit(r) * F.col("unique_tokens"), 4)
     ).withColumn(
         "first_pass",
         F.when(
@@ -1211,14 +1172,14 @@ def epoch_budget_plan(
         F.when(
             F.col("uncapped") & (F.col("leftover") > 0),
             F.round(
-                F.col("leftover") * F.col("sw") / F.col("sw_uncapped"), decimals
+                F.col("leftover") * F.col("sw") / F.col("sw_uncapped"), 4
             ),
         ).otherwise(F.lit(0.0)),
     ).withColumn(
         "realized_tokens",
         F.when(
             F.col("first_pass") + F.col("extra") < F.col("cap_tokens"),
-            F.round(F.col("first_pass") + F.col("extra"), decimals),
+            F.round(F.col("first_pass") + F.col("extra"), 4),
         ).otherwise(F.col("cap_tokens")),
     )
     return planned.select(
@@ -1226,7 +1187,7 @@ def epoch_budget_plan(
         "realized_tokens",
         F.round(
             F.col("realized_tokens") / F.col("unique_tokens").cast("double"),
-            decimals,
+            4,
         ).alias("epochs"),
         (F.col("realized_tokens") >= F.col("cap_tokens")).alias("capped"),
     )
@@ -1235,14 +1196,11 @@ def epoch_budget_plan(
 def contamination_overlap_fraction(
     docs: DataFrame,
     eval_mod: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     dirty_threshold: float = 0.2,
 ) -> DataFrame:
     """Per-document contamination DEGREE (the GPT-3-appendix "dirtiness"
     measure): for every eval document, the fraction of its distinct word
-    ``n``-gram shingles that appear ANYWHERE in the training split.
+    3-gram shingles that appear ANYWHERE in the training split.
     ``exact_substring_contamination`` answers "is there a literal copy";
     this answers "how much of this eval doc leaks, even scattered" — the
     number an eval-suite audit actually reports, and the basis for
@@ -1251,7 +1209,7 @@ def contamination_overlap_fraction(
     Split: ``id % eval_mod == 0`` → eval, else train (deterministic,
     engine-replayable).  Output per eval doc: ``(doc_id, n_shingles,
     n_hit, dirty_frac, is_dirty)``.  EVERY eval doc appears: docs
-    shorter than ``n`` words reduce to ONE whole-text shingle (the house
+    shorter than 3 words reduce to ONE whole-text shingle (the house
     shingle rule — ``_py_shingle_codes``), and the scored frame is
     additionally left-joined back to the eval id set so even an empty
     code array (unreachable under the current shingler, defensive
@@ -1268,20 +1226,20 @@ def contamination_overlap_fraction(
     """
     from .dedup import _shingle_codes_arrow
 
-    ev = docs.filter(F.col(id_col) % int(eval_mod) == 0)
-    tr = docs.filter(F.col(id_col) % int(eval_mod) != 0)
-    ecodes = _shingle_codes_arrow(ev, id_col, text_col, n=n).select(
+    ev = docs.filter(F.col("doc_id") % int(eval_mod) == 0)
+    tr = docs.filter(F.col("doc_id") % int(eval_mod) != 0)
+    ecodes = _shingle_codes_arrow(ev, "doc_id", "text").select(
         "id", F.explode("codes").alias("code")
     )
     tcodes = (
-        _shingle_codes_arrow(tr, id_col, text_col, n=n)
+        _shingle_codes_arrow(tr, "doc_id", "text")
         .select(F.explode("codes").alias("code"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     scored = (
         ecodes.join(tcodes, "code", "left")
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_shingles"),
             F.sum(F.coalesce(F.col("hit"), F.lit(0)))
@@ -1292,13 +1250,13 @@ def contamination_overlap_fraction(
     # Re-attach shingle-less eval docs (id-grain frame; the expensive
     # Arrow shingling pass is NOT re-run for it — only the pushed-down
     # base-table filter).
-    eval_ids = docs.filter(F.col(id_col) % int(eval_mod) == 0).select(
-        F.col(id_col)
+    eval_ids = docs.filter(F.col("doc_id") % int(eval_mod) == 0).select(
+        F.col("doc_id")
     )
-    full = eval_ids.join(scored, id_col, "left")
+    full = eval_ids.join(scored, "doc_id", "left")
     frac = F.col("n_hit").cast("double") / F.col("n_shingles").cast("double")
     return full.select(
-        id_col,
+        "doc_id",
         F.coalesce(F.col("n_shingles"), F.lit(0)).cast("bigint").alias("n_shingles"),
         F.coalesce(F.col("n_hit"), F.lit(0)).cast("bigint").alias("n_hit"),
         F.coalesce(F.round(frac, 6), F.lit(0.0)).alias("dirty_frac"),
@@ -1311,8 +1269,6 @@ def contamination_overlap_fraction(
 def length_matched_pairs(
     docs: DataFrame,
     eval_mod: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     group_col: str = "source",
 ) -> DataFrame:
     """Matched-control selection: pair every eval document
@@ -1335,10 +1291,10 @@ def length_matched_pairs(
     from .textstats import token_count  # local import, avoids cycle
 
     base = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.col(group_col).alias("g"),
-        token_count(F.col(text_col)).cast("long").alias("len"),
-        (F.col(id_col) % int(eval_mod) == 0).alias("is_eval"),
+        token_count(F.col("text")).cast("long").alias("len"),
+        (F.col("doc_id") % int(eval_mod) == 0).alias("is_eval"),
     )
     # train rows sort BEFORE an equal-length eval row so a zero-diff
     # match lands on the "prev" side of the staircase
@@ -1385,9 +1341,6 @@ def unimax_allocation(
     df: DataFrame,
     budget_frac: float = 0.5,
     max_epochs: int = 4,
-    group_col: str = "source",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """UniMax language/source sampling (Chung et al. 2023): allocate a
     token budget ``B = floor(budget_frac · total_tokens)`` across sources
@@ -1415,8 +1368,8 @@ def unimax_allocation(
 
     per = (
         df.select(
-            F.col(group_col).alias("g"),
-            token_count(F.col(text_col)).cast("bigint").alias("t"),
+            F.col("source").alias("g"),
+            token_count(F.col("text")).cast("bigint").alias("t"),
         )
         .groupBy("g")
         .agg(F.sum("t").cast("bigint").alias("n_tokens"))
@@ -1474,12 +1427,12 @@ def unimax_allocation(
         F.col("capped") == 1, F.col("cap").cast("double")
     ).otherwise(F.col("ustar"))
     return solved.select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("source"),
         "n_tokens",
         F.col("cap").alias("cap_tokens"),
         "capped",
-        F.round(alloc, decimals).alias("allocation_tokens"),
-        F.round(alloc / F.col("n_tokens").cast("double"), decimals).alias(
+        F.round(alloc, 6).alias("allocation_tokens"),
+        F.round(alloc / F.col("n_tokens").cast("double"), 6).alias(
             "epochs"
         ),
     )

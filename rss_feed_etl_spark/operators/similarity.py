@@ -80,8 +80,6 @@ def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force cosine top-k: for every query vector, the k most similar
     corpus vectors (excluding itself).
@@ -103,15 +101,15 @@ def cosine_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            vecmath.norm(f"`{vec_col}`").alias("__qn"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qv"),
+            vecmath.norm("`embedding`").alias("__qn"),
         )
     )
     pairs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("ev"),
-        vecmath.norm(f"`{vec_col}`").alias("__en"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ev"),
+        vecmath.norm("`embedding`").alias("__en"),
     ).join(q, F.col("neighbor_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id",
@@ -201,11 +199,6 @@ def cosine_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    bands: int = 4,
-    rows_per_band: int = 8,
 ) -> DataFrame:
     """Approximate top-k: candidates share at least one hyperplane-sign band
     with the query (equi-join on (band, sig)), then exact cosine re-ranks.
@@ -214,29 +207,23 @@ def cosine_topk_lsh(
     signature almost never collides for merely-similar vectors, while 4
     independent 8-bit bands give ``1-(1-p^8)^4`` candidate recall (p = the
     per-hyperplane agreement probability, 1-θ/π).  At scale the corpus is
-    grouped by (band, sig) — bands×2^rows buckets; each query probes
-    ``bands`` buckets instead of the full corpus.  Raising rows_per_band
-    sharpens buckets (cheaper, lower recall); raising bands is multi-probe
-    (more candidates, higher recall) without changing the plan shape.
+    grouped by (band, sig) — 4×2^8 buckets; each query probes 4 buckets
+    instead of the full corpus.  More rows per band would sharpen buckets
+    (cheaper, lower recall); more bands is multi-probe (more candidates,
+    higher recall) without changing the plan shape.
     """
     e = banded_signatures(
         embeddings.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ev")
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ev")
         ),
         "neighbor_id",
         "ev",
-        dim,
-        bands,
-        rows_per_band,
     )
     q = F.broadcast(
         banded_signatures(
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
+            queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")),
             "query_id",
             "qv",
-            dim,
-            bands,
-            rows_per_band,
         )
     )
     pairs = (
@@ -339,8 +326,6 @@ def cosine_topk_ivf(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 40,
     nprobe: int = 2,
     salt: str = "ivf-v1",
@@ -378,11 +363,11 @@ def cosine_topk_ivf(
     if centroids is not None:
         cent_rows = sorted((int(c), list(v)) for c, v in centroids)
     else:
-        cent_rows = _ivf_centroids(embeddings, id_col, vec_col, n_centroids, salt)
+        cent_rows = _ivf_centroids(embeddings, "vec_id", "embedding", n_centroids, salt)
 
-    corpus = _ivf_assign(embeddings, "neighbor", 1, cent_rows, id_col, vec_col)
+    corpus = _ivf_assign(embeddings, "neighbor", 1, cent_rows, "vec_id", "embedding")
     probes = F.broadcast(
-        _ivf_assign(queries, "query", nprobe, cent_rows, id_col, vec_col)
+        _ivf_assign(queries, "query", nprobe, cent_rows, "vec_id", "embedding")
     )
     pairs = corpus.join(probes, on="cell").filter(
         F.col("neighbor_id") != F.col("query_id")
@@ -404,10 +389,6 @@ def cosine_topk_ivf(
 
 def nearest_centroid_confusion(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    decimals: int = 6,
 ) -> DataFrame:
     """Nearest-centroid classification self-test: per-label mean vector →
     assign every vector to its most-cosine-similar centroid → confusion
@@ -418,15 +399,15 @@ def nearest_centroid_confusion(
     tiny); the assignment is ``corpus ⋈ broadcast(centroids)`` so the
     corpus is scanned once and never exchanged, and the per-vector argmax
     is a window over exactly n_labels rows.  Centroid components are
-    rounded (``decimals``) to pin cross-engine float-mean differences
+    rounded (6 decimals) to pin cross-engine float-mean differences
     before any cosine is taken.
     """
     comp = embeddings.select(
-        F.col(label_col).alias("c_label"), F.posexplode(vec_col).alias("pos", "v")
+        F.col("label").alias("c_label"), F.posexplode("embedding").alias("pos", "v")
     )
     centroids = (
         comp.groupBy("c_label", "pos")
-        .agg(F.round(F.avg(F.col("v").cast("double")), decimals).alias("cv"))
+        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("cv"))
         .groupBy("c_label")
         .agg(
             F.transform(
@@ -435,7 +416,9 @@ def nearest_centroid_confusion(
         )
     )
     scored = embeddings.select(
-        F.col(id_col).alias("id"), F.col(label_col).alias("true_label"), F.col(vec_col).alias("vec")
+        F.col("vec_id").alias("id"),
+        F.col("label").alias("true_label"),
+        F.col("embedding").alias("vec"),
     ).join(F.broadcast(centroids))
     w = Window.partitionBy("id").orderBy(
         vecmath.cosine("vec", "cvec").desc(), F.col("c_label").asc()
@@ -453,14 +436,11 @@ def nearest_centroid_confusion(
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 16,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold (id_a < id_b).
 
     Exact all-pairs, executed as BLOCKED matrix multiplication: vectors are
-    hash-grouped into ``n_blocks`` blocks, the B(B+1)/2 block pairs fan out
+    hash-grouped into 16 blocks, the B(B+1)/2 block pairs fan out
     as one row each, and every block pair computes its gram matrix with one
     vectorized ``A_norm @ B_norm.T`` inside Arrow-batched ``mapInPandas``.
     A row-at-a-time expression join costs ~100× more per pair (per-element
@@ -481,8 +461,8 @@ def embedding_neardup_pairs(
 
     blocks = (
         embeddings.select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
-            F.struct(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).alias("item"),
+            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(16)).alias("blk"),
+            F.struct(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")).alias("item"),
         )
         .groupBy("blk")
         .agg(F.collect_list("item").alias("items"))
@@ -545,18 +525,13 @@ EMB_LSH_ROWS = 8  # hyperplanes per band → 2^8 = 256 buckets per band
 def embedding_neardup_pairs_lsh(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    bands: int = EMB_LSH_BANDS,
-    rows_per_band: int = EMB_LSH_ROWS,
     max_bucket: int | None = 20_000,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine — the LSH-bucketed scale
     path next to the exact ``embedding_neardup_pairs`` baseline.
 
-    Banded random-hyperplane LSH: each vector gets ``bands`` independent
-    sign signatures of ``rows_per_band`` bits; two vectors are candidates
+    Banded random-hyperplane LSH: each vector gets ``EMB_LSH_BANDS``
+    independent sign signatures of ``EMB_LSH_ROWS`` bits; two vectors are candidates
     iff they agree on at least one whole band (the minhash banding scheme
     applied to hyperplane signs).  Candidate recall at cosine ≥ t is
     ``1-(1-p^R)^B`` with ``p = 1-acos(t)/π`` — ≈99.9% at t=0.99 and the
@@ -580,12 +555,12 @@ def embedding_neardup_pairs_lsh(
     ensure_executors_can_import(embeddings.sparkSession)
 
     banded = banded_signatures(
-        embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
         "id",
         "vec",
-        dim,
-        bands,
-        rows_per_band,
+        64,
+        EMB_LSH_BANDS,
+        EMB_LSH_ROWS,
     )
 
     grouped = (
@@ -634,10 +609,7 @@ def embedding_neardup_pairs_lsh(
 
 def tfidf_cosine_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_sim: float = 0.5,
-    n_docs: int | None = None,
     max_df_frac: float | None = 0.1,
 ) -> DataFrame:
     """TF-IDF cosine similarity between documents (reference A5/X5,
@@ -663,25 +635,21 @@ def tfidf_cosine_pairs(
     TfidfVectorizer fitted on the capped vocabulary.  Pass ``None`` to
     disable (exact baseline, test-only at scale).
 
-    ``n_docs`` may be passed precomputed when the caller already knows the
-    corpus size; when ``None`` it is derived INSIDE the plan as a broadcast
-    1-row count aggregate — no separate count job, no extra pass over the
-    corpus (at 100 TB an eager ``df.count()`` here would be a full extra
-    scan per invocation).
+    The document count N is derived INSIDE the plan as a broadcast 1-row
+    count aggregate — no separate count job, no extra pass over the corpus
+    (at 100 TB an eager ``df.count()`` here would be a full extra scan per
+    invocation).
     """
     toks = df.select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+        F.col("doc_id").alias("id"), F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = toks.groupBy("id", "term").agg(F.count("*").cast("double").alias("tf"))
     # tf is (id, term)-grained, so ids are already distinct per term — a
     # plain count keeps the exchange partial-aggregate-friendly where
     # count_distinct's expansion would not
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    if n_docs is None:
-        nd = df.agg(F.count("*").cast("double").alias("n_docs"))
-        dfreq = dfreq.crossJoin(F.broadcast(nd))
-    else:
-        dfreq = dfreq.withColumn("n_docs", F.lit(float(n_docs)))
+    nd = df.agg(F.count("*").cast("double").alias("n_docs"))
+    dfreq = dfreq.crossJoin(F.broadcast(nd))
     if max_df_frac is not None:
         # pre-join document-frequency cap: the inner joins below propagate
         # the drop to weights, norms, and the pair join alike
@@ -708,8 +676,6 @@ def skills_match(
     df: DataFrame,
     resume_skills: list[str],
     lexicon: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Lexicon skills extraction + set-overlap match scoring (reference
     A4/X2: skills_extractor.py:152-198 — match% = |resume ∩ job| / |job|).
@@ -719,7 +685,7 @@ def skills_match(
     native array ops.  Arrays are emitted sorted and comma-joined so the
     output is order-stable for value comparison.
     """
-    toks = F.array_distinct(F.transform(tokens(F.col(text_col)), F.lower))
+    toks = F.array_distinct(F.transform(tokens(F.col("text")), F.lower))
     lex = F.array(*[F.lit(s) for s in sorted(lexicon)])
     res = F.array(*[F.lit(s) for s in sorted(resume_skills)])
     job_skills = F.array_sort(F.array_intersect(toks, lex))
@@ -730,7 +696,7 @@ def skills_match(
         F.round(F.size(matched) * 100.0 / F.size(job_skills), 2),
     ).otherwise(F.lit(0.0))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.concat_ws(",", job_skills).alias("job_skills"),
         F.concat_ws(",", matched).alias("matched_skills"),
         F.concat_ws(",", missing).alias("missing_skills"),
@@ -742,9 +708,6 @@ def hard_negative_mining(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Contrastive-training data mining: for each query vector, the ``k``
     most-cosine-similar corpus vectors with a DIFFERENT label — the
@@ -757,15 +720,15 @@ def hard_negative_mining(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.col(label_col).alias("qlabel"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qv"),
+            F.col("label").alias("qlabel"),
         )
     )
     pairs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("ev"),
-        F.col(label_col).alias("nlabel"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ev"),
+        F.col("label").alias("nlabel"),
     ).join(q, F.col("nlabel") != F.col("qlabel"))
     scored = pairs.select(
         "query_id",
@@ -782,8 +745,6 @@ def semantic_dedup_pairs(
     embeddings: DataFrame,
     k: int = 16,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     salt: str = "semdedup-v1",
     max_cell: int | None = 20_000,
 ) -> DataFrame:
@@ -813,7 +774,7 @@ def semantic_dedup_pairs(
 
     ensure_executors_can_import(embeddings.sparkSession)
 
-    base = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    base = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     hk = md5_bucket(F.concat(F.lit(salt + ":"), F.col("id").cast("string")))
     seeds = (
         base.withColumn("hk", hk)
@@ -874,7 +835,7 @@ def semantic_dedup_pairs(
     return grouped.select("cell", "members").mapInPandas(gram, out_schema)
 
 
-def _rp_sign_matrix(in_dim: int, out_dim: int, salt: str = "rp") -> list[list[float]]:
+def _rp_sign_matrix(in_dim: int, out_dim: int) -> list[list[float]]:
     """Deterministic ±1 sign matrix for sparse random projection
     (Achlioptas 2003): sign(i, j) from md5 — a compile-time constant, so
     Spark and the SQL oracle share the exact same matrix as literals."""
@@ -883,7 +844,7 @@ def _rp_sign_matrix(in_dim: int, out_dim: int, salt: str = "rp") -> list[list[fl
     return [
         [
             1.0
-            if int(hashlib.md5(f"{salt}:{i}:{j}".encode()).hexdigest()[:8], 16) % 2 == 0
+            if int(hashlib.md5(f"rp:{i}:{j}".encode()).hexdigest()[:8], 16) % 2 == 0
             else -1.0
             for i in range(in_dim)
         ]
@@ -893,11 +854,8 @@ def _rp_sign_matrix(in_dim: int, out_dim: int, salt: str = "rp") -> list[list[fl
 
 def random_projection(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     in_dim: int = 64,
     out_dim: int = 16,
-    decimals: int = 6,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: embed ``in_dim`` vectors
     into ``out_dim`` via a deterministic ±1 sign matrix, scaled by
@@ -916,21 +874,19 @@ def random_projection(
     scale = float(out_dim) ** 0.5
     dims = []
     for j in range(out_dim):
-        y = vecmath.dot(f"`{vec_col}`", signs[j])
+        y = vecmath.dot("`embedding`", signs[j])
         dims.append(
             F.struct(
-                F.lit(j).alias("dim"), F.round(y / scale, decimals).alias("value")
+                F.lit(j).alias("dim"), F.round(y / scale, 6).alias("value")
             )
         )
     return df.select(
-        F.col(id_col), F.explode(F.array(*dims)).alias("p")
-    ).select(id_col, F.col("p.dim").cast("bigint").alias("dim"), "p.value")
+        F.col("vec_id"), F.explode(F.array(*dims)).alias("p")
+    ).select("vec_id", F.col("p.dim").cast("bigint").alias("dim"), "p.value")
 
 
 def int8_quantize(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Symmetric int8 quantization of an embedding column: one global
     scale = max|x| over the corpus (a 1-row aggregate that rides back as a
@@ -943,13 +899,13 @@ def int8_quantize(
     """
     scale = embeddings.agg(
         F.max(
-            F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x)))
+            F.array_max(F.transform(F.col("embedding"), lambda x: F.abs(x)))
         ).cast("double").alias("scale")
     )
     return embeddings.crossJoin(F.broadcast(scale)).select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x: F.round(x.cast("double") / F.col("scale") * 127).cast("int"),
         ).alias("qvec"),
         "scale",
@@ -960,8 +916,6 @@ def int8_dot_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Quantized similarity search: int8-quantize the corpus once (shared
     global scale), then brute-force top-k by integer dot product.
@@ -973,13 +927,13 @@ def int8_dot_topk(
     float rounding contract.  The integer dot preserves cosine ORDER up to
     quantization error; ``dot_q`` is the raw quantized score.
     """
-    qcorpus = int8_quantize(embeddings, id_col, vec_col)
+    qcorpus = int8_quantize(embeddings)
     qq = qcorpus.join(
-        F.broadcast(queries.select(F.col(id_col).alias("query_id"))),
-        F.col(id_col) == F.col("query_id"),
+        F.broadcast(queries.select(F.col("vec_id").alias("query_id"))),
+        F.col("vec_id") == F.col("query_id"),
     ).select("query_id", F.col("qvec").alias("qv"))
     pairs = qcorpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("ev")
+        F.col("vec_id").alias("neighbor_id"), F.col("qvec").alias("ev")
     ).join(F.broadcast(qq), F.col("neighbor_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id", "neighbor_id", vecmath.int_dot("qv", "ev").alias("dot_q")
@@ -995,8 +949,6 @@ def topk_recall(
     exact: DataFrame,
     approx: DataFrame,
     k: int,
-    query_col: str = "query_id",
-    neighbor_col: str = "neighbor_id",
 ) -> DataFrame:
     """Recall@k of an approximate top-k list against the exact baseline:
     per query, the fraction of the exact neighbors the approximate method
@@ -1007,12 +959,12 @@ def topk_recall(
     Both inputs are top-k result lists (k rows per query), so the join and
     aggregate run over sample-sized data regardless of corpus size.
     """
-    hits = exact.select(query_col, neighbor_col).join(
-        approx.select(query_col, neighbor_col).withColumn("hit", F.lit(1)),
-        [query_col, neighbor_col],
+    hits = exact.select("query_id", "neighbor_id").join(
+        approx.select("query_id", "neighbor_id").withColumn("hit", F.lit(1)),
+        ["query_id", "neighbor_id"],
         "left",
     )
-    return hits.groupBy(query_col).agg(
+    return hits.groupBy("query_id").agg(
         F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
         F.round(
             F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(float(k)), 6
@@ -1024,10 +976,6 @@ def rerank_exact(
     embeddings: DataFrame,
     candidates: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "query_id",
-    neighbor_col: str = "neighbor_id",
     decimals: int = 6,
 ) -> DataFrame:
     """Exact-cosine rerank of an approximate candidate list — the second
@@ -1046,22 +994,22 @@ def rerank_exact(
     from pyspark.sql import Window
 
     qvecs = embeddings.select(
-        F.col(id_col).alias(query_col), F.col(vec_col).alias("__qv")
-    ).join(F.broadcast(candidates.select(query_col).distinct()), query_col)
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
+    ).join(F.broadcast(candidates.select("query_id").distinct()), "query_id")
     nvecs = embeddings.select(
-        F.col(id_col).alias(neighbor_col), F.col(vec_col).alias("__nv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__nv")
     )
     joined = (
-        candidates.select(query_col, neighbor_col)
-        .join(nvecs, neighbor_col)
-        .join(F.broadcast(qvecs), query_col)
+        candidates.select("query_id", "neighbor_id")
+        .join(nvecs, "neighbor_id")
+        .join(F.broadcast(qvecs), "query_id")
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.desc("cosine"), F.asc(neighbor_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
     )
     return (
         joined.select(
-            query_col, neighbor_col, vecmath.cosine("__qv", "__nv", decimals).alias("cosine")
+            "query_id", "neighbor_id", vecmath.cosine("__qv", "__nv", decimals).alias("cosine")
         )
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
@@ -1071,9 +1019,6 @@ def rerank_exact(
 def matryoshka_truncation_eval(
     emb: DataFrame,
     dims: tuple[int, ...] = (8, 16, 32),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> DataFrame:
     """Matryoshka-style truncation quality: how well cosine similarity
     computed on the first ``d`` dimensions tracks full-dimension cosine
@@ -1088,10 +1033,10 @@ def matryoshka_truncation_eval(
     aggregate is a pure function of the pair multiset on every engine.
     """
     right = emb.select(
-        (F.col(id_col) + 1).alias("__rid"), F.col(vec_col).alias("__v2")
+        (F.col("vec_id") + 1).alias("__rid"), F.col("embedding").alias("__v2")
     )
-    pairs = emb.join(right, F.col(id_col) == F.col("__rid")).select(
-        F.col(vec_col).alias("__v1"), "__v2"
+    pairs = emb.join(right, F.col("vec_id") == F.col("__rid")).select(
+        F.col("embedding").alias("__v1"), "__v2"
     )
     staged = pairs.select(
         F.explode(F.array(*[F.lit(d) for d in dims])).alias("d"), "__v1", "__v2"
@@ -1117,10 +1062,10 @@ def matryoshka_truncation_eval(
             # cast the exact decimal SUM to double BEFORE dividing — the
             # oracle divides a double by a count, and decimal division
             # rounds at a different scale
-            F.round(F.sum("err").cast("double") / F.count("*"), decimals).alias(
+            F.round(F.sum("err").cast("double") / F.count("*"), 6).alias(
                 "mean_abs_err"
             ),
-            F.round(F.sum("ct").cast("double") / F.count("*"), decimals).alias(
+            F.round(F.sum("ct").cast("double") / F.count("*"), 6).alias(
                 "mean_trunc_cosine"
             ),
         )
@@ -1130,9 +1075,6 @@ def matryoshka_truncation_eval(
 
 def int8_quantization_error(
     emb: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    decimals: int = 9,
 ) -> DataFrame:
     """Per-label reconstruction error of symmetric int8 quantization —
     the storage-format eval run before shipping a quantized ANN corpus
@@ -1145,12 +1087,12 @@ def int8_quantization_error(
     of round() so halfway cases tie-break identically on every engine,
     and per-vector mse rounds to 10dp before the decimal-exact mean.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     maxabs = F.aggregate(
         v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x.cast("double")))
     )
     scale = F.greatest(maxabs, F.lit(1e-12)) / F.lit(127.0)
-    staged = emb.select(F.col(label_col).alias("label"), v.alias("__v"), scale.alias("__s"))
+    staged = emb.select(F.col("label"), v.alias("__v"), scale.alias("__s"))
     q = lambda x: F.least(  # noqa: E731 — local expression builder
         F.lit(127.0),
         F.greatest(F.lit(-127.0), F.floor(x.cast("double") / F.col("__s") + F.lit(0.5))),
@@ -1172,11 +1114,11 @@ def int8_quantization_error(
             F.count("*").cast("bigint").alias("n_vecs"),
             F.round(
                 F.sum(F.round("mse", 10).cast(dec)).cast("double") / F.count("*"),
-                decimals,
+                9,
             ).alias("mean_mse"),
             F.round(
                 F.sum(F.round("scale", 10).cast(dec)).cast("double") / F.count("*"),
-                decimals,
+                9,
             ).alias("mean_scale"),
         )
     )
@@ -1188,9 +1130,6 @@ def bitext_mining_pairs_brute(
     label_b: int,
     k: int = 4,
     margin_threshold: float = 1.05,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """EXACT-baseline margin-based bitext mining (Artetxe & Schwenk 2019):
     align vectors of group A to their best match in group B, scored by
@@ -1211,11 +1150,11 @@ def bitext_mining_pairs_brute(
     as decimal, so margins are pure functions of the vector sets.
     Output: one best-margin match per A vector above ``margin_threshold``.
     """
-    a = emb.filter(F.col(label_col) == label_a).select(
-        F.col(id_col).alias("a_id"), F.col(vec_col).alias("__va")
+    a = emb.filter(F.col("label") == label_a).select(
+        F.col("vec_id").alias("a_id"), F.col("embedding").alias("__va")
     )
-    b = emb.filter(F.col(label_col) == label_b).select(
-        F.col(id_col).alias("b_id"), F.col(vec_col).alias("__vb")
+    b = emb.filter(F.col("label") == label_b).select(
+        F.col("vec_id").alias("b_id"), F.col("embedding").alias("__vb")
     )
     scored = a.crossJoin(F.broadcast(b)).select(
         "a_id", "b_id", vecmath.cosine("__va", "__vb").alias("cos")
@@ -1279,12 +1218,8 @@ def bitext_mining_pairs_banded(
     label_b: int,
     k: int = 4,
     margin_threshold: float = 1.05,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     dim: int = 64,
     bands: int = 6,
-    rows_per_band: int = 8,
 ) -> DataFrame:
     """Scale path of :func:`bitext_mining_pairs`: candidates meet in
     hyperplane-sign LSH buckets (A sigs ⋈ B sigs on (band, sig)) instead
@@ -1299,14 +1234,14 @@ def bitext_mining_pairs_banded(
     Same deterministic bit fold as ``cosine_topk_lsh`` (oracle replays
     it), same margin arithmetic as the brute sibling.
     """
-    a = emb.filter(F.col(label_col) == label_a).select(
-        F.col(id_col).alias("a_id"), F.col(vec_col).alias("__va")
+    a = emb.filter(F.col("label") == label_a).select(
+        F.col("vec_id").alias("a_id"), F.col("embedding").alias("__va")
     )
-    b = emb.filter(F.col(label_col) == label_b).select(
-        F.col(id_col).alias("b_id"), F.col(vec_col).alias("__vb")
+    b = emb.filter(F.col("label") == label_b).select(
+        F.col("vec_id").alias("b_id"), F.col("embedding").alias("__vb")
     )
-    sa = banded_signatures(a, "a_id", "__va", dim, bands, rows_per_band)
-    sb = banded_signatures(b, "b_id", "__vb", dim, bands, rows_per_band)
+    sa = banded_signatures(a, "a_id", "__va", dim, bands)
+    sb = banded_signatures(b, "b_id", "__vb", dim, bands)
     cand = (
         sa.join(sb, ["band", "sig"])
         .select("a_id", "b_id", "__va", "__vb")
@@ -1324,12 +1259,8 @@ def bitext_mining_pairs(
     label_b: int,
     k: int = 4,
     margin_threshold: float = 1.05,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     dim: int = 64,
     bands: int = 6,
-    rows_per_band: int = 8,
 ) -> DataFrame:
     """Margin-based bitext mining — the production surface, running the
     LSH-banded candidate plan (:func:`bitext_mining_pairs_banded`).
@@ -1347,12 +1278,8 @@ def bitext_mining_pairs(
         label_b,
         k=k,
         margin_threshold=margin_threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-        label_col=label_col,
         dim=dim,
         bands=bands,
-        rows_per_band=rows_per_band,
     )
 
 
@@ -1361,8 +1288,6 @@ def binary_sign_ann_topk(
     queries: DataFrame,
     k: int = 5,
     candidates: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """1-bit (sign) quantized retrieve → exact cosine rerank: the most
@@ -1401,8 +1326,8 @@ def binary_sign_ann_topk(
 
     def staged(df: DataFrame, side: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.col(vec_col).alias("__v"),
+            F.col("vec_id").alias(f"{side}_id"),
+            F.col("embedding").alias("__v"),
         ).select(
             f"{side}_id",
             word(1, half).alias(f"{side}w1"),
@@ -1424,10 +1349,10 @@ def binary_sign_ann_topk(
         scored, candidates, F.col("hamming").asc(), F.col("neighbor_id").asc()
     ).select("query_id", "neighbor_id", "hamming")
     qv = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("queryv"))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("queryv"))
     )
     nv = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("neighborv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("neighborv")
     )
     reranked = (
         nv.join(F.broadcast(cand), "neighbor_id")
@@ -1455,9 +1380,6 @@ def mmr_diversified_topk(
     k: int = 5,
     candidates: int = 20,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998):
     select ``k`` results greedily by ``λ·rel(i) − (1−λ)·max_{s∈S}
@@ -1489,12 +1411,12 @@ def mmr_diversified_topk(
             "(one driver round-trip per pick; use a partitioned/clustered "
             "selection for larger k)"
         )
-    q = embeddings.filter(F.col(id_col) == query_id)
+    q = embeddings.filter(F.col("vec_id") == query_id)
     cand = (
-        cosine_topk(embeddings, q, k=candidates, id_col=id_col, vec_col=vec_col)
+        cosine_topk(embeddings, q, k=candidates)
         .select(F.col("neighbor_id").alias("id"), F.col("cosine_sim").alias("rel"))
     )
-    vecs = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    vecs = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     # One lazy checkpoint: the base collect below materializes it, the
     # pairwise collect (and its broadcast side) reuses it — the
     # corpus-scale retrieve runs ONCE (the previous shape re-derived it
@@ -1532,13 +1454,13 @@ def mmr_diversified_topk(
         best: tuple[float, int] | None = None
         for i in remaining:
             if not chosen_ids:
-                mmr = _round_half_up(rel_by_id[i] * lam, decimals)
+                mmr = _round_half_up(rel_by_id[i] * lam, 6)
             else:
                 sims = [sim[(i, s)] for s in chosen_ids if (i, s) in sim]
                 if not sims:
                     continue  # null score — sorts after every real one
                 mmr = _round_half_up(
-                    rel_by_id[i] * lam - one_minus * max(sims), decimals
+                    rel_by_id[i] * lam - one_minus * max(sims), 6
                 )
             if best is None or mmr > best[0]:
                 best = (mmr, i)
@@ -1554,7 +1476,7 @@ def mmr_diversified_topk(
             (int(i), float(r), float(m), rank + 1)
             for rank, (i, r, m) in enumerate(selected)
         ],
-        f"{id_col} long, rel double, mmr_score double, mmr_rank int",
+        "vec_id long, rel double, mmr_score double, mmr_rank int",
     )
 
 
@@ -1666,9 +1588,6 @@ def pq_train_codebooks(
     m: int = 4,
     k_codes: int = 16,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
     n_train: int = 1024,
     train_salt: str = "pq-train-v1",
 ) -> list[dict[int, list[float]]]:
@@ -1680,7 +1599,7 @@ def pq_train_codebooks(
     cost (VERDICT r8 #3)."""
     from .clustering import _prep
 
-    emb = _prep(embeddings, id_col, vec_col)
+    emb = _prep(embeddings, "vec_id", "embedding")
     train = _pq_training_sample(emb, n_train, train_salt).localCheckpoint(
         eager=True
     )
@@ -1688,7 +1607,7 @@ def pq_train_codebooks(
     if not first:
         raise ValueError("pq_train_codebooks: empty training sample")
     w = int(first[0]["d"]) // m
-    return _pq_codebooks(train, m, w, k_codes, iters, decimals)
+    return _pq_codebooks(train, m, w, k_codes, iters, 6)
 
 
 def _adc_scan_arrow(
@@ -1778,9 +1697,6 @@ def pq_ann_topk(
     k_codes: int = 16,
     iters: int = 1,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
     n_train: int = 1024,
     train_salt: str = "pq-train-v1",
     codebooks: list[dict[int, list[float]]] | None = None,
@@ -1828,7 +1744,7 @@ def pq_ann_topk(
     from .clustering import _prep
 
     w = dim // m
-    emb = _prep(embeddings, id_col, vec_col)
+    emb = _prep(embeddings, "vec_id", "embedding")
     if codebooks is not None:
         # Pre-trained injection (VERDICT r8 #3): the production shape —
         # train once via pq_train_codebooks, serve many ADC scans.  The
@@ -1861,11 +1777,11 @@ def pq_ann_topk(
         # n_train rows — is ever materialized; the scoring scan below reads
         # the original full frame.
         train = train.localCheckpoint(eager=True)
-        books = _pq_codebooks(train, m, w, k_codes, iters, decimals)
+        books = _pq_codebooks(train, m, w, k_codes, iters, 6)
     qrows = emb.filter(F.col("id") == query_id).select("vec").collect()
     if not qrows:
         raise ValueError(
-            f"pq_ann_topk: query_id {query_id!r} not present in column {id_col!r}"
+            f"pq_ann_topk: query_id {query_id!r} not present in column 'vec_id'"
         )
     qvec = list(qrows[0]["vec"])
 
@@ -1875,20 +1791,20 @@ def pq_ann_topk(
         books,
         m,
         w,
-        id_col,
-        decimals,
+        "vec_id",
+        6,
     )
-    shortlist = scored.orderBy(F.asc("est_sqdist"), F.asc(id_col)).limit(candidates)
+    shortlist = scored.orderBy(F.asc("est_sqdist"), F.asc("vec_id")).limit(candidates)
     reranked = emb.join(
-        F.broadcast(shortlist.select(F.col(id_col).alias("id"))), "id"
+        F.broadcast(shortlist.select(F.col("vec_id").alias("id"))), "id"
     ).select(
-        F.col("id").alias(id_col),
-        F.round(vecmath.sqdist("vec", qvec), decimals).alias("sqdist"),
+        F.col("id").alias("vec_id"),
+        F.round(vecmath.sqdist("vec", qvec), 6).alias("sqdist"),
     )
-    top = reranked.orderBy(F.asc("sqdist"), F.asc(id_col)).limit(k_top)
-    rk = Window.orderBy(F.asc("sqdist"), F.asc(id_col))
+    top = reranked.orderBy(F.asc("sqdist"), F.asc("vec_id")).limit(k_top)
+    rk = Window.orderBy(F.asc("sqdist"), F.asc("vec_id"))
     return top.select(
-        id_col, "sqdist", F.row_number().over(rk).cast("int").alias("rank")
+        "vec_id", "sqdist", F.row_number().over(rk).cast("int").alias("rank")
     )
 
 
@@ -1903,9 +1819,6 @@ def ivfpq_ann_topk(
     dim: int = 64,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 6,
     n_train: int = 1024,
     train_salt: str = "ivfpq-train-v1",
     cell_salt: str = "ivfpq-cells-v1",
@@ -1945,19 +1858,19 @@ def ivfpq_ann_topk(
     from .clustering import _prep
 
     w = dim // m
-    emb = _prep(embeddings, id_col, vec_col)
+    emb = _prep(embeddings, "vec_id", "embedding")
 
     cents = {
         int(cid): [float(v) for v in cvec]
-        for cid, cvec in _ivf_centroids(embeddings, id_col, vec_col, n_centroids, cell_salt)
+        for cid, cvec in _ivf_centroids(embeddings, "vec_id", "embedding", n_centroids, cell_salt)
     }
 
     train = _pq_training_sample(emb, n_train, train_salt).localCheckpoint(eager=True)
-    books = _pq_codebooks(train, m, w, k_codes, iters, decimals)
+    books = _pq_codebooks(train, m, w, k_codes, iters, 6)
     qrows = emb.filter(F.col("id") == query_id).select("vec").collect()
     if not qrows:
         raise ValueError(
-            f"ivfpq_ann_topk: query_id {query_id!r} not present in column {id_col!r}"
+            f"ivfpq_ann_topk: query_id {query_id!r} not present in column 'vec_id'"
         )
     qvec = list(qrows[0]["vec"])
 
@@ -1971,22 +1884,22 @@ def ivfpq_ann_topk(
         books,
         m,
         w,
-        id_col,
-        decimals,
+        "vec_id",
+        6,
         cents=cents,
         probes=probes,
     )
-    shortlist = scored.orderBy(F.asc("est_sqdist"), F.asc(id_col)).limit(candidates)
+    shortlist = scored.orderBy(F.asc("est_sqdist"), F.asc("vec_id")).limit(candidates)
     reranked = emb.join(
-        F.broadcast(shortlist.select(F.col(id_col).alias("id"))), "id"
+        F.broadcast(shortlist.select(F.col("vec_id").alias("id"))), "id"
     ).select(
-        F.col("id").alias(id_col),
-        F.round(vecmath.sqdist("vec", qvec), decimals).alias("sqdist"),
+        F.col("id").alias("vec_id"),
+        F.round(vecmath.sqdist("vec", qvec), 6).alias("sqdist"),
     )
-    top = reranked.orderBy(F.asc("sqdist"), F.asc(id_col)).limit(k_top)
-    rk = Window.orderBy(F.asc("sqdist"), F.asc(id_col))
+    top = reranked.orderBy(F.asc("sqdist"), F.asc("vec_id")).limit(k_top)
+    rk = Window.orderBy(F.asc("sqdist"), F.asc("vec_id"))
     return top.select(
-        id_col, "sqdist", F.row_number().over(rk).cast("int").alias("rank")
+        "vec_id", "sqdist", F.row_number().over(rk).cast("int").alias("rank")
     )
 
 
@@ -1995,8 +1908,6 @@ def ivf_nprobe_recall_curve(
     nprobes: tuple[int, ...] = (1, 2, 4),
     k: int = 5,
     n_queries: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 40,
     salt: str = "ivf-v1",
 ) -> DataFrame:
@@ -2025,18 +1936,18 @@ def ivf_nprobe_recall_curve(
     number of settings.
     """
     spark = embeddings.sparkSession
-    cent_rows = _ivf_centroids(embeddings, id_col, vec_col, n_centroids, salt)
-    queries = embeddings.filter(F.col(id_col) < n_queries)
+    cent_rows = _ivf_centroids(embeddings, "vec_id", "embedding", n_centroids, salt)
+    queries = embeddings.filter(F.col("vec_id") < n_queries)
     exact = cosine_topk(
-        embeddings, queries, k=k, id_col=id_col, vec_col=vec_col
+        embeddings, queries, k=k
     ).select("query_id", "neighbor_id").localCheckpoint(eager=True)
     # ^ query-set-sized: every probed setting joins it and counts its
     # queries — checkpointing keeps the brute-force baseline at ONE scan
     settings = sorted(int(p) for p in nprobes)
-    corpus = _ivf_assign(embeddings, "neighbor", 1, cent_rows, id_col, vec_col)
+    corpus = _ivf_assign(embeddings, "neighbor", 1, cent_rows, "vec_id", "embedding")
     probes = F.broadcast(
         _ivf_assign(
-            queries, "query", settings[-1], cent_rows, id_col, vec_col,
+            queries, "query", settings[-1], cent_rows, "vec_id", "embedding",
             with_rank=True,
         )
     )
@@ -2098,9 +2009,6 @@ def label_knn_accuracy(
     embeddings: DataFrame,
     k: int = 5,
     n_queries: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Leave-one-out k-NN label accuracy — the classic embedding-quality
     probe: if an embedding space is any good, a vector's nearest
@@ -2123,7 +2031,7 @@ def label_knn_accuracy(
     final ratio.
     """
     pred = _knn_predictions(
-        embeddings, k, n_queries, id_col, vec_col, label_col
+        embeddings, k, n_queries
     ).select(
         "query_id",
         F.col("true_label").alias("label"),
@@ -2142,9 +2050,6 @@ def _knn_predictions(
     embeddings: DataFrame,
     k: int,
     n_queries: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Shared leave-one-out kNN classifier core: (query_id, true_label,
     pred_label) for the first ``n_queries`` vectors — the broadcast
@@ -2152,18 +2057,18 @@ def _knn_predictions(
     out so the accuracy and confusion views share one plan.  Majority
     vote over the k neighbors, ties -> smaller label."""
     q = F.broadcast(
-        embeddings.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            vecmath.norm(f"`{vec_col}`").alias("__qn"),
-            F.col(label_col).alias("true_label"),
+        embeddings.filter(F.col("vec_id") < n_queries).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qv"),
+            vecmath.norm("`embedding`").alias("__qn"),
+            F.col("label").alias("true_label"),
         )
     )
     pairs = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("ev"),
-        vecmath.norm(f"`{vec_col}`").alias("__en"),
-        F.col(label_col).alias("nlabel"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ev"),
+        vecmath.norm("`embedding`").alias("__en"),
+        F.col("label").alias("nlabel"),
     ).join(q, F.col("neighbor_id") != F.col("query_id"))
     # norms hoisted below the join (bit-identical; see cosine_topk)
     scored = pairs.select(
@@ -2195,10 +2100,6 @@ def label_knn_confusion(
     embeddings: DataFrame,
     k: int = 5,
     n_queries: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    decimals: int = 6,
 ) -> DataFrame:
     """Confusion matrix of the leave-one-out kNN classifier — WHERE the
     embedding space confuses classes, not just how often
@@ -2216,7 +2117,7 @@ def label_knn_confusion(
     exchanges); the matrix is label-pair grain, the row normalizer a
     broadcast label-grain aggregate.
     """
-    pred = _knn_predictions(embeddings, k, n_queries, id_col, vec_col, label_col)
+    pred = _knn_predictions(embeddings, k, n_queries)
     cells = pred.groupBy("true_label", "pred_label").agg(
         F.count("*").cast("bigint").alias("n")
     )
@@ -2228,7 +2129,7 @@ def label_knn_confusion(
         "pred_label",
         "n",
         F.round(
-            F.col("n").cast("double") / F.col("__t").cast("double"), decimals
+            F.col("n").cast("double") / F.col("__t").cast("double"), 6
         ).alias("row_share"),
     )
 
@@ -2237,8 +2138,6 @@ def knn_hub_degree_hist(
     embeddings: DataFrame,
     n_queries: int = 100,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """k-NN hubness diagnostic (Radovanovic et al. 2010): the in-degree
     distribution of the k-NN graph over the first ``n_queries`` probes —
@@ -2259,8 +2158,8 @@ def knn_hub_degree_hist(
     would otherwise re-run the whole retrieval; the histogram is
     degree-grain.
     """
-    q = embeddings.filter(F.col(id_col) < n_queries)
-    topk = cosine_topk(embeddings, q, k=k, id_col=id_col, vec_col=vec_col)
+    q = embeddings.filter(F.col("vec_id") < n_queries)
+    topk = cosine_topk(embeddings, q, k=k)
     indeg = (
         topk.groupBy("neighbor_id")
         .agg(F.count("*").cast("bigint").alias("in_degree"))
@@ -2286,9 +2185,6 @@ def triplet_margin_stats(
     embeddings: DataFrame,
     n_anchors: int = 50,
     margin: float = 0.1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Hardest-triplet margin audit of an embedding space: for each of
     the first ``n_anchors`` vectors, the FARTHEST same-label neighbor
@@ -2310,20 +2206,20 @@ def triplet_margin_stats(
     scan; anchors broadcast.
     """
     q = F.broadcast(
-        embeddings.filter(F.col(id_col) < n_anchors).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            vecmath.norm(f"`{vec_col}`").alias("__qn"),
-            F.col(label_col).alias("qlabel"),
+        embeddings.filter(F.col("vec_id") < n_anchors).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qv"),
+            vecmath.norm("`embedding`").alias("__qn"),
+            F.col("label").alias("qlabel"),
         )
     )
     # norms hoisted below the join (bit-identical; see cosine_topk)
     scored = (
         embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("ev"),
-            vecmath.norm(f"`{vec_col}`").alias("__en"),
-            F.col(label_col).alias("nlabel"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("ev"),
+            vecmath.norm("`embedding`").alias("__en"),
+            F.col("label").alias("nlabel"),
         )
         .join(q, F.col("neighbor_id") != F.col("query_id"))
         .select(
@@ -2369,9 +2265,6 @@ def filtered_ann_recall(
     n_queries: int = 50,
     k: int = 5,
     prefetch: int = 15,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Filtered vector search audit — the production question every
     metadata-filtered ANN index faces: POST-filtering (retrieve an
@@ -2396,11 +2289,11 @@ def filtered_ann_recall(
     partial top-k; the comparison join runs at (query, k) grain.
     """
     q = F.broadcast(
-        embeddings.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            vecmath.norm(f"`{vec_col}`").alias("__qn"),
-            F.col(label_col).alias("qlabel"),
+        embeddings.filter(F.col("vec_id") < n_queries).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qv"),
+            vecmath.norm("`embedding`").alias("__qn"),
+            F.col("label").alias("qlabel"),
         )
     )
 
@@ -2408,10 +2301,10 @@ def filtered_ann_recall(
         # norms hoisted below the join (bit-identical; see cosine_topk)
         return (
             embeddings.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("ev"),
-                vecmath.norm(f"`{vec_col}`").alias("__en"),
-                F.col(label_col).alias("nlabel"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("ev"),
+                vecmath.norm("`embedding`").alias("__en"),
+                F.col("label").alias("nlabel"),
             )
             .join(q, F.col("neighbor_id") != F.col("query_id"))
             .select(

@@ -27,18 +27,16 @@ from pyspark.sql import functions as F
 PCTS = [0.5, 0.9, 0.99]
 
 
-def distinct_daily(
-    events: DataFrame, ts_col: str = "ts", key_col: str = "user_id"
-) -> DataFrame:
+def distinct_daily(events: DataFrame) -> DataFrame:
     """Exact distinct actors per day (the profile the sketches approximate).
 
     Spark plans exact DISTINCT-agg as a two-phase shuffle (expand on
     (day, user) then re-agg on day); correct but the expensive baseline.
     """
     return (
-        events.groupBy(F.date_format(ts_col, "yyyy-MM-dd").alias("day"))
+        events.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
         .agg(
-            F.count_distinct(key_col).alias("n_users"),
+            F.count_distinct("user_id").alias("n_users"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .orderBy("day")
@@ -47,62 +45,54 @@ def distinct_daily(
 
 def approx_distinct_daily(
     events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
     rsd: float = 0.02,
 ) -> DataFrame:
     """HLL++ variant of :func:`distinct_daily` — single-shuffle, fixed
     memory, the form that survives a 100 TB event log."""
     return (
-        events.groupBy(F.date_format(ts_col, "yyyy-MM-dd").alias("day"))
+        events.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
         .agg(
-            F.approx_count_distinct(key_col, rsd).alias("n_users_approx"),
+            F.approx_count_distinct("user_id", rsd).alias("n_users_approx"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .orderBy("day")
     )
 
 
-def value_percentiles(
-    events: DataFrame, group_col: str = "event_type", value_col: str = "value"
-) -> DataFrame:
+def value_percentiles(events: DataFrame) -> DataFrame:
     """Exact interpolated p50/p90/p99 per group (≡ SQL ``quantile_cont``)."""
-    p = F.percentile(value_col, F.lit(PCTS))
+    p = F.percentile("value", F.lit(PCTS))
     return (
-        events.groupBy(group_col)
+        events.groupBy("event_type")
         .agg(
             F.round(p[0], 4).alias("p50"),
             F.round(p[1], 4).alias("p90"),
             F.round(p[2], 4).alias("p99"),
-            F.round(F.avg(value_col), 4).alias("mean"),
+            F.round(F.avg("value"), 4).alias("mean"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
 def approx_value_percentiles(
     events: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    accuracy: int = 10000,
 ) -> DataFrame:
     """GK-digest variant of :func:`value_percentiles`: rank error ≤
-    1/accuracy with O(accuracy) memory per group, mergeable partials."""
-    p = F.percentile_approx(value_col, F.lit(PCTS), F.lit(accuracy))
+    1/10000 with O(10000) memory per group, mergeable partials."""
+    p = F.percentile_approx("value", F.lit(PCTS), F.lit(10000))
     return (
-        events.groupBy(group_col)
+        events.groupBy("event_type")
         .agg(
             F.round(p[0], 4).alias("p50"),
             F.round(p[1], 4).alias("p90"),
             F.round(p[2], 4).alias("p99"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
 def heavy_hitters_topk(
     terms: DataFrame,
-    term_col: str = "term",
     k: int = 20,
     width: int = 1000,
 ) -> DataFrame:
@@ -131,7 +121,7 @@ def heavy_hitters_topk(
     from ..session import ensure_executors_can_import
 
     ensure_executors_can_import(terms.sparkSession)
-    col = term_col
+    col = "term"
 
     def local_heavy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -158,10 +148,7 @@ MAD_SCALE = 1.4826  # Φ⁻¹(0.75) normalization: MAD → σ under normality
 
 def mad_outliers(
     df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
     z_cut: float = 3.5,
-    decimals: int = 4,
 ) -> DataFrame:
     """Robust per-group outlier flagging via median absolute deviation:
     z = (x - median) / (MAD_SCALE · MAD); keep rows with |z| > ``z_cut``.
@@ -174,25 +161,25 @@ def mad_outliers(
     ``approx_percentile`` (same plan, sketch-mergeable) when the group's
     value list no longer fits the aggregation buffer.
     """
-    med = df.groupBy(group_col).agg(
-        F.percentile(value_col, 0.5).alias("__med")
+    med = df.groupBy("event_type").agg(
+        F.percentile("value", 0.5).alias("__med")
     )
     mad = (
-        df.join(F.broadcast(med), group_col)
-        .groupBy(group_col)
+        df.join(F.broadcast(med), "event_type")
+        .groupBy("event_type")
         .agg(
-            F.percentile(F.abs(F.col(value_col) - F.col("__med")), 0.5).alias("__mad"),
+            F.percentile(F.abs(F.col("value") - F.col("__med")), 0.5).alias("__mad"),
             F.first("__med").alias("__med"),
         )
     )
     # nullif guards the all-identical group (MAD = 0): ANSI mode would
     # raise DIVIDE_BY_ZERO; NULL z is never an outlier, the right call
-    z = (F.col(value_col) - F.col("__med")) / F.nullif(
+    z = (F.col("value") - F.col("__med")) / F.nullif(
         F.lit(MAD_SCALE) * F.col("__mad"), F.lit(0.0)
     )
     return (
-        df.join(F.broadcast(mad), group_col)
-        .withColumn("robust_z", F.round(z, decimals))
+        df.join(F.broadcast(mad), "event_type")
+        .withColumn("robust_z", F.round(z, 4))
         .filter(F.abs("robust_z") > z_cut)
         .drop("__med", "__mad")
     )
@@ -202,9 +189,7 @@ def grouped_zscore(
     df: DataFrame,
     group_col: str = "source",
     value_col: str = "n_chars",
-    id_col: str = "doc_id",
     z_cut: float = 2.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-group z-score normalization with an outlier cut — the
     normalize-then-threshold step a multi-source corpus mix runs so one
@@ -237,10 +222,10 @@ def grouped_zscore(
     return (
         df.join(F.broadcast(stats), group_col)
         .select(
-            id_col,
+            "doc_id",
             group_col,
             F.col(value_col).cast("double").alias(value_col),
-            F.round(z, decimals).alias("zscore"),
+            F.round(z, 6).alias("zscore"),
         )
         .filter(F.abs("zscore") <= z_cut)
     )
@@ -248,9 +233,6 @@ def grouped_zscore(
 
 def distinct_rollup_sketched(
     df: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    lg_k: int = 12,
 ) -> DataFrame:
     """Mergeable distinct-count rollup: per-day HLL sketches of the key,
     then the MONTH estimate computed by UNIONING the day sketches — never
@@ -264,10 +246,10 @@ def distinct_rollup_sketched(
     suite asserts the estimate lands within the sketch's error envelope
     of the exact count.
     """
-    day = F.date_trunc("day", F.col(ts_col))
+    day = F.date_trunc("day", F.col("ts"))
     daily = df.groupBy(day.alias("day")).agg(
-        F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sk"),
-        F.count_distinct(key_col).alias("exact_day"),
+        F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"),
+        F.count_distinct("user_id").alias("exact_day"),
     )
     return (
         daily.groupBy(F.date_trunc("month", F.col("day")).alias("month"))
@@ -287,10 +269,6 @@ def distinct_rollup_sketched(
 
 def global_percent_rank(
     df: DataFrame,
-    id_col: str = "event_id",
-    value_col: str = "value",
-    value_decimals: int = 2,
-    decimals: int = 6,
 ) -> DataFrame:
     """Exact global percent_rank of every row WITHOUT a global sort of the
     facts: quantize the value, count per distinct value, cumulate the
@@ -303,7 +281,7 @@ def global_percent_rank(
     broadcast.  pr = count(values < v) / (N - 1), identical to SQL
     percent_rank including tie behavior.
     """
-    v = F.round(F.col(value_col), value_decimals)
+    v = F.round(F.col("value"), 2)
     counts = df.select(v.alias("v")).groupBy("v").agg(
         F.count("*").alias("cnt")
     )
@@ -315,24 +293,21 @@ def global_percent_rank(
     )
     n1 = df.agg((F.count("*") - 1).alias("nm1"))
     return (
-        df.select(F.col(id_col), v.alias("v"))
+        df.select(F.col("event_id"), v.alias("v"))
         .join(F.broadcast(ranked), "v")
         .crossJoin(F.broadcast(n1))
         .select(
-            id_col,
-            F.col("v").alias(value_col),
-            F.round(F.col("below") / F.col("nm1"), decimals).alias("pct_rank"),
+            "event_id",
+            F.col("v").alias("value"),
+            F.round(F.col("below") / F.col("nm1"), 6).alias("pct_rank"),
         )
     )
 
 
 def contingency_chi2(
     df: DataFrame,
-    row_col: str = "source",
-    col_col: str = "lang",
-    decimals: int = 6,
 ) -> DataFrame:
-    """Per-cell chi-square contributions for the ``row_col`` × ``col_col``
+    """Per-cell chi-square contributions for the ``source`` × ``lang``
     contingency table — the distribution-shift detector a corpus refresh
     runs (is language mix independent of source, or did one source's mix
     drift?).  Cells with zero observations are materialized via a
@@ -344,7 +319,7 @@ def contingency_chi2(
     dimension tables (tiny × tiny).  Facts are scanned once.
     """
     obs = df.groupBy(
-        F.col(row_col).alias("r"), F.col(col_col).alias("c")
+        F.col("source").alias("r"), F.col("lang").alias("c")
     ).agg(F.count("*").alias("o"))
     rows = obs.groupBy("r").agg(F.sum("o").alias("rt"))
     cols = obs.groupBy("c").agg(F.sum("o").alias("ct"))
@@ -356,10 +331,10 @@ def contingency_chi2(
         .join(F.broadcast(cols), "c")
         .crossJoin(F.broadcast(n))
         .select(
-            F.col("r").alias(row_col),
-            F.col("c").alias(col_col),
+            F.col("r").alias("source"),
+            F.col("c").alias("lang"),
             F.coalesce(F.col("o"), F.lit(0)).cast("bigint").alias("observed"),
-            F.round(F.col("rt") * F.col("ct") / F.col("n"), decimals).alias(
+            F.round(F.col("rt") * F.col("ct") / F.col("n"), 6).alias(
                 "expected"
             ),
         )
@@ -368,7 +343,7 @@ def contingency_chi2(
         "chi2_contrib",
         F.round(
             F.pow(F.col("observed") - F.col("expected"), 2) / F.col("expected"),
-            decimals,
+            6,
         ),
     )
 
@@ -377,7 +352,6 @@ def mergeable_moments(
     df: DataFrame,
     value_col: str = "n_chars",
     shard_expr: str = "doc_id % 8",
-    decimals: int = 6,
 ) -> DataFrame:
     """Mean/variance computed the DISTRIBUTED way: per-shard (n, mean, M2)
     moments combined with the parallel-combine identity (Chan et al.) —
@@ -401,13 +375,13 @@ def mergeable_moments(
     )
     return g.select(
         F.col("N").cast("bigint").alias("n_rows"),
-        F.round("gmean", decimals).alias("mean"),
+        F.round("gmean", 6).alias("mean"),
         F.round(
             F.sqrt(
                 (F.col("sm2") + F.col("snm2") - F.col("N") * F.col("gmean") * F.col("gmean"))
                 / F.col("N")
             ),
-            decimals,
+            6,
         ).alias("stddev_pop"),
     )
 
@@ -627,11 +601,8 @@ def dp_noisy_counts(
 
 def winsorized_means(
     df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
     lo: float = 0.05,
     hi: float = 0.95,
-    decimals: int = 6,
 ) -> DataFrame:
     """Winsorized (clipped) per-group means: values below the group's
     ``lo`` quantile or above its ``hi`` quantile are clamped to those
@@ -643,20 +614,20 @@ def winsorized_means(
     facts.  Clip bounds are rounded to 9dp before the clamp so both
     engines clamp at identical thresholds.
     """
-    g = F.col(group_col)
+    g = F.col("event_type")
     q = df.groupBy(g.alias("g")).agg(
-        F.round(F.percentile(value_col, F.lit(lo)), 9).alias("p_lo"),
-        F.round(F.percentile(value_col, F.lit(hi)), 9).alias("p_hi"),
+        F.round(F.percentile("value", F.lit(lo)), 9).alias("p_lo"),
+        F.round(F.percentile("value", F.lit(hi)), 9).alias("p_hi"),
     )
-    v = F.col(value_col).cast("double")
+    v = F.col("value").cast("double")
     clipped = F.least(F.greatest(v, F.col("p_lo")), F.col("p_hi"))
     return (
         df.join(F.broadcast(q), g == F.col("g"))
-        .groupBy(g.alias(group_col))
+        .groupBy(g.alias("event_type"))
         .agg(
             F.count("*").cast("bigint").alias("n"),
-            F.round(F.avg(v), decimals).alias("raw_mean"),
-            F.round(F.avg(clipped), decimals).alias("winsorized_mean"),
+            F.round(F.avg(v), 6).alias("raw_mean"),
+            F.round(F.avg(clipped), 6).alias("winsorized_mean"),
             F.max("p_lo").alias("p_lo"),
             F.max("p_hi").alias("p_hi"),
         )
@@ -726,10 +697,7 @@ def combine_aggregates(
 
 def weighted_percentiles(
     df: DataFrame,
-    value_col: str = "l_extendedprice",
-    weight_col: str = "l_quantity",
     ps: tuple = (0.5, 0.9, 0.99),
-    decimals_value: int = 0,
 ) -> DataFrame:
     """Weight-aware percentiles via the inverse CDF over a QUANTIZED value
     grid: the p-th weighted percentile is the smallest value whose
@@ -745,9 +713,9 @@ def weighted_percentiles(
 
     Output (one row): ``(w_total, wp50, wp90, wp99, …)``.
     """
-    v = F.round(F.col(value_col), decimals_value).cast("long")
+    v = F.round(F.col("l_extendedprice"), 0).cast("long")
     grid = df.groupBy(v.alias("v")).agg(
-        F.sum(F.col(weight_col).cast("long")).cast("long").alias("w")
+        F.sum(F.col("l_quantity").cast("long")).cast("long").alias("w")
     )
     cw = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -777,13 +745,10 @@ def weighted_percentiles(
 
 def histogram_percentile_error(
     events: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
     lo: float = 0.0,
     hi: float = 500.0,
     n_bins: int = 100,
     ps: tuple = (0.5, 0.9, 0.99),
-    decimals: int = 6,
 ) -> DataFrame:
     """Fixed-width-histogram percentiles with their MEASURED error
     against the exact percentile — the proof that a mergeable histogram
@@ -807,8 +772,8 @@ def histogram_percentile_error(
     you'd drop it and keep only the histogram.
     """
     width = (hi - lo) / n_bins
-    b = F.width_bucket(F.col(value_col), F.lit(lo), F.lit(hi), F.lit(n_bins))
-    hist = events.groupBy(F.col(group_col).alias("g"), b.alias("bucket")).agg(
+    b = F.width_bucket(F.col("value"), F.lit(lo), F.lit(hi), F.lit(n_bins))
+    hist = events.groupBy(F.col("event_type").alias("g"), b.alias("bucket")).agg(
         F.count("*").cast("long").alias("c")
     )
     cw = Window.partitionBy("g").orderBy("bucket").rowsBetween(
@@ -820,9 +785,9 @@ def histogram_percentile_error(
         F.sum("c").over(cw).cast("long").alias("cum"),
         F.sum("c").over(tw).cast("long").alias("n"),
     )
-    exact = events.groupBy(F.col(group_col).alias("g2")).agg(
+    exact = events.groupBy(F.col("event_type").alias("g2")).agg(
         *[
-            F.percentile(value_col, F.lit(p)).alias(f"ex{int(p * 100)}")
+            F.percentile("value", F.lit(p)).alias(f"ex{int(p * 100)}")
             for p in ps
         ]
     )
@@ -846,9 +811,9 @@ def histogram_percentile_error(
     out_rows = [
         F.struct(
             F.lit(float(p)).alias("p"),
-            F.round(F.col(f"est{tag}"), decimals).alias("est"),
-            F.round(F.col(f"ex{tag}"), decimals).alias("exact"),
-            F.round(F.abs(F.col(f"est{tag}") - F.col(f"ex{tag}")), decimals).alias(
+            F.round(F.col(f"est{tag}"), 6).alias("est"),
+            F.round(F.col(f"ex{tag}"), 6).alias("exact"),
+            F.round(F.abs(F.col(f"est{tag}") - F.col(f"ex{tag}")), 6).alias(
                 "abs_err"
             ),
             (F.abs(F.col(f"est{tag}") - F.col(f"ex{tag}")) <= F.lit(width))
@@ -858,16 +823,15 @@ def histogram_percentile_error(
         for (p, tag, _) in rows
     ]
     return j.select(
-        F.col("g").alias(group_col), F.explode(F.array(*out_rows)).alias("r")
+        F.col("g").alias("event_type"), F.explode(F.array(*out_rows)).alias("r")
     ).select(
-        group_col, "r.p", "r.est", "r.exact", "r.abs_err", "r.within_one_bin"
+        "event_type", "r.p", "r.est", "r.exact", "r.abs_err", "r.within_one_bin"
     )
 
 
 def incremental_histogram_fold(
     old_hist: DataFrame,
     batch: DataFrame,
-    value_col: str = "value",
     lo: float = 0.0,
     hi: float = 500.0,
     n_bins: int = 20,
@@ -889,10 +853,10 @@ def incremental_histogram_fold(
     """
     dec = "decimal(30,10)"
     fresh = batch.groupBy(
-        F.width_bucket(value_col, F.lit(lo), F.lit(hi), F.lit(n_bins)).alias("b")
+        F.width_bucket("value", F.lit(lo), F.lit(hi), F.lit(n_bins)).alias("b")
     ).agg(
         F.count("*").cast("bigint").alias("bn"),
-        F.sum(F.col(value_col).cast(dec)).alias("btotal"),
+        F.sum(F.col("value").cast(dec)).alias("btotal"),
     )
     stored_total = "total_exact" if "total_exact" in old_hist.columns else "total"
     stored = old_hist.select(
@@ -917,7 +881,6 @@ def kmv_distinct_estimate(
     key_col: str,
     group_col: str,
     k: int = 12,
-    decimals: int = 6,
 ) -> DataFrame:
     """K-minimum-values distinct sketch audit (Bar-Yossef et al. 2002) —
     the mergeable COUNT DISTINCT sketch theta/KMV lakehouse engines
@@ -977,7 +940,7 @@ def kmv_distinct_estimate(
         F.col("hk") > 0,
         F.round(
             F.lit(float(k - 1)) / (F.col("hk").cast("double") / F.lit(two60)),
-            decimals,
+            6,
         ),
     )
     per_group = (
@@ -999,7 +962,7 @@ def kmv_distinct_estimate(
         F.col("hk") > 0,
         F.round(
             F.lit(float(k - 1)) / (F.col("hk").cast("double") / F.lit(two60)),
-            decimals,
+            6,
         ),
     )
     union_row = u_nd.crossJoin(F.broadcast(u_kth)).select(
@@ -1015,7 +978,7 @@ def kmv_distinct_estimate(
         F.round(
             (F.col("kmv_estimate") - F.col("exact_distinct").cast("double"))
             / F.col("exact_distinct").cast("double"),
-            decimals,
+            6,
         ).alias("rel_err"),
     )
 
@@ -1024,7 +987,6 @@ def bloom_filter_plan(
     df: DataFrame,
     key_col: str = "user_id",
     bits_per_key: tuple[int, ...] = (4, 6, 8, 10, 12, 16),
-    decimals: int = 6,
 ) -> DataFrame:
     """Bloom-filter sizing planner — the design-time table behind every
     lakehouse bloom index (Parquet bloom filters, join-pruning blooms
@@ -1068,7 +1030,7 @@ def bloom_filter_plan(
         9,
     )
     fpr = F.round(
-        F.exp(F.col("k_hashes").cast("double") * F.log(base)), decimals
+        F.exp(F.col("k_hashes").cast("double") * F.log(base)), 6
     )
     return staged.select(
         "n_keys",

@@ -57,20 +57,9 @@ def release_persisted() -> int:
 
 
 def token_count(col: Column | str) -> Column:
-    """Whitespace token count; empty/blank text counts 0.
-
-    A BPE-ish subword estimate is ``ceil(chars/4)`` (the reference uses
-    exactly that to budget LLM batches — run_ats_enrichment.py:674); see
-    ``subword_estimate``.
-    """
+    """Whitespace token count; empty/blank text counts 0."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(F.trim(c) == "", F.lit(0)).otherwise(F.size(tokens(c)))
-
-
-def subword_estimate(col: Column | str) -> Column:
-    """chars/4 token-budget estimate (reference run_ats_enrichment.py:674)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.ceil(F.length(c) / F.lit(4.0)).cast("bigint")
 
 
 # GPT-2-style pre-tokenizer, simplified to a dialect shared by Java regex
@@ -80,9 +69,7 @@ def subword_estimate(col: Column | str) -> Column:
 BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def bpe_token_counts(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def bpe_token_counts(df: DataFrame) -> DataFrame:
     """Token counting two ways (whitespace + BPE-ish regex) per document.
 
     Pure Catalyst projection (``regexp_extract_all`` stays in codegen —
@@ -90,11 +77,11 @@ def bpe_token_counts(
     ``chars_per_tok`` is the compression-ratio quality signal (too low →
     symbol soup, too high → run-on junk).
     """
-    c = F.col(text_col)
+    c = F.col("text")
     n_ws = token_count(c)
     n_bpe = F.size(F.regexp_extract_all(c, F.lit(BPE_REGEX), 0))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_ws.cast("bigint").alias("n_ws_tokens"),
         n_bpe.cast("bigint").alias("n_bpe_tokens"),
         F.when(n_bpe > 0, F.round(F.length(c) / n_bpe.cast("double"), 4))
@@ -239,14 +226,14 @@ def _pred_lang(cnt: Column) -> Column:
     return pred
 
 
-def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-profile language ID: score each language by how many tokens
     fall in its function-word profile; argmax wins (fixed en>de>es>fr>zh
     tie-break), 'und' when every score is 0."""
-    staged = df.select(F.col(id_col), _lexicon_counts(text_col).alias("__cnt"))
+    staged = df.select(F.col("doc_id"), _lexicon_counts("text").alias("__cnt"))
     cnt = F.col("__cnt")
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         _pred_lang(cnt).alias("pred_lang"),
         *[
             cnt[f"s_{lang}"].cast("bigint").alias(f"score_{lang}")
@@ -257,8 +244,6 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
 
 def quality_filter(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_tokens: int = 20,
     max_punct_ratio: float = 0.08,
     min_stopword_ratio: float = 0.05,
@@ -279,14 +264,14 @@ def quality_filter(
     (token count, punct count, lexicon counts); stage 2 is integer/string
     arithmetic over those columns, where expression re-reference is free.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     n_chars = F.length(c)
     staged = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         token_count(c).alias("__n_tok"),
         (n_chars - F.length(F.regexp_replace(c, _PUNCT_CLASS, ""))).alias("__n_punct"),
         n_chars.alias("__n_chars"),
-        _lexicon_counts(text_col).alias("__cnt"),
+        _lexicon_counts("text").alias("__cnt"),
     )
     n_tok = F.col("__n_tok")
     punct_ratio = F.when(
@@ -305,7 +290,7 @@ def quality_filter(
         F.when(pred != allowed_lang, F.lit("bad_lang")),
     )
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.cast("bigint").alias("n_tokens"),
         pred.alias("pred_lang"),
         reasons.alias("reasons"),
@@ -313,9 +298,7 @@ def quality_filter(
     )
 
 
-def repetition_ratio(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
+def repetition_ratio(df: DataFrame) -> DataFrame:
     """Within-document repetition: fraction of word n-grams that are
     duplicates (1 − distinct/total).  The Gopher-style repetition gate —
     boilerplate, scraped menus and keyword-stuffed spam score high.
@@ -324,11 +307,11 @@ def repetition_ratio(
     construction is the same slice-based form as the dedup shingles so the
     oracle replays it verbatim.
     """
-    grams = shingles(tokens(F.col(text_col)), n)
+    grams = shingles(tokens(F.col("text")), 3)
     n_grams = F.size(grams)
     n_uniq = F.size(F.array_distinct(grams))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_grams.cast("bigint").alias("n_grams"),
         n_uniq.cast("bigint").alias("n_unique_grams"),
         F.round(
@@ -343,13 +326,10 @@ def repetition_ratio(
 
 def top_terms(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 20,
-    min_len: int = 3,
 ) -> DataFrame:
     """Corpus-wide top-k terms by total occurrences (alphabetic tokens of
-    ≥ ``min_len`` chars, stopwords removed), with document frequency.
+    ≥ 3 chars, stopwords removed), with document frequency.
 
     explode → two-level aggregate: the shuffle carries (term, partial
     counts) after map-side combine, never documents; the final top-k is a
@@ -357,11 +337,11 @@ def top_terms(
     (per-partition heaps, no single-partition sort).  Ties break on the
     term so the ranking is deterministic.
     """
-    toks = F.transform(tokens(F.col(text_col)), F.lower)
+    toks = F.transform(tokens(F.col("text")), F.lower)
     terms = df.select(
-        F.col(id_col), F.explode(toks).alias("term")
+        F.col("doc_id"), F.explode(toks).alias("term")
     ).filter(
-        (F.length("term") >= min_len)
+        (F.length("term") >= 3)
         & F.col("term").rlike("^[a-z]+$")
         & ~F.col("term").isin(STOPWORDS_EN)
     )
@@ -369,28 +349,26 @@ def top_terms(
         terms.groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("n_occurrences"),
-            F.count_distinct(id_col).alias("n_docs"),
+            F.count_distinct("doc_id").alias("n_docs"),
         )
         .orderBy(F.col("n_occurrences").desc(), F.col("term").asc())
         .limit(k)
     )
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint over normalized tokens.
 
     Polynomial fold mod 1e9+7 (functions/hashing.py) — stable across
     engines and row order, usable as a grouping key for exact dedup and as
     a cheap content-version stamp in SCD merges.
     """
-    toks = tokens(norm_text(text_col))
-    return df.select(F.col(id_col), rolling_hash(toks).alias("fingerprint"))
+    toks = tokens(norm_text("text"))
+    return df.select(F.col("doc_id"), rolling_hash(toks).alias("fingerprint"))
 
 
 def pmi_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_df: int = 10,
     min_pair: int = 5,
     top: int = 50,
@@ -408,12 +386,15 @@ def pmi_pairs(
     frequency side joins broadcast-side.  PMI is rounded before the top-k
     ordering (discrete, engine-stable ranking; ties break on the pair).
     """
-    ex = df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"))
+    ex = df.select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"),
+    )
     dfreq = ex.groupBy("term").agg(F.count("*").alias("dfreq")).filter(
         F.col("dfreq") >= min_df
     )
     kept = ex.join(F.broadcast(dfreq), "term")
-    n_docs = df.select(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = df.select(F.countDistinct("doc_id").alias("n_docs"))
     pairs = (
         kept.alias("a")
         .join(kept.alias("b"), "id")
@@ -444,8 +425,6 @@ def pmi_pairs(
 
 def top_bigrams(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top: int = 30,
 ) -> DataFrame:
     """Most frequent ADJACENT token pairs across the corpus — the count
@@ -456,7 +435,7 @@ def top_bigrams(
     own tail — no self-join, no explode-then-rejoin; the only exchange is
     the (pair) count groupBy.  Ranking is (count desc, pair asc).
     """
-    pairs = ngrams(tokens(F.col(text_col)), 2)
+    pairs = ngrams(tokens(F.col("text")), 2)
     return (
         df.select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.w0").alias("term_a"), F.col("p.w1").alias("term_b"))
@@ -468,9 +447,6 @@ def top_bigrams(
 
 def unigram_logppl(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-document log-perplexity under a corpus-trained unigram LM —
     the self-contained form of CCNet-style LM quality filtering (docs
@@ -488,8 +464,8 @@ def unigram_logppl(
     per-doc mean so cross-engine float fold order cannot move the result.
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.col("doc_id").alias("id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
     )
     counts = toks.groupBy("tok").agg(F.count("*").alias("n"))
     totals = counts.agg(
@@ -505,9 +481,9 @@ def unigram_logppl(
             ).alias("nll"),
         )
     )
-    return scored.groupBy(F.col("id").alias(id_col)).agg(
+    return scored.groupBy(F.col("id").alias("doc_id")).agg(
         F.count("*").cast("bigint").alias("n_tokens"),
-        F.round(F.avg("nll"), decimals).alias("logppl"),
+        F.round(F.avg("nll"), 6).alias("logppl"),
     )
 
 
@@ -523,10 +499,6 @@ def _ngram_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 def bigram_logppl(
     df: DataFrame,
     model: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.4,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-document log-perplexity under a bigram LM with stupid backoff
     (Brants et al. 2007) — the KenLM-shaped upgrade of ``unigram_logppl``
@@ -536,7 +508,7 @@ def bigram_logppl(
     a reference corpus to score candidates against it — that is when the
     backoff path actually fires, since self-scoring sees every bigram).
     p(b|a) = C2(a,b)/C1(a) when the bigram was seen, else
-    ``alpha`` · (C1(b)+1)/(total+V) (add-one unigram backoff).
+    0.4 · (C1(b)+1)/(total+V) (add-one unigram backoff).
 
     Plan: the model side reduces to two vocabulary-sized count tables
     (bigram conditional probs, unigram counts) built once.  Round 11:
@@ -550,12 +522,12 @@ def bigram_logppl(
     Docs with < 2 tokens emit no bigrams and are absent from the output.
     """
     model = df if model is None else model
-    big = _ngram_rows(df, id_col, text_col, 2)
-    c2 = _ngram_rows(model, id_col, text_col, 2).groupBy("a", "b").agg(
+    big = _ngram_rows(df, "doc_id", "text", 2)
+    c2 = _ngram_rows(model, "doc_id", "text", 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (
-        model.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
+        model.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n1"))
     )
@@ -577,7 +549,7 @@ def bigram_logppl(
             F.round(
                 -F.log(
                     F.when(F.col("pb").isNotNull(), F.col("pb")).otherwise(
-                        F.lit(alpha)
+                        F.lit(0.4)
                         * (F.coalesce(F.col("nb"), F.lit(0)) + F.lit(1.0))
                         / (F.col("total") + F.col("vocab"))
                     )
@@ -587,15 +559,14 @@ def bigram_logppl(
         )
     )
     scored = big.join(scored_bi, ["a", "b"]).select("id", "nll")
-    return scored.groupBy(F.col("id").alias(id_col)).agg(
+    return scored.groupBy(F.col("id").alias("doc_id")).agg(
         F.count("*").cast("bigint").alias("n_bigrams"),
-        F.round(F.avg("nll"), decimals).alias("logppl"),
+        F.round(F.avg("nll"), 6).alias("logppl"),
     )
 
 
 def bpe_merge_candidates(
     df: DataFrame,
-    text_col: str = "text",
     top: int = 50,
 ) -> DataFrame:
     """Tokenizer-training prep: the first BPE iteration's merge candidates
@@ -611,7 +582,7 @@ def bpe_merge_candidates(
     lexicographically so the output is deterministic.
     """
     words = (
-        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("w"))
+        df.select(F.explode(tokens(F.lower(F.col("text")))).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
@@ -628,11 +599,8 @@ def bpe_merge_candidates(
 
 def oov_rate(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_count: int = 5,
     vocab_size: int | None = None,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-document out-of-vocabulary rate against a corpus-derived
     vocabulary (tokens with corpus frequency >= ``min_count``, optionally
@@ -653,8 +621,8 @@ def oov_rate(
     never corpus rows.
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.col("doc_id").alias("id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
     ).filter(F.col("tok") != "")
     vocab = (
         toks.groupBy("tok")
@@ -666,7 +634,7 @@ def oov_rate(
     vocab = vocab.select("tok", F.lit(1).alias("in_vocab"))
     return (
         toks.join(vocab, "tok", "left")
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
             F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0))
@@ -675,16 +643,13 @@ def oov_rate(
         )
         .withColumn(
             "oov_rate",
-            F.round(F.col("n_oov") / F.col("n_tokens"), decimals),
+            F.round(F.col("n_oov") / F.col("n_tokens"), 6),
         )
     )
 
 
 def token_entropy(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-document Shannon entropy of the token distribution plus the
     type-token ratio — the repetition/diversity quality pair (low entropy
@@ -699,35 +664,33 @@ def token_entropy(
     """
     term_counts = (
         df.select(
-            F.col(id_col).alias("id"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+            F.col("doc_id").alias("id"),
+            F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .groupBy("id", "tok")
         .agg(F.count("*").alias("n"))
     )
-    per_doc = term_counts.groupBy(F.col("id").alias(id_col)).agg(
+    per_doc = term_counts.groupBy(F.col("id").alias("doc_id")).agg(
         F.sum("n").cast("bigint").alias("n_tokens"),
         F.count("*").cast("bigint").alias("n_types"),
         F.sum(F.round(F.col("n") * F.log(F.col("n")), 9)).alias("_nlogn"),
     )
     return per_doc.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "n_types",
         F.round(
             F.log(F.col("n_tokens")) - F.col("_nlogn") / F.col("n_tokens"),
-            decimals,
+            6,
         ).alias("entropy"),
-        F.round(F.col("n_types") / F.col("n_tokens"), decimals).alias("ttr"),
+        F.round(F.col("n_types") / F.col("n_tokens"), 6).alias("ttr"),
     )
 
 
 def zipf_fit(
     df: DataFrame,
-    text_col: str = "text",
     top: int = 1000,
-    decimals: int = 6,
 ) -> DataFrame:
     """Corpus-level Zipf's-law fit: least-squares slope/intercept of
     ln(freq) on ln(rank) over the top-N terms.  Natural corpora fit slope
@@ -744,7 +707,7 @@ def zipf_fit(
     fold structure.
     """
     counts = (
-        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
+        df.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
@@ -771,22 +734,20 @@ def zipf_fit(
         F.round(
             (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy"))
             / (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")),
-            decimals,
+            6,
         ).alias("slope"),
         F.round(
             (F.col("sy") - F.col("sx")
              * ((F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy"))
                 / (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx"))))
             / F.col("k"),
-            decimals,
+            6,
         ).alias("intercept"),
     )
 
 
 def hot_shingles(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     min_docs: int = 20,
 ) -> DataFrame:
@@ -803,11 +764,11 @@ def hot_shingles(
     partial aggregation.  Output is template-grain (tiny).
     """
     sh = F.transform(
-        ngrams(tokens(F.lower(F.col(text_col))), k),
+        ngrams(tokens(F.lower(F.col("text"))), k),
         lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
     )
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(sh)).alias("shingle"))
+        df.select(F.col("doc_id").alias("id"), F.explode(F.array_distinct(sh)).alias("shingle"))
         .groupBy("shingle")
         .agg(F.count("*").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
@@ -816,8 +777,6 @@ def hot_shingles(
 
 def remove_boilerplate(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     min_docs: int = 20,
 ) -> DataFrame:
@@ -854,11 +813,11 @@ def remove_boilerplate(
     without the cache (2.2–3.4 s — shingling the corpus twice).
     """
     sh = F.transform(
-        ngrams(tokens(F.lower(F.col(text_col))), k),
+        ngrams(tokens(F.lower(F.col("text"))), k),
         lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
     )
     ex = df.select(
-        F.col(id_col).alias("id"), F.posexplode(sh).alias("pos", "shingle")
+        F.col("doc_id").alias("id"), F.posexplode(sh).alias("pos", "shingle")
     )
     occ = ex.groupBy("shingle", "id").agg(F.collect_list("pos").alias("poss"))
     occ = _persist_spillable(occ)
@@ -874,7 +833,7 @@ def remove_boilerplate(
         .groupBy("id")
         .agg(F.collect_set("pos").alias("hot_starts"))
     )
-    return _boiler_strip(df, starts, id_col, text_col, k)
+    return _boiler_strip(df, starts, "doc_id", "text", k)
 
 
 def _boiler_strip(
@@ -937,10 +896,7 @@ def _boiler_strip(
 
 def shingle_novelty(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-document novelty: the fraction of a document's k-token shingle
     OCCURRENCES whose shingle appears in no other document — the
@@ -954,22 +910,22 @@ def shingle_novelty(
     document bodies never enter a shuffle, only k-token shingle strings.
     """
     sh = F.transform(
-        ngrams(tokens(F.lower(F.col(text_col))), k),
+        ngrams(tokens(F.lower(F.col("text"))), k),
         lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
     )
-    occ = df.select(F.col(id_col).alias("id"), F.explode(sh).alias("shingle"))
+    occ = df.select(F.col("doc_id").alias("id"), F.explode(sh).alias("shingle"))
     # df counts come from a per-doc-distinct stream (array_distinct is
     # map-side) so the exchange aggregates a plain count — same
     # count_distinct-avoidance as hot_shingles; occ keeps every occurrence
     # because the novelty denominator is occurrence-grained
     docfreq = (
-        df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(sh)).alias("shingle"))
+        df.select(F.col("doc_id").alias("id"), F.explode(F.array_distinct(sh)).alias("shingle"))
         .groupBy("shingle")
         .agg(F.count("*").alias("df"))
     )
     return (
         occ.join(docfreq, "shingle")
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_shingles"),
             F.sum(F.when(F.col("df") == 1, 1).otherwise(0))
@@ -977,15 +933,13 @@ def shingle_novelty(
             .alias("n_novel"),
         )
         .withColumn(
-            "novelty", F.round(F.col("n_novel") / F.col("n_shingles"), decimals)
+            "novelty", F.round(F.col("n_novel") / F.col("n_shingles"), 6)
         )
     )
 
 
 def winnow_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 4,
     w: int = 5,
 ) -> DataFrame:
@@ -1009,8 +963,8 @@ def winnow_fingerprints(
     """
     from ..functions.hashing import token_code
 
-    toks = tokens(F.col(text_col))
-    staged = df.select(F.col(id_col).alias("id"), toks.alias("__toks"))
+    toks = tokens(F.col("text"))
+    staged = df.select(F.col("doc_id").alias("id"), toks.alias("__toks"))
     hashes = F.transform(shingles(F.col("__toks"), k), token_code)
     hashed = staged.select("id", hashes.alias("__hs"))
     # window minima: position i keeps min(h[i .. i+w-1]); slice truncates at
@@ -1025,14 +979,12 @@ def winnow_fingerprints(
         )
     )
     return hashed.select(
-        F.col("id").alias(id_col), F.explode(fps).alias("fp")
+        F.col("id").alias("doc_id"), F.explode(fps).alias("fp")
     )
 
 
 def doc_keywords(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top: int = 3,
     min_df: int = 2,
 ) -> DataFrame:
@@ -1047,14 +999,14 @@ def doc_keywords(
     is reproducible across engines.
     """
     ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+        F.col("doc_id").alias("id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("term"),
     )
     tf = ex.groupBy("id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("dfreq")).filter(
         F.col("dfreq") >= min_df
     )
-    n_docs = df.agg(F.countDistinct(F.col(id_col)).alias("n_docs"))
+    n_docs = df.agg(F.countDistinct(F.col("doc_id")).alias("n_docs"))
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n_docs))
@@ -1071,15 +1023,12 @@ def doc_keywords(
     return (
         scored.withColumn("rank", F.row_number().over(rank_w).cast("int"))
         .filter(F.col("rank") <= top)
-        .select(F.col("id").alias(id_col), "term", "tf", "tfidf", "rank")
+        .select(F.col("id").alias("doc_id"), "term", "tf", "tfidf", "rank")
     )
 
 
 def ngram_diversity(
     df: DataFrame,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Distinct-1 / distinct-2 lexical diversity per group (Li et al. 2016,
     the generation-diversity metrics): distinct n-grams over total n-gram
@@ -1090,12 +1039,12 @@ def ngram_diversity(
     aggregate — two partial-agg-friendly shuffles, never count_distinct's
     expansion — and document bodies stay out of every exchange.
     """
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     big = F.transform(
         ngrams(toks, 2), lambda s: F.concat_ws(" ", s["w0"], s["w1"])
     )
-    uni = df.select(F.col(group_col).alias("g"), F.explode(toks).alias("gram"))
-    bi = df.select(F.col(group_col).alias("g"), F.explode(big).alias("gram"))
+    uni = df.select(F.col("source").alias("g"), F.explode(toks).alias("gram"))
+    bi = df.select(F.col("source").alias("g"), F.explode(big).alias("gram"))
 
     def _diversity(ex: DataFrame, n_name: str, d_name: str) -> DataFrame:
         per = ex.groupBy("g", "gram").agg(F.count("*").alias("c"))
@@ -1108,7 +1057,7 @@ def ngram_diversity(
     return (
         u.join(b, "g")
         .select(
-            F.col("g").alias(group_col),
+            F.col("g").alias("source"),
             "n_tokens",
             F.round(F.col("d_tokens") / F.col("n_tokens"), 6).alias("distinct_1"),
             "n_bigrams",
@@ -1119,11 +1068,7 @@ def ngram_diversity(
 
 def hashed_quality_scores(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 1024,
-    threshold: float = 0.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Hashing-trick linear quality scorer: each token hashes to one of
     ``n_buckets`` feature buckets, every bucket carries a fixed weight, and
@@ -1145,7 +1090,7 @@ def hashed_quality_scores(
     """
     from ..functions.hashing import token_code
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     bucket_sum = F.aggregate(
         F.transform(toks, lambda t: token_code(t) % F.lit(n_buckets)),
         F.lit(0).cast("bigint"),
@@ -1156,26 +1101,22 @@ def hashed_quality_scores(
     )
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size(toks).cast("bigint").alias("n_tokens"),
             bucket_sum.alias("__bsum"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
-            F.round(score, decimals).alias("hash_score"),
-            (score >= F.lit(threshold)).alias("keep"),
+            F.round(score, 6).alias("hash_score"),
+            (score >= F.lit(0.0)).alias("keep"),
         )
     )
 
 
 def quantile_normalize(
     df: DataFrame,
-    group_col: str = "source",
-    value_col: str = "n_chars",
-    id_col: str = "doc_id",
     n_bins: int = 20,
-    decimals: int = 4,
 ) -> DataFrame:
     """Equi-depth quantile normalization: replace each row's value with
     the GLOBAL quantile at the row's within-group percent rank, so every
@@ -1192,35 +1133,32 @@ def quantile_normalize(
 
     qs = [i / n_bins for i in range(n_bins + 1)]
     bounds = df.agg(
-        F.percentile(F.col(value_col), F.lit(qs)).alias("__bounds")
+        F.percentile(F.col("n_chars"), F.lit(qs)).alias("__bounds")
     )
-    w = Window.partitionBy(group_col).orderBy(
-        F.col(value_col).asc(), F.col(id_col).asc()
+    w = Window.partitionBy("source").orderBy(
+        F.col("n_chars").asc(), F.col("doc_id").asc()
     )
     r = F.percent_rank().over(w)
     staged = df.select(
-        id_col, group_col, F.col(value_col), r.alias("__r")
+        "doc_id", "source", F.col("n_chars"), r.alias("__r")
     ).crossJoin(F.broadcast(bounds))
     idx = F.least(
         F.floor(F.col("__r") * n_bins).cast("int"), F.lit(n_bins)
     )
     return staged.select(
-        id_col,
-        group_col,
-        F.col(value_col),
+        "doc_id",
+        "source",
+        F.col("n_chars"),
         F.round(F.col("__r"), 6).alias("pct_rank"),
-        F.round(F.get("__bounds", idx), decimals).alias("normalized"),
+        F.round(F.get("__bounds", idx), 4).alias("normalized"),
     )
 
 
 def vocab_drift_terms(
     old: DataFrame,
     new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_df: int = 20,
     top: int = 30,
-    decimals: int = 6,
 ) -> DataFrame:
     """Term-level vocabulary drift between two corpus snapshots: for
     every term above ``min_df`` total document frequency, the smoothed
@@ -1235,7 +1173,7 @@ def vocab_drift_terms(
     a TakeOrdered top-k — document bodies never shuffle.
     """
     def dfreq(df: DataFrame, name: str) -> DataFrame:
-        toks = F.array_distinct(tokens(F.lower(F.col(text_col))))
+        toks = F.array_distinct(tokens(F.lower(F.col("text"))))
         return (
             df.select(F.explode(toks).alias("term"))
             .groupBy("term")
@@ -1266,7 +1204,7 @@ def vocab_drift_terms(
         j.filter(F.col("df_old") + F.col("df_new") >= min_df)
         .select(
             "term", "df_old", "df_new",
-            F.round(ratio, decimals).alias("log2_ratio"),
+            F.round(ratio, 6).alias("log2_ratio"),
         )
         .orderBy(F.abs(F.col("log2_ratio")).desc(), F.col("term").asc())
         .limit(top)
@@ -1275,11 +1213,7 @@ def vocab_drift_terms(
 
 def source_kl_divergence(
     df: DataFrame,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     vocab_size: int = 200,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-source language divergence: KL(source unigram ‖ corpus
     unigram) over the corpus's top-``vocab_size`` terms (with add-½
@@ -1295,7 +1229,7 @@ def source_kl_divergence(
     shuffled only at term grain.
     """
     toks = df.select(
-        F.col(group_col).alias("g"), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+        F.col("source").alias("g"), F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
     vocab = (
         toks.groupBy("term")
@@ -1323,8 +1257,8 @@ def source_kl_divergence(
     q = (F.col("cc") + 0.5) / (F.col("ct") + 0.5 * k)
     return (
         joined.groupBy("g")
-        .agg(F.round(F.sum(p * F.log(p / q)), decimals).alias("kl_bits_nat"))
-        .select(F.col("g").alias(group_col), "kl_bits_nat")
+        .agg(F.round(F.sum(p * F.log(p / q)), 6).alias("kl_bits_nat"))
+        .select(F.col("g").alias("source"), "kl_bits_nat")
     )
 
 
@@ -1335,13 +1269,6 @@ def gopher_quality_flags(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stopwords: tuple[str, ...] = GOPHER_STOPWORDS,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_frac: float = 0.8,
-    min_stopwords: int = 2,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021 §A1.1) — the
@@ -1364,13 +1291,6 @@ def gopher_quality_flags(
     """
     e = _gopher_exprs(
         text_col,
-        stopwords,
-        min_words,
-        max_words,
-        min_mean_word_len,
-        max_mean_word_len,
-        min_alpha_frac,
-        min_stopwords,
     )
     return df.select(
         F.col(id_col),
@@ -1389,13 +1309,6 @@ def gopher_quality_flags(
 
 def _gopher_exprs(
     text_col: str,
-    stopwords: tuple[str, ...] = GOPHER_STOPWORDS,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_frac: float = 0.8,
-    min_stopwords: int = 2,
 ) -> dict[str, Column]:
     """The Gopher rule expressions of :func:`gopher_quality_flags` as a
     dict — shared (round 11) with fused single-scan consumers
@@ -1411,17 +1324,17 @@ def _gopher_exprs(
     n_stop = F.size(
         F.array_intersect(
             F.transform(toks, lambda t: F.lower(t)),
-            F.array(*[F.lit(s) for s in stopwords]),
+            F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]),
         )
     )
     mean_len = sum_len / n.cast("double")
     alpha_frac = n_alpha / n.cast("double")
-    f_count = ((n >= min_words) & (n <= max_words)).cast("int")
-    f_mean = ((mean_len >= min_mean_word_len) & (mean_len <= max_mean_word_len)).cast(
+    f_count = ((n >= 50) & (n <= 100_000)).cast("int")
+    f_mean = ((mean_len >= 3.0) & (mean_len <= 10.0)).cast(
         "int"
     )
-    f_alpha = (alpha_frac >= min_alpha_frac).cast("int")
-    f_stop = (n_stop >= min_stopwords).cast("int")
+    f_alpha = (alpha_frac >= 0.8).cast("int")
+    f_stop = (n_stop >= 2).cast("int")
     return {
         "n": n,
         "mean_len": mean_len,
@@ -1437,9 +1350,6 @@ def _gopher_exprs(
 
 def repeated_ngram_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """Gopher-style repetition metrics per document: the duplicated-n-gram
     fraction (1 − distinct/total sliding word n-grams) and the share of
@@ -1452,7 +1362,7 @@ def repeated_ngram_stats(
     (doc, gram) occurrence stream).  Grams are PORTABLE INTEGER CODES, not
     strings: each token hashes once (md5-prefix mod 1e9+7, the
     ``token_code`` mixer the dedup path already oracle-mirrors) and a gram
-    is the base-31 polynomial of its ``n`` token codes — so the per-doc
+    is the base-31 polynomial of its 3 token codes — so the per-doc
     sort/distinct run over bigint arrays instead of allocating and
     comparing one string per gram (the round-4 bench's single heaviest
     headline cost).  Distinct grams collide with probability ~g²/2e9 per
@@ -1463,7 +1373,7 @@ def repeated_ngram_stats(
     count — O(g log g) per doc).  The DuckDB oracle keeps the unnest +
     GROUP BY formulation over the same codes: same semantics, different
     physical shape, which is exactly what the parity gate is for.
-    Documents shorter than ``n`` words are excluded (no n-gram exists).
+    Documents shorter than 3 words are excluded (no n-gram exists).
     """
     from ..functions.hashing import BASE, MOD, token_code
 
@@ -1473,27 +1383,27 @@ def repeated_ngram_stats(
     # site (CollapseProject keeps multi-referenced non-cheap expressions,
     # but expressions nested inside one select have no such protection),
     # re-running one md5 per token per reference.
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     staged = (
-        df.select(F.col(id_col), toks.alias("__toks"))
-        .filter(F.size("__toks") >= n)
+        df.select(F.col("doc_id"), toks.alias("__toks"))
+        .filter(F.size("__toks") >= 3)
         .select(
-            id_col,
+            "doc_id",
             F.transform("__toks", token_code).alias("__codes"),
-            (F.size("__toks") - F.lit(n - 1)).alias("__ng"),
+            (F.size("__toks") - F.lit(2)).alias("__ng"),
         )
     )
 
     def gram_at(i):
         acc = F.element_at(F.col("__codes"), i)
-        for j in range(1, n):
+        for j in range(1, 3):
             acc = (
                 acc * F.lit(BASE) + F.element_at(F.col("__codes"), i + F.lit(j))
             ) % F.lit(MOD)
         return acc
 
     grams = staged.select(
-        id_col,
+        "doc_id",
         F.transform(F.sequence(F.lit(1), F.col("__ng")), gram_at).alias("__grams"),
     )
     g = F.col("__grams")
@@ -1513,7 +1423,7 @@ def repeated_ngram_stats(
     total = F.size(g).cast("bigint")
     distinct = F.size(F.array_distinct(g))
     return grams.select(
-        F.col(id_col),
+        F.col("doc_id"),
         total.alias("total_ngrams"),
         F.round((total - distinct) / total.cast("double"), 4).alias("dup_frac"),
         F.round(mx / total.cast("double"), 4).alias("top_frac"),
@@ -1522,9 +1432,6 @@ def repeated_ngram_stats(
 
 def ccnet_ppl_buckets(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
 ) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020): per
     LANGUAGE, rank documents by their LM log-perplexity and cut the
@@ -1537,15 +1444,15 @@ def ccnet_ppl_buckets(
     parallel.  Ranks are (logppl, id)-ordered for deterministic ties, and
     the tercile test uses exact integer rank arithmetic.
     """
-    scored = unigram_logppl(df, id_col=id_col, text_col=text_col)
-    langs = df.select(F.col(id_col), F.col(lang_col).alias("lang"))
-    w = Window.partitionBy("lang").orderBy(F.asc("logppl"), F.asc(id_col))
+    scored = unigram_logppl(df)
+    langs = df.select(F.col("doc_id"), F.col("lang"))
+    w = Window.partitionBy("lang").orderBy(F.asc("logppl"), F.asc("doc_id"))
     pr = F.percent_rank().over(w)
     return (
-        scored.join(langs, id_col)
+        scored.join(langs, "doc_id")
         .withColumn("__pr", pr)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "lang",
             "logppl",
             F.when(F.col("__pr") < 1.0 / 3, "head")
@@ -1558,9 +1465,6 @@ def ccnet_ppl_buckets(
 
 def compression_ratio(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    level: int = 6,
 ) -> DataFrame:
     """Per-document zlib compression ratio — the Gopher-era quality signal
     that catches BOTH failure modes the token-level stats miss: heavily
@@ -1584,7 +1488,7 @@ def compression_ratio(
 
     ensure_executors_can_import(df.sparkSession)
     out_schema = (
-        f"{id_col} long, n_bytes long, z_bytes long, ratio double, "
+        "doc_id long, n_bytes long, z_bytes long, ratio double, "
         "flag_repetitive int, flag_incompressible int"
     )
 
@@ -1594,13 +1498,13 @@ def compression_ratio(
         import pandas as pd
 
         for pdf in batches:
-            raw = pdf[text_col].fillna("").str.encode("utf-8")
+            raw = pdf["text"].fillna("").str.encode("utf-8")
             n = raw.str.len().astype("int64")
-            z = raw.map(lambda b: len(zlib.compress(b, level))).astype("int64")
+            z = raw.map(lambda b: len(zlib.compress(b, 6))).astype("int64")
             ratio = (z / n).where(n > 0)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "n_bytes": n,
                     "z_bytes": z,
                     "ratio": ratio.round(6),
@@ -1611,14 +1515,12 @@ def compression_ratio(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(_part, out_schema)
+    return df.select("doc_id", "text").mapInPandas(_part, out_schema)
 
 
 def keyword_snippets(
     df: DataFrame,
     keyword: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     context_chars: int = 40,
 ) -> DataFrame:
     """Keyword-in-context extraction: for each document containing
@@ -1633,7 +1535,7 @@ def keyword_snippets(
 
     Output: ``(doc_id, pos, snippet)`` for matching docs.
     """
-    pos = F.instr(F.col(text_col), F.lit(keyword))
+    pos = F.instr(F.col("text"), F.lit(keyword))
     start = F.greatest(pos - F.lit(context_chars), F.lit(1))
     length = (
         pos - start + F.lit(len(keyword)) + F.lit(context_chars)
@@ -1641,9 +1543,9 @@ def keyword_snippets(
     return (
         df.filter(pos > 0)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             pos.cast("bigint").alias("pos"),
-            F.substring(F.col(text_col), start.cast("int"), length.cast("int")).alias(
+            F.substring(F.col("text"), start.cast("int"), length.cast("int")).alias(
                 "snippet"
             ),
         )
@@ -1652,9 +1554,6 @@ def keyword_snippets(
 
 def fk_readability(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 4,
 ) -> DataFrame:
     """Flesch-Kincaid grade level per document from three pure-regex
     counts — words (whitespace tokens), sentences (maximal ``[.!?]``
@@ -1677,9 +1576,9 @@ def fk_readability(
         gone = F.regexp_replace(expr, f"[{cls}]+", "")
         return (F.length(marked) - F.length(gone)).cast("long")
 
-    low = F.lower(F.col(text_col))
-    words = token_count(F.col(text_col)).cast("long")
-    sents = F.greatest(runs(F.col(text_col), r".!?"), F.lit(1).cast("long"))
+    low = F.lower(F.col("text"))
+    words = token_count(F.col("text")).cast("long")
+    sents = F.greatest(runs(F.col("text"), r".!?"), F.lit(1).cast("long"))
     syls = runs(low, "aeiouy")
     wd = words.cast("double")
     fk = (
@@ -1689,7 +1588,7 @@ def fk_readability(
     )
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             words.alias("n_words"),
             sents.alias("n_sentences"),
             syls.alias("n_syllables"),
@@ -1697,21 +1596,18 @@ def fk_readability(
         )
         .filter(F.col("n_words") > 0)
         .select(
-            id_col, "n_words", "n_sentences", "n_syllables",
-            F.round("__fk", decimals).alias("fk_grade"),
+            "doc_id", "n_words", "n_sentences", "n_syllables",
+            F.round("__fk", 4).alias("fk_grade"),
         )
     )
 
 
 def heaps_law_curve(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 20,
-    decimals: int = 6,
 ) -> DataFrame:
     """Vocabulary-growth (Heaps' law) curve: scanning the corpus in
-    ``id_col`` order, how does distinct vocabulary V grow with total
+    ``doc_id`` order, how does distinct vocabulary V grow with total
     tokens N?  V(N) ≈ K·N^β with β ≈ 0.5 for natural text — the curve
     that sizes tokenizer vocabularies and predicts how much NEW
     vocabulary the next 10× of corpus will bring.
@@ -1728,14 +1624,14 @@ def heaps_law_curve(
     """
     ids = F.broadcast(
         df.agg(
-            F.min(F.col(id_col)).cast("long").alias("i0"),
-            F.max(F.col(id_col)).cast("long").alias("i1"),
+            F.min(F.col("doc_id")).cast("long").alias("i0"),
+            F.max(F.col("doc_id")).cast("long").alias("i1"),
         )
     )
-    toks = tokens(F.col(text_col))
-    base = df.filter(F.trim(F.col(text_col)) != "").crossJoin(ids).select(
+    toks = tokens(F.col("text"))
+    base = df.filter(F.trim(F.col("text")) != "").crossJoin(ids).select(
         F.expr(
-            f"CAST((CAST({id_col} AS BIGINT) - i0) * {n_buckets} "
+            f"CAST((CAST(doc_id AS BIGINT) - i0) * {n_buckets} "
             f"DIV (i1 - i0 + 1) AS BIGINT)"
         ).alias("b"),
         F.explode(toks).alias("tok"),
@@ -1780,15 +1676,12 @@ def heaps_law_curve(
     return ends.select(
         F.col("b").cast("bigint").alias("bucket"),
         "n_tokens_cum", "vocab_cum",
-        F.round(beta, decimals).alias("beta_hat"),
+        F.round(beta, 6).alias("beta_hat"),
     )
 
 
 def langid_entropy(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Code-switching / mixed-language audit on top of the stopword
     language-ID scores: per doc, the Shannon entropy of the normalized
@@ -1804,11 +1697,11 @@ def langid_entropy(
     Output for docs with ≥1 profile hit: ``(doc_id, pred_lang, n_hits,
     entropy, margin)``.
     """
-    staged = df.select(F.col(id_col), _lexicon_counts(text_col).alias("__cnt"))
+    staged = df.select(F.col("doc_id"), _lexicon_counts("text").alias("__cnt"))
     cnt = F.col("__cnt")
     scores = [cnt[f"s_{lang}"].cast("long") for lang in LANG_PROFILES]
     staged = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         _pred_lang(cnt).alias("pred_lang"),
         *[s.alias(f"sc{i}") for i, s in enumerate(scores)],
     )
@@ -1831,12 +1724,12 @@ def langid_entropy(
         staged.withColumn("__t", total)
         .filter(F.col("__t") > 0)
         .select(
-            id_col,
+            "doc_id",
             "pred_lang",
             F.col("__t").cast("bigint").alias("n_hits"),
-            F.round(ent, decimals).alias("entropy"),
+            F.round(ent, 6).alias("entropy"),
             F.round(
-                (best - second).cast("double") / td_, decimals
+                (best - second).cast("double") / td_, 6
             ).alias("margin"),
         )
     )
@@ -1844,12 +1737,9 @@ def langid_entropy(
 
 def distinctive_terms_log_odds(
     df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
     top_k: int = 5,
     alpha: float = 0.01,
     min_count: int = 5,
-    decimals: int = 6,
 ) -> DataFrame:
     """The terms that DISTINGUISH each source: log-odds ratio with a
     Dirichlet prior and its z-score (Monroe, Colaresi & Quinn 2008) of
@@ -1866,9 +1756,9 @@ def distinctive_terms_log_odds(
 
     Output: ``(source, term, n_source, z_log_odds)``.
     """
-    toks = tokens(F.col(text_col))
-    occ = df.filter(F.trim(F.col(text_col)) != "").select(
-        F.col(source_col).alias("src"), F.explode(toks).alias("term")
+    toks = tokens(F.col("text"))
+    occ = df.filter(F.trim(F.col("text")) != "").select(
+        F.col("source").alias("src"), F.explode(toks).alias("term")
     )
     st = occ.groupBy("src", "term").agg(
         F.count("*").cast("long").alias("c")
@@ -1894,14 +1784,14 @@ def distinctive_terms_log_odds(
         (cr + a) / (nr + av - cr - a)
     )
     var = F.lit(1.0) / (cs + a) + F.lit(1.0) / (cr + a)
-    z = F.round(delta / F.sqrt(var), decimals)
+    z = F.round(delta / F.sqrt(var), 6)
     scored = jn.filter(F.col("c") >= min_count).select(
-        F.col("src").alias(source_col),
+        F.col("src").alias("source"),
         "term",
         F.col("c").cast("bigint").alias("n_source"),
         z.alias("z_log_odds"),
     )
-    w = Window.partitionBy(source_col).orderBy(
+    w = Window.partitionBy("source").orderBy(
         F.col("z_log_odds").desc(), F.col("term").asc()
     )
     return (
@@ -1913,10 +1803,7 @@ def distinctive_terms_log_odds(
 
 def vocab_coverage_curve(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     vs: tuple = (100, 1000, 10000),
-    decimals: int = 6,
 ) -> DataFrame:
     """Vocabulary coverage curve: for each candidate vocab size V, the
     share of all token OCCURRENCES covered by the top-V most frequent
@@ -1934,7 +1821,7 @@ def vocab_coverage_curve(
     """
     vmax = max(vs)
     toks = df.select(
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count("*").cast("bigint").alias("n"))
     total = counts.agg(F.sum("n").cast("double").alias("total"))
@@ -1958,7 +1845,7 @@ def vocab_coverage_curve(
     ).select(
         "v",
         F.col("covered_occurrences").cast("bigint").alias("covered_occurrences"),
-        F.round(F.col("covered_occurrences") / F.col("total"), decimals).alias(
+        F.round(F.col("covered_occurrences") / F.col("total"), 6).alias(
             "coverage"
         ),
     )
@@ -1966,9 +1853,6 @@ def vocab_coverage_curve(
 
 def code_switch_ratio(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 4,
 ) -> DataFrame:
     """Code-switching / language-mix detector: how much of a document's
     function-word evidence belongs to languages OTHER than its primary
@@ -1985,7 +1869,7 @@ def code_switch_ratio(
     module documents), then pure integer/string arithmetic.  Free rider
     on any scan that reads the text.
     """
-    staged = df.select(F.col(id_col), _lexicon_counts(text_col).alias("__cnt"))
+    staged = df.select(F.col("doc_id"), _lexicon_counts("text").alias("__cnt"))
     cnt = F.col("__cnt")
     total = None
     for lang in LANG_PROFILES:
@@ -1994,13 +1878,13 @@ def code_switch_ratio(
     best = F.greatest(*[cnt[f"s_{lang}"] for lang in LANG_PROFILES])
     other = total - best
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         _pred_lang(cnt).alias("primary_lang"),
         best.cast("bigint").alias("primary_hits"),
         other.cast("bigint").alias("other_hits"),
         F.when(
             total > 0,
-            F.round(other / total.cast("double"), decimals),
+            F.round(other / total.cast("double"), 4),
         )
         .otherwise(F.lit(0.0))
         .alias("switch_ratio"),
@@ -2009,11 +1893,7 @@ def code_switch_ratio(
 
 def logppl_zscore_by_source(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
     z_flag: float = 2.0,
-    decimals: int = 4,
 ) -> DataFrame:
     """Per-SOURCE perplexity outlier scoring: z-score each document's
     unigram log-perplexity against its own source's distribution and flag
@@ -2031,10 +1911,10 @@ def logppl_zscore_by_source(
     source-grain aggregate (map-side combined), one broadcast join back to
     doc grain.  No windows over the corpus.
     """
-    scored = unigram_logppl(df, id_col=id_col, text_col=text_col)
-    src = df.select(F.col(id_col), F.col(source_col).alias("source"))
-    joined = scored.join(src, id_col).select(
-        F.col(id_col),
+    scored = unigram_logppl(df)
+    src = df.select(F.col("doc_id"), F.col("source"))
+    joined = scored.join(src, "doc_id").select(
+        F.col("doc_id"),
         "source",
         "logppl",
         F.round(F.col("logppl") * 1e6).cast("bigint").alias("__code"),
@@ -2051,7 +1931,7 @@ def logppl_zscore_by_source(
     z = F.when(
         F.col("__var") > 0,
         F.round(
-            (F.col("__code") - F.col("__mean")) / F.sqrt(F.col("__var")), decimals
+            (F.col("__code") - F.col("__mean")) / F.sqrt(F.col("__var")), 4
         ),
     ).otherwise(F.lit(0.0))
     return (
@@ -2063,7 +1943,7 @@ def logppl_zscore_by_source(
         )
         .withColumn("z", z)
         .select(
-            id_col,
+            "doc_id",
             "source",
             "logppl",
             "z",
@@ -2074,9 +1954,6 @@ def logppl_zscore_by_source(
 
 def char_class_mix(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 4,
 ) -> DataFrame:
     """Character-class composition per document: the share of letters,
     digits, whitespace, sentence punctuation, and everything else (the
@@ -2092,14 +1969,14 @@ def char_class_mix(
     Output: ``(doc_id, n_chars, letter_ratio, digit_ratio, space_ratio,
     punct_ratio, other_ratio)``.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     n = F.length(c)
 
     def cnt(cls: str) -> Column:
         return n - F.length(F.regexp_replace(c, cls, ""))
 
     staged = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("__n"),
         cnt("[A-Za-z]").alias("__letter"),
         cnt("[0-9]").alias("__digit"),
@@ -2109,19 +1986,19 @@ def char_class_mix(
     nn = F.col("__n")
 
     def ratio(col: str) -> Column:
-        return F.when(nn > 0, F.round(F.col(col) / nn.cast("double"), decimals)).otherwise(
+        return F.when(nn > 0, F.round(F.col(col) / nn.cast("double"), 4)).otherwise(
             F.lit(0.0)
         )
 
     other = nn - F.col("__letter") - F.col("__digit") - F.col("__space") - F.col("__punct")
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         nn.cast("bigint").alias("n_chars"),
         ratio("__letter").alias("letter_ratio"),
         ratio("__digit").alias("digit_ratio"),
         ratio("__space").alias("space_ratio"),
         ratio("__punct").alias("punct_ratio"),
-        F.when(nn > 0, F.round(other / nn.cast("double"), decimals))
+        F.when(nn > 0, F.round(other / nn.cast("double"), 4))
         .otherwise(F.lit(0.0))
         .alias("other_ratio"),
     )
@@ -2129,9 +2006,6 @@ def char_class_mix(
 
 def token_gini_by_source(
     df: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Gini concentration of the token-frequency distribution per source —
     0 means every type appears equally often, →1 means a few types carry
@@ -2151,8 +2025,8 @@ def token_gini_by_source(
     Output: ``(source, n_types, n_tokens, gini)``.
     """
     toks = df.select(
-        F.col(source_col).alias("source"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.col("source"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
     )
     counts = toks.groupBy("source", "tok").agg(F.count("*").alias("f"))
     ff = counts.groupBy("source", "f").agg(F.count("*").alias("m"))
@@ -2185,17 +2059,13 @@ def token_gini_by_source(
         "source",
         "n_types",
         F.col("tot").cast("bigint").alias("n_tokens"),
-        F.round(gini, decimals).alias("gini"),
+        F.round(gini, 6).alias("gini"),
     )
 
 
 def quality_keep_threshold(
     df: DataFrame,
     keep_frac: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    decimals: int = 4,
 ) -> DataFrame:
     """Budget-constrained curation cutoffs: per SOURCE, the quality-score
     threshold that keeps (approximately) the top ``keep_frac`` of its
@@ -2220,11 +2090,11 @@ def quality_keep_threshold(
 
     Output: ``(source, n_docs, threshold, n_kept, kept_frac)``.
     """
-    scored = text_stats(df, id_col=id_col, text_col=text_col).select(
-        F.col(id_col), F.round(F.col("quality") * 1e6).cast("bigint").alias("code")
+    scored = text_stats(df).select(
+        F.col("doc_id"), F.round(F.col("quality") * 1e6).cast("bigint").alias("code")
     )
-    src = df.select(F.col(id_col), F.col(source_col).alias("source"))
-    codes = scored.join(src, id_col)
+    src = df.select(F.col("doc_id"), F.col("source"))
+    codes = scored.join(src, "doc_id")
     counts = codes.groupBy("source", "code").agg(F.count("*").alias("m"))
     st = counts.groupBy(F.col("source").alias("s2")).agg(
         F.sum("m").cast("bigint").alias("n")
@@ -2258,7 +2128,7 @@ def quality_keep_threshold(
             F.col("n").cast("bigint").alias("n_docs"),
             (F.col("tcode") / 1e6).alias("threshold"),
             "n_kept",
-            F.round(F.col("n_kept") / F.col("n").cast("double"), decimals).alias(
+            F.round(F.col("n_kept") / F.col("n").cast("double"), 4).alias(
                 "kept_frac"
             ),
         )
@@ -2267,10 +2137,7 @@ def quality_keep_threshold(
 
 def negative_sampling_table(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     vocab_size: int = 10000,
-    decimals: int = 9,
 ) -> DataFrame:
     """word2vec-style negative-sampling distribution: the top
     ``vocab_size`` types with probability ∝ count^0.75 (Mikolov et al.
@@ -2291,7 +2158,7 @@ def negative_sampling_table(
 
     Output: ``(rank, term, n, prob, cum_prob)``.
     """
-    toks = df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
+    toks = df.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
     counts = (
         toks.filter(F.col("tok") != "")
         .groupBy("tok")
@@ -2301,7 +2168,7 @@ def negative_sampling_table(
     # cube in DOUBLE (two IEEE multiplies — deterministic, and a bigint
     # cube would overflow at count ≳ 2.1e6 on engines that raise)
     nd = F.col("n").cast("double")
-    w = F.round(F.sqrt(F.sqrt(nd * nd * nd)), decimals)
+    w = F.round(F.sqrt(F.sqrt(nd * nd * nd)), 9)
     weighted = top.select("tok", "n", w.alias("w"))
     tot = weighted.agg(
         F.sum(F.col("w").cast("decimal(30,10)")).cast("double").alias("wtot")
@@ -2316,17 +2183,14 @@ def negative_sampling_table(
             F.row_number().over(win).cast("int").alias("rank"),
             F.col("tok").alias("term"),
             "n",
-            F.round(F.col("w") / F.col("wtot"), decimals).alias("prob"),
-            F.round(cum.cast("double") / F.col("wtot"), decimals).alias("cum_prob"),
+            F.round(F.col("w") / F.col("wtot"), 9).alias("prob"),
+            F.round(cum.cast("double") / F.col("wtot"), 9).alias("cum_prob"),
         )
     )
 
 
 def tokenizer_fertility(
     df: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    decimals: int = 4,
 ) -> DataFrame:
     """Per-language tokenizer-fertility proxies: characters per whitespace
     token and tokens per document — the cross-lingual budget table a
@@ -2348,9 +2212,9 @@ def tokenizer_fertility(
     engines (ADVICE r6; the oracle mirrors with a CASE).
     """
     rows = df.select(
-        F.col(lang_col).alias("lang"),
-        F.length(F.col(text_col)).cast("bigint").alias("nc"),
-        token_count(F.col(text_col)).cast("bigint").alias("nt"),
+        F.col("lang"),
+        F.length(F.col("text")).cast("bigint").alias("nc"),
+        token_count(F.col("text")).cast("bigint").alias("nt"),
     )
     return rows.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -2359,11 +2223,11 @@ def tokenizer_fertility(
         F.when(
             F.sum("nt") > 0,
             F.round(
-                F.sum("nc").cast("double") / F.sum("nt").cast("double"), decimals
+                F.sum("nc").cast("double") / F.sum("nt").cast("double"), 4
             ),
         ).alias("chars_per_token"),
         F.round(
-            F.sum("nt").cast("double") / F.count("*").cast("double"), decimals
+            F.sum("nt").cast("double") / F.count("*").cast("double"), 4
         ).alias("tokens_per_doc"),
     )
 
@@ -2371,10 +2235,7 @@ def tokenizer_fertility(
 def split_oov_rate(
     train_df: DataFrame,
     eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_count: int = 1,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-EVAL-document out-of-vocabulary rate against the TRAIN split's
     vocabulary (types with train frequency >= ``min_count``) — the
@@ -2391,7 +2252,7 @@ def split_oov_rate(
     never shuffle; only tokens do.
     """
     train_toks = train_df.select(
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     ).filter(F.col("tok") != "")
     vocab = (
         train_toks.groupBy("tok")
@@ -2400,12 +2261,12 @@ def split_oov_rate(
         .select("tok", F.lit(1).alias("in_vocab"))
     )
     eval_toks = eval_df.select(
-        F.col(id_col).alias("id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
+        F.col("doc_id").alias("id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok"),
     ).filter(F.col("tok") != "")
     return (
         eval_toks.join(vocab, "tok", "left")
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
             F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0))
@@ -2413,12 +2274,12 @@ def split_oov_rate(
             .alias("n_oov"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "n_oov",
             F.round(
                 F.col("n_oov").cast("double") / F.col("n_tokens").cast("double"),
-                decimals,
+                6,
             ).alias("oov_rate"),
         )
     )
@@ -2426,10 +2287,6 @@ def split_oov_rate(
 
 def source_scorecard(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-source curation scorecard — the one-row-per-feed health table a
     corpus refresh publishes before re-pricing its mixture: document
@@ -2457,27 +2314,27 @@ def source_scorecard(
     joined three doc-grain frames on the id key: three corpus scans and
     two id-keyed exchanges for values that are row-local (guide §1.2:
     remove passes; §2.4: remove the exchanges).  Fused and joined forms
-    are identical on any corpus with unique ``id_col`` (the operator's
+    are identical on any corpus with unique ``doc_id`` (the operator's
     contract; the oracle composes the operators' SQL verbatim and stays
     hash-green).
     """
     staged = df.select(
-        F.col(source_col).alias("source"),
-        F.md5(norm_text(text_col)).alias("__fp"),
-        _gopher_exprs(text_col)["keep"].alias("keep"),
-        *_text_stats_staged(text_col),
+        F.col("source"),
+        F.md5(norm_text("text")).alias("__fp"),
+        _gopher_exprs("text")["keep"].alias("keep"),
+        *_text_stats_staged("text"),
     )
     j = staged.withColumn("quality", _text_stats_final()["quality"])
     per_source = j.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         (F.count("*") - F.countDistinct("__fp")).cast("bigint").alias("dup_docs"),
         F.round(
-            F.sum("keep").cast("double") / F.count("*").cast("double"), decimals
+            F.sum("keep").cast("double") / F.count("*").cast("double"), 6
         ).alias("keep_rate"),
         F.round(
             F.sum(F.col("quality").cast("decimal(20,10)")).cast("double")
             / F.count("*"),
-            decimals,
+            6,
         ).alias("mean_quality"),
         F.sum("__n_tok").cast("bigint").alias("n_tokens"),
     )
@@ -2489,7 +2346,7 @@ def source_scorecard(
         "keep_rate",
         "mean_quality",
         "n_tokens",
-        F.round(F.col("n_tokens").cast("double") / F.col("__t"), decimals).alias(
+        F.round(F.col("n_tokens").cast("double") / F.col("__t"), 6).alias(
             "token_share"
         ),
     )
@@ -2497,9 +2354,7 @@ def source_scorecard(
 
 def vocab_oov_curve(
     df: DataFrame,
-    text_col: str = "text",
     sizes: tuple[int, ...] = (1000, 2000, 4000, 8000),
-    decimals: int = 6,
 ) -> DataFrame:
     """OOV rate as a function of vocabulary size — the curve a tokenizer
     budget decision reads: with the ``k`` most frequent types as the
@@ -2519,7 +2374,7 @@ def vocab_oov_curve(
     curve point is an aggregate over that bounded frame plus the two
     corpus scalars.  The corpus is scanned once; no per-size rescan.
     """
-    toks = df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")).filter(
+    toks = df.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok")).filter(
         F.col("tok") != ""
     )
     counts = toks.groupBy("tok").agg(F.count("*").alias("n"))
@@ -2552,17 +2407,13 @@ def vocab_oov_curve(
         "total_types",
         F.round(
             1.0 - F.col("covered").cast("double") / F.col("total_occ").cast("double"),
-            decimals,
+            6,
         ).alias("oov_rate"),
     )
 
 
 def pii_density(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-source PII exposure: email / phone / SSN pattern hits per
     1000 tokens — the safety scorecard a curation run reads to decide
@@ -2581,9 +2432,9 @@ def pii_density(
     """
     from ..functions.text import PII_EMAIL, PII_PHONE, PII_SSN
 
-    t = F.col(text_col)
+    t = F.col("text")
     rows = df.select(
-        F.col(source_col).alias("source"),
+        F.col("source"),
         token_count(t).cast("bigint").alias("nt"),
         F.regexp_count(t, F.lit(PII_EMAIL)).cast("bigint").alias("e"),
         F.regexp_count(t, F.lit(PII_PHONE)).cast("bigint").alias("p"),
@@ -2601,7 +2452,7 @@ def pii_density(
                 1000.0
                 * (F.sum("e") + F.sum("p") + F.sum("s")).cast("double")
                 / F.sum("nt").cast("double"),
-                decimals,
+                6,
             ),
         ).alias("pii_per_1k_tokens"),
     )
@@ -2610,10 +2461,7 @@ def pii_density(
 def interp_trigram_logppl(
     df: DataFrame,
     model: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     lambdas: tuple[float, float, float] = (0.6, 0.3, 0.1),
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-document log-perplexity under a Jelinek-Mercer INTERPOLATED
     trigram LM — the next order up from ``bigram_logppl``'s stupid
@@ -2649,15 +2497,15 @@ def interp_trigram_logppl(
     """
     model = df if model is None else model
     l3, l2, l1 = (float(x) for x in lambdas)
-    trig = _ngram_rows(df, id_col, text_col, 3)
-    c3 = _ngram_rows(model, id_col, text_col, 3).groupBy("a", "b", "c").agg(
+    trig = _ngram_rows(df, "doc_id", "text", 3)
+    c3 = _ngram_rows(model, "doc_id", "text", 3).groupBy("a", "b", "c").agg(
         F.count("*").alias("n3")
     )
-    c2 = _ngram_rows(model, id_col, text_col, 2).groupBy("a", "b").agg(
+    c2 = _ngram_rows(model, "doc_id", "text", 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (
-        model.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"))
+        model.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n1"))
     )
@@ -2710,17 +2558,14 @@ def interp_trigram_logppl(
         )
     )
     scored = trig.join(scored_tri, ["a", "b", "c"]).select("id", "nll")
-    return scored.groupBy(F.col("id").alias(id_col)).agg(
+    return scored.groupBy(F.col("id").alias("doc_id")).agg(
         F.count("*").cast("bigint").alias("n_trigrams"),
-        F.round(F.avg("nll"), decimals).alias("logppl"),
+        F.round(F.avg("nll"), 6).alias("logppl"),
     )
 
 
 def utf8_expansion_by_lang(
     df: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-language UTF-8 byte economics: how many BYTES a character
     costs (CJK text triples storage and tokenizer byte-fallback load;
@@ -2738,9 +2583,9 @@ def utf8_expansion_by_lang(
     scan.
     """
     rows = df.select(
-        F.col(lang_col).alias("lang"),
-        F.length(F.col(text_col)).cast("long").alias("nc"),
-        F.octet_length(F.col(text_col)).cast("long").alias("nb"),
+        F.col("lang"),
+        F.length(F.col("text")).cast("long").alias("nc"),
+        F.octet_length(F.col("text")).cast("long").alias("nb"),
     )
     return rows.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -2750,20 +2595,17 @@ def utf8_expansion_by_lang(
             F.sum("nc") > 0,
             F.round(
                 F.sum("nb").cast("double") / F.sum("nc").cast("double"),
-                decimals,
+                6,
             ),
         ).alias("bytes_per_char"),
         F.round(
-            F.avg((F.col("nb") == F.col("nc")).cast("double")), decimals
+            F.avg((F.col("nb") == F.col("nc")).cast("double")), 6
         ).alias("ascii_doc_share"),
     )
 
 
 def host_crawl_scorecard(
     df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-HOST crawl curation scorecard: document volume, exact-dup
     rate (md5 of the body — mirror pages and boilerplate farms show up
@@ -2783,13 +2625,13 @@ def host_crawl_scorecard(
     """
     host = F.lower(
         F.regexp_extract(
-            F.col(url_col), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]+)", 1
+            F.col("url"), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]+)", 1
         )
     )
     rows = df.select(
         host.alias("host"),
-        F.md5(F.col(text_col)).alias("h"),
-        token_count(F.col(text_col)).alias("nt"),
+        F.md5(F.col("text")).alias("h"),
+        token_count(F.col("text")).alias("nt"),
     )
     tot = F.broadcast(rows.agg(F.count("*").cast("long").alias("n_total")))
     return (
@@ -2808,11 +2650,11 @@ def host_crawl_scorecard(
                 1.0
                 - F.col("n_unique_texts").cast("double")
                 / F.col("n_docs").cast("double"),
-                decimals,
+                6,
             ).alias("dup_rate"),
             "n_tokens",
             F.round(
-                F.col("n_docs").cast("double") / F.col("n_total"), decimals
+                F.col("n_docs").cast("double") / F.col("n_total"), 6
             ).alias("corpus_share"),
         )
     )
@@ -2820,11 +2662,7 @@ def host_crawl_scorecard(
 
 def npmi_topic_coherence(
     df: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_terms: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-source NPMI topic coherence (Bouma 2009; the standard topic-
     model eval, applied to each source's top terms): take the source's
@@ -2849,9 +2687,9 @@ def npmi_topic_coherence(
     """
     pres = (
         df.select(
-            F.col(source_col).alias("source"),
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(tokens(F.lower(F.col(text_col)))))
+            F.col("source"),
+            F.col("doc_id").alias("id"),
+            F.explode(F.array_distinct(tokens(F.lower(F.col("text")))))
             .alias("tok"),
         )
         .filter(F.col("tok") != "")
@@ -2865,7 +2703,7 @@ def npmi_topic_coherence(
         .filter(F.col("rk") <= int(top_terms))
         .select("source", "tok", "dfreq")
     )
-    nd = df.groupBy(F.col(source_col).alias("source")).agg(
+    nd = df.groupBy(F.col("source")).agg(
         F.count("*").cast("long").alias("n_docs")
     )
     tp = pres.join(top, ["source", "tok"]).select("source", "id", "tok")
@@ -2928,16 +2766,14 @@ def npmi_topic_coherence(
         F.round(
             F.sum(F.col("npmi").cast("decimal(30,10)")).cast("double")
             / F.count("*"),
-            decimals,
+            6,
         ).alias("coherence"),
     )
 
 
 def vocab_prune_impact(
     df: DataFrame,
-    text_col: str = "text",
     min_counts: tuple[int, ...] = (2, 5, 10),
-    decimals: int = 6,
 ) -> DataFrame:
     """What pruning rare vocabulary actually costs: for each candidate
     ``min_count`` threshold, the vocab size before/after, the share of
@@ -2957,7 +2793,7 @@ def vocab_prune_impact(
     the corpus is scanned once for the whole table.
     """
     toks = df.select(
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+        F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     ).filter(F.col("tok") != "")
     types = toks.groupBy("tok").agg(F.count("*").alias("n")).withColumn(
         "chars", F.col("n") * F.length(F.col("tok"))
@@ -2996,21 +2832,19 @@ def vocab_prune_impact(
         F.col("w.va").cast("bigint").alias("vocab_after"),
         F.round(
             F.col("w.pr").cast("double") / F.col("tot").cast("double"),
-            decimals,
+            6,
         ).alias("pruned_token_share"),
         F.round(
             F.col("w.ln").cast("double") / F.col("tot").cast("double"),
-            decimals,
+            6,
         ).alias("length_inflation"),
     )
 
 
 def good_turing_mass(
     df: DataFrame,
-    text_col: str = "text",
     max_r: int = 5,
     ngram: int = 1,
-    decimals: int = 6,
 ) -> DataFrame:
     """Simple Good-Turing frequency re-estimation (Gale & Sampson): from
     the count-of-counts table N_r, the adjusted count
@@ -3034,10 +2868,10 @@ def good_turing_mass(
     """
     if ngram == 1:
         toks = df.select(
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+            F.explode(tokens(F.lower(F.col("text")))).alias("tok")
         ).filter(F.col("tok") != "")
     elif ngram == 3:
-        toks = _ngram_rows(df, df.columns[0], text_col, 3).select(
+        toks = _ngram_rows(df, df.columns[0], "text", 3).select(
             F.concat_ws(" ", "a", "b", "c").alias("tok")
         )
     else:
@@ -3066,18 +2900,16 @@ def good_turing_mass(
             (F.col("r") + 1)
             * F.coalesce(F.col("n_r_plus1"), F.lit(0)).cast("double")
             / F.col("n_r"),
-            decimals,
+            6,
         ).alias("r_star"),
-        F.round(F.col("n1").cast("double") / F.col("n_tokens"), decimals)
+        F.round(F.col("n1").cast("double") / F.col("n_tokens"), 6)
         .alias("unseen_mass"),
     )
 
 
 def chao1_vocab_estimate(
     df: DataFrame,
-    text_col: str = "text",
     ngram: int = 3,
-    decimals: int = 6,
 ) -> DataFrame:
     """Chao1 richness estimate of the TOTAL vocabulary (observed +
     unseen), bias-corrected form:
@@ -3099,10 +2931,10 @@ def chao1_vocab_estimate(
     """
     if ngram == 1:
         toks = df.select(
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok")
+            F.explode(tokens(F.lower(F.col("text")))).alias("tok")
         ).filter(F.col("tok") != "")
     elif ngram == 3:
-        toks = _ngram_rows(df, df.columns[0], text_col, 3).select(
+        toks = _ngram_rows(df, df.columns[0], "text", 3).select(
             F.concat_ws(" ", "a", "b", "c").alias("tok")
         )
     else:
@@ -3122,19 +2954,16 @@ def chao1_vocab_estimate(
             + F.col("n1").cast("double")
             * (F.col("n1") - 1)
             / (2.0 * (F.col("n2") + 1)),
-            decimals,
+            6,
         ).alias("chao1"),
         F.round(
-            1.0 - F.col("n1").cast("double") / F.col("nt"), decimals
+            1.0 - F.col("n1").cast("double") / F.col("nt"), 6
         ).alias("coverage"),
     )
 
 
 def source_token_mutual_info(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Mutual information (nats) between the source label and the token
     distribution, over lowercase word TRIGRAMS (word grain is useless on
@@ -3169,7 +2998,7 @@ def source_token_mutual_info(
     """
     from ..functions.hashing import md5_bucket
 
-    trips = _ngram_rows(df, group_col, text_col, 3).select(
+    trips = _ngram_rows(df, "source", "text", 3).select(
         F.col("id").alias("g"),
         md5_bucket(F.concat_ws(" ", "a", "b", "c")).alias("tok"),
     )
@@ -3208,7 +3037,7 @@ def source_token_mutual_info(
     mi = joined.agg(
         F.max("n_all").cast("bigint").alias("n_tokens"),
         F.max("n_sources").cast("bigint").alias("n_sources"),
-        F.round(F.sum(term.cast("decimal(30,10)")).cast("double"), decimals).alias(
+        F.round(F.sum(term.cast("decimal(30,10)")).cast("double"), 6).alias(
             "mi_nats"
         ),
         F.count_distinct(F.col("tok")).cast("bigint").alias("n_types"),
@@ -3222,7 +3051,7 @@ def source_token_mutual_info(
         n_g.crossJoin(n_all)
         .agg(
             F.round(
-                F.sum(hterm.cast("decimal(30,10)")).cast("double"), decimals
+                F.sum(hterm.cast("decimal(30,10)")).cast("double"), 6
             ).alias("h_source_nats")
         )
     )
@@ -3236,7 +3065,7 @@ def source_token_mutual_info(
             "h_source_nats",
             F.when(
                 F.col("h_source_nats") > 0,
-                F.round(F.col("mi_nats") / F.col("h_source_nats"), decimals),
+                F.round(F.col("mi_nats") / F.col("h_source_nats"), 6),
             ).alias("nmi"),
         )
     )
@@ -3244,9 +3073,6 @@ def source_token_mutual_info(
 
 def source_js_divergence_matrix(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Pairwise Jensen-Shannon divergence (nats) between every two
     sources' trigram distributions — the DISTRIBUTIONAL companion of
@@ -3279,7 +3105,7 @@ def source_js_divergence_matrix(
     """
     from ..functions.hashing import md5_bucket
 
-    trips = _ngram_rows(df, group_col, text_col, 3).select(
+    trips = _ngram_rows(df, "source", "text", 3).select(
         F.col("id").alias("g"),
         md5_bucket(F.concat_ws(" ", "a", "b", "c")).alias("tok"),
     )
@@ -3333,7 +3159,7 @@ def source_js_divergence_matrix(
         F.coalesce(F.col("n_common_types"), F.lit(0)).cast("bigint").alias(
             "n_common_types"
         ),
-        F.round(F.coalesce(F.col("sb"), F.lit(0.0)) + oneside, decimals).alias(
+        F.round(F.coalesce(F.col("sb"), F.lit(0.0)) + oneside, 6).alias(
             "jsd_nats"
         ),
     )
@@ -3341,10 +3167,7 @@ def source_js_divergence_matrix(
 
 def kneser_ney_bigram_ppl(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     discount: float = 0.75,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-document log-perplexity under an (interpolated) Kneser-Ney
     bigram LM — the smoothing KenLM actually ships, one rung above the
@@ -3378,7 +3201,7 @@ def kneser_ney_bigram_ppl(
     guide §2.3).  Per-position NLLs round to 9 dp and DECIMAL-sum per
     doc.
     """
-    bp = _ngram_rows(df, id_col, text_col, 2)
+    bp = _ngram_rows(df, "doc_id", "text", 2)
     c12 = _persist_spillable(
         bp.groupBy("a", "b").agg(F.count("*").cast("bigint").alias("n2"))
     )
@@ -3404,13 +3227,13 @@ def kneser_ney_bigram_ppl(
     scored = bp.join(scored_bi, ["a", "b"])
     return (
         scored.select("id", "nll")
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_bigrams"),
             F.round(
                 F.sum(F.col("nll").cast("decimal(30,10)")).cast("double")
                 / F.count("*").cast("double"),
-                decimals,
+                6,
             ).alias("kn_logppl"),
         )
     )
@@ -3418,10 +3241,7 @@ def kneser_ney_bigram_ppl(
 
 def term_burstiness_profile(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top: int = 30,
-    decimals: int = 6,
 ) -> DataFrame:
     """Church-Gale burstiness profile of the ``top`` most frequent terms:
     content words BURST (a doc that mentions them once mentions them
@@ -3445,7 +3265,7 @@ def term_burstiness_profile(
     materialize: their moment contribution is algebraic.
     """
     tc = df.select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+        F.col("doc_id").alias("id"), F.explode(tokens(F.lower(F.col("text")))).alias("term")
     ).filter(F.col("term") != "").groupBy("id", "term").agg(
         F.count("*").cast("bigint").alias("c")
     )
@@ -3466,10 +3286,10 @@ def term_burstiness_profile(
         "term",
         "tf",
         "df_docs",
-        F.round(mean, decimals).alias("mean_per_doc"),
-        F.round((ex2 - mean * mean) / mean, decimals).alias("vmr"),
+        F.round(mean, 6).alias("mean_per_doc"),
+        F.round((ex2 - mean * mean) / mean, 6).alias("vmr"),
         F.round(
-            F.col("tf").cast("double") / F.col("df_docs").cast("double"), decimals
+            F.col("tf").cast("double") / F.col("df_docs").cast("double"), 6
         ).alias("mean_when_present"),
     )
 
@@ -3477,9 +3297,6 @@ def term_burstiness_profile(
 def hill_tail_index(
     df: DataFrame,
     k: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    decimals: int = 6,
 ) -> DataFrame:
     """Hill estimator (Hill 1975) of the corpus frequency-distribution
     tail index over word-TRIGRAM types — the MLE companion of
@@ -3503,7 +3320,7 @@ def hill_tail_index(
     arithmetic runs on that model-sized frame.  Per-type ln rounds to
     9 dp and sums as DECIMAL.
     """
-    trips = _ngram_rows(df, id_col, text_col, 3).select(
+    trips = _ngram_rows(df, "doc_id", "text", 3).select(
         F.concat_ws(" ", "a", "b", "c").alias("tok")
     )
     counts = trips.groupBy("tok").agg(F.count("*").cast("bigint").alias("f"))
@@ -3534,7 +3351,7 @@ def hill_tail_index(
             F.when(
                 F.col("mean_ln") > F.col("ln_k1"),
                 F.round(
-                    F.lit(1.0) / (F.col("mean_ln") - F.col("ln_k1")), decimals
+                    F.lit(1.0) / (F.col("mean_ln") - F.col("ln_k1")), 6
                 ),
             ).alias("hill_alpha"),
         )

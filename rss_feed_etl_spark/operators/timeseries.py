@@ -24,45 +24,41 @@ from ..functions.arrays import ordered_pairs
 def gapfill_locf(
     daily: DataFrame,
     key_col: str = "event_type",
-    day_col: str = "day",
-    value_col: str = "total",
 ) -> DataFrame:
     """Densify a per-key daily series and fill gaps by carrying the last
     observation forward.
 
     ``daily`` has one row per (key, day) for *observed* days.  Output has
     one row per (key, every day in that key's [min, max] span) with:
-    - ``<value_col>``: the observed value, NULL on gap days;
-    - ``filled_<value_col>``: LOCF value (never NULL — the spine starts at
+    - ``total``: the observed value, NULL on gap days;
+    - ``filled_total``: LOCF value (never NULL — the spine starts at
       each key's first observed day);
     - ``is_gap``: whether the day was absent from the input.
     """
     spine = (
         daily.groupBy(key_col)
-        .agg(F.min(day_col).alias("_d0"), F.max(day_col).alias("_d1"))
+        .agg(F.min("day").alias("_d0"), F.max("day").alias("_d1"))
         .select(
             key_col,
-            F.explode(F.sequence("_d0", "_d1", F.expr("INTERVAL 1 DAY"))).alias(day_col),
+            F.explode(F.sequence("_d0", "_d1", F.expr("INTERVAL 1 DAY"))).alias("day"),
         )
     )
     w = (
         Window.partitionBy(key_col)
-        .orderBy(day_col)
+        .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        spine.join(daily, [key_col, day_col], "left")
-        .withColumn(f"filled_{value_col}", F.last(value_col, ignorenulls=True).over(w))
-        .withColumn("is_gap", F.col(value_col).isNull())
+        spine.join(daily, [key_col, "day"], "left")
+        .withColumn("filled_total", F.last("total", ignorenulls=True).over(w))
+        .withColumn("is_gap", F.col("total").isNull())
     )
 
 
 def daily_count_anomalies(
     events: DataFrame,
-    ts_col: str = "ts",
     threshold: float = 0.05,
     window_days: int = 7,
-    decimals: int = 6,
 ) -> DataFrame:
     """Days whose event volume deviates more than ``threshold`` (fraction)
     from the trailing ``window_days`` moving average — the volume-anomaly
@@ -74,18 +70,18 @@ def daily_count_anomalies(
     at any corpus size.  One fact-grain shuffle total.
     """
     daily = events.groupBy(
-        F.date_trunc("day", F.col(ts_col)).alias("day")
+        F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(F.count("*").alias("n"))
     w = Window.orderBy("day").rowsBetween(-(window_days - 1), 0)
     scored = daily.select(
         "day",
         "n",
-        F.round(F.avg("n").over(w), decimals).alias("ma"),
+        F.round(F.avg("n").over(w), 6).alias("ma"),
     ).select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         F.col("n").cast("bigint").alias("n"),
         "ma",
-        F.round((F.col("n") - F.col("ma")) / F.col("ma"), decimals).alias(
+        F.round((F.col("n") - F.col("ma")) / F.col("ma"), 6).alias(
             "pct_dev"
         ),
     )
@@ -94,8 +90,6 @@ def daily_count_anomalies(
 
 def dow_seasonal_residuals(
     daily: DataFrame,
-    day_col: str = "day",
-    value_col: str = "total",
     sigmas: float = 2.0,
 ) -> DataFrame:
     """Day-of-week seasonal decomposition over a day-grain series: expected
@@ -110,9 +104,9 @@ def dow_seasonal_residuals(
     broadcasts.
     """
     d = daily.select(
-        F.col(day_col).alias("day"),
-        F.col(value_col).cast("double").alias("val"),
-        (F.dayofweek(day_col) - 1).alias("dow"),  # 0=Sunday, matches DuckDB
+        F.col("day"),
+        F.col("total").cast("double").alias("val"),
+        (F.dayofweek("day") - 1).alias("dow"),  # 0=Sunday, matches DuckDB
     )
     # The weekday mean accumulates as exact DECIMAL (day-grain totals are
     # 2-dp money values, so the 6-dp quantization is lossless) and divides
@@ -132,7 +126,7 @@ def dow_seasonal_residuals(
     sigma = resid.agg(F.round(F.stddev_pop("residual"), 6).alias("sd"))
     return resid.crossJoin(F.broadcast(sigma)).select(
         "day",
-        F.col("val").alias(value_col),
+        F.col("val").alias("total"),
         "dow",
         "expected",
         "residual",
@@ -144,9 +138,6 @@ def dow_seasonal_residuals(
 
 def daily_trend_slope(
     events: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-group OLS trend slope of daily counts against the day index —
     "is this metric growing and how fast", in events/day² units, via the
@@ -157,7 +148,7 @@ def daily_trend_slope(
     — so the only float op is the final division, identical everywhere).
     """
     daily = events.groupBy(
-        F.col(group_col).alias("g"), F.to_date(ts_col).alias("day")
+        F.col("event_type").alias("g"), F.to_date("ts").alias("day")
     ).agg(F.count("*").alias("y"))
     d = daily.withColumn("x", F.datediff("day", F.lit("1970-01-01")).cast("bigint"))
     sums = d.groupBy("g").agg(
@@ -170,19 +161,15 @@ def daily_trend_slope(
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     return sums.select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("event_type"),
         F.col("n").cast("bigint").alias("n_days"),
-        F.round(num / den, decimals).alias("slope"),
+        F.round(num / den, 6).alias("slope"),
     )
 
 
 def ks_drift(
     events: DataFrame,
     split_ts: str,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    decimals: int = 6,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov drift statistic per group: D =
     max |ECDF_before(v) − ECDF_after(v)| between the value distributions
@@ -193,13 +180,13 @@ def ks_drift(
     Exact and distributed: counts collapse to DISTINCT-VALUE grain before
     any window (the per-group cumulative window walks unique values, not
     rows), and per-group totals broadcast.  For value domains too large
-    even at distinct grain, quantize ``value_col`` to a grid first — D is
+    even at distinct grain, quantize ``value`` to a grid first — D is
     then exact on the coarsened distribution.
     """
     s = events.select(
-        F.col(group_col).alias("g"),
-        F.col(value_col).cast("double").alias("v"),
-        (F.col(ts_col) < F.to_timestamp(F.lit(split_ts))).alias("before"),
+        F.col("event_type").alias("g"),
+        F.col("value").cast("double").alias("v"),
+        (F.col("ts") < F.to_timestamp(F.lit(split_ts))).alias("before"),
     )
     per_v = s.groupBy("g", "v").agg(
         F.sum(F.when(F.col("before"), 1).otherwise(0)).alias("c1"),
@@ -223,20 +210,16 @@ def ks_drift(
         "n2",
         F.abs(F.col("a1") / F.col("n1") - F.col("a2") / F.col("n2")).alias("gap"),
     )
-    return d.groupBy(F.col("g").alias(group_col)).agg(
+    return d.groupBy(F.col("g").alias("event_type")).agg(
         F.max("n1").cast("bigint").alias("n_before"),
         F.max("n2").cast("bigint").alias("n_after"),
-        F.round(F.max("gap"), decimals).alias("ks_stat"),
+        F.round(F.max("gap"), 6).alias("ks_stat"),
     )
 
 
 def ema_smoothing(
     daily: DataFrame,
-    key_col: str = "event_type",
-    day_col: str = "day",
-    value_col: str = "total",
     alpha: float = 0.3,
-    decimals: int = 4,
 ) -> DataFrame:
     """Per-key exponential moving average over a daily series:
     s_0 = x_0, s_t = α·x_t + (1−α)·s_{t−1} — the standard smoother for
@@ -254,20 +237,20 @@ def ema_smoothing(
     Scale shape: input is day-grain (tiny by construction); one window
     per key, partial nothing to worry about.  Output adds ``ema``.
     """
-    w_ord = Window.partitionBy(key_col).orderBy(day_col)
+    w_ord = Window.partitionBy("event_type").orderBy("day")
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     decay = F.lit(1.0 - alpha)
     idx = F.row_number().over(w_ord) - 1  # t = 0, 1, ...
-    x0 = F.first(value_col).over(w_run)
-    contrib = F.when(idx > 0, F.pow(decay, -idx) * F.col(value_col)).otherwise(
+    x0 = F.first("total").over(w_run)
+    contrib = F.when(idx > 0, F.pow(decay, -idx) * F.col("total")).otherwise(
         F.lit(0.0)
     )
     staged = daily.select(
-        key_col, day_col, value_col, idx.alias("__t"), contrib.alias("__c"),
+        "event_type", "day", "total", idx.alias("__t"), contrib.alias("__c"),
         x0.alias("__x0"),
     )
     run = F.sum("__c").over(
-        Window.partitionBy(key_col).orderBy(day_col)
+        Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     ema = (
@@ -275,17 +258,12 @@ def ema_smoothing(
         + F.pow(decay, F.col("__t")) * F.col("__x0")
     )
     return staged.select(
-        key_col, day_col, value_col, F.round(ema, decimals).alias("ema")
+        "event_type", "day", "total", F.round(ema, 4).alias("ema")
     )
 
 
 def time_weighted_average(
     samples: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-key time-weighted average over irregular samples: each value
     holds until the key's next sample, so TWAP = Σ vᵢ·Δtᵢ / Σ Δtᵢ with
@@ -300,16 +278,16 @@ def time_weighted_average(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key_col).orderBy(
-        F.col(ts_col).asc(), F.col(seq_col).asc()
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
-    dt = F.lead(F.col(ts_col).cast("double")).over(w) - F.col(ts_col).cast("double")
+    dt = F.lead(F.col("ts").cast("double")).over(w) - F.col("ts").cast("double")
     staged = samples.withColumn("__dt", dt).filter(F.col("__dt").isNotNull())
-    return staged.groupBy(key_col).agg(
+    return staged.groupBy("event_type").agg(
         F.round(
-            F.sum(F.col(value_col) * F.col("__dt")) / F.sum("__dt"), decimals
+            F.sum(F.col("value") * F.col("__dt")) / F.sum("__dt"), 6
         ).alias("twap"),
-        F.round(F.avg(value_col), decimals).alias("plain_mean"),
+        F.round(F.avg("value"), 6).alias("plain_mean"),
         F.count("*").cast("bigint").alias("n_intervals"),
     )
 
@@ -317,10 +295,6 @@ def time_weighted_average(
 def seasonal_naive_mase(
     events: DataFrame,
     season_days: int = 7,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    decimals: int = 6,
 ) -> DataFrame:
     """Backtest the seasonal-naive forecast (ŷ_d = y_{d−season}) on the
     daily series and score it with MASE — mean |error| divided by the
@@ -335,34 +309,31 @@ def seasonal_naive_mase(
     from pyspark.sql import Window
 
     daily = events.groupBy(
-        F.col(key_col), F.to_date(ts_col).alias("day")
-    ).agg(F.round(F.sum(value_col), 2).alias("y"))
-    w = Window.partitionBy(key_col).orderBy("day")
+        F.col("event_type"), F.to_date("ts").alias("day")
+    ).agg(F.round(F.sum("value"), 2).alias("y"))
+    w = Window.partitionBy("event_type").orderBy("day")
     staged = daily.withColumn("__s", F.lag("y", season_days).over(w)).withColumn(
         "__n", F.lag("y", 1).over(w)
     )
     scored = staged.filter(F.col("__s").isNotNull() & F.col("__n").isNotNull())
-    return scored.groupBy(key_col).agg(
+    return scored.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_days"),
-        F.round(F.avg(F.abs(F.col("y") - F.col("__s"))), decimals).alias(
+        F.round(F.avg(F.abs(F.col("y") - F.col("__s"))), 6).alias(
             "mae_seasonal"
         ),
-        F.round(F.avg(F.abs(F.col("y") - F.col("__n"))), decimals).alias(
+        F.round(F.avg(F.abs(F.col("y") - F.col("__n"))), 6).alias(
             "mae_naive"
         ),
         F.round(
             F.avg(F.abs(F.col("y") - F.col("__s")))
             / F.avg(F.abs(F.col("y") - F.col("__n"))),
-            decimals,
+            6,
         ).alias("mase"),
     )
 
 
 def theil_sen_trend(
     events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    decimals: int = 6,
 ) -> DataFrame:
     """Robust daily-count trend per key: the Theil-Sen slope — the MEDIAN
     of all pairwise (count difference / day difference) slopes — which a
@@ -376,9 +347,9 @@ def theil_sen_trend(
     hits an exchange.
     """
     daily = events.groupBy(
-        F.col(key_col), F.to_date(ts_col).alias("day")
+        F.col("event_type"), F.to_date("ts").alias("day")
     ).agg(F.count("*").cast("double").alias("y"))
-    per_key = daily.groupBy(key_col).agg(
+    per_key = daily.groupBy("event_type").agg(
         F.sort_array(
             F.collect_list(F.struct(F.col("day"), F.col("y")))
         ).alias("pts")
@@ -389,7 +360,7 @@ def theil_sen_trend(
         / F.datediff(b["day"], a["day"]).cast("double"),
     )
     staged = per_key.select(
-        key_col,
+        "event_type",
         F.size("pts").cast("bigint").alias("n_days"),
         F.array_sort(slopes).alias("__s"),
     )
@@ -399,18 +370,16 @@ def theil_sen_trend(
         n % 2 == 1, F.get("__s", mid)
     ).otherwise((F.get("__s", mid - 1) + F.get("__s", mid)) / 2.0)
     return staged.select(
-        key_col, "n_days", F.round(median, decimals).alias("slope_per_day")
+        "event_type", "n_days", F.round(median, 6).alias("slope_per_day")
     )
 
 
 def psi_drift(
     ref: DataFrame,
     cur: DataFrame,
-    value_col: str = "value",
     lo: float = 0.0,
     hi: float = 500.0,
     n_bins: int = 10,
-    decimals: int = 6,
 ) -> DataFrame:
     """Population Stability Index between a reference and a current
     distribution: PSI = Σ (p_cur − p_ref)·ln(p_cur/p_ref) over fixed
@@ -425,9 +394,9 @@ def psi_drift(
     """
     width = (hi - lo) / n_bins
     bucket = (
-        F.when(F.col(value_col) < lo, F.lit(0))
-        .when(F.col(value_col) >= hi, F.lit(n_bins + 1))
-        .otherwise(F.floor((F.col(value_col) - lo) / width).cast("int") + 1)
+        F.when(F.col("value") < lo, F.lit(0))
+        .when(F.col("value") >= hi, F.lit(n_bins + 1))
+        .otherwise(F.floor((F.col("value") - lo) / width).cast("int") + 1)
     )
 
     def hist(df: DataFrame, name: str) -> DataFrame:
@@ -453,19 +422,16 @@ def psi_drift(
         "bucket",
         "n_ref",
         "n_cur",
-        F.round(p_ref, decimals).alias("p_ref"),
-        F.round(p_cur, decimals).alias("p_cur"),
-        F.round(contrib, decimals).alias("psi_contrib"),
+        F.round(p_ref, 6).alias("p_ref"),
+        F.round(p_cur, 6).alias("p_cur"),
+        F.round(contrib, 6).alias("psi_contrib"),
     )
 
 
 def cusum_changepoints(
     events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     drift_k: float = 0.5,
     alarm_h: float = 4.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Two-sided CUSUM changepoint detection on each series' daily counts
     — the classic Page (1954) drift detector a corpus-ingest monitor runs
@@ -488,8 +454,8 @@ def cusum_changepoints(
     thousands of rows per series).  Per-series mean/std come from exact
     integer sums joined back broadcast (series-cardinality table).
     """
-    day = F.date_trunc("day", F.col(ts_col))
-    daily = events.groupBy(F.col(type_col).alias("t"), day.alias("day")).agg(
+    day = F.date_trunc("day", F.col("ts"))
+    daily = events.groupBy(F.col("event_type").alias("t"), day.alias("day")).agg(
         F.count("*").cast("long").alias("n")
     )
     st = daily.groupBy("t").agg(
@@ -524,10 +490,10 @@ def cusum_changepoints(
         )
     )
     alarm = (F.col("sp") > alarm_h) | (F.col("sn") > alarm_h)
-    return scored.groupBy(F.col("t").alias(type_col)).agg(
+    return scored.groupBy(F.col("t").alias("event_type")).agg(
         F.count("*").cast("bigint").alias("n_days"),
-        F.round(F.max("sp"), decimals).alias("max_cusum_pos"),
-        F.round(F.max("sn"), decimals).alias("max_cusum_neg"),
+        F.round(F.max("sp"), 6).alias("max_cusum_pos"),
+        F.round(F.max("sn"), 6).alias("max_cusum_neg"),
         F.sum(F.when(alarm, 1).otherwise(0)).cast("bigint").alias("n_alarm_days"),
         F.date_format(
             F.min(F.when(alarm, F.col("day"))), "yyyy-MM-dd"
@@ -537,9 +503,7 @@ def cusum_changepoints(
 
 def daily_autocorrelation(
     events: DataFrame,
-    ts_col: str = "ts",
     max_lag: int = 14,
-    decimals: int = 6,
 ) -> DataFrame:
     """Autocorrelation of the daily event-count series at lags 1..max_lag
     — the periodicity detector that finds weekly (lag-7) ingest cycles a
@@ -560,11 +524,11 @@ def daily_autocorrelation(
     (years ≈ thousands of rows).  The global mean/variance aggregate is
     broadcast back to the per-lag table.
     """
-    day = F.date_trunc("day", F.col(ts_col))
+    day = F.date_trunc("day", F.col("ts"))
     daily = events.groupBy(day.alias("day")).agg(
         F.count("*").cast("long").alias("x")
     )
-    return _acf_core(daily, max_lag, decimals)
+    return _acf_core(daily, max_lag, 6)
 
 
 def _acf_core(daily: DataFrame, max_lag: int, decimals: int) -> DataFrame:
@@ -617,9 +581,6 @@ def _acf_core(daily: DataFrame, max_lag: int, decimals: int) -> DataFrame:
 
 def series_correlation_matrix(
     events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    decimals: int = 6,
 ) -> DataFrame:
     """Pairwise Pearson correlation between the daily-count series of
     every pair of event types — the co-movement matrix that separates "all
@@ -639,9 +600,9 @@ def series_correlation_matrix(
     day-grain self-join and pair aggregation run over series-cardinality
     × calendar rows.  No windows, no fact self-join.
     """
-    day = F.date_trunc("day", F.col(ts_col))
+    day = F.date_trunc("day", F.col("ts"))
     daily = events.groupBy(
-        F.col(type_col).alias("t"), day.alias("day")
+        F.col("event_type").alias("t"), day.alias("day")
     ).agg(F.count("*").cast("long").alias("n"))
     a = daily.select(F.col("t").alias("ta"), "day", F.col("n").alias("x"))
     b = daily.select(F.col("t").alias("tb"), "day", F.col("n").alias("y"))
@@ -670,19 +631,16 @@ def series_correlation_matrix(
             F.col("ta").alias("type_a"),
             F.col("tb").alias("type_b"),
             F.col("c").cast("bigint").alias("n_days"),
-            F.round(num / F.sqrt(denx * deny), decimals).alias("corr"),
+            F.round(num / F.sqrt(denx * deny), 6).alias("corr"),
         )
     )
 
 
 def holt_forecast(
     events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     alpha: float = 0.3,
     beta: float = 0.1,
     horizon: int = 7,
-    decimals: int = 6,
 ) -> DataFrame:
     """Holt double-exponential smoothing per daily-count series: level +
     trend state folded sequentially over the calendar, the capacity
@@ -708,8 +666,8 @@ def holt_forecast(
     same contract as every other per-series operator here.
     """
     a, ombeta, omalpha = float(alpha), 1.0 - float(beta), 1.0 - float(alpha)
-    day = F.date_trunc("day", F.col(ts_col))
-    daily = events.groupBy(F.col(type_col).alias("t"), day.alias("day")).agg(
+    day = F.date_trunc("day", F.col("ts"))
+    daily = events.groupBy(F.col("event_type").alias("t"), day.alias("day")).agg(
         F.count("*").cast("long").alias("n")
     )
     ser = daily.groupBy("t").agg(
@@ -741,27 +699,23 @@ def holt_forecast(
 
     r = F.aggregate(rest, zero, step)
     return ser.select(
-        F.col("t").alias(type_col),
+        F.col("t").alias("event_type"),
         F.size("xs").cast("bigint").alias("n_days"),
-        F.round(r["l"], decimals).alias("level"),
-        F.round(r["b"], decimals).alias("trend"),
-        F.round(r["l"] + F.lit(float(horizon)) * r["b"], decimals).alias(
+        F.round(r["l"], 6).alias("level"),
+        F.round(r["b"], 6).alias("trend"),
+        F.round(r["l"] + F.lit(float(horizon)) * r["b"], 6).alias(
             "forecast_h"
         ),
         F.round(
-            F.when(r["k"] > 0, r["ae"] / r["k"]), decimals
+            F.when(r["k"] > 0, r["ae"] / r["k"]), 6
         ).alias("mae"),
     )
 
 
 def slo_burn_rate(
     events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    error_type: str = "error",
     slo_budget: float = 0.25,
     long_window_hours: int = 6,
-    decimals: int = 6,
 ) -> DataFrame:
     """Multi-window SLO burn-rate alerting (the Google SRE workbook
     pattern): an alert fires only when BOTH the short (1 h) and long
@@ -777,10 +731,10 @@ def slo_burn_rate(
     series (calendar-bounded).  Rolling counts are integer sums; the two
     divisions per row are the only float ops.
     """
-    hr = F.date_trunc("hour", F.col(ts_col))
+    hr = F.date_trunc("hour", F.col("ts"))
     hourly = events.groupBy(hr.alias("hr")).agg(
         F.count("*").cast("long").alias("n"),
-        F.sum((F.col(type_col) == error_type).cast("int"))
+        F.sum((F.col("event_type") == "error").cast("int"))
         .cast("long")
         .alias("e"),
     )
@@ -799,20 +753,17 @@ def slo_burn_rate(
     return rolled.filter((b1 > 1.0) & (bl > 1.0)).select(
         F.date_format("hr", "yyyy-MM-dd HH:00").alias("hour"),
         F.col("n").cast("bigint").alias("n_events"),
-        F.round(b1, decimals).alias("burn_1h"),
-        F.round(bl, decimals).alias(f"burn_{long_window_hours}h"),
+        F.round(b1, 6).alias("burn_1h"),
+        F.round(bl, 6).alias(f"burn_{long_window_hours}h"),
     )
 
 
 def holt_forecast_interval(
     events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     alpha: float = 0.3,
     beta: float = 0.1,
     horizon: int = 7,
     q: float = 0.9,
-    decimals: int = 6,
 ) -> DataFrame:
     """``holt_forecast`` with a conformal-style interval: the fold also
     RECORDS each one-step-ahead |residual|, and the interval is
@@ -830,8 +781,8 @@ def holt_forecast_interval(
     resid_q, lo, hi)``.
     """
     a, ombeta, omalpha = float(alpha), 1.0 - float(beta), 1.0 - float(alpha)
-    day = F.date_trunc("day", F.col(ts_col))
-    daily = events.groupBy(F.col(type_col).alias("t"), day.alias("day")).agg(
+    day = F.date_trunc("day", F.col("ts"))
+    daily = events.groupBy(F.col("event_type").alias("t"), day.alias("day")).agg(
         F.count("*").cast("long").alias("n")
     )
     ser = daily.groupBy("t").agg(
@@ -871,25 +822,21 @@ def holt_forecast_interval(
         F.percentile("res", F.lit(float(q))).alias("rq")
     )
     return folded.join(rq, "t").select(
-        F.col("t").alias(type_col),
+        F.col("t").alias("event_type"),
         "n_days",
-        F.round("fc", decimals).alias("forecast_h"),
-        F.round("rq", decimals).alias("resid_q"),
-        F.round(F.col("fc") - F.col("rq"), decimals).alias("lo"),
-        F.round(F.col("fc") + F.col("rq"), decimals).alias("hi"),
+        F.round("fc", 6).alias("forecast_h"),
+        F.round("rq", 6).alias("resid_q"),
+        F.round(F.col("fc") - F.col("rq"), 6).alias("lo"),
+        F.round(F.col("fc") + F.col("rq"), 6).alias("hi"),
     )
 
 
 def classical_decompose_daily(
     daily: DataFrame,
-    day_col: str = "day",
-    value_col: str = "total",
-    ma_days: int = 7,
-    decimals: int = 6,
 ) -> DataFrame:
     """Classical additive decomposition of a day-grain series:
     value = trend + seasonal + residual, where trend is the CENTERED
-    ``ma_days``-day moving average, the seasonal term is the
+    7-day moving average, the seasonal term is the
     day-of-week mean of the DETRENDED series, and the residual is what
     neither explains — the STL-shaped upgrade of
     ``dow_seasonal_residuals`` (which has no trend term, so a growing
@@ -906,17 +853,15 @@ def classical_decompose_daily(
     Upstream aggregation to day grain is the only corpus-sized work and
     belongs to the caller's scan.
     """
-    w = Window.orderBy("day").rowsBetween(
-        -(int(ma_days) // 2), int(ma_days) // 2
-    )
+    w = Window.orderBy("day").rowsBetween(-3, 3)
     d = daily.select(
-        F.col(day_col).alias("day"),
-        F.col(value_col).cast("double").alias("val"),
-        (F.dayofweek(day_col) - 1).alias("dow"),  # 0=Sunday, matches DuckDB
-    ).withColumn("trend", F.round(F.avg("val").over(w), decimals))
-    d = d.withColumn("detr", F.round(F.col("val") - F.col("trend"), decimals))
+        F.col("day"),
+        F.col("total").cast("double").alias("val"),
+        (F.dayofweek("day") - 1).alias("dow"),  # 0=Sunday, matches DuckDB
+    ).withColumn("trend", F.round(F.avg("val").over(w), 6))
+    d = d.withColumn("detr", F.round(F.col("val") - F.col("trend"), 6))
     profile = d.groupBy("dow").agg(
-        F.round(F.avg("detr"), decimals).alias("seasonal")
+        F.round(F.avg("detr"), 6).alias("seasonal")
     )
     return (
         d.join(F.broadcast(profile), "dow")
@@ -926,7 +871,7 @@ def classical_decompose_daily(
             "trend",
             "seasonal",
             F.round(
-                F.col("val") - F.col("trend") - F.col("seasonal"), decimals
+                F.col("val") - F.col("trend") - F.col("seasonal"), 6
             ).alias("residual"),
         )
     )
@@ -934,17 +879,12 @@ def classical_decompose_daily(
 
 def conformal_interval_coverage(
     daily: DataFrame,
-    day_col: str = "day",
-    value_col: str = "total",
-    train_frac: float = 0.6,
-    cal_frac: float = 0.2,
     alpha: float = 0.1,
-    decimals: int = 6,
 ) -> DataFrame:
     """Split-conformal prediction interval, evaluated honestly: fit a
-    day-of-week mean model on the FIRST ``train_frac`` of the series,
+    day-of-week mean model on the FIRST 60% of the series,
     take the ceil((n_cal+1)(1-alpha))-th smallest absolute residual on
-    the NEXT ``cal_frac`` as the interval half-width q̂ (the
+    the NEXT 20% as the interval half-width q̂ (the
     finite-sample-valid conformal quantile, Vovk et al.), and report the
     fraction of the held-out TAIL the interval actually covers.  Any
     forecast operator in this module can be audited the same way — the
@@ -961,14 +901,14 @@ def conformal_interval_coverage(
     n1 = F.broadcast(daily.agg(F.count("*").cast("long").alias("n")))
     d = (
         daily.select(
-            F.col(day_col).alias("day"),
-            F.col(value_col).cast("double").alias("val"),
-            (F.dayofweek(day_col) - 1).alias("dow"),
+            F.col("day"),
+            F.col("total").cast("double").alias("val"),
+            (F.dayofweek("day") - 1).alias("dow"),
         )
         .crossJoin(n1)
         .withColumn("rn", F.row_number().over(Window.orderBy("day")))
-        .withColumn("n_train", F.floor(F.lit(float(train_frac)) * F.col("n")))
-        .withColumn("n_cal", F.floor(F.lit(float(cal_frac)) * F.col("n")))
+        .withColumn("n_train", F.floor(F.lit(0.6) * F.col("n")))
+        .withColumn("n_cal", F.floor(F.lit(0.2) * F.col("n")))
     )
     train = d.filter(F.col("rn") <= F.col("n_train"))
     cal = d.filter(
@@ -977,10 +917,10 @@ def conformal_interval_coverage(
     )
     test = d.filter(F.col("rn") > F.col("n_train") + F.col("n_cal"))
     profile = F.broadcast(
-        train.groupBy("dow").agg(F.round(F.avg("val"), decimals).alias("pred"))
+        train.groupBy("dow").agg(F.round(F.avg("val"), 6).alias("pred"))
     )
     gmean = F.broadcast(
-        train.agg(F.round(F.avg("val"), decimals).alias("gpred"))
+        train.agg(F.round(F.avg("val"), 6).alias("gpred"))
     )
 
     def _resid(df):
@@ -993,7 +933,7 @@ def conformal_interval_coverage(
                     F.abs(
                         F.col("val") - F.coalesce(F.col("pred"), F.col("gpred"))
                     ),
-                    decimals,
+                    6,
                 ),
             )
         )
@@ -1023,7 +963,7 @@ def conformal_interval_coverage(
         F.count("*").cast("bigint").alias("n_test"),
         F.max("q_hat").alias("q_hat"),
         F.round(
-            F.avg((F.col("r") <= F.col("q_hat")).cast("double")), decimals
+            F.avg((F.col("r") <= F.col("q_hat")).cast("double")), 6
         ).alias("coverage"),
     )
     ntr = F.broadcast(
@@ -1038,11 +978,8 @@ def conformal_interval_coverage(
 
 def competing_risks_cif(
     durations: DataFrame,
-    dur_col: str = "dur",
-    type_col: str = "etype",
     event_a: str = "a",
     event_b: str = "b",
-    decimals: int = 6,
 ) -> DataFrame:
     """Aalen-Johansen cumulative incidence under COMPETING risks: when
     two absorbing events race (churn vs convert, purchase vs error),
@@ -1066,8 +1003,8 @@ def competing_risks_cif(
     ``km_survival``).  ln terms round to 9 dp before accumulation.
     """
     rows = durations.select(
-        F.col(dur_col).cast("long").alias("dur"),
-        F.col(type_col).alias("et"),
+        F.col("dur").cast("long").alias("dur"),
+        F.col("etype").alias("et"),
     )
     grid = rows.groupBy("dur").agg(
         F.count("*").cast("long").alias("m"),
@@ -1124,13 +1061,13 @@ def competing_risks_cif(
         F.col("d_a").cast("bigint").alias("d_a"),
         F.col("d_b").cast("bigint").alias("d_b"),
         F.round(
-            F.exp(F.sum("lnterm").over(wcur).cast("double")), decimals
+            F.exp(F.sum("lnterm").over(wcur).cast("double")), 6
         ).alias("surv"),
         F.round(
-            F.sum("cif_a_t").over(wcur).cast("double"), decimals
+            F.sum("cif_a_t").over(wcur).cast("double"), 6
         ).alias("cif_a"),
         F.round(
-            F.sum("cif_b_t").over(wcur).cast("double"), decimals
+            F.sum("cif_b_t").over(wcur).cast("double"), 6
         ).alias("cif_b"),
     )
     return out.filter((F.col("d_a") > 0) | (F.col("d_b") > 0))
@@ -1138,11 +1075,8 @@ def competing_risks_cif(
 
 def cusum_trajectory(
     events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     drift_k: float = 0.5,
     alarm_h: float = 4.0,
-    decimals: int = 6,
 ) -> DataFrame:
     """Per-DAY CUSUM trajectory — ``cusum_changepoints`` reports each
     series' summary (max statistic, alarm count, first alarm day); this
@@ -1162,8 +1096,8 @@ def cusum_trajectory(
     run over day-grain rows partitioned by series (calendar-bounded);
     per-series moments join back broadcast.
     """
-    day = F.date_trunc("day", F.col(ts_col))
-    daily = events.groupBy(F.col(type_col).alias("t"), day.alias("day")).agg(
+    day = F.date_trunc("day", F.col("ts"))
+    daily = events.groupBy(F.col("event_type").alias("t"), day.alias("day")).agg(
         F.count("*").cast("long").alias("n")
     )
     st = daily.groupBy("t").agg(
@@ -1202,12 +1136,12 @@ def cusum_trajectory(
         )
     )
     return scored.select(
-        F.col("t").alias(type_col),
+        F.col("t").alias("event_type"),
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         F.col("n").cast("bigint").alias("n"),
-        F.round("z", decimals).alias("z"),
-        F.round("sp", decimals).alias("cusum_pos"),
-        F.round("sn", decimals).alias("cusum_neg"),
+        F.round("z", 6).alias("z"),
+        F.round("sp", 6).alias("cusum_pos"),
+        F.round("sn", 6).alias("cusum_neg"),
         (
             (F.col("sp") > F.lit(float(alarm_h)))
             | (F.col("sn") > F.lit(float(alarm_h)))
@@ -1217,9 +1151,7 @@ def cusum_trajectory(
 
 def ljung_box_q(
     events: DataFrame,
-    ts_col: str = "ts",
     max_lag: int = 14,
-    decimals: int = 6,
 ) -> DataFrame:
     """Ljung-Box portmanteau whiteness statistic over the daily
     event-count series — the STANDARD test on top of the ACF
@@ -1244,12 +1176,12 @@ def ljung_box_q(
     cumulative window runs over ≤ max_lag rows — model-sized, the
     benign unpartitioned-window case.
     """
-    day = F.date_trunc("day", F.col(ts_col))
+    day = F.date_trunc("day", F.col("ts"))
     daily = events.groupBy(day.alias("day")).agg(
         F.count("*").cast("long").alias("x")
     )
     daily = daily.localCheckpoint(eager=True)  # day-grain; two consumers
-    acf = _acf_core(daily, max_lag, decimals)
+    acf = _acf_core(daily, max_lag, 6)
     n = daily.agg(F.count("*").cast("bigint").alias("n_days"))
     staged = acf.crossJoin(F.broadcast(n))
     term = F.round(
@@ -1269,6 +1201,6 @@ def ljung_box_q(
             F.col("n_days").cast("double")
             * (F.col("n_days") + 2).cast("double")
             * cum,
-            decimals,
+            6,
         ).alias("q_stat"),
     )

@@ -59,10 +59,6 @@ def curation_pipeline(
     docs: DataFrame,
     embeddings: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    emb_id_col: str = "vec_id",
-    emb_vec_col: str = "embedding",
     eval_pct: int = 10,
     split_salt: str = "cur-split-v1",
     minhash_threshold: float = 0.25,
@@ -71,18 +67,16 @@ def curation_pipeline(
     sem_threshold: float = 0.98,
     sem_bands: int = 6,
     sem_rows: int = 16,
-    dim: int = 64,
     seq_len: int = 512,
     pack_salt: str = "cur-pack-v1",
     min_stopwords: int = 2,
-    decimals: int = 6,
     return_stages: bool = False,
     stage_timings: dict | None = None,
 ):
     """Run the full curation funnel and return the per-source scorecard.
 
     ``embeddings`` may cover only part of the corpus (joined on
-    ``emb_id_col == id_col``); documents without an embedding simply
+    ``vec_id == id_col``); documents without an embedding simply
     cannot be semantically flagged.  The eval split is content-addressed
     (``md5(split_salt:id) % 100 < eval_pct``) so both engines and every
     rerun derive the identical holdout.
@@ -104,8 +98,8 @@ def curation_pipeline(
     import time as _time
     base = _persist_spillable(docs.select(
         F.col(id_col).alias("id"),
-        F.col(text_col).alias("text"),
-        F.col(source_col).alias("source"),
+        F.col("text").alias("text"),
+        F.col("source").alias("source"),
     ))
 
     # Stage survivor sets travel as CHECKPOINTED id frames (8-byte rows):
@@ -180,7 +174,7 @@ def curation_pipeline(
 
     # S5 — semantic decontamination over the embedding space
     emb = embeddings.select(
-        F.col(emb_id_col).alias("id"), F.col(emb_vec_col).alias("embedding")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("embedding")
     )
     eval_emb = emb.join(ids3.filter(is_eval), "id").select(
         F.col("id").alias("vec_id"), "embedding"
@@ -193,7 +187,6 @@ def curation_pipeline(
             threshold=sem_threshold,
             bands=sem_bands,
             rows_per_band=sem_rows,
-            dim=dim,
         )
         .select(F.col("nearest_train_id").alias("id"))
         .distinct()
@@ -267,7 +260,7 @@ def curation_pipeline(
         "mix_weight",
         F.round(
             F.col("__wh").cast("double") / F.sum("__wh").over(w_all).cast("double"),
-            decimals,
+            6,
         ),
     )
     per_packs = packed.groupBy("source").agg(

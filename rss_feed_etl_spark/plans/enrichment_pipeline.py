@@ -33,8 +33,6 @@ def run_enrichment_from_document(
     stage: DataFrame,
     resume_path: str,
     client_factory: ClientFactory,
-    extractor=None,
-    strict: bool = False,
     **kwargs,
 ) -> DataFrame:
     """The full reference shape (run_ats_enrichment.py:581: read_resume →
@@ -44,5 +42,5 @@ def run_enrichment_from_document(
     closure as a scalar."""
     from ..sources.documents import read_document
 
-    resume_text = read_document(resume_path, extractor=extractor, strict=strict)
+    resume_text = read_document(resume_path)
     return run_enrichment(stage, resume_text, client_factory, **kwargs)

@@ -26,7 +26,6 @@ def run_etl(
     strategy: str = "scd1",
     tz: str | None = None,
     now: str | None = None,
-    key: str = "link",
 ) -> DataFrame:
     """One ETL run: returns the merged stage table (caller persists it).
 
@@ -36,14 +35,14 @@ def run_etl(
     feeders = read_feeders(config_df)
     raw = fetch_feeds(spark, feeders, fetcher)
     batch = clean_entries(raw, tz=tz, now=now)
-    batch = validate_keys(batch, key)
+    batch = validate_keys(batch)
     # keep-last within the batch needs an arrival order; published is the
     # only intrinsic order after the parallel fetch
-    batch = dedup_by_key(batch, key, ["published"], keep="last")
+    batch = dedup_by_key(batch, "link", ["published"], keep="last")
     if strategy == "scd1":
-        return sort_output(merge_scd1(batch, history, key=key))
+        return sort_output(merge_scd1(batch, history))
     if strategy == "scd2":
-        return merge_scd2(batch, history, key=key, as_of=now or "1970-01-01 00:00:00")
+        return merge_scd2(batch, history, as_of=now or "1970-01-01 00:00:00")
     if strategy == "merge_upsert":
-        return merge_upsert(batch, history, key=key)
+        return merge_upsert(batch, history)
     raise ValueError(f"unknown strategy: {strategy}")

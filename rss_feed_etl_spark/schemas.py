@@ -77,7 +77,7 @@ ENRICHED_SCHEMA = T.StructType(
 REQUIRED_FEED_CONFIG_COLS = {"title", "reader", "time", "url", "worksheet_name"}
 
 
-def conform(df: DataFrame, schema: T.StructType, fill_empty_string: bool = True) -> DataFrame:
+def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project ``df`` onto ``schema``: add missing columns, cast, reorder.
 
     Mirrors the reference's dynamic schema repair (missing columns appear as
@@ -89,7 +89,7 @@ def conform(df: DataFrame, schema: T.StructType, fill_empty_string: bool = True)
     for field in schema.fields:
         if field.name in existing:
             cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        elif fill_empty_string and isinstance(field.dataType, T.StringType):
+        elif isinstance(field.dataType, T.StringType):
             cols.append(F.lit("").alias(field.name))
         else:
             cols.append(F.lit(None).cast(field.dataType).alias(field.name))
@@ -108,7 +108,7 @@ def assert_required_columns(df: DataFrame, required: set[str]) -> None:
         raise ValueError(f"config table missing required columns: {sorted(missing)}")
 
 
-def stringify_for_sink(df: DataFrame, ts_format: str = "yyyy-MM-dd HH:mm:ss") -> DataFrame:
+def stringify_for_sink(df: DataFrame) -> DataFrame:
     """Cast every column to string for a string-typed sink.
 
     The reference stringifies everything before writing to Sheets
@@ -119,7 +119,7 @@ def stringify_for_sink(df: DataFrame, ts_format: str = "yyyy-MM-dd HH:mm:ss") ->
     for field in df.schema.fields:
         c = F.col(field.name)
         if isinstance(field.dataType, T.TimestampType):
-            c = F.date_format(c, ts_format)
+            c = F.date_format(c, "yyyy-MM-dd HH:mm:ss")
         elif isinstance(field.dataType, (T.ArrayType, T.MapType, T.StructType)):
             c = F.to_json(c)
         else:

@@ -8,7 +8,6 @@ S6: enrichment results to CSV (run_ats_enrichment.py:1054-1077).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ..functions.text import non_blankish
 
@@ -16,13 +15,9 @@ from ..functions.text import non_blankish
 def read_descriptions_csv(
     spark: SparkSession,
     path: str,
-    description_col: str = "description",
-    schema: T.StructType | None = None,
 ) -> DataFrame:
-    reader = spark.read.option("header", True)
-    reader = reader.schema(schema) if schema is not None else reader.option("inferSchema", False)
-    df = reader.csv(path)
-    return df.filter(non_blankish(description_col))
+    df = spark.read.option("header", True).option("inferSchema", False).csv(path)
+    return df.filter(non_blankish("description"))
 
 
 def write_csv(df: DataFrame, path: str) -> None:

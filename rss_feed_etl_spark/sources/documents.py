@@ -94,11 +94,9 @@ def read_document(
 def broadcast_document(
     spark: SparkSession,
     path: str,
-    extractor: Extractor | None = None,
-    strict: bool = False,
 ):
     """Driver-side extract + ``sc.broadcast`` of the text (SURVEY §2.1 S7:
     document scalars ship to executors once, not per task closure).  Returns
     the Broadcast; ``.value`` is the text."""
-    text = read_document(path, extractor=extractor, strict=strict)
+    text = read_document(path)
     return spark.sparkContext.broadcast(text)

@@ -71,15 +71,10 @@ def jsonl_to_parquet(
     src: str,
     dest: str,
     schema: T.StructType,
-    partition_by: list[str] | None = None,
 ) -> None:
     """One-pass JSONL → Parquet conversion (the ingest step that makes
     every later scan prunable and pushdown-able)."""
-    df = read_jsonl(spark, src, schema)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(dest)
+    read_jsonl(spark, src, schema).write.mode("overwrite").parquet(dest)
 
 
 def write_jsonl_shards(

@@ -75,7 +75,6 @@ def write_partitioned_incremental(
     batch: DataFrame,
     history: DataFrame,
     path: str,
-    key: str = "link",
     ts_col: str = "published",
 ) -> list:
     """Incremental merge sink for a full merge: rewrite ONLY the ingest
@@ -89,7 +88,7 @@ def write_partitioned_incremental(
     Returns the touched dates, sorted, with ``None`` last when the null
     date is among them.
     """
-    dates, emptiable = _touched_dates(batch, history, key=key, ts_col=ts_col)
+    dates, emptiable = _touched_dates(batch, history, ts_col=ts_col)
     if not dates:  # empty batch → nothing to rewrite
         return dates
     day = F.to_date(F.col(ts_col))
@@ -105,22 +104,20 @@ def upsert_partitioned(
     path: str,
     schema: T.StructType,
     merge,
-    key: str = "link",
-    ts_col: str = "published",
 ) -> list:
     """Merge ``batch`` into the stored table at ``path`` reading and
     rewriting ONLY the ingest dates the batch touches: the per-batch cost
     tracks the batch, not the history.
 
-    ``merge(batch, history)`` is an upsert on ``key`` (``merge_scd1``):
+    ``merge(batch, history)`` is an upsert on ``link`` (``merge_scd1``):
     history rows whose key the batch lacks pass through unchanged, a
-    matched key takes the batch row's ``ts_col``, and a batch key that
+    matched key takes the batch row's ``published``, and a batch key that
     history lacks is appended.  ``batch`` holds each key once and is
     evaluated several times, so pass it materialized (checkpointed).
 
     1. ``_touched_dates``: the batch's own dates plus the dates of every
-       history row whose key is in the batch (a column-pruned ``(key,
-       ts_col)`` scan semi-joined to the broadcast batch keys) — one
+       history row whose key is in the batch (a column-pruned ``(link,
+       published)`` scan semi-joined to the broadcast batch keys) — one
        collect, no shuffle.  An empty batch touches nothing: return.
     2. Read only those ``ingest_date`` partition directories.
     3. ``merge`` the batch into that slice and hand it to ``_write_dates``
@@ -145,17 +142,17 @@ def upsert_partitioned(
     """
     spark = batch.sparkSession
     dates, emptiable = _touched_dates(
-        batch, read_table(spark, path, schema), key=key, ts_col=ts_col
+        batch, read_table(spark, path, schema)
     )
     if not dates:
         return dates
     merged = merge(batch, _read_dates(spark, path, schema, dates))
-    _write_dates(merged, path, emptiable, ts_col)
+    _write_dates(merged, path, emptiable, "published")
     return dates
 
 
 def _touched_dates(
-    batch: DataFrame, history: DataFrame, key: str = "link", ts_col: str = "published"
+    batch: DataFrame, history: DataFrame, ts_col: str = "published"
 ) -> tuple[list, set]:
     """The ingest dates a merge of ``batch`` into ``history`` can change.
 
@@ -164,7 +161,7 @@ def _touched_dates(
     update can move a row to a new date, and the stale version must vanish
     from its old partition.  One collect of a (date, from-history) row per
     batch row and per matched history row: the history side is a
-    column-pruned ``(key, ts_col)`` scan semi-joined to the broadcast batch
+    column-pruned ``(link, ts_col)`` scan semi-joined to the broadcast batch
     keys, so nothing shuffles (the rows are batch-sized).  A null date (a
     row with no ``ts_col``) is touched like any other and maps to the
     default partition.
@@ -177,8 +174,8 @@ def _touched_dates(
     rows = (
         batch.select(day.alias("d"), F.lit(False).alias("old"))
         .unionByName(
-            history.select(key, ts_col)
-            .join(F.broadcast(batch.select(key)), key, "left_semi")
+            history.select("link", ts_col)
+            .join(F.broadcast(batch.select("link")), "link", "left_semi")
             .select(day.alias("d"), F.lit(True).alias("old"))
         )
         .collect()
@@ -243,7 +240,6 @@ def compact_partitions(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_col: str | None = "ingest_date",
 ) -> int:
     """Small-file compaction for a streaming-sink table.
 
@@ -269,9 +265,9 @@ def compact_partitions(
         f.stat().st_size for f in pathlib.Path(path).rglob("*.parquet")
     )
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    if partition_col and partition_col in df.columns:
-        out = df.repartition(n_files, F.col(partition_col))
-        writer = out.write.mode("overwrite").partitionBy(partition_col)
+    if "ingest_date" in df.columns:
+        out = df.repartition(n_files, F.col("ingest_date"))
+        writer = out.write.mode("overwrite").partitionBy("ingest_date")
     else:
         out = df.repartition(n_files)
         writer = out.write.mode("overwrite")
@@ -425,7 +421,7 @@ def read_orc(spark, path: str):
     return spark.read.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, compression: str = "zlib") -> None:
-    """ORC sink (zlib default, snappy/zstd accepted) — for downstreams
+def write_orc(df: DataFrame, path: str) -> None:
+    """ORC sink (zlib) — for downstreams
     standardized on Hive/ORC rather than parquet."""
-    df.write.mode("overwrite").option("compression", compression).orc(path)
+    df.write.mode("overwrite").option("compression", "zlib").orc(path)

@@ -57,11 +57,8 @@ def incremental_scd1(
     stream: DataFrame,
     target_path: str,
     checkpoint_dir: str,
-    key: str = "link",
-    order_cols: list[str] | None = None,
     available_now: bool = True,
     partitioned: bool = False,
-    ts_col: str = "published",
 ):
     """foreachBatch SCD1 merge: state = the target table.
 
@@ -80,16 +77,16 @@ def incremental_scd1(
     """
     spark = stream.sparkSession
     schema = stream.schema
-    order_cols = order_cols or ["published"]
+    order_cols = ["published"]
 
-    merge = functools.partial(merge_scd1, key=key)
+    merge = functools.partial(merge_scd1)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        deduped = dedup_by_key(batch_df, key, order_cols, keep="last").localCheckpoint(
+        deduped = dedup_by_key(batch_df, "link", order_cols, keep="last").localCheckpoint(
             eager=True
         )
         if partitioned:
-            upsert_partitioned(deduped, target_path, schema, merge, key=key, ts_col=ts_col)
+            upsert_partitioned(deduped, target_path, schema, merge)
             return
         if deduped.isEmpty():
             return
@@ -143,8 +140,6 @@ def incremental_dedup_ingest(
     stream: DataFrame,
     corpus_path: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """foreachBatch deduped corpus ingest: each arriving micro-batch is
     exact-deduped against itself AND the already-landed corpus
@@ -169,7 +164,7 @@ def incremental_dedup_ingest(
             return
         corpus = read_table(spark, corpus_path, schema)
         survivors = incremental_dedup_exact(
-            corpus, batch_df, text_col=text_col, id_col=id_col
+            corpus, batch_df
         )
         # append-only: no read-modify-write race with the corpus scan
         # above, because survivors are fully derived before the write and
@@ -186,8 +181,6 @@ def fold_stats_batch(
     batch_df: DataFrame,
     epoch_id: int,
     agg_path: str,
-    key_col: str = "event_type",
-    value_col: str = "value",
 ) -> bool:
     """One effectively-once fold of a micro-batch into the stored per-key
     aggregate table (the foreachBatch body of ``incremental_stats_sink``,
@@ -198,7 +191,7 @@ def fold_stats_batch(
 
     agg_schema = T.StructType(
         [
-            T.StructField(key_col, T.StringType()),
+            T.StructField("event_type", T.StringType()),
             T.StructField("n", T.LongType()),
             T.StructField("total", T.DoubleType()),
             T.StructField("vmin", T.DoubleType()),
@@ -225,7 +218,7 @@ def fold_stats_batch(
     # display `total` once (±0.005 one-time, vs. an unbounded reset), and
     # the next overwrite persists the exact column for all future folds.
     stored = snap.select(
-        key_col,
+        "event_type",
         "n",
         F.coalesce(
             F.col("total_exact"), F.col("total").cast(T.DecimalType(30, 10))
@@ -234,7 +227,7 @@ def fold_stats_batch(
         "vmax",
     )
     combined = combine_aggregates(
-        stored, batch_df, key_col=key_col, value_col=value_col
+        stored, batch_df, key_col="event_type", value_col="value"
     ).withColumn("__epoch", F.lit(epoch_id).cast("long"))
     combined.localCheckpoint(eager=True).write.mode("overwrite").parquet(agg_path)
     return True
@@ -244,8 +237,6 @@ def incremental_stats_sink(
     stream: DataFrame,
     agg_path: str,
     checkpoint_dir: str,
-    key_col: str = "event_type",
-    value_col: str = "value",
 ):
     """foreachBatch aggregate-table maintenance: every micro-batch folds
     into a stored per-key (n, total, vmin, vmax, mean) table via
@@ -270,7 +261,7 @@ def incremental_stats_sink(
 
     def fold_batch(batch_df: DataFrame, epoch_id: int) -> None:
         fold_stats_batch(
-            spark, batch_df, epoch_id, agg_path, key_col=key_col, value_col=value_col
+            spark, batch_df, epoch_id, agg_path
         )
 
     return _start(stream, fold_batch, checkpoint_dir)
@@ -527,7 +518,7 @@ def incremental_join_view_right(
     right_delta.write.mode("append").parquet(right_path)
 
 
-def _curated_min_id_fold(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _curated_min_id_fold(df: DataFrame) -> DataFrame:
     """One application of the exact-dedup fold over a curated-sink frame:
     keep each ``__fp`` fingerprint's minimum-id row.  groupBy-min with
     ``min_by`` for the payload columns (map-side partial combine — never
@@ -535,10 +526,10 @@ def _curated_min_id_fold(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     associative, commutative, and idempotent, which is what makes
     fold(epochs) == batch(union) under any batch boundaries, arrival
     order, replays, or partial compactions."""
-    payload = [c for c in df.columns if c not in ("__fp", id_col)]
+    payload = [c for c in df.columns if c not in ("__fp", "doc_id")]
     return df.groupBy("__fp").agg(
-        F.min(id_col).alias(id_col),
-        *[F.min_by(c, F.col(id_col)).alias(c) for c in payload],
+        F.min("doc_id").alias("doc_id"),
+        *[F.min_by(c, F.col("doc_id")).alias(c) for c in payload],
     )
 
 
@@ -558,9 +549,6 @@ def curate_stream_to_parquet(
     target_path: str,
     checkpoint_path: str,
     min_stopwords: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
     neardup_bucket_path: str | None = None,
 ):
     """Incremental curation over the epoch sink (VERDICT r8 #7): the
@@ -617,9 +605,7 @@ def curate_stream_to_parquet(
         # second scan of the batch (guide §2.4)
         flags = gopher_quality_flags(
             batch_df,
-            id_col=id_col,
-            text_col=text_col,
-            keep_cols=(text_col, source_col),
+            keep_cols=("text", "source"),
         )
         gated = flags.filter(
             (F.col("flag_word_count") == 1)
@@ -627,12 +613,12 @@ def curate_stream_to_parquet(
             & (F.col("flag_alpha") == 1)
             & (F.col("n_stopwords") >= min_stopwords)
         ).select(
-            F.col(id_col),
-            F.col(text_col),
-            F.col(source_col),
-            F.md5(norm_text(text_col)).alias("__fp"),
+            F.col("doc_id"),
+            F.col("text"),
+            F.col("source"),
+            F.md5(norm_text("text")).alias("__fp"),
         )
-        reduced = _curated_min_id_fold(gated, id_col=id_col)
+        reduced = _curated_min_id_fold(gated)
         if neardup_bucket_path is not None:
             # the banded pass reads the reduced rows twice (sink write +
             # champion write); pin them once so the gate + fingerprint
@@ -640,7 +626,7 @@ def curate_stream_to_parquet(
             reduced = reduced.localCheckpoint(eager=True)
             champs = _bucket_min_fold(
                 banded_minhash(
-                    reduced, id_col, text_col, include_sig=False
+                    reduced, "doc_id", "text", include_sig=False
                 ).select("bucket", F.col("id").alias("min_id"))
             )
             _write_epoch(champs, epoch_id, neardup_bucket_path)
@@ -652,9 +638,7 @@ def curate_stream_to_parquet(
 def curated_read_view(
     spark: SparkSession,
     target_path: str,
-    id_col: str = "doc_id",
     neardup_bucket_path: str | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """Reader view of the curated sink: live rows (base + epochs newer
     than the base's fold horizon — the :func:`enriched_read_view` crash
@@ -678,23 +662,23 @@ def curated_read_view(
     """
     from ..operators.dedup import banded_minhash
 
-    surv = _curated_min_id_fold(_live_rows(spark, target_path), id_col=id_col).drop("__fp")
+    surv = _curated_min_id_fold(_live_rows(spark, target_path)).drop("__fp")
     if neardup_bucket_path is None:
         return surv
     champs = _bucket_min_fold(_live_rows(spark, neardup_bucket_path)).withColumnRenamed(
         "min_id", "__champ"
     )
-    sb = banded_minhash(surv, id_col, text_col, include_sig=False).select(
-        F.col("id").alias(id_col), "bucket"
+    sb = banded_minhash(surv, "doc_id", "text", include_sig=False).select(
+        F.col("id").alias("doc_id"), "bucket"
     )
     keep = (
         sb.join(champs, "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.min("__champ").alias("__mc"))
-        .filter(F.col("__mc") == F.col(id_col))
-        .select(id_col)
+        .filter(F.col("__mc") == F.col("doc_id"))
+        .select("doc_id")
     )
-    return surv.join(keep, id_col)
+    return surv.join(keep, "doc_id")
 
 
 def compact_bucket_epochs(
@@ -715,7 +699,6 @@ def compact_curated_epochs(
     spark: SparkSession,
     target_path: str,
     upto_epoch: int,
-    id_col: str = "doc_id",
     _fault=None,
 ) -> bool:
     """Fold curated epochs ``<= upto_epoch`` into the base partition WITH
@@ -731,5 +714,5 @@ def compact_curated_epochs(
         target_path,
         upto_epoch,
         _fault=_fault,
-        reduce_fn=lambda d: _curated_min_id_fold(d, id_col=id_col),
+        reduce_fn=lambda d: _curated_min_id_fold(d),
     )

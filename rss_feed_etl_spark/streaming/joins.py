@@ -23,21 +23,20 @@ def interval_stream_join(
     left_ts: str,
     right_ts: str,
     max_delta_s: float,
-    watermark_s: float = 3600.0,
 ) -> DataFrame:
     """Inner stream-stream join: rows with equal ``on`` keys where
     ``0 <= right_ts − left_ts <= max_delta_s`` (e.g. click → purchase
     within the attribution window).
 
-    Both sides carry a watermark of ``watermark_s``; together with the
+    Both sides carry a one-hour watermark; together with the
     range condition Spark can expire left-state older than
     watermark + max_delta and right-state older than watermark — bounded
     state regardless of stream length, the non-negotiable property of a
     production stream join.  Column names must be disjoint apart from
     ``on``.
     """
-    lw = left.withWatermark(left_ts, f"{int(watermark_s)} seconds")
-    rw = right.withWatermark(right_ts, f"{int(watermark_s)} seconds")
+    lw = left.withWatermark(left_ts, "3600 seconds")
+    rw = right.withWatermark(right_ts, "3600 seconds")
     cond = (
         (lw[on] == rw[on])
         & (rw[right_ts] >= lw[left_ts])

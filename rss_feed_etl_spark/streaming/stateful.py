@@ -45,10 +45,6 @@ SESSION_STATE_SCHEMA = T.StructType(
 def sessionize_stream(
     stream: DataFrame,
     gap_minutes: int = 30,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    idle_timeout_minutes: int = 120,
 ) -> DataFrame:
     """Assign gap-based session ids to a stream, continuing sessions ACROSS
     micro-batches (the stateful analog of the batch ``sessionize`` query in
@@ -73,28 +69,28 @@ def sessionize_stream(
         last_us, session_id = state.get if state.exists else (None, 0)
         batch = pd.concat(list(pdfs), ignore_index=True)
         # micro-batch rows arrive unordered within the group
-        batch = batch.sort_values([ts_col, id_col], kind="mergesort")
+        batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
         out_sessions = []
-        for t in batch[ts_col]:
+        for t in batch["ts"]:
             t_us = int(t.value // 1_000)  # pandas Timestamp nanos → micros
             if last_us is None or t_us - last_us > gap_us:
                 session_id += 1
             last_us = t_us
             out_sessions.append(session_id)
         state.update((last_us, session_id))
-        state.setTimeoutDuration(idle_timeout_minutes * 60_000)
+        state.setTimeoutDuration(120 * 60_000)
         yield pd.DataFrame(
             {
-                "user_id": batch[key_col].astype("int64"),
-                "event_id": batch[id_col].astype("int64"),
-                "ts": batch[ts_col],
+                "user_id": batch["user_id"].astype("int64"),
+                "event_id": batch["event_id"].astype("int64"),
+                "ts": batch["ts"],
                 "session_id": out_sessions,
             }
         )
 
     return (
-        stream.select(key_col, id_col, ts_col)
-        .groupBy(key_col)
+        stream.select("user_id", "event_id", "ts")
+        .groupBy("user_id")
         .applyInPandasWithState(
             assign,
             SESSION_OUT_SCHEMA,
@@ -107,9 +103,6 @@ def sessionize_stream(
 
 def running_user_totals(
     stream: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Cross-batch running per-user lifetime stats (event count, value
     total, last event id) via ``transformWithStateInPandas`` — the
@@ -162,8 +155,8 @@ def running_user_totals(
                 n, total, last_id = 0, 0.0, -1
             for pdf in rows:
                 n += len(pdf)
-                total += float(pdf[value_col].sum())
-                last_id = max(last_id, int(pdf[id_col].max()))
+                total += float(pdf["value"].sum())
+                last_id = max(last_id, int(pdf["event_id"].max()))
             self._stats.update((n, total, last_id))
             yield pd.DataFrame(
                 {
@@ -178,8 +171,8 @@ def running_user_totals(
             pass
 
     return (
-        stream.select(key_col, value_col, id_col)
-        .groupBy(key_col)
+        stream.select("user_id", "value", "event_id")
+        .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=RunningTotals(),
             outputStructType=(
