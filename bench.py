@@ -410,7 +410,7 @@ def bench_curation_stages(spark, sf_dir: str) -> dict[str, float]:
     already-materialized id checkpoint."""
     import time as _t
 
-    from rss_feed_etl_spark.driver_queries_wave107 import _q_curation
+    from rss_feed_etl_spark.queries.dedup import _q_curation
 
     stages: dict[str, float] = {}
     spark.catalog.clearCache()  # same clean-slate discipline as _timed_noop
@@ -822,7 +822,7 @@ def bench_pq_stages(spark, sf_dir: str) -> dict[str, float]:
     production shape (train once, ADC-scan many).  Trains once with the
     registered query's exact parameters, then times the scan-only path
     via the ``codebooks=`` injection."""
-    from rss_feed_etl_spark.driver_queries_wave104 import (
+    from rss_feed_etl_spark.queries.similarity import (
         _PQ_CAND,
         _PQ_DIM,
         _PQ_ITERS,

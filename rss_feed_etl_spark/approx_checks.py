@@ -30,7 +30,7 @@ import math
 import pandas as pd
 
 _HLL_TOL = 0.05
-_PCA_K, _PCA_DIM = 8, 64  # must match driver_queries_wave40._q_pca
+_PCA_K, _PCA_DIM = 8, 64  # must match queries/linalg._q_pca
 _ZLIB_LEVEL = 6  # must match textstats.compression_ratio default
 
 

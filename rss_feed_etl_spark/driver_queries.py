@@ -172,9 +172,9 @@ ORACLES: dict[str, str] = {}
 
 def _register(name: str, fn: Callable[[SparkSession, str], DataFrame], sql: str | None):
     if name in QUERIES:
-        # a silent overwrite once masked a broken query for a whole wave
-        # (a wave-136 name collided with wave 66's cusum_changepoints and
-        # shadowed it out of the registry) — fail at import instead
+        # a silent overwrite once masked a broken query: a later query's
+        # name collided with cusum_changepoints and shadowed it out of the
+        # registry — fail at import instead
         raise ValueError(f"duplicate query registration: {name!r}")
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,155 +609,9 @@ SELECT user_id, event_id, event_type, value, rnk FROM (
 )
 
 
-from . import driver_queries_corpus  # noqa: E402, F401  (registers wave-2 queries)
-from . import driver_queries_wave3  # noqa: E402, F401  (registers wave-3 queries)
-from . import driver_queries_wave4  # noqa: E402, F401  (registers wave-4 queries)
-from . import driver_queries_wave5  # noqa: E402, F401  (registers wave-5 queries)
-from . import driver_queries_wave6  # noqa: E402, F401  (registers wave-6 queries)
-from . import driver_queries_wave7  # noqa: E402, F401  (registers wave-7 queries)
-from . import driver_queries_wave8  # noqa: E402, F401  (registers wave-8 queries)
-from . import driver_queries_wave9  # noqa: E402, F401  (registers wave-9 queries)
-from . import driver_queries_wave10  # noqa: E402, F401  (registers wave-10 queries)
-from . import driver_queries_wave11  # noqa: E402, F401  (registers wave-11 queries)
-from . import driver_queries_wave12  # noqa: E402, F401  (registers wave-12 queries)
-from . import driver_queries_wave13  # noqa: E402, F401  (registers wave-13 queries)
-from . import driver_queries_wave14  # noqa: E402, F401  (registers wave-14 queries)
-from . import driver_queries_wave15  # noqa: E402, F401  (registers wave-15 queries)
-from . import driver_queries_wave16  # noqa: E402, F401  (registers wave-16 queries)
-from . import driver_queries_wave17  # noqa: E402, F401  (registers wave-17 queries)
-from . import driver_queries_wave18  # noqa: E402, F401  (registers wave-18 queries)
-from . import driver_queries_wave19  # noqa: E402, F401  (registers wave-19 queries)
-from . import driver_queries_wave20  # noqa: E402, F401  (registers wave-20 queries)
-from . import driver_queries_wave21  # noqa: E402, F401  (registers wave-21 queries)
-from . import driver_queries_wave22  # noqa: E402, F401  (registers wave-22 queries)
-from . import driver_queries_wave23  # noqa: E402, F401  (registers wave-23 queries)
-from . import driver_queries_wave24  # noqa: E402, F401  (registers wave-24 queries)
-from . import driver_queries_wave25  # noqa: E402, F401  (registers wave-25 queries)
-from . import driver_queries_wave26  # noqa: E402, F401  (registers wave-26 queries)
-from . import driver_queries_wave27  # noqa: E402, F401  (registers wave-27 queries)
-from . import driver_queries_wave28  # noqa: E402, F401  (registers wave-28 queries)
-from . import driver_queries_wave29  # noqa: E402, F401  (registers wave-29 queries)
-from . import driver_queries_wave30  # noqa: E402, F401  (registers wave-30 queries)
-from . import driver_queries_wave31  # noqa: E402, F401  (registers wave-31 queries)
-from . import driver_queries_wave32  # noqa: E402, F401  (registers wave-32 queries)
-from . import driver_queries_wave33  # noqa: E402, F401  (registers wave-33 queries)
-from . import driver_queries_wave34  # noqa: E402, F401  (registers wave-34 queries)
-from . import driver_queries_wave35  # noqa: E402, F401  (registers wave-35 queries)
-from . import driver_queries_wave36  # noqa: E402, F401  (registers wave-36 queries)
-from . import driver_queries_wave37  # noqa: E402, F401  (registers wave-37 queries)
-from . import driver_queries_wave38  # noqa: E402, F401  (registers wave-38 queries)
-from . import driver_queries_wave39  # noqa: E402, F401  (registers wave-39 queries)
-from . import driver_queries_wave40  # noqa: E402, F401  (registers wave-40 queries)
-from . import driver_queries_wave41  # noqa: E402, F401  (registers wave-41 queries)
-from . import driver_queries_wave42  # noqa: E402, F401  (registers wave-42 queries)
-from . import driver_queries_wave43  # noqa: E402, F401  (registers wave-43 queries)
-from . import driver_queries_wave44  # noqa: E402, F401  (registers wave-44 queries)
-from . import driver_queries_wave45  # noqa: E402, F401  (registers wave-45 queries)
-from . import driver_queries_wave46  # noqa: E402, F401  (registers wave-46 queries)
-from . import driver_queries_wave47  # noqa: E402, F401  (registers wave-47 queries)
-from . import driver_queries_wave48  # noqa: E402, F401  (registers wave-48 queries)
-from . import driver_queries_wave49  # noqa: E402, F401  (registers wave-49 queries)
-from . import driver_queries_wave50  # noqa: E402, F401  (registers wave-50 queries)
-from . import driver_queries_wave51  # noqa: E402, F401  (registers wave-51 queries)
-from . import driver_queries_wave52  # noqa: E402, F401  (registers wave-52 queries)
-from . import driver_queries_wave53  # noqa: E402, F401  (registers wave-53 queries)
-from . import driver_queries_wave54  # noqa: E402, F401  (registers wave-54 queries)
-from . import driver_queries_wave55  # noqa: E402, F401  (registers wave-55 queries)
-from . import driver_queries_wave56  # noqa: E402, F401  (registers wave-56 queries)
-from . import driver_queries_wave57  # noqa: E402, F401  (registers wave-57 queries)
-from . import driver_queries_wave58  # noqa: E402, F401  (registers wave-58 queries)
-from . import driver_queries_wave59  # noqa: E402, F401  (registers wave-59 queries)
-from . import driver_queries_wave60  # noqa: E402, F401  (registers wave-60 queries)
-from . import driver_queries_wave61  # noqa: E402, F401  (registers wave-61 queries)
-from . import driver_queries_wave62  # noqa: E402, F401  (registers wave-62 queries)
-from . import driver_queries_wave63  # noqa: E402, F401  (registers wave-63 queries)
-from . import driver_queries_wave64  # noqa: E402, F401  (registers wave-64 queries)
-from . import driver_queries_wave65  # noqa: E402, F401  (registers wave-65 queries)
-from . import driver_queries_wave66  # noqa: E402, F401  (registers wave-66 queries)
-from . import driver_queries_wave67  # noqa: E402, F401  (registers wave-67 queries)
-from . import driver_queries_wave68  # noqa: E402, F401  (registers wave-68 queries)
-from . import driver_queries_wave69  # noqa: E402, F401  (registers wave-69 queries)
-from . import driver_queries_wave70  # noqa: E402, F401  (registers wave-70 queries)
-from . import driver_queries_wave71  # noqa: E402, F401  (registers wave-71 queries)
-from . import driver_queries_wave72  # noqa: E402, F401  (registers wave-72 queries)
-from . import driver_queries_wave73  # noqa: E402, F401  (registers wave-73 queries)
-from . import driver_queries_wave74  # noqa: E402, F401  (registers wave-74 queries)
-from . import driver_queries_wave75  # noqa: E402, F401  (registers wave-75 queries)
-from . import driver_queries_wave76  # noqa: E402, F401  (registers wave-76 queries)
-from . import driver_queries_wave77  # noqa: E402, F401  (registers wave-77 queries)
-from . import driver_queries_wave78  # noqa: E402, F401  (registers wave-78 queries)
-from . import driver_queries_wave79  # noqa: E402, F401  (registers wave-79 queries)
-from . import driver_queries_wave80  # noqa: E402, F401  (registers wave-80 queries)
-from . import driver_queries_wave81  # noqa: E402, F401  (registers wave-81 queries)
-from . import driver_queries_wave82  # noqa: E402, F401  (registers wave-82 queries)
-from . import driver_queries_wave83  # noqa: E402, F401  (registers wave-83 queries)
-from . import driver_queries_wave84  # noqa: E402, F401  (registers wave-84 queries)
-from . import driver_queries_wave85  # noqa: E402, F401  (registers wave-85 queries)
-from . import driver_queries_wave86  # noqa: E402, F401  (registers wave-86 queries)
-from . import driver_queries_wave87  # noqa: E402, F401  (registers wave-87 queries)
-from . import driver_queries_wave88  # noqa: E402, F401  (registers wave-88 queries)
-from . import driver_queries_wave89  # noqa: E402, F401  (registers wave-89 queries)
-from . import driver_queries_wave90  # noqa: E402, F401  (registers wave-90 queries)
-from . import driver_queries_wave91  # noqa: E402, F401  (registers wave-91 queries)
-from . import driver_queries_wave92  # noqa: E402, F401  (registers wave-92 queries)
-from . import driver_queries_wave93  # noqa: E402, F401  (registers wave-93 queries)
-from . import driver_queries_wave94  # noqa: E402, F401  (registers wave-94 queries)
-from . import driver_queries_wave95  # noqa: E402, F401  (registers wave-95 queries)
-from . import driver_queries_wave96  # noqa: E402, F401  (registers wave-96 queries)
-from . import driver_queries_wave97  # noqa: E402, F401  (registers wave-97 queries)
-from . import driver_queries_wave98  # noqa: E402, F401  (registers wave-98 queries)
-from . import driver_queries_wave99  # noqa: E402, F401  (registers wave-99 queries)
-from . import driver_queries_wave100  # noqa: E402, F401  (registers wave-100 queries)
-from . import driver_queries_wave101  # noqa: E402, F401  (registers wave-101 queries)
-from . import driver_queries_wave102  # noqa: E402, F401  (registers wave-102 queries)
-from . import driver_queries_wave103  # noqa: E402, F401  (registers wave-103 queries)
-from . import driver_queries_wave104  # noqa: E402, F401  (registers wave-104 queries)
-from . import driver_queries_wave105  # noqa: E402, F401  (registers wave-105 queries)
-from . import driver_queries_wave106  # noqa: E402, F401  (registers wave-106 queries)
-from . import driver_queries_wave107  # noqa: E402, F401  (registers wave-107 queries)
-from . import driver_queries_wave108  # noqa: E402, F401  (registers wave-108 queries)
-from . import driver_queries_wave109  # noqa: E402, F401  (registers wave-109 queries)
-from . import driver_queries_wave110  # noqa: E402, F401  (registers wave-110 queries)
-from . import driver_queries_wave111  # noqa: E402, F401  (registers wave-111 queries)
-from . import driver_queries_wave112  # noqa: E402, F401  (registers wave-112 queries)
-from . import driver_queries_wave113  # noqa: E402, F401  (registers wave-113 queries)
-from . import driver_queries_wave114  # noqa: E402, F401  (registers wave-114 queries)
-from . import driver_queries_wave115  # noqa: E402, F401  (registers wave-115 queries)
-from . import driver_queries_wave116  # noqa: E402, F401  (registers wave-116 queries)
-from . import driver_queries_wave117  # noqa: E402, F401  (registers wave-117 queries)
-from . import driver_queries_wave118  # noqa: E402, F401  (registers wave-118 queries)
-from . import driver_queries_wave119  # noqa: E402, F401  (registers wave-119 queries)
-from . import driver_queries_wave120  # noqa: E402, F401  (registers wave-120 queries)
-from . import driver_queries_wave121  # noqa: E402, F401  (registers wave-121 queries)
-from . import driver_queries_wave122  # noqa: E402, F401  (registers wave-122 queries)
-from . import driver_queries_wave123  # noqa: E402, F401  (registers wave-123 queries)
-from . import driver_queries_wave124  # noqa: E402, F401  (registers wave-124 queries)
-from . import driver_queries_wave125  # noqa: E402, F401  (registers wave-125 queries)
-from . import driver_queries_wave126  # noqa: E402, F401  (registers wave-126 queries)
-from . import driver_queries_wave127  # noqa: E402, F401  (registers wave-127 queries)
-from . import driver_queries_wave128  # noqa: E402, F401  (registers wave-128 queries)
-from . import driver_queries_wave129  # noqa: E402, F401  (registers wave-129 queries)
-from . import driver_queries_wave130  # noqa: E402, F401  (registers wave-130 queries)
-from . import driver_queries_wave131  # noqa: E402, F401  (registers wave-131 queries)
-from . import driver_queries_wave132  # noqa: E402, F401  (registers wave-132 queries)
-from . import driver_queries_wave133  # noqa: E402, F401  (registers wave-133 queries)
-from . import driver_queries_wave134  # noqa: E402, F401  (registers wave-134 queries)
-from . import driver_queries_wave135  # noqa: E402, F401  (registers wave-135 queries)
-from . import driver_queries_wave136  # noqa: E402, F401  (registers wave-136 queries)
-from . import driver_queries_wave137  # noqa: E402, F401  (registers wave-137 queries)
-from . import driver_queries_wave138  # noqa: E402, F401  (registers wave-138 queries)
-from . import driver_queries_wave139  # noqa: E402, F401  (registers wave-139 queries)
-from . import driver_queries_wave140  # noqa: E402, F401  (registers wave-140 queries)
-from . import driver_queries_wave141  # noqa: E402, F401  (registers wave-141 queries)
-from . import driver_queries_wave142  # noqa: E402, F401  (registers wave-142 queries)
-from . import driver_queries_wave143  # noqa: E402, F401  (registers wave-143 queries)
-from . import driver_queries_wave144  # noqa: E402, F401  (registers wave-144 queries)
-from . import driver_queries_wave145  # noqa: E402, F401  (registers wave-145 queries)
-from . import driver_queries_wave146  # noqa: E402, F401  (registers wave-146 queries)
-from . import driver_queries_wave147  # noqa: E402, F401  (registers wave-147 queries)
-from . import driver_queries_wave148  # noqa: E402, F401  (registers wave-148 queries)
-from . import driver_queries_wave149  # noqa: E402, F401  (registers wave-149 queries)
-from . import driver_queries_wave150  # noqa: E402, F401  (registers wave-150 queries)
+# Loading the queries package registers every family module under
+# queries/, in the order its __init__ lists them.
+from . import queries as _query_families  # noqa: E402, F401
 
 
 # SELF-REFRESHING ROTATION (round 6; VERDICT r5 task #1).  The driver's
@@ -778,8 +632,8 @@ from . import driver_queries_wave150  # noqa: E402, F401  (registers wave-150 qu
 # plus ``alignment_uniformity`` (exact integer ring bucket).  Four more
 # queries changed the same way and share an operator path with an entry
 # below: ``ann_recall_lsh`` (cosine_topk_lsh), ``clustering_kappa``
-# (nearest_centroid_confusion), ``retrieval_pr_curve`` (the wave-102
-# retrieval cosine) and ``bitext_mining_pairs_banded`` (the bitext
+# (nearest_centroid_confusion), ``retrieval_pr_curve`` (the
+# ``embedding_retrieval_auc`` cosine) and ``bitext_mining_pairs_banded`` (the bitext
 # cosine).
 _RECHECK = [
     "ann_cosine_topk_lsh",

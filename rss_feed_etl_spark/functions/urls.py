@@ -23,7 +23,7 @@ _SCHEME_HOST = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*"
 def canonical_url(col: Column | str) -> Column:
     """Canonicalize a URL with portable regex passes (see module doc).
 
-    Mirrored 1:1 in the DuckDB oracle SQL (driver_queries_wave16) — every
+    Mirrored 1:1 in the DuckDB oracle SQL (queries/functions.py) — every
     pass is a global regexp_replace both engines implement identically.
     """
     c = F.col(col) if isinstance(col, str) else col

@@ -469,17 +469,12 @@ def trending_items(
     )
 
 
-def _survival_risk_table(
-    events: DataFrame,
-    censor_days: int,
-    user_col: str,
-    ts_col: str,
-) -> DataFrame:
+def _survival_risk_table(events: DataFrame, censor_days: int) -> DataFrame:
     """Shared duration-grain risk table for the survival estimators:
-    per-user lifetimes with recency censoring, collapsed to
-    ``(duration_days, n_events, n_censored, n_risk)``."""
-    day = F.to_date(ts_col)
-    per_user = events.groupBy(user_col).agg(
+    per-user (``user_id``) lifetimes over ``ts`` with recency censoring,
+    collapsed to ``(duration_days, n_events, n_censored, n_risk)``."""
+    day = F.to_date("ts")
+    per_user = events.groupBy("user_id").agg(
         F.min(day).alias("first_day"), F.max(day).alias("last_day")
     )
     horizon = events.agg(F.max(day).alias("max_day"))
@@ -521,7 +516,7 @@ def kaplan_meier(
     horizon rides in as a broadcast 1-row aggregate, never a second scan
     of the facts.
     """
-    at_risk = _survival_risk_table(events, censor_days, "user_id", "ts")
+    at_risk = _survival_risk_table(events, censor_days)
     w_asc = (
         Window.orderBy(F.col("duration_days").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1245,7 +1240,7 @@ def nelson_aalen(
     duration grain.  The cumulative float sums run in a fixed window
     order, so they're deterministic (same contract as KM's Π(1−d/n)).
     """
-    at_risk = _survival_risk_table(events, censor_days, "user_id", "ts")
+    at_risk = _survival_risk_table(events, censor_days)
     w_asc = (
         Window.orderBy(F.col("duration_days").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -688,7 +688,7 @@ def query_clarity_score(
     fb = bm25_topk(
         df, query_terms, topk=fb_docs
     ).select("doc_id")
-    tris = _ngram_rows(df, "doc_id", "text", 3).select(
+    tris = _ngram_rows(df, "doc_id", 3).select(
         "id", F.concat_ws(" ", "a", "b", "c").alias("tok")
     )
     fb_cnt = (

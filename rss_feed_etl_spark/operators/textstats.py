@@ -487,10 +487,10 @@ def unigram_logppl(
     )
 
 
-def _ngram_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, a, b[, c]) adjacent lowercase-token n-grams (n = 2 or 3), one
-    row per position."""
-    grams = ngrams(tokens(F.lower(F.col(text_col))), n)
+def _ngram_rows(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id, a, b[, c]) adjacent lowercase-token n-grams (n = 2 or 3) of
+    ``text``, one row per position."""
+    grams = ngrams(tokens(F.lower(F.col("text"))), n)
     return df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g")).select(
         "id", *[F.col(f"g.w{i}").alias("abc"[i]) for i in range(n)]
     )
@@ -522,8 +522,8 @@ def bigram_logppl(
     Docs with < 2 tokens emit no bigrams and are absent from the output.
     """
     model = df if model is None else model
-    big = _ngram_rows(df, "doc_id", "text", 2)
-    c2 = _ngram_rows(model, "doc_id", "text", 2).groupBy("a", "b").agg(
+    big = _ngram_rows(df, "doc_id", 2)
+    c2 = _ngram_rows(model, "doc_id", 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (
@@ -2497,11 +2497,11 @@ def interp_trigram_logppl(
     """
     model = df if model is None else model
     l3, l2, l1 = (float(x) for x in lambdas)
-    trig = _ngram_rows(df, "doc_id", "text", 3)
-    c3 = _ngram_rows(model, "doc_id", "text", 3).groupBy("a", "b", "c").agg(
+    trig = _ngram_rows(df, "doc_id", 3)
+    c3 = _ngram_rows(model, "doc_id", 3).groupBy("a", "b", "c").agg(
         F.count("*").alias("n3")
     )
-    c2 = _ngram_rows(model, "doc_id", "text", 2).groupBy("a", "b").agg(
+    c2 = _ngram_rows(model, "doc_id", 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (
@@ -2871,7 +2871,7 @@ def good_turing_mass(
             F.explode(tokens(F.lower(F.col("text")))).alias("tok")
         ).filter(F.col("tok") != "")
     elif ngram == 3:
-        toks = _ngram_rows(df, df.columns[0], "text", 3).select(
+        toks = _ngram_rows(df, df.columns[0], 3).select(
             F.concat_ws(" ", "a", "b", "c").alias("tok")
         )
     else:
@@ -2934,7 +2934,7 @@ def chao1_vocab_estimate(
             F.explode(tokens(F.lower(F.col("text")))).alias("tok")
         ).filter(F.col("tok") != "")
     elif ngram == 3:
-        toks = _ngram_rows(df, df.columns[0], "text", 3).select(
+        toks = _ngram_rows(df, df.columns[0], 3).select(
             F.concat_ws(" ", "a", "b", "c").alias("tok")
         )
     else:
@@ -2998,7 +2998,7 @@ def source_token_mutual_info(
     """
     from ..functions.hashing import md5_bucket
 
-    trips = _ngram_rows(df, "source", "text", 3).select(
+    trips = _ngram_rows(df, "source", 3).select(
         F.col("id").alias("g"),
         md5_bucket(F.concat_ws(" ", "a", "b", "c")).alias("tok"),
     )
@@ -3105,7 +3105,7 @@ def source_js_divergence_matrix(
     """
     from ..functions.hashing import md5_bucket
 
-    trips = _ngram_rows(df, "source", "text", 3).select(
+    trips = _ngram_rows(df, "source", 3).select(
         F.col("id").alias("g"),
         md5_bucket(F.concat_ws(" ", "a", "b", "c")).alias("tok"),
     )
@@ -3201,7 +3201,7 @@ def kneser_ney_bigram_ppl(
     guide §2.3).  Per-position NLLs round to 9 dp and DECIMAL-sum per
     doc.
     """
-    bp = _ngram_rows(df, "doc_id", "text", 2)
+    bp = _ngram_rows(df, "doc_id", 2)
     c12 = _persist_spillable(
         bp.groupBy("a", "b").agg(F.count("*").cast("bigint").alias("n2"))
     )
@@ -3320,7 +3320,7 @@ def hill_tail_index(
     arithmetic runs on that model-sized frame.  Per-type ln rounds to
     9 dp and sums as DECIMAL.
     """
-    trips = _ngram_rows(df, "doc_id", "text", 3).select(
+    trips = _ngram_rows(df, "doc_id", 3).select(
         F.concat_ws(" ", "a", "b", "c").alias("tok")
     )
     counts = trips.groupBy("tok").agg(F.count("*").cast("bigint").alias("f"))

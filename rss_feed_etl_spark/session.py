@@ -10,7 +10,11 @@ engines (the DuckDB oracle is UTC-naive).
 
 from __future__ import annotations
 
+import atexit
 import os
+import pathlib
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -89,6 +93,30 @@ def get_spark(app_name: str = "rss-feed-etl-spark", cpus: int | None = None) -> 
 
 
 _PYFILES_ADDED: set[int] = set()
+_PACKAGE_ZIP: str | None = None
+
+
+def _package_zip() -> str:
+    """Zip this package's ``.py`` files into a new temp file, once per process.
+
+    ``mkstemp`` names the file, so a zip another process left behind (one
+    that had this pid before, from another checkout) is never picked up,
+    and the file is removed when the interpreter exits.
+    """
+    global _PACKAGE_ZIP
+    if _PACKAGE_ZIP is None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        fd, zip_path = tempfile.mkstemp(prefix="rss_feed_etl_spark-", suffix=".zip")
+        atexit.register(pathlib.Path(zip_path).unlink, missing_ok=True)
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if not fn.endswith(".py"):
+                        continue
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+        _PACKAGE_ZIP = zip_path
+    return _PACKAGE_ZIP
 
 
 def ensure_executors_can_import(spark: SparkSession) -> None:
@@ -98,31 +126,14 @@ def ensure_executors_can_import(spark: SparkSession) -> None:
     ``mapInPandas`` operators (RSS fetch, enrichment, multimodal) pickle
     closures that reference this package by module name — if the driver's
     cwd is not the repo root, Spark's python workers cannot import it.
-    Zipping the package once per process and ``addPyFile``-ing it makes the
-    operators location-independent (works on driver-provided sessions too,
-    since addPyFile is a runtime call).
+    Zipping the package once per process (:func:`_package_zip`) and
+    ``addPyFile``-ing it makes the operators location-independent (works
+    on driver-provided sessions too, since addPyFile is a runtime call).
     """
-    import os
-    import tempfile
-    import zipfile
-
     key = id(spark.sparkContext)
     if key in _PYFILES_ADDED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"rss_feed_etl_spark-{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip())
     _PYFILES_ADDED.add(key)
 
 

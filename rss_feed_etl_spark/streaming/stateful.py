@@ -48,7 +48,7 @@ def sessionize_stream(
 ) -> DataFrame:
     """Assign gap-based session ids to a stream, continuing sessions ACROSS
     micro-batches (the stateful analog of the batch ``sessionize`` query in
-    driver_queries_wave3 — same semantics, state-store-resident last-seen
+    queries/sql.py — same semantics, state-store-resident last-seen
     timestamps instead of a lag window).
     """
     import pandas as pd

@@ -120,7 +120,7 @@ def test_ngram_rows_equal_old_row_builders(docs):
         ).select("id", *[F.col(f"p.{k}").alias(k) for k in names])
 
     for n in (2, 3):
-        new = textstats._ngram_rows(docs, "doc_id", "text", n)
+        new = textstats._ngram_rows(docs, "doc_id", n)
         assert new.columns == old_rows(n).columns
         assert sorted(new.collect()) == sorted(old_rows(n).collect())
 

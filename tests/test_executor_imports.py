@@ -11,7 +11,15 @@ omission without depending on call order.
 """
 
 import ast
+import os
 import pathlib
+import subprocess
+import sys
+import tempfile
+import zipfile
+from types import SimpleNamespace
+
+from rss_feed_etl_spark import session
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "rss_feed_etl_spark"
 PYTHON_ON_EXECUTORS = {"mapInPandas", "pandas_udf"}
@@ -51,7 +59,7 @@ def _outer_functions(tree: ast.Module):
 
 def missing_import_calls(root: pathlib.Path = PKG) -> list[str]:
     out = []
-    for sub in ("operators", "plans"):
+    for sub in ("operators", "plans", "queries"):
         for path in sorted((root / sub).rglob("*.py")):
             tree = ast.parse(path.read_text(), filename=str(path))
             for fn in _outer_functions(tree):
@@ -82,3 +90,49 @@ def test_guard_sees_python_on_executors():
 
 def test_every_python_operator_ships_the_package():
     assert missing_import_calls() == []
+
+
+def _ship(monkeypatch) -> str:
+    """Run ensure_executors_can_import on a stand-in session; return the
+    one path it handed to ``addPyFile``."""
+    monkeypatch.setattr(session, "_PYFILES_ADDED", set())
+    monkeypatch.setattr(session, "_PACKAGE_ZIP", None, raising=False)
+    shipped: list[str] = []
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+    session.ensure_executors_can_import(spark)
+    assert len(shipped) == 1
+    return shipped[0]
+
+
+def test_shipped_zip_is_this_checkout(tmp_path, monkeypatch):
+    """A zip left at the old per-pid path (a recycled pid, another
+    checkout) is never shipped: the workers get the code this process
+    runs."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with zipfile.ZipFile(tmp_path / f"rss_feed_etl_spark-{os.getpid()}.zip", "w") as zf:
+        zf.writestr("rss_feed_etl_spark/session.py", "# another checkout\n")
+    with zipfile.ZipFile(_ship(monkeypatch)) as zf:
+        shipped = zf.read("rss_feed_etl_spark/session.py")
+        names = set(zf.namelist())
+    assert shipped == pathlib.Path(session.__file__).read_bytes()
+    assert "rss_feed_etl_spark/queries/corpus.py" in names
+
+
+def test_shipped_zip_is_removed_at_exit(tmp_path):
+    code = (
+        "import sys, tempfile\n"
+        f"sys.path.insert(0, {str(PKG.parent)!r})\n"
+        f"tempfile.tempdir = {str(tmp_path)!r}\n"
+        "from types import SimpleNamespace\n"
+        "from rss_feed_etl_spark import session\n"
+        "shipped = []\n"
+        "sc = SimpleNamespace(addPyFile=shipped.append)\n"
+        "session.ensure_executors_can_import(SimpleNamespace(sparkContext=sc))\n"
+        "print(shipped[0])\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True
+    ).stdout.strip()
+    assert pathlib.Path(out).parent == tmp_path
+    assert not pathlib.Path(out).exists()
+    assert list(tmp_path.iterdir()) == []

@@ -152,8 +152,8 @@ def test_bigram_logppl_distinct_grain_matches_direct(spark):
         for r in textstats.bigram_logppl(docs).collect()
     }
     # direct per-occurrence reference (the pre-round-11 shape)
-    big = textstats._ngram_rows(docs, "doc_id", "text", 2)
-    c2 = textstats._ngram_rows(docs, "doc_id", "text", 2).groupBy("a", "b").agg(
+    big = textstats._ngram_rows(docs, "doc_id", 2)
+    c2 = textstats._ngram_rows(docs, "doc_id", 2).groupBy("a", "b").agg(
         F.count("*").alias("n2")
     )
     c1 = (

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
-from rss_feed_etl_spark.driver_queries_wave107 import _aug_curation
+from rss_feed_etl_spark.queries.dedup import _aug_curation
 from rss_feed_etl_spark.plans.curation_pipeline import curation_pipeline
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
