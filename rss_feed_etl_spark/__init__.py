@@ -21,6 +21,8 @@ Layout
 - ``plans``      : composed end-to-end pipelines (the reference's entry
                    points as single lazy queries)
 - ``streaming``  : Structured Streaming wrappers (foreachBatch merge)
+- ``queries``    : the registered driver-contract queries, one module per
+                   operator family (``driver_queries`` holds the registry)
 """
 
 __version__ = "0.1.0"

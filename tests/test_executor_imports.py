@@ -92,18 +92,6 @@ def test_every_python_operator_ships_the_package():
     assert missing_import_calls() == []
 
 
-def _ship(monkeypatch) -> str:
-    """Run ensure_executors_can_import on a stand-in session; return the
-    one path it handed to ``addPyFile``."""
-    monkeypatch.setattr(session, "_PYFILES_ADDED", set())
-    monkeypatch.setattr(session, "_PACKAGE_ZIP", None, raising=False)
-    shipped: list[str] = []
-    spark = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
-    session.ensure_executors_can_import(spark)
-    assert len(shipped) == 1
-    return shipped[0]
-
-
 def test_shipped_zip_is_this_checkout(tmp_path, monkeypatch):
     """A zip left at the old per-pid path (a recycled pid, another
     checkout) is never shipped: the workers get the code this process
@@ -111,11 +99,15 @@ def test_shipped_zip_is_this_checkout(tmp_path, monkeypatch):
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     with zipfile.ZipFile(tmp_path / f"rss_feed_etl_spark-{os.getpid()}.zip", "w") as zf:
         zf.writestr("rss_feed_etl_spark/session.py", "# another checkout\n")
-    with zipfile.ZipFile(_ship(monkeypatch)) as zf:
-        shipped = zf.read("rss_feed_etl_spark/session.py")
-        names = set(zf.namelist())
-    assert shipped == pathlib.Path(session.__file__).read_bytes()
-    assert "rss_feed_etl_spark/queries/corpus.py" in names
+    monkeypatch.setattr(session, "_PYFILES_ADDED", set())
+    monkeypatch.setattr(session, "_PACKAGE_ZIP", None, raising=False)
+    shipped: list[str] = []
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+    session.ensure_executors_can_import(spark)
+    assert len(shipped) == 1
+    with zipfile.ZipFile(shipped[0]) as zf:
+        assert zf.read("rss_feed_etl_spark/session.py") == pathlib.Path(session.__file__).read_bytes()
+        assert "rss_feed_etl_spark/queries/corpus.py" in zf.namelist()
 
 
 def test_shipped_zip_is_removed_at_exit(tmp_path):
