@@ -45,28 +45,28 @@ HEADLINE = [
     "decontaminate_splits",
     "semantic_dedup_pairs",
     "bigram_logppl",
-    # corpus-hygiene + structural scoring (waves 25-26)
+    # corpus-hygiene + structural scoring (textstats, graph, eventanalytics)
     "boilerplate_removed",
     "oov_rate_scores",
     "item_pagerank",
     "session_paths_top",
-    # selection / fingerprint / stats additions (waves 31-34)
+    # selection / fingerprint / stats (sampling, textstats, sketches, similarity)
     "importance_weights",
     "winnow_fingerprints",
     "countmin_estimates",
     "bootstrap_mean_ci",
     "int8_ann_topk",
-    # decision-support path (wave 15)
+    # decision-support path (decision_support)
     "large_order_customers",
     "sole_late_suppliers",
-    # round-3 flagships: paragraph-grain dedup, bloom-pruned join,
+    # dedup / joins / retrieval / linalg: paragraph-grain dedup, bloom-pruned join,
     # batched retrieval eval, distributed covariance, telescoped attribution
     "paragraph_dedup",
     "bloom_prune_revenue",
     "search_rank_metrics",
     "embedding_covariance",
     "time_decay_attribution",
-    # round-4 flagships: guarded decontamination (broadcast variant),
+    # sampling / textstats / similarity: guarded decontamination (broadcast variant),
     # Gopher gates, repetition metrics, DSIR selection, exact contamination,
     # embedding format evals, bitext mining, CCNet tiers, response repair
     "decontaminate_broadcast_holdout",
@@ -79,21 +79,21 @@ HEADLINE = [
     "bitext_mining_pairs",
     "ccnet_ppl_buckets",
     "llm_response_repair",
-    # waves 64-70: layout advisor, hashed features, robust outliers,
+    # layout, features, profiling, timeseries: layout advisor, hashed features, robust outliers,
     # changepoints, Arrow compression-ratio path
     "zorder_layout_advisor",
     "feature_hash_encode",
     "mad_outliers",
     "cusum_changepoints",
     "compression_ratio_stats",
-    # waves 71-92: sequential-fold forecast, graph peeling, mergeable
+    # timeseries, graph, dedup, eventanalytics: sequential-fold forecast, graph peeling, mergeable
     # minhash rollup, funnel A/B, whole-table checksums
     "holt_forecast",
     "kcore_membership",
     "source_jaccard_matrix",
     "funnel_ab_compare",
     "table_checksums",
-    # round-5 flagships: trained-quantizer IVF, 1-bit sign ANN, next-item
+    # similarity / eventanalytics / sampling: trained-quantizer IVF, 1-bit sign ANN, next-item
     # pair mining, IPF mixture raking, grid-exact dim normalization
     "ann_cosine_topk_ivf_kmeans",
     "binary_sign_ann_topk",
@@ -106,7 +106,7 @@ HEADLINE = [
     "kcenter_diversity_sample",
     "embedding_retrieval_auc",
     "retrieval_pr_curve",
-    # round-6 flagships: PQ ANN (trained codebooks + ADC shortlist +
+    # similarity / sampling / multimodal / textstats: PQ ANN (trained codebooks + ADC shortlist +
     # exact rerank), banded semantic split decontamination, pooled video
     # embeddings, tokenizer fertility, split OOV skew
     "pq_ann_topk",
@@ -115,16 +115,17 @@ HEADLINE = [
     "tokenizer_fertility_by_lang",
     "split_oov_rate",
     "source_scorecard",
-    # round-7 capstone: the end-to-end curation funnel (quality gate ->
+    # the capstone: the end-to-end curation funnel (quality gate ->
     # exact + near dedup -> exact + semantic decontamination -> mixture
     # weights -> packing) composed over the planted-leak corpus
     "curation_pipeline",
-    # round-7 wave 108: IVF-PQ composed ANN (probed-cell ADC), packing
+    # similarity / textstats / multimodal: IVF-PQ composed ANN (probed-cell ADC), packing
     # fragmentation diagnostics, byte-exact media dedup
     "ivfpq_ann_topk",
     "packing_fragmentation",
     "media_exact_dedup",
-    # round-7 waves 112-124: lakehouse layout economics (zone-map skip,
+    # layout, sampling, textstats, multimodal, retrieval, linalg, similarity:
+    # lakehouse layout economics (zone-map skip,
     # salting plan), mixture planning (DoReMi step, epoch budget),
     # interpolated trigram LM, per-eval-doc contamination degree,
     # perceptual-hash media near-dup, exact Shapley attribution, QL
@@ -154,7 +155,8 @@ HEADLINE = [
     "query_likelihood_search",
     "temperature_scaling_fit",
     "length_matched_pairs",
-    # round-7 waves 125-130: causal estimators, nonparametric tests,
+    # eventanalytics, profiling, textstats, retrieval, graph: causal
+    # estimators, nonparametric tests,
     # index-engineering planners, graph centrality, in-engine ML
     "ipw_treatment_effect",
     "regression_discontinuity",
@@ -168,12 +170,13 @@ HEADLINE = [
     "degree_assortativity",
     "logistic_1d_fit",
     "ucb1_ranking",
-    # round-7 waves 131-132: selective-prediction risk, robust dispersion,
+    # profiling / eventanalytics: selective-prediction risk, robust dispersion,
     # arena-style pairwise strength
     "risk_coverage_curve",
     "gini_mean_difference",
     "bradley_terry_ranks",
-    # round-8 waves 134-136: ranker agreement, distribution shift,
+    # retrieval, profiling, textstats, timeseries, similarity, sketches:
+    # ranker agreement, distribution shift,
     # source divergence, drift trajectory, hubness
     "rbo_bm25_vs_ql",
     "wasserstein_length_shift",
@@ -191,26 +194,26 @@ HEADLINE = [
     "filtered_ann_recall",
     "t_closeness_report",
     "kmv_distinct_estimate",
-    # round-9 wave 142: the streaming <-> curation composition capstone
+    # streaming (sql family): the streaming <-> curation composition capstone
     # (foreachBatch quality+dedup gates over the epoch sink, folded)
     "incremental_curation_fold",
-    # round-10 waves 147-149: near-dup stage in the streaming fold,
+    # sql, retrieval, layout, functions: near-dup stage in the streaming fold,
     # retrieve-then-rerank, salted skew-proof profile
     "incremental_neardup_fold",
     "cross_encoder_rerank",
     "salted_props_profile",
     "sft_chat_export",
-    # round-9 waves 143-144: ranker pairwise agreement, kNN error
+    # retrieval / similarity / sampling / linalg: ranker pairwise agreement, kNN error
     # structure, UniMax budget allocation, embedding MMD matrix
     "kendall_tau_rankers",
     "knn_label_confusion",
     "unimax_allocation",
     "embedding_mmd_matrix",
-    # round-9 wave 145: bloom sizing planner (one distinct-count agg),
+    # sketches / packing: bloom sizing planner (one distinct-count agg),
     # truncation loss curve (distinct-length-grain grid walk)
     "bloom_filter_plan",
     "truncation_loss_curve",
-    # round-9 wave 146: Ljung-Box whiteness (shared day-grain collapse),
+    # timeseries / textstats: Ljung-Box whiteness (shared day-grain collapse),
     # Hill tail index (trigram counts + TakeOrdered top-(k+1))
     "ljung_box_whiteness",
     "hill_tail_index",
@@ -379,7 +382,7 @@ def bench_degenerate_dedup(spark) -> dict[str, float]:
             "degenerate_boilerplate_template",
             lambda: _ts.remove_boilerplate(tdocs),
         ),
-        # one-hot-key salted profile (wave 149): 500k rows ALL under one
+        # one-hot-key salted profile (layout): 500k rows ALL under one
         # key — unsalted collect-state groupBy would build a single
         # 500k-row reducer task; the (key, pid) stage-1 salt bounds every
         # task's state at one scan partition
@@ -432,19 +435,19 @@ SCALE_QUERIES = [
     "semantic_dedup_pairs",
     "boilerplate_removed",
     "paragraph_dedup",
-    # retrieval/ANN/decontamination path (round 4): the r3 verdict's
-    # suspicious movers — the curve proves the plans, not just the dedup ones,
-    # stay ≲ linear in data volume
+    # retrieval/ANN/decontamination path (retrieval, similarity, sampling):
+    # the curve proves these plans, not just the dedup ones, stay ≲ linear
+    # in data volume
     "bm25_search",
     "ann_cosine_topk_ivf",
     "int8_ann_topk",
     "decontaminate_splits",
-    # Arrow map-only path (wave 69): zlib ratio per doc — the curve should
+    # Arrow map-only path (textstats): zlib ratio per doc — the curve should
     # be ~linear since the operator never shuffles
     "compression_ratio_stats",
-    # doc-grain feature hashing (wave 65): explode + one (doc, bucket) agg
+    # doc-grain feature hashing (features): explode + one (doc, bucket) agg
     "feature_hash_encode",
-    # round-5 additions — the five heaviest r4 headline entries that had no
+    # the five heaviest headline entries that had no
     # scale measurement (VERDICT r4 #5).  repeated_ngram_stats is map-only;
     # source_jaccard aggregates 128 mins in one groupBy; dsir is a
     # broadcast-model bucket count; bitext is a banded candidate join;
@@ -460,11 +463,11 @@ SCALE_QUERIES = [
     # quadratic, which is why the banded form exists)
     "bitext_mining_pairs_banded",
     "kcore_membership",
-    # round-5 flagships over the 10x embeddings: 1-bit retrieve->rerank
+    # similarity / profiling over the 10x embeddings: 1-bit retrieve->rerank
     # and the grid-exact dim-stats aggregate
     "binary_sign_ann_topk",
     "embedding_dim_stats",
-    # round-6 additions (VERDICT r5 #6) — the greedy/iterative flagships:
+    # the greedy/iterative entries (clustering, similarity, sampling):
     # k-center is k map-only scans + a distributed argmax per step (the
     # curve proves the per-scan cost is flat; the k-dependence is by
     # design), MMR is retrieve-dominated (the greedy loop runs on a
@@ -473,26 +476,26 @@ SCALE_QUERIES = [
     "kcenter_diversity_sample",
     "mmr_diversified_topk",
     "ipf_source_lang_weights",
-    # round-6 wave flagships: PQ ANN (training collects are fixed-k model
+    # similarity / sampling / multimodal: PQ ANN (training collects are fixed-k model
     # state; the scoring scan is map-only), banded split decontamination
     # (bucket-bounded candidate join over 10x embeddings), and the pooled
     # video embeddings (Arrow map pass + (media, dim) grouped pooling)
     "pq_ann_topk",
     "semantic_split_contamination",
     "video_embedding_pool",
-    # wave 106 + the remaining round-6 doc-grain flagships: all linear
+    # the textstats doc-grain entries: all linear
     # corpus scans into source/lang-grain aggregates — the curve should
     # track data volume
     "source_scorecard",
-    # round-7 capstone: every stage is a guarded/banded operator, so the
+    # the capstone: every stage is a guarded/banded operator, so the
     # composed funnel should inherit their at-worst-linear curves
     "curation_pipeline",
-    # round-7 IVF-PQ: fixed codegen cost + probed-cell map-only scan —
+    # IVF-PQ (similarity): fixed codegen cost + probed-cell map-only scan —
     # the curve should look like pq_ann_topk's (mostly flat at toy SFs)
     "ivfpq_ann_topk",
     "tokenizer_fertility_by_lang",
     "split_oov_rate",
-    # round-7 waves 112-124 flagships: the corpus-scan-heavy new entries.
+    # textstats, sampling, multimodal, retrieval, layout: the corpus-scan-heavy entries.
     # trigram LM is three token-grain count joins; contamination degree is
     # a shingle-code semi-join; phash near-dup is a banded hamming join;
     # QL search and coherence are token-grain aggregates; the zone-map
@@ -506,18 +509,18 @@ SCALE_QUERIES = [
     "doremi_mixture_step",
     "alignment_uniformity",
     "label_knn_accuracy",
-    # waves 126-130 scan-heavy additions: trigram-type Good-Turing
+    # textstats, retrieval, profiling, graph scan-heavy entries: trigram-type Good-Turing
     # (token-grain counts), posting-list gaps (term-partitioned lag),
     # the two-scan logistic fit, and the HITS half-step joins
     "good_turing_mass",
     "postinglist_compression_plan",
     "logistic_1d_fit",
     "hits_authorities",
-    # wave 131-132: distinct-value-grain dispersion and the pair-grain
+    # profiling / eventanalytics: distinct-value-grain dispersion and the pair-grain
     # MM iterations (both collapse the event stream before any window)
     "gini_mean_difference",
     "bradley_terry_ranks",
-    # round-8 waves 134-136 scan-heavy additions: W1 is a
+    # profiling, textstats, similarity scan-heavy entries: W1 is a
     # distinct-length-grain grid walk, MI/JSD are (source, trigram)
     # count passes with token-keyed joins, hubness rides the two-stage
     # cosine_topk — all should track data volume
@@ -528,19 +531,19 @@ SCALE_QUERIES = [
     "query_clarity_score",
     "kneser_ney_bigram_ppl",
     "triplet_margin_stats",
-    # round-9 capstone: per-batch work is a gate scan + batch-grain
+    # the streaming capstone (sql): per-batch work is a gate scan + batch-grain
     # fingerprint aggregate, the fold is one corpus-grain groupBy-min —
     # every piece linear in data volume, so the composed curve should be
     # too (landing-file writes included: they scale with the corpus)
     "incremental_curation_fold",
-    # round-10 wave 147: the near-dup stage adds one banded signature
+    # streaming near-dup fold (sql): the near-dup stage adds one banded signature
     # pass per batch plus a bucket-grain min fold — both linear
     "incremental_neardup_fold",
-    # round-10 wave 149: the salted profile's stage-1 exchange is
+    # salted profile (layout): the stage-1 exchange is
     # row-grain (linear) on a balanced composite key; stage 2 is
     # set-sized — the entry proves the salt holds at 10x volume
     "salted_props_profile",
-    # round-9 waves 143-144 corpus-scan entries: the confusion matrix
+    # similarity / sampling / linalg corpus-scan entries: the confusion matrix
     # rides the kNN pair scan, UniMax is one token-count aggregate, and
     # the MMD sample extraction is one two-stage top-m scan (the pair
     # terms themselves are bounded at m^2 x L^2).  kendall_tau_rankers
@@ -549,11 +552,11 @@ SCALE_QUERIES = [
     "knn_label_confusion",
     "unimax_allocation",
     "embedding_mmd_matrix",
-    # wave 145: one exact distinct-count agg / one length-grain collapse —
+    # sketches / packing: one exact distinct-count agg / one length-grain collapse —
     # both should track data volume
     "bloom_filter_plan",
     "truncation_loss_curve",
-    # wave 146: Hill is one trigram-count collapse + a TakeOrdered
+    # textstats: Hill is one trigram-count collapse + a TakeOrdered
     "hill_tail_index",
 ]
 

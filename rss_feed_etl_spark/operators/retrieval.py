@@ -669,7 +669,7 @@ def query_clarity_score(
     gate query expansion or re-ranking spend.
 
     Both models are MLE over word TRIGRAMS (the corpus's unigram
-    vocabulary is too dense to carry signal — the wave-135 discipline);
+    vocabulary is too dense to carry signal, as in ``source_token_mutual_info``);
     the KL sum runs over the feedback set's trigram support, where both
     models are positive by construction.
 

@@ -3308,8 +3308,9 @@ def hill_tail_index(
 
     over frequencies sorted descending (ties → lexicographic type, which
     cannot change the value — tied boundary frequencies are equal).
-    Trigram grain for the wave-135 reason: the synthetic corpus's word
-    vocabulary is ~31 dense types with no tail at all.
+    Trigram grain for the reason ``source_token_mutual_info`` gives: the
+    synthetic corpus's word vocabulary is ~31 dense types with no tail at
+    all.
 
     Output: ONE row ``(k, n_types, f_k1, hill_alpha)``; empty (zero
     rows) when the corpus has fewer than k+1 trigram types.

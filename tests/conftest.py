@@ -1,3 +1,5 @@
+import contextlib
+import io
 import os
 import sys
 
@@ -28,20 +30,20 @@ from rss_feed_etl_spark.session import CODEGEN_CACHE_ENTRIES  # noqa: E402
 @pytest.fixture(scope="session")
 def spark():
     s = (
-        SparkSession.builder.master(os.environ.get("SPARK_GRAFT_TEST_MASTER", "local[8]"))
+        SparkSession.builder.master("local[8]")
         .appName("rss-feed-etl-spark-tests")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_TEST_PARTS", "8"))
-        .config("spark.sql.adaptive.enabled", os.environ.get("SPARK_GRAFT_TEST_AQE", "true"))
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # Round 11: over ~830 tests the session accumulates orphaned
-        # persist/localCheckpoint blocks that clearCache alone cannot
-        # reclaim (the ContextCleaner only unpersists them after a
-        # driver GC surfaces the dead references, and its built-in
-        # periodic GC defaults to every 30 min) — late-alphabet test
-        # files were measuring 3-5x their run-alone time purely from
-        # that debt (test_wave85.py: 27 s alone vs 152 s at position
-        # ~700).  A 2-min periodic GC drains the queue continuously.
+        # Over the ~900-test session, orphaned persist/localCheckpoint
+        # blocks pile up that clearCache alone cannot reclaim: the
+        # ContextCleaner only unpersists them after a driver GC surfaces
+        # the dead references, and its built-in periodic GC defaults to
+        # every 30 min.  Test modules late in the alphabet measured 3-5x
+        # their run-alone time purely from that debt (the k-core peeling
+        # tests: 27 s alone, 152 s at position ~700 of ~830).  A 2-min
+        # periodic GC drains the queue continuously.
         .config("spark.cleaner.periodicGC.interval", "2min")
         # the engine's codegen class cache size (static: set at build)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
@@ -68,3 +70,17 @@ def _module_hygiene(request):
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def skip_without_testdata(table):
+    """Skip the calling test when the testdata table is not under SF_DIR."""
+    if not os.path.exists(f"{SF_DIR}/{table}.parquet"):
+        pytest.skip("testdata not present")
+
+
+def plan_text(df) -> str:
+    """The formatted physical plan of ``df``, as ``explain`` prints it."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()

@@ -2,15 +2,12 @@
 must pass at sf0.001 — guards the checkers themselves (schema drift in
 either the operator output or the checker SQL fails here first)."""
 
-import os
-
 import duckdb
 import pytest
+from conftest import SF_DIR
 
 from rss_feed_etl_spark import driver_queries
 from rss_feed_etl_spark.approx_checks import APPROX_CHECKS
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="module")

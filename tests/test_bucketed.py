@@ -2,23 +2,11 @@
 without an Exchange on the bucketed side — the physical property the 100 TB
 history layout depends on."""
 
-import contextlib
-import io
-import os
-
+from conftest import SF_DIR, plan_text
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.sources import parquet as pio
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_bucketed_agg_and_join_have_no_history_exchange(spark, tmp_path):
@@ -34,12 +22,12 @@ def test_bucketed_agg_and_join_have_no_history_exchange(spark, tmp_path):
 
     try:
         # groupBy on the bucket key: partial+final agg collapse, no shuffle
-        agg_plan = _plan(hist.groupBy("link").agg(F.count(F.lit(1)).alias("n")))
+        agg_plan = plan_text(hist.groupBy("link").agg(F.count(F.lit(1)).alias("n")))
         assert "Exchange" not in agg_plan, agg_plan
 
         # equi-join of two same-bucketed tables: SMJ with no Exchange at all
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        join_plan = _plan(hist.join(batch, "link"))
+        join_plan = plan_text(hist.join(batch, "link"))
         assert "Exchange" not in join_plan, join_plan
         assert "SortMergeJoin" in join_plan
 

@@ -8,13 +8,11 @@ second round recompiled 130 classes.  The session sizes the cache from
 ``session.CODEGEN_CACHE_ENTRIES``; a second round then compiles nothing.
 """
 
-import os
-
-import pytest
-from conftest import SF_DIR
+from conftest import SF_DIR, skip_without_testdata
 
 from rss_feed_etl_spark import driver_queries
 from rss_feed_etl_spark.session import CODEGEN_CACHE_ENTRIES
+
 
 QUERIES = ["scd2_merge", "int8_ann_topk", "bm25_search", "session_paths_top"]
 
@@ -35,8 +33,7 @@ def _round(spark) -> int:
 
 
 def test_second_round_compiles_nothing(spark):
-    if not os.path.exists(f"{SF_DIR}/events.parquet"):
-        pytest.skip("testdata unavailable")
+    skip_without_testdata("events")
     conf = spark.sparkContext.getConf().get("spark.sql.codegen.cache.maxEntries")
     assert conf == str(CODEGEN_CACHE_ENTRIES)
     # as tune_session sets it: the class name does not carry the codegen

@@ -13,6 +13,7 @@ from __future__ import annotations
 import ast
 import json
 import pathlib
+import re
 import sys
 
 from rss_feed_etl_spark import driver_queries as dq
@@ -67,7 +68,6 @@ def test_sampled_loader_reads_correctness_artifacts():
 
 def test_readme_query_count_matches_registry():
     # the README's "N queries" line went stale two rounds running; pin it
-    import re
 
     readme = (REPO / "README.md").read_text()
     m = re.search(r"\((\d+) queries;", readme)
@@ -152,3 +152,33 @@ def test_registry_is_one_module_per_family():
         family_names += names
     base = _registered_in(PKG / "driver_queries.py")
     assert sorted(base + family_names) == sorted(registered)
+
+
+def test_tests_are_one_module_per_operator():
+    tests = REPO / "tests"
+    assert not list(tests.glob("test_wave*.py"))
+    round_named = [
+        p.name
+        for p in tests.glob("test_*.py")
+        if re.search(r"_r\d+$", p.stem) or re.match(r"test_r\d+_", p.name)
+    ]
+    assert not round_named
+
+
+def test_no_test_module_binds_a_name_twice():
+    # a merged module that binds a name twice silently shadows the first
+    # test, fixture or helper
+    twice = []
+    for path in sorted((REPO / "tests").glob("*.py")):
+        seen: set[str] = set()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            else:
+                continue
+            twice += [f"{path.name}:{n}" for n in names if n in seen]
+            seen.update(names)
+    assert not twice

@@ -2,14 +2,11 @@
 (a) leave results unchanged on a normal corpus and (b) keep degenerate
 corpora — the 100 TB failure mode — from generating quadratic pair lists."""
 
-import os
-
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import dedup, similarity
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _identical_corpus(spark, n=500):

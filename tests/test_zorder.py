@@ -5,6 +5,7 @@ row-group pruning skip data for multi-dimension predicates."""
 import glob
 
 import pyarrow.parquet as pq
+from conftest import plan_text
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.sources import parquet as pio
@@ -67,8 +68,6 @@ def test_zordered_layout_prunes_both_dimensions(spark, tmp_path):
 
 
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from pyspark.sql import functions as F
-
     from rss_feed_etl_spark.sources import parquet as pq
 
     df = spark.range(500).select(
@@ -80,9 +79,4 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     assert back.count() == 500
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
     # predicate reaches the ORC scan
-    import contextlib, io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.filter(F.col("k") == 3).explain("formatted")
-    assert "PushedFilters" in buf.getvalue()
+    assert "PushedFilters" in plan_text(back.filter(F.col("k") == 3))
