@@ -670,7 +670,7 @@ def salted_distinct_profile(
     ``(key, pid)`` (row-grain but skew-proof by construction), one on the
     key over set-sized rows.  ``bench.py``'s degenerate section times the
     one-hot-key shape (500k rows, one key) to prove the bound; the pin in
-    ``tests/test_layout.py`` asserts ``SPARK_PARTITION_ID`` feeds the
+    ``tests/test_wave149.py`` asserts ``SPARK_PARTITION_ID`` feeds the
     first aggregate so a refactor cannot silently drop the salt.
     """
     staged = df.select(

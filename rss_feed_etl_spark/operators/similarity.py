@@ -1141,7 +1141,7 @@ def bitext_mining_pairs_brute(
     SCALE WARNING — this sweep is deliberately |A|x|B| QUADRATIC (the
     round-5 bench measured 56x pair growth at 10x data, the expected
     |A|·|B|).  It exists ONLY as the exact ground truth for the recall
-    bound on the banded plan (tests/test_similarity.py); the production
+    bound on the banded plan (tests/test_wave61.py); the production
     surface and the registered query is :func:`bitext_mining_pairs`,
     which runs the LSH-banded candidate plan (VERDICT r5 item #2).
 
@@ -1543,7 +1543,7 @@ def _pq_codebooks(
       shortest decimal repr, the exact ``F.round``-on-double semantics.
 
     Equality with the previous implementation's codebooks is asserted on
-    all three SFs in ``tests/test_similarity.py`` (exact float equality,
+    all three SFs in ``tests/test_wave104.py`` (exact float equality,
     same dict structure), and the pq/ivfpq parity gates replay the same
     oracle CTEs unchanged.
     """

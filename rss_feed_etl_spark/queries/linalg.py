@@ -58,7 +58,7 @@ def _q_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Registered WITHOUT oracle_sql: the eigenbasis is not SQL-expressible.
 # The driver records the weaker rows-only check; value-level invariants
 # (variance ordering, orthonormality, sign stability) are pinned in
-# tests/test_linalg.py.
+# tests/test_wave40.py.
 _register("pca_projection", _q_pca, None)
 
 

@@ -1161,7 +1161,7 @@ def _q_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # no oracle by design: DuckDB has no zlib.  Driver records the rows-only
-# check; golden parity lives in tests/test_textstats.py (recomputes with the
+# check; golden parity lives in tests/test_wave69.py (recomputes with the
 # same zlib).
 _register("compression_ratio_stats", _q_compression, None)
 

@@ -1,4 +1,6 @@
 import contextlib
+import datetime as dt
+import hashlib
 import io
 import os
 import sys
@@ -22,7 +24,7 @@ if HAVE_PROTOBUF:
         [_PBSHIM] + ([os.environ["PYTHONPATH"]] if os.environ.get("PYTHONPATH") else [])
     )
 
-from pyspark.sql import SparkSession  # noqa: E402
+from pyspark.sql import Row, SparkSession  # noqa: E402
 
 from rss_feed_etl_spark.session import CODEGEN_CACHE_ENTRIES  # noqa: E402
 
@@ -84,3 +86,33 @@ def plan_text(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def ts(s):
+    return dt.datetime.fromisoformat(s)
+
+
+def docs_frame(spark, rows):
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def events_frame(spark, rows):
+    return spark.createDataFrame(
+        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string"
+    )
+
+
+def daily_events(spark, daily, typ="t"):
+    """One event of type ``typ`` per unit of ``daily[d]`` on day ``d`` from 2024-01-01."""
+    rows, eid = [], 0
+    base = dt.datetime(2024, 1, 1)
+    for d, n in enumerate(daily):
+        for _ in range(n):
+            rows.append(Row(event_id=eid, ts=base + dt.timedelta(days=d), event_type=typ))
+            eid += 1
+    return spark.createDataFrame(rows)
+
+
+def md5_arm(u):
+    """The A/B arm (0 or 1) of unit ``u``, as the experiment operators hash it."""
+    return (int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16) % 1_000_000_007) % 2

@@ -17,14 +17,8 @@ from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.functions.arrays import ngrams, ordered_pairs
 from rss_feed_etl_spark.functions.hashing import token_code
-from rss_feed_etl_spark.functions.text import (
-    normalize_unicode,
-    shingles,
-    tokens,
-    word_shingles,
-)
+from rss_feed_etl_spark.functions.text import shingles, tokens, word_shingles
 from rss_feed_etl_spark.operators import textstats
-
 
 TEXTS = [
     "the quick brown fox jumps over the lazy dog",
@@ -207,21 +201,3 @@ def test_no_hand_rolled_tokenizer_or_pair_expansion():
         if "F.slice(m, i + 2" in line or "F.split(F.trim(" in line
     ]
     assert hits == []
-
-
-# ANN recall@k, Cohen's kappa, unicode normalization.
-
-
-def test_normalize_unicode_rules(spark):
-    df = spark.createDataFrame(
-        [("“quote” — dash… a b \x07bell   ws",)],
-        "text string",
-    )
-    got = df.select(normalize_unicode("text").alias("n")).collect()[0]["n"]
-    assert got == '"quote" - dash... a b bell ws'
-
-
-def test_normalize_unicode_ascii_fixed_point(spark):
-    df = spark.createDataFrame([("plain ascii text",)], "text string")
-    got = df.select(normalize_unicode("text").alias("n")).collect()[0]["n"]
-    assert got == "plain ascii text"

@@ -7,9 +7,7 @@ the real fixture data.
 
 from __future__ import annotations
 
-import os
-
-import pytest
+from conftest import SF_DIR, skip_without_testdata
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
@@ -21,12 +19,9 @@ from rss_feed_etl_spark.operators.clustering import (
     _prep,
 )
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
 
 def _emb(spark):
-    if not os.path.exists(f"{SF_DIR}/embeddings.parquet"):
-        pytest.skip("testdata not present")
+    skip_without_testdata("embeddings")
     return _prep(td.load_table(spark, SF_DIR, "embeddings"), "vec_id", "embedding")
 
 

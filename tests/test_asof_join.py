@@ -1,13 +1,9 @@
 """asof_join semantics: backward inclusive match, no-match nulls,
 tolerance cutoff, per-key isolation (pandas merge_asof parity)."""
 
-import datetime as dt
+from conftest import ts
 
 from rss_feed_etl_spark.operators.joins import asof_join
-
-
-def ts(s):
-    return dt.datetime.fromisoformat(s)
 
 
 def _frames(spark):

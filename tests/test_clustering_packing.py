@@ -2,7 +2,6 @@
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import clustering, packing, textstats
 

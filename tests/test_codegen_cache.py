@@ -13,7 +13,6 @@ from conftest import SF_DIR, skip_without_testdata
 from rss_feed_etl_spark import driver_queries
 from rss_feed_etl_spark.session import CODEGEN_CACHE_ENTRIES
 
-
 QUERIES = ["scd2_merge", "int8_ann_topk", "bm25_search", "session_paths_top"]
 
 

@@ -4,12 +4,9 @@ and boilerplate span removal."""
 import math
 
 import pytest
+from conftest import docs_frame, plan_text
 
 from rss_feed_etl_spark.operators import textstats
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
 def test_oov_rate_against_budgeted_vocab(spark):
@@ -17,7 +14,7 @@ def test_oov_rate_against_budgeted_vocab(spark):
     rows = [(i, "a b a b") for i in range(5)] + [(99, "a b rare")]
     out = {
         r["doc_id"]: r
-        for r in textstats.oov_rate(_docs(spark, rows), min_count=2).collect()
+        for r in textstats.oov_rate(docs_frame(spark, rows), min_count=2).collect()
     }
     assert out[0]["n_oov"] == 0 and out[0]["oov_rate"] == 0.0
     assert out[99]["n_tokens"] == 3 and out[99]["n_oov"] == 1
@@ -29,7 +26,7 @@ def test_oov_vocab_size_cap_deterministic_ties(spark):
     # two ("a", "b") on the count-tie.
     rows = [(1, "a b c d"), (2, "a b c d")]
     out = textstats.oov_rate(
-        _docs(spark, rows), min_count=1, vocab_size=2
+        docs_frame(spark, rows), min_count=1, vocab_size=2
     ).collect()
     for r in out:
         assert r["n_oov"] == 2  # c, d fell outside the size cap
@@ -37,7 +34,7 @@ def test_oov_vocab_size_cap_deterministic_ties(spark):
 
 def test_token_entropy_extremes(spark):
     rows = [(1, "x x x x"), (2, "a b c d")]
-    out = {r["doc_id"]: r for r in textstats.token_entropy(_docs(spark, rows)).collect()}
+    out = {r["doc_id"]: r for r in textstats.token_entropy(docs_frame(spark, rows)).collect()}
     assert out[1]["entropy"] == 0.0 and out[1]["ttr"] == 0.25
     assert out[2]["entropy"] == pytest.approx(math.log(4), abs=1e-6)
     assert out[2]["ttr"] == 1.0
@@ -52,7 +49,7 @@ def test_zipf_fit_recovers_planted_slope(spark):
         for _ in range(n):
             rows.append((doc, f"tok{rank:02d}"))
             doc += 1
-    df = _docs(spark, rows)
+    df = docs_frame(spark, rows)
     out = textstats.zipf_fit(df, top=20).collect()[0]
     assert out["n_terms"] == 20
     assert out["slope"] == pytest.approx(-1.0, abs=0.02)
@@ -62,7 +59,7 @@ def test_hot_shingles_and_removal(spark):
     banner = "subscribe to our newsletter"
     rows = [(i, f"{banner} body{i} text{i} unique{i}") for i in range(10)]
     rows.append((100, "totally organic content here"))
-    df = _docs(spark, rows)
+    df = docs_frame(spark, rows)
 
     hot = textstats.hot_shingles(df, k=3, min_docs=10)
     shingles = {r["shingle"] for r in hot.collect()}
@@ -84,7 +81,7 @@ def test_hot_shingles_and_removal(spark):
 def test_remove_boilerplate_can_empty_a_document(spark):
     rows = [(i, "the same exact text") for i in range(5)]
     out = textstats.remove_boilerplate(
-        _docs(spark, rows), k=3, min_docs=5
+        docs_frame(spark, rows), k=3, min_docs=5
     ).collect()
     for r in out:
         assert r["clean_text"] == "" and r["n_removed"] == 4
@@ -98,7 +95,7 @@ def test_remove_boilerplate_universal_template(spark):
     broadcast-semi-joins the template-grain hot set."""
     tmpl = "sign up for the daily newsletter today"
     rows = [(i, f"{tmpl} body{i} tail{i}") for i in range(40)]
-    df = _docs(spark, rows)
+    df = docs_frame(spark, rows)
     out = {
         r["doc_id"]: r
         for r in textstats.remove_boilerplate(df, k=3, min_docs=40).collect()
@@ -109,12 +106,6 @@ def test_remove_boilerplate_universal_template(spark):
         assert out[i]["n_removed"] == 7  # the whole template, nothing else
 
     # plan shape: cached (shingle,id) grain + broadcast LEFT-SEMI hot set
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        textstats.remove_boilerplate(df, k=3, min_docs=40).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(textstats.remove_boilerplate(df, k=3, min_docs=40))
     assert "InMemoryTableScan" in plan
     assert "LeftSemi" in plan and "Broadcast" in plan

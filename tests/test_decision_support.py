@@ -2,8 +2,6 @@
 adaptations) on hand-built frames, plus plan-shape checks for the join
 strategies they are designed around."""
 
-from __future__ import annotations
-
 import datetime as dt
 
 from conftest import SF_DIR, plan_text
@@ -104,69 +102,3 @@ def test_decision_support_plan_shapes(spark):
     assert "LeftAnti" in anti and "BroadcastHashJoin" in anti
     topk = plan_text(qs["large_order_customers"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in topk and "BroadcastHashJoin" in topk
-
-
-# Exposure Gini and discount elasticity.
-
-
-def test_elasticity_recovers_planted_slope(spark):
-    # quantity = 40 - 2*discount_pct exactly -> slope -2, r2 = 1
-    rows = []
-    i = 0
-    for pct in range(0, 11):
-        for _ in range(10):
-            rows.append(
-                Row(l_orderkey=i, l_quantity=float(40 - 2 * pct),
-                    l_discount=pct / 100.0)
-            )
-            i += 1
-    out = ds.discount_elasticity(spark.createDataFrame(rows)).collect()[0]
-    assert abs(out["slope_per_pct"] - (-2.0)) < 1e-6
-    assert abs(out["intercept"] - 40.0) < 1e-6
-    assert abs(out["r2"] - 1.0) < 1e-6
-
-
-def test_elasticity_no_relationship_r2_zero(spark):
-    rows = []
-    for i in range(100):
-        rows.append(
-            Row(l_orderkey=i, l_quantity=float(10 + (i * 17) % 7),
-                l_discount=((i * 31) % 11) / 100.0)
-        )
-    out = ds.discount_elasticity(spark.createDataFrame(rows)).collect()[0]
-    assert abs(out["r2"]) < 0.1
-
-
-# Revenue bridge and FK readability.
-
-
-def test_revenue_bridge_effects_sum_to_delta(spark):
-    d_old = dt.date(2024, 1, 5)
-    d_new = dt.date(2024, 12, 20)
-    # anchor rows pin the date range
-    li = [
-        # brand B1: volume doubles at same price 10 -> pure volume effect
-        Row(l_partkey=1, l_quantity=10.0, l_extendedprice=100.0,
-            l_discount=0.0, l_shipdate=d_old),
-        Row(l_partkey=1, l_quantity=20.0, l_extendedprice=200.0,
-            l_discount=0.0, l_shipdate=d_new),
-        # brand B2: same volume, price 10 -> 15 -> pure price effect
-        Row(l_partkey=2, l_quantity=10.0, l_extendedprice=100.0,
-            l_discount=0.0, l_shipdate=d_old),
-        Row(l_partkey=2, l_quantity=10.0, l_extendedprice=150.0,
-            l_discount=0.0, l_shipdate=d_new),
-    ]
-    part = [Row(p_partkey=1, p_brand="B1"), Row(p_partkey=2, p_brand="B2")]
-    out = {
-        r["brand"]: r
-        for r in ds.revenue_bridge(
-            spark.createDataFrame(li), spark.createDataFrame(part)
-        ).collect()
-    }
-    b1 = out["B1"]
-    assert b1["volume_effect"] == 100.0 and b1["price_effect"] == 0.0
-    b2 = out["B2"]
-    assert b2["volume_effect"] == 0.0 and b2["price_effect"] == 50.0
-    for r in out.values():
-        assert abs(r["volume_effect"] + r["price_effect"] - r["delta"]) < 0.01
-        assert abs(r["delta"] - (r["rev_new"] - r["rev_old"])) < 0.01

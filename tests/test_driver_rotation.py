@@ -154,20 +154,9 @@ def test_registry_is_one_module_per_family():
     assert sorted(base + family_names) == sorted(registered)
 
 
-def test_tests_are_one_module_per_operator():
-    tests = REPO / "tests"
-    assert not list(tests.glob("test_wave*.py"))
-    round_named = [
-        p.name
-        for p in tests.glob("test_*.py")
-        if re.search(r"_r\d+$", p.stem) or re.match(r"test_r\d+_", p.name)
-    ]
-    assert not round_named
-
-
 def test_no_test_module_binds_a_name_twice():
-    # a merged module that binds a name twice silently shadows the first
-    # test, fixture or helper
+    # a module that binds a name twice silently shadows the first test,
+    # fixture or helper
     twice = []
     for path in sorted((REPO / "tests").glob("*.py")):
         seen: set[str] = set()

@@ -1,26 +1,10 @@
-"""Tests of ``operators/eventanalytics.py``."""
-
-from __future__ import annotations
+"""Wave-13 operators: funnel, retention cohorts, histogram, deciles."""
 
 import datetime
-import datetime as dt
-import hashlib
-import math
-import random
 
-import pytest
 from pyspark.sql import Row
 
-from rss_feed_etl_spark.operators import (
-    eventanalytics,
-    eventanalytics as ea,
-    graph,
-    timeseries as ts,
-)
-from rss_feed_etl_spark.operators.eventanalytics import click_position_bias
-
-
-# Funnel, retention cohorts, histogram, deciles.
+from rss_feed_etl_spark.operators import eventanalytics as ea
 
 
 def _ev(i, u, t, typ, v=1.0):
@@ -101,1357 +85,3 @@ def test_last_touch_attribution_rules(spark):
     out = {r["source"]: (r["n_conversions"], r["total_value"]) for r in
            ea.last_touch_attribution(events, ["view", "click"], max_age_days=7).collect()}
     assert out == {"click": (2, 30.0), "direct": (2, 12.0)}
-
-
-# Curriculum shards and time-decayed popularity.
-
-
-def test_decayed_popularity_halves_per_half_life(spark):
-    rows = [
-        (1, datetime.datetime(2024, 1, 15), '{"k": 1}'),  # now: weight 1
-        (2, datetime.datetime(2024, 1, 8), '{"k": 2}'),   # one half-life ago: 0.5
-    ]
-    ev = spark.createDataFrame(rows, "event_id bigint, ts timestamp, props string")
-    out = {r["item"]: r for r in ea.decayed_popularity(ev, half_life_days=7.0).collect()}
-    assert out[1]["score"] == pytest.approx(1.0, abs=1e-6)
-    assert out[2]["score"] == pytest.approx(0.5, abs=1e-6)
-
-
-def test_decayed_popularity_sums_per_item(spark):
-    rows = [
-        (1, datetime.datetime(2024, 1, 15), '{"k": 9}'),
-        (2, datetime.datetime(2024, 1, 15), '{"k": 9}'),
-    ]
-    ev = spark.createDataFrame(rows, "event_id bigint, ts timestamp, props string")
-    out = ea.decayed_popularity(ev).collect()
-    assert len(out) == 1
-    assert out[0]["n_events"] == 2
-    assert out[0]["score"] == pytest.approx(2.0, abs=1e-6)
-
-
-# Stickiness, churn,
-# new-vs-returning, basket lift.
-
-
-def _events(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    )
-
-
-def _d(day, hour=0):
-    return datetime.datetime(2024, 1, day, hour)
-
-
-def test_daily_stickiness_trailing_window(spark):
-    # u1 active days 1 and 3; u2 active day 3 only.
-    rows = [(1, _d(1), 1, "v"), (2, _d(3), 1, "v"), (3, _d(3), 2, "v")]
-    out = {r["day"]: r for r in ea.daily_stickiness(_events(spark, rows), window_days=7).collect()}
-    assert out["2024-01-01"]["dau"] == 1 and out["2024-01-01"]["window_active"] == 1
-    # day 3's trailing-7 window covers both users
-    assert out["2024-01-03"]["dau"] == 2 and out["2024-01-03"]["window_active"] == 2
-    assert out["2024-01-03"]["stickiness"] == 1.0
-    # only days with activity appear
-    assert "2024-01-02" not in out
-
-
-def test_daily_stickiness_window_expires(spark):
-    rows = [(1, _d(1), 1, "v"), (2, _d(10), 2, "v")]
-    out = {r["day"]: r for r in ea.daily_stickiness(_events(spark, rows), window_days=7).collect()}
-    # day 10 is past u1's 7-day contribution (days 1..7)
-    assert out["2024-01-10"]["window_active"] == 1
-
-
-def test_churned_users_threshold(spark):
-    rows = [(1, _d(1), 1, "v"), (2, _d(10), 2, "v")]
-    out = ea.churned_users(_events(spark, rows), inactive_days=5).collect()
-    assert len(out) == 1
-    assert out[0]["user_id"] == 1 and out[0]["days_inactive"] == 9
-
-
-def test_new_vs_returning_accounting(spark):
-    rows = [
-        (1, _d(1), 1, "v"), (2, _d(2), 1, "v"),  # u1: new day1, returns day2
-        (3, _d(2), 2, "v"),                       # u2: new day2
-    ]
-    out = {r["day"]: r for r in ea.new_vs_returning(_events(spark, rows)).collect()}
-    assert out["2024-01-01"]["new_users"] == 1
-    assert out["2024-01-01"]["returning_users"] == 0
-    assert out["2024-01-02"]["new_users"] == 1
-    assert out["2024-01-02"]["returning_users"] == 1
-
-
-def test_event_type_lift_perfect_cooccurrence(spark):
-    # a and b always co-occur (2 baskets of 2); c alone in 2 baskets.
-    rows = [
-        (1, _d(1), 1, "a"), (2, _d(1), 1, "b"),
-        (3, _d(1), 2, "a"), (4, _d(1), 2, "b"),
-        (5, _d(1), 3, "c"), (6, _d(1), 4, "c"),
-    ]
-    out = {(r["a"], r["b"]): r for r in ea.event_type_lift(_events(spark, rows)).collect()}
-    # lift(a,b) = n_ab * N / (n_a * n_b) = 2*4/(2*2) = 2
-    assert out[("a", "b")]["n_ab"] == 2
-    assert out[("a", "b")]["lift"] == pytest.approx(2.0, abs=1e-6)
-    assert ("a", "c") not in out  # never co-occur -> no row
-
-
-# Largest-remainder allocation, trending items, drop-rate report.
-
-
-def test_trending_flags_burst_over_trailing_week(spark):
-    rows = []
-    base = dt.datetime(2024, 3, 1, 12)
-    # item 1: steady 2/day for 10 days; item 2: 2/day then 20 on day 9
-    for d in range(10):
-        for i in range(2):
-            rows.append((len(rows), base + dt.timedelta(days=d), "{\"k\": 1}"))
-            rows.append((len(rows), base + dt.timedelta(days=d), "{\"k\": 2}"))
-    for i in range(18):
-        rows.append((len(rows), base + dt.timedelta(days=9), "{\"k\": 2}"))
-    ev = spark.createDataFrame(rows, "event_id long, ts timestamp, props string")
-    out = ea.trending_items(ev, top=5)
-    top = out.collect()[0]
-    assert top["item"] == 2 and top["day"] == "2024-03-10"
-    assert top["n"] == 20
-    assert top["ratio"] == 10.0  # 20 vs trailing mean of 2/day
-
-
-# Paragraph-grain dedup, Kaplan-Meier survival, time-decay
-# attribution.
-
-
-# --- kaplan_meier -----------------------------------------------------------
-
-
-def _events_kaplan_meier(spark, rows):
-    return spark.createDataFrame(rows, "event_id bigint, user_id bigint, ts timestamp")
-
-
-def test_kaplan_meier_hand_computed(spark):
-    d0 = dt.datetime(2024, 1, 1)
-    day = dt.timedelta(days=1)
-    rows = [
-        # u1: days 0..2 → duration 2, last day 2 <= 10-3 → event
-        (1, 1, d0), (2, 1, d0 + 2 * day),
-        # u2: days 0..5 → duration 5, event
-        (3, 2, d0), (4, 2, d0 + 5 * day),
-        # u3: days 0..10 → duration 10, last==max → censored
-        (5, 3, d0), (6, 3, d0 + 10 * day),
-        # u4: days 3..5 → duration 2, event
-        (7, 4, d0 + 3 * day), (8, 4, d0 + 5 * day),
-    ]
-    out = {
-        r["duration_days"]: r
-        for r in ea.kaplan_meier(_events_kaplan_meier(spark, rows), censor_days=3).collect()
-    }
-    # at t=2: n=4, d=2 → S=0.5 ; at t=5: n=2, d=1 → 0.25 ; t=10 censored
-    assert out[2]["n_risk"] == 4 and out[2]["n_events"] == 2
-    assert math.isclose(out[2]["survival"], 0.5)
-    assert out[5]["n_risk"] == 2 and math.isclose(out[5]["survival"], 0.25)
-    assert out[10]["n_censored"] == 1 and out[10]["n_events"] == 0
-    assert math.isclose(out[10]["survival"], 0.25)
-
-
-def test_kaplan_meier_survival_monotone_nonincreasing(spark):
-    rng = random.Random(7)
-    d0 = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    for u in range(60):
-        start = rng.randrange(0, 10)
-        span = rng.randrange(0, 15)
-        for k in (0, span):
-            eid += 1
-            rows.append((eid, u, d0 + dt.timedelta(days=start + k)))
-    curve = (
-        ea.kaplan_meier(_events_kaplan_meier(spark, rows), censor_days=2)
-        .orderBy("duration_days")
-        .collect()
-    )
-    survs = [r["survival"] for r in curve]
-    assert all(a >= b - 1e-9 for a, b in zip(survs, survs[1:]))
-    assert all(0.0 <= s <= 1.0 for s in survs)
-
-
-# --- time_decay_attribution -------------------------------------------------
-
-
-def _tda_events(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id bigint, user_id bigint, ts timestamp, event_type string, value double"
-    )
-
-
-def test_time_decay_shares_sum_to_conversions(spark):
-    rng = random.Random(11)
-    d0 = dt.datetime(2024, 1, 1)
-    rows = []
-    n_conv = 0
-    for eid in range(400):
-        et = rng.choice(["view", "click", "purchase", "error"])
-        n_conv += et == "purchase"
-        rows.append(
-            (eid, rng.randrange(20), d0 + dt.timedelta(minutes=rng.randrange(40000)),
-             et, round(rng.uniform(1, 50), 2))
-        )
-    out = ea.time_decay_attribution(
-        _tda_events(spark, rows), source_types=["view", "click"], half_life_days=7.0
-    ).collect()
-    total_credit = sum(r["credited_conversions"] for r in out)
-    assert math.isclose(total_credit, n_conv, abs_tol=0.01)
-
-
-def test_time_decay_recent_touch_earns_more(spark):
-    d0 = dt.datetime(2024, 1, 1)
-    rows = [
-        # view 14 days before conversion, click 1 day before → click's decay
-        # weight is 2^(13/7) ≈ 3.6× the view's
-        (1, 1, d0, "view", 0.0),
-        (2, 1, d0 + dt.timedelta(days=13), "click", 0.0),
-        (3, 1, d0 + dt.timedelta(days=14), "purchase", 100.0),
-    ]
-    out = {r["source"]: r for r in ea.time_decay_attribution(
-        _tda_events(spark, rows), source_types=["view", "click"], half_life_days=7.0
-    ).collect()}
-    assert out["click"]["credited_conversions"] > out["view"]["credited_conversions"]
-    assert math.isclose(
-        out["click"]["credited_value"] + out["view"]["credited_value"], 100.0,
-        abs_tol=0.05,
-    )
-    w_click = 0.5 ** (1 / 7.0)
-    w_view = 0.5 ** (14 / 7.0)
-    assert math.isclose(
-        out["click"]["credited_conversions"],
-        w_click / (w_click + w_view),
-        abs_tol=1e-3,
-    )
-
-
-def test_time_decay_no_touch_goes_direct(spark):
-    d0 = dt.datetime(2024, 1, 1)
-    rows = [(1, 5, d0, "purchase", 40.0)]
-    out = {r["source"]: r for r in ea.time_decay_attribution(
-        _tda_events(spark, rows), source_types=["view", "click"], half_life_days=7.0
-    ).collect()}
-    assert out["direct"]["credited_conversions"] == 1.0
-    assert out["direct"]["credited_value"] == 40.0
-    assert out["view"]["credited_conversions"] == 0.0
-
-
-# EMA smoothing and WOE binning.
-
-
-def test_woe_binning_hand_computed(spark):
-    # bin 1: 3 pos, 1 neg; bin 2: 1 pos, 3 neg; totals P=4, N=4
-    rows = []
-    eid = 0
-    for v, et in [(10.0, "purchase")] * 3 + [(10.0, "view")] + \
-                 [(60.0, "purchase")] + [(60.0, "view")] * 3:
-        eid += 1
-        rows.append((eid, dt.datetime(2024, 1, 1), 1, et, float(v), "{}"))
-    ev = spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    )
-    out = {r["bucket"]: r for r in ea.woe_binning(
-        ev, lo=0.0, hi=100.0, n_bins=2
-    ).collect()}
-    woe1 = math.log((3.5 / 4) / (1.5 / 4))
-    assert math.isclose(out[1]["woe"], round(woe1, 6), abs_tol=1e-6)
-    assert out[1]["n_pos"] == 3 and out[1]["n_neg"] == 1
-    woe2 = math.log((1.5 / 4) / (3.5 / 4))
-    assert math.isclose(out[2]["woe"], round(woe2, 6), abs_tol=1e-6)
-    # symmetric setup: IV contributions equal
-    assert math.isclose(out[1]["iv_contrib"], out[2]["iv_contrib"], abs_tol=1e-6)
-    assert out[1]["iv_contrib"] > 0
-
-
-def test_woe_underflow_overflow_buckets(spark):
-    rows = [(1, dt.datetime(2024, 1, 1), 1, "view", -5.0, "{}"),
-            (2, dt.datetime(2024, 1, 1), 1, "purchase", 600.0, "{}")]
-    ev = spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    )
-    out = {r["bucket"]: r for r in ea.woe_binning(
-        ev, lo=0.0, hi=500.0, n_bins=10
-    ).collect()}
-    assert out[0]["n_neg"] == 1  # underflow
-    assert out[11]["n_pos"] == 1  # overflow
-
-
-# Wilson intervals, transition probabilities, funnel latency.
-
-
-def _ev_wilson_rate_intervals(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    )
-
-
-def test_wilson_interval_hand_computed(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for i in range(40):
-        et = "purchase" if i < 10 else "view"
-        rows.append((i, t0, 1, et, 1.0, '{"k": 3}'))
-    out = ea.wilson_rate_intervals(_ev_wilson_rate_intervals(spark, rows), z=1.96).collect()
-    r = out[0]
-    assert r["segment"] == 3 and r["n"] == 40 and r["n_conv"] == 10
-    p, n, z = 0.25, 40.0, 1.96
-    denom = 1 + z * z / n
-    center = (p + z * z / (2 * n)) / denom
-    half = z * math.sqrt(p * (1 - p) / n + z * z / (4 * n * n)) / denom
-    assert math.isclose(r["ci_lo"], round(center - half, 6), abs_tol=1e-6)
-    assert math.isclose(r["ci_hi"], round(center + half, 6), abs_tol=1e-6)
-    assert 0.0 <= r["ci_lo"] <= r["rate"] <= r["ci_hi"] <= 1.0
-
-
-def test_transition_probs_rows_sum_to_one(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (i, t0 + dt.timedelta(minutes=i), i % 3, ["a", "b", "c"][i % 3], 0.0, "{}")
-        for i in range(60)
-    ]
-    out = graph.transition_probabilities(_ev_wilson_rate_intervals(spark, rows), alpha=1.0).collect()
-    assert len(out) == 9  # dense 3x3 even if some transitions unobserved
-    by_src = {}
-    for r in out:
-        by_src.setdefault(r["src"], 0.0)
-        by_src[r["src"]] += r["p"]
-    for s, tot in by_src.items():
-        assert math.isclose(tot, 1.0, abs_tol=1e-4), s
-
-
-def test_funnel_latency_hand_computed(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        # u1: view at t0, purchase 100s later
-        (1, t0, 1, "view", 0.0, "{}"),
-        (2, t0 + dt.timedelta(seconds=100), 1, "purchase", 0.0, "{}"),
-        # u2: purchase BEFORE any view -> exposed but not converted
-        (3, t0, 2, "purchase", 0.0, "{}"),
-        (4, t0 + dt.timedelta(seconds=50), 2, "view", 0.0, "{}"),
-        # u3: view only
-        (5, t0, 3, "view", 0.0, "{}"),
-        # u4: purchase only -> never exposed, excluded entirely
-        (6, t0, 4, "purchase", 0.0, "{}"),
-    ]
-    r = ea.funnel_latency(_ev_wilson_rate_intervals(spark, rows)).collect()[0]
-    assert r["n_exposed"] == 3
-    assert r["n_converted"] == 1
-    assert math.isclose(r["latency_p50_s"], 100.0)
-
-
-# Diff-in-diff and ordered-pair episodes.
-
-
-def _ev_diff_in_diff(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-    )
-
-
-def test_did_recovers_planted_effect(spark):
-    pre = dt.datetime(2024, 1, 10)
-    post = dt.datetime(2024, 1, 20)
-    rows = []
-    eid = 0
-    for u in range(40):
-        treated = u % 2 == 1
-        for t, is_post in ((pre, False), (post, True)):
-            eid += 1
-            # base 10; time trend +5 post for everyone; +7 treatment effect
-            v = 10.0 + (5.0 if is_post else 0.0)
-            if treated and is_post:
-                v += 7.0
-            rows.append((eid, t, u, "view", v))
-    r = ea.diff_in_diff(_ev_diff_in_diff(spark, rows), split_date="2024-01-16").collect()[0]
-    assert math.isclose(r["did_estimate"], 7.0, abs_tol=1e-6)
-    assert math.isclose(r["treat_post"] - r["treat_pre"], 12.0, abs_tol=1e-6)
-    assert math.isclose(r["ctrl_post"] - r["ctrl_pre"], 5.0, abs_tol=1e-6)
-    # constant cells -> zero variance -> zero SE, CI collapses on estimate
-    assert r["std_err"] == 0.0
-    assert r["ci_lo"] == r["ci_hi"] == 7.0
-
-
-def test_did_se_positive_with_noise(spark):
-    rng = random.Random(4)
-    rows = []
-    eid = 0
-    for u in range(100):
-        for day in (5, 25):
-            eid += 1
-            rows.append(
-                (eid, dt.datetime(2024, 1, day), u, "view",
-                 round(rng.uniform(0, 100), 3))
-            )
-    r = ea.diff_in_diff(_ev_diff_in_diff(spark, rows), split_date="2024-01-16").collect()[0]
-    assert r["std_err"] > 0
-    assert r["ci_lo"] < r["did_estimate"] < r["ci_hi"]
-
-
-def test_episodes_window_boundary(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        # u1: view then purchase 2h later -> inside 24h window
-        (1, t0, 1, "view", 0.0),
-        (2, t0 + dt.timedelta(hours=2), 1, "purchase", 0.0),
-        # u2: view then purchase 30h later -> outside
-        (3, t0, 2, "view", 0.0),
-        (4, t0 + dt.timedelta(hours=30), 2, "purchase", 0.0),
-        # u3: purchase before view -> no episode
-        (5, t0, 3, "purchase", 0.0),
-        (6, t0 + dt.timedelta(hours=1), 3, "view", 0.0),
-        # u4: two qualifying purchases after one view
-        (7, t0, 4, "view", 0.0),
-        (8, t0 + dt.timedelta(hours=1), 4, "purchase", 0.0),
-        (9, t0 + dt.timedelta(hours=2), 4, "purchase", 0.0),
-    ]
-    r = ea.ordered_pair_episodes(_ev_diff_in_diff(spark, rows), within_hours=24).collect()[0]
-    assert r["n_exposed_users"] == 4
-    assert r["n_episode_users"] == 2  # u1 and u4
-    assert r["n_episodes"] == 3
-    assert math.isclose(r["support"], 0.5)
-
-
-def test_episodes_refreshed_by_new_view(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, t0, 1, "view", 0.0),
-        # a second view 40h later refreshes the window
-        (2, t0 + dt.timedelta(hours=40), 1, "view", 0.0),
-        (3, t0 + dt.timedelta(hours=41), 1, "purchase", 0.0),
-    ]
-    r = ea.ordered_pair_episodes(_ev_diff_in_diff(spark, rows), within_hours=24).collect()[0]
-    assert r["n_episode_users"] == 1
-
-
-# Cohort LTV and vocabulary drift.
-
-
-def test_cohort_ltv_cumulative_per_member(spark):
-    t = lambda d, h=0: dt.datetime(2024, 1, d, h)
-    rows = [
-        # cohort Jan-1: users 1,2 (user 2 never purchases)
-        (1, t(1), 1, "view", 0.0),
-        (2, t(1), 2, "view", 0.0),
-        (3, t(1, 5), 1, "purchase", 10.0),
-        (4, t(3), 1, "purchase", 30.0),
-        # cohort Jan-2: user 3
-        (5, t(2), 3, "purchase", 8.0),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-    )
-    out = {(r["cohort_day"], r["offset_days"]): r for r in ea.cohort_ltv(ev).collect()}
-    r0 = out[("2024-01-01", 0)]
-    assert r0["cohort_size"] == 2
-    assert math.isclose(r0["cum_revenue_per_user"], 5.0)  # 10 / 2 members
-    r2 = out[("2024-01-01", 2)]
-    assert math.isclose(r2["cum_revenue_per_user"], 20.0)  # (10+30)/2
-    r3 = out[("2024-01-02", 0)]
-    assert r3["cohort_size"] == 1 and math.isclose(r3["cum_revenue_per_user"], 8.0)
-
-
-def test_cohort_ltv_monotone_nondecreasing(spark):
-    rng = random.Random(6)
-    rows = []
-    for eid in range(600):
-        rows.append(
-            (eid, dt.datetime(2024, 1, 1 + rng.randrange(20)), rng.randrange(30),
-             rng.choice(["view", "purchase"]), round(rng.uniform(1, 20), 2))
-        )
-    ev = spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-    )
-    out = ea.cohort_ltv(ev).toPandas()
-    for _, grp in out.groupby("cohort_day"):
-        vals = list(grp.sort_values("offset_days").cum_revenue_per_user)
-        assert all(a <= b + 1e-9 for a, b in zip(vals, vals[1:]))
-
-
-# CUPED adjustment and inter-event burstiness.
-
-
-def test_cuped_reduces_variance_when_pre_predicts_post(spark):
-    # users with strong pre→post correlation: post = pre + noise.
-    # CUPED should reclaim most of the between-user variance.
-    rnd = random.Random(3)
-    rows = []
-    eid = 0
-    base = dt.datetime(2024, 1, 1)
-    for u in range(400):
-        usage = rnd.uniform(10, 100)  # stable per-user level
-        for d in range(4):  # pre-period events (days 0-3)
-            rows.append(Row(event_id=eid, user_id=u, event_type="x",
-                            ts=base + dt.timedelta(days=d), value=usage + rnd.uniform(-1, 1)))
-            eid += 1
-        for d in range(6, 10):  # post-period events (days 6-9)
-            rows.append(Row(event_id=eid, user_id=u, event_type="x",
-                            ts=base + dt.timedelta(days=d), value=usage + rnd.uniform(-1, 1)))
-            eid += 1
-    out = ea.cuped_adjustment(spark.createDataFrame(rows)).collect()
-    assert len(out) == 2 and {r["arm"] for r in out} == {0, 1}
-    for r in out:
-        assert r["var_reduction_pct"] > 90.0  # pre almost fully predicts post
-        # adjustment recentres but stays in the data's range
-        assert 0 < r["mean_adj"] < 500
-    assert sum(r["n_users"] for r in out) == 400
-
-
-def test_cuped_no_pre_signal_changes_nothing_much(spark):
-    # post independent of pre -> theta ~ 0 -> adj ~ raw, reduction ~ 0
-    rnd = random.Random(8)
-    rows = []
-    eid = 0
-    base = dt.datetime(2024, 1, 1)
-    for u in range(300):
-        rows.append(Row(event_id=eid, user_id=u, event_type="x",
-                        ts=base, value=rnd.uniform(0, 100))); eid += 1
-        rows.append(Row(event_id=eid, user_id=u, event_type="x",
-                        ts=base + dt.timedelta(days=9), value=rnd.uniform(0, 100))); eid += 1
-    out = ea.cuped_adjustment(spark.createDataFrame(rows)).collect()
-    for r in out:
-        assert abs(r["var_reduction_pct"]) < 10.0
-        assert abs(r["mean_adj"] - r["mean_post"]) < 5.0
-
-
-def test_burstiness_separates_metronome_from_bursts(spark):
-    rows, eid = [], 0
-    base = dt.datetime(2024, 1, 1)
-    # metronome: one user, exactly hourly -> sigma 0 -> B = -1
-    for i in range(50):
-        rows.append(Row(event_id=eid, user_id=1, event_type="steady",
-                        ts=base + dt.timedelta(hours=i), value=1.0)); eid += 1
-    # bursty: tight clusters separated by long silences
-    t = base
-    for burst in range(10):
-        for j in range(5):
-            t += dt.timedelta(seconds=1)
-            rows.append(Row(event_id=eid, user_id=2, event_type="bursty",
-                            ts=t, value=1.0)); eid += 1
-        t += dt.timedelta(days=2)
-    out = {r["event_type"]: r for r in
-           ea.interevent_burstiness(spark.createDataFrame(rows)).collect()}
-    assert out["steady"]["burstiness"] == -1.0
-    assert out["steady"]["mean_gap_s"] == 3600.0
-    # 40 one-second gaps + 9 two-day silences: sigma ~ 2x mu -> B ~ 0.36
-    assert out["bursty"]["burstiness"] > 0.3
-    assert out["bursty"]["n_gaps"] == 49
-
-
-def test_burstiness_gaps_are_within_user(spark):
-    # two interleaved users, each strictly hourly: per-user gaps stay
-    # 3600 s even though the merged stream alternates every 30 min
-    rows, eid = [], 0
-    base = dt.datetime(2024, 1, 1)
-    for i in range(20):
-        rows.append(Row(event_id=eid, user_id=1, event_type="t",
-                        ts=base + dt.timedelta(hours=i), value=1.0)); eid += 1
-        rows.append(Row(event_id=eid, user_id=2, event_type="t",
-                        ts=base + dt.timedelta(hours=i, minutes=30), value=1.0)); eid += 1
-    out = ea.interevent_burstiness(spark.createDataFrame(rows)).collect()[0]
-    assert out["mean_gap_s"] == 3600.0
-    assert out["burstiness"] == -1.0
-
-
-# Peak concurrency sweep and positional attribution.
-
-
-def _ev_peak_concurrency(eid, ts, typ="view", uid=1, val=0.0):
-    return Row(event_id=eid, user_id=uid, event_type=typ, ts=ts, value=val)
-
-
-def test_peak_concurrency_counts_overlaps(spark):
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        _ev_peak_concurrency(1, base),                              # 12:00-12:30
-        _ev_peak_concurrency(2, base + dt.timedelta(minutes=10)),   # 12:10-12:40 (2 live)
-        _ev_peak_concurrency(3, base + dt.timedelta(minutes=20)),   # 12:20-12:50 (3 live)
-        _ev_peak_concurrency(4, base + dt.timedelta(minutes=40)),   # 12:40-13:10 (after 1,2 end)
-        _ev_peak_concurrency(5, base + dt.timedelta(hours=5)),      # isolated
-    ]
-    out = ea.peak_concurrency(spark.createDataFrame(rows)).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["day"] == "2024-01-01"
-    assert r["n_started"] == 5
-    assert r["peak_concurrent"] == 3
-
-
-def test_peak_concurrency_back_to_back_no_double_count(spark):
-    # session 2 starts exactly when session 1 ends: half-open [s, e)
-    # means they never overlap — the -1 sorts before the +1
-    base = dt.datetime(2024, 1, 2, 9, 0, 0)
-    rows = [_ev_peak_concurrency(1, base), _ev_peak_concurrency(2, base + dt.timedelta(seconds=1800))]
-    r = ea.peak_concurrency(spark.createDataFrame(rows)).collect()[0]
-    assert r["peak_concurrent"] == 1
-
-
-def test_peak_concurrency_midnight_split(spark):
-    # session 23:50-00:20 contributes to BOTH days
-    rows = [_ev_peak_concurrency(1, dt.datetime(2024, 1, 1, 23, 50, 0))]
-    out = {r["day"]: r for r in ea.peak_concurrency(spark.createDataFrame(rows)).collect()}
-    assert set(out) == {"2024-01-01", "2024-01-02"}
-    assert out["2024-01-01"]["peak_concurrent"] == 1
-    assert out["2024-01-02"]["peak_concurrent"] == 1
-
-
-def test_positional_credit_split(spark):
-    base = dt.datetime(2024, 3, 1)
-    rows = [
-        # user 1: view, click, view, view -> purchase(100):
-        # first view 40, last view 40, middles (click, view) share 20
-        _ev_peak_concurrency(1, base, "view", 1),
-        _ev_peak_concurrency(2, base + dt.timedelta(hours=1), "click", 1),
-        _ev_peak_concurrency(3, base + dt.timedelta(hours=2), "view", 1),
-        _ev_peak_concurrency(4, base + dt.timedelta(hours=3), "view", 1),
-        _ev_peak_concurrency(5, base + dt.timedelta(hours=4), "purchase", 1, 100.0),
-        # user 2: lone purchase -> direct
-        _ev_peak_concurrency(6, base, "purchase", 2, 40.0),
-        # user 3: single click -> 100% of 60
-        _ev_peak_concurrency(7, base, "click", 3),
-        _ev_peak_concurrency(8, base + dt.timedelta(hours=1), "purchase", 3, 60.0),
-    ]
-    out = {
-        r["source"]: r
-        for r in ea.positional_attribution(
-            spark.createDataFrame(rows), ["view", "click"]
-        ).collect()
-    }
-    # user1: views get 40 + 40 + 10 (middle view) = 90; click gets 10
-    # user3: click gets 60
-    assert out["view"]["credited_value"] == 90.0
-    assert out["click"]["credited_value"] == 70.0
-    assert out["direct"]["credited_value"] == 40.0
-    assert out["view"]["n_touches"] == 3 and out["click"]["n_touches"] == 2
-    # credits conserve total conversion value
-    total = sum(r["credited_value"] for r in out.values())
-    assert abs(total - 200.0) < 1e-9
-
-
-def test_positional_stale_touches_go_direct(spark):
-    base = dt.datetime(2024, 3, 1)
-    rows = [
-        _ev_peak_concurrency(1, base, "view", 1),
-        _ev_peak_concurrency(2, base + dt.timedelta(days=30), "purchase", 1, 50.0),
-    ]
-    out = {
-        r["source"]: r
-        for r in ea.positional_attribution(
-            spark.createDataFrame(rows), ["view", "click"], max_age_days=7
-        ).collect()
-    }
-    assert out["direct"]["credited_value"] == 50.0
-    assert "view" not in out
-
-
-# Nelson-Aalen hazard, QTE, and join-order advisor.
-
-
-def test_nelson_aalen_matches_hand_computation(spark):
-    # lifetimes (all events, censor far in past): durations 0,0,1,2
-    # risk sets: t=0: n=4 d=2; t=1: n=2 d=1; t=2: n=1 d=1
-    # H(0)=0.5, H(1)=1.0, H(2)=2.0
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    for u, dur in [(1, 0), (2, 0), (3, 1), (4, 2)]:
-        rows.append(Row(event_id=eid, user_id=u, ts=base)); eid += 1
-        rows.append(Row(event_id=eid, user_id=u, ts=base + dt.timedelta(days=dur))); eid += 1
-    # sentinel user far in future so every real user is censor-eligible
-    rows.append(Row(event_id=eid, user_id=99, ts=base + dt.timedelta(days=100)))
-    df = spark.createDataFrame(rows)
-    out = {r["duration_days"]: r for r in ea.nelson_aalen(df, censor_days=3).collect()}
-    # risk sets: t0 n=5 (sentinel censors AT 0), d=2; t1 n=2 d=1; t2 n=1 d=1
-    assert out[0]["cum_hazard"] == 0.4
-    assert abs(out[1]["cum_hazard"] - round(2 / 5 + 1 / 2, 6)) < 1e-6
-    assert abs(out[2]["cum_hazard"] - round(2 / 5 + 1 / 2 + 1.0, 6)) < 1e-6
-    # SE is monotone nondecreasing like H itself
-    hs = [out[k]["hazard_se"] for k in sorted(out)]
-    assert hs == sorted(hs)
-
-
-def test_nelson_aalen_hazard_below_km_neg_log(spark):
-    # algebraic identity check: H_NA(t) <= -ln(S_KM(t)) for d < n
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    for u, dur in [(1, 0), (2, 1), (3, 1), (4, 3), (5, 4), (6, 6)]:
-        rows.append(Row(event_id=eid, user_id=u, ts=base)); eid += 1
-        rows.append(Row(event_id=eid, user_id=u, ts=base + dt.timedelta(days=dur))); eid += 1
-    rows.append(Row(event_id=eid, user_id=99, ts=base + dt.timedelta(days=60)))
-    df = spark.createDataFrame(rows)
-
-    na = {r["duration_days"]: r["cum_hazard"] for r in ea.nelson_aalen(df).collect()}
-    km = {r["duration_days"]: r["survival"] for r in ea.kaplan_meier(df).collect()}
-    for t, h in na.items():
-        if km[t] and km[t] > 0:
-            assert h <= -math.log(km[t]) + 1e-9
-
-
-# Partition granularity advisor and RFM segments.
-
-
-def test_rfm_segments_place_extreme_users(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    # 50 background users: moderate everything
-    for u in range(50):
-        for d in range(3):
-            rows.append(Row(event_id=eid, user_id=u, value=10.0,
-                            ts=base + dt.timedelta(days=30 + u % 10 + d))); eid += 1
-    # whale: recent, frequent, high-value
-    for d in range(20):
-        rows.append(Row(event_id=eid, user_id=999, value=500.0,
-                        ts=base + dt.timedelta(days=40 + d % 5))); eid += 1
-    out = ea.rfm_segments(spark.createDataFrame(rows)).collect()
-    assert sum(r["n_users"] for r in out) == 51
-    # whale: lowest recency-days score (1), top frequency + monetary (5)
-    whale = [r for r in out if r["f_score"] == 5 and r["m_score"] == 5]
-    assert len(whale) == 1 and whale[0]["r_score"] == 1
-    assert whale[0]["n_users"] == 1
-    assert abs(whale[0]["avg_monetary"] - 10000.0) < 0.01
-
-
-def test_rfm_uniform_users_single_segment(spark):
-    base = dt.datetime(2024, 2, 1)
-    rows = [
-        Row(event_id=i, user_id=i, value=5.0, ts=base) for i in range(40)
-    ]
-    out = ea.rfm_segments(spark.createDataFrame(rows)).collect()
-    # identical users -> identical scores -> exactly one segment
-    assert len(out) == 1
-    assert out[0]["n_users"] == 40
-    assert (out[0]["r_score"], out[0]["f_score"], out[0]["m_score"]) == (1, 1, 1)
-
-
-# Simpson's paradox audit and keyword snippets.
-
-
-def _arm(u):
-    return (int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16) % 1_000_000_007) % 2
-
-
-def test_simpson_constructs_reversal(spark):
-    # classic construction: within both segments arm1 BEATS arm0, but
-    # arm1 is concentrated in the low-value segment, so overall it LOSES
-    base = dt.datetime(2024, 1, 1)
-    a0 = [u for u in range(2000) if _arm(u) == 0][:200]
-    a1 = [u for u in range(2000) if _arm(u) == 1][:200]
-    rows, eid = [], 0
-
-    def emit(users, seg, val):
-        nonlocal eid, rows
-        for u in users:
-            rows.append(Row(event_id=eid, user_id=u, event_type=seg,
-                            ts=base, value=float(val)))
-            eid += 1
-
-    # segment 'hi': arm0 heavy (180 users at 100), arm1 light (20 at 110)
-    emit(a0[:180], "hi", 100.0)
-    emit(a1[:20], "hi", 110.0)
-    # segment 'lo': arm0 light (20 at 10), arm1 heavy (180 at 20)
-    emit(a0[180:200], "lo", 10.0)
-    emit(a1[20:200], "lo", 20.0)
-    out = {r["segment"]: r for r in
-           ea.simpsons_paradox_check(spark.createDataFrame(rows)).collect()}
-    # within both segments arm1 wins
-    assert out["hi"]["diff"] > 0 and out["lo"]["diff"] > 0
-    # overall arm1 loses (mix effect) -> segments disagree with overall
-    assert out["OVERALL"]["diff"] < 0
-    assert out["hi"]["agrees_with_overall"] == 0
-    assert out["lo"]["agrees_with_overall"] == 0
-    assert out["OVERALL"]["agrees_with_overall"] == 1
-
-
-def test_simpson_no_paradox_all_agree(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    for u in range(600):
-        lift = 5.0 if _arm(u) == 1 else 0.0
-        for seg in ("a", "b"):
-            rows.append(Row(event_id=eid, user_id=u, event_type=seg,
-                            ts=base, value=50.0 + lift))
-            eid += 1
-    out = ea.simpsons_paradox_check(spark.createDataFrame(rows)).collect()
-    assert all(r["agrees_with_overall"] == 1 for r in out)
-
-
-# SLO burn rate and user hour divergence.
-
-
-def test_user_hour_divergence_ranks_night_bot_first(spark):
-    rnd = random.Random(6)
-    rows, eid = [], 0
-    base = dt.datetime(2024, 1, 1)
-    # 50 humans: activity concentrated 9-17h
-    for u in range(50):
-        for _ in range(30):
-            hr = rnd.choice(range(9, 18))
-            rows.append(Row(event_id=eid, user_id=u,
-                            ts=base + dt.timedelta(hours=hr, minutes=rnd.randrange(60)))); eid += 1
-    # bot 999: fires exactly at 03:00 every day
-    for d in range(30):
-        rows.append(Row(event_id=eid, user_id=999,
-                        ts=base + dt.timedelta(days=d, hours=3))); eid += 1
-    out = ea.user_hour_divergence(spark.createDataFrame(rows), top_k=5).collect()
-    assert out[0]["user_id"] == 999
-    assert out[0]["kl"] > out[-1]["kl"]
-    assert out[0]["n_events"] == 30
-
-
-def test_user_hour_divergence_min_events_filter(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows = [Row(event_id=i, user_id=1, ts=base + dt.timedelta(hours=i % 24))
-            for i in range(48)]
-    rows += [Row(event_id=100, user_id=2, ts=base)]  # 1 event only
-    out = ea.user_hour_divergence(spark.createDataFrame(rows), min_events=10).collect()
-    assert {r["user_id"] for r in out} == {1}
-
-
-# Association rules and distinctive terms.
-
-
-def _basket(rows, eid, u, day, items):
-    for it in items:
-        rows.append(Row(event_id=eid[0], user_id=u,
-                        ts=dt.datetime(2024, 1, day), props='{"k": %d}' % it))
-        eid[0] += 1
-
-
-def test_association_rules_confidence_is_directional(spark):
-    rows, eid = [], [0]
-    # bread(1) appears in 10 baskets; butter(2) in 4, ALWAYS with bread;
-    # milk(3) in 5 baskets, 1 with bread
-    for d in range(1, 5):
-        _basket(rows, eid, d, d, [1, 2])       # bread+butter x4
-    for d in range(5, 10):
-        _basket(rows, eid, d, d, [1])          # bread alone x5
-    _basket(rows, eid, 10, 10, [1, 3])         # bread+milk
-    for d in range(11, 15):
-        _basket(rows, eid, d, d, [3])          # milk alone x4
-    out = {
-        (r["antecedent"], r["consequent"]): r
-        for r in ea.association_rules(
-            spark.createDataFrame(rows), min_support=0.0, min_confidence=0.0
-        ).collect()
-    }
-    # butter -> bread is certain; bread -> butter is only 40%
-    assert out[("2", "1")]["confidence"] == 1.0
-    assert out[("1", "2")]["confidence"] == 0.4
-    # lift symmetric for a pair
-    assert out[("2", "1")]["lift"] == out[("1", "2")]["lift"]
-    # butter->bread lift: conf(1.0) / P(bread)=10/14
-    assert abs(out[("2", "1")]["lift"] - round(1.0 / (10 / 14), 6)) < 1e-6
-    assert out[("1", "3")]["n_both"] == 1
-
-
-def test_association_rules_thresholds_prune(spark):
-    rows, eid = [], [0]
-    for d in range(1, 11):
-        _basket(rows, eid, d, d, [1, 2])
-    _basket(rows, eid, 20, 20, [1, 3])  # one rare pair
-    out = ea.association_rules(
-        spark.createDataFrame(rows), min_support=0.15, min_confidence=0.5
-    ).collect()
-    pairs = {(r["antecedent"], r["consequent"]) for r in out}
-    assert ("1", "2") in pairs and ("2", "1") in pairs
-    assert ("1", "3") not in pairs  # support 1/11 < 0.15
-
-
-# Panel user slopes and Kitagawa decomposition.
-
-
-def test_panel_slopes_detect_universal_growth(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    # every user's daily value grows by exactly 2/day from a personal base
-    for u in range(40):
-        for d in range(5):
-            rows.append(Row(event_id=eid, user_id=u,
-                            ts=base + dt.timedelta(days=d),
-                            value=float(10 * u + 2 * d)))
-            eid += 1
-    out = ea.panel_user_slopes(spark.createDataFrame(rows)).collect()[0]
-    assert out["n_users"] == 40
-    assert abs(out["median_slope"] - 2.0) < 1e-6
-    assert abs(out["p25_slope"] - 2.0) < 1e-6
-    assert out["frac_positive"] == 1.0
-
-
-def test_panel_slopes_vs_pooled_confound(spark):
-    # individual users FLAT, but later cohorts have lower value: pooled
-    # trend would be negative; the panel median slope is 0
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    for u in range(30):
-        lvl = float(100 - u)  # later (higher-id) users lower level
-        for d in range(4):
-            rows.append(Row(event_id=eid, user_id=u,
-                            ts=base + dt.timedelta(days=u + d), value=lvl))
-            eid += 1
-    out = ea.panel_user_slopes(spark.createDataFrame(rows)).collect()[0]
-    assert out["median_slope"] == 0.0
-    assert out["p25_slope"] == 0.0 and out["p75_slope"] == 0.0
-
-
-def _arm4(u):
-    return (int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16) % 1_000_000_007) % 4
-
-
-def test_kitagawa_effects_sum_to_delta(spark):
-    base = dt.datetime(2024, 1, 1)
-    late = dt.datetime(2024, 12, 1)
-    rows, eid = [], 0
-    # era 1 doubles segment-0 traffic (mix shift) and improves segment-1
-    # conversion (rate shift); other segments stable
-    for u in range(400):
-        seg = _arm4(u)
-        n_old = 2
-        n_new = 4 if seg == 0 else 2
-        conv_old = 1 if seg in (1, 2) else 0
-        conv_new = 2 if seg == 1 else (1 if seg == 2 else 0)
-        for i in range(n_old):
-            typ = "purchase" if i < conv_old else "view"
-            rows.append(Row(event_id=eid, user_id=u, event_type=typ, ts=base)); eid += 1
-        for i in range(n_new):
-            typ = "purchase" if i < conv_new else "view"
-            rows.append(Row(event_id=eid, user_id=u, event_type=typ, ts=late)); eid += 1
-    out = {r["segment"]: r for r in
-           ea.kitagawa_rate_decomposition(spark.createDataFrame(rows)).collect()}
-    o = out["OVERALL"]
-    delta = o["rate_new"] - o["rate_old"]
-    assert abs((o["rate_effect"] + o["mix_effect"]) - delta) < 1e-5
-    # segment 1 carries the rate effect; segment 0's mix effect is negative
-    # (it grew but converts at 0 -> dilution shows up as rate-0 mix drag)
-    assert out["1"]["rate_effect"] > 0
-    assert o["mix_effect"] != 0.0
-
-
-# Qini uplift curve.
-
-
-def test_qini_front_loads_uplift_for_good_score(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    # score (user value) correlates with responsiveness: among HIGH-value
-    # users, treated convert much more than control; among low-value
-    # users treatment does nothing.
-    for u in range(1200):
-        hi = u % 3 == 0
-        val = 500.0 if hi else 10.0
-        rows.append(Row(event_id=eid, user_id=u, event_type="view",
-                        ts=base, value=val)); eid += 1
-        responds = hi and _arm(u) == 1 and u % 2 == 0
-        ctrl_base = u % 10 == 0  # background conversion in both arms
-        if responds or ctrl_base:
-            rows.append(Row(event_id=eid, user_id=u, event_type="purchase",
-                            ts=base, value=0.0)); eid += 1
-    out = sorted(
-        ea.qini_curve(spark.createDataFrame(rows)).collect(),
-        key=lambda r: -r["bucket"],
-    )
-    # qini is cumulative: the final row holds the total uplift
-    total = out[-1]["qini"]
-    # uplift exists and most of it is already present in the top buckets
-    assert total > 0
-    assert out[0]["qini"] > 0.4 * total
-    # counts are cumulative and monotone
-    nt = [r["n_treat"] for r in out]
-    assert nt == sorted(nt)
-    assert out[-1]["n_treat"] + out[-1]["n_ctrl"] == 1200
-
-
-def test_qini_no_effect_hovers_near_zero(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    for u in range(1000):
-        rows.append(Row(event_id=eid, user_id=u, event_type="view",
-                        ts=base, value=float(u % 50))); eid += 1
-        if u % 5 == 0:  # same conversion propensity in both arms
-            rows.append(Row(event_id=eid, user_id=u, event_type="purchase",
-                            ts=base, value=0.0)); eid += 1
-    out = ea.qini_curve(spark.createDataFrame(rows)).collect()
-    total_users = 1000
-    for r in out:
-        # |qini| stays small relative to the conversion volume
-        assert abs(r["qini"]) < 0.05 * total_users
-
-
-# Funnel A/B compare and xor table checksums.
-
-
-def test_funnel_ab_locates_stage_effect(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    # everyone views; arm1 clicks twice as often; purchase|click same
-    for u in range(1200):
-        rows.append(Row(event_id=eid, user_id=u, event_type="view", ts=base)); eid += 1
-        clicks = (u % 2 == 0) if _arm(u) == 1 else (u % 4 == 0)
-        if clicks:
-            rows.append(Row(event_id=eid, user_id=u, event_type="click",
-                            ts=base + dt.timedelta(minutes=1))); eid += 1
-            if u % 8 == 0:
-                rows.append(Row(event_id=eid, user_id=u, event_type="purchase",
-                                ts=base + dt.timedelta(minutes=2))); eid += 1
-    out = {r["stage"]: r for r in
-           ea.funnel_ab_compare(spark.createDataFrame(rows),
-                                ["view", "click", "purchase"]).collect()}
-    # view stage: both arms 100% -> zero variance -> z NULL
-    assert out["view"]["rate_arm0"] == 1.0 and out["view"]["rate_arm1"] == 1.0
-    assert out["view"]["z_score"] is None
-    # click stage: strong positive z for arm1
-    assert out["click"]["rate_arm1"] > out["click"]["rate_arm0"]
-    assert out["click"]["z_score"] > 3.0
-    # ordered funnel: purchases only count after clicks
-    assert out["purchase"]["n_arm0"] + out["purchase"]["n_arm1"] <= (
-        out["click"]["n_arm0"] + out["click"]["n_arm1"]
-    )
-
-
-# Hill tail exponent and top-k persistence.
-
-
-def test_topk_persistence_streaks(spark):
-    base = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-    # item 1: top every day for 6 days; item 2: days 0,1 and 4,5 (streak 2);
-    # filler items keep the top-2 competitive
-    for d in range(6):
-        for _ in range(10):
-            rows.append(Row(event_id=eid, ts=base + dt.timedelta(days=d),
-                            props='{"k": 1}')); eid += 1
-        n2 = 8 if d in (0, 1, 4, 5) else 1
-        for _ in range(n2):
-            rows.append(Row(event_id=eid, ts=base + dt.timedelta(days=d),
-                            props='{"k": 2}')); eid += 1
-        for _ in range(5):
-            rows.append(Row(event_id=eid, ts=base + dt.timedelta(days=d),
-                            props='{"k": 3}')); eid += 1
-    out = {r["item"]: r for r in
-           ea.topk_persistence(spark.createDataFrame(rows), k=2).collect()}
-    assert out["1"]["n_days_in_topk"] == 6 and out["1"]["max_streak"] == 6
-    assert out["2"]["n_days_in_topk"] == 4 and out["2"]["max_streak"] == 2
-    assert out["3"]["n_days_in_topk"] == 2  # wins top-2 only when item2 dips
-
-
-# Next-item pairs, IPF raking, vocab coverage curve.
-
-
-def _ev_next_item_training_pairs(eid, uid, item, minute, etype="view"):
-    props = f'{{"k": {item}}}' if item is not None else "{}"
-    return Row(
-        event_id=eid,
-        user_id=uid,
-        event_type=etype,
-        ts=dt.datetime(2024, 1, 1, 0, minute),
-        props=props,
-    )
-
-
-def test_next_item_pairs_order_selfloops_and_nulls(spark):
-    rows = [
-        _ev_next_item_training_pairs(1, 7, 10, 5),          # 10 -> 20 (after reordering by ts)
-        _ev_next_item_training_pairs(2, 7, 20, 9),          # 20 -> 20 self-transition: dropped
-        _ev_next_item_training_pairs(3, 7, 20, 12),         # 20 -> 30
-        _ev_next_item_training_pairs(4, 7, 30, 20),
-        _ev_next_item_training_pairs(5, 7, None, 15),       # null item: skipped entirely
-        _ev_next_item_training_pairs(6, 8, 99, 1, "click"),  # wrong event type: ignored
-        _ev_next_item_training_pairs(7, 8, 1, 2),           # single view: no pair
-    ]
-    out = eventanalytics.next_item_training_pairs(spark.createDataFrame(rows))
-    got = {(r.user_id, r.context_item, r.next_item) for r in out.collect()}
-    assert got == {(7, 10, 20), (7, 20, 30)}
-    buckets = [r.neg_bucket for r in out.collect()]
-    assert all(0 <= b < 1024 for b in buckets)
-
-
-# Exact Shapley attribution and Brier decomposition.
-
-
-def _journeys(spark):
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(u, i, typ):
-        return Row(
-            event_id=u * 100 + i, user_id=u,
-            ts=t0 + dt.timedelta(minutes=i), event_type=typ, value=1.0,
-        )
-
-    rows = []
-    # 3 users convert after {click}; 1 after {click, view}; 1 after {view}
-    for u in (1, 2, 3):
-        rows += [ev(u, 0, "click"), ev(u, 1, "purchase")]
-    rows += [ev(4, 0, "click"), ev(4, 1, "view"), ev(4, 2, "purchase")]
-    rows += [ev(5, 0, "view"), ev(5, 1, "purchase")]
-    # a user who never converts: must not contribute
-    rows += [ev(6, 0, "click"), ev(6, 1, "view")]
-    # post-purchase events must not count as channels
-    rows += [ev(7, 0, "click"), ev(7, 1, "purchase"), ev(7, 2, "view")]
-    return spark.createDataFrame(rows)
-
-
-def test_shapley_efficiency_and_order(spark):
-    out = {
-        r["channel"]: r
-        for r in eventanalytics.shapley_attribution(
-            _journeys(spark), channels=("click", "view")
-        ).collect()
-    }
-    assert set(out) == {"click", "view"}
-    total = sum(r["shapley_credit"] for r in out.values())
-    n_conv = next(iter(out.values()))["n_conversions"]
-    assert n_conv == 6  # users 1,2,3,4,5,7
-    # efficiency: credits sum to v(full set) = all conversions
-    assert abs(total - 6.0) < 1e-6
-    # click appears in 5 journeys, view in 2 -> click must earn more
-    assert out["click"]["shapley_credit"] > out["view"]["shapley_credit"]
-
-
-def test_shapley_hand_computed_values(spark):
-    out = {
-        r["channel"]: r["shapley_credit"]
-        for r in eventanalytics.shapley_attribution(
-            _journeys(spark), channels=("click", "view")
-        ).collect()
-    }
-    # v({}) = 0, v({c}) = 5 (sets {c}x4 ... users 1,2,3,7 plus none),
-    # exact: cnt({c})=4, cnt({v})=1, cnt({c,v})=1
-    # v({c})=4, v({v})=1, v({c,v})=6
-    # shapley(c) = 1/2*(v(c)-v(0)) + 1/2*(v(cv)-v(v)) = (4 + 5)/2 = 4.5
-    # shapley(v) = 1/2*(v(v)-v(0)) + 1/2*(v(cv)-v(c)) = (1 + 2)/2 = 1.5
-    assert abs(out["click"] - 4.5) < 1e-6
-    assert abs(out["view"] - 1.5) < 1e-6
-
-
-# Query-likelihood retrieval and click position bias.
-
-
-def test_position_bias_decays_with_planted_drop_rule(spark):
-    rows = []
-    eid = 0
-    for pos in range(1, 6):
-        for i in range(20):
-            rows.append(Row(position=pos, event_type="view"))
-            # keep clicks at rate (10 - pos)/10 deterministically
-            if i % 10 < 10 - pos:
-                rows.append(Row(position=pos, event_type="click"))
-    df = spark.createDataFrame(rows)
-    out = {
-        r["position"]: r
-        for r in eventanalytics.click_position_bias(df).collect()
-    }
-    assert out[1]["impressions"] == 20
-    assert out[1]["bias_vs_top"] == 1.0
-    # strictly decaying ctr and bias across positions
-    ctrs = [out[p]["ctr"] for p in range(1, 6)]
-    assert ctrs == sorted(ctrs, reverse=True)
-    assert out[5]["bias_vs_top"] < out[2]["bias_vs_top"] < 1.0
-
-
-def test_position_bias_zero_impressions_guarded(spark):
-    df = spark.createDataFrame(
-        [Row(position=1, event_type="view"),
-         Row(position=1, event_type="click"),
-         Row(position=2, event_type="click")]  # clicks but no views
-    )
-    out = {r["position"]: r for r in eventanalytics.click_position_bias(df).collect()}
-    assert out[2]["ctr"] is None
-    assert out[2]["bias_vs_top"] is None
-    assert out[1]["ctr"] == 1.0
-
-
-# IPW treatment effect and regression discontinuity.
-
-
-def _confounded(spark):
-    # two strata: A treats 25%, B treats 75%; B's base outcome is 100
-    # higher.  True effect = +10 everywhere.
-    rows = []
-    for i in range(40):
-        s = "A" if i < 20 else "B"
-        base = 0.0 if s == "A" else 100.0
-        rate = 1 if s == "A" else 3  # of 4
-        t = 1 if (i % 4) < rate else 0
-        rows.append(Row(stratum=s, treated=t, outcome=base + 10.0 * t))
-    return spark.createDataFrame(rows)
-
-
-def test_ipw_removes_stratum_confounding(spark):
-    out = eventanalytics.ipw_treatment_effect(_confounded(spark)).collect()[0]
-    assert out["n_units"] == 40
-    assert out["n_excluded_strata"] == 0
-    # treated units concentrate in the high-outcome stratum: naive >> 10
-    assert out["naive_diff"] > 40.0
-    assert abs(out["ipw_ate"] - 10.0) < 1e-3
-
-
-def test_ipw_excludes_positivity_violations(spark):
-    rows = (
-        [Row(stratum="ok", treated=i % 2, outcome=5.0 + 2.0 * (i % 2))
-         for i in range(10)]
-        + [Row(stratum="all_treated", treated=1, outcome=999.0)] * 5
-        + [Row(stratum="none_treated", treated=0, outcome=-999.0)] * 5
-    )
-    out = eventanalytics.ipw_treatment_effect(
-        spark.createDataFrame(rows)
-    ).collect()[0]
-    assert out["n_excluded_strata"] == 2
-    assert out["n_units"] == 10  # only the 'ok' stratum survives
-    assert abs(out["ipw_ate"] - 2.0) < 1e-3
-
-
-def _rd_data(spark, jump=50.0):
-    rows = []
-    for i in range(400):
-        x = i / 4.0  # running variable 0..100
-        y = 3.0 * x + (jump if x >= 50.0 else 0.0)
-        rows.append(Row(running=x, outcome=y))
-    return spark.createDataFrame(rows)
-
-
-def test_rd_recovers_jump_with_slope(spark):
-    out = eventanalytics.regression_discontinuity(
-        _rd_data(spark), cutoff=50.0, bandwidth=20.0
-    ).collect()[0]
-    # a naive mean-difference over [30,70) would report jump + slope*20
-    # = 50 + 60; the local-linear form must isolate the jump
-    assert abs(out["rd_estimate"] - 50.0) < 1e-3
-    assert abs(out["left_pred"] - 150.0) < 1e-3
-    assert abs(out["right_pred"] - 200.0) < 1e-3
-    assert out["n_left"] == 80
-    assert out["n_right"] == 80
-
-
-def test_rd_no_jump_reports_zero(spark):
-    out = eventanalytics.regression_discontinuity(
-        _rd_data(spark, jump=0.0), cutoff=50.0, bandwidth=20.0
-    ).collect()[0]
-    assert abs(out["rd_estimate"]) < 1e-3
-
-
-# In-engine logistic fit and UCB1 ranking.
-
-
-def test_ucb1_exploration_bonus_orders_arms(spark):
-    # arm A: 100 pulls, mean 0.5; arm B: 2 pulls, mean 0.5 -> B's bonus
-    # must rank it first; arm C: 100 pulls, mean 0.9 beats both means
-    rows = (
-        [Row(item=1, reward=float(i % 2)) for i in range(100)]
-        + [Row(item=2, reward=float(i % 2)) for i in range(2)]
-        + [Row(item=3, reward=1.0 if i % 10 else 0.0) for i in range(100)]
-    )
-    out = {r["item"]: r for r in eventanalytics.ucb1_ranking(
-        spark.createDataFrame(rows)).collect()}
-    assert out[2]["ucb"] > out[1]["ucb"]  # same mean, fewer pulls -> bigger bonus
-    assert out[3]["mean_reward"] == 0.9
-    # order: the under-explored arm outranks the exploited 0.5 arm
-    order = sorted(out, key=lambda k: (-out[k]["ucb"], k))
-    assert order.index(2) < order.index(1)
-
-
-# Bradley-Terry strength ranking.
-
-
-def _comps(spark, rows):
-    return spark.createDataFrame([Row(winner=w, loser=l) for w, l in rows])
-
-
-def test_bt_transitive_chain_orders_correctly(spark):
-    # A beats B 4-0, B beats C 4-0: strength A > B > C without A ever
-    # meeting C
-    rows = [(1, 2)] * 4 + [(2, 3)] * 4
-    out = {
-        r["item"]: r
-        for r in eventanalytics.bradley_terry_ranks(
-            _comps(spark, rows), iters=3
-        ).collect()
-    }
-    assert out[1]["strength"] > out[2]["strength"] > out[3]["strength"]
-    assert out[1]["n_wins"] == 4 and out[1]["n_matches"] == 4
-    assert out[2]["n_wins"] == 4 and out[2]["n_matches"] == 8
-    assert out[3]["n_wins"] == 0
-
-
-def test_bt_credits_opponent_strength_over_win_rate(spark):
-    # D: 2-1 against the doormat C only (67% vs weak opposition)
-    # B: 6-3 against the champion A (67% vs strong opposition)
-    # (D must not be undefeated: the BT MLE for an all-wins item
-    # diverges, so the scenario would be ill-posed)
-    rows = (
-        [(2, 1)] * 6 + [(1, 2)] * 3   # B vs A
-        + [(4, 3)] * 2 + [(3, 4)]      # D vs C
-        + [(1, 3)] * 5                 # A crushes C (C is weak)
-        + [(2, 3)] * 5                 # B crushes C too
-    )
-    out = {
-        r["item"]: r["strength"]
-        for r in eventanalytics.bradley_terry_ranks(
-            _comps(spark, rows), iters=3
-        ).collect()
-    }
-    # B beat the field's best repeatedly; D only beat the doormat.
-    assert out[2] > out[4]
-
-
-def test_bt_symmetric_record_equal_strength(spark):
-    rows = [(1, 2)] * 5 + [(2, 1)] * 5
-    out = {
-        r["item"]: r["strength"]
-        for r in eventanalytics.bradley_terry_ranks(_comps(spark, rows)).collect()
-    }
-    assert abs(out[1] - out[2]) < 1e-6
-    # sum-normalized to the item count
-    assert abs(sum(out.values()) - 2.0) < 1e-5
-
-
-def test_bt_self_comparisons_dropped(spark):
-    rows = [(1, 1)] * 10 + [(1, 2)] * 2
-    out = {
-        r["item"]: r
-        for r in eventanalytics.bradley_terry_ranks(_comps(spark, rows)).collect()
-    }
-    assert out[1]["n_matches"] == 2  # the ten self-pairs never count
-
-
-# Regression tests: hits_bipartite(iters=0) guard,
-# click_position_bias without a position-1 anchor, shingle-less eval docs
-# in contamination_overlap_fraction, and the risk_coverage_curve ntile
-# reconstruction (grain-level arithmetic must be bit-identical to the
-# per-row ntile it replaced).
-
-
-def test_click_position_bias_no_position_one_keeps_rows(spark):
-    # 0-indexed positions: no row has position 1 except... none at all
-    ev = spark.createDataFrame(
-        [
-            Row(position=0, event_type="view"),
-            Row(position=0, event_type="click"),
-            Row(position=2, event_type="view"),
-        ]
-    )
-    out = {r["position"]: r for r in click_position_bias(ev).collect()}
-    assert set(out) == {0, 2}  # nothing silently erased
-    assert out[0]["ctr"] == pytest.approx(1.0)
-    assert out[0]["bias_vs_top"] is None
-    assert out[2]["bias_vs_top"] is None
-
-
-def test_click_position_bias_with_anchor_unchanged(spark):
-    ev = spark.createDataFrame(
-        [
-            Row(position=1, event_type="view"),
-            Row(position=1, event_type="view"),
-            Row(position=1, event_type="click"),
-            Row(position=2, event_type="view"),
-            Row(position=2, event_type="view"),
-            Row(position=2, event_type="view"),
-            Row(position=2, event_type="view"),
-            Row(position=2, event_type="click"),
-        ]
-    )
-    out = {r["position"]: r for r in click_position_bias(ev).collect()}
-    assert out[1]["ctr"] == pytest.approx(0.5)
-    assert out[1]["bias_vs_top"] == pytest.approx(1.0)
-    assert out[2]["ctr"] == pytest.approx(0.25)
-    assert out[2]["bias_vs_top"] == pytest.approx(0.5)

@@ -1,20 +1,16 @@
 """Filter-stage semantics (reference P4/P5/P6/P7/P8, run_job_filter.py) and
 the composed §3.2 pipeline."""
 
-import datetime as dt
-
 import pytest
+from conftest import ts
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import filters
 from rss_feed_etl_spark.operators.dedup import union_dedup_keep_first
 from rss_feed_etl_spark.plans.filter_pipeline import run_filter_pipeline
 
+
 AS_OF = "2024-06-01 00:00:00"
-
-
-def ts(s):
-    return dt.datetime.fromisoformat(s)
 
 
 @pytest.fixture()

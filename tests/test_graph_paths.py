@@ -4,15 +4,10 @@ z-score, shingle novelty, HLL rollup."""
 from datetime import datetime, timedelta
 
 import pytest
+from conftest import events_frame
 
 from rss_feed_etl_spark.operators import eventanalytics as ea
 from rss_feed_etl_spark.operators import graph, sketches, textstats
-
-
-def _events(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    )
 
 
 def _ts(minute):
@@ -26,7 +21,7 @@ def test_transition_edges_counts_consecutive_pairs(spark):
     ]
     edges = {
         (r["src"], r["dst"]): r["weight"]
-        for r in graph.transition_edges(_events(spark, rows)).collect()
+        for r in graph.transition_edges(events_frame(spark, rows)).collect()
     }
     assert edges == {("a", "b"): 2, ("b", "a"): 1}
 
@@ -61,7 +56,7 @@ def test_session_paths_splits_on_gap(spark):
     ]
     out = {
         r["path"]: r["n_sessions"]
-        for r in ea.session_paths(_events(spark, rows)).collect()
+        for r in ea.session_paths(events_frame(spark, rows)).collect()
     }
     assert out == {"view>click": 2, "view": 1}
 
@@ -99,7 +94,7 @@ def test_hll_rollup_within_error_envelope(spark):
     rows = [
         (i, datetime(2024, 1, 1 + (i % 28)), i % 137, "view") for i in range(2000)
     ]
-    ev = _events(spark, rows)
+    ev = events_frame(spark, rows)
     out = sketches.distinct_rollup_sketched(ev).collect()
     assert len(out) == 1
     r = out[0]

@@ -1,4 +1,4 @@
-"""The streaming ↔ curation composition capstone — the
+"""Wave 142: the streaming ↔ curation composition capstone — the
 fold-equals-batch proof for the incremental quality + exact-dedup gates.
 
 Pins, on a corpus with cross-batch exact duplicates and low-quality

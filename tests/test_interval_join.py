@@ -3,14 +3,12 @@ of the naive key-join + range-filter formulation, including window
 boundaries that land exactly on bucket edges."""
 
 import datetime
-import os
 
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import joins
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _pairs(df):

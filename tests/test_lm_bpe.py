@@ -2,14 +2,12 @@
 hand-computed fixture, and BPE merge-candidate mining invariants."""
 
 import math
-import os
 
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import textstats
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_bigram_logppl_hand_fixture(spark):

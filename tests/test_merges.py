@@ -4,16 +4,10 @@ plus the merge invariants SURVEY §5.2 calls for (idempotence, notes
 preservation, ≤1 current row per key).
 """
 
-from __future__ import annotations
-
-import datetime as dt
-
 import pytest
-from conftest import SF_DIR, plan_text
-from hypothesis import given, settings, strategies as st
+from conftest import ts
 from pyspark.sql import functions as F
 
-from rss_feed_etl_spark.operators import merges, timeseries as ts
 from rss_feed_etl_spark.operators.dedup import dedup_by_key
 from rss_feed_etl_spark.operators.merges import (
     merge_counts,
@@ -23,12 +17,7 @@ from rss_feed_etl_spark.operators.merges import (
     sort_output,
 )
 
-
 AS_OF = "2024-06-01 12:00:00"
-
-
-def ts(s):
-    return dt.datetime.fromisoformat(s)
 
 
 @pytest.fixture()
@@ -176,258 +165,3 @@ class TestMergeScd2:
         out = merge_scd2(new_batch, hist, as_of=AS_OF)
         # 5 merged rows + 3 closed pass-through rows
         assert out.count() == 8
-
-
-# Property-based checks of the merge operators (SURVEY §5.2): random
-# batches/histories against an independent dict-based model of the reference
-# semantics, plus SCD2 structural invariants under batch sequences.
-#
-# Example counts are small because each example runs Spark jobs; the value
-# alphabet deliberately includes '' and 'nan' (the reference's null-ish
-# sentinels) and overlapping keys.
-
-
-KEYS = st.sampled_from(["k0", "k1", "k2", "k3", "k4"])
-VALS = st.sampled_from(["a", "b", "", "nan", "x y"])
-ROW = st.tuples(KEYS, VALS, VALS)  # (link, entry_title, notes)
-
-
-def rows_strategy():
-    return st.lists(ROW, min_size=0, max_size=8)
-
-
-def dedup_keep_last(rows):
-    out = {}
-    for link, title, notes in rows:
-        out[link] = (title, notes)
-    return out
-
-
-def model_scd1(batch, history):
-    """Reference M1 model: new values win; blank-ish new notes inherit
-    history's notes (scd1_manager.py:121-129)."""
-    out = dict(history)
-    for link, (title, notes) in batch.items():
-        if link in history and (notes is None or notes.strip() in ("", "nan")):
-            notes = history[link][1]
-        out[link] = (title, notes)
-    return out
-
-
-@settings(max_examples=12, deadline=None)
-@given(batch_rows=rows_strategy(), hist_rows=rows_strategy())
-def test_scd1_matches_model(spark, batch_rows, hist_rows):
-    schema = "link string, entry_title string, notes string"
-    batch = dedup_keep_last(batch_rows)
-    history = dedup_keep_last(hist_rows)
-    bdf = spark.createDataFrame(
-        [(k, t, n) for k, (t, n) in batch.items()], schema
-    )
-    hdf = spark.createDataFrame(
-        [(k, t, n) for k, (t, n) in history.items()], schema
-    )
-    got = {
-        r.link: (r.entry_title, r.notes) for r in merge_scd1(bdf, hdf).collect()
-    }
-    assert got == model_scd1(batch, history)
-
-
-@settings(max_examples=8, deadline=None)
-@given(batches=st.lists(rows_strategy(), min_size=1, max_size=3))
-def test_scd2_invariants_under_batch_sequence(spark, batches):
-    schema = "link string, entry_title string, notes string"
-    scd2_schema = (
-        schema
-        + ", effective_start timestamp, effective_end timestamp, current_flag int"
-    )
-    history = spark.createDataFrame([], scd2_schema)
-    for i, rows in enumerate(batches):
-        batch = dedup_keep_last(rows)
-        bdf = spark.createDataFrame(
-            [(k, t, n) for k, (t, n) in batch.items()], schema
-        )
-        history = merge_scd2(
-            bdf, history, as_of=f"2024-06-0{i + 1} 12:00:00"
-        ).localCheckpoint(eager=True)
-
-    rows = history.collect()
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r.link, []).append(r)
-    all_batch_keys = {k for rs in batches for k, _, _ in rs}
-    assert set(by_key) <= all_batch_keys
-    for link, versions in by_key.items():
-        current = [r for r in versions if r.current_flag == 1]
-        # ≤1 current row per key, and exactly the current rows are open-ended
-        assert len(current) <= 1
-        for r in versions:
-            assert (r.effective_end is None) == (r.current_flag == 1)
-        # versions tile time: sorted starts are non-decreasing and closed
-        # versions end where they ended (no overlap of [start, end) spans)
-        closed = sorted(
-            (r for r in versions if r.current_flag == 0),
-            key=lambda r: r.effective_start,
-        )
-        for a, b in zip(closed, closed[1:]):
-            assert a.effective_end <= b.effective_start
-        if current and closed:
-            assert closed[-1].effective_end <= current[0].effective_start
-
-
-# DSIR importance weights, int8-quantized ANN, SCD2 point-in-time
-# snapshot, and length-bucketed batching.
-
-
-def test_scd2_snapshot_picks_interval_covering_version(spark):
-    hist = spark.createDataFrame(
-        [
-            ("a", "v1", "2024-01-01 00:00:00", "2024-01-10 00:00:00", 0),
-            ("a", "v2", "2024-01-10 00:00:00", None, 1),
-            ("b", "v1", "2024-01-05 00:00:00", None, 1),
-            ("c", "v1", "2024-01-01 00:00:00", "2024-01-03 00:00:00", 0),
-        ],
-        "link string, summary string, effective_start string, effective_end string, current_flag int",
-    ).select(
-        "link",
-        "summary",
-        F.to_timestamp("effective_start").alias("effective_start"),
-        F.to_timestamp("effective_end").alias("effective_end"),
-        "current_flag",
-    )
-    snap = {
-        r["link"]: r["summary"]
-        for r in merges.scd2_snapshot_at(hist, "2024-01-07 00:00:00").collect()
-    }
-    # a: v1 interval covers 01-07; b: open row; c: expired before 01-07
-    assert snap == {"a": "v1", "b": "v1"}
-    # at-most-one version per key at any instant
-    for at in ["2024-01-02 00:00:00", "2024-01-10 00:00:00", "2024-02-01 00:00:00"]:
-        counts = (
-            merges.scd2_snapshot_at(hist, at).groupBy("link").count().collect()
-        )
-        assert all(r["count"] == 1 for r in counts)
-
-
-# Key-skew report, DQ assertion report, ordered CDC apply,
-# hashing-trick quality scorer — semantics plus the plan shapes that keep
-# them 100 TB-safe.
-
-
-# --- CDC apply --------------------------------------------------------------
-
-
-def test_cdc_last_op_wins_and_delete_removes(spark):
-    log = spark.createDataFrame(
-        [  # user 1: I then U -> survives with U's value
-            (1, "2024-01-01 00:00:00", 1, "I", 1.0),
-            (1, "2024-01-02 00:00:00", 2, "U", 2.0),
-            # user 2: I then D -> gone
-            (2, "2024-01-01 00:00:00", 3, "I", 9.0),
-            (2, "2024-01-03 00:00:00", 4, "D", 0.0),
-            # user 3: same ts, event_id breaks the tie -> op of id 6 wins
-            (3, "2024-01-01 00:00:00", 5, "D", 0.0),
-            (3, "2024-01-01 00:00:00", 6, "U", 7.0),
-        ],
-        "user_id long, ts string, event_id long, op string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    out = {r["user_id"]: r for r in merges.cdc_apply_ordered(log, key="user_id").collect()}
-    assert set(out) == {1, 3}
-    assert out[1]["last_op"] == "U" and out[1]["last_value"] == 2.0
-    assert out[1]["n_ops"] == 2
-    assert out[3]["last_value"] == 7.0
-
-
-def test_cdc_single_exchange(spark):
-    log = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
-        .select("user_id", "ts", "event_id", F.lit("U").alias("op"), "value")
-    )
-    s = plan_text(merges.cdc_apply_ordered(log, key="user_id"))
-    # both window functions share one hash partitioning on the key
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", s)) == 1
-    assert "SortMergeJoin" not in s and "BroadcastHashJoin" not in s
-
-
-# Golden-record survivorship, incremental aggregate maintenance,
-# join cardinality estimation.
-
-
-# --- golden_record ----------------------------------------------------------
-
-
-def _members(spark, rows):
-    return spark.createDataFrame(
-        rows, "component_id bigint, id bigint, priority int, title string, body string"
-    )
-
-
-def test_golden_record_picks_best_non_null_per_field(spark):
-    rows = [
-        # component 1: best-priority member has null title -> title comes
-        # from the next-priority member; body comes from the best member
-        (1, 10, 0, None, "body-curated"),
-        (1, 11, 1, "title-crawl", "body-crawl"),
-        (1, 12, 2, "title-old", None),
-        # component 2: single member
-        (2, 20, 3, "only", None),
-    ]
-    out = {r["component_id"]: r for r in merges.golden_record(_members(spark, rows)).collect()}
-    assert out[1]["title"] == "title-crawl"
-    assert out[1]["body"] == "body-curated"
-    assert out[1]["n_members"] == 3
-    assert out[2]["title"] == "only" and out[2]["body"] is None
-
-
-def test_golden_record_tie_breaks_by_id(spark):
-    rows = [(5, 51, 1, "b", "x"), (5, 50, 1, "a", "y")]
-    r = merges.golden_record(_members(spark, rows)).collect()[0]
-    assert r["title"] == "a"  # same priority -> smaller id wins
-
-
-# CDC→SCD2, time-weighted average, triangle counting.
-
-
-def _log(spark, rows):
-    return spark.createDataFrame(
-        rows, "user_id bigint, ts timestamp, event_id bigint, op string, value double"
-    )
-
-
-def test_cdc_to_scd2_versions_and_delete_close(spark):
-    t = lambda s: dt.datetime.fromisoformat(s)
-    rows = [
-        (1, t("2024-01-01 10:00"), 1, "I", 10.0),
-        (1, t("2024-01-02 10:00"), 2, "U", 20.0),
-        (1, t("2024-01-03 10:00"), 3, "D", 0.0),
-        (2, t("2024-01-01 09:00"), 4, "I", 5.0),
-    ]
-    out = merges.cdc_to_scd2(_log(spark, rows), key="user_id").collect()
-    u1 = sorted(
-        [r for r in out if r["user_id"] == 1], key=lambda r: r["effective_start"]
-    )
-    # two versions; the delete closes the second and emits no row
-    assert len(u1) == 2
-    assert u1[0]["value"] == 10.0 and u1[0]["effective_end"] == t("2024-01-02 10:00")
-    assert u1[0]["current_flag"] == 0
-    assert u1[1]["value"] == 20.0 and u1[1]["effective_end"] == t("2024-01-03 10:00")
-    assert u1[1]["current_flag"] == 0
-    u2 = [r for r in out if r["user_id"] == 2]
-    assert len(u2) == 1 and u2[0]["current_flag"] == 1 and u2[0]["effective_end"] is None
-
-
-def test_cdc_to_scd2_intervals_partition_time(spark):
-    # consecutive versions tile the timeline: each end == next start
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (7, t0 + dt.timedelta(hours=h), h, "U" if h else "I", float(h))
-        for h in range(6)
-    ]
-    out = sorted(
-        merges.cdc_to_scd2(_log(spark, rows), key="user_id").collect(),
-        key=lambda r: r["effective_start"],
-    )
-    for a, b in zip(out, out[1:]):
-        assert a["effective_end"] == b["effective_start"]
-    assert out[-1]["effective_end"] is None

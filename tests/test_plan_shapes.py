@@ -4,10 +4,14 @@ partial aggregation, column pruning, no cartesian products) must survive
 refactors.  Assertions target plan SHAPE, not sizes, so they hold on any
 input volume."""
 
+import os
 import re
+import sys
 
 import pytest
 from conftest import SF_DIR, plan_text
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _queries():
@@ -136,6 +140,7 @@ def test_binary_ann_broadcasts_probes_no_shuffle_join(spark):
     # ADVICE r5: no exchange may move float vectors — candidate selection
     # repartitions (query_id, neighbor_id, hamming) only; vectors re-enter
     # at candidate grain via broadcast joins
+    import re
 
     for block in re.findall(r"\(\d+\) Exchange\nInput[^\n]*", s):
         assert "queryv" not in block and "neighborv" not in block, block
@@ -388,6 +393,7 @@ def test_boilerplate_removal_joins_broadcast_only(spark):
     # NODES (the round-4 single-scan shape needed 4, the two-pass 6).
     # Count numbered operator nodes: formatted explain textually repeats
     # the cached child plan under every InMemoryTableScan.
+    import re
 
     assert len(re.findall(r"^\(\d+\) Scan parquet", s, re.M)) <= 2
     assert "InMemoryTableScan" in s
@@ -563,6 +569,7 @@ def test_time_decay_single_user_window_no_pair_join(spark):
     # join of any kind remains.  The rebase min shares the running-sum
     # window spec (running min over ts-asc rows IS the partition min), so
     # the two Window nodes share ONE sort and one user-key exchange.
+    import re
 
     assert "Join" not in s
     assert len(re.findall(r"\(\d+\) Window", s)) == 2
@@ -634,6 +641,8 @@ def test_incremental_agg_never_rescans_history_wide(spark):
 
 
 def test_cdc_to_scd2_one_window_no_self_join(spark):
+    import re
+
     s = plan_text(_queries()["cdc_to_scd2"](spark, SF_DIR))
     assert len(re.findall(r"\(\d+\) Window", s)) == 1
     assert "Join" not in s

@@ -3,7 +3,7 @@
 import math
 import random
 
-import pytest
+from conftest import plan_text
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import similarity, sketches
@@ -66,16 +66,11 @@ def test_global_percent_rank_matches_window_form(spark):
 
 
 def test_global_percent_rank_plan_never_sorts_facts_globally(spark):
-    import contextlib, io
-
     df = spark.range(1000).select(
         F.col("id").alias("event_id"), (F.col("id") % 37).cast("double").alias("value")
     )
     plan_df = sketches.global_percent_rank(df)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        plan_df.explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(plan_df)
     # the facts join the value-grain rank table broadcast — no
     # SortMergeJoin, no fact-side global sort feeding a Window
     assert "BroadcastHashJoin" in s

@@ -1,12 +1,10 @@
 """Decision-layer operators: quality gate splits the corpus meaningfully,
 drop list only ever drops toward a smaller canonical id."""
 
-import os
+from conftest import SF_DIR
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import dedup, textstats
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_quality_filter_splits_and_names_reasons(spark):

@@ -12,22 +12,12 @@ values and the plans keep the optimized shapes.
 
 from __future__ import annotations
 
-import io
-import contextlib
-
-import pytest
+from conftest import plan_text
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.functions.text import tokens
 from rss_feed_etl_spark.operators import linalg, similarity, textstats
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def _emb_frame(spark, n=46, dim=64, labels=3):
@@ -43,7 +33,7 @@ def _emb_frame(spark, n=46, dim=64, labels=3):
 
 
 def test_alignment_plan_has_no_corpus_single_partition(spark):
-    s = _plan(linalg.alignment_uniformity(_emb_frame(spark)))
+    s = plan_text(linalg.alignment_uniformity(_emb_frame(spark)))
     # every SinglePartition exchange must carry only scalar-aggregate or
     # bucket-count rows, never an embedding/vec column
     lines = s.splitlines()
@@ -124,7 +114,7 @@ def test_alignment_matches_naive_window_rank(spark):
 
 def test_knn_scorer_uses_codegen_kernel(spark):
     emb = _emb_frame(spark)
-    s = _plan(similarity.label_knn_accuracy(emb, k=3, n_queries=5))
+    s = plan_text(similarity.label_knn_accuracy(emb, k=3, n_queries=5))
     # the guarded unrolled kernel references element 63 explicitly; the
     # interpreted fold never does
     assert "[63]" in s
@@ -137,7 +127,7 @@ def test_triplet_and_recall_use_codegen_kernel(spark):
         similarity.triplet_margin_stats(emb, n_anchors=5),
         similarity.filtered_ann_recall(emb, n_queries=5, k=3, prefetch=6),
     ):
-        s = _plan(df)
+        s = plan_text(df)
         assert "[63]" in s
 
 

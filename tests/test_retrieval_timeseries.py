@@ -4,7 +4,6 @@ priority sampling, and train/holdout decontamination."""
 import datetime
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import retrieval, sampling, timeseries
 

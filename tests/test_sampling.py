@@ -2,22 +2,12 @@
 stable under corpus growth and repartitioning — the property randomSplit
 lacks."""
 
-from __future__ import annotations
-
-import math
-import random
-
-import pytest
-from conftest import SF_DIR, plan_text
-from pyspark.sql import Row, functions as F
+from conftest import SF_DIR
+from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.functions.text import redact_pii
-from rss_feed_etl_spark.operators import dedup, sampling
-from rss_feed_etl_spark.operators.sampling import (
-    contamination_overlap_fraction,
-    unimax_allocation,
-)
+from rss_feed_etl_spark.operators import sampling
 
 
 def test_split_stable_under_growth_and_partitioning(spark):
@@ -160,6 +150,8 @@ def test_temperature_mixture_upsamples_rare_groups(spark):
 
 
 def test_leakage_safe_split_keeps_clusters_together(spark):
+    from rss_feed_etl_spark.operators import dedup
+
     docs = spark.createDataFrame([(i,) for i in range(50)], "id long")
     # two clusters: {1,2,3} (transitive via 2) and {10, 40}
     pairs = spark.createDataFrame(
@@ -187,6 +179,10 @@ def test_leakage_safe_split_coassignment_property(spark):
     """Property over random pair graphs: every connected component's members
     always share a split, whatever the graph shape (chains, stars, merges),
     verified against an independent union-find model."""
+    import random
+
+    from rss_feed_etl_spark.operators import dedup
+
     rng = random.Random(7)
     for trial in range(3):
         n = 60
@@ -248,715 +244,3 @@ def test_token_budget_selects_best_scores_exactly(spark):
         for r in sampling.select_by_token_budget(df.repartition(7), budget=350).collect()
     )
     assert kept3 == kept
-
-
-# Curriculum shards and time-decayed popularity.
-
-
-def test_curriculum_orders_easy_first_within_shard(spark):
-    scores = spark.createDataFrame(
-        [(i, float(i % 10)) for i in range(40)], "doc_id bigint, logppl double"
-    )
-    out = sampling.curriculum_shards(scores, "logppl", n_shards=4).collect()
-    by_shard = {}
-    for r in out:
-        by_shard.setdefault(r["shard"], []).append((r["pos"], r["logppl"]))
-    assert len(out) == 40
-    for shard, rows in by_shard.items():
-        rows.sort()
-        ppl = [p for _, p in rows]
-        assert ppl == sorted(ppl), f"shard {shard} not easy-first"
-        assert [p for p, _ in rows] == list(range(1, len(rows) + 1))
-
-
-def test_curriculum_layout_invariant_under_repartition(spark):
-    scores = spark.createDataFrame(
-        [(i, float((i * 7) % 13)) for i in range(50)], "doc_id bigint, logppl double"
-    )
-    a = sorted(map(tuple, sampling.curriculum_shards(scores, "logppl").collect()))
-    b = sorted(
-        map(tuple, sampling.curriculum_shards(scores.repartition(7), "logppl").collect())
-    )
-    assert a == b
-
-
-# Inverted index, BM25, gap-fill LOCF, weighted
-# priority sampling, and train/holdout decontamination.
-
-
-def test_weighted_sample_deterministic_and_weight_sensitive(spark):
-    rows = [Row(doc_id=i, w=(1000 if i % 10 == 0 else 1)) for i in range(1000)]
-    df = spark.createDataFrame(rows)
-    s1 = sampling.weighted_priority_sample(df, k=100, weight_col="w")
-    s2 = sampling.weighted_priority_sample(df, k=100, weight_col="w")
-    ids1 = sorted(r["doc_id"] for r in s1.collect())
-    assert ids1 == sorted(r["doc_id"] for r in s2.collect())
-    # the 10% of keys with 1000× weight must dominate the sample
-    heavy = sum(1 for i in ids1 if i % 10 == 0)
-    assert heavy > 80
-
-
-def test_decontamination_finds_planted_overlap(spark):
-    shared = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = spark.createDataFrame(
-        [
-            Row(id=1, split="train", text=shared + " trailing words here"),
-            Row(id=2, split="test", text=shared + " other suffix tokens"),
-            Row(id=3, split="train", text="completely unrelated content words only"),
-            Row(id=4, split="test", text="more disjoint vocabulary again entirely"),
-        ]
-    )
-    out = sampling.cross_split_contamination(docs, min_shared=3)
-    rows = out.collect()
-    assert [(r["train_id"], r["holdout_id"]) for r in rows] == [(1, 2)]
-    # 8 shared leading tokens → 6 shared 3-gram shingles
-    assert rows[0]["shared_shingles"] == 6
-    # broadcast plan is result-identical
-    bc = sampling.cross_split_contamination(
-        docs, min_shared=3, broadcast_holdout=True
-    )
-    assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, rows))
-
-
-# DSIR importance weights, int8-quantized ANN, SCD2 point-in-time
-# snapshot, and length-bucketed batching.
-
-
-def test_importance_weights_prefer_target_vocabulary(spark):
-    # target docs speak "alpha beta", raw-only docs speak "gamma delta":
-    # a new doc in target vocabulary must outscore one in raw vocabulary
-    rows = (
-        [(i, "alpha beta alpha beta", 1) for i in range(10)]
-        + [(100 + i, "gamma delta gamma delta", 0) for i in range(10)]
-    )
-    docs = spark.createDataFrame(rows, "doc_id long, text string, tgt int")
-    out = {
-        r["doc_id"]: r["weight"]
-        for r in sampling.importance_weights(
-            docs, target_pred=F.col("tgt") == 1
-        ).collect()
-    }
-    assert out[0] > out[100]
-    assert all(out[i] == out[0] for i in range(10))
-
-
-def test_importance_weights_returns_all_docs(spark):
-    docs = spark.createDataFrame(
-        [(1, "x y z", 1), (2, "", 0)], "doc_id long, text string, tgt int"
-    )
-    out = sampling.importance_weights(docs, target_pred=F.col("tgt") == 1)
-    assert out.count() == 2  # blank text still yields its '' token
-
-
-# Largest-remainder allocation, trending items, drop-rate report.
-
-
-def test_allocation_sums_exactly_and_tracks_shares(spark):
-    wts = spark.createDataFrame(
-        [("a", 1), ("b", 1), ("c", 1)], "source string, n long"
-    )
-    out = {r["source"]: r["alloc"] for r in
-           sampling.largest_remainder_allocation(wts, total=100).collect()}
-    assert sum(out.values()) == 100
-    assert sorted(out.values()) == [33, 33, 34]
-    # the extra unit goes to the largest remainder; remainders tie (100/3
-    # each), so the lexicographically first group wins the tiebreak
-    assert out["a"] == 34
-
-
-def test_allocation_exact_when_divisible(spark):
-    wts = spark.createDataFrame([("x", 3), ("y", 1)], "source string, n long")
-    out = {r["source"]: r["alloc"] for r in
-           sampling.largest_remainder_allocation(wts, total=40).collect()}
-    assert out == {"x": 30, "y": 10}
-
-
-# Embedding covariance / PCA and fractional-epoch upsampling,
-# plus the JSONL shard-export sink.
-
-
-def test_epoch_upsample_counts(spark):
-    df = spark.createDataFrame(
-        [(i, "a" if i % 2 else "b") for i in range(400)], "doc_id bigint, source string"
-    )
-    out = sampling.epoch_upsample(
-        df, group_col="source", weights={"a": 2.0, "b": 0.5}
-    )
-    counts = {r["source"]: r["n"] for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    assert counts["a"] == 400  # exactly 2 epochs of the 200 'a' docs
-    # b: ~50% of 200 docs, deterministic hash choice
-    assert 60 <= counts["b"] <= 140
-    # epochs are 0..n-1 per doc
-    mx = out.filter(F.col("source") == "a").agg(F.max("epoch")).collect()[0][0]
-    assert mx == 1
-
-
-def test_epoch_upsample_deterministic_and_monotone(spark):
-    df = spark.createDataFrame(
-        [(i, "w") for i in range(300)], "doc_id bigint, source string"
-    )
-    lo = sampling.epoch_upsample(df, "source", {"w": 1.3})
-    hi = sampling.epoch_upsample(df, "source", {"w": 1.8})
-    lo_ids = {(r["doc_id"], r["epoch"]) for r in lo.collect()}
-    hi_ids = {(r["doc_id"], r["epoch"]) for r in hi.collect()}
-    # raising the weight only ADDS copies (same hash, higher threshold)
-    assert lo_ids <= hi_ids
-    again = {(r["doc_id"], r["epoch"]) for r in sampling.epoch_upsample(
-        df.repartition(11), "source", {"w": 1.3}
-    ).collect()}
-    assert again == lo_ids
-
-
-# Exact-substring contamination and DSIR importance weights.
-
-
-def _corpus(spark):
-    prefix = "x" * 64
-    return spark.createDataFrame(
-        [
-            Row(id=1, split="train", text=prefix + " plus trailing content"),
-            Row(id=2, split="test", text=prefix + " different ending"),
-            Row(id=3, split="train", text="totally unrelated training text " * 4),
-            Row(id=4, split="test", text="short"),  # < needle_len: no needle
-        ]
-    )
-
-
-def test_exact_contamination_finds_planted_prefix(spark):
-    out = sampling.exact_substring_contamination(_corpus(spark), needle_len=64)
-    assert sorted(map(tuple, out.collect())) == [(1, 2)]
-
-
-def test_exact_contamination_plan_broadcasts_needles(spark):
-    import contextlib, io
-
-    s = plan_text(sampling.exact_substring_contamination(_corpus(spark)))
-    assert "BroadcastNestedLoopJoin" in s
-    assert "SortMergeJoin" not in s
-
-
-def test_dsir_weights_prefer_target_like_docs(spark):
-    target_phrase = "machine learning models train on curated corpora "
-    rows = (
-        [Row(doc_id=i, lang="en", text=target_phrase * 3) for i in range(10)]
-        + [Row(doc_id=100, lang="xx", text=target_phrase * 3)]  # target-like text
-        + [
-            Row(doc_id=200 + i, lang="xx", text="buy cheap pills now click here " * 3)
-            for i in range(10)
-        ]
-    )
-    out = {
-        r["doc_id"]: r["log_weight"]
-        for r in sampling.dsir_importance_weights(
-            spark.createDataFrame(rows), target=F.col("lang") == "en"
-        ).collect()
-    }
-    # a doc whose bigrams match the target distribution scores higher than
-    # one drawn from the off-target mass
-    assert out[100] > out[200]
-    # identical text -> identical weight regardless of label
-    assert out[100] == out[0]
-
-
-# Z-order clustering depth and Neyman allocation.
-
-
-def test_neyman_shifts_budget_to_variable_strata(spark):
-    rnd = random.Random(5)
-    rows = []
-    # stratum 'wide': uniform 0..1000 (high sd); 'narrow': all ~500
-    for i in range(500):
-        rows.append(Row(doc_id=i, stratum="wide", w=rnd.randrange(1000)))
-        rows.append(Row(doc_id=10_000 + i, stratum="narrow", w=500 + (i % 3)))
-    df = spark.createDataFrame(rows)
-    out = {
-        r["stratum"]: r
-        for r in sampling.neyman_allocation(
-            df, "stratum", F.col("w").cast("long"), budget=100
-        ).collect()
-    }
-    # equal sizes -> proportional split 50/50, Neyman follows sd
-    assert out["wide"]["alloc_proportional"] == 50
-    assert out["narrow"]["alloc_proportional"] == 50
-    assert out["wide"]["alloc_neyman"] > 95
-    assert out["narrow"]["alloc_neyman"] < 5
-    assert out["wide"]["sd"] > 100 * out["narrow"]["sd"] / 10
-
-
-def test_neyman_allocations_sum_close_to_budget(spark):
-    rnd = random.Random(9)
-    rows = [
-        Row(doc_id=i, stratum=f"s{i % 7}", w=rnd.randrange(10, 500))
-        for i in range(2_000)
-    ]
-    df = spark.createDataFrame(rows)
-    out = sampling.neyman_allocation(
-        df, "stratum", F.col("w").cast("long"), budget=1000
-    ).collect()
-    total = sum(r["alloc_neyman"] for r in out)
-    # per-stratum rounding drifts by at most one unit per stratum
-    assert abs(total - 1000) <= len(out)
-    prop = sum(r["alloc_proportional"] for r in out)
-    assert abs(prop - 1000) <= len(out)
-
-
-# Next-item pairs, IPF raking, vocab coverage curve.
-
-
-def test_ipf_weights_balance_marginals(spark):
-    # skewed 2x2 grid: source a = 30 docs, source b = 10; en = 32, fr = 8.
-    # After raking, per-source weighted totals approach total/2 = 20 and
-    # per-lang totals approach 20 as iterations increase.
-    rows = (
-        [Row(doc_id=i, source="a", lang="en") for i in range(24)]
-        + [Row(doc_id=100 + i, source="a", lang="fr") for i in range(6)]
-        + [Row(doc_id=200 + i, source="b", lang="en") for i in range(8)]
-        + [Row(doc_id=300 + i, source="b", lang="fr") for i in range(2)]
-    )
-    out = sampling.ipf_source_lang_weights(spark.createDataFrame(rows), iters=3)
-    cells = {(r.source, r.lang): r for r in out.collect()}
-    assert len(cells) == 4
-    src_tot = {
-        s: sum(r.cell_weight for (s2, _), r in cells.items() if s2 == s)
-        for s in ("a", "b")
-    }
-    lang_tot = {
-        lg: sum(r.cell_weight for (_, l2), r in cells.items() if l2 == lg)
-        for lg in ("en", "fr")
-    }
-    for tot in list(src_tot.values()) + list(lang_tot.values()):
-        assert abs(tot - 20.0) < 0.5, (src_tot, lang_tot)
-    # doc_weight is the per-document factor
-    for key, r in cells.items():
-        assert abs(r.doc_weight - r.cell_weight / r.n_docs) < 1e-6, key
-
-
-# Embedding dim stats, char-class mix, mixture repeat factors.
-
-
-def test_mixture_repeat_factors_flags_scarce_cells(spark):
-    # source a is huge (many tokens), source b tiny: after raking to
-    # uniform marginals, b's expected tokens exceed its actual tokens ->
-    # repeat_factor > 1; a's is < 1
-    rows = [Row(doc_id=i, source="a", lang="en", text="w " * 200) for i in range(50)]
-    rows += [Row(doc_id=100 + i, source="b", lang="en", text="w w w") for i in range(5)]
-    out = {
-        r.source: r
-        for r in sampling.mixture_repeat_factors(
-            spark.createDataFrame(rows), budget_tokens=10_000
-        ).collect()
-    }
-    assert out["a"].actual_tokens == 50 * 200
-    assert out["b"].actual_tokens == 15
-    assert out["b"].repeat_factor > 1.0 > out["a"].repeat_factor
-    for r in out.values():
-        assert abs(r.expected_tokens - r.repeat_factor * r.actual_tokens) < max(
-            0.01 * r.expected_tokens, 2.0
-        )
-
-
-# Semantic split decontamination, tokenizer fertility, and
-# eval-vs-train OOV skew.
-
-
-def test_semantic_contamination_flags_planted_only(spark):
-    # eval vector 0 has a near-copy in train (cos ~1); eval vector 5 has
-    # only dissimilar train neighbors -> exactly one flag at a high bar
-    base = [1.0, 0.0, 0.5, 0.2] * 16  # 64-dim
-    other = ([0.0, 1.0, -0.5, 0.1] * 16)[:64]
-    near = [v + (0.001 if i % 3 == 0 else 0.0) for i, v in enumerate(base)]
-    rows = [
-        Row(vec_id=0, embedding=base),
-        Row(vec_id=5, embedding=other),
-        Row(vec_id=100, embedding=near),
-        Row(vec_id=101, embedding=[0.3] * 64),
-    ]
-    emb = spark.createDataFrame(rows)
-    ev = emb.filter(F.col("vec_id") < 10)
-    tr = emb.filter(F.col("vec_id") >= 100)
-    out = {
-        r["eval_id"]: r
-        for r in sampling.semantic_contamination(ev, tr, threshold=0.98).collect()
-    }
-    assert set(out) == {0}
-    assert out[0]["nearest_train_id"] == 100
-    assert out[0]["cosine_sim"] >= 0.99
-
-
-def test_semantic_contamination_empty_when_clean(spark):
-    rows = [
-        Row(vec_id=0, embedding=[1.0, 0.0] * 32),
-        Row(vec_id=100, embedding=[0.0, 1.0] * 32),
-    ]
-    emb = spark.createDataFrame(rows)
-    out = sampling.semantic_contamination(
-        emb.filter(F.col("vec_id") == 0),
-        emb.filter(F.col("vec_id") == 100),
-        threshold=0.98,
-    )
-    assert out.count() == 0
-
-
-# Per-source PII density and quality-selection cutoffs.
-
-
-def test_quality_cutoffs_exact_rank_semantics(spark):
-    # source a: scores 0.9, 0.8, 0.7, 0.6 (n=4)
-    rows = [
-        Row(doc_id=i, source="a", quality=q)
-        for i, q in enumerate([0.9, 0.8, 0.7, 0.6])
-    ] + [Row(doc_id=10, source="b", quality=0.5)]
-    df = spark.createDataFrame(rows)
-    out = {
-        (r["source"], r["keep_permille"]): r
-        for r in sampling.quality_select_cutoffs(
-            df, keep_permille=(500, 750, 1000)
-        ).collect()
-    }
-    # ceil(4*0.5)=2 -> 2nd best = 0.8; ceil(4*0.75)=3 -> 0.7; all -> 0.6
-    assert out[("a", 500)]["cutoff"] == 0.8
-    assert out[("a", 750)]["cutoff"] == 0.7
-    assert out[("a", 1000)]["cutoff"] == 0.6
-    assert out[("a", 500)]["n_docs"] == 4
-    # singleton source: every fraction keeps its only doc
-    for pm in (500, 750, 1000):
-        assert out[("b", pm)]["cutoff"] == 0.5
-
-
-def test_quality_cutoffs_keep_at_least_fraction(spark):
-    # thresholding at the cutoff keeps >= the requested fraction
-    rows = [Row(doc_id=i, source="s", quality=float(i % 7) / 10) for i in range(53)]
-    df = spark.createDataFrame(rows)
-    out = {
-        r["keep_permille"]: r["cutoff"]
-        for r in sampling.quality_select_cutoffs(df, keep_permille=(300, 800)).collect()
-    }
-    vals = [r["quality"] for r in rows]
-    for pm, cut in out.items():
-        kept = sum(1 for v in vals if round(v, 6) >= cut)
-        assert kept >= -(-53 * pm // 1000)  # ceil
-
-
-# DoReMi mixture step and the data-constrained epoch planner.
-
-
-def _mixture_corpus(spark):
-    # "hard" uses 8 distinct tokens uniformly (max entropy for its size);
-    # "easy" repeats one token; "mid" sits between.  Same token count per
-    # domain so shares are equal and only difficulty moves the weights.
-    hard = " ".join(f"w{i}" for i in range(8))
-    easy = " ".join(["the"] * 8)
-    mid = "a a a a b b c d"
-    return spark.createDataFrame(
-        [
-            Row(doc_id=1, source="hard", text=hard),
-            Row(doc_id=2, source="easy", text=easy),
-            Row(doc_id=3, source="mid", text=mid),
-        ]
-    )
-
-
-def test_doremi_upweights_hard_domains(spark):
-    out = {
-        r["source"]: r
-        for r in sampling.doremi_mixture_step(
-            _mixture_corpus(spark), eta=1.0, smoothing=0.1
-        ).collect()
-    }
-    assert set(out) == {"hard", "easy", "mid"}
-    # equal token counts -> equal shares
-    for r in out.values():
-        assert abs(r["token_share"] - 1 / 3) < 1e-6
-    assert out["hard"]["entropy"] > out["mid"]["entropy"] > out["easy"]["entropy"]
-    assert abs(out["hard"]["entropy"] - math.log(8)) < 1e-5
-    assert out["easy"]["entropy"] == 0.0
-    # only above-reference domains carry excess
-    assert out["hard"]["excess"] > 0
-    assert out["easy"]["excess"] == 0.0
-    # the update moves weight toward the hard domain
-    assert out["hard"]["weight"] > out["mid"]["weight"] >= out["easy"]["weight"]
-    assert abs(sum(r["weight"] for r in out.values()) - 1.0) < 1e-4
-
-
-def test_doremi_weights_are_smoothed_above_floor(spark):
-    out = sampling.doremi_mixture_step(
-        _mixture_corpus(spark), eta=5.0, smoothing=0.3
-    ).collect()
-    # smoothing/k is a hard floor no matter how extreme eta gets
-    for r in out:
-        assert r["weight"] >= 0.3 / 3 - 1e-6
-
-
-def _budget_corpus(spark):
-    # big: 64 tokens, small: 4 tokens.  sqrt-temperature gives small a
-    # far larger weight than its token share, so small hits the epoch
-    # cap and hands budget back to big.
-    big = " ".join(f"t{i}" for i in range(64))
-    small = "a b c d"
-    return spark.createDataFrame(
-        [
-            Row(doc_id=1, source="big", text=big),
-            Row(doc_id=2, source="small", text=small),
-        ]
-    )
-
-
-def test_epoch_budget_caps_and_redistributes(spark):
-    out = {
-        r["source"]: r
-        for r in sampling.epoch_budget_plan(
-            _budget_corpus(spark), budget_multiplier=2.0, max_epochs=4.0
-        ).collect()
-    }
-    # budget = 2 * 68 = 136 tokens; sqrt weights = 8 / (8+2), 2 / (8+2)
-    assert abs(out["big"]["weight"] - 0.8) < 1e-6
-    assert abs(out["small"]["weight"] - 0.2) < 1e-6
-    # small desires 27.2 tokens but caps at 4 epochs * 4 tokens = 16
-    assert out["small"]["capped"] is True
-    assert out["small"]["realized_tokens"] == 16.0
-    assert out["small"]["epochs"] == 4.0
-    # big absorbs the leftover: 136 - 16 = 120, still under its cap
-    assert out["big"]["capped"] is False
-    assert abs(out["big"]["realized_tokens"] - 120.0) < 0.01
-    assert abs(out["big"]["epochs"] - 120.0 / 64) < 1e-3
-    # the plan spends the whole budget when caps allow
-    total = sum(r["realized_tokens"] for r in out.values())
-    assert abs(total - 136.0) < 0.01
-
-
-def test_epoch_budget_all_capped_leaves_budget_unspent(spark):
-    out = {
-        r["source"]: r
-        for r in sampling.epoch_budget_plan(
-            _budget_corpus(spark), budget_multiplier=10.0, max_epochs=2.0
-        ).collect()
-    }
-    # budget 680 >> 2-epoch capacity 136: everyone caps, nothing blows up
-    for r in out.values():
-        assert r["capped"] is True
-        assert r["epochs"] == 2.0
-
-
-# Contamination overlap fraction and host crawl scorecard.
-
-
-def test_contamination_fraction_detects_partial_leak(spark):
-    body = " ".join(f"w{i}" for i in range(12))       # 10 trigram shingles
-    half_leak = " ".join(f"w{i}" for i in range(6)) + " q1 q2 q3 q4 q5 q6"
-    clean = " ".join(f"z{i}" for i in range(12))
-    df = spark.createDataFrame(
-        [
-            Row(doc_id=10, text=body),        # eval: fully contained in train
-            Row(doc_id=20, text=half_leak),   # eval: partial overlap
-            Row(doc_id=30, text=clean),       # eval: disjoint
-            Row(doc_id=1, text=body),         # train copy
-            Row(doc_id=3, text="other train text entirely"),
-        ]
-    )
-    out = {
-        r["doc_id"]: r
-        for r in sampling.contamination_overlap_fraction(
-            df, eval_mod=10, dirty_threshold=0.2
-        ).collect()
-    }
-    assert set(out) == {10, 20, 30}
-    assert out[10]["dirty_frac"] == 1.0 and out[10]["is_dirty"] is True
-    assert 0.0 < out[20]["dirty_frac"] < 1.0
-    assert out[30]["dirty_frac"] == 0.0 and out[30]["is_dirty"] is False
-    # shingle counts: len(tokens) - 2 distinct trigrams
-    assert out[10]["n_shingles"] == 10
-    assert out[10]["n_hit"] == 10
-
-
-def test_contamination_threshold_splits_dirty_flag(spark):
-    # eval doc shares exactly 1 of its 4 shingles with train -> 0.25
-    df = spark.createDataFrame(
-        [
-            Row(doc_id=10, text="a b c x y z"),   # shingles: abc bcx cxy xyz
-            Row(doc_id=1, text="a b c unrelated tail words"),
-        ]
-    )
-    lo = sampling.contamination_overlap_fraction(
-        df, eval_mod=10, dirty_threshold=0.3
-    ).collect()[0]
-    hi = sampling.contamination_overlap_fraction(
-        df, eval_mod=10, dirty_threshold=0.2
-    ).collect()[0]
-    assert lo["dirty_frac"] == 0.25
-    assert lo["is_dirty"] is False
-    assert hi["is_dirty"] is True
-
-
-# Temperature scaling fit and length-matched pairs.
-
-
-def _match_docs(spark):
-    def doc(i, lang, n_tokens, ev):
-        # eval iff doc_id % 10 == 0 -> choose ids accordingly
-        did = i * 10 if ev else i * 10 + 1
-        return Row(doc_id=did, lang=lang, text=" ".join(["w"] * n_tokens))
-
-    return spark.createDataFrame(
-        [
-            doc(1, "en", 10, True),    # eval len 10
-            doc(2, "en", 9, False),    # train len 9  (diff 1)
-            doc(3, "en", 14, False),   # train len 14 (diff 4)
-            doc(4, "en", 30, True),    # eval len 30 -> nearest 14
-            doc(5, "fr", 7, True),     # eval in fr with no train -> dropped
-            doc(6, "de", 5, False),    # train only, never emitted
-        ]
-    )
-
-
-def test_length_match_picks_nearest_within_group(spark):
-    out = {
-        r["eval_id"]: r
-        for r in sampling.length_matched_pairs(
-            _match_docs(spark), group_col="lang"
-        ).collect()
-    }
-    assert set(out) == {10, 40}  # fr eval dropped (no fr train)
-    assert out[10]["train_id"] == 21     # len 9, diff 1 beats len 14 diff 4
-    assert out[10]["len_diff"] == 1
-    assert out[40]["train_id"] == 31     # only train at-or-below/above: 14
-    assert out[40]["train_len"] == 14
-    assert out[40]["len_diff"] == 16
-
-
-def test_length_match_equal_distance_prefers_shorter(spark):
-    df = spark.createDataFrame(
-        [
-            Row(doc_id=10, lang="en", text=" ".join(["w"] * 10)),  # eval
-            Row(doc_id=1, lang="en", text=" ".join(["w"] * 8)),    # diff 2
-            Row(doc_id=2, lang="en", text=" ".join(["w"] * 12)),   # diff 2
-        ]
-    )
-    out = sampling.length_matched_pairs(df, group_col="lang").collect()[0]
-    assert out["train_id"] == 1  # tie -> the prev (shorter) side
-    assert out["len_diff"] == 2
-
-
-# UniMax cap-constrained allocation + embedding MMD matrix.
-
-
-def _docs(spark, sizes: dict[str, int]):
-    rows = []
-    for src, n in sizes.items():
-        rows.append(Row(source=src, text=" ".join(f"t{i}" for i in range(n))))
-    return spark.createDataFrame(rows)
-
-
-def test_unimax_waterfilling_hand_golden(spark):
-    # tokens a=10, b=20, c=100; E=2 -> caps 20/40/200; B = floor(0.5*130)=65
-    # ascending caps: a capped (20 <= 65/3), b uncapped (40 > 45/2),
-    # c uncapped -> u* = (65-20)/2 = 22.5
-    docs = _docs(spark, {"a": 10, "b": 20, "c": 100})
-    out = {
-        r["source"]: r
-        for r in unimax_allocation(docs, budget_frac=0.5, max_epochs=2).collect()
-    }
-    assert out["a"]["capped"] == 1 and out["a"]["allocation_tokens"] == 20.0
-    assert out["a"]["epochs"] == pytest.approx(2.0)
-    for s in ("b", "c"):
-        assert out[s]["capped"] == 0
-        assert out[s]["allocation_tokens"] == pytest.approx(22.5)
-    assert out["b"]["epochs"] == pytest.approx(1.125)
-    assert out["c"]["epochs"] == pytest.approx(0.225)
-    # allocations exhaust the budget exactly
-    assert sum(r["allocation_tokens"] for r in out.values()) == pytest.approx(65.0)
-
-
-def test_unimax_budget_above_caps_gives_everyone_max_epochs(spark):
-    docs = _docs(spark, {"a": 10, "b": 30})
-    # B = floor(2.0 * 40) = 80 = exactly the cap sum at E=2
-    out = {
-        r["source"]: r
-        for r in unimax_allocation(docs, budget_frac=2.0, max_epochs=2).collect()
-    }
-    for r in out.values():
-        assert r["capped"] == 1
-        assert r["epochs"] == pytest.approx(2.0)
-
-
-def test_unimax_tiny_budget_is_pure_uniform(spark):
-    docs = _docs(spark, {"a": 100, "b": 300, "c": 600})
-    # B = floor(0.03 * 1000) = 30 -> everyone uncapped, 10 tokens each
-    out = {
-        r["source"]: r
-        for r in unimax_allocation(docs, budget_frac=0.03, max_epochs=2).collect()
-    }
-    for r in out.values():
-        assert r["capped"] == 0
-        assert r["allocation_tokens"] == pytest.approx(10.0)
-
-
-# Regression tests: hits_bipartite(iters=0) guard,
-# click_position_bias without a position-1 anchor, shingle-less eval docs
-# in contamination_overlap_fraction, and the risk_coverage_curve ntile
-# reconstruction (grain-level arithmetic must be bit-identical to the
-# per-row ntile it replaced).
-
-
-def test_contamination_keeps_short_eval_docs(spark):
-    # doc 0 is eval (id % 10 == 0) with only 2 words < n=3: the house
-    # shingle rule reduces it to ONE whole-text shingle, and it must
-    # still appear in the per-eval-doc output (clean, not dropped).
-    # doc 10 is eval with a leaked trigram; docs 1..3 are train.
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=0, text="too short"),
-            Row(doc_id=10, text="alpha beta gamma delta"),
-            Row(doc_id=1, text="alpha beta gamma unrelated tail"),
-            Row(doc_id=2, text="completely different train text here"),
-            Row(doc_id=3, text="x"),
-        ]
-    )
-    out = {r["doc_id"]: r for r in contamination_overlap_fraction(docs).collect()}
-    assert set(out) == {0, 10}
-    z = out[0]
-    assert (z["n_shingles"], z["n_hit"], z["dirty_frac"], z["is_dirty"]) == (
-        1,  # the whole-text shingle "too short"
-        0,
-        0.0,
-        False,
-    )
-    hit = out[10]
-    assert hit["n_shingles"] == 2  # two trigrams in a 4-word doc
-    assert hit["n_hit"] == 1  # "alpha beta gamma" leaks from doc 1
-    assert hit["dirty_frac"] == pytest.approx(0.5)
-    assert bool(hit["is_dirty"]) is True
-
-
-# Regression tests: the
-# greedy-picker MAX_GREEDY_K guards, pq_ann_topk's injected-codebook shape
-# validation, the hashed-shingle decontamination path, and the Arrow ADC
-# scan's bit-equality with a hand-computed golden.
-
-
-def test_decontaminate_hashed_equals_string_shingles(spark):
-    """hash_shingles=True must produce the identical pair set as the raw
-    string-keyed path (60-bit md5 buckets; collisions are negligible and
-    absent on a toy corpus)."""
-    docs = spark.createDataFrame(
-        [
-            Row(id=1, text="a b c d e f g h"),
-            Row(id=2, text="a b c d e f x y"),
-            Row(id=3, text="p q r s t u v w"),
-        ]
-    ).withColumn(
-        "split",
-        F.when(F.col("id") == 2, F.lit("test")).otherwise(F.lit("train")),
-    )
-    kw = dict(min_shared=3, max_df=100)
-    hashed = sorted(
-        tuple(r) for r in sampling.cross_split_contamination(
-            docs, hash_shingles=True, **kw
-        ).collect()
-    )
-    raw = sorted(
-        tuple(r) for r in sampling.cross_split_contamination(
-            docs, hash_shingles=False, **kw
-        ).collect()
-    )
-    assert hashed == raw
-    assert hashed, "planted overlap must be detected"

@@ -1,15 +1,13 @@
 """IVF ANN: structural invariants + recall vs the brute-force baseline,
 and the BPE-ish token counter's agreement with a pure-Python recount."""
 
-import os
 import re
 
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import similarity, textstats
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_ivf_topk_invariants_and_recall(spark):

@@ -2,24 +2,12 @@
 within the advertised error bounds, and the exact forms must agree with a
 pure-Python recount."""
 
-from __future__ import annotations
-
 import math
-import random
-from decimal import Decimal
 
-import duckdb
-import pytest
-from conftest import SF_DIR, plan_text
-from pyspark.sql import Row, functions as F
+from conftest import SF_DIR
 
-import rss_feed_etl_spark.functions.hashing as hashing
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import sketches
-from rss_feed_etl_spark.operators.sketches import (
-    bloom_filter_plan,
-    kmv_distinct_estimate,
-)
 
 
 def test_approx_distinct_within_rsd(spark):
@@ -81,6 +69,9 @@ def test_exact_percentile_matches_python(spark):
 
 
 def test_heavy_hitters_equal_exact_topk(spark):
+    from pyspark.sql import functions as F
+
+    from rss_feed_etl_spark import testdata as td
     from rss_feed_etl_spark.operators.sketches import heavy_hitters_topk
     from rss_feed_etl_spark.functions.text import tokens
     from rss_feed_etl_spark.operators.textstats import STOPWORDS_EN
@@ -108,479 +99,3 @@ def test_heavy_hitters_equal_exact_topk(spark):
     assert [(r.term, r.n_occurrences) for r in pruned2] == [
         (r.term, r.n_occurrences) for r in exact
     ]
-
-
-# Transition-graph PageRank, session path mining, grouped
-# z-score, shingle novelty, HLL rollup.
-
-
-def test_grouped_zscore_cuts_tail(spark):
-    rows = [(i, "s", float(v)) for i, v in enumerate([10, 10, 10, 10, 1000])]
-    df = spark.createDataFrame(rows, "doc_id bigint, source string, n_chars double")
-    kept = sketches.grouped_zscore(df, z_cut=1.5).collect()
-    ids = {r["doc_id"] for r in kept}
-    assert 4 not in ids and len(ids) == 4
-    for r in kept:
-        assert abs(r["zscore"]) <= 1.5
-
-
-def test_grouped_zscore_constant_group_not_kept_as_nan(spark):
-    df = spark.createDataFrame(
-        [(1, "s", 5.0), (2, "s", 5.0)], "doc_id bigint, source string, n_chars double"
-    )
-    # sd = 0 -> z NULL -> filtered out (never NaN/crash)
-    assert sketches.grouped_zscore(df).count() == 0
-
-
-# Hard-negative mining and MAD outliers.
-
-
-def test_mad_outliers_flags_planted_spike(spark):
-    rows = [Row(event_id=i, event_type="a", value=10.0 + (i % 5) * 0.1) for i in range(100)]
-    rows += [Row(event_id=1000, event_type="a", value=500.0)]
-    # group b is all-identical → MAD 0 → z undefined (null), never flagged
-    rows += [Row(event_id=2000 + i, event_type="b", value=7.0) for i in range(10)]
-    out = sketches.mad_outliers(spark.createDataFrame(rows)).collect()
-    assert [r["event_id"] for r in out] == [1000]
-    assert out[0]["robust_z"] > 100
-
-
-# Volume anomalies, chi-square drift cells,
-# distributed moment combination.
-
-
-def test_contingency_chi2_independent_table_is_zero(spark):
-    # perfectly independent 2x2: every cell observed == expected
-    rows = []
-    i = 0
-    for src in ("a", "b"):
-        for lang in ("en", "de"):
-            for _ in range(10):
-                rows.append((i, src, lang))
-                i += 1
-    df = spark.createDataFrame(rows, "doc_id bigint, source string, lang string")
-    out = sketches.contingency_chi2(df).collect()
-    assert len(out) == 4
-    for r in out:
-        assert r["chi2_contrib"] == 0.0
-        assert r["observed"] == 10 and r["expected"] == 10.0
-
-
-def test_contingency_chi2_materializes_zero_cells(spark):
-    df = spark.createDataFrame(
-        [(1, "a", "en"), (2, "b", "de")], "doc_id bigint, source string, lang string"
-    )
-    out = {(r["source"], r["lang"]): r for r in sketches.contingency_chi2(df).collect()}
-    assert len(out) == 4  # full 2x2 grid including the two zero cells
-    assert out[("a", "de")]["observed"] == 0
-    assert out[("a", "de")]["expected"] == 0.5
-
-
-def test_mergeable_moments_equal_direct(spark):
-    vals = [3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0, 6.0, 5.0, 3.0, 5.0]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "doc_id bigint, n_chars double"
-    )
-    out = sketches.mergeable_moments(df, shard_expr="doc_id % 3").collect()[0]
-    n = len(vals)
-    mean = sum(vals) / n
-    var = sum((v - mean) ** 2 for v in vals) / n
-    assert out["n_rows"] == n
-    assert out["mean"] == pytest.approx(mean, abs=1e-6)
-    assert out["stddev_pop"] == pytest.approx(math.sqrt(var), abs=1e-6)
-
-
-def test_mergeable_moments_invariant_to_shard_count(spark):
-    df = spark.range(100).selectExpr("id AS doc_id", "CAST(id * id % 97 AS DOUBLE) AS n_chars")
-    a = sketches.mergeable_moments(df, shard_expr="doc_id % 2").collect()[0]
-    b = sketches.mergeable_moments(df, shard_expr="doc_id % 16").collect()[0]
-    assert a == b
-
-
-# JL random projection and distributed global percent-rank.
-
-
-def test_global_percent_rank_matches_window_form(spark):
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate([5, 1, 3, 3, 9])],
-        "event_id bigint, value double",
-    )
-    got = {
-        r["event_id"]: r["pct_rank"]
-        for r in sketches.global_percent_rank(df).collect()
-    }
-    # percent_rank over [1,3,3,5,9]: 1->0, 3->0.25 (both), 5->0.75, 9->1
-    assert got[1] == 0.0
-    assert got[2] == got[3] == 0.25
-    assert got[0] == 0.75
-    assert got[4] == 1.0
-
-
-def test_global_percent_rank_plan_never_sorts_facts_globally(spark):
-    import contextlib, io
-
-    df = spark.range(1000).select(
-        F.col("id").alias("event_id"), (F.col("id") % 37).cast("double").alias("value")
-    )
-    plan_df = sketches.global_percent_rank(df)
-    s = plan_text(plan_df)
-    # the facts join the value-grain rank table broadcast — no
-    # SortMergeJoin, no fact-side global sort feeding a Window
-    assert "BroadcastHashJoin" in s
-    assert "SortMergeJoin" not in s
-
-
-# Count-min estimates, winnowing fingerprints, tf-idf keywords,
-# reciprocal-rank fusion.
-
-
-def test_countmin_never_undercounts(spark):
-    rows = [(i % 7,) for i in range(200)] + [(99,)] * 50
-    df = spark.createDataFrame(rows, "k long")
-    out = sketches.countmin_estimates(df, "k", depth=4, width=64).collect()
-    assert len(out) == 8
-    assert all(r["est_n"] >= r["exact_n"] for r in out)
-
-
-def test_countmin_tight_with_wide_sketch(spark):
-    df = spark.createDataFrame([(i % 5,) for i in range(100)], "k long")
-    out = sketches.countmin_estimates(df, "k", depth=4, width=1024).collect()
-    # 5 keys in 1024 buckets × 4 rows: collision in every row is (~5/1024)^4
-    assert all(r["est_n"] == r["exact_n"] for r in out)
-
-
-def test_countmin_sketch_is_fixed_size(spark):
-    df = spark.createDataFrame([(i,) for i in range(500)], "k long")
-    sk = sketches.countmin_sketch(df, "k", depth=3, width=16)
-    assert sk.count() <= 3 * 16
-    total = sk.agg(F.sum("n")).collect()[0][0]
-    assert total == 500 * 3  # every key lands once per row
-
-
-# Bootstrap CI, DP noisy counts, DOW seasonal residuals.
-
-
-def test_bootstrap_ci_brackets_the_mean(spark):
-    rows = [(i, "a", 10.0 + (i % 5)) for i in range(300)]
-    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
-    r = sketches.bootstrap_ci(
-        df, value_col="value", group_col="event_type", id_col="event_id"
-    ).collect()[0]
-    assert r["ci_lo"] <= r["mean"] <= r["ci_hi"]
-    assert r["ci_hi"] - r["ci_lo"] < 1.0  # tight for 300 iid rows
-    assert r["n"] == 300
-
-
-def test_bootstrap_ci_partitioning_invariant(spark):
-    rows = [(i, "g", float(i % 13)) for i in range(200)]
-    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
-    a = sketches.bootstrap_ci(df, "value", "event_type", "event_id").collect()[0]
-    b = sketches.bootstrap_ci(
-        df.repartition(11), "value", "event_type", "event_id"
-    ).collect()[0]
-    assert (a["ci_lo"], a["ci_hi"]) == (b["ci_lo"], b["ci_hi"])
-
-
-def test_dp_counts_bounded_noise(spark):
-    df = spark.createDataFrame(
-        [(i, f"t{i % 4}") for i in range(400)], "id long, event_type string"
-    )
-    out = sketches.dp_noisy_counts(df, "event_type", epsilon=1.0).collect()
-    assert len(out) == 4
-    for r in out:
-        assert r["exact_n"] == 100
-        assert r["noisy_n"] != r["exact_n"]  # noise applied
-        # Laplace(1) noise beyond ±15 has probability ~3e-7 per group
-        assert abs(r["noisy_n"] - r["exact_n"]) < 15.0
-
-
-# Winsorized means, n-gram diversity, FK profiling.
-
-
-def test_winsorized_mean_resists_outlier(spark):
-    rows = [(i, "g", 10.0) for i in range(99)] + [(99, "g", 10_000.0)]
-    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
-    r = sketches.winsorized_means(df).collect()[0]
-    assert r["raw_mean"] > 100  # outlier wrecks the raw mean
-    assert r["winsorized_mean"] < 20  # clipped mean barely moves
-    assert r["n"] == 100
-
-
-# Golden-record survivorship, incremental aggregate maintenance,
-# join cardinality estimation.
-
-
-# --- combine_aggregates -----------------------------------------------------
-
-
-def test_combine_aggregates_equals_full_recompute(spark):
-    rng = random.Random(5)
-    rows = [(i, f"k{i % 7}", round(rng.uniform(-10, 100), 2)) for i in range(500)]
-    df = spark.createDataFrame(rows, "i bigint, k string, v double")
-    old = df.filter(F.col("i") < 300)
-    batch = df.filter(F.col("i") >= 300)
-    old_agg = old.groupBy("k").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("v").alias("total"),
-        F.min("v").alias("vmin"),
-        F.max("v").alias("vmax"),
-    )
-    got = {
-        r["k"]: r
-        for r in sketches.combine_aggregates(old_agg, batch, "k", "v").collect()
-    }
-    want = {
-        r["k"]: r
-        for r in df.groupBy("k").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(F.sum("v"), 2).alias("total"),
-            F.min("v").alias("vmin"),
-            F.max("v").alias("vmax"),
-            F.round(F.sum("v") / F.count("*"), 6).alias("mean"),
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k]["n"] == want[k]["n"]
-        assert math.isclose(got[k]["total"], want[k]["total"], abs_tol=0.02)
-        assert got[k]["vmin"] == want[k]["vmin"]
-        assert got[k]["vmax"] == want[k]["vmax"]
-
-
-def test_combine_aggregates_new_and_stale_keys(spark):
-    old_agg = spark.createDataFrame(
-        [("a", 2, 10.0, 1.0, 9.0)], "k string, n bigint, total double, vmin double, vmax double"
-    )
-    batch = spark.createDataFrame([("b", 5.0)], "k string, v double")
-    out = {r["k"]: r for r in sketches.combine_aggregates(old_agg, batch, "k", "v").collect()}
-    # stale key untouched, new key appears
-    assert out["a"]["n"] == 2 and out["a"]["vmax"] == 9.0
-    assert out["b"]["n"] == 1 and out["b"]["vmin"] == 5.0
-
-
-# Weighted percentiles and source Jaccard matrix.
-
-
-def test_weighted_percentiles_known_cdf(spark):
-    # values 10 (weight 50), 20 (weight 30), 30 (weight 20): W=100
-    # wp50 -> first v with cum >= 50 is 10; wp90 -> 30; wp99 -> 30
-    rows = []
-    i = 0
-    for v, w in [(10.0, 50), (20.0, 30), (30.0, 20)]:
-        rows.append(Row(l_orderkey=i, l_extendedprice=v, l_quantity=float(w)))
-        i += 1
-    out = sketches.weighted_percentiles(spark.createDataFrame(rows)).collect()[0]
-    assert out["w_total"] == 100
-    assert out["wp50"] == 10
-    assert out["wp90"] == 30
-    assert out["wp99"] == 30
-
-
-def test_weighted_vs_unweighted_disagree(spark):
-    # many cheap rows with huge weight vs few expensive rows with tiny
-    # weight: unweighted median is high, weighted median stays low
-    rows = [Row(l_orderkey=0, l_extendedprice=5.0, l_quantity=1000.0)]
-    rows += [
-        Row(l_orderkey=i, l_extendedprice=500.0, l_quantity=1.0)
-        for i in range(1, 100)
-    ]
-    out = sketches.weighted_percentiles(spark.createDataFrame(rows)).collect()[0]
-    assert out["wp50"] == 5  # weight mass sits on the cheap value
-    assert out["wp99"] == 500
-
-
-# Overdispersion check and histogram percentile error.
-
-
-def test_histogram_percentile_within_one_bin(spark):
-    rnd = random.Random(21)
-    rows = [
-        Row(event_id=i, event_type="t", value=rnd.uniform(0, 400))
-        for i in range(5000)
-    ]
-    out = sketches.histogram_percentile_error(
-        spark.createDataFrame(rows), lo=0.0, hi=500.0, n_bins=100
-    ).collect()
-    assert len(out) == 3
-    for r in out:
-        assert r["within_one_bin"] == 1
-        assert r["abs_err"] <= 5.0
-    # uniform 0..400: p50 near 200
-    p50 = [r for r in out if r["p"] == 0.5][0]
-    assert 180 < p50["est"] < 220
-
-
-def test_histogram_is_mergeable_across_batches(spark):
-    # the property the operator exists for: hist(A ∪ B) == hist(A)+hist(B)
-    # -> estimate from the union equals estimate from merged bucket counts
-
-    rnd = random.Random(4)
-    a = [Row(event_id=i, event_type="t", value=rnd.uniform(0, 300)) for i in range(2000)]
-    b = [Row(event_id=9000 + i, event_type="t", value=rnd.uniform(100, 500)) for i in range(2000)]
-    full = sketches.histogram_percentile_error(
-        spark.createDataFrame(a + b), lo=0.0, hi=500.0, n_bins=50
-    ).collect()
-    # recompute the union estimate from separately-built bucket counts
-    def buckets(rows):
-        out = {}
-        for r in rows:
-            v = r["value"]
-            k = 0 if v < 0 else (51 if v >= 500 else int(v // 10) + 1)
-            out[k] = out.get(k, 0) + 1
-        return out
-    ba, bb = buckets(a), buckets(b)
-    merged = {k: ba.get(k, 0) + bb.get(k, 0) for k in set(ba) | set(bb)}
-    n = sum(merged.values())
-    for r in full:
-        target = math.ceil(r["p"] * n)
-        cum = 0
-        for k in sorted(merged):
-            cum += merged[k]
-            if cum >= target:
-                assert abs(r["est"] - (0.0 + (k - 1) * 10.0)) < 1e-9
-                break
-
-
-# Incremental histogram fold and token Gini.
-
-
-def test_histogram_fold_equals_one_shot(spark):
-    schema = "event_id long, value double"
-    old = spark.createDataFrame([(i, float(v)) for i, v in enumerate([5, 105, 499.99, 600])], schema)
-    batch = spark.createDataFrame([(10, 5.005), (11, -3.0), (12, 105.0)], schema)
-    old_hist = sketches.incremental_histogram_fold(
-        spark.createDataFrame([], "bucket bigint, n bigint, total double"),
-        old,
-    )
-    folded = {
-        r.bucket: r
-        for r in sketches.incremental_histogram_fold(old_hist, batch).collect()
-    }
-    want = {
-        r.bucket: r
-        for r in sketches.incremental_histogram_fold(
-            spark.createDataFrame([], "bucket bigint, n bigint, total double"),
-            old.unionAll(batch),
-        ).collect()
-    }
-    assert set(folded) == set(want)
-    for b in want:
-        assert folded[b].n == want[b].n
-        assert folded[b].total == want[b].total
-        assert folded[b].total_exact == want[b].total_exact
-    # structural expectations: underflow bucket 0 (-3), overflow 21 (600)
-    assert folded[0].n == 1 and folded[21].n == 1
-    # 2dp-boundary value folded exactly (decimal accumulator, not display)
-    assert folded[1].total_exact == Decimal("10.0050000000")
-
-
-# T-closeness EMD and the KMV distinct sketch.
-
-
-def test_kmv_small_groups_exact_mode(spark):
-    rows = [Row(g="a", k=i) for i in range(5)] + [Row(g="b", k=i) for i in range(3)]
-    out = {
-        r["scope"]: r
-        for r in kmv_distinct_estimate(
-            spark.createDataFrame(rows), "k", "g", k=12
-        ).collect()
-    }
-    # below k distinct -> the sketch holds everything: estimate exact
-    assert out["a"]["kmv_estimate"] == pytest.approx(5.0)
-    assert out["a"]["rel_err"] == pytest.approx(0.0)
-    assert out["b"]["kmv_estimate"] == pytest.approx(3.0)
-    assert out["__union__"]["exact_distinct"] == 5  # same key space unions
-
-
-def test_kmv_estimation_mode_reasonable(spark):
-    rows = [Row(g="big", k=i) for i in range(500)]
-    out = {
-        r["scope"]: r
-        for r in kmv_distinct_estimate(
-            spark.createDataFrame(rows), "k", "g", k=12
-        ).collect()
-    }
-    r = out["big"]
-    assert r["exact_distinct"] == 500
-    # KMV with k=12 is noisy but must land within ~3/sqrt(k-1) ~ 90%
-    assert abs(r["rel_err"]) < 0.9
-    # union of one group == the group
-    assert out["__union__"]["kmv_estimate"] == r["kmv_estimate"]
-
-
-# Bloom-filter sizing planner + truncation token-loss curve.
-
-
-def test_bloom_plan_hand_golden(spark):
-    # 3 distinct keys; r=8 -> k = round(8 ln2) = 6, m = 24 bits = 3 bytes,
-    # fpr = (1 - e^(-6/8))^6
-    ev = spark.createDataFrame(
-        [Row(user_id=u) for u in (1, 2, 2, 3, 3, 3)]
-    )
-    out = {
-        r["bits_per_key"]: r
-        for r in bloom_filter_plan(ev, bits_per_key=(8, 16)).collect()
-    }
-    r8 = out[8]
-    assert r8["n_keys"] == 3
-    assert r8["k_hashes"] == 6
-    assert r8["m_bits"] == 24
-    assert r8["filter_bytes"] == 3
-    base = round(1.0 - math.exp(-6 / 8), 9)
-    assert r8["fpr"] == pytest.approx(base**6, abs=1e-6)
-    # more bits -> strictly lower fpr
-    assert out[16]["fpr"] < r8["fpr"]
-    assert out[16]["k_hashes"] == 11  # round(16 ln2) = 11
-
-
-# Regression tests: filtered_ann_recall's achievable-set
-# denominator, the textstats persisted-frame release pool (MI count table,
-# DSIR stream, curation corpus), the query_clarity_score degenerate-corpus
-# shape (one row, both engines), and the KMV kth-hash == 0 guard.
-
-
-def test_kmv_kth_hash_zero_guard(spark, monkeypatch):
-    # force every key's hash to 0: with k=1 each group's kth-minimum hash
-    # IS 0 and the estimate must be NULL (guarded), never a div-by-zero
-    # artifact.  nd == 1 == k, so the small-cardinality exact mode does
-    # not mask the edge.
-    monkeypatch.setattr(
-        hashing, "md5_bucket", lambda c: F.lit(0).cast("long")
-    )
-    ev = spark.createDataFrame(
-        [Row(event_type="x", user_id=i) for i in range(5)]
-        + [Row(event_type="y", user_id=i) for i in range(3)]
-    )
-    out = {
-        r["scope"]: r
-        for r in kmv_distinct_estimate(
-            ev, key_col="user_id", group_col="event_type", k=1
-        ).collect()
-    }
-    assert set(out) == {"x", "y", "__union__"}
-    for r in out.values():
-        assert r["exact_distinct"] == 1  # all hashes collapsed
-        assert r["kmv_estimate"] is None
-        assert r["rel_err"] is None
-    # and DuckDB's CASE WHEN renders the same NULL for the hk=0 edge
-    con = duckdb.connect()
-    assert con.execute(
-        "SELECT CASE WHEN 5 < 1 THEN 5.0 WHEN 0 > 0 THEN 1.0/0 END"
-    ).fetchone() == (None,)
-    con.close()
-
-
-def test_kmv_normal_path_unchanged(spark):
-    # sanity: with the real hash and k below the distinct count, the
-    # estimation path still yields a finite non-null estimate
-    ev = spark.createDataFrame(
-        [Row(event_type="x", user_id=i) for i in range(40)]
-    )
-    out = {
-        r["scope"]: r
-        for r in kmv_distinct_estimate(
-            ev, key_col="user_id", group_col="event_type", k=4
-        ).collect()
-    }
-    assert out["x"]["exact_distinct"] == 40
-    assert out["x"]["kmv_estimate"] is not None and out["x"]["kmv_estimate"] > 0

@@ -1,15 +1,10 @@
 """RSS source (stub fetcher), ETL pipeline, streaming foreachBatch merge,
 multimodal stubs, enrichment operator."""
 
-from __future__ import annotations
-
 import datetime as dt
-import json
-import math
-import os
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators.enrichment import (
     deterministic_stub_client_factory,
@@ -23,17 +18,12 @@ from rss_feed_etl_spark.operators.multimodal import (
 from rss_feed_etl_spark.plans.enrichment_pipeline import run_enrichment
 from rss_feed_etl_spark.plans.etl_pipeline import run_etl
 from rss_feed_etl_spark.schemas import STAGE_SCHEMA
-from rss_feed_etl_spark.sources import jsonio, parquet as pq
 from rss_feed_etl_spark.sources.rss import parse_feed_xml, read_feeders
 from rss_feed_etl_spark.streaming.incremental import (
-    enrich_stream_to_parquet,
-    incremental_join_view,
-    incremental_join_view_right,
     incremental_scd1,
     read_stage_stream,
     windowed_event_counts,
 )
-
 
 RSS_XML = """<?xml version="1.0"?>
 <rss version="2.0"><channel><title>Jobs Feed</title>
@@ -246,6 +236,8 @@ def test_csv_roundtrip_drops_blank_descriptions(spark, tmp_path):
 
 
 def test_jsonl_roundtrip_quarantines_corrupt_lines(spark, tmp_path):
+    import os
+
     from pyspark.sql import types as T
 
     from rss_feed_etl_spark.sources.jsonio import (
@@ -295,6 +287,8 @@ def test_streaming_watermark_drops_late_rows_across_restart(spark, tmp_path):
     from datetime import datetime
 
     from pyspark.sql import types as T
+
+    from rss_feed_etl_spark.streaming.incremental import windowed_event_counts
 
     schema = T.StructType(
         [
@@ -680,6 +674,10 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
 
 
 def test_incremental_stats_sink_folds_to_batch_equivalence(spark, tmp_path):
+    import math
+
+    from pyspark.sql import functions as F
+
     from rss_feed_etl_spark.streaming.incremental import incremental_stats_sink
 
     landing = tmp_path / "stats_landing"
@@ -808,251 +806,3 @@ def test_fold_stats_batch_migrates_legacy_snapshot_without_total_exact(
     assert fold_stats_batch(spark, spark.createDataFrame([(10, "a", 4.0)], schema), 2, agg_path)
     got2 = {r["event_type"]: r for r in spark.read.parquet(agg_path).collect()}
     assert got2["a"]["n"] == 5 and got2["a"]["total"] == 40.0
-
-
-# Embedding covariance / PCA and fractional-epoch upsampling,
-# plus the JSONL shard-export sink.
-
-
-def test_write_jsonl_shards_manifest(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(200)], "doc_id bigint, text string"
-    )
-    path = str(tmp_path / "export")
-    manifest = jsonio.write_jsonl_shards(
-        df, path, n_shards=4, shard_key="doc_id", compression=None
-    ).collect()
-    meta = json.load(open(os.path.join(path, "_manifest.json")))
-    assert meta["n_shards"] == 4
-    assert sum(s["n_rows"] for s in meta["shards"]) == 200
-    assert len({s["checksum"] for s in meta["shards"]}) >= 3  # shards differ
-    # shard dirs exist and rows round-trip
-    back = spark.read.schema("doc_id long, text string").json(path + "/__shard=*")
-    assert back.count() == 200
-    assert {r["shard"] for r in manifest} == {0, 1, 2, 3}
-
-
-# Retrieve→rerank, bag-of-words dedup, compaction planning.
-
-
-def test_compaction_plan_bins_respect_target(spark):
-    files = spark.createDataFrame(
-        [("p", f"f{i}", b) for i, b in enumerate([900, 800, 300, 250, 200, 100, 50])],
-        "part string, file_id string, bytes bigint",
-    )
-    out = pq.plan_compaction(
-        files, partition_col="part", file_col="file_id",
-        bytes_col="bytes", target_bytes=1000,
-    ).collect()
-    bins = {}
-    for r in out:
-        bins.setdefault(r["bin"], []).append(r["bytes"])
-    # every file assigned exactly once, bins contiguous from 0
-    assert sum(len(v) for v in bins.values()) == 7
-    assert set(bins) == set(range(len(bins)))
-    # next-fit bound: each bin except possibly the last holds < target +
-    # its largest member (the cumsum split can't overshoot by more)
-    for b, sizes in bins.items():
-        assert sum(sizes) < 1000 + max(sizes)
-    # bin_bytes/n_bin_files agree with the grouping
-    for r in out:
-        assert r["bin_bytes"] == sum(bins[r["bin"]])
-        assert r["n_bin_files"] == len(bins[r["bin"]])
-
-
-# Tukey fences and per-batch-refreshed stream enrichment.
-
-
-def test_stream_enrich_refreshes_dim_between_batches(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    dim_path = str(tmp_path / "dim")
-    target = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    # dim v1
-    spark.createDataFrame(
-        [Row(source="a", tier="bronze"), Row(source="b", tier="silver")]
-    ).write.mode("overwrite").parquet(dim_path)
-    # batch 1
-    spark.createDataFrame(
-        [Row(doc_id=1, source="a"), Row(doc_id=2, source="zzz")]
-    ).write.mode("append").parquet(landing)
-    stream = (
-        spark.readStream.schema("doc_id long, source string").parquet(landing)
-    )
-    q = enrich_stream_to_parquet(stream, dim_path, "source", target, ckpt)
-    q.awaitTermination(120)
-    t1 = {r["doc_id"]: r["tier"] for r in spark.read.parquet(target).collect()}
-    assert t1 == {1: "bronze", 2: None}  # left join: no-match flows through
-
-    # dim updated BETWEEN batches: a promotes to gold
-    spark.createDataFrame(
-        [Row(source="a", tier="gold"), Row(source="b", tier="silver")]
-    ).write.mode("overwrite").parquet(dim_path)
-    # batch 2: another 'a' doc
-    spark.createDataFrame([Row(doc_id=3, source="a")]).write.mode("append").parquet(
-        landing
-    )
-    stream2 = (
-        spark.readStream.schema("doc_id long, source string").parquet(landing)
-    )
-    q2 = enrich_stream_to_parquet(stream2, dim_path, "source", target, ckpt)
-    q2.awaitTermination(120)
-    t2 = {r["doc_id"]: r["tier"] for r in spark.read.parquet(target).collect()}
-    # old rows keep their as-of enrichment; the new row sees the NEW dim
-    assert t2[1] == "bronze" and t2[3] == "gold"
-
-
-def test_enriched_read_view_equivalent_across_compaction(spark, tmp_path):
-    """VERDICT r5 #7: the per-epoch sink's reader view must hide the
-    __epoch bookkeeping column and return identical rows before and after
-    compacting old epochs into the base partition, and compaction must
-    actually remove the folded epoch directories (the small-file bound)."""
-    from rss_feed_etl_spark.streaming.incremental import (
-        compact_enriched_epochs,
-        enriched_read_view,
-    )
-
-    landing = str(tmp_path / "landing")
-    dim_path = str(tmp_path / "dim")
-    target = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [Row(source="a", tier="bronze"), Row(source="b", tier="silver")]
-    ).write.mode("overwrite").parquet(dim_path)
-    # three epochs, one row each
-    for i, src in enumerate(["a", "b", "a"]):
-        spark.createDataFrame([Row(doc_id=i, source=src)]).write.mode(
-            "append"
-        ).parquet(landing)
-        stream = spark.readStream.schema("doc_id long, source string").parquet(
-            landing
-        )
-        q = enrich_stream_to_parquet(stream, dim_path, "source", target, ckpt)
-        q.awaitTermination(120)
-
-    before = {
-        (r["doc_id"], r["source"], r["tier"])
-        for r in enriched_read_view(spark, target).collect()
-    }
-    assert before == {(0, "a", "bronze"), (1, "b", "silver"), (2, "a", "bronze")}
-    assert "__epoch" not in enriched_read_view(spark, target).columns
-
-    epoch_dirs = [d for d in os.listdir(target) if d.startswith("__epoch=")]
-    assert len(epoch_dirs) >= 3  # one per epoch before compaction
-
-    assert compact_enriched_epochs(spark, target, upto_epoch=1)
-    after = {
-        (r["doc_id"], r["source"], r["tier"])
-        for r in enriched_read_view(spark, target).collect()
-    }
-    assert after == before  # read-view equivalence across compaction
-    remaining = sorted(
-        d for d in os.listdir(target) if d.startswith("__epoch=")
-    )
-    assert "__epoch=-1" in remaining
-    assert not any(d in ("__epoch=0", "__epoch=1") for d in remaining)
-    # epochs beyond the watermark are untouched (still individually
-    # replay-overwritable)
-    assert any(d not in ("__epoch=-1",) for d in remaining)
-
-    # compacting again with nothing new below the watermark still folds
-    # the base into itself harmlessly (idempotent view)
-    assert compact_enriched_epochs(spark, target, upto_epoch=1)
-    assert {
-        (r["doc_id"], r["source"], r["tier"])
-        for r in enriched_read_view(spark, target).collect()
-    } == before
-
-
-def test_compaction_crash_window_is_self_healing(spark, tmp_path):
-    """ADVICE r6: a compaction that dies AFTER the base overwrite commits
-    but BEFORE the folded __epoch=N directories are deleted must not
-    surface duplicates (the base records __folded_upto atomically with the
-    fold) and a rerun must heal — delete the leftovers, never fold the
-    duplicate copy in permanently."""
-    import shutil
-
-    from rss_feed_etl_spark.streaming.incremental import (
-        compact_enriched_epochs,
-        enriched_read_view,
-    )
-
-    landing = str(tmp_path / "landing")
-    dim_path = str(tmp_path / "dim")
-    target = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [Row(source="a", tier="bronze"), Row(source="b", tier="silver")]
-    ).write.mode("overwrite").parquet(dim_path)
-    for i, src in enumerate(["a", "b", "a"]):
-        spark.createDataFrame([Row(doc_id=i, source=src)]).write.mode(
-            "append"
-        ).parquet(landing)
-        stream = spark.readStream.schema("doc_id long, source string").parquet(
-            landing
-        )
-        q = enrich_stream_to_parquet(stream, dim_path, "source", target, ckpt)
-        q.awaitTermination(120)
-    before = {
-        (r["doc_id"], r["source"], r["tier"])
-        for r in enriched_read_view(spark, target).collect()
-    }
-
-    # stash the to-be-folded epoch dirs, compact, then restore them --
-    # byte-identical to a crash between the overwrite and the deletes
-    stash = tmp_path / "stash"
-    for d in ("__epoch=0", "__epoch=1"):
-        shutil.copytree(os.path.join(target, d), stash / d)
-    assert compact_enriched_epochs(spark, target, upto_epoch=1)
-    for d in ("__epoch=0", "__epoch=1"):
-        shutil.copytree(stash / d, os.path.join(target, d))
-
-    # duplicates exist on disk, but the read view must not surface them
-    rows = [
-        (r["doc_id"], r["source"], r["tier"])
-        for r in enriched_read_view(spark, target).collect()
-    ]
-    assert len(rows) == len(before) and set(rows) == before
-
-    # the rerun heals: leftovers deleted, rows STILL not duplicated
-    assert compact_enriched_epochs(spark, target, upto_epoch=1)
-    remaining = {d for d in os.listdir(target) if d.startswith("__epoch=")}
-    assert "__epoch=0" not in remaining and "__epoch=1" not in remaining
-    rows2 = [
-        (r["doc_id"], r["source"], r["tier"])
-        for r in enriched_read_view(spark, target).collect()
-    ]
-    assert len(rows2) == len(before) and set(rows2) == before
-
-
-# Digit forensics and incremental join-view maintenance.
-
-
-def test_incremental_join_fold_equals_batch(spark, tmp_path):
-    lp, rp, op = (str(tmp_path / p) for p in ("L", "R", "OUT"))
-    # seed both sides with empty-compatible bases
-    spark.createDataFrame([], "k long, lv string").write.parquet(lp)
-    spark.createDataFrame([], "k long, rv string").write.parquet(rp)
-    spark.createDataFrame([], "k long, lv string, rv string").write.parquet(op)
-
-    l1 = spark.createDataFrame([Row(k=1, lv="a"), Row(k=2, lv="b")])
-    r1 = spark.createDataFrame([Row(k=1, rv="X")])
-    l2 = spark.createDataFrame([Row(k=1, lv="a2"), Row(k=3, lv="c")])
-    r2 = spark.createDataFrame([Row(k=2, rv="Y"), Row(k=3, rv="Z")])
-
-    incremental_join_view(spark, l1, lp, rp, op, "k")      # ΔL1 ⋈ R(∅)
-    incremental_join_view_right(spark, r1, lp, rp, op, "k")  # L ⋈ ΔR1
-    incremental_join_view(spark, l2, lp, rp, op, "k")      # ΔL2 ⋈ R
-    incremental_join_view_right(spark, r2, lp, rp, op, "k")  # L ⋈ ΔR2
-
-    got = {(r["k"], r["lv"], r["rv"])
-           for r in spark.read.parquet(op).collect()}
-    full = {
-        (r["k"], r["lv"], r["rv"])
-        for r in spark.read.parquet(lp).join(spark.read.parquet(rp), "k").collect()
-    }
-    assert got == full
-    # spot-check the expected pairs exist
-    assert (1, "a", "X") in got and (1, "a2", "X") in got
-    assert (2, "b", "Y") in got and (3, "c", "Z") in got

@@ -1,13 +1,8 @@
 """Stateful streaming sessionization (applyInPandasWithState) and the
 skew-salted join: semantics match their batch/plain-join equivalents."""
 
-import datetime as dt
-
+from conftest import ts
 from pyspark.sql import functions as F
-
-
-def ts(s):
-    return dt.datetime.fromisoformat(s)
 
 
 def _drain_and_stop(q, done, timeout=120):

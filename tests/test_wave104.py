@@ -2,15 +2,12 @@
 
 from __future__ import annotations
 
-import os
-
+from conftest import SF_DIR, skip_without_testdata
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import similarity, vecmath
 from rss_feed_etl_spark.operators.clustering import _prep
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _exact_top10(spark, emb, qid=0):
@@ -30,10 +27,7 @@ def test_pq_ann_recall_bound_vs_exact(spark):
     """The ADC shortlist must put at least half the true top-10 in front
     of the exact rerank even at a tight candidate budget; a
     corpus-covering budget recovers the exact answer (rerank == exact)."""
-    if not os.path.exists(f"{SF_DIR}/embeddings.parquet"):
-        import pytest
-
-        pytest.skip("testdata not present")
+    skip_without_testdata("embeddings")
     emb = td.load_table(spark, SF_DIR, "embeddings")
     exact = _exact_top10(spark, emb)
     tight = {
@@ -56,10 +50,7 @@ def test_batched_codebooks_match_per_subspace_loop(spark):
     trajectory of the per-subspace seed_rank Lloyd loop — the oracle
     CTEs replay the per-subspace form, so any divergence is a parity
     break."""
-    if not os.path.exists(f"{SF_DIR}/embeddings.parquet"):
-        import pytest
-
-        pytest.skip("testdata not present")
+    skip_without_testdata("embeddings")
     from rss_feed_etl_spark.operators.clustering import _kmeans_centroids_prepped
     from rss_feed_etl_spark.operators.similarity import (
         _pq_codebooks,
@@ -81,10 +72,7 @@ def test_batched_codebooks_match_per_subspace_loop(spark):
 
 
 def test_pq_ann_output_contract(spark):
-    if not os.path.exists(f"{SF_DIR}/embeddings.parquet"):
-        import pytest
-
-        pytest.skip("testdata not present")
+    skip_without_testdata("embeddings")
     emb = td.load_table(spark, SF_DIR, "embeddings")
     rows = similarity.pq_ann_topk(emb, query_id=0, k_top=5).collect()
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]

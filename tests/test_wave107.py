@@ -5,28 +5,16 @@ cartesian products)."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-import os
-
 import pytest
-from pyspark.sql import functions as F
+from conftest import SF_DIR, plan_text, skip_without_testdata
 
-from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.queries.dedup import _aug_curation
 from rss_feed_etl_spark.plans.curation_pipeline import curation_pipeline
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _skip_without_testdata():
-    if not os.path.exists(f"{SF_DIR}/documents.parquet"):
-        pytest.skip("testdata not present")
 
 
 @pytest.fixture(scope="module")
 def funnel(spark):
-    _skip_without_testdata()
+    skip_without_testdata("documents")
     docs_aug, emb_aug = _aug_curation(spark, SF_DIR)
     scorecard, stages = curation_pipeline(
         docs_aug, emb_aug, id_col="id", min_stopwords=0, return_stages=True
@@ -123,13 +111,10 @@ def test_pipeline_plan_shape(spark, funnel):
     """Corpus persisted once (InMemoryTableScan), stage decisions read
     from checkpointed id frames (Scan ExistingRDD), no cartesian
     products anywhere in the composed plan."""
-    _skip_without_testdata()
+    skip_without_testdata("documents")
     docs_aug, emb_aug = _aug_curation(spark, SF_DIR)
     df = curation_pipeline(docs_aug, emb_aug, id_col="id", min_stopwords=0)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(df)
     assert "InMemoryTableScan" in plan
     assert "Scan ExistingRDD" in plan
     assert "CartesianProduct" not in plan

@@ -3,30 +3,19 @@ and byte-exact media dedup."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-import os
-
 import pytest
+from conftest import SF_DIR, plan_text, skip_without_testdata
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import multimodal, packing, similarity
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _skip_without_testdata():
-    if not os.path.exists(f"{SF_DIR}/embeddings.parquet"):
-        pytest.skip("testdata not present")
 
 
 def test_ivfpq_output_contract_and_probe_containment(spark):
     """Ranks are dense, distances ascend, the query is excluded, and
     every result lies in a probed cell (the IVF contract: unprobed cells
     are never scored)."""
-    _skip_without_testdata()
+    skip_without_testdata("embeddings")
     emb = td.load_table(spark, SF_DIR, "embeddings")
     rows = similarity.ivfpq_ann_topk(emb, query_id=0, k_top=5).collect()
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
@@ -38,7 +27,7 @@ def test_ivfpq_output_contract_and_probe_containment(spark):
 def test_ivfpq_full_probe_equals_pq(spark):
     """Probing EVERY cell removes the IVF recall loss: the result must
     equal plain PQ with the same codebook-training sample and budget."""
-    _skip_without_testdata()
+    skip_without_testdata("embeddings")
     emb = td.load_table(spark, SF_DIR, "embeddings")
     ivfpq = similarity.ivfpq_ann_topk(
         emb, query_id=0, k_top=10, candidates=10_000,
@@ -54,7 +43,7 @@ def test_ivfpq_full_probe_equals_pq(spark):
 
 
 def test_ivfpq_missing_query_raises(spark):
-    _skip_without_testdata()
+    skip_without_testdata("embeddings")
     emb = td.load_table(spark, SF_DIR, "embeddings")
     with pytest.raises(ValueError, match="query_id"):
         similarity.ivfpq_ann_topk(emb, query_id=10**9)
@@ -64,13 +53,10 @@ def test_ivfpq_plan_is_map_only_into_takeordered(spark):
     """Same pins as pq_ann_topk: centroids + codebooks are literals, so
     the probed-cell ADC scan is map-only into TakeOrdered, rerank joins
     the broadcast shortlist, and nothing cross-joins or sort-merges."""
-    _skip_without_testdata()
+    skip_without_testdata("embeddings")
     emb = td.load_table(spark, SF_DIR, "embeddings")
     df = similarity.ivfpq_ann_topk(emb, query_id=0, k_top=5)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(df)
     assert "TakeOrderedAndProject" in s
     assert "SortMergeJoin" not in s
     assert "CartesianProduct" not in s

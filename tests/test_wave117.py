@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import linalg, similarity

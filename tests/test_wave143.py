@@ -2,16 +2,13 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import Row
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import similarity
 from rss_feed_etl_spark.operators.retrieval import kendall_tau_rankings
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _ranking(spark, ids_scores):

@@ -1,7 +1,7 @@
 """Wave 148: cross-encoder reranker — hand-computed goldens on a tiny
 frame, the injectable-scorer hook, and the candidate-only plan shape."""
 
-import pytest
+from conftest import plan_text
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import retrieval
@@ -73,17 +73,12 @@ def test_rerank_k_final_truncates(spark):
 def test_rerank_plan_candidate_only(spark):
     """The Arrow scoring pass must consume a BROADCAST candidate join —
     the corpus is scanned, never exchanged, before the mapInPandas."""
-    import contextlib
-    import io
     import re
 
     df = retrieval.cross_encoder_rerank(
         _docs(spark), {"q": ["hash", "join"]}, k_first=4, k_final=2
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(df)
     assert len(re.findall(r"^\(\d+\) MapInPandas", s, re.M)) == 1
     assert "BroadcastHashJoin" in s
     assert "CartesianProduct" not in s

@@ -1,10 +1,9 @@
 """Wave 149: salted distinct-set profile — goldens, skew bound, and the
 salt plan pin."""
 
-import contextlib
-import io
 import re
 
+from conftest import plan_text
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -57,10 +56,7 @@ def test_profile_plan_pins_salt(spark):
         F.lit("k").alias("k"), F.col("id").cast("string").alias("v")
     )
     plan_df = salted_distinct_profile(df, "k", "v")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        plan_df.explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(plan_df)
     # the salt must feed the first aggregate: SPARK_PARTITION_ID appears,
     # and the plan carries the two-stage aggregate pair around TWO
     # exchanges (composite-key stage 1, key-grain stage 2)

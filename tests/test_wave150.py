@@ -3,6 +3,7 @@ truncation branches, loss offsets, and the map-only plan."""
 
 import hashlib
 
+from conftest import plan_text
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators.packing import sft_chat_export
@@ -54,16 +55,11 @@ def test_completion_exceeds_budget_prompt_empty(spark):
 
 
 def test_export_plan_is_map_only(spark):
-    import contextlib
-    import io
     import re
 
     df = sft_chat_export(
         spark.createDataFrame([Row(doc_id=1, prompt="a", completion="b")])
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(df)
     assert len(re.findall(r"^\(\d+\) Exchange", s, re.M)) == 0  # no shuffle
     assert "Join" not in s

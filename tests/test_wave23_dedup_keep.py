@@ -2,14 +2,11 @@
 component, and blocked edit-distance matching — structural invariants plus
 agreement with hand-computable fixtures."""
 
-import os
-
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import dedup, fuzzy, similarity
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_semantic_dedup_finds_planted_neardups(spark):

@@ -1,7 +1,5 @@
 """Wave-33: ANN recall@k, Cohen's kappa, unicode normalization."""
 
-from pyspark.sql import functions as F
-
 from rss_feed_etl_spark.functions.text import normalize_unicode
 from rss_feed_etl_spark.operators import clustering, similarity
 

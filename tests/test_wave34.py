@@ -2,8 +2,6 @@
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from rss_feed_etl_spark.operators import sketches, timeseries
 
 

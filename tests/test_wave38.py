@@ -2,25 +2,10 @@
 hashing-trick quality scorer — semantics plus the plan shapes that keep
 them 100 TB-safe."""
 
-import contextlib
-import io
-import os
-import sys
+from conftest import SF_DIR, plan_text
+from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from rss_feed_etl_spark.operators import merges, profiling, textstats  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from rss_feed_etl_spark.operators import merges, profiling, textstats
 
 
 # --- key skew ---------------------------------------------------------------
@@ -46,7 +31,7 @@ def test_key_skew_uniform_is_flat(spark):
 
 def test_key_skew_single_count_shuffle(spark):
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    s = _plan(profiling.key_skew_report(df, key_col="l_suppkey"))
+    s = plan_text(profiling.key_skew_report(df, key_col="l_suppkey"))
     # the stats and top-k branches each aggregate the per-key counts
     # subtree (2 pruned scans total); neither globally sorts the facts
     import re
@@ -81,7 +66,7 @@ def test_dq_report_counts_violations(spark):
 
 def test_dq_report_single_scan(spark):
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    s = _plan(profiling.dq_assertion_report(df))
+    s = plan_text(profiling.dq_assertion_report(df))
     import re
 
     assert len(re.findall(r"\(\d+\) Scan parquet", s)) == 1  # one scan for all
@@ -117,7 +102,7 @@ def test_cdc_single_exchange(spark):
         spark.read.parquet(f"{SF_DIR}/events.parquet")
         .select("user_id", "ts", "event_id", F.lit("U").alias("op"), "value")
     )
-    s = _plan(merges.cdc_apply_ordered(log, key="user_id"))
+    s = plan_text(merges.cdc_apply_ordered(log, key="user_id"))
     # both window functions share one hash partitioning on the key
     import re
 
@@ -145,7 +130,7 @@ def test_hashed_quality_deterministic_and_bounded(spark):
 
 def test_hashed_quality_is_map_only(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    s = _plan(textstats.hashed_quality_scores(docs))
+    s = plan_text(textstats.hashed_quality_scores(docs))
     assert "Exchange" not in s  # scan + project, nothing else
     assert "Generate" not in s  # no explode: higher-order funcs in-row
     li_schema = next(l for l in s.splitlines() if "ReadSchema" in l)

@@ -6,7 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from pyspark.sql import functions as F
+from conftest import docs_frame
 
 from rss_feed_etl_spark.operators import dedup, eventanalytics as ea
 
@@ -14,14 +14,10 @@ from rss_feed_etl_spark.operators import dedup, eventanalytics as ea
 # --- paragraph_dedup --------------------------------------------------------
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
 def test_paragraph_dedup_keeps_first_occurrence(spark):
     # width=2 paragraphs: doc 1 = [a b][c d], doc 2 repeats [a b] then adds
     # [e f] — the repeat is dropped from doc 2 only
-    df = _docs(spark, [(1, "a b c d"), (2, "a b e f")])
+    df = docs_frame(spark, [(1, "a b c d"), (2, "a b e f")])
     out = {r["doc_id"]: r for r in dedup.paragraph_dedup(df, width=2).collect()}
     assert out[1]["clean_text"] == "a b c d"
     assert out[1]["n_paras"] == 2 and out[1]["n_kept"] == 2
@@ -31,14 +27,14 @@ def test_paragraph_dedup_keeps_first_occurrence(spark):
 
 def test_paragraph_dedup_within_doc_repeat(spark):
     # a paragraph repeated INSIDE one document keeps only its first position
-    df = _docs(spark, [(7, "x y z w x y")])
+    df = docs_frame(spark, [(7, "x y z w x y")])
     r = dedup.paragraph_dedup(df, width=2).collect()[0]
     assert r["clean_text"] == "x y z w"
     assert r["n_paras"] == 3 and r["n_kept"] == 2
 
 
 def test_paragraph_dedup_fully_duplicated_doc_survives_empty(spark):
-    df = _docs(spark, [(1, "p q r s"), (2, "p q r s")])
+    df = docs_frame(spark, [(1, "p q r s"), (2, "p q r s")])
     out = {r["doc_id"]: r for r in dedup.paragraph_dedup(df, width=2).collect()}
     assert out[2]["clean_text"] == "" and out[2]["n_kept"] == 0
     assert out[1]["clean_text"] == "p q r s"
@@ -46,13 +42,13 @@ def test_paragraph_dedup_fully_duplicated_doc_survives_empty(spark):
 
 def test_paragraph_dedup_partial_tail_paragraph(spark):
     # 5 tokens at width 3 → paragraphs [a b c], [d e]
-    df = _docs(spark, [(1, "a b c d e")])
+    df = docs_frame(spark, [(1, "a b c d e")])
     r = dedup.paragraph_dedup(df, width=3).collect()[0]
     assert r["n_paras"] == 2 and r["clean_text"] == "a b c d e"
 
 
 def test_paragraph_dedup_stable_under_repartition(spark):
-    df = _docs(
+    df = docs_frame(
         spark,
         [(i, f"tok{i % 4} tok{i % 4} common text here pad{i}") for i in range(40)],
     )

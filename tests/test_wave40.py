@@ -8,7 +8,6 @@ import math
 import os
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import linalg, sampling

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+from conftest import docs_frame
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import dedup, joins, retrieval
@@ -94,13 +95,9 @@ def test_bloom_prune_filter_runs_before_join_exchange(spark):
 # --- prefix_clone_pairs -----------------------------------------------------
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
 def test_prefix_clones_found(spark):
     head = "a b c d e f g h i j"
-    df = _docs(
+    df = docs_frame(
         spark,
         [
             (1, head + " unique tail one"),
@@ -117,7 +114,7 @@ def test_prefix_clones_found(spark):
 
 def test_prefix_clones_max_bucket_guard(spark):
     head = "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10"
-    df = _docs(spark, [(i, f"{head} tail{i}") for i in range(30)])
+    df = docs_frame(spark, [(i, f"{head} tail{i}") for i in range(30)])
     capped = dedup.prefix_clone_pairs(df, k=10, max_bucket=10).count()
     full = dedup.prefix_clone_pairs(df, k=10, max_bucket=None).count()
     assert capped == 0  # hot head dropped by the guard

@@ -5,8 +5,6 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from pyspark.sql import functions as F
-
 from rss_feed_etl_spark.operators import eventanalytics as ea, timeseries as ts
 
 

@@ -6,8 +6,6 @@ import datetime as dt
 import math
 from itertools import combinations
 
-from pyspark.sql import functions as F
-
 from rss_feed_etl_spark.operators import graph, merges, timeseries as ts
 
 

@@ -3,9 +3,6 @@
 from __future__ import annotations
 
 import datetime as dt
-import math
-
-from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import textstats, timeseries as ts
 

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from rss_feed_etl_spark.operators import profiling, timeseries as ts
 
 

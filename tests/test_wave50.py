@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from conftest import docs_frame
 
 from rss_feed_etl_spark.operators import clustering, packing
 
@@ -56,14 +56,10 @@ def test_grid_clusters_stable_under_repartition(spark):
     assert a == b
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
 def test_span_corruption_structure(spark):
     toks = " ".join(f"w{i}" for i in range(30))
     out = packing.span_corruption(
-        _docs(spark, [(1, toks)]), block=3, mask_pct=40
+        docs_frame(spark, [(1, toks)]), block=3, mask_pct=40
     ).collect()[0]
     corrupted, target = out["corrupted"], out["target"]
     n = out["n_spans"]
@@ -86,11 +82,11 @@ def test_span_corruption_structure(spark):
 
 def test_span_corruption_deterministic(spark):
     rows = [(i, " ".join(f"t{i}_{j}" for j in range(25))) for i in range(20)]
-    a = sorted(map(tuple, packing.span_corruption(_docs(spark, rows)).collect()))
+    a = sorted(map(tuple, packing.span_corruption(docs_frame(spark, rows)).collect()))
     b = sorted(
         map(
             tuple,
-            packing.span_corruption(_docs(spark, rows).repartition(5)).collect(),
+            packing.span_corruption(docs_frame(spark, rows).repartition(5)).collect(),
         )
     )
     assert a == b
@@ -98,7 +94,7 @@ def test_span_corruption_deterministic(spark):
 
 def test_span_corruption_masks_expected_fraction(spark):
     rows = [(i, " ".join(f"x{j}" for j in range(60))) for i in range(100)]
-    out = packing.span_corruption(_docs(spark, rows), mask_pct=15).toPandas()
+    out = packing.span_corruption(docs_frame(spark, rows), mask_pct=15).toPandas()
     # ~15% of tokens masked (block grain): measure via target token count
     total_target_tokens = sum(
         len([t for t in tg.split() if not t.startswith("<extra_id_")])

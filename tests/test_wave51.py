@@ -5,8 +5,6 @@ from __future__ import annotations
 import math
 import random
 
-from pyspark.sql import functions as F
-
 from rss_feed_etl_spark.operators import fuzzy, profiling
 
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-from pyspark.sql import functions as F
+from conftest import docs_frame
 
 from rss_feed_etl_spark.operators import eventanalytics as ea, textstats
 
@@ -53,13 +53,9 @@ def test_cohort_ltv_monotone_nondecreasing(spark):
         assert all(a <= b + 1e-9 for a, b in zip(vals, vals[1:]))
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
 def test_vocab_drift_flags_mover(spark):
-    old = _docs(spark, [(i, "stable words here") for i in range(40)])
-    new = _docs(
+    old = docs_frame(spark, [(i, "stable words here") for i in range(40)])
+    new = docs_frame(
         spark,
         [(100 + i, "stable words here newterm") for i in range(40)],
     )
@@ -73,8 +69,8 @@ def test_vocab_drift_flags_mover(spark):
 
 
 def test_vocab_drift_symmetric_sign(spark):
-    old = _docs(spark, [(i, "gone common") for i in range(30)])
-    new = _docs(spark, [(50 + i, "common") for i in range(30)])
+    old = docs_frame(spark, [(i, "gone common") for i in range(30)])
+    new = docs_frame(spark, [(50 + i, "common") for i in range(30)])
     out = {r["term"]: r["log2_ratio"] for r in textstats.vocab_drift_terms(
         old, new, min_df=10, top=5
     ).collect()}

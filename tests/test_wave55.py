@@ -2,19 +2,15 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from conftest import docs_frame
 
 from rss_feed_etl_spark.operators import dedup, textstats
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
 def test_containment_catches_excerpt_jaccard_misses(spark):
     body = " ".join(f"w{i}" for i in range(200))
     excerpt = " ".join(f"w{i}" for i in range(40, 60))  # 20 tokens of body
-    df = _docs(spark, [(1, body), (2, excerpt)])
+    df = docs_frame(spark, [(1, body), (2, excerpt)])
     cont = {(r["src"], r["dst"]): r["containment"]
             for r in dedup.ngram_containment_pairs(df, threshold=0.8).collect()}
     # the excerpt is ~fully contained in the body...
@@ -28,7 +24,7 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
 
 def test_containment_direction_and_threshold(spark):
     a = " ".join(f"t{i}" for i in range(30))
-    df = _docs(spark, [(1, a), (2, a)])  # identical docs: both directions
+    df = docs_frame(spark, [(1, a), (2, a)])  # identical docs: both directions
     cont = {(r["src"], r["dst"]) for r in dedup.ngram_containment_pairs(
         df, threshold=0.99
     ).collect()}

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from conftest import plan_text
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import textstats
@@ -29,13 +30,8 @@ def test_gopher_flags_on_known_docs(spark):
 
 
 def test_gopher_flags_plan_is_map_only(spark):
-    import io, contextlib
-
     df = spark.createDataFrame([Row(doc_id=1, text="a b c")])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        textstats.gopher_quality_flags(df).explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(textstats.gopher_quality_flags(df))
     assert "Exchange" not in s and "Join" not in s
     assert "ArrowEvalPython" not in s and "BatchEvalPython" not in s
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from conftest import plan_text
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -26,12 +27,7 @@ def test_exact_contamination_finds_planted_prefix(spark):
 
 
 def test_exact_contamination_plan_broadcasts_needles(spark):
-    import contextlib, io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        sampling.exact_substring_contamination(_corpus(spark)).explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(sampling.exact_substring_contamination(_corpus(spark)))
     assert "BroadcastNestedLoopJoin" in s
     assert "SortMergeJoin" not in s
 

@@ -2,14 +2,11 @@
 
 from __future__ import annotations
 
-import os
-
+from conftest import SF_DIR, skip_without_testdata
 from pyspark.sql import Row
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import profiling, similarity
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_bitext_mining_finds_planted_translation(spark):
@@ -62,10 +59,7 @@ def test_bitext_banded_recalls_planted_translations(spark):
     of the real label-1 noise and requires the banded miner to map >=85%
     of A ids to their planted translation; the brute sweep is the exact
     baseline and must find them all."""
-    if not os.path.exists(f"{SF_DIR}/embeddings.parquet"):
-        import pytest
-
-        pytest.skip("testdata not present")
+    skip_without_testdata("embeddings")
     from pyspark.sql import functions as F
 
     emb = td.load_table(spark, SF_DIR, "embeddings")

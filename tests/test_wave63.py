@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Row
-
-
 def test_token_length_histogram_buckets(spark):
     from rss_feed_etl_spark import driver_queries as dq
     import rss_feed_etl_spark.testdata as td

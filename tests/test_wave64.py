@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from conftest import plan_text
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -86,14 +87,9 @@ def test_shard_assign_balances_skewed_weights(spark):
 
 
 def test_shard_assign_no_global_fact_window(spark):
-    import contextlib, io
-
     rows = [Row(doc_id=f"d{i}", w=i % 13) for i in range(100)]
     df = spark.createDataFrame(rows)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        layout.shard_assign_balanced(df, "doc_id", F.col("w"), 8).explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(layout.shard_assign_balanced(df, "doc_id", F.col("w"), 8))
     # the tie-ranking window shuffles by weight value, never SinglePartition
     assert "windowspecdefinition(w" in s
     # facts reach the distinct-weight rank table via broadcast

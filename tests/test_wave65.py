@@ -2,11 +2,8 @@
 
 from __future__ import annotations
 
-import contextlib
-import io
-
+from conftest import plan_text
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import features
 
@@ -47,10 +44,7 @@ def test_target_encode_never_sees_own_label(spark):
 def test_target_encode_plan_broadcasts(spark):
     rows = [Row(id=i, cat=str(i % 3), y=float(i)) for i in range(100)]
     df = spark.createDataFrame(rows)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        features.target_encode_loo(df, "id", "cat", "y").explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(features.target_encode_loo(df, "id", "cat", "y"))
     assert "BroadcastHashJoin" in s
     assert "SortMergeJoin" not in s
 
@@ -80,10 +74,7 @@ def test_feature_hash_properties(spark):
 def test_feature_hash_single_shuffle(spark):
     rows = [Row(doc_id=i, text="a b c d e") for i in range(50)]
     df = spark.createDataFrame(rows)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        features.feature_hash_encode(df, "doc_id", "text").explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(features.feature_hash_encode(df, "doc_id", "text"))
     # one exchange (to (doc, bucket) grain), no join, no python —
     # formatted explain names each node twice (tree + detail section)
     assert s.count("Exchange (") == 1

@@ -2,10 +2,9 @@
 
 from __future__ import annotations
 
-import contextlib
 import datetime as dt
-import io
 
+from conftest import plan_text
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -98,10 +97,7 @@ def test_loso_single_source_is_null(spark):
 def test_loso_single_scan_plan(spark):
     rows = [Row(doc_id=i, source=str(i % 3), w=i) for i in range(60)]
     df = spark.createDataFrame(rows)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        profiling.loso_source_influence(df, F.col("w")).explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(profiling.loso_source_influence(df, F.col("w")))
     # global total is a window over the SOURCE-GRAIN aggregate: the fact
     # relation is scanned exactly once (formatted explain names each node
     # twice — tree + detail)

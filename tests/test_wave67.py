@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from conftest import plan_text
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import profiling, timeseries
@@ -83,13 +84,8 @@ def test_l_diversity_flags_homogeneous_groups(spark):
 
 
 def test_l_diversity_two_level_aggregation_plan(spark):
-    import contextlib, io
-
     df = spark.createDataFrame([Row(q="A", s=i % 3) for i in range(30)])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        profiling.l_diversity_violations(df, ["q"], "s", l=3).explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(profiling.l_diversity_violations(df, ["q"], "s", l=3))
     # no expand/distinct-aggregate over raw facts: the distinct count is a
     # plain count over the pre-collapsed (quasi, sensitive) table
     assert "Expand" not in s

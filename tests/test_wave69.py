@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import zlib
 
+from conftest import plan_text
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import profiling, textstats
@@ -57,12 +58,7 @@ def test_compression_ratio_golden_against_local_zlib(spark):
 
 
 def test_compression_ratio_map_only_plan(spark):
-    import contextlib, io
-
     df = spark.createDataFrame([Row(doc_id=1, text="abc")])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        textstats.compression_ratio(df).explain("formatted")
-    s = buf.getvalue()
+    s = plan_text(textstats.compression_ratio(df))
     assert "Exchange" not in s and "Join" not in s
     assert "MapInPandas" in s

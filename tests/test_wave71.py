@@ -2,21 +2,10 @@
 
 from __future__ import annotations
 
-import datetime as dt
-
+from conftest import daily_events
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import profiling, timeseries
-
-
-def _mk_daily(spark, daily, typ="t"):
-    rows, eid = [], 0
-    base = dt.datetime(2024, 1, 1)
-    for d, n in enumerate(daily):
-        for _ in range(n):
-            rows.append(Row(event_id=eid, ts=base + dt.timedelta(days=d), event_type=typ))
-            eid += 1
-    return spark.createDataFrame(rows)
 
 
 def _holt_py(xs, a=0.3, b_=0.1):
@@ -33,7 +22,7 @@ def _holt_py(xs, a=0.3, b_=0.1):
 
 def test_holt_matches_textbook_recurrence(spark):
     daily = [10, 12, 15, 11, 14, 18, 16, 20, 19, 23]
-    df = _mk_daily(spark, daily)
+    df = daily_events(spark, daily)
     row = timeseries.holt_forecast(df).collect()[0]
     l, b, mae = _holt_py(daily)
     assert abs(row["level"] - round(l, 6)) < 1e-6
@@ -45,7 +34,7 @@ def test_holt_matches_textbook_recurrence(spark):
 
 def test_holt_captures_linear_growth(spark):
     daily = [10 + 3 * d for d in range(20)]  # slope 3/day, no noise
-    row = timeseries.holt_forecast(_mk_daily(spark, daily)).collect()[0]
+    row = timeseries.holt_forecast(daily_events(spark, daily)).collect()[0]
     assert 2.0 < row["trend"] < 4.0
     # forecast 7 days past the last level continues the climb
     assert row["forecast_h"] > row["level"]
@@ -53,9 +42,9 @@ def test_holt_captures_linear_growth(spark):
 
 
 def test_holt_short_series_dropped_and_mae_null(spark):
-    one = _mk_daily(spark, [5])
+    one = daily_events(spark, [5])
     assert timeseries.holt_forecast(one).count() == 0
-    two = _mk_daily(spark, [5, 9])
+    two = daily_events(spark, [5, 9])
     row = timeseries.holt_forecast(two).collect()[0]
     assert row["level"] == 5.0 and row["trend"] == 4.0
     assert row["mae"] is None

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import decision_support as ds
 from rss_feed_etl_spark.operators import profiling

@@ -3,24 +3,20 @@
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 
+from conftest import md5_arm
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import eventanalytics as ea
 from rss_feed_etl_spark.operators import textstats
 
 
-def _arm(u):
-    return (int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16) % 1_000_000_007) % 2
-
-
 def test_simpson_constructs_reversal(spark):
     # classic construction: within both segments arm1 BEATS arm0, but
     # arm1 is concentrated in the low-value segment, so overall it LOSES
     base = dt.datetime(2024, 1, 1)
-    a0 = [u for u in range(2000) if _arm(u) == 0][:200]
-    a1 = [u for u in range(2000) if _arm(u) == 1][:200]
+    a0 = [u for u in range(2000) if md5_arm(u) == 0][:200]
+    a1 = [u for u in range(2000) if md5_arm(u) == 1][:200]
     rows, eid = [], 0
 
     def emit(users, seg, val):
@@ -51,7 +47,7 @@ def test_simpson_no_paradox_all_agree(spark):
     base = dt.datetime(2024, 1, 1)
     rows, eid = [], 0
     for u in range(600):
-        lift = 5.0 if _arm(u) == 1 else 0.0
+        lift = 5.0 if md5_arm(u) == 1 else 0.0
         for seg in ("a", "b"):
             rows.append(Row(event_id=eid, user_id=u, event_type=seg,
                             ts=base, value=50.0 + lift))

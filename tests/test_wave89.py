@@ -3,15 +3,11 @@
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 
+from conftest import md5_arm
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import eventanalytics as ea
-
-
-def _arm(u):
-    return (int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16) % 1_000_000_007) % 2
 
 
 def test_qini_front_loads_uplift_for_good_score(spark):
@@ -25,7 +21,7 @@ def test_qini_front_loads_uplift_for_good_score(spark):
         val = 500.0 if hi else 10.0
         rows.append(Row(event_id=eid, user_id=u, event_type="view",
                         ts=base, value=val)); eid += 1
-        responds = hi and _arm(u) == 1 and u % 2 == 0
+        responds = hi and md5_arm(u) == 1 and u % 2 == 0
         ctrl_base = u % 10 == 0  # background conversion in both arms
         if responds or ctrl_base:
             rows.append(Row(event_id=eid, user_id=u, event_type="purchase",

@@ -2,26 +2,14 @@
 
 from __future__ import annotations
 
-import datetime as dt
-
-from pyspark.sql import Row
+from conftest import daily_events
 
 from rss_feed_etl_spark.operators import timeseries
 
 
-def _mk_daily(spark, daily, typ="t"):
-    rows, eid = [], 0
-    base = dt.datetime(2024, 1, 1)
-    for d, n in enumerate(daily):
-        for _ in range(n):
-            rows.append(Row(event_id=eid, ts=base + dt.timedelta(days=d), event_type=typ))
-            eid += 1
-    return spark.createDataFrame(rows)
-
-
 def test_interval_matches_python_residual_quantile(spark):
     daily = [10, 12, 15, 11, 14, 18, 16, 20, 19, 23, 21, 25]
-    row = timeseries.holt_forecast_interval(_mk_daily(spark, daily)).collect()[0]
+    row = timeseries.holt_forecast_interval(daily_events(spark, daily)).collect()[0]
     # replicate fold
     a, b_ = 0.3, 0.1
     l, bb = float(daily[0]), float(daily[1] - daily[0])
@@ -51,11 +39,11 @@ def test_interval_width_tracks_noise(spark):
     out = {}
     for name, series in (("smooth", smooth), ("noisy", noisy)):
         r = timeseries.holt_forecast_interval(
-            _mk_daily(spark, [max(1, v) for v in series], typ=name)
+            daily_events(spark, [max(1, v) for v in series], typ=name)
         ).collect()[0]
         out[name] = r["hi"] - r["lo"]
     assert out["noisy"] > out["smooth"]
 
 
 def test_interval_requires_three_days(spark):
-    assert timeseries.holt_forecast_interval(_mk_daily(spark, [4, 7])).count() == 0
+    assert timeseries.holt_forecast_interval(daily_events(spark, [4, 7])).count() == 0

@@ -3,16 +3,12 @@
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 
+from conftest import md5_arm
 from pyspark.sql import Row
 
 from rss_feed_etl_spark.operators import eventanalytics as ea
 from rss_feed_etl_spark.operators import profiling
-
-
-def _arm(u):
-    return (int(hashlib.md5(str(u).encode()).hexdigest()[:15], 16) % 1_000_000_007) % 2
 
 
 def test_funnel_ab_locates_stage_effect(spark):
@@ -21,7 +17,7 @@ def test_funnel_ab_locates_stage_effect(spark):
     # everyone views; arm1 clicks twice as often; purchase|click same
     for u in range(1200):
         rows.append(Row(event_id=eid, user_id=u, event_type="view", ts=base)); eid += 1
-        clicks = (u % 2 == 0) if _arm(u) == 1 else (u % 4 == 0)
+        clicks = (u % 2 == 0) if md5_arm(u) == 1 else (u % 4 == 0)
         if clicks:
             rows.append(Row(event_id=eid, user_id=u, event_type="click",
                             ts=base + dt.timedelta(minutes=1))); eid += 1

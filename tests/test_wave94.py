@@ -5,7 +5,6 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from rss_feed_etl_spark.operators import eventanalytics, sampling, textstats
 

@@ -4,15 +4,12 @@ from __future__ import annotations
 
 import math
 
+from conftest import SF_DIR
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from rss_feed_etl_spark import testdata as td
 from rss_feed_etl_spark.operators import layout, similarity
-
-import os
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def test_binary_ann_recall_and_invariants(spark):

@@ -68,6 +68,8 @@ def test_zordered_layout_prunes_both_dimensions(spark, tmp_path):
 
 
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
+    from pyspark.sql import functions as F
+
     from rss_feed_etl_spark.sources import parquet as pq
 
     df = spark.range(500).select(
